@@ -319,12 +319,15 @@ def run(spark: SparkSession, in_path: str, out_dir: str,
     ]
 
 
+USAGE = ("Usage: corpus_pipeline <corpus.parquet> <out_dir> "
+         "[--min-quality Q] [--langs a,b] [--threshold T] "
+         "[--benchmark p.parquet] [--chunk-size N] [--stride N] "
+         "[--lm-band LO:HI] [--clean]")
+
+
 def main(argv: list[str]) -> int:
     if len(argv) < 2:
-        print("Usage: corpus_pipeline <corpus.parquet> <out_dir> "
-              "[--min-quality Q] [--langs a,b] [--threshold T] "
-              "[--benchmark p.parquet] [--chunk-size N] [--stride N] "
-              "[--lm-band LO:HI] [--clean]")
+        print(USAGE)
         return 1
     in_path, out_dir = argv[0], argv[1]
     opts = {"--min-quality": 0.5, "--threshold": 0.7,
@@ -340,8 +343,12 @@ def main(argv: list[str]) -> int:
     for a in it:
         if a in flags:
             flags[a] = True
-        elif a in opts:
-            opts[a] = next(it)
+            continue
+        value = next(it, None)
+        if a not in opts or value is None:
+            print(USAGE)
+            return 2
+        opts[a] = value
     from ..session import get_session
 
     spark = get_session("CorpusPipeline")

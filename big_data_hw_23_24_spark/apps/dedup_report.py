@@ -79,23 +79,27 @@ def run(spark: SparkSession, path: str, threshold: float = 0.7,
     ]
 
 
+USAGE = "Usage: dedup_report <corpus.parquet> [--threshold T] [--hamming H]"
+
+
 def main(argv: list[str]) -> int:
     if not argv:
-        print("Usage: dedup_report <corpus.parquet> "
-              "[--threshold T] [--hamming H]")
+        print(USAGE)
         return 1
     path = argv[0]
-    threshold, hamming = 0.7, 3
+    opts = {"--threshold": 0.7, "--hamming": 3}
     it = iter(argv[1:])
     for a in it:
-        if a == "--threshold":
-            threshold = float(next(it))
-        elif a == "--hamming":
-            hamming = int(next(it))
+        value = next(it, None)
+        if a not in opts or value is None:
+            print(USAGE)
+            return 2
+        opts[a] = value
     from ..session import get_session
 
     spark = get_session("DedupReport")
-    for line in run(spark, path, threshold, hamming):
+    for line in run(spark, path, float(opts["--threshold"]),
+                    int(opts["--hamming"])):
         print(line)
     return 0
 

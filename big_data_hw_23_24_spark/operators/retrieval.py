@@ -475,7 +475,6 @@ def rrf_fuse(*ranked: DataFrame, k: int = 10, rrf_k: int = 60,
                         k)
 
 
-
 def phrase_search(docs: DataFrame, phrases: list[str],
                   text_col: str = "text",
                   id_col: str = "doc_id") -> DataFrame:

@@ -4,12 +4,11 @@ oracle-checked where SQL-expressible.
 
 Split by tier in r9 (this file had grown past 5k lines): importing
 this module registers every tier exactly as before — queries.py's
-``_ensure_loaded`` keeps importing ``queries_llm`` and the checked
-window is unaffected (window order comes from ``_CHECKED_WINDOW``, not
-file layout). Shingling/tokenization conventions are mirrored exactly
-between the Spark operators and the DuckDB oracle SQL (single-space
-split, empty tokens dropped, distinct word 3-grams) — the shared CTE
-builders live in ``queries_llm_shared``.
+``_ensure_loaded`` keeps importing ``queries_llm``.
+Shingling/tokenization conventions are mirrored exactly between the
+Spark operators and the DuckDB oracle SQL (single-space split, empty
+tokens dropped, distinct word 3-grams) — the shared CTE builders live
+in ``queries_llm_shared``.
 """
 
 from __future__ import annotations

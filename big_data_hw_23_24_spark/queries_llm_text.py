@@ -460,9 +460,6 @@ def doc_pack_sequences(spark, sf_dir):
 
 
 # --- unigram-LM quality scoring (perplexity proxy) ---------------------------
-# Registered BELOW the checked window (r5's window is full and every
-# slot has a never-checked query earning its first row); queued to
-# rotate in next round — see tests/test_registry_order.py.
 @register(
     "doc_unigram_logprob",
     """

@@ -582,3 +582,22 @@ def test_corpus_pipeline_rejects_bad_contamination_mode(spark, tmp_path):
     with pytest.raises(ValueError, match="contamination_mode"):
         run(spark, "/root/testdata/sf0.001/documents.parquet",
             str(tmp_path / "x"), contamination_mode="purge")
+
+
+def test_cli_mains_reject_bad_flags_before_building_a_session(
+        tmp_path, monkeypatch, capsys):
+    """A mistyped flag or a value flag with no value is a usage error
+    (exit 2), never a silent default or a bare StopIteration."""
+    from big_data_hw_23_24_spark import session
+    from big_data_hw_23_24_spark.apps import corpus_pipeline, dedup_report
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("session built before the flags were checked")
+
+    monkeypatch.setattr(session, "get_session", no_session)
+    src = "/root/testdata/sf0.001/documents.parquet"
+    assert corpus_pipeline.main(
+        [src, str(tmp_path / "out"), "--min-qualty", "0.9"]) == 2
+    assert dedup_report.main([src, "--threshold"]) == 2
+    out = capsys.readouterr().out.splitlines()
+    assert out == [corpus_pipeline.USAGE, dedup_report.USAGE]

@@ -12,7 +12,7 @@ shift for the same decorrelation), time each probe at both scales, and
 assert ≤ linear-ish growth. A hidden superlinear term (band-bucket
 blowup, pool fan-out, Σdf² past its cap) shows up as a ratio near
 10²; genuine linear scaling lands near 10¹. Results are recorded
-under ``sf1_probe`` in BENCH_DETAIL.json (bench.py preserves the key).
+under ``sf1_probe`` in BENCH_DETAIL.json.
 
 Not part of the default suite: synthesizing + timing ~50k docs three
 times per query is minutes of wall-clock, and the number it produces
@@ -207,7 +207,7 @@ def _synthesize(spark, dst: str) -> None:
 
 
 def _time_min(fn, spark, sf_dir: str, reps: int = 2) -> float:
-    fn(spark, sf_dir).count()  # untimed warm (bench.py convention)
+    fn(spark, sf_dir).count()  # untimed warm-up run
     runs = []
     for _ in range(reps):
         t0 = time.perf_counter()

@@ -68,6 +68,11 @@ import sys
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from . import choice, parse_flags
+
+SURVIVORS = ("min_id", "best")
+CONTAMINATION_MODES = ("drop", "strip")
+
 
 def run(spark: SparkSession, in_path: str, out_dir: str,
         min_quality: float = 0.5, langs: tuple[str, ...] = (),
@@ -84,9 +89,12 @@ def run(spark: SparkSession, in_path: str, out_dir: str,
         survivor: str = "min_id",
         strip_spans: int | None = None,
         contamination_mode: str = "drop") -> list[str]:
-    if contamination_mode not in ("drop", "strip"):
+    if contamination_mode not in CONTAMINATION_MODES:
         raise ValueError(f"contamination_mode must be 'drop' or 'strip', "
                          f"got {contamination_mode!r}")
+    if survivor not in SURVIVORS:
+        raise ValueError(f"survivor must be 'min_id' or 'best', "
+                         f"got {survivor!r}")
     from ..operators.components import connected_components
     from ..operators.dedup import minhash_near_duplicates
     from ..operators.packing import pack_sequences
@@ -182,12 +190,9 @@ def run(spark: SparkSession, in_path: str, out_dir: str,
                 F.col("keep_id").alias("doc_id"))
             losers = comp.select("doc_id") \
                 .join(winners, "doc_id", "left_anti")
-        elif survivor == "min_id":
+        else:
             losers = comp.where(F.col("doc_id") != F.col("component")) \
                 .select("doc_id")
-        else:
-            raise ValueError(f"survivor must be 'min_id' or 'best', "
-                             f"got {survivor!r}")
         deduped = kept.join(losers, "doc_id", "left_anti").cache()
         cached.append(deduped)
         n_dedup = deduped.count()
@@ -200,12 +205,8 @@ def run(spark: SparkSession, in_path: str, out_dir: str,
         if strip_spans is not None:
             from ..operators.textstats import remove_repeated_spans
 
-            # fanout=False: `deduped` sits on the dedup left-anti
-            # shuffle, not a scan — ensure_fanout's rdd-probe contract
-            # is scan-rooted frames only, and the shuffle already
-            # supplies full parallelism
-            stripped = remove_repeated_spans(deduped, n=strip_spans,
-                                             fanout=False).cache()
+            stripped = remove_repeated_spans(deduped,
+                                             n=strip_spans).cache()
             cached.append(stripped)  # the count agg below and the
             # text-replacement join both read it; uncached, the whole
             # mining + reconstruction subtree would execute twice
@@ -237,8 +238,7 @@ def run(spark: SparkSession, in_path: str, out_dir: str,
                 # counts tokens here, not docs
                 from ..operators.textstats import decontaminate_spans
 
-                stripped = decontaminate_spans(deduped, bench,
-                                               fanout=False).cache()
+                stripped = decontaminate_spans(deduped, bench).cache()
                 cached.append(stripped)
                 n_contaminated = stripped.agg(
                     F.sum("n_removed")).collect()[0][0] or 0
@@ -325,68 +325,54 @@ USAGE = ("Usage: corpus_pipeline <corpus.parquet> <out_dir> "
          "[--lm-band LO:HI] [--clean]")
 
 
+def _pair(sep: str, parse):
+    def pair(value: str) -> tuple:
+        a, b = value.split(sep, 1)
+        return parse(a), parse(b)
+    return pair
+
+
+def _rates(value: str) -> dict[str, float]:
+    return {k: float(r) for k, r in
+            (kv.split("=") for kv in value.split(","))}
+
+
+# value flag -> (run() keyword, parser); an absent flag keeps run()'s
+# default
+OPTIONS = {
+    "--min-quality": ("min_quality", float),
+    "--langs": ("langs", lambda v: tuple(x for x in v.split(",") if x)),
+    "--threshold": ("threshold", float),
+    "--benchmark": ("benchmark_path", str),
+    "--chunk-size": ("chunk_size", int),
+    "--stride": ("stride", int),
+    "--mix-rates": ("mix_rates", _rates),
+    "--mix-default": ("mix_default", float),
+    "--pack": ("pack_capacity", int),
+    "--lm-band": ("lm_band", _pair(":", float)),
+    "--classifier-min": ("classifier_min", float),
+    "--dsir-target": ("dsir_target", _pair("=", str)),
+    "--dsir-min": ("dsir_min", float),
+    "--survivor": ("survivor", choice(*SURVIVORS)),
+    "--strip-spans": ("strip_spans", int),
+    "--contamination-mode": ("contamination_mode",
+                             choice(*CONTAMINATION_MODES)),
+}
+
+
 def main(argv: list[str]) -> int:
     if len(argv) < 2:
         print(USAGE)
         return 1
     in_path, out_dir = argv[0], argv[1]
-    opts = {"--min-quality": 0.5, "--threshold": 0.7,
-            "--chunk-size": 64, "--stride": 48,
-            "--langs": "", "--benchmark": None,
-            "--mix-rates": None, "--mix-default": 0.05, "--pack": None,
-            "--lm-band": None, "--classifier-min": None,
-            "--dsir-target": None, "--dsir-min": 0.0,
-            "--survivor": "min_id", "--strip-spans": None,
-            "--contamination-mode": "drop"}
-    flags = {"--clean": False}
-    it = iter(argv[2:])
-    for a in it:
-        if a in flags:
-            flags[a] = True
-            continue
-        value = next(it, None)
-        if a not in opts or value is None:
-            print(USAGE)
-            return 2
-        opts[a] = value
+    kwargs = parse_flags(argv[2:], OPTIONS, {"--clean": "c4_clean"})
+    if kwargs is None:
+        print(USAGE)
+        return 2
     from ..session import get_session
 
     spark = get_session("CorpusPipeline")
-    langs = tuple(x for x in str(opts["--langs"]).split(",") if x)
-    mix_rates = None
-    if opts["--mix-rates"] is not None:
-        mix_rates = {k: float(v) for k, v in
-                     (kv.split("=") for kv in
-                      str(opts["--mix-rates"]).split(","))}
-    lm_band = None
-    if opts["--lm-band"] is not None:
-        lo, hi = str(opts["--lm-band"]).split(":")
-        lm_band = (float(lo), float(hi))
-    dsir_target = None
-    if opts["--dsir-target"] is not None:
-        tcol, tval = str(opts["--dsir-target"]).split("=", 1)
-        dsir_target = (tcol, tval)
-    for line in run(spark, in_path, out_dir,
-                    min_quality=float(opts["--min-quality"]),
-                    langs=langs,
-                    threshold=float(opts["--threshold"]),
-                    benchmark_path=opts["--benchmark"],
-                    chunk_size=int(opts["--chunk-size"]),
-                    stride=int(opts["--stride"]),
-                    mix_rates=mix_rates,
-                    mix_default=float(opts["--mix-default"]),
-                    pack_capacity=None if opts["--pack"] is None
-                    else int(opts["--pack"]),
-                    lm_band=lm_band,
-                    c4_clean=flags["--clean"],
-                    classifier_min=None if opts["--classifier-min"] is None
-                    else float(opts["--classifier-min"]),
-                    dsir_target=dsir_target,
-                    dsir_min=float(opts["--dsir-min"]),
-                    survivor=str(opts["--survivor"]),
-                    strip_spans=None if opts["--strip-spans"] is None
-                    else int(opts["--strip-spans"]),
-                    contamination_mode=str(opts["--contamination-mode"])):
+    for line in run(spark, in_path, out_dir, **kwargs):
         print(line)
     return 0
 

@@ -24,6 +24,8 @@ import sys
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from . import parse_flags
+
 
 def run(spark: SparkSession, path: str, threshold: float = 0.7,
         max_hamming: int = 3) -> list[str]:
@@ -82,24 +84,22 @@ def run(spark: SparkSession, path: str, threshold: float = 0.7,
 USAGE = "Usage: dedup_report <corpus.parquet> [--threshold T] [--hamming H]"
 
 
+OPTIONS = {"--threshold": ("threshold", float),
+           "--hamming": ("max_hamming", int)}
+
+
 def main(argv: list[str]) -> int:
     if not argv:
         print(USAGE)
         return 1
-    path = argv[0]
-    opts = {"--threshold": 0.7, "--hamming": 3}
-    it = iter(argv[1:])
-    for a in it:
-        value = next(it, None)
-        if a not in opts or value is None:
-            print(USAGE)
-            return 2
-        opts[a] = value
+    kwargs = parse_flags(argv[1:], OPTIONS)
+    if kwargs is None:
+        print(USAGE)
+        return 2
     from ..session import get_session
 
     spark = get_session("DedupReport")
-    for line in run(spark, path, float(opts["--threshold"]),
-                    int(opts["--hamming"])):
+    for line in run(spark, argv[0], **kwargs):
         print(line)
     return 0
 

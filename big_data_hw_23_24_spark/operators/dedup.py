@@ -315,9 +315,7 @@ def jaccard_verify(pairs: DataFrame, shingled: DataFrame,
 def shingle_containment_pairs(docs: DataFrame, threshold: float = 0.8,
                               n: int = 3, max_df: int | None = None,
                               text_col: str = "text",
-                              id_col: str = "doc_id",
-                              materialize: bool = True,
-                              fanout: bool = True) -> DataFrame:
+                              id_col: str = "doc_id") -> DataFrame:
     """ASYMMETRIC near-dup detection → (id_a, id_b, n_common,
     containment_a, containment_b): pairs where either directed
     containment |A∩B|/|A| (resp. /|B|) reaches ``threshold``.
@@ -337,10 +335,9 @@ def shingle_containment_pairs(docs: DataFrame, threshold: float = 0.8,
     never a document pair.
 
     The pinned table is fanout-guarded (a sub-row-group scan must
-    not serialize a 50x explode onto two cores; pass ``fanout=False``
-    for non-scan-rooted inputs, the remove_repeated_spans contract)
-    and materialized once — the size projection, the df guard and the
-    pair join are three consumers of the same shingle build (the E52
+    not serialize a 50x explode onto two cores) and materialized
+    once — the size projection, the df guard and the pair join are
+    three consumers of the same shingle build (the E52
     localCheckpoint pattern). Shingles are HASHED IN PLACE —
     ``xxhash64(w_i, …, w_{i+n-1})`` straight off the word array, no
     n-gram string ever built — so the index rows are two longs and
@@ -373,10 +370,9 @@ def shingle_containment_pairs(docs: DataFrame, threshold: float = 0.8,
         lambda x: F.xxhash64(*[x[str(j)] for j in range(n)])))
     arr = F.when(F.size(words) >= n, hashes) \
         .otherwise(F.array().cast("array<bigint>"))
-    sh_docs = ((ensure_fanout(docs) if fanout else docs)
-               .select(F.col(id_col), arr.alias("_arr")))
-    if materialize:
-        sh_docs = sh_docs.localCheckpoint(eager=True)
+    sh_docs = (ensure_fanout(docs)
+               .select(F.col(id_col), arr.alias("_arr"))
+               .localCheckpoint(eager=True))
     # denominators from the UNFILTERED shingle sets (the arrays are
     # distinct by construction, so size(arr) IS the set size; docs
     # with an empty set get a 0 row that no pair can ever join)
@@ -415,8 +411,7 @@ def shingle_containment_pairs(docs: DataFrame, threshold: float = 0.8,
 def minhash_near_duplicates(docs: DataFrame, threshold: float = 0.7,
                             num_hashes: int = 32, bands: int = 8,
                             text_col: str = "text",
-                            id_col: str = "doc_id",
-                            materialize: bool = True) -> DataFrame:
+                            id_col: str = "doc_id") -> DataFrame:
     """MinHash-LSH near-dup pipeline: shingle → sign → band → verify.
 
     Approximate in candidate *generation* (recall < 1 for pairs near
@@ -431,11 +426,11 @@ def minhash_near_duplicates(docs: DataFrame, threshold: float = 0.7,
     the skewed key LSH exists to avoid. They can never verify at
     threshold > 0 (empty intersection), so this is semantics-preserving.
 
-    ``materialize=True`` (default) persists the signed intermediate for
-    the duration of the computation — the banded self-join scans it
-    twice, so without the cache the ``num_hashes``-way signature
-    expression is evaluated on both branches. Two measured choices
-    shape what is cached (together 3.2 s → 2.1 s at sf0.1):
+    The signed intermediate is persisted for the duration of the
+    computation — the banded self-join scans it twice, so without the
+    cache the ``num_hashes``-way signature expression is evaluated on
+    both branches. Two measured choices shape what is cached (together
+    3.2 s → 2.1 s at sf0.1):
 
     * Only ``(id, n_shingles, signature)`` is persisted — fixed-width
       columns. Caching the shingle *arrays* for the verify step costs
@@ -444,28 +439,18 @@ def minhash_near_duplicates(docs: DataFrame, threshold: float = 0.7,
       to the LSH survivors first — candidate-scale, not corpus-scale.
     * Few-split inputs (fewer input partitions than
       ``defaultParallelism``, e.g. one parquet row group locally) are
-      re-width-ed before the signature map, which otherwise runs on a
-      single core. At scale the input has more splits than cores and
-      the repartition — a full shuffle of the corpus text — is
-      correctly skipped.
+      re-width-ed by ``ensure_fanout`` before the signature map,
+      which otherwise runs on a single core. At scale the input has
+      more splits than cores and the repartition — a full shuffle of
+      the corpus text — is correctly skipped.
 
     The verified pairs are localCheckpointed (small) and the cache
-    released, so nothing outlives the call. Pass ``materialize=False``
-    for the lazy plan (plan-contract tests).
+    released, so nothing outlives the call.
     """
-    docs = docs.select(id_col, text_col)
-    if materialize:
-        sc = docs.sparkSession.sparkContext
-        if docs.rdd.getNumPartitions() < sc.defaultParallelism:
-            docs = docs.repartition(sc.defaultParallelism)
-    shingled = word_shingles(docs, text_col)
-    if not materialize:
-        signed = minhash_signature(shingled, num_hashes) \
-            .select(id_col, "shingles", "signature")
-        pairs = lsh_candidate_pairs(
-            signed.where(F.size("shingles") > 0), bands, id_col)
-        return jaccard_verify(pairs, signed, threshold, id_col)
-    signed = minhash_signature(shingled, num_hashes) \
+    from .util import ensure_fanout
+
+    docs = ensure_fanout(docs.select(id_col, text_col))
+    signed = minhash_signature(word_shingles(docs, text_col), num_hashes) \
         .select(id_col, F.size("shingles").alias("n_sh"), "signature") \
         .persist()
     pairs = None

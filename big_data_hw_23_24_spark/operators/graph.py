@@ -306,8 +306,7 @@ def item_triangles(events: DataFrame, user_col: str = "user_id",
 
 def itemset_triples(baskets: DataFrame, basket_col: str, item_col: str,
                     minsup: int = 2,
-                    min_frac: float | None = None,
-                    materialize: bool = False) -> DataFrame:
+                    min_frac: float | None = None) -> DataFrame:
     """A-priori frequent 3-itemsets (E148) → ``(item_a, item_b,
     item_c, support)`` with ``item_a < item_b < item_c``.
 
@@ -336,25 +335,21 @@ def itemset_triples(baskets: DataFrame, basket_col: str, item_col: str,
     corpus grows: with an absolute minsup, coincidence triples in
     diffuse data accumulate quadratically with basket count. The
     basket count rides every level's filter as a 1-row broadcast
-    crossJoin (the IdentityBroadcast pattern) — with
-    ``materialize=False`` the operator stays fully lazy.
+    crossJoin (the IdentityBroadcast pattern).
 
-    ``materialize=True`` eagerly ``localCheckpoint``s the two slim
-    fan-out tables (the distinct baskets ``b`` and the L1-filtered
-    ``b1``, which feed 2 and 5 consumers respectively — the
-    subtree-per-consumer pattern, SCALING root-cause 4). Measured at
-    sf0.1 (r13): 3.85 s lazy → 2.93 s checkpointed at the same
-    threshold — a different result from the r10 ``persist()``
-    measurement (3.0 s → 6-8 s), because persist serializes blocks
-    INSIDE the stage pipeline while an eager localCheckpoint computes
-    the slim table exactly once and serves every consumer from local
-    blocks. Default stays lazy (composable, no lifecycle), the benched
-    face opts in.
+    The two slim fan-out tables are eagerly ``localCheckpoint``ed
+    (the distinct baskets ``b`` and the L1-filtered ``b1``, which feed
+    2 and 5 consumers respectively — the subtree-per-consumer pattern,
+    SCALING root-cause 4). Measured at sf0.1 (r13): 3.85 s lazy →
+    2.93 s checkpointed at the same threshold — a different result
+    from the r10 ``persist()`` measurement (3.0 s → 6-8 s), because
+    persist serializes blocks INSIDE the stage pipeline while an eager
+    localCheckpoint computes the slim table exactly once and serves
+    every consumer from local blocks.
     """
     b = (baskets.select(F.col(basket_col).alias("_bk"),
-                        F.col(item_col).alias("_it")).distinct())
-    if materialize:
-        b = b.localCheckpoint(eager=True)
+                        F.col(item_col).alias("_it")).distinct()
+         .localCheckpoint(eager=True))
     if min_frac is None:
         thr = F.lit(minsup).cast("long")
 
@@ -369,9 +364,7 @@ def itemset_triples(baskets: DataFrame, basket_col: str, item_col: str,
             return df.crossJoin(F.broadcast(nb))
     f1 = (with_thr(b.groupBy("_it").agg(F.count("*").alias("_s")))
           .where(F.col("_s") >= thr).select("_it"))
-    b1 = b.join(f1, "_it").select("_bk", "_it")
-    if materialize:
-        b1 = b1.localCheckpoint(eager=True)
+    b1 = b.join(f1, "_it").select("_bk", "_it").localCheckpoint(eager=True)
     pairs = (with_thr(b1.alias("x").join(b1.alias("y"), "_bk")
                       .where(F.col("x._it") < F.col("y._it"))
                       .groupBy(F.col("x._it").alias("_ia"),

@@ -225,7 +225,6 @@ def bm25_search_many(docs: DataFrame, queries: DataFrame, k: int = 20,
                      k1: float = 1.2, b: float = 0.75,
                      text_col: str = "text",
                      id_col: str = "doc_id",
-                     materialize: bool = True,
                      index=None) -> DataFrame:
     """Batch BM25: top-``k`` documents PER QUERY for a whole query
     table → ``(qid, doc_id, n_hits, score, rank)``.
@@ -256,37 +255,13 @@ def bm25_search_many(docs: DataFrame, queries: DataFrame, k: int = 20,
     corpus scan (the hybrid-RRF path). Terms are lowercased either way
     so the batch face matches bm25_topk's contract.
     """
-    if index is not None:
-        postings, stats, qterms = index
-    elif materialize:
+    if index is None:
         # the one-tokenize index build (r14): the standalone path ran
         # TWO corpus tokenize passes — the pruned-postings pin and a
         # separate (n, sumdl) aggregate; build_query_index does one
-        postings, stats, qterms = build_query_index(
+        index = build_query_index(
             docs, queries, text_col=text_col, id_col=id_col)
-    else:
-        from .util import lowered_words
-
-        words = lowered_words(text_col)
-        base = docs.select(F.col(id_col), words.alias("_w"))
-        stats = base.agg(F.count("*").alias("_n"),
-                         F.sum(F.size("_w")).alias("_sumdl"))
-        qterms = (queries.select("qid", F.explode("terms").alias("term"))
-                  .select("qid", F.lower("term").alias("term"))
-                  .distinct())
-        terms_only = qterms.select("term").distinct()
-
-        # postings pruned to query terms BEFORE the (doc, term)
-        # aggregate: the corpus-side shuffle carries only matching
-        # tokens, and dl rides along (functionally dependent on doc)
-        # instead of joining a second corpus-wide table back
-        # (materialize=False: fully lazy for plan inspection)
-        postings = (base.select(F.col(id_col), F.size("_w").alias("dl"),
-                                F.explode("_w").alias("term"))
-                    .join(F.broadcast(terms_only), "term")
-                    .groupBy(id_col, "term")
-                    .agg(F.count("*").alias("tf"),
-                         F.first("dl").alias("dl")))
+    postings, stats, qterms = index
     df_q = postings.groupBy("term").agg(F.count("*").alias("_df"))
 
     hits = (postings

@@ -116,8 +116,7 @@ def token_shards(df: DataFrame, order_by: list[Column | str],
 def dsir_importance(docs: DataFrame, is_target: Column,
                     bucket_chars: int = 3, eps: float = 1e-6,
                     text_col: str = "text",
-                    id_col: str = "doc_id",
-                    materialize: bool = True) -> DataFrame:
+                    id_col: str = "doc_id") -> DataFrame:
     """DSIR-style importance weights → ``(doc_id, n_feats, weight)``.
 
     Data Selection via Importance Resampling (Xie et al., NeurIPS
@@ -166,7 +165,12 @@ def dsir_importance(docs: DataFrame, is_target: Column,
     from .util import ensure_fanout
 
     # the bigram concat explode is the heavy stage (same shape as
-    # textstats._ngram_pairs): fan a sub-row-group input out first
+    # textstats._ngram_pairs): fan a sub-row-group input out first.
+    # Both the bucket table and the per-doc weights read the
+    # (doc, bucket) counts; Catalyst does not reuse the
+    # explode+aggregate subtree across branches, so materialize it
+    # once (the doc_boilerplate_share pattern) instead of scanning
+    # and shuffling the corpus twice
     feats = (ensure_fanout(docs)
              .select(F.col(id_col), is_target.alias("_t"),
                      F.explode(grams).alias("_g"))
@@ -174,14 +178,8 @@ def dsir_importance(docs: DataFrame, is_target: Column,
                      F.substring(F.md5(F.col("_g")), 1, bucket_chars)
                      .alias("_b"))
              .groupBy(id_col, "_t", "_b")
-             .agg(F.count("*").alias("_c")))
-    if materialize:
-        # both the bucket table and the per-doc weights read the
-        # (doc, bucket) counts; Catalyst does not reuse the
-        # explode+aggregate subtree across branches, so materialize it
-        # once (the doc_boilerplate_share pattern) instead of scanning
-        # and shuffling the corpus twice
-        feats = feats.localCheckpoint(eager=True)
+             .agg(F.count("*").alias("_c"))
+             .localCheckpoint(eager=True))
 
     bucket_tbl = (feats.groupBy("_b")
                   .agg(F.sum("_c").alias("_raw"),

@@ -401,9 +401,7 @@ def winnow_overlap_pairs(docs: DataFrame, k: int = 4, w: int = 5,
 
 def char_span_flags(docs: DataFrame, k: int = 20, w: int = 8,
                     min_docs: int = 2, text_col: str = "text",
-                    id_col: str = "doc_id",
-                    materialize: bool = True,
-                    fanout: bool = True) -> DataFrame:
+                    id_col: str = "doc_id") -> DataFrame:
     """Repeated-substring flags at CHARACTER granularity → (doc_id,
     n_grams, n_selected, n_flagged, flag_frac): winnow-select char
     ``k``-gram hashes per document, mine the selected hashes shared by
@@ -491,13 +489,12 @@ def char_span_flags(docs: DataFrame, k: int = 20, w: int = 8,
             out_sel.append(sel.tolist())
         return pd.DataFrame({"n_grams": out_n, "sel": out_sel})
 
-    base = ((ensure_fanout(docs) if fanout else docs)
+    base = (ensure_fanout(docs)
             .withColumn("_wn", _winnow(F.col(text_col)))
             .select(F.col(id_col),
                     F.col("_wn.n_grams").alias("n_grams"),
-                    F.col("_wn.sel").alias("_sel")))
-    if materialize:
-        base = base.localCheckpoint(eager=True)
+                    F.col("_wn.sel").alias("_sel"))
+            .localCheckpoint(eager=True))
     pos = base.select(F.col(id_col), F.explode("_sel").alias("_h"))
     # _sel is distinct within a doc, so count(*) IS the distinct-doc
     # count — no count_distinct shuffle needed
@@ -628,8 +625,7 @@ def boilerplate_ngrams(docs: DataFrame, n: int = 8, min_docs: int = 3,
 
 def doc_boilerplate_share(docs: DataFrame, n: int = 8, min_docs: int = 3,
                           text_col: str = "text",
-                          id_col: str = "doc_id",
-                          materialize: bool = True) -> DataFrame:
+                          id_col: str = "doc_id") -> DataFrame:
     """Per-document boilerplate exposure → (doc_id, n_ngrams,
     n_boiler, boiler_share): how much of a document's n-gram stream is
     corpus-level boilerplate (``boilerplate_ngrams`` with the same
@@ -642,12 +638,10 @@ def doc_boilerplate_share(docs: DataFrame, n: int = 8, min_docs: int = 3,
     subtree across branches, so without this the corpus is scanned and
     shuffled three times). The mined set left-joins back as a flag
     (AQE-broadcast, threshold-pruned) and one flagged aggregate
-    produces totals and hits together; ``materialize=False`` keeps the
-    plan lazy for inspection.
+    produces totals and hits together.
     """
-    pairs = _ngram_pairs(docs, n, text_col, id_col)
-    if materialize:
-        pairs = pairs.localCheckpoint(eager=True)
+    pairs = _ngram_pairs(docs, n, text_col, id_col) \
+        .localCheckpoint(eager=True)
     boiler = (pairs.groupBy("ngram").agg(F.count("*").alias("n_docs"))
               .where(F.col("n_docs") >= min_docs)
               .select("ngram", F.lit(True).alias("_boiler")))
@@ -681,9 +675,7 @@ def redact_pii(docs: DataFrame, text_col: str = "text",
 
 def remove_repeated_spans(docs: DataFrame, n: int = 8, min_docs: int = 2,
                           text_col: str = "text",
-                          id_col: str = "doc_id",
-                          materialize: bool = True,
-                          fanout: bool = True) -> DataFrame:
+                          id_col: str = "doc_id") -> DataFrame:
     """Exact repeated-span REMOVAL → (doc_id, n_tokens, n_removed,
     clean_text): strip every token covered by a word n-gram that
     appears in ≥ ``min_docs`` distinct documents.
@@ -708,25 +700,15 @@ def remove_repeated_spans(docs: DataFrame, n: int = 8, min_docs: int = 2,
     inner probe is O(|flags per doc|), bounded by document length,
     never a corpus term. Short docs (< n words) pass through intact
     via the left join.
-
-    Pass ``fanout=False`` when ``docs`` is NOT a scan-rooted frame
-    (e.g. it sits on a join/shuffle): ``ensure_fanout``'s partition
-    probe goes through ``df.rdd``, which under AQE can materialize
-    upstream exchanges as extra jobs — its contract is scan-rooted
-    inputs only. A post-shuffle frame already carries shuffle-level
-    parallelism, so skipping the guard loses nothing.
     """
     return _repeated_span_removal(docs, n, min_docs, text_col, id_col,
-                                  materialize, fanout,
                                   keep_first_owner=False)
 
 
 def remove_repeated_spans_keepone(docs: DataFrame, n: int = 8,
                                   min_docs: int = 2,
                                   text_col: str = "text",
-                                  id_col: str = "doc_id",
-                                  materialize: bool = True,
-                                  fanout: bool = True) -> DataFrame:
+                                  id_col: str = "doc_id") -> DataFrame:
     """Exact repeated-span dedup, KEEP-ONE variant → (doc_id,
     n_tokens, n_removed, clean_text): for every word n-gram shared by
     ≥ ``min_docs`` distinct documents, the FIRST OWNER (minimum doc
@@ -754,13 +736,11 @@ def remove_repeated_spans_keepone(docs: DataFrame, n: int = 8,
     own rows before collecting starts — zero extra shuffles.
     """
     return _repeated_span_removal(docs, n, min_docs, text_col, id_col,
-                                  materialize, fanout,
                                   keep_first_owner=True)
 
 
 def _repeated_span_removal(docs: DataFrame, n: int, min_docs: int,
                            text_col: str, id_col: str,
-                           materialize: bool, fanout: bool,
                            keep_first_owner: bool) -> DataFrame:
     words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
     from .util import ensure_fanout
@@ -773,12 +753,11 @@ def _repeated_span_removal(docs: DataFrame, n: int, min_docs: int,
                         F.concat_ws(" ", F.slice(words, i, n))
                         .alias("gram"))),
     ).otherwise(F.array().cast("array<struct<start:int,gram:string>>"))
-    pos = ((ensure_fanout(docs) if fanout else docs)
+    pos = (ensure_fanout(docs)
            .select(F.col(id_col), F.explode(grams).alias("_p"))
            .select(id_col, F.col("_p.start").alias("start"),
-                   F.col("_p.gram").alias("gram")))
-    if materialize:
-        pos = pos.localCheckpoint(eager=True)
+                   F.col("_p.gram").alias("gram"))
+           .localCheckpoint(eager=True))
 
     # NO broadcast hint on the mined set: at min_docs=2 over a large
     # corpus it is unbounded (raise min_docs with corpus size, as in
@@ -812,8 +791,7 @@ def _repeated_span_removal(docs: DataFrame, n: int, min_docs: int,
 
 def decontaminate_spans(docs: DataFrame, benchmark: DataFrame, n: int = 8,
                         text_col: str = "text", id_col: str = "doc_id",
-                        bench_text_col: str = "text",
-                        fanout: bool = True) -> DataFrame:
+                        bench_text_col: str = "text") -> DataFrame:
     """Span-level benchmark decontamination → (doc_id, n_tokens,
     n_removed, clean_text): strip every token covered by a word
     ``n``-gram that appears ANYWHERE in the benchmark corpus.
@@ -846,7 +824,7 @@ def decontaminate_spans(docs: DataFrame, benchmark: DataFrame, n: int = 8,
                         F.concat_ws(" ", F.slice(words, i, n))
                         .alias("gram"))),
     ).otherwise(F.array().cast("array<struct<start:int,gram:string>>"))
-    pos = ((ensure_fanout(docs) if fanout else docs)
+    pos = (ensure_fanout(docs)
            .select(F.col(id_col), F.explode(grams).alias("_p"))
            .select(id_col, F.col("_p.start").alias("start"),
                    F.col("_p.gram").alias("gram")))

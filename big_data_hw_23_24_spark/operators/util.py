@@ -17,35 +17,52 @@ def lowered_words(col: Column | str) -> Column:
     return F.filter(F.split(F.lower(col), " "), lambda w: w != "")
 
 
-def ensure_fanout(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+# optimized-logical-plan nodes that plan to an exchange
+_SHUFFLE_NODES = frozenset({
+    "Aggregate", "Join", "Window", "WindowGroupLimit", "Sort", "Distinct",
+    "Deduplicate", "DeduplicateWithinWatermark", "Repartition",
+    "RepartitionByExpression", "RebalancePartitions"})
+
+
+def _needs_shuffle(df: DataFrame) -> bool:
+    """Whether ``df``'s optimized logical plan holds a shuffle node —
+    driver-side, no job. Cached (``InMemoryRelation``) and checkpointed
+    (``LogicalRDD``) frames are leaves of that plan."""
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() in _SHUFFLE_NODES:
+            return True
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False
+
+
+def ensure_fanout(df: DataFrame) -> DataFrame:
     """Round-robin repartition a df whose scan has too FEW partitions
     for expansion-heavy downstream work (explode to n-grams/shingles,
     per-row kernels): a sub-row-group-sized parquet file arrives as ONE
     split, serializing a 50× explode onto one core while 31 idle.
 
-    No-op when the input already carries ≥ ``min_partitions`` (default
-    ``sc.defaultParallelism``) — at 100 TB the scan has thousands of
-    splits and the repartition must NOT add a shuffle; this guard is
-    what makes the call safe to leave in the operator.
-
-    CALL THIS ON SCAN-ROOTED FRAMES ONLY (a read + narrow projections).
-    The partition probe goes through ``df.rdd``, and under AQE
-    converting a DataFrame with upstream SHUFFLES to an RDD can
-    materialize those exchanges as real jobs at construction time,
-    which the later action does not reuse — on a scan-rooted frame
-    there is nothing to materialize and the probe is metadata-only.
-    Every in-repo call site feeds it the raw docs scan; operators that
-    can also receive post-shuffle frames expose a ``fanout=False``
-    opt-out (e.g. ``remove_repeated_spans``) so callers keep the
-    contract honest.
+    The frame's own plan decides whether it may be probed. A scan, a
+    cached or checkpointed frame, and narrow maps over them are probed
+    through ``df.rdd`` at no cost (a cache not yet filled runs its own
+    shuffle stages early, which it then reuses) and repartitioned to
+    ``sc.defaultParallelism`` when they have fewer partitions; at
+    100 TB the scan has thousands of splits and no shuffle is added.
+    A frame whose plan shuffles (aggregate, join, window, sort,
+    distinct, repartition) is returned unchanged: under AQE the probe
+    would run its exchanges as jobs the later action does not reuse,
+    and would report the coalesced post-shuffle width.
 
     This is the declarative descendant of the reference's eager
     ``repartition(L)`` (G019HW1.java:68, X1): same intent — match
     parallelism to the work, not the input layout — applied only when
     the layout actually under-supplies partitions.
     """
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+    if _needs_shuffle(df):
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -525,12 +525,21 @@ def test_corpus_pipeline_best_survivor_and_span_strip(spark, tmp_path):
     assert winners != min_ids
 
 
-def test_corpus_pipeline_rejects_bad_survivor(spark, tmp_path):
+def test_corpus_pipeline_rejects_bad_survivor(spark, tmp_path, request):
+    """A bad survivor is rejected before any stage runs a Spark job."""
     from big_data_hw_23_24_spark.apps.corpus_pipeline import run
 
+    sc = spark.sparkContext
+    sc.setJobGroup("rejects_bad_survivor", "bad survivor")
+
+    def clear_group():
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    request.addfinalizer(clear_group)
     with pytest.raises(ValueError, match="survivor"):
         run(spark, "/root/testdata/sf0.001/documents.parquet",
             str(tmp_path / "out"), survivor="bogus")
+    assert not sc.statusTracker().getJobIdsForGroup("rejects_bad_survivor")
 
 
 @pytest.mark.slow  # r15 budget: stage variant of the default e2e run
@@ -586,8 +595,9 @@ def test_corpus_pipeline_rejects_bad_contamination_mode(spark, tmp_path):
 
 def test_cli_mains_reject_bad_flags_before_building_a_session(
         tmp_path, monkeypatch, capsys):
-    """A mistyped flag or a value flag with no value is a usage error
-    (exit 2), never a silent default or a bare StopIteration."""
+    """A mistyped flag, a value flag with no value or a value that does
+    not parse is a usage error (exit 2), never a silent default, a bare
+    StopIteration or a ValueError after the session is up."""
     from big_data_hw_23_24_spark import session
     from big_data_hw_23_24_spark.apps import corpus_pipeline, dedup_report
 
@@ -596,8 +606,17 @@ def test_cli_mains_reject_bad_flags_before_building_a_session(
 
     monkeypatch.setattr(session, "get_session", no_session)
     src = "/root/testdata/sf0.001/documents.parquet"
-    assert corpus_pipeline.main(
-        [src, str(tmp_path / "out"), "--min-qualty", "0.9"]) == 2
-    assert dedup_report.main([src, "--threshold"]) == 2
+    bad_pipeline = [["--min-qualty", "0.9"], ["--threshold", "x"],
+                    ["--lm-band", "3"], ["--survivor", "bset"],
+                    ["--contamination-mode", "keep"],
+                    ["--chunk-size", "1.5"], ["--mix-rates", "src0"],
+                    ["--dsir-target", "lang"]]
+    for flags in bad_pipeline:
+        assert corpus_pipeline.main(
+            [src, str(tmp_path / "out"), *flags]) == 2, flags
+    bad_report = [["--threshold"], ["--threshold", "x"], ["--hamming", "3.5"]]
+    for flags in bad_report:
+        assert dedup_report.main([src, *flags]) == 2, flags
     out = capsys.readouterr().out.splitlines()
-    assert out == [corpus_pipeline.USAGE, dedup_report.USAGE]
+    assert out == ([corpus_pipeline.USAGE] * len(bad_pipeline)
+                   + [dedup_report.USAGE] * len(bad_report))

@@ -83,30 +83,33 @@ def test_knn_scores_jvm_side(spark):
     assert "ArrowEvalPython" not in plan
 
 
-def _minhash_lazy_plan(spark):
-    # materialize=False: the registry entry eagerly checkpoints (its
-    # plan collapses to an RDD scan), so assert on the lazy pipeline
-    from big_data_hw_23_24_spark.operators.dedup import minhash_near_duplicates
+def _minhash_plans(spark):
+    # minhash_near_duplicates persists and checkpoints its frames (its
+    # plan collapses to an RDD scan), so assert on the public pieces it
+    # is built from: the banded candidates and the exact verify
+    from big_data_hw_23_24_spark.operators.dedup import (
+        jaccard_verify, lsh_candidate_pairs, minhash_signature,
+        word_shingles)
     from big_data_hw_23_24_spark.sources.tables import load_table
-    docs = load_table(spark, SF, "documents")
-    return explain_str(
-        minhash_near_duplicates(docs, threshold=0.7, materialize=False),
-        "simple")
+    shingled = word_shingles(load_table(spark, SF, "documents"))
+    pairs = lsh_candidate_pairs(minhash_signature(shingled))
+    return (explain_str(pairs, "simple"),
+            explain_str(jaccard_verify(pairs, shingled, 0.7), "simple"))
 
 
 def test_minhash_pipeline_jvm_side(spark):
-    plan = _minhash_lazy_plan(spark)
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
+    for plan in _minhash_plans(spark):
+        assert "BatchEvalPython" not in plan
+        assert "ArrowEvalPython" not in plan
 
 
 def test_lsh_banding_has_no_signature_joinback(spark):
-    # exactly 3 joins: band self-join + 2 shingle-verify joins — the
-    # signature is carried through the explode, never joined back
-    plan = _minhash_lazy_plan(spark)
+    # exactly 1 join, the band self-join — the signature is carried
+    # through the explode, never joined back
+    plan, _ = _minhash_plans(spark)
     n_joins = sum(plan.count(j) for j in
                   ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"))
-    assert n_joins <= 3, plan
+    assert n_joins == 1, plan
 
 
 def test_udaf_is_single_grouped_pandas_kernel(spark):

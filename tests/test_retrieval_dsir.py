@@ -163,7 +163,7 @@ def test_dsir_matches_pure_python(spark):
 
 def test_dsir_bucket_join_is_broadcast(spark):
     df = dsir_importance(_dsir_docs(spark, [(1, "a b c", True)]),
-                         F.col("t"), materialize=False)
+                         F.col("t"))
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "simple")
     # the bucket-lr table joins back by broadcast, never by shuffling
@@ -637,13 +637,39 @@ def test_best_survivors_tolerates_missing_scores(spark):
 def test_ensure_fanout_noop_when_enough_partitions(spark):
     from big_data_hw_23_24_spark.operators.util import ensure_fanout
 
-    df = spark.range(1000).repartition(64)
-    assert ensure_fanout(df, 32) is df  # guard: no extra shuffle added
-    few = spark.range(1000).coalesce(1)
-    out = ensure_fanout(few, 8)
+    sc = spark.sparkContext
+    width = sc.defaultParallelism
+    df = spark.range(0, 1000, 1, 2 * width)
+    assert ensure_fanout(df) is df  # guard: no extra shuffle added
+    few = spark.range(0, 1000, 1, 1)
+    out = ensure_fanout(few)
     assert out is not few
-    assert out.rdd.getNumPartitions() == 8
+    assert out.rdd.getNumPartitions() == width
     assert out.count() == 1000
+
+    # a post-shuffle frame comes back as is, and is not probed: under
+    # AQE the probe would run the aggregate as a job and report its
+    # coalesced width
+    agg = spark.range(0, 700, 1, 1).groupBy(F.col("id") % 7).count()
+    sc.setJobGroup("fanout_post_shuffle", "ensure_fanout on an aggregate")
+    try:
+        assert ensure_fanout(agg) is agg
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not sc.statusTracker().getJobIdsForGroup("fanout_post_shuffle")
+
+    # a cached frame is a leaf of the plan: probed, and fanned out
+    # when it has too few partitions
+    cached = spark.range(0, 500, 1, 1).cache()
+    try:
+        cached.count()
+        out = ensure_fanout(cached)
+        assert out is not cached
+        assert out.rdd.getNumPartitions() == width
+        assert out.count() == 500
+    finally:
+        cached.unpersist()
 
 
 # --- sequential funnel --------------------------------------------------------

@@ -14,11 +14,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Cores of the local profile: $SPARK_GRAFT_CPUS, else the CPUs this
+# process may run on.
+_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
 # Local test profile. local[N] = one JVM; shuffle partitions sized to
 # cores, not the 200 default. On a real cluster these confs are
 # supplied by spark-submit; only the AQE/timezone lines matter there.
 _LOCAL_CONFS = {
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.sql.shuffle.partitions": _CPUS,
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -31,6 +35,8 @@ _LOCAL_CONFS = {
     # testdata events.ts is TIMESTAMP(NANOS) parquet, which Spark 4
     # refuses by default; read as long and convert in sources.tables.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # star_queries' 12 queries need ~174 classes: 100 missed on every one
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 
@@ -39,15 +45,13 @@ def get_session(app_name: str = "big_data_hw_23_24_spark",
                 extra_confs: dict[str, str] | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; pass
-    ``None`` under spark-submit on a cluster and the submitted master
-    wins (getOrCreate reuses the active session).
+    ``master`` defaults to ``local[N]``, N = ``$SPARK_GRAFT_CPUS`` or
+    the CPUs this process may run on; pass ``None`` under spark-submit
+    on a cluster and the submitted master wins (getOrCreate reuses the
+    active session).
     """
     builder = SparkSession.builder.appName(app_name)
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
-    builder = builder.master(master)
+    builder = builder.master(master or f"local[{_CPUS}]")
     confs = dict(_LOCAL_CONFS)
     if extra_confs:
         confs.update(extra_confs)

@@ -602,7 +602,7 @@ def test_lm_scoring_plan_construction_launches_no_jobs(spark):
         bigram_logprob, unigram_logprob)
     from big_data_hw_23_24_spark.sources.tables import load_table
 
-    docs = load_table(spark, SF, "documents")  # footer-read job here
+    docs = load_table(spark, SF, "documents")  # may run a schema job
     sc = spark.sparkContext
     before = set(sc.statusTracker().getJobIdsForGroup(None) or [])
     unigram_logprob(docs)

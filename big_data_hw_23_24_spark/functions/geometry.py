@@ -17,16 +17,16 @@ def dist_sq(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
     return (x1 - x2) * (x1 - x2) + (y1 - y2) * (y1 - y2)
 
 
-def cell_ids(df: DataFrame, side: float,
-             x: str = "x", y: str = "y") -> DataFrame:
-    """Attach integer grid-cell ids ``(ci, cj)`` for a square grid.
+def cell_ids(df: DataFrame, side: float) -> DataFrame:
+    """Attach integer grid-cell ids ``(ci, cj)`` of the points ``(x, y)``
+    on a square grid.
 
     Mirrors ``(int) Math.floor(x / lam)`` (``G019HW1.java:183-185``)
     with ``side`` the cell side length (Λ = D/(2√2) for MRApproxOutliers,
     D for the exact grid join).
     """
-    return df.withColumn("ci", F.floor(F.col(x) / side).cast("int")) \
-             .withColumn("cj", F.floor(F.col(y) / side).cast("int"))
+    return df.withColumn("ci", F.floor(F.col("x") / side).cast("int")) \
+             .withColumn("cj", F.floor(F.col("y") / side).cast("int"))
 
 
 def neighbor_offsets(radius: int) -> Column:

@@ -32,14 +32,17 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+M_BITS = 1 << 16  # filter size in bits
+K_HASHES = 5  # hash positions per key
 
-def bloom_build(keys: DataFrame, key_col: str, m_bits: int = 1 << 16,
-                k: int = 5) -> DataFrame:
+
+def bloom_build(keys: DataFrame, key_col: str,
+                m_bits: int = M_BITS) -> DataFrame:
     """Distinct keys → ONE-row DataFrame with ``bf: array<bigint>`` of
     length m_bits/64. Duplicate keys cost nothing extra (bit_or)."""
     n_words = m_bits // 64
     pos = (keys.select(
-        F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("i"),
+        F.explode(F.sequence(F.lit(0), F.lit(K_HASHES - 1))).alias("i"),
         F.col(key_col).alias("key"))
         .select(F.pmod(F.xxhash64("i", "key"), F.lit(m_bits)).alias("p")))
     words = (pos.groupBy(F.shiftright("p", 6).cast("int").alias("w"))
@@ -55,15 +58,15 @@ def bloom_build(keys: DataFrame, key_col: str, m_bits: int = 1 << 16,
                 .alias("bf")))
 
 
-def bloom_might_contain(df: DataFrame, bloom: DataFrame, key_col: str,
-                        m_bits: int = 1 << 16, k: int = 5) -> DataFrame:
+def bloom_might_contain(df: DataFrame, bloom: DataFrame,
+                        key_col: str) -> DataFrame:
     """Keep rows whose key might be in the filter (never drops a true
     match). ``bloom`` is the one-row DF from ``bloom_build`` —
     broadcast, so the probe is a map-side cross join of one row."""
     probed = df.crossJoin(F.broadcast(bloom))
     tests = []
-    for i in range(k):
-        p = f"pmod(xxhash64({i}, {key_col}), {m_bits})"
+    for i in range(K_HASHES):
+        p = f"pmod(xxhash64({i}, {key_col}), {M_BITS})"
         tests.append(F.expr(
             f"(element_at(bf, cast(shiftright({p}, 6) AS INT) + 1)"
             f" & shiftleft(1L, cast(({p} & 63) AS INT))) != 0"))
@@ -71,31 +74,29 @@ def bloom_might_contain(df: DataFrame, bloom: DataFrame, key_col: str,
 
 
 def bloom_flag(df: DataFrame, bloom: DataFrame, key_col: str,
-               flag_col: str = "maybe", m_bits: int = 1 << 16,
-               k: int = 5) -> DataFrame:
+               m_bits: int = M_BITS) -> DataFrame:
     """Like :func:`bloom_might_contain` but non-destructive: append a
-    boolean ``flag_col`` (might-be-member) instead of filtering, for
+    boolean ``maybe`` column (might-be-member) instead of filtering, for
     callers that route accepted and rejected rows down DIFFERENT paths
     (e.g. only accepted rows pay a verification join)."""
     probed = df.crossJoin(F.broadcast(bloom))
     tests = []
-    for i in range(k):
+    for i in range(K_HASHES):
         p = f"pmod(xxhash64({i}, {key_col}), {m_bits})"
         tests.append(F.expr(
             f"(element_at(bf, cast(shiftright({p}, 6) AS INT) + 1)"
             f" & shiftleft(1L, cast(({p} & 63) AS INT))) != 0"))
     return probed.withColumn(
-        flag_col, reduce(lambda a, b: a & b, tests)).drop("bf")
+        "maybe", reduce(lambda a, b: a & b, tests)).drop("bf")
 
 
-def bloom_semi_prune(fact: DataFrame, dim: DataFrame,
-                     fact_key: str, dim_key: str,
-                     m_bits: int = 1 << 16, k: int = 5) -> DataFrame:
+def bloom_semi_prune(fact: DataFrame, dim: DataFrame, fact_key: str,
+                     dim_key: str) -> DataFrame:
     """Prune ``fact`` to rows whose key might appear in ``dim``.
 
     A superset of the true semi-join (no false negatives); follow with
     the real join for exact results — the prune only shrinks what the
     join must shuffle.
     """
-    bf = bloom_build(dim.select(dim_key).distinct(), dim_key, m_bits, k)
-    return bloom_might_contain(fact, bf, fact_key, m_bits, k)
+    bf = bloom_build(dim.select(dim_key).distinct(), dim_key)
+    return bloom_might_contain(fact, bf, fact_key)

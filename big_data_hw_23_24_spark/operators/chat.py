@@ -27,8 +27,7 @@ PREFIX = "<|im_start|>"
 SUFFIX = "<|im_end|>\n"
 
 
-def chat_render_spans(convs: DataFrame, id_col: str = "conv_id",
-                      msg_col: str = "messages") -> DataFrame:
+def chat_render_spans(convs: DataFrame) -> DataFrame:
     """Per-turn rendering arithmetic → ``(conv_id, turn, role,
     content_start, content_end, rendered)``.
 
@@ -41,33 +40,32 @@ def chat_render_spans(convs: DataFrame, id_col: str = "conv_id",
     IS the content, pinned by test and by the oracle. Null content
     renders as empty (zero-width span), not as the string 'null'.
     """
-    m = convs.select(F.col(id_col),
-                     F.posexplode(msg_col).alias("turn", "_m"))
+    m = convs.select(F.col("conv_id"),
+                     F.posexplode("messages").alias("turn", "_m"))
     role = F.col("_m.role")
     content = F.coalesce(F.col("_m.content"), F.lit(""))
     rendered = F.concat(F.lit(PREFIX), role, F.lit("\n"), content,
                         F.lit(SUFFIX))
     rlen = F.length(rendered).cast("long")
-    w = (Window.partitionBy(id_col).orderBy("turn")
+    w = (Window.partitionBy("conv_id").orderBy("turn")
          .rowsBetween(Window.unboundedPreceding, -1))
     start = F.coalesce(F.sum(rlen).over(w), F.lit(0).cast("long"))
     content_start = (start + len(PREFIX) + F.length(role) + 1) \
         .cast("long")
     return m.select(
-        F.col(id_col), F.col("turn"), role.alias("role"),
+        F.col("conv_id"), F.col("turn"), role.alias("role"),
         content_start.alias("content_start"),
         (content_start + F.length(content)).cast("long")
         .alias("content_end"),
         rendered.alias("rendered"))
 
 
-def chat_texts(convs: DataFrame, id_col: str = "conv_id",
-               msg_col: str = "messages") -> DataFrame:
+def chat_texts(convs: DataFrame) -> DataFrame:
     """Full rendered conversations → ``(conv_id, text, n_turns,
     n_chars)``: the spans' companion face, reassembled with a keyed
     aggregate (sort_array on the turn index, then join — no window)."""
-    spans = chat_render_spans(convs, id_col, msg_col)
-    return (spans.groupBy(id_col)
+    spans = chat_render_spans(convs)
+    return (spans.groupBy("conv_id")
             .agg(F.array_join(
                 F.transform(
                     F.sort_array(F.collect_list(

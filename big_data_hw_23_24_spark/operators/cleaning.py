@@ -31,6 +31,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+QUALITY_SALT = "q"  # salt of the hashed token weights
+QUALITY_HASH_CHARS = 8  # md5 hex digits per token weight
+
 #: a line "ends in terminal punctuation" if, after trimming trailing
 #: whitespace, the last character is . ! ? or a closing double quote —
 #: the C4 heuristic for "looks like a real sentence".
@@ -43,15 +46,14 @@ def _word_count(line: Column) -> Column:
     return F.size(F.filter(F.split(line, " "), lambda w: w != F.lit("")))
 
 
-def c4_line_filter(docs: DataFrame, text_col: str = "text",
-                   min_words: int = 4, min_lines: int = 2,
-                   out_col: str = "clean_text") -> DataFrame:
+def c4_line_filter(docs: DataFrame, text_col: str = "text", min_words: int = 4,
+                   min_lines: int = 2) -> DataFrame:
     """C4 line filter: keep lines ending in terminal punctuation with
     ≥ ``min_words`` words; flag documents that survive.
 
     Adds:
       * ``n_lines`` / ``n_kept`` — before/after line counts;
-      * ``out_col`` — the kept lines re-joined with newlines;
+      * ``clean_text`` — the kept lines re-joined with newlines;
       * ``has_lorem`` / ``has_brace`` — C4 junk flags (page-level
         "lorem ipsum" placeholder text, curly braces ⇒ leaked code);
       * ``keep`` — ``n_kept ≥ min_lines`` and neither junk flag.
@@ -68,7 +70,7 @@ def c4_line_filter(docs: DataFrame, text_col: str = "text",
     return (docs
             .withColumn("n_lines", F.size(lines))
             .withColumn("n_kept", F.size(kept))
-            .withColumn(out_col, F.array_join(kept, "\n"))
+            .withColumn("clean_text", F.array_join(kept, "\n"))
             .withColumn("has_lorem", lowered.contains("lorem ipsum"))
             .withColumn("has_brace", F.col(text_col).contains("{"))
             .withColumn(
@@ -77,8 +79,7 @@ def c4_line_filter(docs: DataFrame, text_col: str = "text",
                 & ~F.col("has_lorem") & ~F.col("has_brace")))
 
 
-def dedup_lines(docs: DataFrame, text_col: str = "text",
-                out_col: str = "text_deduped") -> DataFrame:
+def dedup_lines(docs: DataFrame) -> DataFrame:
     """Drop repeated lines WITHIN each document, keeping the first
     occurrence in original order (navigation chrome and repeated
     headers collapse to one instance).
@@ -86,9 +87,9 @@ def dedup_lines(docs: DataFrame, text_col: str = "text",
     Implemented as a left fold over the line array that appends a line
     only if it has not been seen yet — order-preserving dedup with no
     explode, no window and no shuffle. Adds ``n_lines``,
-    ``n_unique_lines`` and ``out_col``.
+    ``n_unique_lines`` and ``text_deduped``.
     """
-    lines = F.split(F.col(text_col), "\n")
+    lines = F.split(F.col("text"), "\n")
     deduped = F.aggregate(
         lines,
         F.array().cast("array<string>"),
@@ -98,7 +99,7 @@ def dedup_lines(docs: DataFrame, text_col: str = "text",
             .withColumn("n_lines", F.size(lines))
             .withColumn("_dedup", deduped)
             .withColumn("n_unique_lines", F.size("_dedup"))
-            .withColumn(out_col, F.array_join("_dedup", "\n"))
+            .withColumn("text_deduped", F.array_join("_dedup", "\n"))
             .drop("_dedup"))
 
 
@@ -113,8 +114,7 @@ def _hashed_weight(token: Column, salt: str, hash_chars: int) -> Column:
             / F.lit(float(16 ** hash_chars))) * 2.0 - 1.0
 
 
-def linear_quality_prob(text_col: Column | str = "text", salt: str = "q",
-                        hash_chars: int = 8) -> Column:
+def linear_quality_prob(text_col: Column | str = "text") -> Column:
     """The classifier's probability as a bare COLUMN (rounded to 6 dp):
     sigmoid of the mean hashed token weight. For gating a frame
     in-place with zero shuffle (``docs.where(linear_quality_prob() >
@@ -126,17 +126,15 @@ def linear_quality_prob(text_col: Column | str = "text", salt: str = "q",
     words = lowered_words(text_col)
     wsum = F.aggregate(
         words, F.lit(0.0),
-        lambda acc, w: acc + _hashed_weight(w, salt, hash_chars))
+        lambda acc, w: acc + _hashed_weight(w, QUALITY_SALT,
+                                            QUALITY_HASH_CHARS))
     logit = F.round(
         F.when(F.size(words) > 0, wsum / F.size(words))
         .otherwise(F.lit(0.0)), 6)
     return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6)
 
 
-def linear_quality_score(docs: DataFrame, salt: str = "q",
-                         hash_chars: int = 8,
-                         text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
+def linear_quality_score(docs: DataFrame) -> DataFrame:
     """fastText-style hashed linear classifier → ``(doc_id, n_tokens,
     logit, prob, keep)``.
 
@@ -144,7 +142,7 @@ def linear_quality_score(docs: DataFrame, salt: str = "q",
     (fastText/CCNet, the GPT-3 and LLaMA quality filters): embed each
     token by hashing it into a weight table, average, squash. Here the
     weight table is the DETERMINISTIC hash-derived stand-in
-    ``w(t) = 2·md5_prefix(salt:t)/16^n − 1`` — the same "weights are a
+    ``w(t) = 2·md5_prefix(q:t)/16^n − 1`` — the same "weights are a
     lookup keyed by token hash" dataflow as a trained model (swap in
     :func:`linear_quality_score_weighted` with a real weights table;
     the plumbing is identical), but reproducible in any engine so the
@@ -159,16 +157,17 @@ def linear_quality_score(docs: DataFrame, salt: str = "q",
     """
     from .util import lowered_words
 
-    words = lowered_words(text_col)
+    words = lowered_words("text")
     wsum = F.aggregate(
         words, F.lit(0.0),
-        lambda acc, w: acc + _hashed_weight(w, salt, hash_chars))
+        lambda acc, w: acc + _hashed_weight(w, QUALITY_SALT,
+                                            QUALITY_HASH_CHARS))
     n = F.size(words)
     logit = F.when(n > 0, wsum / n).otherwise(F.lit(0.0))
     return (docs
             .withColumn("_n", n)
             .withColumn("_logit", F.round(logit, 6))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.col("_n").cast("long").alias("n_tokens"),
                     F.col("_logit").alias("logit"),
                     F.round(F.lit(1.0)
@@ -177,9 +176,8 @@ def linear_quality_score(docs: DataFrame, salt: str = "q",
                     (F.col("_logit") > 0).alias("keep")))
 
 
-def linear_quality_score_weighted(docs: DataFrame, weights: DataFrame,
-                                  text_col: str = "text",
-                                  id_col: str = "doc_id") -> DataFrame:
+def linear_quality_score_weighted(docs: DataFrame,
+                                  weights: DataFrame) -> DataFrame:
     """The trained-weights face of :func:`linear_quality_score`:
     ``weights`` is ``(token, weight)`` (a fitted vocabulary — at most
     a few million rows, broadcastable by construction). Tokens absent
@@ -192,18 +190,18 @@ def linear_quality_score_weighted(docs: DataFrame, weights: DataFrame,
     """
     from .util import lowered_words
 
-    words = lowered_words(text_col)
-    toks = docs.select(F.col(id_col), F.size(words).alias("_n"),
+    words = lowered_words("text")
+    toks = docs.select(F.col("doc_id"), F.size(words).alias("_n"),
                        F.explode_outer(words).alias("token"))
     scored = (toks.join(F.broadcast(weights), "token", "left")
-              .groupBy(id_col)
+              .groupBy("doc_id")
               .agg(F.first("_n").alias("_n"),
                    F.sum(F.coalesce("weight", F.lit(0.0))).alias("_wsum")))
     logit = F.when(F.col("_n") > 0,
                    F.col("_wsum") / F.col("_n")).otherwise(F.lit(0.0))
     return (scored
             .withColumn("_logit", F.round(logit, 6))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.col("_n").cast("long").alias("n_tokens"),
                     F.col("_logit").alias("logit"),
                     F.round(F.lit(1.0)
@@ -212,8 +210,7 @@ def linear_quality_score_weighted(docs: DataFrame, weights: DataFrame,
                     (F.col("_logit") > 0).alias("keep")))
 
 
-def dedup_paragraphs_global(docs: DataFrame, text_col: str = "text",
-                            id_col: str = "doc_id") -> DataFrame:
+def dedup_paragraphs_global(docs: DataFrame) -> DataFrame:
     """CROSS-document paragraph dedup → (doc_id, n_lines, n_kept,
     clean_text): each distinct non-empty line survives only in its
     FIRST owner — min (doc_id, position) corpus-wide — and is removed
@@ -235,19 +232,19 @@ def dedup_paragraphs_global(docs: DataFrame, text_col: str = "text",
     shuffles are line-keyed and doc-keyed.
     """
     lines = (docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n"))
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), "\n"))
         .alias("_idx", "_line")))
     owners = (lines.where(F.col("_line") != "")
               .groupBy("_line")
-              .agg(F.min(F.struct(F.col(id_col).alias("d"),
+              .agg(F.min(F.struct(F.col("doc_id").alias("d"),
                                   F.col("_idx").alias("i")))
                    .alias("_own")))
     kept = (lines.join(owners, "_line", "left")
             .where((F.col("_line") == "")
-                   | ((F.col("_own.d") == F.col(id_col))
+                   | ((F.col("_own.d") == F.col("doc_id"))
                       & (F.col("_own.i") == F.col("_idx")))))
-    rebuilt = (kept.groupBy(id_col)
+    rebuilt = (kept.groupBy("doc_id")
                .agg(F.count("*").alias("n_kept"),
                     F.array_join(
                         F.transform(
@@ -255,11 +252,11 @@ def dedup_paragraphs_global(docs: DataFrame, text_col: str = "text",
                                 F.struct("_idx", "_line"))),
                             lambda s: s["_line"]), "\n")
                     .alias("clean_text")))
-    base = docs.select(F.col(id_col),
-                       F.size(F.split(F.col(text_col), "\n"))
+    base = docs.select(F.col("doc_id"),
+                       F.size(F.split(F.col("text"), "\n"))
                        .alias("n_lines"))
-    return (base.join(rebuilt, id_col, "left")
-            .select(F.col(id_col),
+    return (base.join(rebuilt, "doc_id", "left")
+            .select(F.col("doc_id"),
                     F.col("n_lines").cast("long").alias("n_lines"),
                     F.coalesce("n_kept", F.lit(0)).cast("long")
                     .alias("n_kept"),
@@ -280,8 +277,7 @@ def normalize_url(col: Column) -> Column:
     return F.regexp_replace(u, r"/+$", "")
 
 
-def url_duplicate_groups(docs: DataFrame, url_col: str = "url",
-                         id_col: str = "doc_id") -> DataFrame:
+def url_duplicate_groups(docs: DataFrame) -> DataFrame:
     """URL-level dedup groups → (norm_url, n_docs, keep_id): group on
     the normalized URL, keep-first (min id) survivor, only groups with
     duplicates returned.
@@ -295,11 +291,11 @@ def url_duplicate_groups(docs: DataFrame, url_col: str = "url",
     and skew (a single hot host is NOT a hot normalized-URL key — the
     path disambiguates) stays bounded.
     """
-    return (docs.select(normalize_url(F.col(url_col)).alias("norm_url"),
-                        F.col(id_col))
+    return (docs.select(normalize_url(F.col("url")).alias("norm_url"),
+                        F.col("doc_id"))
             .groupBy("norm_url")
             .agg(F.count("*").alias("n_docs"),
-                 F.min(id_col).alias("keep_id"))
+                 F.min("doc_id").alias("keep_id"))
             .where(F.col("n_docs") > 1))
 
 
@@ -310,18 +306,9 @@ GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have",
                     "with")
 
 
-def gopher_rules(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id",
-                 min_words: int = 50, max_words: int = 100_000,
-                 min_mean_word_len: float = 3.0,
-                 max_mean_word_len: float = 10.0,
-                 max_symbol_ratio: float = 0.1,
-                 max_bullet_ratio: float = 0.9,
-                 max_ellipsis_ratio: float = 0.3,
-                 min_alpha_ratio: float = 0.8,
-                 min_stop_hits: int = 2,
-                 stopwords: tuple[str, ...] = GOPHER_STOPWORDS,
-                 ) -> DataFrame:
+def gopher_rules(docs: DataFrame, min_words: int = 50,
+                 max_words: int = 100_000,
+                 stopwords: tuple[str, ...] = GOPHER_STOPWORDS) -> DataFrame:
     """Gopher document-quality rules (Rae et al. 2021, "Scaling
     Language Models", Appendix A): the standard repetition-free web
     filter battery, one boolean per rule plus the combined ``keep``.
@@ -345,11 +332,11 @@ def gopher_rules(docs: DataFrame, text_col: str = "text",
     Extends the engine past the reference's projection primitives
     (G016HW1.java:61-70) toward the pretraining-cleanup tier.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     words = F.filter(F.split(text, r"\s+"), lambda w: w != F.lit(""))
     lines = F.split(text, "\n")
     d = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         words.alias("_ws"),
         lines.alias("_ls"),
         F.length(text).alias("_len"),
@@ -372,7 +359,7 @@ def gopher_rules(docs: DataFrame, text_col: str = "text",
         F.transform("_ws", F.lower),
         F.array(*[F.lit(s) for s in stopwords])))
     m = d.select(
-        id_col,
+        "doc_id",
         n_words.cast("long").alias("n_words"),
         F.when(n_words > 0, F.round(sum_len / n_words, 6))
         .alias("mean_word_len"),
@@ -386,19 +373,16 @@ def gopher_rules(docs: DataFrame, text_col: str = "text",
         stop_hits.cast("long").alias("stop_hits"),
     )
     keep = (F.col("n_words").between(min_words, max_words)
-            & F.col("mean_word_len").between(min_mean_word_len,
-                                             max_mean_word_len)
-            & (F.col("symbol_ratio") <= max_symbol_ratio)
-            & (F.col("bullet_line_ratio") <= max_bullet_ratio)
-            & (F.col("ellipsis_line_ratio") <= max_ellipsis_ratio)
-            & (F.col("alpha_word_ratio") >= min_alpha_ratio)
-            & (F.col("stop_hits") >= min_stop_hits))
+            & F.col("mean_word_len").between(3.0, 10.0)
+            & (F.col("symbol_ratio") <= 0.1)
+            & (F.col("bullet_line_ratio") <= 0.9)
+            & (F.col("ellipsis_line_ratio") <= 0.3)
+            & (F.col("alpha_word_ratio") >= 0.8)
+            & (F.col("stop_hits") >= 2))
     return m.withColumn("keep", F.coalesce(keep, F.lit(False)))
 
 
-def normalize_unicode(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id",
-                      form: str = "NFC") -> DataFrame:
+def normalize_unicode(docs: DataFrame) -> DataFrame:
     """Unicode normalization (NFC by default): compose decomposed
     sequences (``e`` + U+0301 → ``é``) so visually-identical strings
     hash identically — a REQUIRED step before any fingerprint/MinHash
@@ -425,13 +409,13 @@ def normalize_unicode(docs: DataFrame, text_col: str = "text",
         import unicodedata
 
         return s.map(lambda x: None if x is None
-                     else unicodedata.normalize(form, x))
+                     else unicodedata.normalize("NFC", x))
 
-    text = F.col(text_col)
-    return (docs.select(F.col(id_col),
+    text = F.col("text")
+    return (docs.select(F.col("doc_id"),
                         text.alias("_orig"),
                         _norm(text).alias("norm_text"))
-            .select(id_col, "norm_text",
+            .select("doc_id", "norm_text",
                     (F.col("norm_text") != F.col("_orig"))
                     .alias("changed"),
                     F.length("_orig").cast("long").alias("len_before"),
@@ -439,8 +423,7 @@ def normalize_unicode(docs: DataFrame, text_col: str = "text",
                     .alias("len_after")))
 
 
-def html_extract(docs: DataFrame, html_col: str = "html",
-                 id_col: str = "doc_id") -> DataFrame:
+def html_extract(docs: DataFrame) -> DataFrame:
     """HTML → training text: strip script/style blocks with their
     contents, count anchors, drop the remaining tags, decode the five
     basic entities, collapse whitespace → ``(doc_id, text, n_links,
@@ -459,7 +442,7 @@ def html_extract(docs: DataFrame, html_col: str = "html",
     dead code is not content) and feeds the C4-style link-density
     gates downstream.
     """
-    h = F.col(html_col)
+    h = F.col("html")
     for blk in ("script", "style"):
         h = F.regexp_replace(h, f"(?is)<{blk}[^>]*>.*?</{blk}>", " ")
     n_links = F.size(F.regexp_extract_all(h, F.lit(r"(?i)<a[\s>]"), 0)) \
@@ -471,7 +454,7 @@ def html_extract(docs: DataFrame, html_col: str = "html",
         dec = F.replace(dec, F.lit(ent), F.lit(ch))
     clean = F.trim(F.regexp_replace(dec, " +", " "))
     return docs.select(
-        F.col(id_col), n_links.alias("n_links"),
+        F.col("doc_id"), n_links.alias("n_links"),
         clean.alias("text"),
         F.length(clean).cast("long").alias("n_chars"))
 
@@ -488,8 +471,7 @@ _CONF_FROM = "".join(CONFUSABLES)
 _CONF_TO = "".join(CONFUSABLES.values())
 
 
-def homoglyph_scan(docs: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def homoglyph_scan(docs: DataFrame) -> DataFrame:
     """Homoglyph (unicode-confusable) evasion scan (E163) →
     ``(doc_id, n_confusables, evasion_flag, skeleton_owner)``.
 
@@ -510,22 +492,21 @@ def homoglyph_scan(docs: DataFrame, text_col: str = "text",
     the full-text translate + md5 ran TWICE (the LSH/simhash
     subtree-reuse lesson; text never rides past this point).
     """
-    skel = F.translate(F.col(text_col), _CONF_FROM, _CONF_TO)
-    n_conf = (F.length(text_col)
-              - F.length(F.translate(F.col(text_col), _CONF_FROM, "")))
+    skel = F.translate(F.col("text"), _CONF_FROM, _CONF_TO)
+    n_conf = (F.length("text")
+              - F.length(F.translate(F.col("text"), _CONF_FROM, "")))
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_conf.cast("int").alias("n_confusables"),
         F.md5(skel).alias("_sk")).localCheckpoint(eager=True)
-    owners = base.groupBy("_sk").agg(F.min(id_col).alias("skeleton_owner"))
+    owners = base.groupBy("_sk").agg(F.min("doc_id").alias("skeleton_owner"))
     return (base.join(owners, "_sk")
-            .select(id_col, "n_confusables",
+            .select("doc_id", "n_confusables",
                     (F.col("n_confusables") > 0).alias("evasion_flag"),
                     "skeleton_owner"))
 
 
-def domain_cap(docs: DataFrame, url_col: str = "url",
-               id_col: str = "doc_id", k: int = 5,
+def domain_cap(docs: DataFrame, k: int = 5,
                order_by: list | None = None) -> DataFrame:
     """Per-domain diversity cap (E175) → the kept rows as
     ``(domain, doc_id, rank)``: at most ``k`` documents per
@@ -542,20 +523,20 @@ def domain_cap(docs: DataFrame, url_col: str = "url",
     heuristic; the real public-suffix list is a broadcast lexicon
     swap, not a plan change. Ranking runs on the two-stage
     grouped top-k (per-partition heaps), so a mega-domain never
-    funnels one reducer; ``order_by`` defaults to ``id_col`` asc —
+    funnels one reducer; ``order_by`` defaults to ``doc_id`` asc —
     callers pass their quality ordering (the face keeps the longest).
     """
     from .grouped import grouped_topk
 
     host = F.lower(F.regexp_extract(
-        F.col(url_col),
+        F.col("url"),
         "^(?:[a-zA-Z][a-zA-Z0-9+.-]*://)?(?:[^/?#@]*@)?([^/?#:]+)", 1))
     dom = F.regexp_extract(host, "([^.]+\\.[^.]+)$", 1)
     base = docs.withColumn(
         "domain", F.when(dom != "", dom).otherwise(host))
     order = list(order_by) if order_by else []
-    top = grouped_topk(base, ["domain"], order + [F.col(id_col)], k)
-    return top.select("domain", F.col(id_col),
+    top = grouped_topk(base, ["domain"], order + [F.col("doc_id")], k)
+    return top.select("domain", F.col("doc_id"),
                       F.col("rank").cast("int").alias("rank"))
 
 
@@ -581,8 +562,7 @@ MOJIBAKE = {
 }
 
 
-def mojibake_scan(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+def mojibake_scan(docs: DataFrame) -> DataFrame:
     """Mojibake (encoding-corruption) scan (E184) → ``(doc_id,
     n_markers, mojibake_flag, n_chars_recovered)``.
 
@@ -606,7 +586,7 @@ def mojibake_scan(docs: DataFrame, text_col: str = "text",
     free rider on any corpus pass at 100 TB; the lexicon is a
     14-entry compile-time constant, not a join.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     n = F.lit(0)
     for m in MOJIBAKE:
         n = n + (F.length(t) - F.length(F.replace(t, F.lit(m)))) / len(m)
@@ -614,7 +594,7 @@ def mojibake_scan(docs: DataFrame, text_col: str = "text",
     for m, orig in MOJIBAKE.items():
         repaired = F.replace(repaired, F.lit(m), F.lit(orig))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.cast("int").alias("n_markers"),
         (n > 0).alias("mojibake_flag"),
         (F.length(t) - F.length(repaired)).cast("int")

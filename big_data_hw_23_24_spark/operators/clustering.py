@@ -41,6 +41,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+ROUND_TO = 6  # decimal places of the Lloyd statistics
+SAMPLE_SIZE = 10_000  # driver sample that seeds the centroids
+
 
 def sequential_fft(points: np.ndarray, k: int) -> np.ndarray:
     """Gonzalez farthest-first traversal over an (n, 2) float64 array.
@@ -130,9 +133,7 @@ def mrfft(points: DataFrame, k: int, num_partitions: int | None = None
     return centers, radius
 
 
-def lloyd_round(vecs: DataFrame, centroids: DataFrame,
-                vec_col: str = "v", id_col: str = "vec_id",
-                round_to: int = 6) -> DataFrame:
+def lloyd_round(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
     """One Lloyd round's sufficient statistics from FIXED centroids →
     (centroid_id, pos, sum_x, sum_sq, cnt): exactly what ``kmeans_fit``
     aggregates each iteration (assign to nearest centroid by squared
@@ -152,30 +153,28 @@ def lloyd_round(vecs: DataFrame, centroids: DataFrame,
     matching the trainer's argmin-of-ordered-scan.
     """
     dist = F.aggregate(
-        F.zip_with(vec_col, "cv", lambda x, y: (x - y) * (x - y)),
+        F.zip_with("v", "cv", lambda x, y: (x - y) * (x - y)),
         F.lit(0.0), lambda acc, x: acc + x)
     assigned = (
-        vecs.where(F.col(vec_col).isNotNull())
+        vecs.where(F.col("v").isNotNull())
         .crossJoin(F.broadcast(centroids))
-        .select(F.col(id_col), F.col(vec_col).alias("v"),
+        .select(F.col("vec_id"), F.col("v"),
                 F.struct(dist.alias("d"),
                          F.col("centroid_id").alias("cid")).alias("s"))
-        .groupBy(id_col)
+        .groupBy("vec_id")
         .agg(F.min("s").alias("b"), F.first("v").alias("v")))
     return (assigned
             .select(F.col("b.cid").alias("centroid_id"),
                     F.posexplode("v").alias("pos", "x"))
             .groupBy("centroid_id", "pos")
-            .agg(F.round(F.sum("x"), round_to).alias("sum_x"),
+            .agg(F.round(F.sum("x"), ROUND_TO).alias("sum_x"),
                  F.round(F.sum(F.col("x") * F.col("x")),
-                         round_to).alias("sum_sq"),
+                         ROUND_TO).alias("sum_sq"),
                  F.count("*").alias("cnt")))
 
 
-def kmeans_fit(df: DataFrame, k: int, vec_col: str = "embedding",
-               iters: int = 10, tol: float = 1e-6,
-               sample_size: int = 10_000, seed: int = 42
-               ) -> tuple[np.ndarray, list[float]]:
+def kmeans_fit(df: DataFrame, k: int, iters: int = 10,
+               seed: int = 42) -> tuple[np.ndarray, list[float]]:
     """Distributed Lloyd's k-means over a vector column → (centroids
     (k, dim), per-iteration mean cost). The trainer for IVF centroids
     when a sample isn't representative enough (``ivf_topk(...,
@@ -196,18 +195,19 @@ def kmeans_fit(df: DataFrame, k: int, vec_col: str = "embedding",
     no extra pass. Init is k-means on a bounded seeded driver sample
     (what FAISS does for IVF training); empty clusters keep their
     previous centroid. Stops early when no centroid moves more than
-    ``tol`` (L∞ on the shift).
+    1e-6 (L∞ on the shift).
     """
     from .similarity import _kmeans_lite, _nearest_lists_udf
 
-    vecs = df.select(F.col(vec_col).alias("v")).where(F.col("v").isNotNull())
+    vecs = (df.select(F.col("embedding").alias("v"))
+            .where(F.col("v").isNotNull()))
     n = vecs.count()
     if n == 0:
         raise ValueError("kmeans_fit: no non-null vectors")
-    frac = min(1.0, (sample_size * 1.25) / n)
+    frac = min(1.0, (SAMPLE_SIZE * 1.25) / n)
     sample = np.array(
         [r[0] for r in vecs.sample(fraction=frac, seed=seed)
-         .limit(sample_size).collect()], dtype=np.float64)
+         .limit(SAMPLE_SIZE).collect()], dtype=np.float64)
     centroids = _kmeans_lite(sample, k, seed=seed)
     k, dim = centroids.shape
 
@@ -240,6 +240,6 @@ def kmeans_fit(df: DataFrame, k: int, vec_col: str = "embedding",
         new_c[nonempty] = sums[nonempty] / counts[nonempty, None]
         shift = float(np.abs(new_c - centroids).max())
         centroids = new_c
-        if shift < tol:
+        if shift < 1e-6:
             break
     return centroids, costs

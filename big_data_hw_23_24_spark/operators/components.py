@@ -35,9 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def connected_components(edges: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b",
-                         max_iter: int = 25) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """(id_a, id_b) undirected pairs → (doc_id, component).
 
     ``component`` is the min vertex id of the component. Only vertices
@@ -46,10 +44,11 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
     by then the graph has diameter > max_iter and needs the
     star-contraction variant, not silence.
     """
-    sym = (edges.select(F.col(id_a).alias("node"), F.col(id_b).alias("nbr"))
+    sym = (edges.select(F.col("id_a").alias("node"),
+                        F.col("id_b").alias("nbr"))
            .unionByName(
-               edges.select(F.col(id_b).alias("node"),
-                            F.col(id_a).alias("nbr")))
+               edges.select(F.col("id_b").alias("node"),
+                            F.col("id_a").alias("nbr")))
            .distinct()
            .localCheckpoint(eager=True))
     labels = (sym.select("node").distinct()
@@ -99,12 +98,10 @@ def dedup_survivors(components: DataFrame) -> DataFrame:
                     (F.col("n_docs") - 1).alias("n_dropped")))
 
 
-def best_survivors(components: DataFrame, scores: DataFrame,
-                   score_col: str = "quality_score",
-                   id_col: str = "doc_id") -> DataFrame:
+def best_survivors(components: DataFrame, scores: DataFrame) -> DataFrame:
     """Quality-aware survivor selection → (component, keep_id,
     keep_score, n_docs, n_dropped): per near-dup component, keep the
-    member with the HIGHEST ``score_col`` (ties → smallest id) instead
+    member with the HIGHEST ``quality_score`` (ties → smallest id) instead
     of the canonical min-id.
 
     The RefinedWeb/FineWeb convention: when a cluster holds a clean
@@ -133,17 +130,18 @@ def best_survivors(components: DataFrame, scores: DataFrame,
     from pyspark.sql import Window
 
     w = Window.partitionBy("component").orderBy(
-        F.coalesce(F.round(F.col(score_col), 6),
+        F.coalesce(F.round(F.col("quality_score"), 6),
                    F.lit(float("-inf"))).desc(),
-        F.col(id_col))
+        F.col("doc_id"))
     ranked = (components
-              .join(scores.select(id_col, score_col), id_col, "left")
+              .join(scores.select("doc_id", "quality_score"), "doc_id",
+                    "left")
               .withColumn("_r", F.row_number().over(w))
               .withColumn("_n", F.count("*").over(
                   Window.partitionBy("component"))))
     return (ranked.where(F.col("_r") == 1)
             .select("component",
-                    F.col(id_col).alias("keep_id"),
-                    F.col(score_col).alias("keep_score"),
+                    F.col("doc_id").alias("keep_id"),
+                    F.col("quality_score").alias("keep_score"),
                     F.col("_n").cast("long").alias("n_docs"),
                     (F.col("_n") - 1).cast("long").alias("n_dropped")))

@@ -22,24 +22,28 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+NUM_HASHES = 32  # MinHash signature length
+BANDS = 8  # LSH bands over the signature
+SHINGLE_N = 3  # words per shingle
+BLOOM_M_BITS = 1 << 17  # bloom filter of the incremental dedup
+
 
 def normalized_text(col: Column) -> Column:
     """Canonical form for exact dedup: lowercase, collapsed whitespace."""
     return F.regexp_replace(F.lower(F.trim(col)), " +", " ")
 
 
-def exact_duplicate_groups(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id") -> DataFrame:
+def exact_duplicate_groups(docs: DataFrame) -> DataFrame:
     """Exact dedup via hash-groupBy → (fingerprint, n_docs, keep_id).
 
     One shuffle on md5(normalized text); ``keep_id`` = min id is the
     canonical survivor. Only groups with duplicates are returned.
     """
     return (
-        docs.select(F.md5(normalized_text(F.col(text_col))).alias("fingerprint"),
-                    F.col(id_col))
+        docs.select(F.md5(normalized_text(F.col("text")))
+                    .alias("fingerprint"), F.col("doc_id"))
         .groupBy("fingerprint")
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keep_id"))
+        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keep_id"))
         .where(F.col("n_docs") > 1)
     )
 
@@ -65,8 +69,8 @@ def _shifted_gram_zip(words: Column, n: int) -> Column:
     return F.slice(z, 1, m - n + 1)
 
 
-def word_shingles(docs: DataFrame, text_col: str = "text", n: int = 3,
-                  out_col: str = "shingles") -> DataFrame:
+def word_shingles(docs: DataFrame, text_col: str = "text",
+                  n: int = SHINGLE_N) -> DataFrame:
     """Distinct word n-gram shingles as an array column (JVM-side).
 
     Shingles come from ``arrays_zip`` of shifted slices (see
@@ -83,10 +87,11 @@ def word_shingles(docs: DataFrame, text_col: str = "text", n: int = 3,
         F.transform(z, lambda x: F.concat_ws(
             " ", *[x[str(j)] for j in range(n)])),
     ).otherwise(F.array().cast("array<string>"))
-    return docs.withColumn(out_col, F.array_distinct(grams))
+    return docs.withColumn("shingles", F.array_distinct(grams))
 
 
-def md5_minhash_constants(num_hashes: int = 32) -> list[tuple[int, int]]:
+def md5_minhash_constants(num_hashes: int = NUM_HASHES
+                          ) -> list[tuple[int, int]]:
     """Pinned (a_i, c_i) pairs for the engine-portable md5 MinHash
     family: h_i(s) = (a_i·b + c_i) mod (2³¹−1) where b is the 28-bit
     md5 prefix of the shingle. The formula below is the spec — the
@@ -99,9 +104,7 @@ def md5_minhash_constants(num_hashes: int = 32) -> list[tuple[int, int]]:
             for i in range(num_hashes)]
 
 
-def minhash_signature(shingled: DataFrame, num_hashes: int = 32,
-                      shingle_col: str = "shingles",
-                      out_col: str = "signature",
+def minhash_signature(shingled: DataFrame, num_hashes: int = NUM_HASHES,
                       hash_family: str = "xxhash64") -> DataFrame:
     """MinHash signature: sig[i] = min over shingles of h_i(s).
 
@@ -141,10 +144,10 @@ def minhash_signature(shingled: DataFrame, num_hashes: int = 32,
         return (
             shingled
             .withColumn("_sg_b",
-                        F.expr(f"transform({shingle_col}, s -> "
+                        F.expr("transform(shingles, s -> "
                                f"cast(conv(substr(md5(s), 1, 7), 16, 10)"
                                f" as bigint))"))
-            .withColumn(out_col, F.expr(f"array({terms})"))
+            .withColumn("signature", F.expr(f"array({terms})"))
             .drop("_sg_b")
         )
     if hash_family != "xxhash64":
@@ -158,15 +161,13 @@ def minhash_signature(shingled: DataFrame, num_hashes: int = 32,
     return (
         shingled
         .withColumn("_sg_h64",
-                    F.expr(f"transform({shingle_col}, s -> xxhash64(s))"))
-        .withColumn(out_col, F.expr(f"array({terms})"))
+                    F.expr("transform(shingles, s -> xxhash64(s))"))
+        .withColumn("signature", F.expr(f"array({terms})"))
         .drop("_sg_h64")
     )
 
 
-def lsh_candidate_pairs(signed: DataFrame, bands: int = 8,
-                        id_col: str = "doc_id",
-                        sig_col: str = "signature") -> DataFrame:
+def lsh_candidate_pairs(signed: DataFrame, bands: int = BANDS) -> DataFrame:
     """Banded LSH: docs agreeing on all rows of ≥1 band → (id_a, id_b).
 
     Explode to one row per band, hash the band slice, self-join on
@@ -174,36 +175,35 @@ def lsh_candidate_pairs(signed: DataFrame, bands: int = 8,
     proportional to bucket sizes, never to n². Pairs are deduped
     (a < b) across bands.
     """
-    banded = _banded(signed, bands, id_col, sig_col)
+    banded = _banded(signed, bands, "doc_id")
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(b, (F.col("a.band") == F.col("b.band"))
                & (F.col("a.band_hash") == F.col("b.band_hash"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"))
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("id_a"),
+                F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
 
 
-def _banded(signed: DataFrame, bands: int, id_col: str,
-            sig_col: str = "signature") -> DataFrame:
+def _banded(signed: DataFrame, bands: int, id_col: str) -> DataFrame:
     """(id, band, band_hash): one row per band of each signature —
     the LSH bucketing projection shared by the self-join
     (``lsh_candidate_pairs``) and the cross-frame incremental match.
     The signature is carried THROUGH the explode (projecting it away
     and joining it back would cost a full extra shuffle of
     (docs × bands) rows)."""
-    n_hashes_col = F.size(F.col(sig_col))
+    n_hashes_col = F.size(F.col("signature"))
     rows_per_band = (n_hashes_col / bands).cast("int")
     return signed.select(
-        F.col(id_col), F.col(sig_col),
+        F.col(id_col), F.col("signature"),
         F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
     ).select(
         id_col, "band",
         F.xxhash64(F.col("band"),
                    F.concat_ws(",", F.slice(
-                       F.col(sig_col),
+                       F.col("signature"),
                        F.col("band") * rows_per_band + 1,
                        rows_per_band).cast("array<string>")))
         .alias("band_hash"),
@@ -211,9 +211,7 @@ def _banded(signed: DataFrame, bands: int, id_col: str,
 
 
 def minhash_match_against(batch: DataFrame, corpus_signed: DataFrame,
-                          threshold: float = 0.7, num_hashes: int = 32,
-                          bands: int = 8, text_col: str = "text",
-                          id_col: str = "doc_id",
+                          threshold: float = 0.7,
                           hash_family: str = "xxhash64") -> DataFrame:
     """Incremental NEAR-dup matching: new batch vs a stored signature
     corpus → (batch_id, corpus_id, est_jaccard ≥ threshold).
@@ -228,41 +226,39 @@ def minhash_match_against(batch: DataFrame, corpus_signed: DataFrame,
 
     Jaccard here is the standard MinHash ESTIMATE — the fraction of
     agreeing signature components, unbiased with sd ≈
-    √(j(1−j)/num_hashes) (≈ 0.08 at j = 0.7, H = 32) — because
+    √(j(1−j)/NUM_HASHES) (≈ 0.08 at j = 0.7, H = 32) — because
     estimating from the store is the point: exact verification would
-    require retaining corpus text. Raise ``num_hashes`` to tighten the
+    require retaining corpus text. Raise ``NUM_HASHES`` to tighten the
     threshold boundary; pairs the LSH bands never collide are missed
     with the usual 1−(1−j^r)^b probability. Batch-internal duplicates
     are NOT reported (pair the batch with itself via
     ``minhash_near_duplicates`` for that).
 
     ``corpus_signed`` must carry signatures produced with the SAME
-    ``num_hashes``, ``hash_family`` (and shingling) — the store format
+    ``NUM_HASHES``, ``hash_family`` (and shingling) — the store format
     is exactly ``minhash_signature(word_shingles(docs))'s``
     (id, signature) projection.
     """
     from .util import ensure_fanout
 
-    # the num_hashes-way signature map is the heavy stage: fan a
+    # the NUM_HASHES-way signature map is the heavy stage: fan a
     # sub-row-group batch out first (no-op when the scan has splits).
     # The empty-shingle filter runs AFTER the checkpoint: filtering on
     # the _nsh alias before it lets Catalyst inline the whole shingle
     # HOF expression below the fanout exchange (scan DataFilter +
     # Filter re-evaluation, in the scan's few input splits)
-    batch_signed = (minhash_signature(word_shingles(
-                        ensure_fanout(batch), text_col), num_hashes,
-                        hash_family=hash_family)
-                    .select(F.col(id_col), F.size("shingles").alias("_nsh"),
+    batch_signed = (minhash_signature(word_shingles(ensure_fanout(batch)),
+                                      hash_family=hash_family)
+                    .select(F.col("doc_id"), F.size("shingles").alias("_nsh"),
                             "signature")
                     .localCheckpoint(eager=True)
                     .where(F.col("_nsh") > 0))
     return minhash_match_signed(batch_signed, corpus_signed,
-                                threshold=threshold, bands=bands,
-                                id_col=id_col)
+                                threshold=threshold)
 
 
 def minhash_match_signed(batch_signed: DataFrame, corpus_signed: DataFrame,
-                         threshold: float = 0.7, bands: int = 8,
+                         threshold: float = 0.7, bands: int = BANDS,
                          id_col: str = "doc_id") -> DataFrame:
     """The signed-input core of :func:`minhash_match_against`: both
     sides already carry ``(id, signature)`` (empty-shingle rows
@@ -290,18 +286,17 @@ def minhash_match_signed(batch_signed: DataFrame, corpus_signed: DataFrame,
 
 
 def jaccard_verify(pairs: DataFrame, shingled: DataFrame,
-                   threshold: float, id_col: str = "doc_id",
-                   shingle_col: str = "shingles") -> DataFrame:
+                   threshold: float) -> DataFrame:
     """Exact Jaccard on candidate pairs → (id_a, id_b, jaccard ≥ t).
 
     Joins the shingle arrays back and computes
     |A∩B| / |A∪B| with array intrinsics — candidates only, so the
     expensive comparison runs on the LSH-pruned set.
     """
-    sa = shingled.select(F.col(id_col).alias("id_a"),
-                         F.col(shingle_col).alias("sh_a"))
-    sb = shingled.select(F.col(id_col).alias("id_b"),
-                         F.col(shingle_col).alias("sh_b"))
+    sa = shingled.select(F.col("doc_id").alias("id_a"),
+                         F.col("shingles").alias("sh_a"))
+    sb = shingled.select(F.col("doc_id").alias("id_b"),
+                         F.col("shingles").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     return (
@@ -313,9 +308,7 @@ def jaccard_verify(pairs: DataFrame, shingled: DataFrame,
 
 
 def shingle_containment_pairs(docs: DataFrame, threshold: float = 0.8,
-                              n: int = 3, max_df: int | None = None,
-                              text_col: str = "text",
-                              id_col: str = "doc_id") -> DataFrame:
+                              max_df: int | None = None) -> DataFrame:
     """ASYMMETRIC near-dup detection → (id_a, id_b, n_common,
     containment_a, containment_b): pairs where either directed
     containment |A∩B|/|A| (resp. /|B|) reaches ``threshold``.
@@ -364,21 +357,21 @@ def shingle_containment_pairs(docs: DataFrame, threshold: float = 0.8,
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     from .util import ensure_fanout
 
-    words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
+    words = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
     hashes = F.array_distinct(F.transform(
-        _shifted_gram_zip(words, n),
-        lambda x: F.xxhash64(*[x[str(j)] for j in range(n)])))
-    arr = F.when(F.size(words) >= n, hashes) \
+        _shifted_gram_zip(words, SHINGLE_N),
+        lambda x: F.xxhash64(*[x[str(j)] for j in range(SHINGLE_N)])))
+    arr = F.when(F.size(words) >= SHINGLE_N, hashes) \
         .otherwise(F.array().cast("array<bigint>"))
     sh_docs = (ensure_fanout(docs)
-               .select(F.col(id_col), arr.alias("_arr"))
+               .select(F.col("doc_id"), arr.alias("_arr"))
                .localCheckpoint(eager=True))
     # denominators from the UNFILTERED shingle sets (the arrays are
     # distinct by construction, so size(arr) IS the set size; docs
     # with an empty set get a 0 row that no pair can ever join)
-    sizes = sh_docs.select(F.col(id_col),
+    sizes = sh_docs.select(F.col("doc_id"),
                            F.size("_arr").cast("long").alias("_sz"))
-    sh = sh_docs.select(F.col(id_col), F.explode("_arr").alias("_s"))
+    sh = sh_docs.select(F.col("doc_id"), F.explode("_arr").alias("_s"))
     if max_df is not None:
         # anti-join against the STOP set, not semi against the keep
         # set: survivors are ~every distinct shingle (corpus-scale
@@ -388,8 +381,8 @@ def shingle_containment_pairs(docs: DataFrame, threshold: float = 0.8,
         stop = (sh.groupBy("_s").agg(F.count("*").alias("_df"))
                 .where(F.col("_df") > max_df).select("_s"))
         sh = sh.join(stop, "_s", "left_anti")
-    a = sh.select(F.col(id_col).alias("id_a"), "_s")
-    b = sh.select(F.col(id_col).alias("id_b"), "_s")
+    a = sh.select(F.col("doc_id").alias("id_a"), "_s")
+    b = sh.select(F.col("doc_id").alias("id_b"), "_s")
     pairs = (a.join(b, "_s")
              .where(F.col("id_a") < F.col("id_b"))
              .groupBy("id_a", "id_b")
@@ -397,9 +390,9 @@ def shingle_containment_pairs(docs: DataFrame, threshold: float = 0.8,
     ca = F.round(F.col("n_common") / F.col("_na"), 6)
     cb = F.round(F.col("n_common") / F.col("_nb"), 6)
     return (pairs
-            .join(sizes.select(F.col(id_col).alias("id_a"),
+            .join(sizes.select(F.col("doc_id").alias("id_a"),
                                F.col("_sz").alias("_na")), "id_a")
-            .join(sizes.select(F.col(id_col).alias("id_b"),
+            .join(sizes.select(F.col("doc_id").alias("id_b"),
                                F.col("_sz").alias("_nb")), "id_b")
             .select("id_a", "id_b",
                     F.col("n_common").cast("long").alias("n_common"),
@@ -408,10 +401,8 @@ def shingle_containment_pairs(docs: DataFrame, threshold: float = 0.8,
                    | (F.col("containment_b") >= threshold)))
 
 
-def minhash_near_duplicates(docs: DataFrame, threshold: float = 0.7,
-                            num_hashes: int = 32, bands: int = 8,
-                            text_col: str = "text",
-                            id_col: str = "doc_id") -> DataFrame:
+def minhash_near_duplicates(docs: DataFrame,
+                            threshold: float = 0.7) -> DataFrame:
     """MinHash-LSH near-dup pipeline: shingle → sign → band → verify.
 
     Approximate in candidate *generation* (recall < 1 for pairs near
@@ -428,7 +419,7 @@ def minhash_near_duplicates(docs: DataFrame, threshold: float = 0.7,
 
     The signed intermediate is persisted for the duration of the
     computation — the banded self-join scans it twice, so without the
-    cache the ``num_hashes``-way signature expression is evaluated on
+    cache the ``NUM_HASHES``-way signature expression is evaluated on
     both branches. Two measured choices shape what is cached (together
     3.2 s → 2.1 s at sf0.1):
 
@@ -449,9 +440,9 @@ def minhash_near_duplicates(docs: DataFrame, threshold: float = 0.7,
     """
     from .util import ensure_fanout
 
-    docs = ensure_fanout(docs.select(id_col, text_col))
-    signed = minhash_signature(word_shingles(docs, text_col), num_hashes) \
-        .select(id_col, F.size("shingles").alias("n_sh"), "signature") \
+    docs = ensure_fanout(docs.select("doc_id", "text"))
+    signed = minhash_signature(word_shingles(docs)) \
+        .select("doc_id", F.size("shingles").alias("n_sh"), "signature") \
         .persist()
     pairs = None
     try:
@@ -467,19 +458,19 @@ def minhash_near_duplicates(docs: DataFrame, threshold: float = 0.7,
         # materialization the broadcast thread would re-execute the
         # entire banded self-join as a private subplan
         pairs = lsh_candidate_pairs(
-            signed.where(F.col("n_sh") > 0), bands, id_col).persist()
+            signed.where(F.col("n_sh") > 0)).persist()
         pairs.count()
         cand_ids = pairs.select(
-            F.explode(F.array("id_a", "id_b")).alias(id_col)).distinct()
+            F.explode(F.array("id_a", "id_b")).alias("doc_id")).distinct()
         cand_shingled = word_shingles(
-            docs.join(F.broadcast(cand_ids), id_col, "semi"), text_col)
+            docs.join(F.broadcast(cand_ids), "doc_id", "semi"))
         # materialize the SMALL verified-pair result and release every
         # intermediate deterministically in the finally below. (A prior
         # revision localCheckpointed the candidate pairs and returned
         # lazily; each call then left checkpoint blocks in executor
         # storage until Python GC reached the DataFrame — repeated runs
         # measured 2.3 s to 22 s at sf0.1 as storage pressure built.)
-        return jaccard_verify(pairs, cand_shingled, threshold, id_col) \
+        return jaccard_verify(pairs, cand_shingled, threshold) \
             .localCheckpoint(eager=True)
     finally:
         signed.unpersist()
@@ -487,9 +478,7 @@ def minhash_near_duplicates(docs: DataFrame, threshold: float = 0.7,
             pairs.unpersist()
 
 
-def exact_jaccard_pairs(docs: DataFrame, threshold: float = 0.7,
-                        text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def exact_jaccard_pairs(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
     """Exact all-pairs n-gram Jaccard ≥ t via inverted shingle index.
 
     Explode distinct shingles → self-equi-join on shingle → count
@@ -501,24 +490,24 @@ def exact_jaccard_pairs(docs: DataFrame, threshold: float = 0.7,
     # the shingle expression feeds four branches (a/b explode + two
     # size joins): persist it for the duration, checkpoint the small
     # pair result, release — same pattern as minhash_near_duplicates
-    shingled = word_shingles(docs.select(id_col, text_col), text_col) \
-        .select(id_col, "shingles").persist()
+    shingled = word_shingles(docs.select("doc_id", "text")) \
+        .select("doc_id", "shingles").persist()
     try:
-        ex = shingled.select(id_col, F.explode("shingles").alias("shingle"))
-        sizes = shingled.select(id_col, F.size("shingles").alias("sz"))
+        ex = shingled.select("doc_id", F.explode("shingles").alias("shingle"))
+        sizes = shingled.select("doc_id", F.size("shingles").alias("sz"))
         a, b = ex.alias("a"), ex.alias("b")
         inter = (
             a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .groupBy(F.col(f"a.{id_col}").alias("id_a"),
-                     F.col(f"b.{id_col}").alias("id_b"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .groupBy(F.col("a.doc_id").alias("id_a"),
+                     F.col("b.doc_id").alias("id_b"))
             .agg(F.count("*").alias("ix"))
         )
         return (
             inter
-            .join(sizes.select(F.col(id_col).alias("id_a"),
+            .join(sizes.select(F.col("doc_id").alias("id_a"),
                                F.col("sz").alias("sz_a")), "id_a")
-            .join(sizes.select(F.col(id_col).alias("id_b"),
+            .join(sizes.select(F.col("doc_id").alias("id_b"),
                                F.col("sz").alias("sz_b")), "id_b")
             .select("id_a", "id_b",
                     F.round(F.col("ix") / (F.col("sz_a") + F.col("sz_b")
@@ -534,8 +523,7 @@ def exact_jaccard_pairs(docs: DataFrame, threshold: float = 0.7,
 SIMHASH_FAMILY_BITS = {"xxhash64": 64, "md5": 60}
 
 
-def simhash_fingerprints(docs: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id",
+def simhash_fingerprints(docs: DataFrame,
                          hash_family: str = "xxhash64") -> DataFrame:
     """SimHash per document → (id, simhash).
 
@@ -581,12 +569,12 @@ def simhash_fingerprints(docs: DataFrame, text_col: str = "text",
     lane = 20
     per = 64 // lane                      # counters per packed long
     n_longs = (bits + per - 1) // per
-    words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
+    words = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
     if hash_family == "md5":
         h = F.conv(F.substring(F.md5("word"), 1, 15), 16, 10).cast("long")
     else:
         h = F.xxhash64("word")
-    tok = docs.select(F.col(id_col),
+    tok = docs.select(F.col("doc_id"),
                       F.explode(words).alias("word")) \
         .withColumn("h", h)
     packs = []
@@ -599,12 +587,12 @@ def simhash_fingerprints(docs: DataFrame, text_col: str = "text",
             e = F.shiftleft(F.shiftright("h", b).bitwiseAND(1), ln * lane)
             expr = e if expr is None else expr + e
         packs.append(F.sum(expr).alias(f"p{g}"))
-    voted = tok.groupBy(id_col).agg(F.count("*").alias("_n"), *packs)
+    voted = tok.groupBy("doc_id").agg(F.count("*").alias("_n"), *packs)
     too_long = F.when(
         F.col("_n") >= (1 << lane),
         F.raise_error(F.concat(
             F.lit("simhash_fingerprints: document "),
-            F.col(id_col).cast("string"),
+            F.col("doc_id").cast("string"),
             F.lit(f" has >= 2^{lane} tokens — past the packed-counter "
                   f"range; split it upstream"))).cast("long"))
     terms = [too_long]
@@ -623,12 +611,10 @@ def simhash_fingerprints(docs: DataFrame, text_col: str = "text",
     while len(terms) > 1:
         terms = [a + b for a, b in zip(terms[::2], terms[1::2])] + \
                 ([terms[-1]] if len(terms) % 2 else [])
-    return voted.select(F.col(id_col), terms[0].alias("simhash"))
+    return voted.select(F.col("doc_id"), terms[0].alias("simhash"))
 
 
 def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 3,
-                            text_col: str = "text",
-                            id_col: str = "doc_id",
                             hash_family: str = "xxhash64") -> DataFrame:
     """SimHash near-dup pairs with Hamming distance ≤ max_hamming.
 
@@ -654,24 +640,24 @@ def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 3,
         raise ValueError(f"{bits}-bit fingerprint not divisible into "
                          f"{chunks} chunks")
     width = bits // chunks
-    fps = simhash_fingerprints(docs, text_col, id_col, hash_family) \
+    fps = simhash_fingerprints(docs, hash_family=hash_family) \
         .localCheckpoint(eager=True)
     banded = fps.select(
-        id_col, "simhash",
+        "doc_id", "simhash",
         F.explode(F.array(*[
             F.struct(F.lit(c).alias("chunk"),
                      F.shiftright(F.col("simhash"), c * width)
                      .bitwiseAND((1 << width) - 1).alias("val"))
             for c in range(chunks)
         ])).alias("band"),
-    ).select(id_col, "simhash", "band.chunk", "band.val")
+    ).select("doc_id", "simhash", "band.chunk", "band.val")
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(b, (F.col("a.chunk") == F.col("b.chunk"))
                & (F.col("a.val") == F.col("b.val"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("id_a"),
+                F.col("b.doc_id").alias("id_b"),
                 F.bit_count(F.col("a.simhash").bitwiseXOR(
                     F.col("b.simhash"))).alias("hamming"))
         .distinct()
@@ -679,9 +665,7 @@ def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 3,
     )
 
 
-def incremental_dedup(new_docs: DataFrame, corpus: DataFrame,
-                      text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+def incremental_dedup(new_docs: DataFrame, corpus: DataFrame) -> DataFrame:
     """Dedup an ingestion batch against an existing corpus →
     (doc_id, fingerprint, status) for every NEW document, with status
 
@@ -701,17 +685,13 @@ def incremental_dedup(new_docs: DataFrame, corpus: DataFrame,
     broadcasts the batch when it is small. Corpus-dup wins over
     batch-dup when both hold, so statuses are join-order independent.
     """
-    fp = F.md5(normalized_text(F.col(text_col)))
+    fp = F.md5(normalized_text(F.col("text")))
     seen = corpus.select(fp.alias("fingerprint")).distinct()
-    return incremental_dedup_against_fingerprints(
-        new_docs, seen, text_col=text_col, id_col=id_col)
+    return incremental_dedup_against_fingerprints(new_docs, seen)
 
 
-def incremental_dedup_bloom(new_docs: DataFrame, corpus: DataFrame,
-                            text_col: str = "text",
-                            id_col: str = "doc_id",
-                            m_bits: int = 1 << 17,
-                            k: int = 5) -> DataFrame:
+def incremental_dedup_bloom(new_docs: DataFrame,
+                            corpus: DataFrame) -> DataFrame:
     """Bloom-prefiltered :func:`incremental_dedup` — IDENTICAL results
     (same statuses, same oracle), different 100 TB cost profile.
 
@@ -728,7 +708,7 @@ def incremental_dedup_bloom(new_docs: DataFrame, corpus: DataFrame,
     verification join, so the shuffle is proportional to the duplicate
     fraction, not the batch. Verification keeps precision exact.
 
-    Size ``m_bits`` to the false-positive budget, not bigger: every
+    ``BLOOM_M_BITS`` is sized to the false-positive budget, not bigger: every
     probe test deserializes the broadcast word array per call (k
     tests × 2 accesses per row), so an oversized bitmap taxes each
     batch row — measured 15.5 s at m=2²⁰ vs 0.8 s at m=2¹⁷ for a
@@ -739,24 +719,24 @@ def incremental_dedup_bloom(new_docs: DataFrame, corpus: DataFrame,
 
     from .bloom import bloom_build, bloom_flag
 
-    fp = F.md5(normalized_text(F.col(text_col)))
+    fp = F.md5(normalized_text(F.col("text")))
     rn = F.row_number().over(
-        Window.partitionBy("fingerprint").orderBy(id_col))
-    batch = (new_docs.select(F.col(id_col), fp.alias("fingerprint"))
+        Window.partitionBy("fingerprint").orderBy("doc_id"))
+    batch = (new_docs.select(F.col("doc_id"), fp.alias("fingerprint"))
              .withColumn("rn", rn))
     seen = corpus.select(fp.alias("fingerprint")).distinct()
-    bf = bloom_build(seen, "fingerprint", m_bits, k)
-    flagged = bloom_flag(batch, bf, "fingerprint", "maybe", m_bits, k)
+    bf = bloom_build(seen, "fingerprint", BLOOM_M_BITS)
+    flagged = bloom_flag(batch, bf, "fingerprint", m_bits=BLOOM_M_BITS)
     batch_status = (F.when(F.col("rn") > 1, "dup_in_batch")
                     .otherwise("novel"))
     rejected = (flagged.where(~F.col("maybe"))
-                .select(id_col, "fingerprint",
+                .select("doc_id", "fingerprint",
                         batch_status.alias("status")))
     accepted = (
         flagged.where(F.col("maybe"))
         .join(seen.withColumn("in_corpus", F.lit(True)),
               "fingerprint", "left")
-        .select(id_col, "fingerprint",
+        .select("doc_id", "fingerprint",
                 F.when(F.col("in_corpus"), "dup_of_corpus")
                 .otherwise(batch_status).alias("status")))
     return accepted.unionByName(rejected)
@@ -786,8 +766,7 @@ def incremental_dedup_against_fingerprints(
                     .otherwise("novel").alias("status")))
 
 
-def dedup_impact_report(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def dedup_impact_report(docs: DataFrame) -> DataFrame:
     """What would exact dedup do to this corpus → one row per
     duplicate-cluster size: ``(cluster_size, n_clusters, n_docs,
     n_tokens, tokens_lost)``.
@@ -807,15 +786,15 @@ def dedup_impact_report(docs: DataFrame, text_col: str = "text",
     no join back; output is bounded by the number of DISTINCT cluster
     sizes (≤ tens).
     """
-    fp = F.md5(normalized_text(F.col(text_col)))
-    words = F.filter(F.split(F.col(text_col), " "),
+    fp = F.md5(normalized_text(F.col("text")))
+    words = F.filter(F.split(F.col("text"), " "),
                      lambda w: w != F.lit(""))
-    t = docs.select(fp.alias("fingerprint"), F.col(id_col),
+    t = docs.select(fp.alias("fingerprint"), F.col("doc_id"),
                     F.size(words).cast("long").alias("n_tokens"))
     per = (t.groupBy("fingerprint")
            .agg(F.count("*").cast("long").alias("cluster_size"),
                 F.sum("n_tokens").alias("n_tokens"),
-                F.min(F.struct(id_col, "n_tokens")).alias("_keep")))
+                F.min(F.struct("doc_id", "n_tokens")).alias("_keep")))
     return (per.groupBy("cluster_size")
             .agg(F.count("*").cast("long").alias("n_clusters"),
                  F.sum("cluster_size").cast("long").alias("n_docs"),
@@ -825,9 +804,7 @@ def dedup_impact_report(docs: DataFrame, text_col: str = "text",
             .orderBy("cluster_size"))
 
 
-def dup_rate_by_window(docs: DataFrame, day_col: str = "day",
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def dup_rate_by_window(docs: DataFrame) -> DataFrame:
     """Duplicate-rate trend over ingest windows → ``(day, n_docs,
     n_dups, dup_rate)``: per window, the fraction of documents whose
     content fingerprint already occurred in an EARLIER (window, id)
@@ -844,10 +821,10 @@ def dup_rate_by_window(docs: DataFrame, day_col: str = "day",
     encoding which mis-elects once ids reach C), then one window-keyed
     aggregate. ~48-byte rows end to end; text never shuffles.
     """
-    fp = F.md5(normalized_text(F.col(text_col)))
+    fp = F.md5(normalized_text(F.col("text")))
     t = docs.select(fp.alias("fingerprint"),
-                    F.col(day_col).cast("long").alias("day"),
-                    F.col(id_col).cast("long").alias("_id"))
+                    F.col("day").cast("long").alias("day"),
+                    F.col("doc_id").cast("long").alias("_id"))
     firsts = (t.groupBy("fingerprint")
               .agg(F.min(F.struct("day", "_id")).alias("_first")))
     dup = ((F.col("day") != F.col("_first.day"))
@@ -860,9 +837,7 @@ def dup_rate_by_window(docs: DataFrame, day_col: str = "day",
             .orderBy("day"))
 
 
-def bcubed_report(assignments: DataFrame, id_col: str = "doc_id",
-                  pred_col: str = "pred", truth_col: str = "truth"
-                  ) -> DataFrame:
+def bcubed_report(assignments: DataFrame) -> DataFrame:
     """B-cubed extrinsic clustering evaluation (E162) → ONE row
     ``(n_docs, b3_precision, b3_recall, b3_f1)`` scoring a predicted
     clustering against ground-truth clusters (Bagga & Baldwin 1998 —
@@ -879,9 +854,9 @@ def bcubed_report(assignments: DataFrame, id_col: str = "doc_id",
     aggregates at any corpus size (the naive pairwise definition is
     quadratic in the largest cluster).
     """
-    a = assignments.select(F.col(id_col).alias("_id"),
-                           F.col(pred_col).alias("_c"),
-                           F.col(truth_col).alias("_t"))
+    a = assignments.select(F.col("doc_id").alias("_id"),
+                           F.col("pred").alias("_c"),
+                           F.col("truth").alias("_t"))
     csz = a.groupBy("_c").agg(F.count("*").alias("_nc"))
     tsz = a.groupBy("_t").agg(F.count("*").alias("_nt"))
     cell = a.groupBy("_c", "_t").agg(F.count("*").alias("_cell"))
@@ -897,9 +872,7 @@ def bcubed_report(assignments: DataFrame, id_col: str = "doc_id",
                       F.round(f1, 6).alias("b3_f1"))
 
 
-def setsim_join_prefix(docs: DataFrame, threshold: float = 0.7,
-                       n: int = 3, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def setsim_join_prefix(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
     """EXACT all-pairs Jaccard ≥ t via prefix filtering (E182) →
     ``(id_a, id_b, jaccard)`` — the AllPairs/PPJoin family (Bayardo et
     al. 2007), the exact-at-scale complement of MinHash-LSH (whose
@@ -947,15 +920,15 @@ def setsim_join_prefix(docs: DataFrame, threshold: float = 0.7,
     tm = int(round(threshold * 1_000_000))
     words = F.filter(F.split(F.col("_t"), " "), lambda w: w != "")
     hashes = F.array_distinct(F.transform(
-        _shifted_gram_zip(words, n),
-        lambda x: F.xxhash64(*[x[str(j)] for j in range(n)])))
-    arr = F.sort_array(F.when(F.size(words) >= n, hashes)
+        _shifted_gram_zip(words, SHINGLE_N),
+        lambda x: F.xxhash64(*[x[str(j)] for j in range(SHINGLE_N)])))
+    arr = F.sort_array(F.when(F.size(words) >= SHINGLE_N, hashes)
                        .otherwise(F.array().cast("array<bigint>")))
     # fanout BEFORE the shingle+sort projection: a sub-row-group local
     # scan would evaluate the whole per-doc hashing/sorting on two
     # splits while the cluster idles (the calibration-face lesson)
-    slim = (ensure_fanout(docs.select(F.col(id_col).alias("_id"),
-                                      F.col(text_col).alias("_t")))
+    slim = (ensure_fanout(docs.select(F.col("doc_id").alias("_id"),
+                                      F.col("text").alias("_t")))
             .select("_id", arr.alias("_arr"))
             .withColumn("_sz", F.size("_arr"))
             .where(F.col("_sz") >= 1)

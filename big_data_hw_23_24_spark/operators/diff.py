@@ -30,9 +30,7 @@ from pyspark.sql import functions as F
 from .dedup import normalized_text
 
 
-def snapshot_diff(old: DataFrame, new: DataFrame,
-                  id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Content diff of two snapshots → ``(id, status, old_fp,
     new_fp)`` with ``status`` ∈ added | removed | modified |
     unchanged.
@@ -43,31 +41,27 @@ def snapshot_diff(old: DataFrame, new: DataFrame,
     of ``''``), so a doc whose text became null reads as modified,
     not as a join anomaly.
     """
-    fp = F.md5(F.coalesce(normalized_text(F.col(text_col)), F.lit("")))
-    o = old.select(F.col(id_col), fp.alias("old_fp"))
-    n = new.select(F.col(id_col), fp.alias("new_fp"))
+    fp = F.md5(F.coalesce(normalized_text(F.col("text")), F.lit("")))
+    o = old.select(F.col("doc_id"), fp.alias("old_fp"))
+    n = new.select(F.col("doc_id"), fp.alias("new_fp"))
     status = (F.when(F.col("old_fp").isNull(), F.lit("added"))
               .when(F.col("new_fp").isNull(), F.lit("removed"))
               .when(F.col("old_fp") == F.col("new_fp"),
                     F.lit("unchanged"))
               .otherwise(F.lit("modified")))
-    return (o.join(n, id_col, "full_outer")
-            .select(id_col, status.alias("status"), "old_fp", "new_fp"))
+    return (o.join(n, "doc_id", "full_outer")
+            .select("doc_id", status.alias("status"), "old_fp", "new_fp"))
 
 
-def snapshot_diff_summary(old: DataFrame, new: DataFrame,
-                          id_col: str = "doc_id",
-                          text_col: str = "text") -> DataFrame:
+def snapshot_diff_summary(old: DataFrame, new: DataFrame) -> DataFrame:
     """The one-line promotion gate: status counts of
     :func:`snapshot_diff` → ``(status, n_docs)``."""
-    return (snapshot_diff(old, new, id_col, text_col)
+    return (snapshot_diff(old, new)
             .groupBy("status")
             .agg(F.count("*").cast("long").alias("n_docs")))
 
 
-def change_set(old: DataFrame, new: DataFrame,
-               id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def change_set(old: DataFrame, new: DataFrame) -> DataFrame:
     """Turn a snapshot diff into an applicable change set →
     ``(id, op ∈ upsert | delete, text)``.
 
@@ -78,22 +72,20 @@ def change_set(old: DataFrame, new: DataFrame,
     shuffles (the payload-fetch equi-join), so shipping a daily change
     set over a 100 TB corpus moves GBs, not the corpus.
     """
-    d = snapshot_diff(old, new, id_col, text_col)
+    d = snapshot_diff(old, new)
     ops = (d.where(F.col("status") != "unchanged")
-           .select(id_col,
+           .select("doc_id",
                    F.when(F.col("status") == "removed", F.lit("delete"))
                    .otherwise(F.lit("upsert")).alias("op")))
-    return ops.join(new.select(id_col, text_col), id_col, "left")
+    return ops.join(new.select("doc_id", "text"), "doc_id", "left")
 
 
-def apply_snapshot(current: DataFrame, changes: DataFrame,
-                   id_col: str = "doc_id",
-                   payload_cols: tuple[str, ...] = ("text",)) -> DataFrame:
+def apply_snapshot(current: DataFrame, changes: DataFrame) -> DataFrame:
     """Idempotent keyed MERGE: apply a change set to the current
     snapshot → the next snapshot plus a ``action ∈ kept | upserted``
     provenance column (tombstoned ids are absent).
 
-    ``changes`` rows are ``(id, op ∈ upsert | delete, payload...)``;
+    ``changes`` rows are ``(doc_id, op ∈ upsert | delete, text)``;
     ids must be unique per change set (last-writer conflicts are the
     change-set builder's job, not the merge's). Semantics per id:
     no change row → current row passes through (``kept``); ``upsert``
@@ -110,24 +102,21 @@ def apply_snapshot(current: DataFrame, changes: DataFrame,
     face ``write_snapshot`` below; tested for replay-idempotency in
     tests/test_llm_ops.py.
     """
-    ch = changes.select(F.col(id_col), F.col("op"),
-                        *[F.col(c) for c in payload_cols])
-    cur = current.select(F.col(id_col),
-                         *[F.col(c) for c in payload_cols])
-    joined = cur.alias("c").join(ch.alias("ch"), id_col, "full_outer")
+    ch = changes.select("doc_id", "op", "text")
+    cur = current.select("doc_id", "text")
+    joined = cur.alias("c").join(ch.alias("ch"), "doc_id", "full_outer")
     is_upsert = F.col("ch.op") == "upsert"
     return (joined
             .where(F.col("ch.op").isNull() | is_upsert)
-            .select(F.col(id_col),
-                    *[F.when(is_upsert, F.col(f"ch.{c}"))
-                      .otherwise(F.col(f"c.{c}")).alias(c)
-                      for c in payload_cols],
+            .select(F.col("doc_id"),
+                    F.when(is_upsert, F.col("ch.text"))
+                    .otherwise(F.col("c.text")).alias("text"),
                     F.when(is_upsert, F.lit("upserted"))
                     .otherwise(F.lit("kept")).alias("action")))
 
 
-def write_snapshot(snapshot: DataFrame, path: str, n_buckets: int = 64,
-                   id_col: str = "doc_id") -> None:
+def write_snapshot(snapshot: DataFrame, path: str,
+                   n_buckets: int = 64) -> None:
     """Write a snapshot as a bucket-partitioned corpus table with
     DYNAMIC partition overwrite: only the hash buckets present in this
     write are replaced, so a retried (or incremental, churn-localized)
@@ -135,7 +124,7 @@ def write_snapshot(snapshot: DataFrame, path: str, n_buckets: int = 64,
     of the epoch-keyed streaming sink. Bucketing by id hash keeps
     partition counts bounded and churn spread evenly."""
     (snapshot
-     .withColumn("bucket", F.pmod(F.xxhash64(F.col(id_col)),
+     .withColumn("bucket", F.pmod(F.xxhash64(F.col("doc_id")),
                                   F.lit(n_buckets)))
      .write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
@@ -143,30 +132,26 @@ def write_snapshot(snapshot: DataFrame, path: str, n_buckets: int = 64,
      .parquet(path))
 
 
-def scd2_history(old: DataFrame, new: DataFrame,
-                 id_col: str = "doc_id", text_col: str = "text",
-                 old_version: int = 0,
-                 new_version: int = 1) -> DataFrame:
+def scd2_history(old: DataFrame, new: DataFrame) -> DataFrame:
     """Type-2 slowly-changing-dimension history from two snapshots →
     ``(id, fp, valid_from, valid_to, is_current)``.
 
     The warehouse-side record of WHAT a training corpus said WHEN —
     the audit artifact behind "which snapshot version of this document
     did model X train on": every content version gets a validity
-    interval, closed (``valid_to = new_version``) when the re-crawl
+    interval, closed (``valid_to = 1``, the new version) when the re-crawl
     rewrote or removed it, open (``valid_to`` null, ``is_current``)
     while it is the live text. Taxonomy per :func:`snapshot_diff`
-    status: unchanged → one open row from ``old_version``; modified →
-    closed old row + open new row; removed → closed old row; added →
-    open row from ``new_version``.
+    status: unchanged → one open row from version 0 (the old
+    snapshot); modified → closed old row + open new row; removed →
+    closed old row; added → open row from version 1 (the new one).
 
     Plan: the diff's single full-outer id join, then the history rows
     come from ONE conditional struct-array explode (≤ 2 rows per id —
     bounded fan-out, no second pass, no union of re-scans). Only
     fingerprints move; text never shuffles.
     """
-    lv, nv = (F.lit(old_version).cast("long"),
-              F.lit(new_version).cast("long"))
+    lv, nv = F.lit(0).cast("long"), F.lit(1).cast("long")
     null_v = F.lit(None).cast("long")
     closed_old = F.struct(F.col("old_fp").alias("fp"),
                           lv.alias("valid_from"), nv.alias("valid_to"),
@@ -182,16 +167,14 @@ def scd2_history(old: DataFrame, new: DataFrame,
                   F.array(closed_old, open_new))
             .when(F.col("status") == "removed", F.array(closed_old))
             .otherwise(F.array(open_new)))
-    return (snapshot_diff(old, new, id_col, text_col)
-            .select(F.col(id_col), F.explode(rows).alias("_r"))
-            .select(id_col, "_r.fp", "_r.valid_from", "_r.valid_to",
+    return (snapshot_diff(old, new)
+            .select(F.col("doc_id"), F.explode(rows).alias("_r"))
+            .select("doc_id", "_r.fp", "_r.valid_from", "_r.valid_to",
                     "_r.is_current"))
 
 
 def incremental_stats(old: DataFrame, new: DataFrame,
                       group_col: str = "source",
-                      id_col: str = "doc_id",
-                      text_col: str = "text",
                       old_stats: DataFrame | None = None) -> DataFrame:
     """Incremental view maintenance of per-group corpus stats (E154)
     → ``(group, n_docs, n_tokens)`` for the NEW snapshot, computed
@@ -219,7 +202,7 @@ def incremental_stats(old: DataFrame, new: DataFrame,
     itemset move applied to view maintenance).
     """
     toks = F.size(F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), " "),
+        F.split(F.coalesce(F.col("text"), F.lit("")), " "),
         lambda w: w != ""))
     if old_stats is not None:
         base = old_stats.select(
@@ -238,22 +221,22 @@ def incremental_stats(old: DataFrame, new: DataFrame,
     # collapsing never change the split-and-filter count).
     fp = F.md5(F.concat_ws(
         "\x01", F.coalesce(F.col(group_col).cast("string"), F.lit("")),
-        F.coalesce(normalized_text(F.col(text_col)), F.lit(""))))
-    o = old.select(F.col(id_col), fp.alias("_ofp"))
-    n = new.select(F.col(id_col), fp.alias("_nfp"))
+        F.coalesce(normalized_text(F.col("text")), F.lit(""))))
+    o = old.select(F.col("doc_id"), fp.alias("_ofp"))
+    n = new.select(F.col("doc_id"), fp.alias("_nfp"))
     status = (F.when(F.col("_ofp").isNull(), F.lit("added"))
               .when(F.col("_nfp").isNull(), F.lit("removed"))
               .when(F.col("_ofp") == F.col("_nfp"), F.lit("unchanged"))
               .otherwise(F.lit("modified")))
-    changed = (o.join(n, id_col, "full_outer")
-               .select(id_col, status.alias("status"))
+    changed = (o.join(n, "doc_id", "full_outer")
+               .select("doc_id", status.alias("status"))
                .where(F.col("status") != "unchanged"))
     dec = (changed.where(F.col("status").isin("removed", "modified"))
-           .join(old.select(id_col, group_col, text_col), id_col)
+           .join(old.select("doc_id", group_col, "text"), "doc_id")
            .select(F.col(group_col).alias("grp"),
                    F.lit(-1).alias("_dd"), (-toks).alias("_dt")))
     inc = (changed.where(F.col("status").isin("added", "modified"))
-           .join(new.select(id_col, group_col, text_col), id_col)
+           .join(new.select("doc_id", group_col, "text"), "doc_id")
            .select(F.col(group_col).alias("grp"),
                    F.lit(1).alias("_dd"), toks.alias("_dt")))
     delta = (dec.unionByName(inc).groupBy("grp")

@@ -42,21 +42,6 @@ def exact_frequent(df: DataFrame, item_col: str, phi: float,
             .where(F.col("cnt") >= thr))
 
 
-def annotate_truth(estimated: DataFrame, true_frequent: DataFrame,
-                   item_col: str = "item") -> DataFrame:
-    """K4 '±' annotation: left join against the true-frequent set.
-
-    The reference's inner membership loop (``G016HW3.java:186-196``)
-    becomes a broadcast-able left join on the item key.
-    """
-    t = true_frequent.select(F.col(item_col).alias("_true_item")).distinct()
-    return (estimated
-            .join(t, estimated[item_col] == t["_true_item"], "left")
-            .withColumn("sign", F.when(F.col("_true_item").isNotNull(), "+")
-                        .otherwise("-"))
-            .drop("_true_item"))
-
-
 def _cms_bucket(row_col, item_col, width: int, hash_family: str):
     """Bucket expression for one CMS vote — the hash family is part of
     the sketch's identity (a probe with the wrong family under-counts,

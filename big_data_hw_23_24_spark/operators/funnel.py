@@ -32,8 +32,6 @@ __all__ = ["funnel_depths"]
 
 
 def funnel_depths(events: DataFrame, stages: list[str],
-                  user_col: str = "user_id", ts_col: str = "ts",
-                  type_col: str = "event_type",
                   within_seconds: int | None = None) -> DataFrame:
     """Per-user funnel progress → (user_id, depth).
 
@@ -52,30 +50,28 @@ def funnel_depths(events: DataFrame, stages: list[str],
         raise ValueError(f"within_seconds must be positive, "
                          f"got {within_seconds}")
 
-    reached = (events.where(F.col(type_col) == stages[0])
-               .groupBy(user_col).agg(F.min(ts_col).alias("_t1")))
+    reached = (events.where(F.col("event_type") == stages[0])
+               .groupBy("user_id").agg(F.min("ts").alias("_t1")))
     for i, st in enumerate(stages[1:], start=2):
-        cond = F.col(ts_col) > F.col(f"_t{i - 1}")
+        cond = F.col("ts") > F.col(f"_t{i - 1}")
         if within_seconds is not None:
-            cond = cond & (F.col(ts_col) <= F.col("_t1")
+            cond = cond & (F.col("ts") <= F.col("_t1")
                            + F.expr(f"INTERVAL {within_seconds} SECOND"))
         anchor_cols = list(dict.fromkeys(["_t1", f"_t{i - 1}"]))
-        nxt = (events.where(F.col(type_col) == st)
-               .join(reached.select(user_col, *anchor_cols), user_col)
+        nxt = (events.where(F.col("event_type") == st)
+               .join(reached.select("user_id", *anchor_cols), "user_id")
                .where(cond)
-               .groupBy(user_col).agg(F.min(ts_col).alias(f"_t{i}")))
-        reached = reached.join(nxt.select(user_col, f"_t{i}"),
-                               user_col, "left")
+               .groupBy("user_id").agg(F.min("ts").alias(f"_t{i}")))
+        reached = reached.join(nxt.select("user_id", f"_t{i}"),
+                               "user_id", "left")
     depth = F.lit(1)
     for i in range(2, len(stages) + 1):
         depth = depth + F.col(f"_t{i}").isNotNull().cast("int")
-    return reached.select(F.col(user_col),
+    return reached.select(F.col("user_id"),
                           depth.cast("int").alias("depth"))
 
 
-def retention_cohorts(events: DataFrame,
-                      user_col: str = "user_id",
-                      ts_col: str = "ts") -> DataFrame:
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """Weekly retention matrix → (cohort_week, week_offset, n_users);
     ``cohort_week`` is an ISO date string (engine-portable — DATE
     columns round-trip as different pandas dtypes per engine).
@@ -91,68 +87,22 @@ def retention_cohorts(events: DataFrame,
     (cohort, offset). ``date_trunc('week')`` starts Monday in both
     Spark and DuckDB, so the cohort boundaries are engine-exact.
     """
-    week = F.date_trunc("week", F.col(ts_col))
-    first = (events.groupBy(user_col)
-             .agg(F.date_trunc("week", F.min(ts_col)).alias("_cohort")))
-    active = (events.select(F.col(user_col), week.alias("_week"))
+    week = F.date_trunc("week", F.col("ts"))
+    first = (events.groupBy("user_id")
+             .agg(F.date_trunc("week", F.min("ts")).alias("_cohort")))
+    active = (events.select(F.col("user_id"), week.alias("_week"))
               .distinct())
     offset = (F.datediff(F.to_date("_week"), F.to_date("_cohort")) / 7) \
         .cast("int")
-    return (active.join(first, user_col)
+    return (active.join(first, "user_id")
             .select(F.date_format("_cohort", "yyyy-MM-dd")
                     .alias("cohort_week"),
-                    offset.alias("week_offset"), F.col(user_col))
+                    offset.alias("week_offset"), F.col("user_id"))
             .groupBy("cohort_week", "week_offset")
-            .agg(F.count_distinct(F.col(user_col)).alias("n_users")))
+            .agg(F.count_distinct(F.col("user_id")).alias("n_users")))
 
 
-def path_ngrams(events: DataFrame, n: int = 3, k: int = 20,
-                user_col: str = "user_id", type_col: str = "event_type",
-                order_cols: tuple[str, ...] = ("ts", "event_id"),
-                ) -> DataFrame:
-    """Top-k most common length-``n`` event-type paths →
-    ``(path, n_occurrences, n_users, rank)``.
-
-    The unsupervised sibling of the fixed-stage funnel: instead of
-    asking "how many users did signup→click→purchase", surface WHICH
-    consecutive journeys actually dominate ("view>click>error" at
-    rank 2 is a bug report). A path is ``n`` consecutive events of
-    one user in time order, rendered ``a>b>c``.
-
-    Shape: ``n−1`` ``lead`` columns over ONE user-partitioned window
-    (per-user sequences are bounded; never a global window), a path
-    hash-aggregate counting occurrences and distinct users, and a
-    LIMIT-bounded top-k ranked on (count desc, path) — fully
-    deterministic, no funnel through a single reducer beyond the
-    k-row result itself.
-    """
-    from pyspark.sql import Window
-
-    if n < 2:
-        raise ValueError(f"path length must be >= 2, got {n}")
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    w = Window.partitionBy(user_col).orderBy(*[F.col(c)
-                                               for c in order_cols])
-    steps = [F.col(type_col)] + [F.lead(type_col, i).over(w)
-                                 for i in range(1, n)]
-    paths = (events
-             .select(F.col(user_col),
-                     F.concat_ws(">", *steps).alias("path"),
-                     steps[-1].isNotNull().alias("_complete"))
-             .where(F.col("_complete")))
-    agg = (paths.groupBy("path")
-           .agg(F.count("*").cast("long").alias("n_occurrences"),
-                F.countDistinct(user_col).cast("long").alias("n_users")))
-    ranked = (agg.orderBy(F.col("n_occurrences").desc(), "path")
-              .limit(k))
-    w2 = Window.orderBy(F.col("n_occurrences").desc(), "path")
-    return ranked.withColumn("rank", F.row_number().over(w2))
-
-
-def transition_matrix(events: DataFrame, type_col: str = "event_type",
-                      user_col: str = "user_id", ts_col: str = "ts",
-                      id_col: str = "event_id") -> DataFrame:
+def transition_matrix(events: DataFrame) -> DataFrame:
     """First-order Markov transition matrix over per-user event
     sequences → ``(from_type, to_type, n_transitions, prob)``.
 
@@ -168,10 +118,10 @@ def transition_matrix(events: DataFrame, type_col: str = "event_type",
     aggregate; the normalizing window runs on the AGGREGATED T×T
     matrix (event-type vocabulary, tens of rows), never on events.
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (events.select(
-        F.col(type_col).alias("from_type"),
-        F.lead(type_col).over(w).alias("to_type"))
+        F.col("event_type").alias("from_type"),
+        F.lead("event_type").over(w).alias("to_type"))
         .where(F.col("to_type").isNotNull()))
     counts = (pairs.groupBy("from_type", "to_type")
               .agg(F.count("*").cast("long").alias("n_transitions")))

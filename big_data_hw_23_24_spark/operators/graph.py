@@ -34,10 +34,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+COOC_CAP = 20  # items kept per user basket
+COOC_MIN_CO = 2  # co-occurrences that make an edge
+PAGERANK_DAMPING = 0.85
+PAGERANK_ITERATIONS = 3
+
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
-             weight_col: str | None = None, damping: float = 0.85,
-             iterations: int = 3) -> DataFrame:
+             weight_col: str | None = None,
+             damping: float = PAGERANK_DAMPING,
+             iterations: int = PAGERANK_ITERATIONS) -> DataFrame:
     """Weighted PageRank with dangling-mass redistribution.
 
     ``pr'(v) = (1−d)/N + d·(Σ_u pr(u)·p(u→v) + dangling/N)`` where
@@ -104,30 +110,25 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                     "out_weight"))
 
 
-def transition_edges(events: DataFrame, user_col: str = "user_id",
-                     item_col: str = "item",
-                     order_cols: tuple[str, ...] = ("ts", "event_id"),
-                     ) -> DataFrame:
+def transition_edges(events: DataFrame, item_col: str = "item") -> DataFrame:
     """Consecutive-event transition edges: for each user's event
-    sequence (ordered by ``order_cols``), emit ``(src=item_i,
+    sequence (ordered by ``ts, event_id``), emit ``(src=item_i,
     dst=item_{i+1})``. One window PARTITIONED BY user (bounded per-user
     sequences, never a global window) — the standard sessionized
     clickstream → graph step."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(user_col).orderBy(*[F.col(c)
-                                               for c in order_cols])
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (events
-            .select(F.col(user_col),
+            .select(F.col("user_id"),
                     F.col(item_col).alias("src"),
                     F.lead(item_col).over(w).alias("dst"))
             .where(F.col("dst").isNotNull())
             .select("src", "dst"))
 
 
-def item_cooccurrence(events: DataFrame, item_col: str = "item",
-                      user_col: str = "user_id", cap: int = 20,
-                      min_co: int = 2) -> DataFrame:
+def item_cooccurrence(events: DataFrame, cap: int = COOC_CAP,
+                      min_co: int = COOC_MIN_CO) -> DataFrame:
     """Item-item co-occurrence similarity over user baskets →
     ``(item_a, item_b, n_co, jaccard)`` — the classic "users who
     touched A also touched B" signal (collaborative filtering's
@@ -143,25 +144,25 @@ def item_cooccurrence(events: DataFrame, item_col: str = "item",
     table), so the reported similarity is internally consistent.
     Pairs below ``min_co`` users are dropped.
     """
-    per = (events.where(F.col(item_col).isNotNull())
-           .groupBy(user_col, item_col)
+    per = (events.where(F.col("item").isNotNull())
+           .groupBy("user_id", "item")
            .agg(F.count("*").alias("_n")))
-    w = Window.partitionBy(user_col).orderBy(F.col("_n").desc(),
-                                             F.col(item_col))
+    w = Window.partitionBy("user_id").orderBy(F.col("_n").desc(),
+                                             F.col("item"))
     capped = (per.withColumn("_rk", F.row_number().over(w))
               .where(F.col("_rk") <= cap)
-              .select(user_col, item_col))
-    sz = capped.groupBy(item_col).agg(F.count("*").alias("_nu"))
+              .select("user_id", "item"))
+    sz = capped.groupBy("item").agg(F.count("*").alias("_nu"))
     a, b = capped.alias("a"), capped.alias("b")
-    co = (a.join(b, (F.col(f"a.{user_col}") == F.col(f"b.{user_col}"))
-                 & (F.col(f"a.{item_col}") < F.col(f"b.{item_col}")))
-          .groupBy(F.col(f"a.{item_col}").alias("item_a"),
-                   F.col(f"b.{item_col}").alias("item_b"))
+    co = (a.join(b, (F.col("a.user_id") == F.col("b.user_id"))
+                 & (F.col("a.item") < F.col("b.item")))
+          .groupBy(F.col("a.item").alias("item_a"),
+                   F.col("b.item").alias("item_b"))
           .agg(F.count("*").cast("long").alias("n_co"))
           .where(F.col("n_co") >= min_co))
-    sa = sz.select(F.col(item_col).alias("item_a"),
+    sa = sz.select(F.col("item").alias("item_a"),
                    F.col("_nu").alias("_na"))
-    sb = sz.select(F.col(item_col).alias("item_b"),
+    sb = sz.select(F.col("item").alias("item_b"),
                    F.col("_nu").alias("_nb"))
     return (co.join(sa, "item_a").join(sb, "item_b")
             .select("item_a", "item_b", "n_co",
@@ -214,9 +215,8 @@ def market_basket_pairs(baskets: DataFrame, basket_col: str,
                     .alias("lift")))
 
 
-def item_triangles(events: DataFrame, user_col: str = "user_id",
-                   item_col: str = "item", cap: int = 20,
-                   min_co: int = 2) -> DataFrame:
+def item_triangles(events: DataFrame, cap: int = COOC_CAP,
+                   min_co: int = COOC_MIN_CO) -> DataFrame:
     """Triangle participation + local clustering coefficient per item
     over the co-occurrence graph → ``(item, degree, n_triangles,
     clustering)``.
@@ -255,8 +255,7 @@ def item_triangles(events: DataFrame, user_col: str = "user_id",
     # the build still computed exactly once at any scale (guide §5;
     # interleaved A/B neutral at sf0.1 — min 1.96 vs 1.95 s — the
     # saving is the driver round-trip, deterministic jobs 19 -> 18)
-    edges = (item_cooccurrence(events, item_col=item_col,
-                               user_col=user_col, cap=cap, min_co=min_co)
+    edges = (item_cooccurrence(events, cap=cap, min_co=min_co)
              .select("item_a", "item_b").localCheckpoint(eager=False))
     deg = (edges.select(F.explode(F.array("item_a", "item_b"))
                         .alias("item"))
@@ -452,8 +451,7 @@ def hierarchy_rollup(nodes: DataFrame, key_col: str, value_col: str,
                  F.sum("_c").cast("long").alias("subtree_cents")))
 
 
-def degree_assortativity(edges: DataFrame, src: str = "src",
-                         dst: str = "dst") -> DataFrame:
+def degree_assortativity(edges: DataFrame) -> DataFrame:
     """Degree assortativity of an undirected graph (E201) → ONE row
     ``(n_nodes, n_edges, assortativity)``.
 
@@ -475,7 +473,7 @@ def degree_assortativity(edges: DataFrame, src: str = "src",
     Everything is keyed equi-join + aggregate: no windows, no
     cartesian, linear in E.
     """
-    e = edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))
+    e = edges.select(F.col("src").alias("_u"), F.col("dst").alias("_v"))
     sym = e.unionByName(e.select(F.col("_v").alias("_u"),
                                  F.col("_u").alias("_v")))
     deg = sym.groupBy("_u").agg(F.count("*").cast("long").alias("_d"))
@@ -502,10 +500,7 @@ def degree_assortativity(edges: DataFrame, src: str = "src",
                     .alias("assortativity")))
 
 
-def rec_hitrate(events: DataFrame, split_day: int, k: int = 3,
-                item_col: str = "item", user_col: str = "user_id",
-                ts_col: str = "ts", cap: int = 20,
-                min_co: int = 2) -> DataFrame:
+def rec_hitrate(events: DataFrame, split_day: int, k: int = 3) -> DataFrame:
     """Temporal holdout evaluation of the co-occurrence recommender
     (E206) → ONE row ``(k, n_test_pairs, n_hits, hitrate)``.
 
@@ -530,7 +525,7 @@ def rec_hitrate(events: DataFrame, split_day: int, k: int = 3,
     three keyed joins + one aggregate. A user with no recommendable
     train items simply contributes misses — the honest denominator.
     """
-    day = F.dayofmonth(ts_col)
+    day = F.dayofmonth("ts")
     train = events.where(day < split_day)
     test = events.where(day >= split_day)
     # NOT pinned, deliberately (r14 opt round A/B): an eager
@@ -538,8 +533,7 @@ def rec_hitrate(events: DataFrame, split_day: int, k: int = 3,
     # sim consumers already share every exchange at runtime (AQE
     # ReusedExchange), so the pin only serialized work the unpinned
     # plan overlapped inside one job
-    sim = item_cooccurrence(train, item_col=item_col, user_col=user_col,
-                            cap=cap, min_co=min_co)
+    sim = item_cooccurrence(train)
     edges = sim.select(F.col("item_a").alias("_src"),
                        F.col("item_b").alias("_dst"), "jaccard") \
         .unionByName(sim.select(F.col("item_b").alias("_src"),
@@ -549,14 +543,14 @@ def rec_hitrate(events: DataFrame, split_day: int, k: int = 3,
     recs = grouped_topk(edges, ["_src"],
                         [F.col("jaccard").desc(), F.col("_dst")], k) \
         .select("_src", "_dst")
-    ut = (train.where(F.col(item_col).isNotNull())
-          .select(F.col(user_col).alias("_u"),
-                  F.col(item_col).alias("_it")).distinct())
+    ut = (train.where(F.col("item").isNotNull())
+          .select(F.col("user_id").alias("_u"),
+                  F.col("item").alias("_it")).distinct())
     user_recs = (ut.join(recs, ut["_it"] == recs["_src"])
                  .select("_u", F.col("_dst").alias("_it")).distinct())
-    test_pairs = (test.where(F.col(item_col).isNotNull())
-                  .select(F.col(user_col).alias("_u"),
-                          F.col(item_col).alias("_it")).distinct()
+    test_pairs = (test.where(F.col("item").isNotNull())
+                  .select(F.col("user_id").alias("_u"),
+                          F.col("item").alias("_it")).distinct()
                   .join(ut, ["_u", "_it"], "left_anti"))
     hits = test_pairs.join(user_recs, ["_u", "_it"], "left_semi")
     n_test = test_pairs.agg(F.count("*").cast("long").alias("n_test_pairs"))
@@ -572,11 +566,9 @@ def rec_hitrate(events: DataFrame, split_day: int, k: int = 3,
                     .alias("hitrate")))
 
 
-def adamic_adar(events: DataFrame, user_col: str = "user_id",
-                item_col: str = "item", cap: int = 20, min_co: int = 2,
-                max_hub: int = 64, k: int = 20) -> DataFrame:
+def adamic_adar(events: DataFrame) -> DataFrame:
     """Adamic-Adar link prediction over the co-occurrence graph
-    (E225) → the top-``k`` NON-adjacent item pairs most likely to
+    (E225) → the top-20 NON-adjacent item pairs most likely to
     co-occur next: ``(item_a, item_b, n_common, aa_score)``.
 
     The classic link-prediction baseline (Adamic & Adar 2003), the
@@ -596,15 +588,13 @@ def adamic_adar(events: DataFrame, user_col: str = "user_id",
 
     Scale shape: rides :func:`item_cooccurrence`'s capped edges
     (fan-out ≤ cap² per user); wedge fan-out is Σ deg² over MIDDLE
-    nodes, bounded by dropping hubs with deg > ``max_hub`` — the
+    nodes, bounded by dropping hubs with deg > 64 — the
     df-cap treatment: a ubiquitous neighbor contributes at most
-    1/ln(max_hub) ≈ 0.24 per pair while costing deg² join rows, the
+    1/ln(64) ≈ 0.24 per pair while costing deg² join rows, the
     classic signal-per-cost cliff. Existing edges leave via one
     LEFT ANTI join; the top-k is TakeOrderedAndProject.
     """
-    edges = (item_cooccurrence(events, item_col=item_col,
-                               user_col=user_col, cap=cap,
-                               min_co=min_co)
+    edges = (item_cooccurrence(events)
              .select("item_a", "item_b")
              .localCheckpoint(eager=True))
     sym = edges.unionByName(
@@ -618,7 +608,7 @@ def adamic_adar(events: DataFrame, user_col: str = "user_id",
            .join(deg, "_z")
            # degree-1 middles can't form a wedge, and ln(1) = 0 would
            # divide by zero under ANSI — prune them before t
-           .where((F.col("_d") >= 2) & (F.col("_d") <= max_hub)))
+           .where((F.col("_d") >= 2) & (F.col("_d") <= 64)))
     t = F.round(F.lit(1_000_000.0) / F.log(F.col("_d"))).cast("long")
     n1 = mid.select("_z", F.col("_nb").alias("_a"), t.alias("_t"))
     n2 = mid.select("_z", F.col("_nb").alias("_b"))
@@ -633,15 +623,14 @@ def adamic_adar(events: DataFrame, user_col: str = "user_id",
         ["_a", "_b"], "left_anti")
     return (non_adjacent
             .orderBy(F.col("_aa").desc(), "_a", "_b")
-            .limit(k)
+            .limit(20)
             .select(F.col("_a").alias("item_a"),
                     F.col("_b").alias("item_b"), "n_common",
                     F.round(F.col("_aa") / 1e6, 6).alias("aa_score")))
 
 
-def hits_scores(events: DataFrame, user_col: str = "user_id",
-                item_col: str = "item", cap: int = 20,
-                double_rounds: int = 3, k: int = 20) -> DataFrame:
+def hits_scores(events: DataFrame, double_rounds: int = 3,
+                k: int = 20) -> DataFrame:
     """HITS hubs-and-authorities on the user-item incidence (E228) →
     the top-``k`` authority items: ``(item, rank, authority)``.
 
@@ -657,40 +646,40 @@ def hits_scores(events: DataFrame, user_col: str = "user_id",
     0/1, so every update is a pure grouped SUM of exact integers (no
     products, no normalization inside the loop — DECIMAL(38,0) on the
     Spark side, HUGEINT in the oracle); growth per double-round is
-    ≤ (cap · max item degree), guarded against the 10³⁸ ceiling at
+    ≤ (COOC_CAP · max item degree), guarded against the 10³⁸ ceiling at
     runtime; the top-k orders on the exact integer authority with the
     item as tiebreak (a total order), and the reported score
     normalizes to the max authority in ONE final double division.
 
-    Scale shape: per-user baskets capped at ``cap`` (the
-    co-occurrence treatment) so h-updates fan in ≤ cap rows per user;
-    the iteration is 2·rounds keyed equi-join + hash-aggregate pairs
+    Scale shape: per-user baskets capped at ``COOC_CAP`` (the
+    co-occurrence treatment) so h-updates fan in ≤ COOC_CAP rows per
+    user; the iteration is 2·rounds keyed equi-join + hash-aggregate pairs
     over the incidence — each carries one integer per node, never a
     vector; the incidence is checkpointed once for its 2·rounds + 1
     consumers (root-cause 4).
     """
-    per = (events.where(F.col(item_col).isNotNull())
-           .groupBy(user_col, item_col)
+    per = (events.where(F.col("item").isNotNull())
+           .groupBy("user_id", "item")
            .agg(F.count("*").alias("_n")))
-    w = Window.partitionBy(user_col).orderBy(F.col("_n").desc(),
-                                             F.col(item_col))
+    w = Window.partitionBy("user_id").orderBy(F.col("_n").desc(),
+                                              F.col("item"))
     # lazy pin: the overflow-guard aggregate right below is a full
     # scan that materializes the incidence as a side effect; the
     # 2·rounds loop joins then read the persisted blocks
     inc = (per.withColumn("_rk", F.row_number().over(w))
-           .where(F.col("_rk") <= cap)
-           .select(F.col(user_col).alias("_u"),
-                   F.col(item_col).alias("_i"))
+           .where(F.col("_rk") <= COOC_CAP)
+           .select(F.col("user_id").alias("_u"),
+                   F.col("item").alias("_i"))
            .localCheckpoint(eager=False))
-    # runtime overflow guard: per double-round growth ≤ cap · max
-    # item degree (h picks up ≤ cap authorities, a ≤ deg_i hubs)
+    # runtime overflow guard: per double-round growth ≤ COOC_CAP · max
+    # item degree (h picks up ≤ COOC_CAP authorities, a ≤ deg_i hubs)
     max_ideg = (inc.groupBy("_i").count()
                 .agg(F.max("count")).first()[0] or 0)
-    if max_ideg and (cap * max_ideg) ** double_rounds >= 10 ** 38:
+    if max_ideg and (COOC_CAP * max_ideg) ** double_rounds >= 10 ** 38:
         raise ValueError(
             f"HITS would overflow the oracle's HUGEINT: "
             f"(cap·max_item_degree)^rounds = "
-            f"({cap}·{max_ideg})^{double_rounds}")
+            f"({COOC_CAP}·{max_ideg})^{double_rounds}")
     dec = "decimal(38,0)"
     h = (inc.select("_u").distinct()
          .withColumn("_h", F.lit(1).cast(dec)))
@@ -716,9 +705,7 @@ def hits_scores(events: DataFrame, user_col: str = "user_id",
                     .alias("authority")))
 
 
-def label_propagation(events: DataFrame, user_col: str = "user_id",
-                      item_col: str = "item", cap: int = 20,
-                      min_co: int = 2, rounds: int = 3) -> DataFrame:
+def label_propagation(events: DataFrame, rounds: int = 3) -> DataFrame:
     """Semi-supervised label propagation over the co-occurrence graph
     (E230) → one row per node: ``(item, label, is_seed)``.
 
@@ -752,9 +739,7 @@ def label_propagation(events: DataFrame, user_col: str = "user_id",
     doesn't re-execute rounds 1..r (the iterative-algorithm
     convention shared with connected components).
     """
-    edges = (item_cooccurrence(events, item_col=item_col,
-                               user_col=user_col, cap=cap,
-                               min_co=min_co)
+    edges = (item_cooccurrence(events)
              .select("item_a", "item_b")
              .localCheckpoint(eager=True))
     sym = edges.unionByName(
@@ -795,5 +780,5 @@ def label_propagation(events: DataFrame, user_col: str = "user_id",
                           .alias("_l"),
                           "is_seed")
                   .localCheckpoint(eager=False))
-    return labels.select(F.col("_i").alias(item_col),
+    return labels.select(F.col("_i").alias("item"),
                          F.col("_l").alias("label"), "is_seed")

@@ -20,6 +20,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+PERCENTILES = (0.5, 0.9, 0.99)  # probed by percentile_drift
+SKETCH_ACCURACY = 100  # approx_percentile accuracy of the sketch side
+
 
 def grouped_percentile(df: DataFrame, keys: list[str], value_col: str,
                        p: float = 0.5, out_col: str = "pctl") -> DataFrame:
@@ -131,10 +134,9 @@ def ks_distance_matrix(df: DataFrame, value_col: str,
                          6).alias("ks")))
 
 
-def robust_stats(df: DataFrame, value_col: str,
-                 group_col: str = "source", id_col: str = "doc_id",
-                 lo_pct: int = 5, hi_pct: int = 95) -> DataFrame:
-    """Outlier-robust per-group location stats -> (group, n, p_lo,
+def robust_stats(df: DataFrame, value_col: str, lo_pct: int = 5,
+                 hi_pct: int = 95) -> DataFrame:
+    """Outlier-robust per-source location stats -> (source, n, p_lo,
     p_hi, trimmed_mean, winsor_mean, plain_mean).
 
     A handful of 100 MB pathological documents drags a source's mean
@@ -157,7 +159,7 @@ def robust_stats(df: DataFrame, value_col: str,
     stratum through one reducer (the ``lm_quality_buckets`` lesson);
     the per-group offset/size and the two fence values are
     #groups-row aggregates broadcast back. Rank ties break by
-    ``id_col`` (total order required by the spine); which equal value
+    ``doc_id`` (total order required by the spine); which equal value
     sits at the fence rank is irrelevant to both estimators. NULL
     groups ride a coalesced shadow key so the broadcast equi-joins
     cannot drop them (the temperature_resample lesson).
@@ -169,11 +171,11 @@ def robust_stats(df: DataFrame, value_col: str,
     if not (0 <= lo_pct < hi_pct <= 100):
         raise ValueError(f"need 0 <= lo < hi <= 100, got {lo_pct}/{hi_pct}")
     base = (df.where(F.col(value_col).isNotNull())
-            .select(F.coalesce(F.col(group_col).cast("string"),
+            .select(F.coalesce(F.col("source").cast("string"),
                                F.lit("\u0000<null>")).alias("_gkey"),
-                    F.col(group_col).alias("grp"),
+                    F.col("source").alias("grp"),
                     F.col(value_col).cast("double").alias("v"),
-                    F.col(id_col).alias("_id")))
+                    F.col("doc_id").alias("_id")))
     ranked = global_rank(base, [F.col("_gkey"), F.col("v"), F.col("_id")],
                          rank_col="_grank")
     sizes = (ranked.groupBy("_gkey")
@@ -192,7 +194,7 @@ def robust_stats(df: DataFrame, value_col: str,
                    F.max(F.when(F.col("_r") == F.col("_hi_r"),
                                 F.col("v"))).alias("p_hi")))
     return (marked.join(F.broadcast(fences), "_gkey")
-            .groupBy(F.col("grp").alias(group_col))
+            .groupBy(F.col("grp").alias("source"))
             .agg(F.count("*").cast("long").alias("n"),
                  F.max("p_lo").alias("p_lo"),
                  F.max("p_hi").alias("p_hi"),
@@ -207,9 +209,7 @@ def robust_stats(df: DataFrame, value_col: str,
                  F.round(F.avg("v"), 6).alias("plain_mean")))
 
 
-def rfm_segments(events: DataFrame, n_tiles: int = 5,
-                 user_col: str = "user_id", ts_col: str = "ts",
-                 value_col: str = "value") -> DataFrame:
+def rfm_segments(events: DataFrame, n_tiles: int = 5) -> DataFrame:
     """RFM segmentation → ``(user_id, frequency, monetary_cents,
     r_bucket, f_bucket, m_bucket, segment)``: the classic
     recency/frequency/monetary quantile grid (bucket ``n_tiles`` =
@@ -229,30 +229,28 @@ def rfm_segments(events: DataFrame, n_tiles: int = 5,
 
     from .ranking import global_ntile
 
-    per = (events.groupBy(user_col)
-           .agg(F.max(ts_col).alias("_rts"),
+    per = (events.groupBy("user_id")
+           .agg(F.max("ts").alias("_rts"),
                 F.count("*").cast("long").alias("frequency"),
-                F.sum(F.floor(F.col(value_col) * 100)).cast("long")
+                F.sum(F.floor(F.col("value") * 100)).cast("long")
                 .alias("monetary_cents")))
-    b = global_ntile(per, n_tiles, [F.col("_rts"), F.col(user_col)],
+    b = global_ntile(per, n_tiles, [F.col("_rts"), F.col("user_id")],
                      out_col="r_bucket")
-    b = global_ntile(b, n_tiles, [F.col("frequency"), F.col(user_col)],
+    b = global_ntile(b, n_tiles, [F.col("frequency"), F.col("user_id")],
                      out_col="f_bucket")
     b = global_ntile(b, n_tiles,
-                     [F.col("monetary_cents"), F.col(user_col)],
+                     [F.col("monetary_cents"), F.col("user_id")],
                      out_col="m_bucket")
     return b.select(
-        user_col, "frequency", "monetary_cents",
+        "user_id", "frequency", "monetary_cents",
         "r_bucket", "f_bucket", "m_bucket",
         F.concat(F.col("r_bucket").cast("string"),
                  F.col("f_bucket").cast("string"),
                  F.col("m_bucket").cast("string")).alias("segment"))
 
 
-def percentile_drift(df: DataFrame, group_col: str, value_col: str,
-                     ps: tuple[float, ...] = (0.5, 0.9, 0.99),
-                     exact_accuracy: int = 1_000_000,
-                     sketch_accuracy: int = 100) -> DataFrame:
+def percentile_drift(df: DataFrame, group_col: str,
+                     value_col: str) -> DataFrame:
     """Approximate-vs-exact percentile drift audit (E145) → per
     (group, p): ``n, exact_interp, approx_value, target_rank,
     rank_displacement, sketch_within_bound``.
@@ -262,8 +260,8 @@ def percentile_drift(df: DataFrame, group_col: str, value_col: str,
     then measure the sketch against the exact ranks.
 
     * ``approx_value`` / ``rank_displacement`` use the HIGH-accuracy
-      sketch. While every group holds fewer than ``exact_accuracy``
-      values the GK summary never compresses and
+      sketch (accuracy 1,000,000). While every group holds fewer than
+      that many values the GK summary never compresses and
       ``approx_percentile`` is exact rank selection: the smallest v
       with count(<=v) >= ceil(p*n) — i.e. the sorted element at
       1-based rank ceil(p*n) (convention verified against the sorted
@@ -271,11 +269,11 @@ def percentile_drift(df: DataFrame, group_col: str, value_col: str,
       the sketch output fully value-checkable at test SF, and
       ``rank_displacement`` — how far the returned value's rank
       interval [count(<v)+1, count(<=v)] sits from the target rank —
-      is structurally 0. Past n = exact_accuracy per group this face's
+      is structurally 0. Past n = 1,000,000 per group this face's
       value oracle no longer applies (the gate contract, like
       dedup_eval_minhash's exact side).
     * ``sketch_within_bound`` audits the COMPRESSING sketch
-      (``sketch_accuracy``, the 100 TB configuration): GK guarantees
+      (``SKETCH_ACCURACY``, the 100 TB configuration): GK guarantees
       rank error <= n/accuracy deterministically under any merge
       order, so the boolean is a theorem — oracle TRUE — while the
       sketch's value stays engine-private. A Spark regression that
@@ -283,23 +281,23 @@ def percentile_drift(df: DataFrame, group_col: str, value_col: str,
 
     Scale shape: one grouped aggregate over the corpus (all three
     percentile families partial-aggregate map-side), then one
-    broadcast of the groups x |ps| probe table back over the corpus to
+    broadcast of the groups x |PERCENTILES| probe table back over the corpus to
     count ranks — two bounded-output passes, no corpus-scale shuffle
     and no per-group sort buffer outside the (bounded-cardinality)
     exact-percentile aggregate.
     """
-    ps_sql = "array(" + ",".join(f"{p!r}D" for p in ps) + ")"
+    ps_sql = "array(" + ",".join(f"{p!r}D" for p in PERCENTILES) + ")"
     agg = df.groupBy(group_col).agg(
         F.count("*").cast("long").alias("n"),
         F.expr(f"percentile({value_col}, {ps_sql})").alias("_ex"),
         F.expr(f"approx_percentile({value_col}, {ps_sql}, "
-               f"{exact_accuracy})").alias("_hi"),
+               "1000000)").alias("_hi"),
         F.expr(f"approx_percentile({value_col}, {ps_sql}, "
-               f"{sketch_accuracy})").alias("_lo"))
+               f"{SKETCH_ACCURACY})").alias("_lo"))
     probe = agg.select(
         group_col, "n",
         F.explode(F.arrays_zip(
-            F.array(*[F.lit(float(p)) for p in ps]).alias("p"),
+            F.array(*[F.lit(float(p)) for p in PERCENTILES]).alias("p"),
             F.col("_ex").alias("ex"), F.col("_hi").alias("hi"),
             F.col("_lo").alias("lo"))).alias("z")
     ).select(group_col, "n", F.col("z.p").alias("p"),
@@ -317,7 +315,7 @@ def percentile_drift(df: DataFrame, group_col: str, value_col: str,
                          F.lit(0)).cast("long")
     disp_lo = F.greatest(F.col("_lt_lo") + 1 - k, k - F.col("_le_lo"),
                          F.lit(0)).cast("long")
-    bound = (F.floor(F.col("n") / F.lit(sketch_accuracy)) + 1).cast("long")
+    bound = (F.floor(F.col("n") / F.lit(SKETCH_ACCURACY)) + 1).cast("long")
     return counted.select(
         group_col, "p", "n",
         F.round("_exact", 6).alias("exact_interp"),
@@ -562,8 +560,7 @@ def cohens_kappa(cells: DataFrame, label_col: str, pred_col: str,
                     kappa.alias("kappa")))
 
 
-def ab_uplift_report(df: DataFrame, arm_col: str, value_col: str,
-                     arm_a: str = "a", arm_b: str = "b") -> DataFrame:
+def ab_uplift_report(df: DataFrame, arm_col: str, value_col: str) -> DataFrame:
     """Two-sample A/B uplift report (E179) → one row ``(n_a, n_b,
     mean_a, mean_b, uplift, z_score)``.
 
@@ -590,7 +587,7 @@ def ab_uplift_report(df: DataFrame, arm_col: str, value_col: str,
                 F.sum(F.when(cond, x * x).otherwise(0)).cast("long")
                 .alias(f"_sxx_{tag}")]
 
-    agg = df.agg(*arm("a", arm_a), *arm("b", arm_b))
+    agg = df.agg(*arm("a", "a"), *arm("b", "b"))
     # an empty arm must report null means (0/0 would NaN), matching
     # the null-on-degenerate convention of z_score
     mean = {t: F.when(F.col(f"n_{t}") > 0,

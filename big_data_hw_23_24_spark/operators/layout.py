@@ -35,9 +35,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+AUDIT_BITS = 12  # bits per coordinate of the audited curve keys
+
 # (shift, mask) steps spreading a 32-bit int's bits to the even bit
 # positions of a 64-bit word. The DuckDB oracle embeds the SAME
-# constants (z_spread_steps is the spec both engines share).
+# constants (``z_value_sql`` generates its expression from them).
 _SPREAD_STEPS: tuple[tuple[int, int], ...] = (
     (16, 0x0000FFFF0000FFFF),
     (8, 0x00FF00FF00FF00FF),
@@ -45,12 +47,6 @@ _SPREAD_STEPS: tuple[tuple[int, int], ...] = (
     (2, 0x3333333333333333),
     (1, 0x5555555555555555),
 )
-
-
-def z_spread_steps() -> tuple[tuple[int, int], ...]:
-    """The (shift, mask) spread schedule — exposed so oracle SQL can be
-    generated from the same literals the Column expression uses."""
-    return _SPREAD_STEPS
 
 
 def _spread(col: Column) -> Column:
@@ -98,15 +94,13 @@ def z_value_sql(x_expr: str, y_expr: str, bits: int = 16) -> str:
 def layout_pruning_audit(df: DataFrame, cx_col: str, cy_col: str,
                          order_col: str,
                          probes: list[tuple[int, int, int, int, int]],
-                         n_files: int = 64,
-                         bits: int = 12,
                          include_hilbert: bool = False) -> DataFrame:
     """Data-skipping effectiveness audit (E156) → per (layout, probe):
     ``(layout, probe_id, n_files_hit, n_files, n_rows_match)``.
 
     The question every lakehouse layout decision hangs on — "how many
     files would this predicate actually scan" — MEASURED instead of
-    assumed: rows are assigned to ``n_files`` files under (a) the
+    assumed: rows are assigned to 64 files under (a) the
     insertion order (``order_col``) and (b) the Z-order key of
     (cx, cy); each file's min/max footer stats are computed per
     dimension, and each probe rectangle counts the files whose stat
@@ -127,7 +121,7 @@ def layout_pruning_audit(df: DataFrame, cx_col: str, cy_col: str,
     from .ranking import global_ntile
 
     spark = df.sparkSession
-    zv = z_value(F.col(cx_col), F.col(cy_col), bits=bits)
+    zv = z_value(F.col(cx_col), F.col(cy_col), bits=AUDIT_BITS)
     base = df.select(F.col(cx_col).alias("cx"), F.col(cy_col).alias("cy"),
                      F.col(order_col).alias("_o"), zv.alias("_z"))
     if include_hilbert:
@@ -141,7 +135,7 @@ def layout_pruning_audit(df: DataFrame, cx_col: str, cy_col: str,
         # checkpoint). Lazy: the first ntile spine's per-partition
         # collect is a sequential full scan that materializes base —
         # eager would prepend one more full base pass
-        base = with_hilbert(base, "cx", "cy", bits=bits,
+        base = with_hilbert(base, "cx", "cy", bits=AUDIT_BITS,
                             out_col="_h").localCheckpoint(eager=False)
         layouts = [
             ("zorder", [F.col("_z"), F.col("_o")]),
@@ -157,7 +151,7 @@ def layout_pruning_audit(df: DataFrame, cx_col: str, cy_col: str,
         "probe_id int, cx_lo long, cx_hi long, cy_lo long, cy_hi long"))
     stats = None
     for name, order in layouts:
-        filed = global_ntile(base, n_files, order, out_col="_f")
+        filed = global_ntile(base, 64, order, out_col="_f")
         st = (filed.groupBy("_f")
               .agg(F.min("cx").alias("min_cx"), F.max("cx").alias("max_cx"),
                    F.min("cy").alias("min_cy"), F.max("cy").alias("max_cy"))
@@ -223,7 +217,7 @@ def compaction_plan(files: DataFrame, size_col: str,
 # programmatically from the textbook xy2d rotate-and-flip algorithm
 # (suffix-signature DFA construction) and verified exhaustively against
 # it on a 64x64 grid in tests — the table IS the spec both engines
-# share, the same contract as z_spread_steps for the Morton key.
+# share, the same contract as _SPREAD_STEPS for the Morton key.
 HILBERT_TABLE: tuple[tuple[int, int, int], ...] = (
     (0, 0, 1), (1, 1, 0), (2, 3, 2), (3, 2, 0),
     (4, 0, 0), (5, 3, 3), (6, 1, 1), (7, 2, 1),

@@ -38,8 +38,7 @@ __all__ = ["blocked_fuzzy_pairs", "edit1_neighborhood_pairs",
 
 
 def blocked_fuzzy_pairs(df: DataFrame, entity_col: str, block: Column,
-                        max_dist: int = 2, max_block: int = 1000,
-                        id_col: str = "doc_id") -> DataFrame:
+                        max_dist: int = 2, max_block: int = 1000) -> DataFrame:
     """Blocked fuzzy linkage → ``(id_a, id_b, dist)`` for pairs in the
     same block with ``levenshtein(entity_a, entity_b) <= max_dist``.
 
@@ -63,7 +62,7 @@ def blocked_fuzzy_pairs(df: DataFrame, entity_col: str, block: Column,
     and returns −1 — filtered with the over-budget pairs. Together
     they make Σ block² a count of CHEAP comparisons.
     """
-    slim = df.select(F.col(id_col).alias("_id"),
+    slim = df.select(F.col("doc_id").alias("_id"),
                      F.col(entity_col).alias("_e"),
                      block.alias("_blk")).where(F.col("_blk").isNotNull())
     keep = (slim.groupBy("_blk").agg(F.count("*").alias("_n"))
@@ -81,11 +80,9 @@ def blocked_fuzzy_pairs(df: DataFrame, entity_col: str, block: Column,
             .where((F.col("dist") >= 0) & (F.col("dist") <= max_dist)))
 
 
-def sorted_neighborhood_pairs(df: DataFrame, entity_col: str,
-                              window: int = 3, max_dist: int = 2,
-                              id_col: str = "doc_id",
-                              num_partitions: int | None = None
-                              ) -> DataFrame:
+def sorted_neighborhood_pairs(df: DataFrame, entity_col: str, window: int = 3,
+                              max_dist: int = 2,
+                              num_partitions: int | None = None) -> DataFrame:
     """Sorted-neighborhood linkage → ``(id_a, id_b, rank_gap, dist)``:
     rank all rows by the entity string (id tiebreaker), compare each
     row only to the ``window`` rows following it in rank order, keep
@@ -108,7 +105,7 @@ def sorted_neighborhood_pairs(df: DataFrame, entity_col: str,
     """
     from .ranking import global_rank
 
-    slim = df.select(F.col(id_col).alias("_id"),
+    slim = df.select(F.col("doc_id").alias("_id"),
                      F.col(entity_col).alias("_e"))
     ranked = global_rank(slim, [F.col("_e"), F.col("_id")],
                          rank_col="_r", num_partitions=num_partitions)

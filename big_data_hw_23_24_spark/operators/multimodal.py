@@ -298,8 +298,7 @@ def synth_wav_media(docs: DataFrame) -> DataFrame:
         .otherwise(payload).alias("media"))
 
 
-def decode_wav(media: DataFrame, id_col: str = "media_id",
-               payload_col: str = "media") -> DataFrame:
+def decode_wav(media: DataFrame) -> DataFrame:
     """REAL audio decode over a binary column (E234) → one row per
     asset: ``(media_id, ok, sample_rate, n_channels, sample_width,
     n_frames, peak, rms, n_bytes)``.
@@ -349,7 +348,7 @@ def decode_wav(media: DataFrame, id_col: str = "media_id",
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
             out = {f.name: [] for f in schema.fields}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
+            for mid, payload in zip(batch["media_id"], batch["media"]):
                 # NULL payload = nothing to decode → quarantine, not a
                 # task-killing TypeError
                 raw = bytes(payload) if payload is not None else b""

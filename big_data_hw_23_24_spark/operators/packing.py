@@ -24,13 +24,12 @@ from pyspark.sql import functions as F
 
 
 def pack_sequences(docs: DataFrame, capacity: int = 256,
-                   shard_col: str = "source", text_col: str = "text",
-                   id_col: str = "doc_id",
+                   shard_col: str = "source",
                    length_col: str | None = None) -> DataFrame:
     """→ (shard, bin_id, doc_id, n_tokens_in_bin): which slice of each
     document lands in which fixed-``capacity`` context window.
 
-    Within a shard, documents are concatenated in ``id_col`` order;
+    Within a shard, documents are concatenated in ``doc_id`` order;
     token t of the concatenation lands in bin ⌊t/capacity⌋. A document
     spanning a bin boundary is split across consecutive bins (the
     trainer's document-boundary attention mask handles the rest — that
@@ -49,31 +48,29 @@ def pack_sequences(docs: DataFrame, capacity: int = 256,
     if length_col is not None:
         n = F.col(length_col).cast("long")
     else:
-        n = F.size(F.filter(F.split(F.col(text_col), " "),
+        n = F.size(F.filter(F.split(F.col("text"), " "),
                             lambda w: w != ""))
-    toks = (docs.select(F.col(shard_col).alias("shard"), F.col(id_col),
+    toks = (docs.select(F.col(shard_col).alias("shard"), F.col("doc_id"),
                         n.alias("n_tokens"))
             .where(F.col("n_tokens") > 0))
-    w = (Window.partitionBy("shard").orderBy(id_col)
+    w = (Window.partitionBy("shard").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     pos = toks.select(
-        "shard", id_col, "n_tokens",
+        "shard", "doc_id", "n_tokens",
         (F.sum("n_tokens").over(w) - F.col("n_tokens")).alias("off"))
     first_bin = F.floor(F.col("off") / capacity)
     last_bin = F.floor((F.col("off") + F.col("n_tokens") - 1) / capacity)
     spans = pos.select(
-        "shard", id_col, "n_tokens", "off",
+        "shard", "doc_id", "n_tokens", "off",
         F.explode(F.sequence(first_bin, last_bin)).alias("bin_id"))
     lo = F.greatest(F.col("bin_id") * capacity, F.col("off"))
     hi = F.least((F.col("bin_id") + 1) * capacity,
                  F.col("off") + F.col("n_tokens"))
-    return spans.select("shard", "bin_id", id_col,
+    return spans.select("shard", "bin_id", "doc_id",
                         (hi - lo).cast("long").alias("n_tokens_in_bin"))
 
 
-def length_batches(docs: DataFrame, batch_size: int = 32,
-                   text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def length_batches(docs: DataFrame, batch_size: int = 32) -> DataFrame:
     """Length-bucketed micro-batch assignment → (doc_id, n_tokens,
     batch_id, batch_max, pad_waste).
 
@@ -96,27 +93,24 @@ def length_batches(docs: DataFrame, batch_size: int = 32,
     """
     from .ranking import global_rank
 
-    words = F.filter(F.split(F.col(text_col), " "),
+    words = F.filter(F.split(F.col("text"), " "),
                      lambda w: w != F.lit(""))
-    t = docs.select(F.col(id_col),
+    t = docs.select(F.col("doc_id"),
                     F.size(words).cast("long").alias("n_tokens"))
-    ranked = global_rank(t, [F.col("n_tokens"), F.col(id_col)],
+    ranked = global_rank(t, [F.col("n_tokens"), F.col("doc_id")],
                          rank_col="_rn")
     b = ranked.withColumn(
         "batch_id", F.expr(f"(_rn - 1) div {int(batch_size)}"))
     w = Window.partitionBy("batch_id")
     return (b.select(
-        id_col, "n_tokens", "batch_id",
+        "doc_id", "n_tokens", "batch_id",
         F.max("n_tokens").over(w).alias("batch_max"))
         .withColumn("pad_waste",
                     (F.col("batch_max") - F.col("n_tokens")).cast("long")))
 
 
-def head_tail_truncate(docs: DataFrame, budget: int = 64,
-                       head: int = 48, tail: int = 15,
-                       marker: str = "...",
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def head_tail_truncate(docs: DataFrame, budget: int = 64, head: int = 48,
+                       tail: int = 15) -> DataFrame:
     """Head+tail context-window truncation (E181) → ``(doc_id,
     n_tokens, n_kept, truncated, fitted_text)``.
 
@@ -137,16 +131,16 @@ def head_tail_truncate(docs: DataFrame, budget: int = 64,
     if head + 1 + tail != budget:
         raise ValueError(f"head ({head}) + marker (1) + tail ({tail}) "
                          f"must equal budget ({budget})")
-    words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
+    words = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
     n = F.size(words)
     fitted = F.when(
         n > budget,
         F.array_join(F.concat(F.slice(words, 1, head),
-                              F.array(F.lit(marker)),
+                              F.array(F.lit("...")),
                               F.slice(words, -tail, tail)), " ")) \
-        .otherwise(F.col(text_col))
+        .otherwise(F.col("text"))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.cast("long").alias("n_tokens"),
         F.when(n > budget, F.lit(budget)).otherwise(n).cast("long")
         .alias("n_kept"),

@@ -35,6 +35,10 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+ROUND_TO = 6  # decimal places of every distance
+SAMPLE_SIZE = 10_000  # driver sample that trains the codebooks
+SAMPLE_SEED = 42  # seed of that sample and of each subspace k-means
+
 
 def _subvector_rows(df: DataFrame, m: int, vec_col: str,
                     id_col: str) -> DataFrame:
@@ -53,21 +57,18 @@ def _subvector_rows(df: DataFrame, m: int, vec_col: str,
             .select(F.col(id_col), F.inline(subs)))
 
 
-def fixed_codebooks(df: DataFrame, m: int, k: int,
-                    vec_col: str = "embedding",
-                    id_col: str = "vec_id") -> DataFrame:
+def fixed_codebooks(df: DataFrame, m: int, k: int) -> DataFrame:
     """Deterministic codebooks for the oracle faces: centroid ``c`` of
     subspace ``j`` is subvector ``j`` of the corpus vector with
     ``id == c`` (the fixed-centroid move of the Lloyd/IVF faces) →
     (j, centroid_id, cv)."""
-    return (_subvector_rows(df.where(F.col(id_col) < k), m, vec_col, id_col)
-            .select("j", F.col(id_col).cast("int").alias("centroid_id"),
+    return (_subvector_rows(df.where(F.col("vec_id") < k), m, "embedding",
+                            "vec_id")
+            .select("j", F.col("vec_id").cast("int").alias("centroid_id"),
                     F.col("sub").alias("cv")))
 
 
-def pq_encode(df: DataFrame, codebooks: DataFrame, m: int,
-              vec_col: str = "embedding", id_col: str = "vec_id",
-              round_to: int = 6) -> DataFrame:
+def pq_encode(df: DataFrame, codebooks: DataFrame, m: int) -> DataFrame:
     """Encode every vector → (id, j, code, dist_sq): the long-form PQ
     code table (one row per subspace; ``collect_list`` it back to an
     array at the sink if desired — the long form is what ADC joins
@@ -78,24 +79,23 @@ def pq_encode(df: DataFrame, codebooks: DataFrame, m: int,
     ties broken by centroid_id ascending in both this plan and the
     SQL oracle.
     """
-    ex = _subvector_rows(df, m, vec_col, id_col)
+    ex = _subvector_rows(df, m, "embedding", "vec_id")
     dist = F.aggregate(
         F.zip_with("sub", "cv", lambda x, y: (x - y) * (x - y)),
         F.lit(0.0), lambda acc, x: acc + x)
     return (ex.join(F.broadcast(codebooks), "j")
-            .select(F.col(id_col), "j",
+            .select(F.col("vec_id"), "j",
                     F.struct(dist.alias("d"),
                              F.col("centroid_id").alias("cid")).alias("s"))
-            .groupBy(id_col, "j").agg(F.min("s").alias("b"))
-            .select(F.col(id_col), "j",
+            .groupBy("vec_id", "j").agg(F.min("s").alias("b"))
+            .select(F.col("vec_id"), "j",
                     F.col("b.cid").alias("code"),
-                    F.round(F.col("b.d"), round_to).alias("dist_sq")))
+                    F.round(F.col("b.d"), ROUND_TO).alias("dist_sq")))
 
 
-def pq_adc_topk(codes: DataFrame, queries: DataFrame,
-                codebooks: DataFrame, m: int, k_top: int = 10,
-                vec_col: str = "embedding", id_col: str = "vec_id",
-                round_to: int = 6, exclude_self: bool = False) -> DataFrame:
+def pq_adc_topk(codes: DataFrame, queries: DataFrame, codebooks: DataFrame,
+                m: int, k_top: int = 10,
+                exclude_self: bool = False) -> DataFrame:
     """Asymmetric-distance top-k → (query_id, neighbor_id, adist,
     rank): for each query, the ``k_top`` corpus vectors with the
     smallest LUT-approximated squared L2 distance.
@@ -107,18 +107,18 @@ def pq_adc_topk(codes: DataFrame, queries: DataFrame,
     are rounded before summing so cross-engine float summation order
     cannot flip ranks; ties broken by neighbor id.
     """
-    lut = (_subvector_rows(queries, m, vec_col, id_col)
-           .withColumnRenamed(id_col, "query_id")
+    lut = (_subvector_rows(queries, m, "embedding", "vec_id")
+           .withColumnRenamed("vec_id", "query_id")
            .join(codebooks, "j")
            .select("query_id", "j", F.col("centroid_id").alias("code"),
                    F.round(F.aggregate(
                        F.zip_with("sub", "cv",
                                   lambda x, y: (x - y) * (x - y)),
                        F.lit(0.0), lambda acc, x: acc + x),
-                       round_to).alias("d")))
+                       ROUND_TO).alias("d")))
     scored = (codes.join(F.broadcast(lut), ["j", "code"])
-              .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-              .agg(F.round(F.sum("d"), round_to).alias("adist")))
+              .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+              .agg(F.round(F.sum("d"), ROUND_TO).alias("adist")))
     if exclude_self:  # before ranking, so rank k really is the k-th other
         scored = scored.where(F.col("neighbor_id") != F.col("query_id"))
     w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
@@ -126,11 +126,9 @@ def pq_adc_topk(codes: DataFrame, queries: DataFrame,
             .where(F.col("rank") <= k_top))
 
 
-def pq_rerank_topk(corpus: DataFrame, codes: DataFrame,
-                   queries: DataFrame, codebooks: DataFrame, m: int,
-                   k_top: int = 10, fetch: int = 40,
-                   vec_col: str = "embedding", id_col: str = "vec_id",
-                   round_to: int = 6) -> DataFrame:
+def pq_rerank_topk(corpus: DataFrame, codes: DataFrame, queries: DataFrame,
+                   codebooks: DataFrame, m: int, k_top: int = 10,
+                   fetch: int = 40) -> DataFrame:
     """The full production PQ search path → (query_id, neighbor_id,
     dist_sq, rank): ADC over the code table produces a ``fetch``-deep
     shortlist (code-bytes scan only), then EXACT squared-L2 reranks
@@ -143,28 +141,25 @@ def pq_rerank_topk(corpus: DataFrame, codes: DataFrame,
     broken by neighbor id, so results are engine-stable end to end.
     """
     short = pq_adc_topk(codes, queries, codebooks, m, k_top=fetch,
-                        exclude_self=True,
-                        vec_col=vec_col, id_col=id_col) \
+                        exclude_self=True) \
         .select("query_id", "neighbor_id")
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("qv"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).cast("array<double>").alias("nv"))
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").cast("array<double>").alias("qv"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"),
+                      F.col("embedding").cast("array<double>").alias("nv"))
     dist = F.aggregate(
         F.zip_with("qv", "nv", lambda x, y: (x - y) * (x - y)),
         F.lit(0.0), lambda acc, x: acc + x)
     w = Window.partitionBy("query_id").orderBy("dist_sq", "neighbor_id")
     return (short.join(F.broadcast(q), "query_id").join(c, "neighbor_id")
             .select("query_id", "neighbor_id",
-                    F.round(dist, round_to).alias("dist_sq"))
+                    F.round(dist, ROUND_TO).alias("dist_sq"))
             .withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k_top))
 
 
 def pq_bucket_pairs(df: DataFrame, codebooks: DataFrame, m: int,
-                    threshold: float = 0.95,
-                    vec_col: str = "embedding", id_col: str = "vec_id",
-                    round_to: int = 6) -> DataFrame:
+                    threshold: float = 0.95) -> DataFrame:
     """Embedding duplicate pairs via PQ-code buckets → (id_a, id_b,
     cosine): vectors whose FULL m-code tuples coincide get an exact
     cosine verification — SemDeDup's cluster-then-verify shape with PQ
@@ -187,33 +182,31 @@ def pq_bucket_pairs(df: DataFrame, codebooks: DataFrame, m: int,
     inside buckets, whose sizes are the PQ cell occupancies. Pairs
     emitted once with ``id_a < id_b``.
     """
-    enc = pq_encode(df, codebooks, m, vec_col=vec_col, id_col=id_col)
-    keys = (enc.groupBy(id_col)
+    enc = pq_encode(df, codebooks, m)
+    keys = (enc.groupBy("vec_id")
             .agg(F.concat_ws("-", F.transform(
                 F.sort_array(F.collect_list(F.struct("j", "code"))),
                 lambda s: s.code.cast("string"))).alias("bucket")))
-    vecs = df.select(F.col(id_col),
-                     F.col(vec_col).cast("array<double>").alias("v"))
-    side = keys.join(vecs, id_col)
-    a = side.select(F.col(id_col).alias("id_a"), "bucket",
+    vecs = df.select(F.col("vec_id"),
+                     F.col("embedding").cast("array<double>").alias("v"))
+    side = keys.join(vecs, "vec_id")
+    a = side.select(F.col("vec_id").alias("id_a"), "bucket",
                     F.col("v").alias("va"))
-    b = side.select(F.col(id_col).alias("id_b"), "bucket",
+    b = side.select(F.col("vec_id").alias("id_b"), "bucket",
                     F.col("v").alias("vb"))
     dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y),
                       F.lit(0.0), lambda acc, x: acc + x)
     norm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
         F.zip_with(c, c, lambda x, y: x * y),
         F.lit(0.0), lambda acc, x: acc + x))
-    cos = F.round(dot / (norm("va") * norm("vb")), round_to)
+    cos = F.round(dot / (norm("va") * norm("vb")), ROUND_TO)
     return (a.join(b, "bucket")
             .where(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b", cos.alias("cosine"))
             .where(F.col("cosine") >= threshold))
 
 
-def pq_train(df: DataFrame, m: int, k: int,
-             vec_col: str = "embedding", id_col: str = "vec_id",
-             sample_size: int = 10_000, seed: int = 42) -> DataFrame:
+def pq_train(df: DataFrame, m: int, k: int) -> DataFrame:
     """Train per-subspace codebooks on a bounded seeded driver sample
     (the FAISS recipe; the sample bound is the L·K-coreset driver-state
     contract) → (j, centroid_id, cv) ready for ``pq_encode``.
@@ -223,15 +216,16 @@ def pq_train(df: DataFrame, m: int, k: int,
     """
     from .similarity import _kmeans_lite
 
-    vecs = df.select(F.col(vec_col).cast("array<double>").alias("v")) \
+    vecs = df.select(
+        F.col("embedding").cast("array<double>").alias("v")) \
         .where(F.col("v").isNotNull())
     n = vecs.count()
     if n == 0:
         raise ValueError("pq_train: no non-null vectors")
-    frac = min(1.0, (sample_size * 1.25) / max(n, 1))
+    frac = min(1.0, (SAMPLE_SIZE * 1.25) / max(n, 1))
     sample = np.array(
-        [r.v for r in vecs.sample(fraction=frac, seed=seed)
-         .limit(sample_size).collect()], dtype=np.float64)
+        [r.v for r in vecs.sample(fraction=frac, seed=SAMPLE_SEED)
+         .limit(SAMPLE_SIZE).collect()], dtype=np.float64)
     d = sample.shape[1]
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -239,7 +233,7 @@ def pq_train(df: DataFrame, m: int, k: int,
     rows = []
     for j in range(m):
         cents = _kmeans_lite(sample[:, j * sub:(j + 1) * sub], k,
-                             seed=seed + j)
+                             seed=SAMPLE_SEED + j)
         rows += [(j, c, [float(x) for x in cents[c]])
                  for c in range(len(cents))]
     return df.sparkSession.createDataFrame(

@@ -36,14 +36,18 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+BM25_K1 = 1.2  # BM25 term-frequency saturation
+BM25_B = 0.75  # BM25 length normalization
+QL_MU = 300.0  # Dirichlet prior of the query likelihood
+SPAN_START = 6  # first word of each origin-eval query span
+SPAN_LEN = 8  # words per origin-eval query span
+
 __all__ = ["bm25_topk", "bm25_oracle_sql", "bm25_search_many",
            "rerank_features", "build_query_index", "ql_search_many",
            "rrf_fuse"]
 
 
-def build_query_index(docs: DataFrame, queries: DataFrame,
-                      text_col: str = "text",
-                      id_col: str = "doc_id"):
+def build_query_index(docs: DataFrame, queries: DataFrame):
     """The pruned inverted index every lexical retriever here consumes:
     ``(postings, stats, qterms)`` with postings = (id, term, tf, dl)
     restricted to query terms, stats = a 1-row LITERAL (n, sumdl)
@@ -73,7 +77,7 @@ def build_query_index(docs: DataFrame, queries: DataFrame,
     """
     from .util import lowered_words
 
-    words = lowered_words(text_col)
+    words = lowered_words("text")
     qterms = (queries.select("qid", F.explode("terms").alias("term"))
               .select("qid", F.lower("term").alias("term"))
               .distinct())
@@ -82,7 +86,7 @@ def build_query_index(docs: DataFrame, queries: DataFrame,
     members = (F.array(*[F.lit(t) for t in term_list]) if term_list
                else F.array().cast("array<string>"))
     narrow = (docs.select(
-        F.col(id_col), F.size(words).alias("dl"),
+        F.col("doc_id"), F.size(words).alias("dl"),
         F.filter(words,
                  lambda w: F.array_contains(members, w)).alias("_m"))
         .localCheckpoint(eager=False))
@@ -93,22 +97,19 @@ def build_query_index(docs: DataFrame, queries: DataFrame,
         F.lit(srow["_sumdl"] if srow["_sumdl"] is not None else 0)
         .cast("long").alias("_sumdl"))
     postings = (narrow.select(
-        F.col(id_col), "dl",
+        F.col("doc_id"), "dl",
         F.explode(F.transform(
             F.array_distinct("_m"),
             lambda t: F.struct(
                 t.alias("term"),
                 F.size(F.filter("_m", lambda w: w == t))
                 .cast("long").alias("tf")))).alias("_p"))
-        .select(F.col(id_col), F.col("_p.term").alias("term"),
+        .select(F.col("doc_id"), F.col("_p.term").alias("term"),
                 F.col("_p.tf").alias("tf"), "dl"))
     return postings, stats, qterms
 
 
-def bm25_topk(docs: DataFrame, terms: list[str], k: int = 20,
-              k1: float = 1.2, b: float = 0.75,
-              text_col: str = "text",
-              id_col: str = "doc_id") -> DataFrame:
+def bm25_topk(docs: DataFrame, terms: list[str], k: int = 20) -> DataFrame:
     """Top-``k`` documents for a bag-of-words query by BM25.
 
     Returns ``(doc_id, dl, tf_<i> per term, score, rank)`` ordered by
@@ -123,14 +124,14 @@ def bm25_topk(docs: DataFrame, terms: list[str], k: int = 20,
 
     from .util import lowered_words
 
-    words = lowered_words(text_col)
+    words = lowered_words("text")
 
     def tf(term: str):  # single-param lambda: F.filter passes the
         return F.size(  # element only (2 params would mean (x, i))
             F.filter(words, lambda w: w == F.lit(term)))
 
     per_doc = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(words).alias("dl"),
         *[tf(t).alias(f"tf_{i}") for i, t in enumerate(lowered)],
     )
@@ -144,34 +145,34 @@ def bm25_topk(docs: DataFrame, terms: list[str], k: int = 20,
 
     scored = per_doc.crossJoin(F.broadcast(stats))
     avgdl = F.col("_sumdl") / F.col("_n")
-    denom_norm = F.lit(k1) * (F.lit(1 - b) + F.lit(b) * F.col("dl") / avgdl)
+    denom_norm = F.lit(BM25_K1) * (F.lit(1 - BM25_B)
+                                   + F.lit(BM25_B) * F.col("dl") / avgdl)
     contrib = [
         F.log(F.lit(1.0)
               + (F.col("_n") - F.col(f"_df_{i}") + F.lit(0.5))
               / (F.col(f"_df_{i}") + F.lit(0.5)))
-        * (F.col(f"tf_{i}") * F.lit(k1 + 1))
+        * (F.col(f"tf_{i}") * F.lit(BM25_K1 + 1))
         / (F.col(f"tf_{i}") + denom_norm)
         for i in range(len(lowered))
     ]
     score = sum(contrib[1:], contrib[0])
     scored = scored.select(
-        F.col(id_col), F.col("dl"),
+        F.col("doc_id"), F.col("dl"),
         *[F.col(f"tf_{i}") for i in range(len(lowered))],
         F.round(score, 6).alias("score"),
     ).where(sum((F.col(f"tf_{i}") for i in range(1, len(lowered))),
                 F.col("tf_0")) > 0)
 
-    top = (scored.orderBy(F.col("score").desc(), F.col(id_col))
+    top = (scored.orderBy(F.col("score").desc(), F.col("doc_id"))
            .limit(k))
     # rank is positional in the deterministic (score desc, id) order;
     # the partitionless window is bounded by the LIMIT k rows above it
     # (same class as the vocab-scale allowlist, never corpus-scale)
-    w = Window.orderBy(F.col("score").desc(), F.col(id_col))
+    w = Window.orderBy(F.col("score").desc(), F.col("doc_id"))
     return top.withColumn("rank", F.row_number().over(w))
 
 
-def bm25_oracle_sql(terms: list[str], k: int = 20,
-                    k1: float = 1.2, b: float = 0.75) -> str:
+def bm25_oracle_sql(terms: list[str], k: int = 20) -> str:
     """The DuckDB mirror of :func:`bm25_topk` over the ``documents``
     view — generated from the same term list so Spark and oracle can
     never drift on the unrolled per-term expressions."""
@@ -186,13 +187,13 @@ def bm25_oracle_sql(terms: list[str], k: int = 20,
         for i in range(len(lowered)))
     contribs = " + ".join(
         f"(ln(1.0 + (s._n - s.df_{i} + 0.5) / (s.df_{i} + 0.5))"
-        f" * (p.tf_{i} * {k1 + 1!r})"
-        f" / (p.tf_{i} + {k1!r} * ({1 - b!r} + {b!r} * p.dl"
+        f" * (p.tf_{i} * {BM25_K1 + 1!r})"
+        f" / (p.tf_{i} + {BM25_K1!r} * ({1 - BM25_B!r} + {BM25_B!r} * p.dl"
         f" / (s._sumdl * 1.0 / s._n))))"
         for i in range(len(lowered)))
     any_tf = " + ".join(f"p.tf_{i}" for i in range(len(lowered)))
     tf_cols = ", ".join(f"p.tf_{i}" for i in range(len(lowered)))
-    assert math.isfinite(k1) and math.isfinite(b)
+    assert math.isfinite(BM25_K1) and math.isfinite(BM25_B)
     return f"""
     WITH p AS (
       SELECT doc_id, len(words) AS dl,
@@ -222,9 +223,6 @@ def bm25_oracle_sql(terms: list[str], k: int = 20,
 
 
 def bm25_search_many(docs: DataFrame, queries: DataFrame, k: int = 20,
-                     k1: float = 1.2, b: float = 0.75,
-                     text_col: str = "text",
-                     id_col: str = "doc_id",
                      index=None) -> DataFrame:
     """Batch BM25: top-``k`` documents PER QUERY for a whole query
     table → ``(qid, doc_id, n_hits, score, rank)``.
@@ -260,7 +258,7 @@ def bm25_search_many(docs: DataFrame, queries: DataFrame, k: int = 20,
         # TWO corpus tokenize passes — the pruned-postings pin and a
         # separate (n, sumdl) aggregate; build_query_index does one
         index = build_query_index(
-            docs, queries, text_col=text_col, id_col=id_col)
+            docs, queries)
     postings, stats, qterms = index
     df_q = postings.groupBy("term").agg(F.count("*").alias("_df"))
 
@@ -271,23 +269,22 @@ def bm25_search_many(docs: DataFrame, queries: DataFrame, k: int = 20,
     avgdl = F.col("_sumdl") / F.col("_n")
     idf = F.log(F.lit(1.0) + (F.col("_n") - F.col("_df") + F.lit(0.5))
                 / (F.col("_df") + F.lit(0.5)))
-    contrib = (idf * F.col("tf") * F.lit(k1 + 1)
-               / (F.col("tf") + F.lit(k1)
-                  * (F.lit(1 - b) + F.lit(b) * F.col("dl") / avgdl)))
-    scored = (hits.groupBy("qid", id_col)
+    contrib = (idf * F.col("tf") * F.lit(BM25_K1 + 1)
+               / (F.col("tf") + F.lit(BM25_K1)
+                  * (F.lit(1 - BM25_B)
+                     + F.lit(BM25_B) * F.col("dl") / avgdl)))
+    scored = (hits.groupBy("qid", "doc_id")
               .agg(F.count("*").cast("long").alias("n_hits"),
                    F.round(F.sum(contrib), 6).alias("score")))
 
     from .grouped import grouped_topk
 
     return grouped_topk(scored, ["qid"],
-                        [F.col("score").desc(), F.col(id_col)], k)
+                        [F.col("score").desc(), F.col("doc_id")], k)
 
 
-def rerank_features(docs: DataFrame, queries: DataFrame, k: int = 20,
-                    k1: float = 1.2, b: float = 0.75,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def rerank_features(docs: DataFrame, queries: DataFrame,
+                    k: int = 20) -> DataFrame:
     """Feature assembly for a learned reranker over the BM25 shortlist
     → ``(qid, doc_id, rank, score, n_terms, n_hits, overlap_frac, dl,
     tf_total, density, first_pos)``.
@@ -314,7 +311,7 @@ def rerank_features(docs: DataFrame, queries: DataFrame, k: int = 20,
     """
     from .util import lowered_words
 
-    short = bm25_search_many(docs, queries, k, k1, b, text_col, id_col)
+    short = bm25_search_many(docs, queries, k)
     qn = queries.select(
         "qid",
         F.array_distinct(F.transform("terms", F.lower)).alias("_terms"))
@@ -337,12 +334,12 @@ def rerank_features(docs: DataFrame, queries: DataFrame, k: int = 20,
     # isolation while keeping the deferred-tokenization win (the
     # expensive lowered_words still evaluates only on the shortlist,
     # after the broadcast hash probe drops non-shortlisted rows)
-    return (docs.select(F.col(id_col), F.col(text_col))
-            .join(F.broadcast(short), id_col)
+    return (docs.select(F.col("doc_id"), F.col("text"))
+            .join(F.broadcast(short), "doc_id")
             .join(F.broadcast(qn), "qid")
-            .select("qid", F.col(id_col), "rank", "score", "n_hits",
-                    "_terms", lowered_words(text_col).alias("_w"))
-            .select("qid", id_col, "rank", "score",
+            .select("qid", F.col("doc_id"), "rank", "score", "n_hits",
+                    "_terms", lowered_words("text").alias("_w"))
+            .select("qid", "doc_id", "rank", "score",
                     F.size("_terms").cast("long").alias("n_terms"),
                     "n_hits",
                     F.round(F.col("n_hits") / F.size("_terms"), 6)
@@ -354,8 +351,7 @@ def rerank_features(docs: DataFrame, queries: DataFrame, k: int = 20,
 
 
 def ql_search_many(docs: DataFrame, queries: DataFrame, k: int = 20,
-                   mu: float = 300.0, text_col: str = "text",
-                   id_col: str = "doc_id", index=None) -> DataFrame:
+                   index=None) -> DataFrame:
     """Batch Dirichlet-smoothed query-likelihood retrieval (E150) →
     top-``k`` docs per query, ``(qid, doc_id, n_hits, score, rank)``.
 
@@ -383,8 +379,7 @@ def ql_search_many(docs: DataFrame, queries: DataFrame, k: int = 20,
     if index is not None:
         postings, stats, qterms = index
     else:
-        postings, stats, qterms = build_query_index(
-            docs, queries, text_col=text_col, id_col=id_col)
+        postings, stats, qterms = build_query_index(docs, queries)
     tot = stats.select(F.col("_sumdl").cast("double").alias("_T"))
     cf = (postings.groupBy("term")
           .agg(F.sum("tf").cast("double").alias("_cf")))
@@ -393,36 +388,35 @@ def ql_search_many(docs: DataFrame, queries: DataFrame, k: int = 20,
               .crossJoin(F.broadcast(tot))
               .groupBy("qid")
               .agg(F.count("*").alias("_nq"),
-                   F.sum(F.log(F.lit(mu) * F.col("_cf") / F.col("_T")))
+                   F.sum(F.log(F.lit(QL_MU) * F.col("_cf") / F.col("_T")))
                    .alias("_qc")))
     hit = F.log(F.lit(1.0) + F.col("tf") * F.col("_T")
-                / (F.lit(mu) * F.col("_cf")))
+                / (F.lit(QL_MU) * F.col("_cf")))
     scored = (postings
               .join(F.broadcast(qterms), "term")
               .join(F.broadcast(cf), "term")
               .crossJoin(F.broadcast(tot))
-              .groupBy("qid", id_col)
+              .groupBy("qid", "doc_id")
               .agg(F.count("*").cast("long").alias("n_hits"),
                    F.sum(hit).alias("_hits"),
                    F.first("dl").alias("_dl"))
               .join(F.broadcast(qconst), "qid")
-              .select("qid", id_col, "n_hits",
+              .select("qid", "doc_id", "n_hits",
                       F.round(F.col("_qc") + F.col("_hits")
                               - F.col("_nq")
-                              * F.log(F.col("_dl") + F.lit(mu)), 6)
+                              * F.log(F.col("_dl") + F.lit(QL_MU)), 6)
                       .alias("score")))
     return grouped_topk(scored, ["qid"],
-                        [F.col("score").desc(), F.col(id_col)], k)
+                        [F.col("score").desc(), F.col("doc_id")], k)
 
 
-def rrf_fuse(*ranked: DataFrame, k: int = 10, rrf_k: int = 60,
-             id_col: str = "doc_id") -> DataFrame:
+def rrf_fuse(*ranked: DataFrame, k: int = 10) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009) of per-query ranked
     lists → ``(qid, doc_id, rrf, rank)`` plus one ``rank_i`` column per
     input list (−1 where the doc missed that list).
 
     THE standard hybrid-retrieval combiner (lexical + semantic, or any
-    mix): rrf = Σ_lists 1/(rrf_k + rank_list), needing only ranks — no
+    mix): rrf = Σ_lists 1/(60 + rank_list), needing only ranks — no
     score calibration across retrievers. Shuffle-light by
     construction: the inputs are already k-row-per-query shortlists,
     so the fusion is a full-outer join of bounded lists keyed on
@@ -433,26 +427,24 @@ def rrf_fuse(*ranked: DataFrame, k: int = 10, rrf_k: int = 60,
 
     from .grouped import grouped_topk
 
-    slim = [r.select("qid", id_col,
+    slim = [r.select("qid", "doc_id",
                      F.col("rank").alias(f"_r{i}"))
             for i, r in enumerate(ranked)]
-    joined = reduce(lambda a, b: a.join(b, ["qid", id_col], "full_outer"),
-                    slim)
+    joined = reduce(
+        lambda a, b: a.join(b, ["qid", "doc_id"], "full_outer"), slim)
     rrf = sum((F.when(F.col(f"_r{i}").isNotNull(),
-                      F.lit(1.0) / (F.lit(rrf_k) + F.col(f"_r{i}")))
+                      F.lit(1.0) / (F.lit(60) + F.col(f"_r{i}")))
                .otherwise(F.lit(0.0)) for i in range(len(slim))),
               start=F.lit(0.0))
     out = joined.select(
-        "qid", id_col, F.round(rrf, 6).alias("rrf"),
+        "qid", "doc_id", F.round(rrf, 6).alias("rrf"),
         *[F.coalesce(F.col(f"_r{i}"), F.lit(-1)).cast("int")
           .alias(f"rank_{i}") for i in range(len(slim))])
-    return grouped_topk(out, ["qid"], [F.col("rrf").desc(), F.col(id_col)],
-                        k)
+    return grouped_topk(out, ["qid"],
+                        [F.col("rrf").desc(), F.col("doc_id")], k)
 
 
-def phrase_search(docs: DataFrame, phrases: list[str],
-                  text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+def phrase_search(docs: DataFrame, phrases: list[str]) -> DataFrame:
     """Exact word-level phrase search via a POSITIONAL index (E178) →
     ``(phrase, doc_id, n_occurrences)`` for documents containing the
     phrase as consecutive words.
@@ -479,8 +471,8 @@ def phrase_search(docs: DataFrame, phrases: list[str],
     if not words or any(len(w) < 1 for w in words):
         raise ValueError("phrases must be non-empty strings")
     vocab = sorted({w for ws in words for w in ws})
-    tok = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
-    post = (docs.select(F.col(id_col).alias("_d"),
+    tok = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    post = (docs.select(F.col("doc_id").alias("_d"),
                         F.posexplode(tok).alias("_p", "_w"))
             .where(F.col("_w").isin(vocab))
             .localCheckpoint(eager=True))
@@ -495,14 +487,12 @@ def phrase_search(docs: DataFrame, phrases: list[str],
         outs.append(cur.groupBy("_d").agg(
             F.count("*").cast("long").alias("n_occurrences"))
             .select(F.lit(phrase).alias("phrase"),
-                    F.col("_d").alias(id_col), "n_occurrences"))
+                    F.col("_d").alias("doc_id"), "n_occurrences"))
     return reduce(lambda a, b: a.unionByName(b), outs)
 
 
 def origin_retrieval_eval(docs: DataFrame, k: int = 10, every: int = 17,
-                          offset: int = 3, span_start: int = 6,
-                          span_len: int = 8, text_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
+                          offset: int = 3) -> DataFrame:
     """Passage-origin retrieval eval (E207) → ONE row ``(n_queries,
     n_found, recall_at_k, mrr_ppm)``.
 
@@ -511,7 +501,7 @@ def origin_retrieval_eval(docs: DataFrame, k: int = 10, every: int = 17,
     document it came from IS the relevant answer — if BM25 cannot
     retrieve a passage's own source, it will not retrieve anything
     harder. Queries are deterministic (every ``every``-th doc by id,
-    words ``span_start..span_start+span_len-1`` of its token stream,
+    words ``SPAN_START..SPAN_START+SPAN_LEN-1`` of its token stream,
     de-duplicated — repeated terms would double-count in the OR-
     semantics scorer), so the eval is reproducible and the oracle can
     generate the identical query set.
@@ -528,19 +518,18 @@ def origin_retrieval_eval(docs: DataFrame, k: int = 10, every: int = 17,
     query table here is a 1/``every`` sample of doc ids, generated
     in-plan (no driver materialization).
     """
-    words = F.filter(F.split(F.lower(F.col(text_col)), " "),
+    words = F.filter(F.split(F.lower(F.col("text")), " "),
                      lambda w: w != "")
-    base = docs.select(F.col(id_col), words.alias("_w"))
+    base = docs.select(F.col("doc_id"), words.alias("_w"))
     queries = (base
-               .where((F.col(id_col) % every == offset)
-                      & (F.size("_w") >= span_start + span_len - 1))
-               .select(F.col(id_col).alias("qid"),
+               .where((F.col("doc_id") % every == offset)
+                      & (F.size("_w") >= SPAN_START + SPAN_LEN - 1))
+               .select(F.col("doc_id").alias("qid"),
                        F.array_distinct(
-                           F.slice("_w", span_start, span_len))
+                           F.slice("_w", SPAN_START, SPAN_LEN))
                        .alias("terms")))
-    hits = bm25_search_many(docs, queries, k=k, text_col=text_col,
-                            id_col=id_col)
-    origin = (hits.where(F.col("qid") == F.col(id_col))
+    hits = bm25_search_many(docs, queries, k=k)
+    origin = (hits.where(F.col("qid") == F.col("doc_id"))
               .select("qid", "rank"))
     per_q = (queries.select("qid")
              .join(origin, "qid", "left")

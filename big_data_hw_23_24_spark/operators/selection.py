@@ -40,15 +40,16 @@ from pyspark.sql import functions as F
 
 from .ranking import global_cumsum
 
+PRIORITY_HASH_CHARS = 12  # md5 hex digits behind each priority draw
+
 
 def stratified_sample(df: DataFrame, strata_cols: list[str], k: int,
-                      key: Column | str,
-                      rank_col: str = "sample_rank") -> DataFrame:
+                      key: Column | str) -> DataFrame:
     """Exactly ``min(k, |stratum|)`` rows per stratum, chosen by md5
     order of ``key`` — deterministic across runs, partitionings and
     engines. ``key`` must be unique per row (it is the tiebreak).
 
-    Adds ``rank_col`` (1-based within the stratum, in the same md5
+    Adds ``sample_rank`` (1-based within the stratum, in the same md5
     order) so callers can take nested subsamples (rank ≤ j for j < k)
     that are prefix-consistent with the full sample.
     """
@@ -60,7 +61,7 @@ def stratified_sample(df: DataFrame, strata_cols: list[str], k: int,
     h = F.md5(key.cast("string"))
     return grouped_topk(df.withColumn("_h", h), strata_cols,
                         [F.col("_h"), key], k,
-                        rank_col=rank_col).drop("_h")
+                        rank_col="sample_rank").drop("_h")
 
 
 def quality_budget(df: DataFrame, order_by: list[Column | str],
@@ -86,10 +87,8 @@ def quality_budget(df: DataFrame, order_by: list[Column | str],
     return cum.where(F.col(cum_col) <= budget)
 
 
-def token_shards(df: DataFrame, order_by: list[Column | str],
-                 size_col: str, target: int,
-                 shard_col: str = "shard",
-                 cum_col: str = "cum_size") -> DataFrame:
+def token_shards(df: DataFrame, order_by: list[Column | str], size_col: str,
+                 target: int, cum_col: str = "cum_size") -> DataFrame:
     """Assign rows to ~``target``-sized shards in ``order_by`` order —
     equal-WORK output shards (by token/byte count, not row count),
     the layout a training run actually wants: every data-parallel
@@ -108,15 +107,13 @@ def token_shards(df: DataFrame, order_by: list[Column | str],
         raise ValueError(f"target must be positive, got {target}")
     cum = global_cumsum(df, order_by, size_col, out_col=cum_col)
     return cum.withColumn(
-        shard_col,
+        "shard",
         F.floor((F.col(cum_col) - F.col(size_col)) / target)
         .cast("bigint"))
 
 
-def dsir_importance(docs: DataFrame, is_target: Column,
-                    bucket_chars: int = 3, eps: float = 1e-6,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def dsir_importance(docs: DataFrame, is_target: Column, bucket_chars: int = 3,
+                    eps: float = 1e-6) -> DataFrame:
     """DSIR-style importance weights → ``(doc_id, n_feats, weight)``.
 
     Data Selection via Importance Resampling (Xie et al., NeurIPS
@@ -155,7 +152,7 @@ def dsir_importance(docs: DataFrame, is_target: Column,
     # textstats._ngram_pairs at n=2)
     from .dedup import _shifted_gram_zip
 
-    words = lowered_words(text_col)
+    words = lowered_words("text")
     grams = F.when(
         F.size(words) >= 2,
         F.transform(_shifted_gram_zip(words, 2),
@@ -172,12 +169,12 @@ def dsir_importance(docs: DataFrame, is_target: Column,
     # once (the doc_boilerplate_share pattern) instead of scanning
     # and shuffling the corpus twice
     feats = (ensure_fanout(docs)
-             .select(F.col(id_col), is_target.alias("_t"),
+             .select(F.col("doc_id"), is_target.alias("_t"),
                      F.explode(grams).alias("_g"))
-             .select(id_col, "_t",
+             .select("doc_id", "_t",
                      F.substring(F.md5(F.col("_g")), 1, bucket_chars)
                      .alias("_b"))
-             .groupBy(id_col, "_t", "_b")
+             .groupBy("doc_id", "_t", "_b")
              .agg(F.count("*").alias("_c"))
              .localCheckpoint(eager=True))
 
@@ -201,26 +198,23 @@ def dsir_importance(docs: DataFrame, is_target: Column,
                       .alias("_lr")))
 
     per_doc = (feats.join(F.broadcast(lr_tbl), "_b")
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.sum("_c").cast("long").alias("n_feats"),
                     F.sum(F.col("_c") * F.col("_lr")).alias("_wsum")))
-    return (docs.select(id_col).join(per_doc, id_col, "left")
-            .select(F.col(id_col),
+    return (docs.select("doc_id").join(per_doc, "doc_id", "left")
+            .select(F.col("doc_id"),
                     F.coalesce("n_feats", F.lit(0)).cast("long")
                     .alias("n_feats"),
                     F.coalesce(F.round(F.col("_wsum") / F.col("n_feats"),
                                        6), F.lit(0.0)).alias("weight")))
 
 
-def lm_quality_buckets(docs: DataFrame, head_pct: int = 30,
-                       middle_pct: int = 70, lang_col: str = "lang",
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def lm_quality_buckets(docs: DataFrame) -> DataFrame:
     """CCNet-style per-language LM-quality buckets -> (doc_id, lang,
     avg_neg_logprob, lang_rank, bucket): rank documents WITHIN each
     language by the unigram-LM perplexity proxy (low = fluent) and cut
-    into head / middle / tail at the ``head_pct``/``middle_pct``
-    fractions — the slices CCNet keeps, downweights and drops.
+    into head / middle / tail at the 30 % / 70 % rank fractions — the
+    slices CCNet keeps, downweights and drops.
 
     Scale shape: ONE range-partitioned global rank on (lang, score,
     id) via the ranking.py two-pass spine. A ``Window.partitionBy
@@ -241,14 +235,14 @@ def lm_quality_buckets(docs: DataFrame, head_pct: int = 30,
     from .ranking import global_rank
     from .tokenizer import unigram_logprob
 
-    scored = (unigram_logprob(docs, text_col, id_col)
-              .join(docs.select(id_col, lang_col), id_col)
+    scored = (unigram_logprob(docs)
+              .join(docs.select("doc_id", "lang"), "doc_id")
               .withColumn("_lkey",
-                          F.coalesce(F.col(lang_col).cast("string"),
+                          F.coalesce(F.col("lang").cast("string"),
                                      F.lit("\u0000<null>"))))
     ranked = global_rank(
         scored,
-        [F.col("_lkey"), F.col("avg_neg_logprob"), F.col(id_col)],
+        [F.col("_lkey"), F.col("avg_neg_logprob"), F.col("doc_id")],
         rank_col="_grank")
     # per-language offsets from COUNTS alone (r15): _lkey is the
     # LEADING sort key, so languages own contiguous rank ranges and
@@ -270,15 +264,14 @@ def lm_quality_buckets(docs: DataFrame, head_pct: int = 30,
     r = F.col("_grank") - F.col("_lmin") + 1
     return (ranked.join(F.broadcast(per_lang), "_lkey")
             .select(
-                F.col(id_col), F.col(lang_col), F.col("avg_neg_logprob"),
+                F.col("doc_id"), F.col("lang"), F.col("avg_neg_logprob"),
                 r.cast("long").alias("lang_rank"),
-                F.when(r * 100 <= head_pct * F.col("_ln"), "head")
-                 .when(r * 100 <= middle_pct * F.col("_ln"), "middle")
+                F.when(r * 100 <= 30 * F.col("_ln"), "head")
+                 .when(r * 100 <= 70 * F.col("_ln"), "middle")
                  .otherwise("tail").alias("bucket")))
 
 
-def contrastive_negatives(df: DataFrame, k: int = 4,
-                          id_col: str = "doc_id") -> DataFrame:
+def contrastive_negatives(df: DataFrame, k: int = 4) -> DataFrame:
     """Deterministic random negatives -> (id, neg_rank, neg_id): for
     every anchor row, ``k`` pseudo-random other rows — the negative
     sampling step of contrastive / DPR-style training-pair
@@ -298,31 +291,29 @@ def contrastive_negatives(df: DataFrame, k: int = 4,
         raise ValueError(f"k must be positive, got {k}")
     from .ranking import global_rank
 
-    ranked = global_rank(df.select(id_col), [F.col(id_col)],
+    ranked = global_rank(df.select("doc_id"), [F.col("doc_id")],
                          rank_col="_idx")
     n = ranked.agg(F.max("_idx").alias("_n"))
     # h in 0..n-1; 1-based target = h+1, skip-self bump wraps mod n
     h = (F.conv(F.substring(F.md5(F.concat_ws(
-            ":", F.col(id_col).cast("string"),
+            ":", F.col("doc_id").cast("string"),
             F.col("neg_rank").cast("string"))), 1, 8), 16, 10)
          .cast("long") % F.col("_n"))
     target = F.when(h + 1 == F.col("_idx"),
                     ((h + 1) % F.col("_n")) + 1).otherwise(h + 1)
     exploded = (ranked.crossJoin(F.broadcast(n))
-                .select(F.col(id_col), F.col("_idx"), F.col("_n"),
+                .select(F.col("doc_id"), F.col("_idx"), F.col("_n"),
                         F.explode(F.sequence(F.lit(1), F.lit(k)))
                         .alias("neg_rank"))
                 .withColumn("_tidx", target))
-    lookup = ranked.select(F.col(id_col).alias("neg_id"),
+    lookup = ranked.select(F.col("doc_id").alias("neg_id"),
                            F.col("_idx").alias("_tidx"))
     return (exploded.join(lookup, "_tidx")
-            .select(id_col, "neg_rank", "neg_id"))
+            .select("doc_id", "neg_rank", "neg_id"))
 
 
 def priority_sample(df: DataFrame, weight_col: str, k: int,
-                    strata_cols: tuple[str, ...] = ("source",),
-                    id_col: str = "doc_id", salt: str = "ps",
-                    hash_chars: int = 12) -> DataFrame:
+                    salt: str = "ps") -> DataFrame:
     """Deterministic WEIGHTED k-sample per stratum via priority
     sampling (Duffield, Lund & Thorup 2007): each row draws a
     reproducible uniform u ∈ (0, 1] from its md5 and gets priority
@@ -352,38 +343,35 @@ def priority_sample(df: DataFrame, weight_col: str, k: int,
 
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    denom = float(16 ** hash_chars) + 1.0
+    denom = float(16 ** PRIORITY_HASH_CHARS) + 1.0
     u = ((F.conv(F.substring(
-            F.md5(F.concat_ws(":", F.lit(salt),
-                              *[F.col(c) for c in strata_cols],
-                              F.col(id_col).cast("string"))),
-            1, hash_chars), 16, 10).cast("double") + 1.0)
+            F.md5(F.concat_ws(":", F.lit(salt), F.col("source"),
+                              F.col("doc_id").cast("string"))),
+            1, PRIORITY_HASH_CHARS), 16, 10).cast("double") + 1.0)
          / F.lit(denom))
     weighted = (df.where(F.col(weight_col) > 0)
-                .select(*strata_cols, id_col,
+                .select("source", "doc_id",
                         F.col(weight_col).cast("double").alias("weight"),
                         (F.col(weight_col).cast("double") / u)
                         .alias("priority")))
-    topk1 = grouped_topk(weighted, list(strata_cols),
-                         [F.col("priority").desc(), F.col(id_col)],
+    topk1 = grouped_topk(weighted, ["source"],
+                         [F.col("priority").desc(), F.col("doc_id")],
                          k + 1, rank_col="rank")
-    w = Window.partitionBy(*strata_cols)
+    w = Window.partitionBy("source")
     tau = F.coalesce(
         F.max(F.when(F.col("rank") == k + 1, F.col("priority"))).over(w),
         F.lit(0.0))
     return (topk1.withColumn("tau", tau)
             .where(F.col("rank") <= k)
-            .select(*strata_cols, id_col, "weight", "rank",
+            .select("source", "doc_id", "weight", "rank",
                     F.round("priority", 6).alias("priority"),
                     F.round("tau", 6).alias("tau"),
                     F.round(F.greatest("weight", "tau"), 6)
                     .alias("est_weight")))
 
 
-def epoch_schedule(docs: DataFrame, weights: DataFrame,
-                   budget_tokens: int, max_epochs: float = 2.0,
-                   text_col: str = "text",
-                   source_col: str = "source") -> DataFrame:
+def epoch_schedule(docs: DataFrame, weights: DataFrame, budget_tokens: int,
+                   max_epochs: float = 2.0) -> DataFrame:
     """Data-constrained mixing schedule: how many EPOCHS of each source
     to run to hit a token budget under a target mix → ``(source,
     n_tokens_avail, weight_norm, target_tokens, epochs, capped,
@@ -405,15 +393,15 @@ def epoch_schedule(docs: DataFrame, weights: DataFrame,
     IdentityBroadcast probe pattern). All divisions on round-6
     normalized weights so both engines agree bit-for-bit.
     """
-    words = F.filter(F.split(F.col(text_col), " "),
+    words = F.filter(F.split(F.col("text"), " "),
                      lambda w: w != F.lit(""))
-    avail = (docs.groupBy(source_col)
+    avail = (docs.groupBy("source")
              .agg(F.sum(F.size(words)).cast("long")
                   .alias("n_tokens_avail")))
     tot_w = weights.agg(F.sum("weight").alias("_tw"))
-    base = (avail.join(F.broadcast(weights), source_col)
+    base = (avail.join(F.broadcast(weights), "source")
             .crossJoin(F.broadcast(tot_w))
-            .select(source_col, "n_tokens_avail",
+            .select("source", "n_tokens_avail",
                     F.round(F.col("weight") / F.col("_tw"), 6)
                     .alias("weight_norm")))
     calc = base.withColumn(
@@ -423,17 +411,15 @@ def epoch_schedule(docs: DataFrame, weights: DataFrame,
     epochs = F.round(F.least(F.lit(float(max_epochs)), er), 6)
     realized = F.floor(epochs * F.col("n_tokens_avail")).cast("long")
     return calc.select(
-        source_col, "n_tokens_avail", "weight_norm", "target_tokens",
+        "source", "n_tokens_avail", "weight_norm", "target_tokens",
         epochs.alias("epochs"),
         (er > max_epochs).alias("capped"),
         realized.alias("realized_tokens"),
         (F.col("target_tokens") - realized).alias("deficit_tokens"))
 
 
-def quality_calibration(docs: DataFrame, terms: list[str],
-                        n_tiles: int = 10, max_hits: int = 1,
-                        text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def quality_calibration(docs: DataFrame, terms: list[str], n_tiles: int = 10,
+                        max_hits: int = 1) -> DataFrame:
     """Cross-signal calibration audit → ``(decile, n_docs, n_flagged,
     flag_rate)``: bucket the corpus into quality-score deciles (the
     hashed linear classifier) and report, per decile, how often an
@@ -467,15 +453,15 @@ def quality_calibration(docs: DataFrame, terms: list[str],
     # states it (token match over the lowered split, count <= max_hits)
     lowered = [t.lower() for t in terms]
     arr = F.array(*[F.lit(t) for t in lowered])
-    words = F.filter(F.split(F.lower(F.col(text_col)), " "),
+    words = F.filter(F.split(F.lower(F.col("text")), " "),
                      lambda w: w != F.lit(""))
     n_hits = F.size(F.filter(
         words, lambda w: F.array_contains(arr, w))).cast("long")
-    j = ensure_fanout(docs.select(F.col(id_col), F.col(text_col))) \
-        .select(F.col(id_col),
-                linear_quality_prob(text_col).alias("prob"),
+    j = ensure_fanout(docs.select(F.col("doc_id"), F.col("text"))) \
+        .select(F.col("doc_id"),
+                linear_quality_prob().alias("prob"),
                 (n_hits <= max_hits).alias("kept"))
-    d = global_ntile(j, n_tiles, [F.col("prob"), F.col(id_col)],
+    d = global_ntile(j, n_tiles, [F.col("prob"), F.col("doc_id")],
                      out_col="decile")
     flagged = (~F.col("kept")).cast("int")
     return (d.groupBy("decile")
@@ -486,9 +472,7 @@ def quality_calibration(docs: DataFrame, terms: list[str],
             .orderBy("decile"))
 
 
-def shard_manifest(docs: DataFrame, target: int = 2000,
-                   text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def shard_manifest(docs: DataFrame, target: int = 2000) -> DataFrame:
     """Shard manifest with content checksums → ``(shard, n_docs,
     n_tokens, checksum)`` — the integrity artifact a trainer checks
     before (and audits after) consuming a sharded corpus export.
@@ -505,17 +489,17 @@ def shard_manifest(docs: DataFrame, target: int = 2000,
     """
     from .dedup import normalized_text
 
-    words = F.filter(F.split(F.col(text_col), " "),
+    words = F.filter(F.split(F.col("text"), " "),
                      lambda w: w != F.lit(""))
     fp32 = F.conv(F.substring(
-        F.md5(normalized_text(F.col(text_col))), 1, 8), 16, 10) \
+        F.md5(normalized_text(F.col("text"))), 1, 8), 16, 10) \
         .cast("long")
     t = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(words).cast("bigint").alias("n_tokens"),
-        F.md5(F.col(id_col).cast("string")).alias("_h"),
+        F.md5(F.col("doc_id").cast("string")).alias("_h"),
         fp32.alias("_fp"))
-    sh = token_shards(t, ["_h", id_col], "n_tokens", target)
+    sh = token_shards(t, ["_h", "doc_id"], "n_tokens", target)
     return (sh.groupBy("shard")
             .agg(F.count("*").cast("long").alias("n_docs"),
                  F.sum("n_tokens").cast("long").alias("n_tokens"),

@@ -28,6 +28,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+IVF_SAMPLE_SIZE = 10_000  # driver sample that trains the IVF centroids
+LSH_BITS = 256  # random-hyperplane signature bits
+LSH_BANDS = 16  # LSH bands over the signature
+
 
 def _dot(a, b):
     """JVM-side dot product of two array columns (double accumulator)."""
@@ -53,17 +57,16 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding"
-                ) -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame,
+                k: int = 10) -> DataFrame:
     """Exact top-k cosine neighbors per query → (query_id, neighbor_id,
     cosine, rank). Excludes self-matches. Deterministic: ties broken by
     neighbor id on the unrounded score."""
-    q = with_l2_norm(queries.select(F.col(id_col).alias("query_id"),
-                                    F.col(vec_col).alias("q_vec")),
+    q = with_l2_norm(queries.select(F.col("vec_id").alias("query_id"),
+                                    F.col("embedding").alias("q_vec")),
                      "q_vec", "q_norm")
-    c = with_l2_norm(corpus.select(F.col(id_col).alias("neighbor_id"),
-                                   F.col(vec_col).alias("c_vec")),
+    c = with_l2_norm(corpus.select(F.col("vec_id").alias("neighbor_id"),
+                                   F.col("embedding").alias("c_vec")),
                      "c_vec", "c_norm")
     scored = (
         F.broadcast(q).crossJoin(c)
@@ -75,14 +78,14 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     return _rank_topk(scored, k)
 
 
-def _kmeans_lite(sample: np.ndarray, n_lists: int, iters: int = 8,
+def _kmeans_lite(sample: np.ndarray, n_lists: int,
                  seed: int = 42) -> np.ndarray:
     """Tiny k-means on a driver-side sample (bounded like MRFFT R2)."""
     rng = np.random.default_rng(seed)
     idx = rng.choice(len(sample), size=min(n_lists, len(sample)),
                      replace=False)
     centroids = sample[idx].copy()
-    for _ in range(iters):
+    for _ in range(8):
         d = ((sample[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
         assign = d.argmin(axis=1)
         for j in range(len(centroids)):
@@ -126,8 +129,6 @@ def _nearest_lists_udf(centroids: np.ndarray, n: int):
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
              n_lists: int = 16, nprobe: int = 4,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             sample_size: int = 10_000, seed: int = 42,
              centroids: np.ndarray | None = None) -> DataFrame:
     """IVF approximate top-k cosine → same schema as ``cosine_topk``.
 
@@ -142,22 +143,22 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     """
     if centroids is None:
         n = corpus.count()
-        frac = min(1.0, (sample_size * 1.25) / max(n, 1))
+        frac = min(1.0, (IVF_SAMPLE_SIZE * 1.25) / max(n, 1))
         sample = np.array(
             [r[0] for r in
-             corpus.select(vec_col).sample(fraction=frac, seed=seed)
-             .limit(sample_size).collect()],
+             corpus.select("embedding").sample(fraction=frac, seed=42)
+             .limit(IVF_SAMPLE_SIZE).collect()],
             dtype=np.float64)
-        centroids = _kmeans_lite(sample, n_lists, seed=seed)
+        centroids = _kmeans_lite(sample, n_lists)
 
     assign1 = _nearest_lists_udf(centroids, 1)
     assign_probe = _nearest_lists_udf(centroids, nprobe)
 
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("c_vec"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"),
+                      F.col("embedding").alias("c_vec"))
     c = c.withColumn("list_id", assign1(F.col("c_vec"))[0])
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("q_vec"))
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("q_vec"))
     q = q.withColumn("probe", F.explode(assign_probe(F.col("q_vec"))))
 
     nq = with_l2_norm(F.broadcast(q), "q_vec", "q_norm")
@@ -179,9 +180,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
 # small-scale oracle) and a random-hyperplane LSH form whose shuffle
 # key is a signature band — never a vector pair — for the 100 TB path.
 
-def cosine_pairs(emb: DataFrame, threshold: float = 0.4,
-                 id_col: str = "vec_id", vec_col: str = "embedding"
-                 ) -> DataFrame:
+def cosine_pairs(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
     """Exact all-pairs cosine near-dup → (id_a, id_b, cosine ≥ t).
 
     A theta self-join (id_a < id_b) scored with JVM array intrinsics:
@@ -191,10 +190,10 @@ def cosine_pairs(emb: DataFrame, threshold: float = 0.4,
     ROUNDED cosine (6 dp) on both engines so a threshold-straddling
     ulp can't flip membership between Spark and the oracle.
     """
-    a = with_l2_norm(emb.select(F.col(id_col).alias("id_a"),
-                                F.col(vec_col).alias("va")), "va", "na")
-    b = with_l2_norm(emb.select(F.col(id_col).alias("id_b"),
-                                F.col(vec_col).alias("vb")), "vb", "nb")
+    a = with_l2_norm(emb.select(F.col("vec_id").alias("id_a"),
+                                F.col("embedding").alias("va")), "va", "na")
+    b = with_l2_norm(emb.select(F.col("vec_id").alias("id_b"),
+                                F.col("embedding").alias("vb")), "vb", "nb")
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b",
@@ -312,15 +311,14 @@ def _lsh_band_verify(s: DataFrame, n_bits: int, bands: int,
 
 
 def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.4,
-                        n_bits: int = 256, bands: int = 16, seed: int = 42,
-                        id_col: str = "vec_id", vec_col: str = "embedding",
                         dim: int | None = None) -> DataFrame:
     """Random-hyperplane LSH near-dup pairs → (id_a, id_b, cosine ≥ t).
 
-    SimHash-for-vectors: sgn(v·h_i) bits from ``n_bits`` seeded Gaussian
-    hyperplanes (P[bit match] = 1 − θ/π), banded pigeonhole-style into
-    ``bands`` equal chunks; vectors agreeing on ≥1 whole band become
-    candidates via an equi-join on (band, chunk value), then candidates
+    SimHash-for-vectors: sgn(v·h_i) bits from ``LSH_BITS`` seeded
+    Gaussian hyperplanes (P[bit match] = 1 − θ/π), banded
+    pigeonhole-style into ``LSH_BANDS`` equal chunks; vectors agreeing
+    on ≥1 whole band become candidates via an equi-join on (band,
+    chunk value), then candidates
     are verified with the exact JVM cosine — so precision is 1 and only
     recall is approximate (16 bands of 16 bits: ≈1.0 at cos 0.99,
     ≈0.96 at 0.95, ≈2·10⁻⁴ of random pairs). Shuffle keys are band
@@ -328,18 +326,19 @@ def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.4,
     the band space exceeds the corpus: the r10 sf1 probe measured the
     old 8-bit bands (256 values) going quadratic at 20k vectors (32×
     time at 10× data) because every bucket crowds; 16-bit bands hold
-    to ~100k vectors, 32-bit bands (``n_bits=256, bands=8``) are the
+    to ~100k vectors, 32-bit bands (256 bits in 8 bands) are the
     billion-vector setting. The one driver action is a single-row
     ``first()`` to infer ``dim`` when not given.
     """
     if dim is None:
-        dim = len(emb.select(vec_col).dropna().first()[0])
-    rng = np.random.default_rng(seed)
-    sig = _hyperplane_sig_udf(rng.standard_normal((dim, n_bits)))
-    s = (emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+        dim = len(emb.select("embedding").dropna().first()[0])
+    rng = np.random.default_rng(42)
+    sig = _hyperplane_sig_udf(rng.standard_normal((dim, LSH_BITS)))
+    s = (emb.select(F.col("vec_id").alias("id"),
+                    F.col("embedding").alias("v"))
          .where(F.col("v").isNotNull())
          .withColumn("sig", sig("v")))
-    return _lsh_band_verify(s, n_bits, bands, threshold)
+    return _lsh_band_verify(s, LSH_BITS, LSH_BANDS, threshold)
 
 
 def _pinned_sign_planes(dim: int, n_bits: int) -> np.ndarray:
@@ -389,9 +388,6 @@ def _pinned_sig_udf(mat: np.ndarray):
 
 
 def embedding_lsh_pairs_pinned(emb: DataFrame, threshold: float = 0.4,
-                               n_bits: int = 256, bands: int = 16,
-                               id_col: str = "vec_id",
-                               vec_col: str = "embedding",
                                dim: int | None = None) -> DataFrame:
     """The oracle-checkable face of ``embedding_lsh_pairs``: identical
     band-join-verify dataflow, but the Gaussian hyperplanes are
@@ -402,17 +398,16 @@ def embedding_lsh_pairs_pinned(emb: DataFrame, threshold: float = 0.4,
     matrix differs (sign projections are themselves a standard SimHash
     choice, not a test-only approximation)."""
     if dim is None:
-        dim = len(emb.select(vec_col).dropna().first()[0])
-    sig = _pinned_sig_udf(_pinned_sign_planes(dim, n_bits))
-    s = (emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+        dim = len(emb.select("embedding").dropna().first()[0])
+    sig = _pinned_sig_udf(_pinned_sign_planes(dim, LSH_BITS))
+    s = (emb.select(F.col("vec_id").alias("id"),
+                    F.col("embedding").alias("v"))
          .where(F.col("v").isNotNull())
          .withColumn("sig", sig("v")))
-    return _lsh_band_verify(s, n_bits, bands, threshold)
+    return _lsh_band_verify(s, LSH_BITS, LSH_BANDS, threshold)
 
 
-def quantize_embeddings(emb: DataFrame, vec_col: str = "embedding",
-                        id_col: str = "vec_id",
-                        round_scale: bool = True) -> DataFrame:
+def quantize_embeddings(emb: DataFrame, round_scale: bool = True) -> DataFrame:
     """Symmetric per-vector int8 quantization → (vec_id, scale, codes).
 
     The storage-compression step of an embedding pipeline: float32 →
@@ -432,21 +427,20 @@ def quantize_embeddings(emb: DataFrame, vec_col: str = "embedding",
     introduces ulp-level drift that can flip shortlist membership at a
     rerank cut even though cosine itself is scale-invariant.
     """
-    xd = F.col(vec_col).cast("array<double>")
+    xd = F.col("embedding").cast("array<double>")
     m = F.array_max(F.transform(xd, lambda v: F.abs(v)))
     codes = F.when(m > 0, F.transform(
         xd, lambda v: F.floor(v / m * 127.0 + 0.5).cast("int"))) \
         .otherwise(F.transform(xd, lambda v: F.lit(0)))
     return emb.select(
-        F.col(id_col),
+        F.col("vec_id"),
         (F.round(m, 6) if round_scale else m).alias("scale"),
         codes.alias("codes"),
     )
 
 
 def quantized_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-                   rerank_factor: int = 4, id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
+                   rerank_factor: int = 4) -> DataFrame:
     """Top-k cosine search over the int8-QUANTIZED corpus with exact
     rerank → (query_id, neighbor_id, cosine, rank).
 
@@ -460,19 +454,17 @@ def quantized_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     a true top-k neighbor falls outside the quantized top
     ``rerank_factor·k`` (property-tested ≥ 0.9 at the defaults).
     """
-    deq = quantize_embeddings(corpus, vec_col, id_col,
-                              round_scale=False).select(
-        id_col,
+    deq = quantize_embeddings(corpus, round_scale=False).select(
+        "vec_id",
         F.transform("codes",
-                    lambda c: c * F.col("scale") / 127.0).alias(vec_col))
-    cand = cosine_topk(deq, queries, k=rerank_factor * k,
-                       id_col=id_col, vec_col=vec_col) \
+                    lambda c: c * F.col("scale") / 127.0).alias("embedding"))
+    cand = cosine_topk(deq, queries, k=rerank_factor * k) \
         .select("query_id", "neighbor_id")
-    c = with_l2_norm(corpus.select(F.col(id_col).alias("neighbor_id"),
-                                   F.col(vec_col).alias("c_vec")),
+    c = with_l2_norm(corpus.select(F.col("vec_id").alias("neighbor_id"),
+                                   F.col("embedding").alias("c_vec")),
                      "c_vec", "c_norm")
-    q = with_l2_norm(queries.select(F.col(id_col).alias("query_id"),
-                                    F.col(vec_col).alias("q_vec")),
+    q = with_l2_norm(queries.select(F.col("vec_id").alias("query_id"),
+                                    F.col("embedding").alias("q_vec")),
                      "q_vec", "q_norm")
     scored = (cand.join(c, "neighbor_id").join(F.broadcast(q), "query_id")
               .select("query_id", "neighbor_id",
@@ -482,37 +474,8 @@ def quantized_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     return _rank_topk(scored, k)
 
 
-def assign_nearest(emb: DataFrame, centroids: DataFrame,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   out_col: str = "cluster") -> DataFrame:
-    """Nearest-centroid assignment by squared L2 as a pure JVM
-    expression: broadcast the (small) centroid table, score every
-    (vector, centroid) pair with ``zip_with``/``aggregate``, argmin
-    via a min-struct aggregate keyed by the vector — one keyed
-    shuffle whose width is the corpus, never the cross product.
-
-    ``centroids`` must have columns (centroid_id, cv). Ties break to
-    the smallest centroid_id (same rule as the IVF routing kernel and
-    its oracle face ``embedding_nearest_centroid``).
-    """
-    v = emb.select(F.col(id_col), F.col(vec_col).cast("array<double>")
-                   .alias("_v"))
-    dist = F.aggregate(
-        F.zip_with("_v", "cv", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, x: acc + x)
-    best = (v.crossJoin(F.broadcast(centroids))
-            .select(id_col,
-                    F.struct(dist.alias("d"),
-                             F.col("centroid_id").alias("cid")).alias("s"))
-            .groupBy(id_col).agg(F.min("s").alias("b"))
-            .select(id_col, F.col("b.cid").alias(out_col),
-                    F.col("b.d").alias("dist_sq")))
-    return emb.join(best, id_col)
-
-
 def semantic_dedup(emb: DataFrame, centroids: DataFrame,
-                   threshold: float = 0.3, id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
+                   threshold: float = 0.3) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
     embeddings, then WITHIN each cluster drop every vector that has a
     sufficiently-cosine-similar representative with a smaller id —
@@ -538,8 +501,8 @@ def semantic_dedup(emb: DataFrame, centroids: DataFrame,
     SQL-checkable; recall/precision of the clustering itself is the
     property-tested concern of the k-means trainer, not this operator.
     """
-    v = emb.select(F.col(id_col).alias("_id"),
-                   F.col(vec_col).cast("array<double>").alias("_v"))
+    v = emb.select(F.col("vec_id").alias("_id"),
+                   F.col("embedding").cast("array<double>").alias("_v"))
     dist = F.aggregate(
         F.zip_with("_v", "cv", lambda x, y: (x - y) * (x - y)),
         F.lit(0.0), lambda acc, x: acc + x)
@@ -569,12 +532,11 @@ def semantic_dedup(emb: DataFrame, centroids: DataFrame,
                .withColumn("_dup", F.lit(True)))
     return (sides.select("_id", "cluster")
             .join(dup_ids, "_id", "left")
-            .select(F.col("_id").alias(id_col), "cluster",
+            .select(F.col("_id").alias("vec_id"), "cluster",
                     F.coalesce(F.col("_dup"), F.lit(False)).alias("dropped")))
 
 
-def embedding_gram(emb: DataFrame, vec_col: str = "embedding",
-                   id_col: str = "vec_id") -> DataFrame:
+def embedding_gram(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Distributed Gram matrix -> (i, j, value): the upper triangle of
     (1/n) * sum over vectors of v v-transpose, 1-based indices.
 
@@ -624,8 +586,7 @@ def embedding_gram(emb: DataFrame, vec_col: str = "embedding",
                     F.round(F.col("_s") / F.col("_n"), 6).alias("value")))
 
 
-def pca_components(emb: DataFrame, n_components: int = 8,
-                   vec_col: str = "embedding") -> "np.ndarray":
+def pca_components(emb: DataFrame, n_components: int = 8) -> "np.ndarray":
     """Exact corpus PCA basis -> (n_components, d) ndarray: top
     eigenvectors of the covariance, computed from ONE distributed pass.
 
@@ -645,18 +606,19 @@ def pca_components(emb: DataFrame, n_components: int = 8,
     if n_components <= 0:
         raise ValueError(
             f"n_components must be positive, got {n_components}")
-    first = emb.select(vec_col).where(F.col(vec_col).isNotNull()).first()
+    first = (emb.select("embedding").where(F.col("embedding").isNotNull())
+             .first())
     if first is None:
         raise ValueError("no non-null vectors to fit PCA on")
     d = len(first[0])
     if n_components > d:
         raise ValueError(f"n_components {n_components} > dim {d}")
     gram = {(r.i, r.j): r.value
-            for r in embedding_gram(emb, vec_col).collect()}
-    nn = emb.where(F.col(vec_col).isNotNull())
+            for r in embedding_gram(emb).collect()}
+    nn = emb.where(F.col("embedding").isNotNull())
     sums = nn.agg(
         F.count("*").alias("_n"),
-        *[F.sum(F.element_at(F.col(vec_col), i + 1)).alias(f"_s{i}")
+        *[F.sum(F.element_at(F.col("embedding"), i + 1)).alias(f"_s{i}")
           for i in range(d)]).collect()[0]
     mean = np.array([sums[f"_s{i}"] for i in range(d)],
                     dtype=np.float64) / sums["_n"]
@@ -673,23 +635,17 @@ def pca_components(emb: DataFrame, n_components: int = 8,
     return comps
 
 
-def pca_project(emb: DataFrame, components: "np.ndarray",
-                mean: "np.ndarray | None" = None,
-                vec_col: str = "embedding",
-                id_col: str = "vec_id",
-                out_col: str = "projected") -> DataFrame:
+def pca_project(emb: DataFrame, components: "np.ndarray") -> DataFrame:
     """Project vectors onto a PCA basis -> (id, projected): the
     dimensionality-reduction step before ANN indexing (a 64->8 cut
     shrinks the index 8x and the scan cost with it). The (k, d)
-    component matrix and mean ride to executors as closure-captured
-    ndarrays (the X4 broadcast pattern, plan size O(1)); projection is
+    component matrix rides to executors as a closure-captured
+    ndarray (the X4 broadcast pattern, plan size O(1)); projection is
     one BLAS matmul per Arrow batch. Null vectors project to null.
     """
     import numpy as np
 
     comp = np.ascontiguousarray(components, dtype=np.float64)
-    mu = (np.zeros(comp.shape[1]) if mean is None
-          else np.asarray(mean, dtype=np.float64))
 
     @F.pandas_udf("array<double>")
     def project(vecs: pd.Series) -> pd.Series:
@@ -697,19 +653,18 @@ def pca_project(emb: DataFrame, components: "np.ndarray",
         out = np.empty(len(vals), dtype=object)
         mask = np.array([v is not None for v in vals], dtype=bool)
         if mask.any():
-            m = np.stack(vals[mask]).astype(np.float64) - mu
+            m = np.stack(vals[mask]).astype(np.float64)
             p = m @ comp.T
             for pos, row in zip(np.flatnonzero(mask), p):
                 out[pos] = row.tolist()
         return pd.Series(out)
 
-    return emb.select(F.col(id_col), project(F.col(vec_col)).alias(out_col))
+    return emb.select(F.col("vec_id"),
+                      project(F.col("embedding")).alias("projected"))
 
 
 def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 5,
-               pool_size: int = 20, lam: float = 0.7,
-               id_col: str = "vec_id", vec_col: str = "embedding"
-               ) -> DataFrame:
+               pool_size: int = 20, lam: float = 0.7) -> DataFrame:
     """Maximal-marginal-relevance re-ranking (Carbonell & Goldstein
     1998): greedily pick ``k`` results that balance query relevance
     against redundancy with what is already picked —
@@ -736,11 +691,11 @@ def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 5,
     if k <= 0 or pool_size < k:
         raise ValueError(f"need 0 < k <= pool_size, got {k}/{pool_size}")
     lam1 = 1.0 - lam
-    q = with_l2_norm(queries.select(F.col(id_col).alias("query_id"),
-                                    F.col(vec_col).alias("qv")),
+    q = with_l2_norm(queries.select(F.col("vec_id").alias("query_id"),
+                                    F.col("embedding").alias("qv")),
                      "qv", "qn")
-    c = with_l2_norm(corpus.select(F.col(id_col).alias("cand_id"),
-                                   F.col(vec_col).alias("cv")),
+    c = with_l2_norm(corpus.select(F.col("vec_id").alias("cand_id"),
+                                   F.col("embedding").alias("cv")),
                      "cv", "cn")
     scored = (F.broadcast(q).crossJoin(c)
               .where(F.col("query_id") != F.col("cand_id"))
@@ -796,8 +751,6 @@ def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 5,
 
 def ivf_topk_pinned(corpus: DataFrame, queries: DataFrame, k: int = 10,
                     n_lists: int = 16, nprobe: int = 4,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding",
                     cent_below: int | None = None) -> DataFrame:
     """IVF approximate top-k cosine with FIXED centroids — the oracle
     face of :func:`ivf_topk`, same schema as ``cosine_topk``.
@@ -826,18 +779,18 @@ def ivf_topk_pinned(corpus: DataFrame, queries: DataFrame, k: int = 10,
     yield fewer, denser never more than the cap by construction of
     the caller's choice).
     """
-    cents = (corpus.where(F.col(id_col) < (cent_below if cent_below
+    cents = (corpus.where(F.col("vec_id") < (cent_below if cent_below
                                            is not None else n_lists))
-             .select(F.col(id_col).cast("int").alias("list_id"),
-                     F.col(vec_col).cast("array<double>").alias("cv")))
+             .select(F.col("vec_id").cast("int").alias("list_id"),
+                     F.col("embedding").cast("array<double>").alias("cv")))
 
     def sq_l2(vec):
         return F.aggregate(
             F.zip_with(vec, "cv", lambda x, y: (x - y) * (x - y)),
             F.lit(0.0), lambda acc, x: acc + x)
 
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).cast("array<double>").alias("v"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"),
+                      F.col("embedding").cast("array<double>").alias("v"))
     assigned = (c.crossJoin(F.broadcast(cents))
                 .select("neighbor_id", "v",
                         F.struct(sq_l2(F.col("v")).alias("d"),
@@ -846,8 +799,8 @@ def ivf_topk_pinned(corpus: DataFrame, queries: DataFrame, k: int = 10,
                 .agg(F.min("s").alias("b"), F.first("v").alias("v"))
                 .select("neighbor_id", F.col("b.lid").alias("list_id"),
                         "v"))
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("qv"))
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").cast("array<double>").alias("qv"))
     # nprobe nearest lists per query: bounded n_lists rows per query,
     # query-keyed window — no global funnel
     wp = W.partitionBy("query_id").orderBy(F.col("_d"), F.col("list_id"))
@@ -867,9 +820,7 @@ def ivf_topk_pinned(corpus: DataFrame, queries: DataFrame, k: int = 10,
     return _rank_topk(scored, k)
 
 
-def reciprocal_best_match(side_a: DataFrame, side_b: DataFrame,
-                          id_col: str = "vec_id",
-                          vec_col: str = "embedding") -> DataFrame:
+def reciprocal_best_match(side_a: DataFrame, side_b: DataFrame) -> DataFrame:
     """Reciprocal best match / mutual nearest neighbors (E166) →
     ``(id_a, id_b, cosine)``: pairs where b is a's cosine top-1 in
     ``side_b`` AND a is b's top-1 back in ``side_a``.
@@ -883,7 +834,7 @@ def reciprocal_best_match(side_a: DataFrame, side_b: DataFrame,
     operator is two query-bounded scans of the big side, never
     |B|-side all-pairs.
 
-    Contract: ``id_col`` values must be DISJOINT across the two sides.
+    Contract: ``vec_id`` values must be DISJOINT across the two sides.
     Scoring reuses :func:`cosine_topk`, whose self-exclusion is by id
     equality — a b sharing an id value with an a would be silently
     excluded from both directions even though cross-set matching
@@ -904,16 +855,14 @@ def reciprocal_best_match(side_a: DataFrame, side_b: DataFrame,
     # IVF 3.15 -> 3.81 (interleaved min-of-6) — the Python->JVM
     # literal round-trip costs more than the checkpoint job it
     # replaces. Both alternatives now measured; eager stands.
-    fwd = (cosine_topk(side_b, side_a, k=1, id_col=id_col,
-                       vec_col=vec_col)
+    fwd = (cosine_topk(side_b, side_a, k=1)
            .select(F.col("query_id").alias("id_a"),
                    F.col("neighbor_id").alias("id_b"),
                    F.col("cosine").alias("cosine"))
            .localCheckpoint(eager=True))
     cand = (side_b.join(
-        fwd.select(F.col("id_b").alias(id_col)).distinct(), id_col))
-    back = (cosine_topk(side_a, cand, k=1, id_col=id_col,
-                        vec_col=vec_col)
+        fwd.select(F.col("id_b").alias("vec_id")).distinct(), "vec_id"))
+    back = (cosine_topk(side_a, cand, k=1)
             .select(F.col("query_id").alias("id_b"),
                     F.col("neighbor_id").alias("id_a")))
     return fwd.join(back, ["id_a", "id_b"]).select("id_a", "id_b",
@@ -921,11 +870,8 @@ def reciprocal_best_match(side_a: DataFrame, side_b: DataFrame,
 
 
 def reciprocal_best_match_ivf(side_a: DataFrame, side_b: DataFrame,
-                              nprobe: int = 4,
-                              cent_below_b: int = 16,
-                              cent_below_a: int = 16,
-                              id_col: str = "vec_id",
-                              vec_col: str = "embedding") -> DataFrame:
+                              nprobe: int = 4, cent_below_b: int = 16,
+                              cent_below_a: int = 16) -> DataFrame:
     """Mutual nearest neighbors with BOTH directions routed through
     the pinned-IVF index (E172) → ``(id_a, id_b, cosine)``.
 
@@ -944,8 +890,7 @@ def reciprocal_best_match_ivf(side_a: DataFrame, side_b: DataFrame,
     and scoring stay fully relational, hence oracle-checkable.
     """
     fwd = (ivf_topk_pinned(side_b, side_a, k=1, nprobe=nprobe,
-                           cent_below=cent_below_b, id_col=id_col,
-                           vec_col=vec_col)
+                           cent_below=cent_below_b)
            .select(F.col("query_id").alias("id_a"),
                    F.col("neighbor_id").alias("id_b"),
                    F.col("cosine").alias("cosine"))
@@ -953,19 +898,16 @@ def reciprocal_best_match_ivf(side_a: DataFrame, side_b: DataFrame,
     # (eager deliberately — the consumers race a lazy checkpoint; see
     # reciprocal_best_match)
     cand = (side_b.join(
-        fwd.select(F.col("id_b").alias(id_col)).distinct(), id_col))
+        fwd.select(F.col("id_b").alias("vec_id")).distinct(), "vec_id"))
     back = (ivf_topk_pinned(side_a, cand, k=1, nprobe=nprobe,
-                            cent_below=cent_below_a, id_col=id_col,
-                            vec_col=vec_col)
+                            cent_below=cent_below_a)
             .select(F.col("query_id").alias("id_b"),
                     F.col("neighbor_id").alias("id_a")))
     return fwd.join(back, ["id_a", "id_b"]).select("id_a", "id_b",
                                                    "cosine")
 
 
-def centroid_drift(base: DataFrame, cur: DataFrame,
-                   label_col: str = "label", vec_col: str = "embedding",
-                   ) -> DataFrame:
+def centroid_drift(base: DataFrame, cur: DataFrame) -> DataFrame:
     """Per-label embedding centroid drift (E171) → ``(label, n_base,
     n_cur, l2_shift, top_dim, top_dim_shift)``: how far each label's
     mean vector moved between two snapshots, with the single most
@@ -989,8 +931,8 @@ def centroid_drift(base: DataFrame, cur: DataFrame,
     rather than a nondeterministic first-dim read.
     """
     def cents(df, n_col):
-        ex = df.select(F.col(label_col).alias("lbl"),
-                       F.posexplode(vec_col).alias("dim", "v"))
+        ex = df.select(F.col("label").alias("lbl"),
+                       F.posexplode("embedding").alias("dim", "v"))
         return ex.groupBy("lbl", "dim").agg(
             F.avg("v").alias("c"),
             F.count("*").alias(n_col))
@@ -1004,18 +946,17 @@ def centroid_drift(base: DataFrame, cur: DataFrame,
     shift = F.sqrt(F.sum(F.col("_d") * F.col("_d")))
     top = F.min(F.struct((-F.abs("_d")).alias("s"),
                          F.col("dim").alias("d")))
-    return (j.groupBy(F.col("lbl").alias(label_col))
+    return (j.groupBy(F.col("lbl").alias("label"))
             .agg(F.max("_nb").cast("long").alias("n_base"),
                  F.max("_nc").cast("long").alias("n_cur"),
                  F.round(shift, 6).alias("l2_shift"),
                  top.alias("_t"))
-            .select(label_col, "n_base", "n_cur", "l2_shift",
+            .select("label", "n_base", "n_cur", "l2_shift",
                     F.col("_t.d").cast("int").alias("top_dim"),
                     F.round(-F.col("_t.s"), 6).alias("top_dim_shift")))
 
 
-def hubness_report(emb: DataFrame, k: int = 10, id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
+def hubness_report(emb: DataFrame, k: int = 10) -> DataFrame:
     """Hubness diagnostic of the exact k-NN graph (E197) → ONE row
     ``(n_vectors, k, max_in_degree, n_antihubs, skewness)``.
 
@@ -1038,10 +979,10 @@ def hubness_report(emb: DataFrame, k: int = 10, id_col: str = "vec_id",
     paths route through the IVF faces, and hubness on a larger corpus
     is measured on a deterministic id-ordered sample.
     """
-    nn = cosine_topk(emb, emb, k=k, id_col=id_col, vec_col=vec_col)
+    nn = cosine_topk(emb, emb, k=k)
     indeg = nn.groupBy(F.col("neighbor_id").alias("_id")).agg(
         F.count("*").cast("long").alias("_d"))
-    full = (emb.select(F.col(id_col).alias("_id"))
+    full = (emb.select(F.col("vec_id").alias("_id"))
             .join(indeg, "_id", "left")
             .select(F.coalesce(F.col("_d"), F.lit(0)).alias("_d")))
     m = full.agg(
@@ -1067,8 +1008,7 @@ def hubness_report(emb: DataFrame, k: int = 10, id_col: str = "vec_id",
 
 
 def prefix_dim_recall(emb: DataFrame, k: int = 10, prefix: int = 32,
-                      n_queries: int = 20, id_col: str = "vec_id",
-                      vec_col: str = "embedding") -> DataFrame:
+                      n_queries: int = 20) -> DataFrame:
     """Matryoshka prefix-dimension retrieval gate (E198) → ONE row
     ``(n_queries, k, prefix_dim, recall)``.
 
@@ -1085,11 +1025,12 @@ def prefix_dim_recall(emb: DataFrame, k: int = 10, prefix: int = 32,
     prefix side SLICES the stored vector in-plan; no second embedding
     table is materialized.
     """
-    queries = emb.where(F.col(id_col) < n_queries)
-    full = cosine_topk(emb, queries, k=k, id_col=id_col, vec_col=vec_col)
-    pemb = emb.select(id_col, F.slice(vec_col, 1, prefix).alias(vec_col))
-    pq = pemb.where(F.col(id_col) < n_queries)
-    pref = cosine_topk(pemb, pq, k=k, id_col=id_col, vec_col=vec_col)
+    queries = emb.where(F.col("vec_id") < n_queries)
+    full = cosine_topk(emb, queries, k=k)
+    pemb = emb.select("vec_id",
+                      F.slice("embedding", 1, prefix).alias("embedding"))
+    pq = pemb.where(F.col("vec_id") < n_queries)
+    pref = cosine_topk(pemb, pq, k=k)
     hits = (full.select("query_id", "neighbor_id")
             .join(pref.select("query_id", "neighbor_id"),
                   ["query_id", "neighbor_id"])
@@ -1103,9 +1044,7 @@ def prefix_dim_recall(emb: DataFrame, k: int = 10, prefix: int = 32,
         F.round(F.sum("_h") / (F.count("*") * k), 6).alias("recall"))
 
 
-def triplet_mining(emb: DataFrame, label_col: str = "label",
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   anchors_below: int = 30) -> DataFrame:
+def triplet_mining(emb: DataFrame, anchors_below: int = 30) -> DataFrame:
     """Hardest-positive / semi-hard-negative triplet mining (E199) →
     one row per anchor: ``(anchor_id, pos_id, pos_cos, neg_id,
     neg_cos, margin)``.
@@ -1129,15 +1068,15 @@ def triplet_mining(emb: DataFrame, label_col: str = "label",
     BROADCASTS against the corpus (the sanctioned bounded-query-set
     scan); per-anchor state is two structs, map-side combinable.
     """
-    anchors = emb.select(F.col(id_col).alias("_aid"),
-                         F.col(label_col).alias("_alab"),
-                         F.col(vec_col).alias("_avec"))
+    anchors = emb.select(F.col("vec_id").alias("_aid"),
+                         F.col("label").alias("_alab"),
+                         F.col("embedding").alias("_avec"))
     anchors = with_l2_norm(anchors.where(F.col("_aid") < anchors_below),
                            "_avec", "_anorm")
     cand = with_l2_norm(
-        emb.select(F.col(id_col).alias("_cid"),
-                   F.col(label_col).alias("_clab"),
-                   F.col(vec_col).alias("_cvec")), "_cvec", "_cnorm")
+        emb.select(F.col("vec_id").alias("_cid"),
+                   F.col("label").alias("_clab"),
+                   F.col("embedding").alias("_cvec")), "_cvec", "_cnorm")
     scored = (F.broadcast(anchors).crossJoin(cand)
               .where(F.col("_aid") != F.col("_cid"))
               .select("_aid", "_alab", "_clab", "_cid",
@@ -1167,9 +1106,7 @@ def triplet_mining(emb: DataFrame, label_col: str = "label",
 
 
 def rp_distortion(emb: DataFrame, target_dim: int = 16,
-                  offsets: tuple = (1, 7, 49), seed: str = "rp",
-                  id_col: str = "vec_id", vec_col: str = "embedding"
-                  ) -> DataFrame:
+                  offsets: tuple = (1, 7, 49)) -> DataFrame:
     """Johnson-Lindenstrauss random-projection distortion audit
     (E200) → ONE row ``(n_pairs, target_dim, mean_ratio, min_ratio,
     max_ratio)``.
@@ -1180,7 +1117,7 @@ def rp_distortion(emb: DataFrame, target_dim: int = 16,
     ``‖Rx−Ry‖² / (k·‖x−y‖²)`` — E[ratio] = 1 by construction, and the
     min/max spread IS the distortion the sketch would inject into
     every downstream distance. Signs are md5-derived
-    (``seed:i:j`` parity — the engine-wide deterministic-draw
+    (``rp:i:j`` parity — the engine-wide deterministic-draw
     convention), so the matrix is identical across runs, partitions
     and engines without materializing randomness anywhere.
 
@@ -1192,35 +1129,35 @@ def rp_distortion(emb: DataFrame, target_dim: int = 16,
     (pair, j)-keyed aggregate.
     """
     spark = emb.sparkSession
-    dim = len(emb.select(vec_col).first()[0])
+    dim = len(emb.select("embedding").first()[0])
     proj = (spark.range(dim * target_dim)
             .select((F.col("id") / target_dim).cast("long").alias("_i"),
                     (F.col("id") % target_dim).alias("_j")))
     u = F.conv(F.substring(
-        F.md5(F.concat_ws(":", F.lit(seed),
+        F.md5(F.concat_ws(":", F.lit("rp"),
                           F.col("_i").cast("string"),
                           F.col("_j").cast("string"))), 1, 8),
         16, 10).cast("long")
     proj = proj.select("_i", "_j",
                        F.when(u % 2 == 0, F.lit(1.0))
                        .otherwise(F.lit(-1.0)).alias("_s"))
-    ex = emb.select(F.col(id_col).alias("_id"),
-                    F.posexplode(vec_col).alias("_i", "_x"))
+    ex = emb.select(F.col("vec_id").alias("_id"),
+                    F.posexplode("embedding").alias("_i", "_x"))
     y = (ex.join(F.broadcast(proj), "_i")
          .groupBy("_id", "_j")
          .agg(F.sum(F.col("_x").cast("double") * F.col("_s"))
               .alias("_y")))
-    ids = emb.select(F.col(id_col).alias("_a"))
+    ids = emb.select(F.col("vec_id").alias("_a"))
     pairs = None
     for off in offsets:
-        p = ids.join(emb.select((F.col(id_col) - off).alias("_a"),
-                                F.col(id_col).alias("_b")), "_a")
+        p = ids.join(emb.select((F.col("vec_id") - off).alias("_a"),
+                                F.col("vec_id").alias("_b")), "_a")
         pairs = p if pairs is None else pairs.unionByName(p)
     dorig = (pairs
-             .join(emb.select(F.col(id_col).alias("_a"),
-                              F.col(vec_col).alias("_va")), "_a")
-             .join(emb.select(F.col(id_col).alias("_b"),
-                              F.col(vec_col).alias("_vb")), "_b")
+             .join(emb.select(F.col("vec_id").alias("_a"),
+                              F.col("embedding").alias("_va")), "_a")
+             .join(emb.select(F.col("vec_id").alias("_b"),
+                              F.col("embedding").alias("_vb")), "_b")
              .select("_a", "_b",
                      F.aggregate(
                          F.zip_with("_va", "_vb",
@@ -1329,8 +1266,7 @@ def label_silhouette(df: DataFrame, label_col: str = "label",
         .withColumnRenamed("_l", label_col))
 
 
-def top_eigenvector(emb: DataFrame, vec_col: str = "embedding",
-                    rounds: int = 5) -> DataFrame:
+def top_eigenvector(emb: DataFrame, rounds: int = 5) -> DataFrame:
     """Top principal direction of the embedding Gram matrix via power
     iteration (E224) → one row per dimension: ``(dim, component,
     rayleigh)`` with the Rayleigh quotient repeated per row.
@@ -1358,7 +1294,7 @@ def top_eigenvector(emb: DataFrame, vec_col: str = "embedding",
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
-    gram = embedding_gram(emb, vec_col=vec_col).collect()
+    gram = embedding_gram(emb).collect()
     if not gram:
         return emb.sparkSession.createDataFrame(
             [], "dim int, component double, rayleigh double")

@@ -28,9 +28,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def salted_join(fact: DataFrame, dim: DataFrame, key: str,
-                n_salts: int = 8, salt_col: Column | None = None,
-                seed: int = 42) -> DataFrame:
+def salted_join(fact: DataFrame, dim: DataFrame, key: str, n_salts: int = 8,
+                salt_col: Column | None = None) -> DataFrame:
     """Inner equi-join on ``key`` with the fact side salted.
 
     ``salt_col`` defaults to a seeded uniform pick (row-level
@@ -40,7 +39,7 @@ def salted_join(fact: DataFrame, dim: DataFrame, key: str,
     ``dim`` must be disjoint apart from ``key``.
     """
     if salt_col is None:
-        salt_col = (F.rand(seed) * n_salts).cast("int")
+        salt_col = (F.rand(42) * n_salts).cast("int")
     f = fact.withColumn("_salt", salt_col)
     d = dim.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)])))
@@ -48,9 +47,8 @@ def salted_join(fact: DataFrame, dim: DataFrame, key: str,
     return out
 
 
-def salted_count_distinct(df: DataFrame, group_col: str,
-                          distinct_col: str, n_salts: int = 8,
-                          out_col: str = "n_distinct") -> DataFrame:
+def salted_count_distinct(df: DataFrame, group_col: str, distinct_col: str,
+                          n_salts: int = 8) -> DataFrame:
     """Exact COUNT(DISTINCT distinct_col) GROUP BY group_col, salted.
 
     Stage 1 groups by ``(group_col, hash(distinct_col) % n_salts)`` —
@@ -63,7 +61,7 @@ def salted_count_distinct(df: DataFrame, group_col: str,
                .groupBy(group_col, "_salt")
                .agg(F.count_distinct("_v").alias("_pc")))
     return (partial.groupBy(group_col)
-            .agg(F.sum("_pc").alias(out_col)))
+            .agg(F.sum("_pc").alias("n_distinct")))
 
 
 def skew_report(df: DataFrame, key_cols: list[str],

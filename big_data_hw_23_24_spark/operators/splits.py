@@ -30,9 +30,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+BUCKET_CHARS = 4  # md5 hex digits behind each split or copy draw
+SPLIT_FRACTIONS = {"train": 0.8, "val": 0.1, "test": 0.1}
+
 
 def split_thresholds(fractions: dict[str, float],
-                     bucket_chars: int = 4) -> list[tuple[str, str]]:
+                     bucket_chars: int = BUCKET_CHARS
+                     ) -> list[tuple[str, str]]:
     """(name, upper-bound hex) per split, cumulative, last bound open.
 
     Bounds are zero-padded lowercase hex of ``floor(cum_frac * 16^n)``
@@ -53,32 +57,26 @@ def split_thresholds(fractions: dict[str, float],
     return out
 
 
-def hash_split(df: DataFrame, key: Column | str,
-               fractions: dict[str, float] | None = None,
-               bucket_chars: int = 4,
-               out_col: str = "split") -> DataFrame:
+def hash_split(df: DataFrame, key: Column | str) -> DataFrame:
     """Assign each row a deterministic split from its content hash.
 
     ``key`` is the column (or Column expression) whose md5 decides the
     bucket — typically the document text (content-keyed: re-ingested
     copies land identically) or a stable id. Adds ``bucket`` (the hex
-    prefix) and ``out_col``; never drops or reorders rows.
+    prefix) and ``split``; never drops or reorders rows.
     """
-    fractions = fractions or {"train": 0.8, "val": 0.1, "test": 0.1}
     key = F.col(key) if isinstance(key, str) else key
-    bucket = F.substring(F.md5(key), 1, bucket_chars)
-    bounds = split_thresholds(fractions, bucket_chars)
+    bucket = F.substring(F.md5(key), 1, BUCKET_CHARS)
+    bounds = split_thresholds(SPLIT_FRACTIONS)
     assign = F.lit(bounds[-1][0])
     for name, bound in reversed(bounds[:-1]):
         assign = F.when(bucket < bound, name).otherwise(assign)
-    return df.withColumn("bucket", bucket).withColumn(out_col, assign)
+    return df.withColumn("bucket", bucket).withColumn("split", assign)
 
 
 def mix_sources(df: DataFrame, rates: dict[str, float],
-                key: Column | str = "text",
-                source_col: str = "source",
                 default_rate: float = 0.0,
-                bucket_chars: int = 4) -> DataFrame:
+                bucket_chars: int = BUCKET_CHARS) -> DataFrame:
     """Deterministic per-source downsampling to target mixture rates
     → input rows + (bucket, keep_rate, keep).
 
@@ -96,7 +94,6 @@ def mix_sources(df: DataFrame, rates: dict[str, float],
         raise ValueError(f"rates must be in [0,1]: {rates}")
     if not 0 <= default_rate <= 1:
         raise ValueError(f"default_rate must be in [0,1]: {default_rate}")
-    key = F.col(key) if isinstance(key, str) else key
     space = 16 ** bucket_chars
     # keep-fractions are floored to 1/space granularity (bucket_chars=4
     # → 1/65536 ≈ 1.5e-5). A nonzero rate that floors to zero buckets
@@ -112,7 +109,7 @@ def mix_sources(df: DataFrame, rates: dict[str, float],
             f"rates {unrepresentable} are below 1/{space} and would keep "
             f"zero rows at bucket_chars={bucket_chars}; raise bucket_chars "
             f"(8 gives ~2.3e-10 granularity)")
-    bucket = F.substring(F.md5(key), 1, bucket_chars)
+    bucket = F.substring(F.md5(F.col("text")), 1, bucket_chars)
 
     def bound(rate: float) -> str:
         b = min(int(rate * space), space)
@@ -124,7 +121,7 @@ def mix_sources(df: DataFrame, rates: dict[str, float],
     rate_col = F.lit(default_rate)
     thresh = F.lit(bound(default_rate))
     for src, rate in sorted(rates.items()):
-        is_src = F.col(source_col) == src
+        is_src = F.col("source") == src
         rate_col = F.when(is_src, F.lit(rate)).otherwise(rate_col)
         thresh = F.when(is_src, F.lit(bound(rate))).otherwise(thresh)
     return (df.withColumn("bucket", bucket)
@@ -132,11 +129,7 @@ def mix_sources(df: DataFrame, rates: dict[str, float],
             .withColumn("keep", bucket < thresh))
 
 
-def temperature_resample(df: DataFrame, alpha: float = 0.5,
-                         key: Column | str = "text",
-                         source_col: str = "source",
-                         bucket_chars: int = 4,
-                         copy_col: str = "copy") -> DataFrame:
+def temperature_resample(df: DataFrame, alpha: float = 0.5) -> DataFrame:
     """Deterministic temperature-based source UP-sampling → one output
     row per copy, with ``(multiplicity, n_copies, copy)`` attached.
 
@@ -148,7 +141,7 @@ def temperature_resample(df: DataFrame, alpha: float = 0.5,
     unchanged). Fractional parts are realized per document by the
     engine's content-hash convention: every doc gets ``floor(m_s)``
     copies plus one more iff its md5 bucket falls below
-    ``frac(m_s)·16^bucket_chars`` — reproducible across runs, engines
+    ``frac(m_s)·16^BUCKET_CHARS`` — reproducible across runs, engines
     and partitionings, no RNG.
 
     α = 0.5 (the common default) is computed via ``sqrt``, which IEEE
@@ -164,16 +157,13 @@ def temperature_resample(df: DataFrame, alpha: float = 0.5,
     """
     if not 0 < alpha <= 1:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    if bucket_chars < 1 or bucket_chars > 8:
-        raise ValueError(f"bucket_chars must be in 1..8, got {bucket_chars}")
-    key = F.col(key) if isinstance(key, str) else key
-    space = 16 ** bucket_chars
+    space = 16 ** BUCKET_CHARS
 
     # NULL sources form their own group under groupBy, but an inner
     # equi-join would silently DROP them (NULL never equals NULL) —
     # an upsampling operator must not delete rows. Key the join on a
     # null-coalesced shadow column instead.
-    skey = F.coalesce(F.col(source_col).cast("string"),
+    skey = F.coalesce(F.col("source").cast("string"),
                       F.lit("\u0000<null>"))
     df = df.withColumn("_srckey", skey)
     counts = df.groupBy("_srckey").agg(F.count("*").alias("_ns"))
@@ -187,21 +177,18 @@ def temperature_resample(df: DataFrame, alpha: float = 0.5,
                      F.floor((m - F.floor(m)) * space).cast("long")
                      .alias("_extra")))
 
-    bucket_int = (F.conv(F.substring(F.md5(key), 1, bucket_chars), 16, 10)
-                  .cast("long"))
+    bucket_int = (F.conv(F.substring(F.md5(F.col("text")), 1, BUCKET_CHARS),
+                         16, 10).cast("long"))
     n_copies = (F.col("_base")
                 + (bucket_int < F.col("_extra")).cast("long"))
     return (df.join(F.broadcast(stats), "_srckey")
             .withColumn("n_copies", n_copies)
-            .withColumn(copy_col,
+            .withColumn("copy",
                         F.explode(F.sequence(F.lit(1), F.col("n_copies"))))
             .drop("_base", "_extra", "_srckey"))
 
 
-def leakage_safe_split(docs: DataFrame, components: DataFrame,
-                       fractions: dict[str, float] | None = None,
-                       id_col: str = "doc_id",
-                       out_col: str = "split") -> DataFrame:
+def leakage_safe_split(docs: DataFrame, components: DataFrame) -> DataFrame:
     """Near-dup-aware train/val/test split: every member of a near-dup
     COMPONENT lands in the same split, so an eval document can never
     be a close copy of a training document.
@@ -221,11 +208,11 @@ def leakage_safe_split(docs: DataFrame, components: DataFrame,
     then the same narrow md5-bucket map as ``hash_split``. No new
     shuffle beyond the join.
     """
-    lbl = components.select(F.col(id_col), F.col("component"))
-    joined = docs.join(lbl, id_col, "left")
-    gkey = F.coalesce(F.col("component"), F.col(id_col)).cast("string")
-    return hash_split(joined.withColumn("_gkey", gkey), "_gkey",
-                      fractions=fractions, out_col=out_col).drop("_gkey")
+    lbl = components.select(F.col("doc_id"), F.col("component"))
+    joined = docs.join(lbl, "doc_id", "left")
+    gkey = F.coalesce(F.col("component"), F.col("doc_id")).cast("string")
+    return hash_split(joined.withColumn("_gkey", gkey),
+                      "_gkey").drop("_gkey")
 
 
 def rendezvous_shard(key: Column, n_shards: int) -> Column:

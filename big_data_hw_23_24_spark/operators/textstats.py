@@ -12,6 +12,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+SPAN_K = 20  # chars per gram of char_span_flags
+SPAN_W = 8  # winnowing window of char_span_flags
+DECONTAM_N = 8  # words per decontamination n-gram
+NOVELTY_N = 3  # words per novelty n-gram
+
 # Tiny per-language stopword profiles for the heuristic detector.
 # Deliberately small + hard-coded: language ID at scale wants a real
 # model; this is the expression-only heuristic tier (SQL-expressible,
@@ -30,22 +35,20 @@ def _words(col: Column) -> Column:
     return lowered_words(col)
 
 
-def token_stats(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, n_chars_text, avg_token_len)."""
-    words = _words(F.col(text_col))
+    words = _words(F.col("text"))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(words).alias("n_tokens"),
-        F.length(text_col).alias("n_chars_text"),
+        F.length("text").alias("n_chars_text"),
         F.round(F.length(F.concat_ws("", words))
                 / F.greatest(F.size(words), F.lit(1)), 4)
         .alias("avg_token_len"),
     )
 
 
-def quality_scores(docs: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """Heuristic quality signals + composite score per document.
 
     Signals: length band, punctuation density, digit density, token
@@ -53,7 +56,7 @@ def quality_scores(docs: DataFrame, text_col: str = "text",
     weighted sum in [0,1] — a placeholder for a learned scorer, but
     the *plumbing* (full-corpus narrow map) is the real thing.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     n = F.greatest(F.length(t), F.lit(1))
     words = _words(t)
     punct = (F.length(t)
@@ -68,7 +71,7 @@ def quality_scores(docs: DataFrame, text_col: str = "text",
              + 0.2 * (1 - F.least(punct * 10, F.lit(1.0)))
              + 0.1 * (1 - F.least(digits * 10, F.lit(1.0))))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.round(punct, 6).alias("punct_ratio"),
         F.round(digits, 6).alias("digit_ratio"),
         F.round(rep, 6).alias("distinct_token_ratio"),
@@ -76,8 +79,7 @@ def quality_scores(docs: DataFrame, text_col: str = "text",
     )
 
 
-def detect_language(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def detect_language(docs: DataFrame) -> DataFrame:
     """Stopword-profile language ID → (doc_id, detected_lang, hits).
 
     Counts distinct profile stopwords present per language; argmax
@@ -85,7 +87,7 @@ def detect_language(docs: DataFrame, text_col: str = "text",
     profile matches at all. Pure expressions → runs at scan speed and
     has an exact SQL oracle.
     """
-    words = F.array_distinct(_words(F.col(text_col)))
+    words = F.array_distinct(_words(F.col("text")))
     hit_cols = {
         lang: F.size(F.array_intersect(
             words, F.array(*[F.lit(w) for w in profile])))
@@ -102,15 +104,14 @@ def detect_language(docs: DataFrame, text_col: str = "text",
         for i, lang in enumerate(langs)
     ]))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(best.hits > 0, best.lang).otherwise("und")
         .alias("detected_lang"),
         best.hits.alias("hits"),
     )
 
 
-def tfidf_top_terms(docs: DataFrame, k: int = 3, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """Top-k TF-IDF terms per document → (doc_id, term, tf, df, tfidf, rank).
 
     Classic corpus weighting a training-data pipeline uses for keyword
@@ -136,23 +137,22 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3, text_col: str = "text",
     # explode is cheap enough that the extra repartition stage costs
     # more than the parallelism buys (0.93 s → 1.44 s); the n-gram
     # concat explode in _ngram_pairs is the shape that needs it
-    words = _words(F.col(text_col))
+    words = _words(F.col("text"))
     n_docs = docs.count()
-    tf = (docs.select(F.col(id_col), F.explode(words).alias("term"))
-          .groupBy(id_col, "term").agg(F.count("*").alias("tf")))
+    tf = (docs.select(F.col("doc_id"), F.explode(words).alias("term"))
+          .groupBy("doc_id", "term").agg(F.count("*").alias("tf")))
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     score = F.col("tf") * F.log((F.lit(n_docs) + 1.0) / (F.col("df") + 1.0))
-    w = Window.partitionBy(id_col).orderBy(score.desc(), F.col("term"))
+    w = Window.partitionBy("doc_id").orderBy(score.desc(), F.col("term"))
     return (tf.join(df, "term")
             .withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
-            .select(id_col, "term", "tf", "df",
+            .select("doc_id", "term", "tf", "df",
                     F.round(score, 6).alias("tfidf"), "rank"))
 
 
-def token_chunks(docs: DataFrame, size: int = 64, stride: int = 48,
-                 text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def token_chunks(docs: DataFrame, size: int = 64,
+                 stride: int = 48) -> DataFrame:
     """Overlapping fixed-size token windows → (doc_id, chunk_id,
     n_chunk_tokens, chunk_text).
 
@@ -167,24 +167,23 @@ def token_chunks(docs: DataFrame, size: int = 64, stride: int = 48,
     parquet-scan speed and parallelizes over input splits. Token =
     non-empty segment of a single-space split; original case kept.
     """
-    words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
-    toked = docs.select(F.col(id_col), words.alias("_w"),
+    words = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    toked = docs.select(F.col("doc_id"), words.alias("_w"),
                         F.size(words).alias("_n")).where(F.col("_n") > 0)
     n_last = F.ceil(F.greatest(F.col("_n") - size, F.lit(0)) / stride) \
         .cast("int")
     chunk = toked.select(
-        id_col, "_w",
+        "doc_id", "_w",
         F.explode(F.sequence(F.lit(0), n_last)).alias("chunk_id"))
     piece = F.slice(F.col("_w"), F.col("chunk_id") * stride + 1, size)
     return chunk.select(
-        id_col, "chunk_id",
+        "doc_id", "chunk_id",
         F.size(piece).alias("n_chunk_tokens"),
         F.concat_ws(" ", piece).alias("chunk_text"),
     )
 
 
-def repetition_scores(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+def repetition_scores(docs: DataFrame) -> DataFrame:
     """Repetition quality signals → (doc_id, n_tokens, top_token_frac,
     dup_bigram_frac).
 
@@ -204,9 +203,9 @@ def repetition_scores(docs: DataFrame, text_col: str = "text",
     is bounded by document length. Documents with <1 token score 0 on
     both; with <2 tokens, 0 on bigrams.
     """
-    base = docs.select(F.col(id_col), F.col(text_col)) \
-        .repartition(F.col(id_col))
-    words = _words(F.col(text_col))
+    base = docs.select(F.col("doc_id"), F.col("text")) \
+        .repartition(F.col("doc_id"))
+    words = _words(F.col("text"))
     from .dedup import _shifted_gram_zip
 
     # CASE WHEN guards the <2-token branch (ANSI mode); the zip form
@@ -224,33 +223,32 @@ def repetition_scores(docs: DataFrame, text_col: str = "text",
     # explode_outer + count(w): empty documents keep their row (c=0 →
     # top_token_frac 0) without the size>0 filter a plain explode
     # implies, so no second scan or join is ever needed
-    ex = base.select(F.col(id_col), F.size(words).alias("n_tokens"),
+    ex = base.select(F.col("doc_id"), F.size(words).alias("n_tokens"),
                      F.round(dup_bg, 6).alias("dup_bigram_frac"),
                      F.explode_outer(words).alias("w"))
-    return (ex.groupBy(id_col, "w")
+    return (ex.groupBy("doc_id", "w")
             .agg(F.count("w").alias("c"),
                  F.first("n_tokens").alias("n_tokens"),
                  F.first("dup_bigram_frac").alias("dup_bigram_frac"))
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.max("c").alias("top_c"),
                  F.first("n_tokens").alias("n_tokens"),
                  F.first("dup_bigram_frac").alias("dup_bigram_frac"))
-            .select(id_col, "n_tokens",
+            .select("doc_id", "n_tokens",
                     F.round(F.col("top_c")
                             / F.greatest("n_tokens", F.lit(1)), 6)
                     .alias("top_token_frac"),
                     "dup_bigram_frac"))
 
 
-def content_fingerprints(docs: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
+def content_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, md5 fingerprint of normalized text, crc32, length).
 
     The exact-dedup key, exposed as a standalone fingerprinting op.
     """
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), " +", " ")
+    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), " +", " ")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.md5(norm).alias("fingerprint"),
         F.crc32(norm).alias("crc"),
         F.length(norm).alias("norm_len"),
@@ -293,8 +291,6 @@ def token_entropy(docs: DataFrame, text_col: str = "text",
 
 
 def winnow_fingerprints(docs: DataFrame, k: int = 4, w: int = 5,
-                        text_col: str = "text",
-                        id_col: str = "doc_id",
                         keep_selection: bool = False) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken
     2003, SIGMOD — the MOSS algorithm): hash every word k-gram, slide
@@ -318,7 +314,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 4, w: int = 5,
     projection on the line array; no explode, no shuffle, no Python.
     """
     empty = F.array().cast("array<string>")
-    words = F.filter(F.split(F.col(text_col), " "),
+    words = F.filter(F.split(F.col("text"), " "),
                      lambda x: x != F.lit(""))
     n = F.size(words)
     # sequence(1, 0) DESCENDS in Spark — guard the too-short cases to
@@ -347,7 +343,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 4, w: int = 5,
     base = (docs
             .withColumn("_g", grams)
             .withColumn("_s", F.array_sort(sel))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.size("_g").alias("n_grams"),
                     F.size("_s").alias("n_selected"),
                     F.md5(F.array_join("_s", ",")).alias("fp_set_md5"),
@@ -356,9 +352,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 4, w: int = 5,
 
 
 def winnow_overlap_pairs(docs: DataFrame, k: int = 4, w: int = 5,
-                         min_shared: int = 1, max_df: int | None = None,
-                         text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
+                         max_df: int | None = None) -> DataFrame:
     """Document-overlap candidates from winnowed fingerprints — the
     MOSS comparison step: explode each document's selected hashes into
     an inverted index, equi-join on the hash, and score each pair by
@@ -373,24 +367,23 @@ def winnow_overlap_pairs(docs: DataFrame, k: int = 4, w: int = 5,
     docs would otherwise create a quadratic bucket — same cure as
     boilerplate n-gram pruning).
     """
-    s = winnow_fingerprints(docs, k, w, text_col, id_col,
-                            keep_selection=True)
-    ex = s.select(F.col(id_col), F.col("n_selected"),
+    s = winnow_fingerprints(docs, k, w, keep_selection=True)
+    ex = s.select(F.col("doc_id"), F.col("n_selected"),
                   F.explode("selected").alias("_h"))
     if max_df is not None:
         freq = (ex.groupBy("_h")
                 .agg(F.count("*").alias("_df"))
                 .where(F.col("_df") <= max_df).select("_h"))
         ex = ex.join(freq, "_h", "left_semi")
-    a = ex.select(F.col(id_col).alias("id_a"),
+    a = ex.select(F.col("doc_id").alias("id_a"),
                   F.col("n_selected").alias("_na"), "_h")
-    b = ex.select(F.col(id_col).alias("id_b"),
+    b = ex.select(F.col("doc_id").alias("id_b"),
                   F.col("n_selected").alias("_nb"), "_h")
     return (a.join(b, ["_h"])
             .where(F.col("id_a") < F.col("id_b"))
             .groupBy("id_a", "id_b", "_na", "_nb")
             .agg(F.count("*").alias("n_shared"))
-            .where(F.col("n_shared") >= min_shared)
+            .where(F.col("n_shared") >= 1)
             .select("id_a", "id_b", F.col("n_shared").cast("int")
                     .alias("n_shared"),
                     F.round(F.col("n_shared")
@@ -399,13 +392,11 @@ def winnow_overlap_pairs(docs: DataFrame, k: int = 4, w: int = 5,
                     .alias("resemblance")))
 
 
-def char_span_flags(docs: DataFrame, k: int = 20, w: int = 8,
-                    min_docs: int = 2, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def char_span_flags(docs: DataFrame) -> DataFrame:
     """Repeated-substring flags at CHARACTER granularity → (doc_id,
     n_grams, n_selected, n_flagged, flag_frac): winnow-select char
-    ``k``-gram hashes per document, mine the selected hashes shared by
-    ≥ ``min_docs`` distinct documents, and report per doc how much of
+    ``SPAN_K``-gram hashes per document, mine the selected hashes
+    shared by ≥ 2 distinct documents, and report per doc how much of
     its selected fingerprint is corpus-repeated.
 
     Closes the gap the word-8-gram faces can't see: sub-word
@@ -416,15 +407,15 @@ def char_span_flags(docs: DataFrame, k: int = 20, w: int = 8,
     distribute; char-gram fingerprinting rides the same
     inverted-index shape as every dedup face here.
 
-    Deliberate design point: selection is WINNOWING (window-``w``
+    Deliberate design point: selection is WINNOWING (window-``SPAN_W``
     minima over the stride-1 hash sequence, Schleimer et al. 2003),
-    NOT stride-``w`` sampling. Strided windows only match when two
+    NOT stride-``SPAN_W`` sampling. Strided windows only match when two
     copies of a blob land at offsets congruent mod the stride —
     misaligned copies (the common case) go undetected. Winnowing's
     minima are content-defined, so the guarantee is
-    alignment-independent: any shared run of ≥ w+k-1 (27) chars
-    co-selects at least one hash in both documents. Cost is the same
-    ~2/(w+1) row-reduction a stride would buy.
+    alignment-independent: any shared run of ≥ SPAN_W+SPAN_K-1 (27)
+    chars co-selects at least one hash in both documents. Cost is the
+    same ~2/(SPAN_W+1) row-reduction a stride would buy.
 
     The per-position fingerprint is a DOUBLE POLYNOMIAL hash over the
     char code points — two independent Rabin-Karp hashes mod the
@@ -467,22 +458,23 @@ def char_span_flags(docs: DataFrame, k: int = 20, w: int = 8,
 
         out_n, out_sel = [], []
         for text in texts:
-            if text is None or len(text) < k:
+            if text is None or len(text) < SPAN_K:
                 out_n.append(0)
                 out_sel.append([])
                 continue
             c = np.frombuffer(text.encode("utf-32-le"),
                               dtype=np.uint32).astype(np.int64)
-            npos = len(c) - k + 1
+            npos = len(c) - SPAN_K + 1
             h1 = np.zeros(npos, dtype=np.int64)
             h2 = np.zeros(npos, dtype=np.int64)
-            for j in range(k):
+            for j in range(SPAN_K):
                 cj = c[j:j + npos]
                 h1 = (h1 * B1 + cj) % M1
                 h2 = (h2 * B2 + cj) % M2
             g = h1 * 2_147_483_648 + h2
-            if npos >= w:
-                sel = np.unique(sliding_window_view(g, w).min(axis=1))
+            if npos >= SPAN_W:
+                sel = np.unique(
+                    sliding_window_view(g, SPAN_W).min(axis=1))
             else:
                 sel = g.min(keepdims=True)
             out_n.append(npos)
@@ -490,22 +482,22 @@ def char_span_flags(docs: DataFrame, k: int = 20, w: int = 8,
         return pd.DataFrame({"n_grams": out_n, "sel": out_sel})
 
     base = (ensure_fanout(docs)
-            .withColumn("_wn", _winnow(F.col(text_col)))
-            .select(F.col(id_col),
+            .withColumn("_wn", _winnow(F.col("text")))
+            .select(F.col("doc_id"),
                     F.col("_wn.n_grams").alias("n_grams"),
                     F.col("_wn.sel").alias("_sel"))
             .localCheckpoint(eager=True))
-    pos = base.select(F.col(id_col), F.explode("_sel").alias("_h"))
+    pos = base.select(F.col("doc_id"), F.explode("_sel").alias("_h"))
     # _sel is distinct within a doc, so count(*) IS the distinct-doc
     # count — no count_distinct shuffle needed
     mined = (pos.groupBy("_h").agg(F.count("*").alias("_nd"))
-             .where(F.col("_nd") >= min_docs).select("_h"))
+             .where(F.col("_nd") >= 2).select("_h"))
     flags = (pos.join(mined, "_h")
-             .groupBy(id_col)
+             .groupBy("doc_id")
              .agg(F.count("*").cast("long").alias("n_flagged")))
     n_sel = F.size("_sel").cast("long")
-    return (base.join(flags, id_col, "left")
-            .select(F.col(id_col), F.col("n_grams"),
+    return (base.join(flags, "doc_id", "left")
+            .select(F.col("doc_id"), F.col("n_grams"),
                     n_sel.alias("n_selected"),
                     F.coalesce("n_flagged", F.lit(0)).cast("long")
                     .alias("n_flagged"),
@@ -523,8 +515,7 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def pii_scan(docs: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id") -> DataFrame:
+def pii_scan(docs: DataFrame) -> DataFrame:
     """Per-document PII/contact surface scan → (doc_id, n_emails,
     n_urls, has_pii).
 
@@ -534,20 +525,19 @@ def pii_scan(docs: DataFrame, text_col: str = "text",
     with patterns restricted to the regex subset Java and RE2 evaluate
     identically, so the scan is exactly SQL-oracle-checkable.
     """
-    n_emails = F.regexp_count(F.col(text_col),
+    n_emails = F.regexp_count(F.col("text"),
                               F.lit(PII_PATTERNS["emails"]))
-    n_urls = F.regexp_count(F.col(text_col), F.lit(PII_PATTERNS["urls"]))
+    n_urls = F.regexp_count(F.col("text"), F.lit(PII_PATTERNS["urls"]))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_emails.alias("n_emails"),
         n_urls.alias("n_urls"),
         ((n_emails + n_urls) > 0).alias("has_pii"),
     )
 
 
-def contamination_scan(docs: DataFrame, benchmark: DataFrame, n: int = 8,
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def contamination_scan(docs: DataFrame, benchmark: DataFrame,
+                       n: int = 8) -> DataFrame:
     """Benchmark decontamination: per-document count of word n-grams
     shared with ANY benchmark document → (doc_id, n_shared, contaminated).
 
@@ -563,15 +553,15 @@ def contamination_scan(docs: DataFrame, benchmark: DataFrame, n: int = 8,
     """
     from .dedup import word_shingles
 
-    doc_sh = (word_shingles(docs.select(id_col, text_col), text_col, n)
-              .select(id_col, F.explode("shingles").alias("shingle")))
-    bench_sh = (word_shingles(benchmark.select(text_col), text_col, n)
+    doc_sh = (word_shingles(docs.select("doc_id", "text"), n=n)
+              .select("doc_id", F.explode("shingles").alias("shingle")))
+    bench_sh = (word_shingles(benchmark.select("text"), n=n)
                 .select(F.explode("shingles").alias("shingle"))
                 .distinct())
     hits = (doc_sh.join(F.broadcast(bench_sh), "shingle", "left_semi")
-            .groupBy(id_col).agg(F.count("*").alias("n_shared")))
-    return (docs.select(id_col).join(hits, id_col, "left")
-            .select(id_col,
+            .groupBy("doc_id").agg(F.count("*").alias("n_shared")))
+    return (docs.select("doc_id").join(hits, "doc_id", "left")
+            .select("doc_id",
                     F.coalesce("n_shared", F.lit(0)).alias("n_shared"),
                     (F.coalesce("n_shared", F.lit(0)) > 0)
                     .alias("contaminated")))
@@ -601,9 +591,8 @@ def _ngram_pairs(docs: DataFrame, n: int, text_col: str,
             .groupBy(id_col, "ngram").agg(F.count("*").alias("c")))
 
 
-def boilerplate_ngrams(docs: DataFrame, n: int = 8, min_docs: int = 3,
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def boilerplate_ngrams(docs: DataFrame, n: int = 8,
+                       min_docs: int = 3) -> DataFrame:
     """Corpus-wide repeated-n-gram mining → (ngram, n_docs, n_occ):
     every word n-gram appearing in at least ``min_docs`` distinct
     documents — headers, footers, license blocks, navigation chrome —
@@ -616,7 +605,7 @@ def boilerplate_ngrams(docs: DataFrame, n: int = 8, min_docs: int = 3,
     raise ``min_docs`` with corpus size so the mined set stays
     broadcastable for ``doc_boilerplate_share``.
     """
-    return (_ngram_pairs(docs, n, text_col, id_col)
+    return (_ngram_pairs(docs, n, "text", "doc_id")
             .groupBy("ngram")
             .agg(F.count("*").alias("n_docs"),
                  F.sum("c").cast("long").alias("n_occ"))
@@ -661,21 +650,19 @@ def doc_boilerplate_share(docs: DataFrame, n: int = 8, min_docs: int = 3,
                     .alias("boiler_share")))
 
 
-def redact_pii(docs: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """PII redaction → (doc_id, text) with emails/URLs replaced by
     [EMAIL]/[URL] placeholders — the acting sibling of ``pii_scan``,
     the same Java∩RE2 patterns, still a pure narrow map."""
     redacted = F.regexp_replace(
-        F.regexp_replace(F.col(text_col),
+        F.regexp_replace(F.col("text"),
                          PII_PATTERNS["emails"], "[EMAIL]"),
         PII_PATTERNS["urls"], "[URL]")
-    return docs.select(F.col(id_col), redacted.alias(text_col))
+    return docs.select(F.col("doc_id"), redacted.alias("text"))
 
 
-def remove_repeated_spans(docs: DataFrame, n: int = 8, min_docs: int = 2,
-                          text_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
+def remove_repeated_spans(docs: DataFrame, n: int = 8,
+                          min_docs: int = 2) -> DataFrame:
     """Exact repeated-span REMOVAL → (doc_id, n_tokens, n_removed,
     clean_text): strip every token covered by a word n-gram that
     appears in ≥ ``min_docs`` distinct documents.
@@ -701,14 +688,12 @@ def remove_repeated_spans(docs: DataFrame, n: int = 8, min_docs: int = 2,
     never a corpus term. Short docs (< n words) pass through intact
     via the left join.
     """
-    return _repeated_span_removal(docs, n, min_docs, text_col, id_col,
+    return _repeated_span_removal(docs, n, min_docs, "text", "doc_id",
                                   keep_first_owner=False)
 
 
 def remove_repeated_spans_keepone(docs: DataFrame, n: int = 8,
-                                  min_docs: int = 2,
-                                  text_col: str = "text",
-                                  id_col: str = "doc_id") -> DataFrame:
+                                  min_docs: int = 2) -> DataFrame:
     """Exact repeated-span dedup, KEEP-ONE variant → (doc_id,
     n_tokens, n_removed, clean_text): for every word n-gram shared by
     ≥ ``min_docs`` distinct documents, the FIRST OWNER (minimum doc
@@ -735,7 +720,7 @@ def remove_repeated_spans_keepone(docs: DataFrame, n: int = 8,
     ``min(doc_id)`` as the owner and the flag join drops the owner's
     own rows before collecting starts — zero extra shuffles.
     """
-    return _repeated_span_removal(docs, n, min_docs, text_col, id_col,
+    return _repeated_span_removal(docs, n, min_docs, "text", "doc_id",
                                   keep_first_owner=True)
 
 
@@ -789,12 +774,10 @@ def _repeated_span_removal(docs: DataFrame, n: int, min_docs: int,
         F.array_join(clean, " ").alias("clean_text")))
 
 
-def decontaminate_spans(docs: DataFrame, benchmark: DataFrame, n: int = 8,
-                        text_col: str = "text", id_col: str = "doc_id",
-                        bench_text_col: str = "text") -> DataFrame:
+def decontaminate_spans(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Span-level benchmark decontamination → (doc_id, n_tokens,
     n_removed, clean_text): strip every token covered by a word
-    ``n``-gram that appears ANYWHERE in the benchmark corpus.
+    ``DECONTAM_N``-gram that appears ANYWHERE in the benchmark corpus.
 
     The surgical sibling of ``contamination_scan`` (doc-level FLAG,
     E27): instead of dropping a 50k-word document because one eval
@@ -815,45 +798,45 @@ def decontaminate_spans(docs: DataFrame, benchmark: DataFrame, n: int = 8,
     """
     from .util import ensure_fanout
 
-    words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
+    words = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
     grams = F.when(
-        F.size(words) >= n,
-        F.transform(F.sequence(F.lit(1), F.size(words) - n + 1),
+        F.size(words) >= DECONTAM_N,
+        F.transform(F.sequence(F.lit(1),
+                               F.size(words) - DECONTAM_N + 1),
                     lambda i: F.struct(
                         i.alias("start"),
-                        F.concat_ws(" ", F.slice(words, i, n))
+                        F.concat_ws(" ", F.slice(words, i, DECONTAM_N))
                         .alias("gram"))),
     ).otherwise(F.array().cast("array<struct<start:int,gram:string>>"))
     pos = (ensure_fanout(docs)
-           .select(F.col(id_col), F.explode(grams).alias("_p"))
-           .select(id_col, F.col("_p.start").alias("start"),
+           .select(F.col("doc_id"), F.explode(grams).alias("_p"))
+           .select("doc_id", F.col("_p.start").alias("start"),
                    F.col("_p.gram").alias("gram")))
 
     from .dedup import _shifted_gram_zip as _sgz
 
-    bwords = F.filter(F.split(F.col(bench_text_col), " "),
-                      lambda w: w != "")
+    bwords = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
     bgrams = F.when(
-        F.size(bwords) >= n,
-        F.transform(_sgz(bwords, n),
+        F.size(bwords) >= DECONTAM_N,
+        F.transform(_sgz(bwords, DECONTAM_N),
                     lambda x: F.concat_ws(
-                        " ", *[x[str(j)] for j in range(n)])),
+                        " ", *[x[str(j)] for j in range(DECONTAM_N)])),
     ).otherwise(F.array().cast("array<string>"))
     bench_grams = (benchmark.select(F.explode(bgrams).alias("gram"))
                    .distinct())
 
     flagged = (pos.join(F.broadcast(bench_grams), "gram")
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.array_sort(F.collect_set("start")).alias("_starts")))
-    joined = docs.join(flagged, id_col, "left").withColumn("_w", words)
+    joined = docs.join(flagged, "doc_id", "left").withColumn("_w", words)
     starts = F.coalesce(F.col("_starts"),
                         F.array().cast("array<int>"))
     clean = F.filter(
         F.col("_w"),
-        lambda w, i: ~F.exists(starts,
-                               lambda s: (s <= i + 1) & (i + 1 <= s + n - 1)))
+        lambda w, i: ~F.exists(
+            starts, lambda s: (s <= i + 1) & (i + 1 <= s + DECONTAM_N - 1)))
     return (joined.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("_w").cast("long").alias("n_tokens"),
         (F.size("_w") - F.size(clean)).cast("long").alias("n_removed"),
         F.array_join(clean, " ").alias("clean_text")))
@@ -889,8 +872,7 @@ def luhn_valid_sql(x: str, engine: str = "spark") -> str:
     raise ValueError(f"engine must be 'spark' or 'duckdb', got {engine!r}")
 
 
-def payment_pii_scan(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def payment_pii_scan(docs: DataFrame) -> DataFrame:
     """Payment-card PII scan → (doc_id, n_card_candidates,
     n_luhn_valid, has_payment_pii): contiguous 13-19-digit runs are
     candidates; a candidate passing the Luhn checksum counts as a
@@ -908,21 +890,19 @@ def payment_pii_scan(docs: DataFrame, text_col: str = "text",
     """
     # group index 0 (whole match) explicitly: Spark's default is group
     # 1, which errors on a group-less pattern (DuckDB defaults to 0)
-    cands = F.expr(f"regexp_extract_all({text_col}, '[0-9]{{13,19}}', 0)")
+    cands = F.expr("regexp_extract_all(text, '[0-9]{13,19}', 0)")
     valid = F.expr(
-        f"size(filter(regexp_extract_all({text_col}, '[0-9]{{13,19}}', 0), "
+        "size(filter(regexp_extract_all(text, '[0-9]{13,19}', 0), "
         f"x -> {luhn_valid_sql('x', 'spark')}))")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(cands).cast("long").alias("n_card_candidates"),
         valid.cast("long").alias("n_luhn_valid"),
         (valid > 0).alias("has_payment_pii"),
     )
 
 
-def sentence_pack_chunks(docs: DataFrame, max_tokens: int = 64,
-                         text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
+def sentence_pack_chunks(docs: DataFrame, max_tokens: int = 64) -> DataFrame:
     """Sentence-boundary greedy chunking -> (doc_id, chunk_id,
     n_sentences, n_chunk_tokens, chunk_text): pack CONSECUTIVE
     sentences into chunks of at most ``max_tokens`` words, starting a
@@ -960,18 +940,18 @@ def sentence_pack_chunks(docs: DataFrame, max_tokens: int = 64,
         "acc.cid as cid, "
         "concat(acc.asg, array(acc.cid)) as asg) END).asg"
     ).format(nt=nt.format(s="s"), mx=max_tokens)
-    sents = F.expr(f"filter(transform(split({text_col}, '[.]'), "
+    sents = F.expr("filter(transform(split(text, '[.]'), "
                    f"s -> trim(s)), s -> s <> '')")
-    base = (docs.select(F.col(id_col), sents.alias("_sents"))
+    base = (docs.select(F.col("doc_id"), sents.alias("_sents"))
             .where(F.size("_sents") > 0)
             .withColumn("_asg", F.expr(fold)))
     z = F.arrays_zip(F.col("_sents"), F.col("_asg"))
-    ex = (base.select(F.col(id_col), F.posexplode(z).alias("pos", "z"))
-          .select(F.col(id_col), "pos",
+    ex = (base.select(F.col("doc_id"), F.posexplode(z).alias("pos", "z"))
+          .select(F.col("doc_id"), "pos",
                   F.col("z._sents").alias("_sent"),
                   F.col("z._asg").alias("chunk_id")))
     sent_nt = F.expr(nt.format(s="_sent"))
-    return (ex.groupBy(id_col, "chunk_id")
+    return (ex.groupBy("doc_id", "chunk_id")
             .agg(F.count("*").cast("long").alias("n_sentences"),
                  F.sum(sent_nt).cast("long").alias("n_chunk_tokens"),
                  F.array_join(
@@ -980,13 +960,12 @@ def sentence_pack_chunks(docs: DataFrame, max_tokens: int = 64,
                              F.struct("pos", "_sent"))),
                          lambda s: s["_sent"]), " ")
                  .alias("chunk_text"))
-            .select(id_col, F.col("chunk_id").cast("int").alias("chunk_id"),
+            .select("doc_id", F.col("chunk_id").cast("int").alias("chunk_id"),
                     "n_sentences", "n_chunk_tokens", "chunk_text"))
 
 
-def pmi_collocations(docs: DataFrame, min_count: int = 5, k: int = 20,
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def pmi_collocations(docs: DataFrame, min_count: int = 5,
+                     k: int = 20) -> DataFrame:
     """Top-k PMI collocations -> (w1, w2, pair_count, pmi, rank): the
     adjacent-bigram pairs whose pointwise mutual information
     ``ln(p(x,y) / (p(x)·p(y)))`` is highest, with a ``min_count``
@@ -1014,7 +993,7 @@ def pmi_collocations(docs: DataFrame, min_count: int = 5, k: int = 20,
 
     from .dedup import _shifted_gram_zip
 
-    words = lowered_words(text_col)
+    words = lowered_words("text")
     grams = F.when(
         F.size(words) >= 2,
         F.transform(_shifted_gram_zip(words, 2),
@@ -1056,8 +1035,7 @@ def pmi_collocations(docs: DataFrame, min_count: int = 5, k: int = 20,
                 Window.orderBy(F.col("pmi").desc(), "w1", "w2"))))
 
 
-def zipf_fit(docs: DataFrame, text_col: str = "text",
-             group_col: str = "source") -> DataFrame:
+def zipf_fit(docs: DataFrame) -> DataFrame:
     """Per-group Zipf-law fit: OLS of ln(frequency) on ln(rank) over
     the group's word-frequency table → ``zipf_slope`` (Zipf predicts
     ≈ −1 for natural language), ``zipf_intercept``, ``zipf_r2``, plus
@@ -1082,15 +1060,15 @@ def zipf_fit(docs: DataFrame, text_col: str = "text",
     from .util import lowered_words
 
     freq = (docs
-            .select(F.col(group_col).alias("grp"),
-                    F.explode(lowered_words(text_col)).alias("w"))
+            .select(F.col("source").alias("grp"),
+                    F.explode(lowered_words("text")).alias("w"))
             .groupBy("grp", "w").agg(F.count("*").alias("c")))
     ranked = freq.withColumn(
         "r", F.row_number().over(
             Window.partitionBy("grp")
             .orderBy(F.col("c").desc(), F.col("w"))))
     return (ranked
-            .groupBy(F.col("grp").alias(group_col))
+            .groupBy(F.col("grp").alias("source"))
             .agg(F.count("*").alias("n_vocab"),
                  F.sum("c").alias("n_tokens"),
                  F.round(F.regr_slope(F.log("c"), F.log("r")), 6)
@@ -1101,9 +1079,7 @@ def zipf_fit(docs: DataFrame, text_col: str = "text",
                  .alias("zipf_r2")))
 
 
-def source_overlap_matrix(docs: DataFrame, n: int = 8,
-                          text_col: str = "text",
-                          source_col: str = "source") -> DataFrame:
+def source_overlap_matrix(docs: DataFrame, n: int = 8) -> DataFrame:
     """Directed cross-source n-gram containment matrix: for every
     ordered source pair (a, b), how many of a's DISTINCT word
     n-grams also occur in b, and the containment share
@@ -1123,29 +1099,27 @@ def source_overlap_matrix(docs: DataFrame, n: int = 8,
     (src_a, src_b) aggregate of at most |sources|² rows. Reuses
     ``_ngram_pairs``'s fanout-guarded explode.
     """
-    sg = (_ngram_pairs(docs.select(source_col, text_col), n, text_col,
-                       source_col)
-          .select(F.col(source_col), "ngram"))
-    sizes = sg.groupBy(source_col).agg(
+    sg = (_ngram_pairs(docs.select("source", "text"), n, "text",
+                       "source")
+          .select(F.col("source"), "ngram"))
+    sizes = sg.groupBy("source").agg(
         F.count("*").cast("long").alias("n_grams_a"))
-    inter = (sg.select(F.col(source_col).alias("src_a"), "ngram")
-             .join(sg.select(F.col(source_col).alias("src_b"), "ngram"),
+    inter = (sg.select(F.col("source").alias("src_a"), "ngram")
+             .join(sg.select(F.col("source").alias("src_b"), "ngram"),
                    "ngram")
              .where(F.col("src_a") != F.col("src_b"))
              .groupBy("src_a", "src_b")
              .agg(F.count("*").cast("long").alias("n_common")))
-    return (inter.join(sizes.withColumnRenamed(source_col, "src_a"),
+    return (inter.join(sizes.withColumnRenamed("source", "src_a"),
                        "src_a")
             .select("src_a", "src_b", "n_grams_a", "n_common",
                     F.round(F.col("n_common") / F.col("n_grams_a"), 6)
                     .alias("containment")))
 
 
-def vocab_growth_curve(docs: DataFrame, text_col: str = "text",
-                       group_col: str = "source",
-                       id_col: str = "doc_id") -> DataFrame:
+def vocab_growth_curve(docs: DataFrame) -> DataFrame:
     """Heaps'-law vocabulary-growth curve: per group, walk documents
-    in ``id_col`` order and report after each one the cumulative
+    in ``doc_id`` order and report after each one the cumulative
     token count and cumulative DISTINCT vocabulary → ``(group, id,
     n_words, cum_tokens, new_words, cum_vocab)``.
 
@@ -1167,19 +1141,19 @@ def vocab_growth_curve(docs: DataFrame, text_col: str = "text",
 
     from .util import lowered_words
 
-    tok = docs.select(F.col(group_col).alias("grp"), F.col(id_col),
-                      F.explode(lowered_words(text_col)).alias("w"))
-    per_doc = (docs.select(F.col(group_col).alias("grp"), F.col(id_col),
-                           F.size(lowered_words(text_col))
+    tok = docs.select(F.col("source").alias("grp"), F.col("doc_id"),
+                      F.explode(lowered_words("text")).alias("w"))
+    per_doc = (docs.select(F.col("source").alias("grp"), F.col("doc_id"),
+                           F.size(lowered_words("text"))
                            .alias("n_words")))
     first_occ = (tok.groupBy("grp", "w")
-                 .agg(F.min(id_col).alias("first_id")))
-    news = (first_occ.groupBy("grp", F.col("first_id").alias(id_col))
+                 .agg(F.min("doc_id").alias("first_id")))
+    news = (first_occ.groupBy("grp", F.col("first_id").alias("doc_id"))
             .agg(F.count("*").alias("new_words")))
-    w = (Window.partitionBy(group_col).orderBy(id_col)
+    w = (Window.partitionBy("source").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, 0))
-    return (per_doc.join(news, ["grp", id_col], "left")
-            .select(F.col("grp").alias(group_col), id_col,
+    return (per_doc.join(news, ["grp", "doc_id"], "left")
+            .select(F.col("grp").alias("source"), "doc_id",
                     F.col("n_words").cast("long").alias("n_words"),
                     F.coalesce("new_words", F.lit(0)).cast("long")
                     .alias("new_words"))
@@ -1189,8 +1163,7 @@ def vocab_growth_curve(docs: DataFrame, text_col: str = "text",
                         F.sum("new_words").over(w).cast("long")))
 
 
-def gram_novelty(docs: DataFrame, n: int = 3, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def gram_novelty(docs: DataFrame) -> DataFrame:
     """Per-document n-gram novelty → ``(doc_id, n_grams, n_novel,
     novelty)``: the fraction of a document's distinct word n-grams
     whose corpus-wide FIRST owner (min id) is this document.
@@ -1206,7 +1179,7 @@ def gram_novelty(docs: DataFrame, n: int = 3, text_col: str = "text",
     Scale shape: the inverted-index shape — explode to (doc, gram),
     one gram-keyed min aggregate (the owner election, deterministic
     under any partitioning), one gram-keyed equi-join back, one
-    doc-keyed aggregate. Documents shorter than ``n`` words have no
+    doc-keyed aggregate. Documents shorter than ``NOVELTY_N`` words have no
     grams and produce no row (same convention as the shingle CTE).
     The explode fans out POSITIONS and builds each gram after the
     Generate (with ``ensure_fanout`` on the scan): exploding a
@@ -1217,32 +1190,32 @@ def gram_novelty(docs: DataFrame, n: int = 3, text_col: str = "text",
     """
     from .util import ensure_fanout
 
-    words = F.filter(F.split(F.col(text_col), " "),
+    words = F.filter(F.split(F.col("text"), " "),
                      lambda w: w != F.lit(""))
-    t = (ensure_fanout(docs.select(F.col(id_col), words.alias("_w")))
-         .where(F.size("_w") >= n))
+    t = (ensure_fanout(docs.select(F.col("doc_id"), words.alias("_w")))
+         .where(F.size("_w") >= NOVELTY_N))
     sh = (t.select(
-        F.col(id_col), F.col("_w"),
-        F.explode(F.sequence(F.lit(0), F.size("_w") - n)).alias("_i"))
-        .select(F.col(id_col),
-                F.concat_ws(" ", F.slice("_w", F.col("_i") + 1, n))
+        F.col("doc_id"), F.col("_w"),
+        F.explode(F.sequence(F.lit(0), F.size("_w") - NOVELTY_N))
+        .alias("_i"))
+        .select(F.col("doc_id"),
+                F.concat_ws(" ",
+                            F.slice("_w", F.col("_i") + 1, NOVELTY_N))
                 .alias("gram"))
         .distinct())
-    own = sh.groupBy("gram").agg(F.min(id_col).alias("_owner"))
-    novel = (F.col("_owner") == F.col(id_col)).cast("int")
+    own = sh.groupBy("gram").agg(F.min("doc_id").alias("_owner"))
+    novel = (F.col("_owner") == F.col("doc_id")).cast("int")
     return (sh.join(own, "gram")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.count("*").cast("long").alias("n_grams"),
                  F.sum(novel).cast("long").alias("n_novel"),
                  F.round(F.sum(novel) / F.count("*"), 6)
                  .alias("novelty")))
 
 
-def ngram_count_table(docs: DataFrame, max_n: int = 3,
-                      min_count: int = 2, text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+def ngram_count_table(docs: DataFrame, min_count: int = 2) -> DataFrame:
     """Pruned n-gram count table → ``(n, gram, cnt)`` for every word
-    n-gram of order 1..``max_n`` occurring at least ``min_count``
+    n-gram of order 1..3 occurring at least ``min_count``
     times corpus-wide — the table a count-based LM (KenLM-style)
     or collocation miner trains from.
 
@@ -1254,7 +1227,7 @@ def ngram_count_table(docs: DataFrame, max_n: int = 3,
     ``min_count`` prune is what keeps the long tail (mostly
     hapax legomena, ~half the mass under Zipf) out of the output.
     """
-    words = F.filter(F.split(F.col(text_col), " "),
+    words = F.filter(F.split(F.col("text"), " "),
                      lambda w: w != F.lit(""))
 
     def gram_maker(k):
@@ -1266,7 +1239,7 @@ def ngram_count_table(docs: DataFrame, max_n: int = 3,
             F.concat_ws(" ", F.slice(words, i + 1, k)).alias("gram"))
 
     arrs = []
-    for k in range(1, max_n + 1):
+    for k in range(1, 4):
         g = F.when(
             F.size(words) >= k,
             F.transform(F.sequence(F.lit(0), F.size(words) - k),
@@ -1280,7 +1253,7 @@ def ngram_count_table(docs: DataFrame, max_n: int = 3,
     # that on one task (measured 5.8 s -> ~1 s at sf0.1)
     from .util import ensure_fanout
 
-    return (ensure_fanout(docs.select(F.col(text_col)))
+    return (ensure_fanout(docs.select(F.col("text")))
             .select(F.explode(combined).alias("g"))
             .select(F.col("g.n").cast("long").alias("n"),
                     F.col("g.gram").alias("gram"))
@@ -1289,9 +1262,8 @@ def ngram_count_table(docs: DataFrame, max_n: int = 3,
             .where(F.col("cnt") >= min_count))
 
 
-def rake_keyphrases(docs: DataFrame, stopwords: list[str], k: int = 3,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def rake_keyphrases(docs: DataFrame, stopwords: list[str],
+                    k: int = 3) -> DataFrame:
     """RAKE keyphrase extraction (Rose et al. 2010) → top-``k``
     ``(doc_id, phrase, n_words, score_milli, rank)`` per document.
 
@@ -1327,16 +1299,16 @@ def rake_keyphrases(docs: DataFrame, stopwords: list[str], k: int = 3,
 
     sw = F.array(*[F.lit(s) for s in stopwords])
     w = (docs.select(
-        F.col(id_col),
-        F.posexplode(F.filter(F.split(F.col(text_col), " "),
+        F.col("doc_id"),
+        F.posexplode(F.filter(F.split(F.col("text"), " "),
                               lambda x: x != F.lit("")))
         .alias("i", "word"))
         .withColumn("is_stop", F.array_contains(sw, F.col("word"))))
-    run = (Window.partitionBy(id_col).orderBy("i")
+    run = (Window.partitionBy("doc_id").orderBy("i")
            .rowsBetween(Window.unboundedPreceding, 0))
     w = w.withColumn("pid", F.sum(F.col("is_stop").cast("int")).over(run))
     cand = (w.where(~F.col("is_stop"))
-            .groupBy(id_col, "pid")
+            .groupBy("doc_id", "pid")
             .agg(F.transform(
                 F.sort_array(F.collect_list(F.struct("i", "word"))),
                 lambda s: s.word).alias("_ws"))
@@ -1344,7 +1316,7 @@ def rake_keyphrases(docs: DataFrame, stopwords: list[str], k: int = 3,
     # corpus-wide word stats over candidate members — an in-place
     # explode of the pinned arrays, not a join back to the token
     # stream
-    mem = cand.select(F.col(id_col), "pid",
+    mem = cand.select(F.col("doc_id"), "pid",
                       F.size("_ws").cast("long").alias("n_words"),
                       F.explode("_ws").alias("word"))
     wstats = (mem.groupBy("word")
@@ -1354,15 +1326,15 @@ def rake_keyphrases(docs: DataFrame, stopwords: list[str], k: int = 3,
         "_milli", F.floor(F.col("_deg") * 1000 / F.col("_freq"))
         .cast("long"))
     scored = (mem.join(wm.select("word", "_milli"), "word")
-              .groupBy(id_col, "pid")
+              .groupBy("doc_id", "pid")
               .agg(F.sum("_milli").cast("long").alias("score_milli")))
-    phrases = (cand.select(F.col(id_col), "pid",
+    phrases = (cand.select(F.col("doc_id"), "pid",
                            F.array_join("_ws", " ").alias("phrase"),
                            F.size("_ws").cast("long").alias("n_words"))
-               .join(scored, [id_col, "pid"])
-               .select(id_col, "phrase", "n_words", "score_milli")
+               .join(scored, ["doc_id", "pid"])
+               .select("doc_id", "phrase", "n_words", "score_milli")
                .distinct())
-    return grouped_topk(phrases, [id_col],
+    return grouped_topk(phrases, ["doc_id"],
                         [F.col("score_milli").desc(), F.col("phrase")],
                         k, rank_col="rank")
 
@@ -1394,8 +1366,7 @@ def k_anonymity_report(df: DataFrame, quasi_cols: list,
 
 
 def blocklist_gate(docs: DataFrame, terms: list[str],
-                   max_hits: int = 0, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+                   max_hits: int = 0) -> DataFrame:
     """Lexicon-based safety gate → ``(doc_id, n_hits, n_distinct_terms,
     hit_ratio, kept)``: count occurrences of blocklisted WORDS
     (whitespace-token match, case-insensitive) and keep documents with
@@ -1413,22 +1384,20 @@ def blocklist_gate(docs: DataFrame, terms: list[str],
     """
     lowered = [t.lower() for t in terms]
     arr = F.array(*[F.lit(t) for t in lowered])
-    words = F.filter(F.split(F.lower(F.col(text_col)), " "),
+    words = F.filter(F.split(F.lower(F.col("text")), " "),
                      lambda w: w != F.lit(""))
     hits = F.filter(words, lambda w: F.array_contains(arr, w))
     n_hits = F.size(hits).cast("long")
     n_words = F.greatest(F.size(words), F.lit(1))
     return docs.select(
-        F.col(id_col), n_hits.alias("n_hits"),
+        F.col("doc_id"), n_hits.alias("n_hits"),
         F.size(F.array_distinct(hits)).cast("long")
         .alias("n_distinct_terms"),
         F.round(n_hits / n_words, 6).alias("hit_ratio"),
         (n_hits <= max_hits).alias("kept"))
 
 
-def language_confusion(docs: DataFrame, lang_col: str = "lang",
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def language_confusion(docs: DataFrame) -> DataFrame:
     """Detector-vs-label confusion matrix → ``(lang, detected_lang,
     n_docs, label_total, recall)`` — the QA report for the heuristic
     language detector against provenance labels.
@@ -1442,21 +1411,20 @@ def language_confusion(docs: DataFrame, lang_col: str = "lang",
     one division). Two aggregates on the bounded label × detected
     grid; the detection itself is the zero-shuffle narrow map.
     """
-    det = detect_language(docs, text_col, id_col) \
-        .select(id_col, "detected_lang")
-    j = det.join(docs.select(F.col(id_col), F.col(lang_col)), id_col)
-    cells = (j.groupBy(lang_col, "detected_lang")
+    det = detect_language(docs) \
+        .select("doc_id", "detected_lang")
+    j = det.join(docs.select(F.col("doc_id"), F.col("lang")), "doc_id")
+    cells = (j.groupBy("lang", "detected_lang")
              .agg(F.count("*").cast("long").alias("n_docs")))
-    totals = (cells.groupBy(lang_col)
+    totals = (cells.groupBy("lang")
               .agg(F.sum("n_docs").cast("long").alias("label_total")))
-    return (cells.join(totals, lang_col)
-            .select(lang_col, "detected_lang", "n_docs", "label_total",
+    return (cells.join(totals, "lang")
+            .select("lang", "detected_lang", "n_docs", "label_total",
                     F.round(F.col("n_docs") / F.col("label_total"), 6)
                     .alias("recall")))
 
 
-def prefix_completions(docs: DataFrame, text_col: str = "text",
-                       n_words: int = 2, prefix_len: int = 3,
+def prefix_completions(docs: DataFrame, n_words: int = 2, prefix_len: int = 3,
                        k: int = 3) -> DataFrame:
     """Autocomplete / prefix index (E170) → ``(prefix, rank,
     completion, n)``: the ``k`` most frequent ``n_words``-word
@@ -1472,7 +1440,7 @@ def prefix_completions(docs: DataFrame, text_col: str = "text",
     """
     from .util import lowered_words
 
-    words = lowered_words(text_col)
+    words = lowered_words("text")
     comp = F.array_join(F.slice(words, 1, n_words), " ")
     base = (docs.select(comp.alias("completion"))
             .where(F.length("completion") >= prefix_len)
@@ -1489,8 +1457,7 @@ def prefix_completions(docs: DataFrame, text_col: str = "text",
                       "completion", "n")
 
 
-def readability_scores(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def readability_scores(docs: DataFrame) -> DataFrame:
     """Flesch readability (E174) → ``(doc_id, n_words, n_sentences,
     n_syllables, flesch, fk_grade)``.
 
@@ -1512,12 +1479,12 @@ def readability_scores(docs: DataFrame, text_col: str = "text",
     One narrow map, no shuffle at all — at 100 TB this is a free
     rider on any existing corpus scan.
     """
-    words = F.filter(F.split(F.col(text_col), " "),
+    words = F.filter(F.split(F.col("text"), " "),
                      lambda w: w != "")
     n_w = F.size(words)
     n_s = F.greatest(
         F.lit(1),
-        F.size(F.regexp_extract_all(F.col(text_col),
+        F.size(F.regexp_extract_all(F.col("text"),
                                     F.lit("[.!?]+"), F.lit(0))))
     syl = F.aggregate(
         words, F.lit(0),
@@ -1528,7 +1495,7 @@ def readability_scores(docs: DataFrame, text_col: str = "text",
     wps = n_w.cast("double") / n_s.cast("double")
     spw = syl.cast("double") / n_w.cast("double")
     return (docs.where(n_w > 0)
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     n_w.cast("long").alias("n_words"),
                     n_s.cast("long").alias("n_sentences"),
                     syl.cast("long").alias("n_syllables"),
@@ -1538,8 +1505,7 @@ def readability_scores(docs: DataFrame, text_col: str = "text",
                             - F.lit(15.59), 6).alias("fk_grade")))
 
 
-def source_jsd_matrix(docs: DataFrame, text_col: str = "text",
-                      source_col: str = "source") -> DataFrame:
+def source_jsd_matrix(docs: DataFrame) -> DataFrame:
     """Pairwise Jensen-Shannon divergence between source unigram
     distributions (E202) → one row per unordered source pair:
     ``(source_a, source_b, n_union, jsd)``.
@@ -1563,8 +1529,8 @@ def source_jsd_matrix(docs: DataFrame, text_col: str = "text",
     word. For hundreds of sources, shard the pair grid into batches;
     the per-pair math is unchanged.
     """
-    w = (docs.select(F.col(source_col).alias("_s"),
-                     F.explode(F.split(F.lower(F.col(text_col)), " "))
+    w = (docs.select(F.col("source").alias("_s"),
+                     F.explode(F.split(F.lower(F.col("text")), " "))
                      .alias("_w"))
          .where(F.col("_w") != ""))
     cnt = w.groupBy("_s", "_w").agg(F.count("*").cast("long").alias("_c"))

@@ -26,45 +26,46 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+MIN_BASELINE = 3  # trailing days an anomaly baseline needs
+MAX_DECAY_DAYS = 19  # age past which an event no longer trends
 
-def daily_anomaly_scores(events: DataFrame, key_col: str = "event_type",
-                         ts_col: str = "ts", trailing_days: int = 7,
-                         min_baseline: int = 3,
-                         z_threshold: float = 2.0) -> DataFrame:
-    """Per-(key, day) count anomaly vs the trailing-``trailing_days``
-    baseline → ``(key, day, n, baseline_avg, baseline_std, z,
+
+def daily_anomaly_scores(events: DataFrame) -> DataFrame:
+    """Per-(event_type, day) count anomaly vs the trailing-7-day
+    baseline → ``(event_type, day, n, baseline_avg, baseline_std, z,
     is_anomaly)``.
 
-    ``z = (n − avg) / std`` over the ROWS frame ``[−trailing_days,
-    −1]`` (strictly prior days); null when the baseline has fewer
-    than ``min_baseline`` days or zero variance — a flat baseline
+    ``z = (n − avg) / std`` over the ROWS frame ``[−7, −1]`` (strictly
+    prior days); null when the baseline has fewer than
+    ``MIN_BASELINE`` days or zero variance — a flat baseline
     makes any deviation infinite-z, which is a data-quality signal of
     its own, not an anomaly score. ``is_anomaly`` is the
-    ``|z| > z_threshold`` decision with nulls coalesced to false.
+    ``|z| > 2`` decision with nulls coalesced to false.
     """
     daily = (events
-             .groupBy(F.col(key_col), F.to_date(ts_col).alias("day"))
+             .groupBy(F.col("event_type"), F.to_date("ts").alias("day"))
              .agg(F.count("*").alias("n")))
-    w = (Window.partitionBy(key_col).orderBy("day")
-         .rowsBetween(-trailing_days, -1))
+    w = (Window.partitionBy("event_type").orderBy("day")
+         .rowsBetween(-7, -1))
     avg = F.avg("n").over(w)
     std = F.stddev_samp("n").over(w)
     cnt = F.count("n").over(w)
-    z = F.when((cnt >= min_baseline) & (std > 0),
+    z = F.when((cnt >= MIN_BASELINE) & (std > 0),
                (F.col("n") - avg) / std)
     return (daily
-            .select(key_col, "day", F.col("n").cast("long").alias("n"),
-                    F.when(cnt >= min_baseline, F.round(avg, 6))
+            .select("event_type", "day",
+                    F.col("n").cast("long").alias("n"),
+                    F.when(cnt >= MIN_BASELINE, F.round(avg, 6))
                     .alias("baseline_avg"),
-                    F.when(cnt >= min_baseline, F.round(std, 6))
+                    F.when(cnt >= MIN_BASELINE, F.round(std, 6))
                     .alias("baseline_std"),
                     F.round(z, 6).alias("z"),
-                    F.coalesce(F.abs(z) > z_threshold, F.lit(False))
+                    F.coalesce(F.abs(z) > 2.0, F.lit(False))
                     .alias("is_anomaly")))
 
 
-def ticks_us(events: DataFrame, ts_col: str = "ts"):
-    """Integer-microsecond tick Column for ``ts_col``, engine-portable.
+def ticks_us(events: DataFrame):
+    """Integer-microsecond tick Column for ``events.ts``, engine-portable.
 
     TIMESTAMP and TIMESTAMP_NTZ (the parquet NANOS column surfaces as
     either depending on session conf history) go through
@@ -82,15 +83,12 @@ def ticks_us(events: DataFrame, ts_col: str = "ts"):
     An already-integer column is used as-is (caller's tick unit).
     DuckDB's identical integer is ``epoch_ns(ts) // 1000``.
     """
-    dtype = dict(events.dtypes).get(ts_col, "")
+    dtype = dict(events.dtypes).get("ts", "")
     if dtype == "bigint":
-        return F.col(ts_col)
-    return F.unix_micros(F.col(ts_col).cast("timestamp"))
+        return F.col("ts")
+    return F.unix_micros(F.col("ts").cast("timestamp"))
 
-def user_activity_profile(events: DataFrame, user_col: str = "user_id",
-                          ts_col: str = "ts",
-                          id_col: str = "event_id",
-                          min_gaps: int = 5) -> DataFrame:
+def user_activity_profile(events: DataFrame) -> DataFrame:
     """Inter-arrival burstiness profile per user → ``(user_id,
     n_events, n_gaps, min_gap_us, mean_gap_us, n_bursts,
     burst_flag)`` — the bot/automation screen over an event log.
@@ -99,50 +97,48 @@ def user_activity_profile(events: DataFrame, user_col: str = "user_id",
     gap (self-normalized, so the screen is rate- and scale-invariant:
     the same definition works at sf0.001 and at production volume);
     ``burst_flag`` fires when more than a quarter of a user's ≥
-    ``min_gaps`` gaps are bursts — organic exponential arrivals sit
+    5 gaps are bursts — organic exponential arrivals sit
     right at that line (P[gap < mean/4] ≈ 0.22), schedulers and
     scripted replays sit far above it. All arithmetic is INTEGER
     microseconds — ``unix_micros`` of the timestamp column (means use
     integer division), so both engines agree exactly; an already-
-    integer ``ts_col`` is used as-is (caller's tick unit).
+    integer ``ts`` is used as-is (caller's tick unit).
 
     Scale shape: one user-keyed lag window, one user-keyed
     sum/count window over the 16-byte (user, gap) projection, one
     keyed aggregate. Ties in arrival order break on the event id.
     """
-    tick = ticks_us(events, ts_col)
-    w = Window.partitionBy(user_col).orderBy(tick, F.col(id_col))
+    tick = ticks_us(events)
+    w = Window.partitionBy("user_id").orderBy(tick, F.col("event_id"))
     g = events.select(
-        F.col(user_col),
+        F.col("user_id"),
         (tick - F.lag(tick).over(w)).alias("gap_us"))
-    wu = Window.partitionBy(user_col)
+    wu = Window.partitionBy("user_id")
     m = g.select(
-        user_col, "gap_us",
+        "user_id", "gap_us",
         F.sum("gap_us").over(wu).alias("_tot"),
         F.count("gap_us").over(wu).alias("_cnt"))
     burst = F.expr("CASE WHEN _cnt > 0 AND gap_us * 4 < _tot div _cnt "
                    "THEN 1 ELSE 0 END")
-    agg = (m.groupBy(user_col)
+    agg = (m.groupBy("user_id")
            .agg(F.max("_cnt").cast("long").alias("n_gaps"),
                 F.min("gap_us").alias("min_gap_us"),
                 F.max("_tot").alias("_tot"),
                 F.sum(burst).cast("long").alias("n_bursts")))
     return (agg.select(
-        user_col,
+        "user_id",
         (F.col("n_gaps") + 1).alias("n_events"),
         "n_gaps", "min_gap_us",
         F.expr("CASE WHEN n_gaps > 0 THEN _tot div n_gaps END")
         .alias("mean_gap_us"),
         "n_bursts",
-        ((F.col("n_gaps") >= min_gaps)
+        ((F.col("n_gaps") >= 5)
          & (F.col("n_bursts") * 4 > F.col("n_gaps")))
         .alias("burst_flag")))
 
 
 def session_paths(events: DataFrame, gap_minutes: int = 30,
-                  depth: int = 3, user_col: str = "user_id",
-                  ts_col: str = "ts", id_col: str = "event_id",
-                  type_col: str = "event_type") -> DataFrame:
+                  depth: int = 3) -> DataFrame:
     """Top-of-session path mining → ``(path, n_sessions)``: sessions
     are maximal runs with inter-event gaps ≤ ``gap_minutes``; a
     session's path is its first ``depth`` event types joined with
@@ -158,31 +154,29 @@ def session_paths(events: DataFrame, gap_minutes: int = 30,
     integer microseconds (``ticks_us``), so gap comparisons are exact
     in both engines.
     """
-    tick = ticks_us(events, ts_col)
-    w = Window.partitionBy(user_col).orderBy(tick, F.col(id_col))
+    tick = ticks_us(events)
+    w = Window.partitionBy("user_id").orderBy(tick, F.col("event_id"))
     gap_us = gap_minutes * 60 * 1_000_000
     gap = tick - F.lag(tick).over(w)
     new_sess = (gap.isNull() | (gap > gap_us)).cast("int")
-    run = (Window.partitionBy(user_col).orderBy(tick, F.col(id_col))
+    run = (Window.partitionBy("user_id").orderBy(tick, F.col("event_id"))
            .rowsBetween(Window.unboundedPreceding, 0))
     s = events.select(
-        F.col(user_col), F.col(type_col), F.col(id_col),
+        F.col("user_id"), F.col("event_type"), F.col("event_id"),
         tick.alias("_tk"),
         F.sum(new_sess).over(run).alias("_sid"))
-    per = (s.groupBy(user_col, "_sid")
+    per = (s.groupBy("user_id", "_sid")
            .agg(F.array_join(
                F.slice(F.transform(
                    F.sort_array(F.collect_list(
-                       F.struct("_tk", id_col, type_col))),
-                   lambda r: r[type_col]), 1, depth), ">")
+                       F.struct("_tk", "event_id", "event_type"))),
+                   lambda r: r["event_type"]), 1, depth), ">")
                .alias("path")))
     return (per.groupBy("path")
             .agg(F.count("*").cast("long").alias("n_sessions")))
 
 
-def trending_items(events: DataFrame, item_col: str = "item",
-                   ts_col: str = "ts", k: int = 20,
-                   max_decay_days: int = 19) -> DataFrame:
+def trending_items(events: DataFrame, k: int = 20) -> DataFrame:
     """Time-decayed trending items → top-``k`` ``(item, n_events,
     decayed_micros)`` by exponentially decayed event counts
     (half-life = one day).
@@ -191,7 +185,7 @@ def trending_items(events: DataFrame, item_col: str = "item",
     faces: yesterday's spike outranks last week's steady drip. The
     decay weight is deliberately INTEGER MICROS — each event
     contributes ``floor(1e6 / 2^days_ago)`` (0 past
-    ``max_decay_days``, where the contribution is sub-micro anyway) —
+    ``MAX_DECAY_DAYS``, where the contribution is sub-micro anyway) —
     so the score is an exact integer sum: no float summation, no
     cross-engine ulp, no pow() library variance. Days are integer
     day-numbers off the µs tick (``ticks_us``), and "now" is the
@@ -202,18 +196,18 @@ def trending_items(events: DataFrame, item_col: str = "item",
     output is totally ordered by (decayed desc, item) so the top-k
     SET is deterministic even at the boundary.
     """
-    day = F.floor(ticks_us(events, ts_col) / F.lit(86_400_000_000)) \
+    day = F.floor(ticks_us(events) / F.lit(86_400_000_000)) \
         .cast("long")
-    base = (events.where(F.col(item_col).isNotNull())
-            .select(F.col(item_col).alias("item"), day.alias("_day")))
+    base = (events.where(F.col("item").isNotNull())
+            .select(F.col("item"), day.alias("_day")))
     ref = base.agg(F.max("_day").alias("_ref"))
     d = F.col("_ref") - F.col("_day")
     # 2^d via pow on a capped exponent: exactly representable doubles
-    # for every d <= max_decay_days, so the floor'd quotient is the
+    # for every d <= MAX_DECAY_DAYS, so the floor'd quotient is the
     # identical integer in both engines (shiftleft would be the
     # natural form but takes only a literal bit count)
-    denom = F.pow(F.lit(2.0), F.least(d, F.lit(max_decay_days)))
-    w = F.when(d <= max_decay_days,
+    denom = F.pow(F.lit(2.0), F.least(d, F.lit(MAX_DECAY_DAYS)))
+    w = F.when(d <= MAX_DECAY_DAYS,
                F.floor(F.lit(1_000_000) / denom)).otherwise(F.lit(0)) \
         .cast("long")
     return (base.crossJoin(F.broadcast(ref))
@@ -227,11 +221,7 @@ def trending_items(events: DataFrame, item_col: str = "item",
 
 def attribution_report(events: DataFrame, conversion_type: str,
                        touch_types: list[str],
-                       lookback_hours: int = 24,
-                       user_col: str = "user_id",
-                       type_col: str = "event_type",
-                       ts_col: str = "ts",
-                       id_col: str = "event_id") -> DataFrame:
+                       lookback_hours: int = 24) -> DataFrame:
     """U-shaped (position-based) multi-touch attribution (E152) →
     ``(channel, n_touches, credit_ppm)``.
 
@@ -255,15 +245,16 @@ def attribution_report(events: DataFrame, conversion_type: str,
     """
     # ticks only ever feed differences and ordering here, so the
     # constant session-tz offset ticks_us may apply cancels out
-    us = ticks_us(events, ts_col)
+    us = ticks_us(events)
     look = lookback_hours * 3_600_000_000
-    conv = (events.where(F.col(type_col) == conversion_type)
-            .select(F.col(user_col).alias("_u"),
-                    F.col(id_col).alias("_cid"), us.alias("_cts")))
-    touch = (events.where(F.col(type_col).isin(touch_types))
-             .select(F.col(user_col).alias("_u"),
-                     F.col(id_col).alias("_tid"),
-                     F.col(type_col).alias("channel"), us.alias("_tts")))
+    conv = (events.where(F.col("event_type") == conversion_type)
+            .select(F.col("user_id").alias("_u"),
+                    F.col("event_id").alias("_cid"), us.alias("_cts")))
+    touch = (events.where(F.col("event_type").isin(touch_types))
+             .select(F.col("user_id").alias("_u"),
+                     F.col("event_id").alias("_tid"),
+                     F.col("event_type").alias("channel"),
+                     us.alias("_tts")))
     cond = [conv["_u"] == touch["_u"],
             touch["_tts"] < conv["_cts"],
             touch["_tts"] >= conv["_cts"] - look]
@@ -629,9 +620,7 @@ def theilsen_trend(daily: DataFrame, key_cols: list[str], x_col: str,
                     F.round("_icept", 6).alias("intercept")))
 
 
-def peak_concurrency(events: DataFrame, gap_minutes: int = 30,
-                     user_col: str = "user_id", ts_col: str = "ts",
-                     id_col: str = "event_id") -> DataFrame:
+def peak_concurrency(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Sweep-line peak session concurrency per day (E203) → one row
     per day: ``(day, peak, peak_minute)``.
 
@@ -655,16 +644,16 @@ def peak_concurrency(events: DataFrame, gap_minutes: int = 30,
     """
     from .ranking import global_cumsum
 
-    tick = ticks_us(events, ts_col)
-    w = Window.partitionBy(user_col).orderBy(tick, F.col(id_col))
+    tick = ticks_us(events)
+    w = Window.partitionBy("user_id").orderBy(tick, F.col("event_id"))
     gap_us = gap_minutes * 60 * 1_000_000
     gap = tick - F.lag(tick).over(w)
     new_sess = (gap.isNull() | (gap > gap_us)).cast("int")
     run = w.rowsBetween(Window.unboundedPreceding, 0)
-    s = events.select(F.col(user_col).alias("_u"), tick.alias("_tk"),
+    s = events.select(F.col("user_id").alias("_u"), tick.alias("_tk"),
                       F.sum(new_sess).over(
-                          Window.partitionBy(user_col)
-                          .orderBy(tick, F.col(id_col))
+                          Window.partitionBy("user_id")
+                          .orderBy(tick, F.col("event_id"))
                           .rowsBetween(Window.unboundedPreceding, 0))
                       .alias("_sid"))
     sess = s.groupBy("_u", "_sid").agg(F.min("_tk").alias("_t0"),

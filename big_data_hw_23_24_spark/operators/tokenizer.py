@@ -95,8 +95,7 @@ def vocab_coverage(docs: DataFrame,
                  F.max("total").cast("long").alias("total_tokens")))
 
 
-def unigram_logprob(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def unigram_logprob(docs: DataFrame) -> DataFrame:
     """Unigram-LM scoring → (doc_id, n_tokens, avg_neg_logprob): the
     perplexity-proxy quality filter (KenLM-style pipelines score docs
     against an n-gram LM and drop the tails; the unigram tier is the
@@ -117,22 +116,22 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text",
     # per-doc aggregate are satisfied by HashPartitioning(doc_id), so
     # the exploded token stream itself is never shuffled — only the
     # Zipf-small vocabulary aggregate and its one-row total window are
-    base = docs.select(F.col(id_col), F.col(text_col)) \
-        .repartition(F.col(id_col))
-    vocab = word_counts(base, text_col)
+    base = docs.select(F.col("doc_id"), F.col("text")) \
+        .repartition(F.col("doc_id"))
+    vocab = word_counts(base)
     # |V| rides the same vocab-scale window that computes the token
     # total — no eager driver action, so scoring is ONE Spark job
     # instead of a count() pass plus the real one
     w_tot = Window.partitionBy()
     vocab = vocab.withColumn("total", F.sum("n_occ").over(w_tot)) \
                  .withColumn("n_vocab", F.count("*").over(w_tot))
-    tok = (base.select(F.col(id_col),
-                       F.explode_outer(_words(F.col(text_col))).alias("word"))
-           .groupBy(id_col, "word").agg(F.count("word").alias("c")))
+    tok = (base.select(F.col("doc_id"),
+                       F.explode_outer(_words(F.col("text"))).alias("word"))
+           .groupBy("doc_id", "word").agg(F.count("word").alias("c")))
     neg_lp = -F.log((F.col("n_occ") + 1.0)
                     / (F.col("total") + F.col("n_vocab")))
     return (tok.join(vocab, "word", "left")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.sum("c").cast("long").alias("n_tokens"),
                  F.round(F.coalesce(
                      F.sum(F.col("c") * neg_lp) / F.sum("c"), F.lit(0.0)),
@@ -167,8 +166,8 @@ def _merge_pair(symbols, left: str, right: str):
     return F.aggregate(symbols, init, step, finish)
 
 
-def bpe_train(docs: DataFrame, n_merges: int = 8,
-              text_col: str = "text") -> list[tuple[str, str, int]]:
+def bpe_train(docs: DataFrame,
+              n_merges: int = 8) -> list[tuple[str, str, int]]:
     """Byte-pair-encoding training: learn ``n_merges`` merges over the
     corpus → [(left, right, pair_count), ...] in merge order.
 
@@ -194,7 +193,7 @@ def bpe_train(docs: DataFrame, n_merges: int = 8,
     # current vocab as a side effect. The PREVIOUS round's blocks can
     # only be dropped after that materialization (its partitions are
     # the current vocab's input), so unpersist trails by one round.
-    vocab = (word_counts(docs, text_col)
+    vocab = (word_counts(docs)
              .select(F.split("word", "").alias("syms"), "n_occ")
              .localCheckpoint(eager=False))
     prev: DataFrame | None = None
@@ -230,9 +229,8 @@ def bpe_train(docs: DataFrame, n_merges: int = 8,
     return merges
 
 
-def bpe_encode(docs: DataFrame, merges: Sequence[tuple[str, str]],
-               text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def bpe_encode(docs: DataFrame,
+               merges: Sequence[tuple[str, str]]) -> DataFrame:
     """Apply a learned merge list to the corpus → (doc_id, n_words,
     n_symbols, symbols): the tokenize step that turns text into BPE
     symbols for counting, packing, and batching.
@@ -247,12 +245,12 @@ def bpe_encode(docs: DataFrame, merges: Sequence[tuple[str, str]],
     the word (property-tested), so n_symbols is the real post-BPE
     sequence length packing should budget for.
     """
-    words = _words(F.col(text_col))
+    words = _words(F.col("text"))
     enc = lambda w: _encode_word(w, merges)  # noqa: E731
     symbols = F.flatten(F.transform(words, enc))
     per_word = F.transform(words, lambda w: F.size(enc(w)))
     return docs.select(
-        F.col(id_col), F.size(words).alias("n_words"),
+        F.col("doc_id"), F.size(words).alias("n_words"),
         F.aggregate(per_word, F.lit(0), lambda a, x: a + x)
         .alias("n_symbols"),
         symbols.alias("symbols"))
@@ -265,8 +263,7 @@ def _encode_word(word, merges: Sequence[tuple[str, str]]):
     return syms
 
 
-def bigram_logprob(docs: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def bigram_logprob(docs: DataFrame) -> DataFrame:
     """Conditional bigram-LM scoring → (doc_id, n_bigrams,
     avg_neg_logprob): the next tier above ``unigram_logprob`` on the
     KenLM-style quality-filter ladder — score each document by the
@@ -284,7 +281,7 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text",
     """
     from .dedup import _shifted_gram_zip
 
-    words = _words(F.col(text_col))
+    words = _words(F.col("text"))
     # CASE guards the <2-token branch for ANSI mode, as in textstats;
     # the zip form evaluates words per ROW, never per element (the
     # r12 shingling root-cause)
@@ -293,9 +290,9 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text",
         lambda x: F.struct(x["0"].alias("prev"), x["1"].alias("word")))
     ).otherwise(F.array().cast("array<struct<prev:string,word:string>>"))
 
-    base = docs.select(F.col(id_col), F.col(text_col)) \
-        .repartition(F.col(id_col))
-    uni = word_counts(base, text_col)
+    base = docs.select(F.col("doc_id"), F.col("text")) \
+        .repartition(F.col("doc_id"))
+    uni = word_counts(base)
     # |V| folded into the plan as a vocab-scale window count (the
     # unigram_logprob move): one Spark job, no eager driver action.
     # Every real ``prev`` matches the unigram table (same corpus), so
@@ -303,9 +300,9 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text",
     # contributes — where c = 0 and the CASE guard below already
     # yields 0.0.
     uni = uni.withColumn("n_vocab", F.count("*").over(Window.partitionBy()))
-    ex = base.select(F.col(id_col),
+    ex = base.select(F.col("doc_id"),
                      F.explode_outer(doc_pairs).alias("p"))
-    per = (ex.groupBy(id_col, "p.prev", "p.word")
+    per = (ex.groupBy("doc_id", "p.prev", "p.word")
            .agg(F.count("p").alias("c")))
     big = (base.select(F.explode(doc_pairs).alias("p"))
            .groupBy("p.prev", "p.word").agg(F.count("*").alias("c_vw")))
@@ -319,7 +316,7 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text",
         .otherwise(F.lit(0.0))
     return (per.join(big, ["prev", "word"], "left")
             .join(uni.withColumnRenamed("word", "prev"), ["prev"], "left")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.sum("c").cast("long").alias("n_bigrams"),
                  avg.alias("avg_neg_logprob")))
 
@@ -337,8 +334,7 @@ PRETOKEN_PATTERN = ("'(?:s|t|re|ve|m|ll|d)"
                     "| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 ]+")
 
 
-def pretokenize_stats(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+def pretokenize_stats(docs: DataFrame) -> DataFrame:
     """BPE-ish regex token counting → ``(doc_id, n_pretokens, n_words,
     n_numbers, n_contractions, n_punct, n_ws_tokens, fertility)``.
 
@@ -355,9 +351,9 @@ def pretokenize_stats(docs: DataFrame, text_col: str = "text",
     anchored-regex array filters, zero shuffle, streams at scan speed.
     """
     toks = F.coalesce(
-        F.regexp_extract_all(F.col(text_col), F.lit(PRETOKEN_PATTERN), 0),
+        F.regexp_extract_all(F.col("text"), F.lit(PRETOKEN_PATTERN), 0),
         F.array().cast("array<string>"))
-    words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
+    words = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
 
     def n_class(arr, pat):
         return F.size(F.filter(arr, lambda t: t.rlike(pat))).cast("long")
@@ -366,7 +362,7 @@ def pretokenize_stats(docs: DataFrame, text_col: str = "text",
     n_pre = F.size("_pt").cast("long")
     n_ws = F.size(words).cast("long")
     return t.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_pre.alias("n_pretokens"),
         n_class(F.col("_pt"), "^ ?[A-Za-z]+$").alias("n_words"),
         n_class(F.col("_pt"), "^ ?[0-9]+$").alias("n_numbers"),

@@ -19,11 +19,6 @@ assertions:
   the plan; 10-100× slower than the Arrow-batched forms
   (``ArrowEvalPython`` / ``FlatMapGroupsInPandas`` pass the lint —
   they are the engine's sanctioned extension points).
-* ``unpushed_scan`` — a parquet scan with a Filter directly above it
-  but an empty ``PushedFilters``: the predicate is evaluated after
-  the read instead of skipping row groups. (Heuristic: expression
-  predicates like HOF lambdas are legitimately unpushable; the
-  finding says "look", not "wrong".)
 
 Findings carry (rule, node excerpt) so callers can allowlist known
 cases the way the test suite allowlists the vocab-scale windows.
@@ -73,33 +68,9 @@ def _python_row_udfs(lines: list[str]) -> list[Finding]:
             for ln in lines if "BatchEvalPython" in ln]
 
 
-def _unpushed_scans(text: str) -> list[Finding]:
-    out = []
-    # formatted-mode sections pair Filter nodes with their child scans;
-    # cheap heuristic on simple mode: a FileScan with empty
-    # PushedFilters while the plan contains any Filter at all
-    scans = re.findall(r"FileScan parquet [^\n]*PushedFilters: \[\]", text)
-    if scans and "Filter " in text:
-        for s in scans:
-            out.append(Finding("unpushed_scan", s.strip()[:160]))
-    return out
-
-
-def lint(df: DataFrame,
-         rules: tuple[str, ...] = ("partitionless_window", "cartesian",
-                                   "python_row_udf")) -> list[Finding]:
-    """Lint ``df``'s physical plan; returns findings for the enabled
-    ``rules`` (``unpushed_scan`` is opt-in — expression predicates are
-    legitimately unpushable, so it reports hints, not defects)."""
-    text = explain_str(df, "simple")
-    lines = text.splitlines()
-    found: list[Finding] = []
-    if "partitionless_window" in rules:
-        found += _partitionless_windows(lines)
-    if "cartesian" in rules:
-        found += _cartesians(lines)
-    if "python_row_udf" in rules:
-        found += _python_row_udfs(lines)
-    if "unpushed_scan" in rules:
-        found += _unpushed_scans(text)
-    return found
+def lint(df: DataFrame) -> list[Finding]:
+    """Lint ``df``'s physical plan → the findings of the three rules
+    above, in rule order."""
+    lines = explain_str(df, "simple").splitlines()
+    return (_partitionless_windows(lines) + _cartesians(lines)
+            + _python_row_udfs(lines))

@@ -67,7 +67,10 @@ def _ensure_loaded() -> None:
         return
     from . import queries_relational  # noqa: F401
     from . import queries_algorithms  # noqa: F401
-    from . import queries_llm  # noqa: F401
+    from . import queries_llm_dedup  # noqa: F401
+    from . import queries_llm_similarity  # noqa: F401
+    from . import queries_llm_text  # noqa: F401
+    from . import queries_llm_pipeline  # noqa: F401
     _LOADED = True
 
 

@@ -189,10 +189,10 @@ def mrfft_centers(spark, sf_dir):
 ITEM_SEQUENCE_N = 10_000
 
 
-def _item_sequence(spark, sf_dir, n: int = ITEM_SEQUENCE_N):
+def _item_sequence(spark, sf_dir):
     e = load_table(spark, sf_dir, "events")
     rows = (e.select("user_id", "ts", "event_id")
-            .orderBy("ts", "event_id").limit(n)
+            .orderBy("ts", "event_id").limit(ITEM_SEQUENCE_N)
             .select("user_id").collect())
     return [r.user_id for r in rows]
 
@@ -212,7 +212,7 @@ def reservoir_sample_users(spark, sf_dir):
     return spark.createDataFrame(rows, "item bigint")
 
 
-def _run_c5_harness(spark, sf_dir, phi=0.007, eps=0.003, delta=0.1):
+def _run_c5_harness(spark, sf_dir):
     """Run the C5 streaming harness over deterministic file-replay
     micro-batches of the first 80% of the ts-ordered event item
     sequence; returns the finished monitor (exact histogram +
@@ -232,7 +232,7 @@ def _run_c5_harness(spark, sf_dir, phi=0.007, eps=0.003, delta=0.1):
         glob = write_microbatches(seq, d, n_buckets=10)
         stream = (spark.readStream.schema("seq long, item long")
                   .option("maxFilesPerTrigger", 1).parquet(glob))
-        monitor = FrequentItemsMonitor(n=n, phi=phi, eps=eps, delta=delta)
+        monitor = FrequentItemsMonitor(n=n, phi=0.007, eps=0.003, delta=0.1)
         run_frequent_items(spark, stream, monitor, timeout_sec=120)
         assert monitor.stream_length == n, \
             f"harness saw {monitor.stream_length} of {n} items"

@@ -1,8 +1,7 @@
 """LLM-pipeline queries, dedup tier: exact / MinHash-LSH / SimHash /
 containment / embedding-LSH / incremental / span-level deduplication
-faces and their audit reports. Split out of queries_llm.py in r9 (the
-file had grown past 5k lines); registration semantics unchanged — the
-aggregator queries_llm.py imports every tier module.
+faces and their audit reports. One of the four queries_llm_* tier
+modules ``queries._ensure_loaded`` imports.
 """
 
 from __future__ import annotations
@@ -10,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators.dedup import (  # noqa: F401  (used at query call time)
+    SIMHASH_FAMILY_BITS,
     exact_duplicate_groups,
     exact_jaccard_pairs,
     minhash_near_duplicates,
@@ -1132,6 +1132,9 @@ def dedup_containment_pairs(spark, sf_dir):
                                      threshold=0.9, max_df=100)
 
 
+SIMHASH_MAX_HAMMING = 3
+
+
 # --- md5-pinned SimHash near-dup face (E137, r9) --------------------------------
 # The E76/E104 pinning move applied to the LAST dedup fingerprint
 # family still rows-only: with the per-token hash pinned to the 60-bit
@@ -1143,8 +1146,9 @@ def dedup_containment_pairs(spark, sf_dir):
 # fingerprint, so a reorder is hamming-0 — every planted pair must
 # surface, while natural 15-bit band collisions exercise the
 # hamming-filter branch non-vacuously.
-def _simhash_md5_oracle_sql(max_hamming: int = 3, bits: int = 60) -> str:
-    chunks = max_hamming + 1
+def _simhash_md5_oracle_sql() -> str:
+    bits = SIMHASH_FAMILY_BITS["md5"]
+    chunks = SIMHASH_MAX_HAMMING + 1
     width = bits // chunks
     mask = (1 << width) - 1
     votes = ", ".join(
@@ -1186,7 +1190,7 @@ def _simhash_md5_oracle_sql(max_hamming: int = 3, bits: int = 60) -> str:
     )
     SELECT id_a, id_b, bit_count(xor(ha, hb))::BIGINT AS hamming
     FROM pairs
-    WHERE bit_count(xor(ha, hb)) <= {max_hamming}
+    WHERE bit_count(xor(ha, hb)) <= {SIMHASH_MAX_HAMMING}
     """
 
 
@@ -1208,7 +1212,8 @@ def dedup_simhash_pinned(spark, sf_dir):
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.array_join(F.array_sort(toks), " ").alias("text"))
     out = simhash_near_duplicates(docs.unionByName(sorted_copy),
-                                  max_hamming=3, hash_family="md5")
+                                  max_hamming=SIMHASH_MAX_HAMMING,
+                                  hash_family="md5")
     return out.select("id_a", "id_b",
                       F.col("hamming").cast("long").alias("hamming"))
 

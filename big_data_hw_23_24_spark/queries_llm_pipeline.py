@@ -1,7 +1,7 @@
 """LLM-pipeline queries, pipeline-assembly tier: corpus mixing /
 splits / sampling / packing / shards / snapshots / drift and ops
-analytics (events, cohorts, streaming ingest). Split out of
-queries_llm.py in r9; see queries_llm.py.
+analytics (events, cohorts, streaming ingest). One of the four
+queries_llm_* tier modules ``queries._ensure_loaded`` imports.
 """
 
 from __future__ import annotations
@@ -36,6 +36,7 @@ from .queries_llm_shared import (  # noqa: F401  (used inside f-string oracles)
     _synth_lines,
 )
 from .sources.tables import load_table
+from .streaming.late_audit import late_audit_oracle_sql
 
 
 # --- BPE pair statistics (tokenizer training, step 1) ------------------------
@@ -1468,8 +1469,10 @@ def corpus_zipf_fit(spark, sf_dir):
 # multiplication order (pr * (w/ow)) is mirrored exactly, and damping
 # constants are interpolated from the same Python doubles the Spark
 # plan uses, so both engines evaluate identical IEEE expressions.
-def _pagerank_oracle_sql(iterations: int = 3, damping: float = 0.85) -> str:
-    d, one_minus_d = repr(damping), repr(1.0 - damping)
+def _pagerank_oracle_sql() -> str:
+    from .operators.graph import PAGERANK_DAMPING, PAGERANK_ITERATIONS
+
+    d, one_minus_d = repr(PAGERANK_DAMPING), repr(1.0 - PAGERANK_DAMPING)
     parts = ["""
     WITH seq AS (
       SELECT user_id, ts, event_id,
@@ -1489,7 +1492,7 @@ def _pagerank_oracle_sql(iterations: int = 3, damping: float = 0.85) -> str:
     n AS (SELECT count(*)::DOUBLE AS n FROM nodes),
     outw AS (SELECT src, sum(w) AS ow FROM edges GROUP BY 1),
     pr0 AS (SELECT node, 1.0 / n.n AS pr FROM nodes, n)"""]
-    for i in range(1, iterations + 1):
+    for i in range(1, PAGERANK_ITERATIONS + 1):
         parts.append(f""",
     c{i} AS (SELECT e.dst AS node, sum(p.pr * (e.w / o.ow)) AS c
              FROM edges e JOIN pr{i - 1} p ON p.node = e.src
@@ -1503,7 +1506,7 @@ def _pagerank_oracle_sql(iterations: int = 3, damping: float = 0.85) -> str:
     parts.append(f"""
     SELECT p.node AS item, round(p.pr, 6) AS pagerank,
            coalesce(o.ow, 0.0) AS out_weight
-    FROM pr{iterations} p LEFT JOIN outw o ON o.src = p.node""")
+    FROM pr{PAGERANK_ITERATIONS} p LEFT JOIN outw o ON o.src = p.node""")
     return "".join(parts)
 
 
@@ -2900,6 +2903,19 @@ def events_hilbert_pruning(spark, sf_dir):
 # simulates the full protocol — cumulative batch maxima, the
 # one-batch-lagged filter, final-watermark emission — so the parity
 # row pins Spark's append-mode semantics end to end.
-from .streaming_entry_late import register_late_audit  # noqa: E402
+@register(
+    "streaming_late_data_audit",
+    late_audit_oracle_sql(),
+    doc="watermarked tumbling-count replay under md5-shuffled "
+        "(event-time-decorrelated) arrival: APPEND-mode emissions "
+        "vs the full protocol simulation — per-batch cumulative "
+        "maxima, eviction at the reported watermark, the late-row "
+        "filter lagging one batch behind it, never-finalized tail "
+        "windows withheld; 6 h windows, 12 h delay, 10 "
+        "micro-batches",
+)
+def streaming_late_data_audit(spark, sf_dir):
+    from .streaming.late_audit import run_late_data_audit
 
-register_late_audit()
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    return run_late_data_audit(spark, load_table(spark, sf_dir, "events"))

@@ -1,8 +1,11 @@
 """Cross-tier oracle helpers shared by the queries_llm_* tier modules:
 the shingle / synthetic-line / boilerplate / minhash-signature CTE
-builders and the pinned BPE merge table. Extracted verbatim from
-queries_llm.py in the r9 split; every string is part of a value-checked
-oracle — do not reformat casually.
+builders and the pinned BPE merge table. Every string is part of a
+value-checked oracle — do not reformat casually.
+
+Shingling/tokenization conventions are mirrored exactly between the
+Spark operators and the DuckDB oracle SQL (single-space split, empty
+tokens dropped, distinct word 3-grams).
 """
 
 from __future__ import annotations

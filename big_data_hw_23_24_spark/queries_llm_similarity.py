@@ -1,6 +1,7 @@
 """LLM-pipeline queries, similarity tier: cosine / quantized / IVF /
 PQ ANN ladder, MMR rerank, k-means faces, Gram matrix, multimodal
-plumbing. Split out of queries_llm.py in r9; see queries_llm.py.
+plumbing. One of the four queries_llm_* tier modules
+``queries._ensure_loaded`` imports.
 """
 
 from __future__ import annotations
@@ -604,14 +605,17 @@ def embedding_pca_projected(spark, sf_dir):
         .alias("projected"))
 
 
+MMR_K, MMR_POOL, MMR_LAM = 5, 20, 0.7
+
+
 # --- MMR diversified re-ranking (E98) ----------------------------------------
 # Greedy selection is sequential in k, so the oracle unrolls the same
 # five argmax steps as CTEs (the PageRank pattern); scores are ranked
 # on RAW doubles in both engines -- safe because the engines' cosine
 # parity is already established by the knn_* faces -- and the damping
 # constants interpolate the same Python doubles the Spark plan uses.
-def _mmr_oracle_sql(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
-    l, l1 = repr(lam), repr(1.0 - lam)
+def _mmr_oracle_sql() -> str:
+    l, l1 = repr(MMR_LAM), repr(1.0 - MMR_LAM)
     sql = f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                FROM embeddings),
@@ -624,7 +628,7 @@ def _mmr_oracle_sql(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
                  ORDER BY list_cosine_similarity(q.qv, c.v) DESC,
                           c.vec_id) AS r
         FROM q JOIN e c ON c.vec_id <> q.query_id)
-      WHERE r <= {pool}
+      WHERE r <= {MMR_POOL}
     ),
     pick1 AS (
       SELECT query_id, cand_id, cv, rel, score, 1 AS mmr_rank FROM (
@@ -635,7 +639,7 @@ def _mmr_oracle_sql(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
     ),
     sel1 AS (SELECT query_id, cand_id, cv, rel, score, mmr_rank
              FROM pick1)"""
-    for i in range(2, k + 1):
+    for i in range(2, MMR_K + 1):
         p = i - 1
         sql += f""",
     rem{i} AS (SELECT pl.* FROM pool pl
@@ -663,7 +667,7 @@ def _mmr_oracle_sql(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
     SELECT query_id, cand_id AS neighbor_id,
            CAST(mmr_rank AS BIGINT) AS mmr_rank,
            round(rel, 6) AS cosine, round(score, 6) AS mmr_score
-    FROM sel{k}"""
+    FROM sel{MMR_K}"""
     return sql
 
 
@@ -681,7 +685,7 @@ def knn_mmr_rerank(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     return mmr_rerank(emb, emb.where(F.col("vec_id") < 5),
-                      k=5, pool_size=20, lam=0.7)
+                      k=MMR_K, pool_size=MMR_POOL, lam=MMR_LAM)
 
 
 # --- pinned-centroid IVF face (E139, r9) -----------------------------------------

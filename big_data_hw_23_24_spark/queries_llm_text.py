@@ -1,7 +1,7 @@
 """LLM-pipeline queries, text-analysis tier: quality batteries,
 LM scoring, tokenization/BPE encode faces, PII, decontamination,
-retrieval, chunking, ingestion parsing. Split out of queries_llm.py in
-r9; see queries_llm.py.
+retrieval, chunking, ingestion parsing. One of the four queries_llm_*
+tier modules ``queries._ensure_loaded`` imports.
 """
 
 from __future__ import annotations
@@ -1192,14 +1192,16 @@ def doc_html_extract(spark, sf_dir):
 # stride sampling — strided windows only match offset-congruent
 # copies) flags it with an alignment-independent >= 27-shared-chars
 # guarantee, riding the same inverted-index shape as every dedup face.
-def _char_poly_sql(b: int, m: int, k: int = 20) -> str:
+def _char_poly_sql(b: int, m: int) -> str:
     """Nested Rabin-Karp polynomial over the char-code list ``cs`` at
     1-based position ``i`` — the DuckDB mirror of the operator's
     fold (mod applied every step, so every intermediate fits BIGINT;
     the seed is cast so DuckDB types the whole nest BIGINT, not
     INT32 — an INT32 accumulator overflows at the first multiply)."""
+    from .operators.textstats import SPAN_K
+
     expr = "0::BIGINT"
-    for j in range(k):
+    for j in range(SPAN_K):
         expr = f"(({expr}) * {b} + cs[i+{j}]) % {m}"
     return expr
 

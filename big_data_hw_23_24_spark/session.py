@@ -18,6 +18,13 @@ from pyspark.sql import SparkSession
 # process may run on.
 _CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
+# Driver heap of the local profile: $SPARK_GRAFT_DRIVER_MEM, else half
+# the host's physical memory in whole GiB, at least 1g and at most 24g.
+_HALF_RAM_GIB = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+                 // 2 ** 31)
+_DRIVER_MEM = (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+               or f"{min(max(_HALF_RAM_GIB, 1), 24)}g")
+
 # Local test profile. local[N] = one JVM; shuffle partitions sized to
 # cores, not the 200 default. On a real cluster these confs are
 # supplied by spark-submit; only the AQE/timezone lines matter there.
@@ -28,7 +35,7 @@ _LOCAL_CONFS = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+    "spark.driver.memory": _DRIVER_MEM,
     "spark.ui.enabled": "false",
     # mirrors the reference cluster profile (G016HW2.java:58)
     "spark.locality.wait": "0s",

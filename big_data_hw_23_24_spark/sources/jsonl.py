@@ -18,11 +18,10 @@ from pyspark.sql import functions as F
 
 
 def parse_json_lines(df: DataFrame, json_col: str, schema_ddl: str,
-                     ok_probe: str, out_col: str = "rec",
-                     ok_col: str = "parse_ok") -> DataFrame:
+                     ok_probe: str) -> DataFrame:
     """Parse a JSON-string column against ``schema_ddl`` (DDL text,
-    e.g. ``"doc_id BIGINT, lang STRING"``), adding ``out_col`` (the
-    parsed struct) and ``ok_col``.
+    e.g. ``"doc_id BIGINT, lang STRING"``), adding ``rec`` (the
+    parsed struct) and ``parse_ok``.
 
     PERMISSIVE semantics: a malformed line parses to a struct of
     nulls, never an error. ``ok_probe`` names a field that is
@@ -33,13 +32,12 @@ def parse_json_lines(df: DataFrame, json_col: str, schema_ddl: str,
     state ``json_valid AND key IS NOT NULL``).
     """
     rec = F.from_json(F.col(json_col), schema_ddl)
-    return (df.withColumn(out_col, rec)
-            .withColumn(ok_col, rec[ok_probe].isNotNull()))
+    return (df.withColumn("rec", rec)
+            .withColumn("parse_ok", rec[ok_probe].isNotNull()))
 
 
 def parse_csv_lines(df: DataFrame, csv_col: str, schema_ddl: str,
-                    ok_probe: str, out_col: str = "rec",
-                    ok_col: str = "parse_ok") -> DataFrame:
+                    ok_probe: str) -> DataFrame:
     """The CSV sibling of :func:`parse_json_lines`: parse a
     CSV-formatted string column against ``schema_ddl`` with
     PERMISSIVE semantics — truncated lines yield null trailing
@@ -53,5 +51,5 @@ def parse_csv_lines(df: DataFrame, csv_col: str, schema_ddl: str,
     scan-speed, no Python, no shuffle.
     """
     rec = F.from_csv(F.col(csv_col), schema_ddl)
-    return (df.withColumn(out_col, rec)
-            .withColumn(ok_col, rec[ok_probe].isNotNull()))
+    return (df.withColumn("rec", rec)
+            .withColumn("parse_ok", rec[ok_probe].isNotNull()))

@@ -15,50 +15,38 @@ existing partitions).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+MODE = "overwrite"  # every sink replaces its target
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",
+
+def write_parquet(df: DataFrame, path: str,
                   partition_by: list[str] | None = None,
                   coalesce: int | None = None) -> None:
     if coalesce is not None:
         df = df.coalesce(coalesce)
-    w = df.write.mode(mode)
+    w = df.write.mode(MODE)
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite",
-              header: bool = True, sep: str = ",",
-              coalesce: int | None = None) -> None:
+def write_csv(df: DataFrame, path: str, coalesce: int | None = None) -> None:
     """CSV sink (reference-style line format, S2's inverse)."""
     if coalesce is not None:
         df = df.coalesce(coalesce)
-    df.write.mode(mode).option("header", header).option("sep", sep).csv(path)
+    df.write.mode(MODE).option("header", True).option("sep", ",").csv(path)
 
 
-def write_json(df: DataFrame, path: str, mode: str = "overwrite",
-               coalesce: int | None = None) -> None:
+def write_json(df: DataFrame, path: str, coalesce: int | None = None) -> None:
     if coalesce is not None:
         df = df.coalesce(coalesce)
-    df.write.mode(mode).json(path)
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def read_csv(spark: SparkSession, path: str, schema: str,
-             header: bool = True, sep: str = ",") -> DataFrame:
-    return (spark.read.schema(schema)
-            .option("header", header).option("sep", sep).csv(path))
+    df.write.mode(MODE).json(path)
 
 
 def write_bucketed_table(df: DataFrame, table: str, bucket_col: str,
-                         n_buckets: int = 32, mode: str = "overwrite",
-                         sort: bool = True) -> None:
+                         n_buckets: int = 32) -> None:
     """Bucketed + sorted managed table (``saveAsTable`` — Spark only
     records bucket metadata in the catalog, not for path writes).
 
@@ -68,14 +56,12 @@ def write_bucketed_table(df: DataFrame, table: str, bucket_col: str,
     Requires ``spark.sql.sources.bucketing.enabled`` (default true) and
     join parallelism = n_buckets.
     """
-    w = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort:
-        w = w.sortBy(bucket_col)
-    w.saveAsTable(table)
+    (df.write.mode(MODE).bucketBy(n_buckets, bucket_col)
+     .sortBy(bucket_col).saveAsTable(table))
 
 
 def write_sorted_parquet(df: DataFrame, path: str, sort_cols: list[str],
-                         n_files: int = 8, mode: str = "overwrite") -> None:
+                         n_files: int = 8) -> None:
     """Range-partitioned, sorted parquet — data skipping for readers.
 
     ``repartitionByRange`` + ``sortWithinPartitions`` makes both the
@@ -89,12 +75,11 @@ def write_sorted_parquet(df: DataFrame, path: str, sort_cols: list[str],
     """
     (df.repartitionByRange(n_files, *sort_cols)
        .sortWithinPartitions(*sort_cols)
-       .write.mode(mode).parquet(path))
+       .write.mode(MODE).parquet(path))
 
 
 def write_zorder_parquet(df: DataFrame, path: str, cols: list[str],
                          bits: int = 8, n_files: int = 16,
-                         mode: str = "overwrite",
                          rank_buckets: bool = False) -> None:
     """Z-ordered parquet — MULTI-column data skipping.
 
@@ -154,4 +139,4 @@ def write_zorder_parquet(df: DataFrame, path: str, cols: list[str],
        .repartitionByRange(n_files, "_z")
        .sortWithinPartitions("_z")
        .drop("_z", *[f"_zb_{c}" for c in cols if rank_buckets])
-       .write.mode(mode).parquet(path))
+       .write.mode(MODE).parquet(path))

@@ -38,6 +38,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+TIMEOUT_SEC = 180  # seconds a backfill may run
+
 
 def bucket_range_glob(src_dir: str, from_bucket: int,
                       to_bucket: int) -> str:
@@ -92,8 +94,7 @@ class BackfillSink:
 
 def run_backfill(spark: SparkSession, src_dir: str, schema: str,
                  from_bucket: int, to_bucket: int, out_root: str,
-                 checkpoint: str, timeout_sec: int = 180,
-                 max_files_per_trigger: int = 1) -> BackfillSink:
+                 checkpoint: str) -> BackfillSink:
     """Catch up the lagged bucket range [from_bucket, to_bucket]:
     bounded re-read (range-pruned glob, one bucket file per trigger),
     idempotent dynamic-overwrite landing, availableNow to completion.
@@ -105,33 +106,32 @@ def run_backfill(spark: SparkSession, src_dir: str, schema: str,
     glob = bucket_range_glob(src_dir, from_bucket, to_bucket)
     stream = (spark.readStream.schema(schema)
               .option("basePath", src_dir)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
+              .option("maxFilesPerTrigger", 1)
               .parquet(glob))
     sink = BackfillSink(out_root)
     q = (stream.writeStream.foreachBatch(sink)
          .trigger(availableNow=True)
          .option("checkpointLocation", checkpoint)
          .start())
-    if not q.awaitTermination(timeout_sec):
+    if not q.awaitTermination(TIMEOUT_SEC):
         # not an assert: under `python -O` an assert is stripped and a
         # timed-out backfill would return a silently partial landing
         q.stop()
         raise RuntimeError(
-            f"backfill did not finish within {timeout_sec}s")
+            f"backfill did not finish within {TIMEOUT_SEC}s")
     return sink
 
 
-def backfill_report(landed: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def backfill_report(landed: DataFrame) -> DataFrame:
     """Per-bucket landing audit → (bucket, n_docs, n_tokens,
     checksum): row counts plus the order-insensitive content checksum
     (sum of 32-bit id fingerprints, the shard-manifest convention) a
     rerun or an oracle can verify against the source — any duplicated,
     dropped, or foreign-bucket row breaks it.
     """
-    fp = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8),
+    fp = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
                 16, 10).cast("long")
-    n_tokens = F.size(F.filter(F.split(F.col(text_col), " "),
+    n_tokens = F.size(F.filter(F.split(F.col("text"), " "),
                                lambda w: w != ""))
     return (landed.groupBy(F.col("bucket").cast("long").alias("bucket"))
             .agg(F.count("*").cast("long").alias("n_docs"),

@@ -72,13 +72,11 @@ class DistinctItemsMonitor:
 
 def run_distinct_items(spark: SparkSession, stream: DataFrame,
                        monitor: DistinctItemsMonitor,
-                       item_col: str = "item",
-                       order_col: str | None = "seq",
                        timeout_sec: float = 60.0) -> DistinctItemsMonitor:
     """Run the monitor over a streaming DF until n items are seen."""
     query = (stream.writeStream
              .foreachBatch(lambda df, eid: monitor.process_batch(
-                 df, eid, item_col=item_col, order_col=order_col))
+                 df, eid, item_col="item", order_col="seq"))
              .outputMode("update")
              .trigger(processingTime="50 milliseconds")
              .start())
@@ -88,8 +86,7 @@ def run_distinct_items(spark: SparkSession, stream: DataFrame,
     return monitor
 
 
-def streaming_distinct_keys(stream: DataFrame, item_col: str = "item",
-                            timeout_sec: float = 120.0) -> list:
+def streaming_distinct_keys(stream: DataFrame) -> list:
     """The idiomatic state-store face of streaming dedup: Spark's own
     ``dropDuplicates`` operator keeps per-key state in the state store
     (RocksDB/HDFS-backed on a cluster — scales past driver memory,
@@ -105,13 +102,13 @@ def streaming_distinct_keys(stream: DataFrame, item_col: str = "item",
     oracle-checkable one).
     """
     out: list = []
-    query = (stream.select(item_col).dropDuplicates([item_col])
+    query = (stream.select("item").dropDuplicates(["item"])
              .writeStream
              .foreachBatch(lambda df, eid: out.extend(
                  r[0] for r in df.collect()))
              .outputMode("update")
              .trigger(availableNow=True)
              .start())
-    assert query.awaitTermination(timeout_sec), \
+    assert query.awaitTermination(120.0), \
         "streaming dropDuplicates timed out"
     return out

@@ -163,8 +163,7 @@ def rate_item_stream(spark: SparkSession, rows_per_second: int = 10_000,
             .select(F.col("value").alias("seq"), item.alias("item")))
 
 
-def streaming_histogram(spark: SparkSession, stream: DataFrame,
-                        item_col: str = "item") -> DataFrame:
+def streaming_histogram(spark: SparkSession, stream: DataFrame) -> DataFrame:
     """The idiomatic-Spark face of K3: stateful streaming count per item.
 
     Update-mode ``groupBy().count()`` — state lives in the state store
@@ -172,5 +171,5 @@ def streaming_histogram(spark: SparkSession, stream: DataFrame,
     is the right building block when the stream is unbounded rather
     than n-capped. Returned as a streaming DF for the caller to sink.
     """
-    return stream.groupBy(F.col(item_col).alias("item")) \
+    return stream.groupBy("item") \
         .agg(F.count("*").alias("cnt"))

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+TIMEOUT_SEC = 180.0  # seconds the replayed join may run
+
 
 def interval_join_streams(left: DataFrame, right: DataFrame,
                           left_key: str, right_key: str,
@@ -47,12 +49,10 @@ def interval_join_streams(left: DataFrame, right: DataFrame,
     return l.join(r, cond, "inner")
 
 
-def run_interval_join(spark, left: DataFrame, right: DataFrame,
-                      left_key: str, right_key: str,
-                      left_ts: str, right_ts: str,
+def run_interval_join(spark, left: DataFrame, right: DataFrame, left_key: str,
+                      right_key: str, left_ts: str, right_ts: str,
                       window_sec: int,
-                      watermark_delay: str = "1 hour",
-                      timeout_sec: float = 180.0) -> DataFrame:
+                      watermark_delay: str = "1 hour") -> DataFrame:
     """Drive the join over bounded (replayed) streams to completion and
     return the matched pairs as a batch DataFrame."""
     import uuid
@@ -65,10 +65,10 @@ def run_interval_join(spark, left: DataFrame, right: DataFrame,
              .outputMode("append")
              .trigger(availableNow=True)
              .start())
-    finished = query.awaitTermination(timeout_sec)
+    finished = query.awaitTermination(TIMEOUT_SEC)
     if not finished:
         query.stop()
         raise TimeoutError(
             f"stream-stream interval join did not finish within "
-            f"{timeout_sec}s; refusing to return a partial result")
+            f"{TIMEOUT_SEC}s; refusing to return a partial result")
     return spark.table(name)

@@ -54,12 +54,7 @@ DELAY_SEC = 43_200           # 12-hour watermark
 N_BUCKETS = 10
 
 
-def run_late_data_audit(spark: SparkSession, events: DataFrame,
-                        n_buckets: int = N_BUCKETS,
-                        window_sec: int = WINDOW_SEC,
-                        delay_sec: int = DELAY_SEC,
-                        id_col: str = "event_id",
-                        ts_col: str = "ts") -> DataFrame:
+def run_late_data_audit(spark: SparkSession, events: DataFrame) -> DataFrame:
     """Replay ``events`` md5-shuffled through a watermarked tumbling
     count and return the APPEND-mode emissions →
     ``(window_start, n_events)``, window_start as an ISO string.
@@ -70,18 +65,18 @@ def run_late_data_audit(spark: SparkSession, events: DataFrame,
     micro-batch ``b`` IS bucket ``b`` (the established replay
     contract)."""
     seq = global_rank(
-        events.select(F.col(id_col).alias("_id"), F.col(ts_col).alias("_ts"),
-                      F.md5(F.col(id_col).cast("string")).alias("_h")),
+        events.select(F.col("event_id").alias("_id"), F.col("ts").alias("_ts"),
+                      F.md5(F.col("event_id").cast("string")).alias("_h")),
         ["_h", "_id"], rank_col="_r").select(
         "_id", "_ts", (F.col("_r") - 1).alias("seq"))
     out_dir = tempfile.mkdtemp(prefix="late_audit_")
-    glob = write_microbatches(seq, out_dir, n_buckets=n_buckets,
+    glob = write_microbatches(seq, out_dir, n_buckets=N_BUCKETS,
                               order_col="seq")
     src = (spark.readStream
            .schema("_id long, _ts timestamp, seq long")
            .option("maxFilesPerTrigger", 1).parquet(glob))
-    agg = (src.withWatermark("_ts", f"{delay_sec} seconds")
-           .groupBy(F.window("_ts", f"{window_sec} seconds").alias("w"))
+    agg = (src.withWatermark("_ts", f"{DELAY_SEC} seconds")
+           .groupBy(F.window("_ts", f"{WINDOW_SEC} seconds").alias("w"))
            .agg(F.count("*").alias("n_events")))
     name = f"late_audit_{abs(hash(out_dir)) % 10 ** 8}"
     with replay_shuffle_cap(spark):
@@ -98,9 +93,7 @@ def run_late_data_audit(spark: SparkSession, events: DataFrame,
     return got.localCheckpoint(eager=True)
 
 
-def late_audit_oracle_sql(n_buckets: int = N_BUCKETS,
-                          window_sec: int = WINDOW_SEC,
-                          delay_sec: int = DELAY_SEC) -> str:
+def late_audit_oracle_sql() -> str:
     """The full-sequence protocol simulation as DuckDB SQL, generated
     from the same constants: bucket assignment from the identical
     md5-rank, cumulative per-batch maxima, the one-batch-lagged
@@ -116,9 +109,9 @@ def late_audit_oracle_sql(n_buckets: int = N_BUCKETS,
     ),
     batched AS (
       SELECT event_id, ts,
-             seq // ((n + {n_buckets - 1}) // {n_buckets}) AS b,
-             (epoch_ns(ts) // 1000) // {window_sec * 1_000_000}
-               * {window_sec} AS wstart_s
+             seq // ((n + {N_BUCKETS - 1}) // {N_BUCKETS}) AS b,
+             (epoch_ns(ts) // 1000) // {WINDOW_SEC * 1_000_000}
+               * {WINDOW_SEC} AS wstart_s
       FROM seq
     ),
     bmax AS (
@@ -131,13 +124,13 @@ def late_audit_oracle_sql(n_buckets: int = N_BUCKETS,
     wms AS (
       SELECT b,
              lag(cum_max_us, 1) OVER (ORDER BY b)
-               - {delay_sec * 1_000_000} AS wm_us,
+               - {DELAY_SEC * 1_000_000} AS wm_us,
              lag(cum_max_us, 2) OVER (ORDER BY b)
-               - {delay_sec * 1_000_000} AS filter_wm_us
+               - {DELAY_SEC * 1_000_000} AS filter_wm_us
       FROM bmax
     ),
     final_wm AS (
-      SELECT max(cum_max_us) - {delay_sec * 1_000_000} AS wm_us
+      SELECT max(cum_max_us) - {DELAY_SEC * 1_000_000} AS wm_us
       FROM bmax
     ),
     accepted AS (
@@ -145,12 +138,12 @@ def late_audit_oracle_sql(n_buckets: int = N_BUCKETS,
       FROM batched bt
       JOIN wms ON wms.b = bt.b
       WHERE wms.filter_wm_us IS NULL
-         OR (bt.wstart_s + {window_sec}) * 1000000 > wms.filter_wm_us
+         OR (bt.wstart_s + {WINDOW_SEC}) * 1000000 > wms.filter_wm_us
     )
     SELECT strftime(make_timestamp(wstart_s * 1000000),
                     '%Y-%m-%d %H:%M') AS window_start,
            count(*)::BIGINT AS n_events
     FROM accepted, final_wm
-    WHERE (wstart_s + {window_sec}) * 1000000 <= final_wm.wm_us
+    WHERE (wstart_s + {WINDOW_SEC}) * 1000000 <= final_wm.wm_us
     GROUP BY 1
     """

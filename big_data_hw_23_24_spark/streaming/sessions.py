@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+TIMEOUT_SEC = 120.0  # seconds the replayed sessionizer may run
+
 SESSION_SCHEMA = ("user_id bigint, session_start timestamp, "
                   "session_end timestamp, n_events bigint")
 STATE_SCHEMA = ("session_start timestamp, session_end timestamp, "
@@ -88,24 +90,18 @@ def make_sessionizer(gap: pd.Timedelta):
     return sessionize
 
 
-def sessionize_stream(events: DataFrame, gap_sec: int = 3600,
-                      user_col: str = "user_id",
-                      ts_col: str = "ts") -> DataFrame:
+def sessionize_stream(events: DataFrame, gap_sec: int = 3600) -> DataFrame:
     """Streaming DF of (user_id, ts, ...) → append-mode DF of closed
     sessions. State lives in the executor-side state store — one open
     session per user, O(#users) state total, no driver involvement."""
-    from pyspark.sql import functions as F
-
-    src = events.select(F.col(user_col).alias("user_id"),
-                        F.col(ts_col).alias("ts"))
+    src = events.select("user_id", "ts")
     return src.groupBy("user_id").applyInPandasWithState(
         make_sessionizer(pd.Timedelta(seconds=gap_sec)),
         SESSION_SCHEMA, STATE_SCHEMA,
         "append", GroupStateTimeout.NoTimeout)
 
 
-def run_sessionize(spark, stream: DataFrame, gap_sec: int = 3600,
-                   timeout_sec: float = 120.0) -> DataFrame:
+def run_sessionize(spark, stream: DataFrame, gap_sec: int = 3600) -> DataFrame:
     """Drive ``sessionize_stream`` over a bounded (replayed) stream to
     completion and return the closed sessions as a batch DataFrame."""
     import uuid
@@ -116,10 +112,10 @@ def run_sessionize(spark, stream: DataFrame, gap_sec: int = 3600,
              .outputMode("append")
              .trigger(availableNow=True)
              .start())
-    finished = query.awaitTermination(timeout_sec)
+    finished = query.awaitTermination(TIMEOUT_SEC)
     if not finished:
         query.stop()
         raise TimeoutError(
-            f"sessionize stream did not finish within {timeout_sec}s; "
+            f"sessionize stream did not finish within {TIMEOUT_SEC}s; "
             f"refusing to return a partial result")
     return spark.table(name)

@@ -20,9 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def windowed_event_counts(events: DataFrame,
-                          window_duration: str = "1 hour",
-                          ts_col: str = "ts",
+def windowed_event_counts(events: DataFrame, window_duration: str = "1 hour",
                           keys: tuple[str, ...] = (),
                           watermark_delay: str | None = None,
                           slide_duration: str | None = None) -> DataFrame:
@@ -34,9 +32,9 @@ def windowed_event_counts(events: DataFrame,
     """
     src = events
     if watermark_delay is not None:
-        src = src.withWatermark(ts_col, watermark_delay)
+        src = src.withWatermark("ts", watermark_delay)
     return (
-        src.groupBy(F.window(ts_col, window_duration,
+        src.groupBy(F.window("ts", window_duration,
                              slide_duration or window_duration).alias("w"),
                     *[F.col(k) for k in keys])
         .agg(F.count("*").alias("n_events"),
@@ -48,7 +46,6 @@ def windowed_event_counts(events: DataFrame,
 
 
 def deduped_stream(events: DataFrame, id_cols: tuple[str, ...] = ("event_id",),
-                   ts_col: str = "ts",
                    watermark_delay: str = "1 hour") -> DataFrame:
     """Streaming exact dedup on ``id_cols`` with bounded state.
 
@@ -60,5 +57,5 @@ def deduped_stream(events: DataFrame, id_cols: tuple[str, ...] = ("event_id",),
     every id ever seen). The batch face of the same semantic is
     ``operators/dedup.py::exact_duplicate_groups``.
     """
-    return (events.withWatermark(ts_col, watermark_delay)
+    return (events.withWatermark("ts", watermark_delay)
             .dropDuplicatesWithinWatermark(list(id_cols)))

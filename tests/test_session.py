@@ -1,5 +1,6 @@
 """The engine session's profile: the generated-code cache holds the star
-query mix, and the local core count comes from the host."""
+query mix, and the local core count and driver heap come from the
+host."""
 
 from __future__ import annotations
 
@@ -70,3 +71,12 @@ def test_local_profile_defaults_to_the_host_cpus(session_module, monkeypatch):
                         SimpleNamespace(builder=Builder()))
     session.get_session("cpus")
     assert masters == [f"local[{cpus}]"]
+
+
+def test_local_profile_sizes_the_driver_heap_from_the_host(session_module,
+                                                           monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    host = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": 8 * 2 ** 30 // 4096}
+    monkeypatch.setattr(os, "sysconf", lambda name: host[name])
+    session = importlib.reload(session_module)
+    assert session._LOCAL_CONFS["spark.driver.memory"] == "4g"

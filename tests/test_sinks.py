@@ -23,14 +23,14 @@ def _as_sets(df):
 
 
 def test_parquet_partitioned_roundtrip_and_pruning(spark, tmp_path):
-    from big_data_hw_23_24_spark.sources.sinks import read_parquet, write_parquet
+    from big_data_hw_23_24_spark.sources.sinks import write_parquet
 
     out = str(tmp_path / "pq")
     res = _pricing(spark)
     write_parquet(res, out, partition_by=["l_returnflag"], coalesce=1)
     # hive layout present → downstream partition pruning
     assert any(d.startswith("l_returnflag=") for d in os.listdir(out))
-    back = read_parquet(spark, out).select(*res.columns)
+    back = spark.read.parquet(out).select(*res.columns)
     assert _as_sets(back) == _as_sets(res)
     # pruned scan reads only the one partition directory
     plan = (back.where(F.col("l_returnflag") == "A")
@@ -39,14 +39,15 @@ def test_parquet_partitioned_roundtrip_and_pruning(spark, tmp_path):
 
 
 def test_csv_roundtrip(spark, tmp_path):
-    from big_data_hw_23_24_spark.sources.sinks import read_csv, write_csv
+    from big_data_hw_23_24_spark.sources.sinks import write_csv
 
     out = str(tmp_path / "csv")
     res = _pricing(spark)
     write_csv(res, out, coalesce=1)
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in res.schema.fields)
-    back = read_csv(spark, out, schema).select(*res.columns)
+    back = (spark.read.schema(schema).option("header", True)
+            .option("sep", ",").csv(out)).select(*res.columns)
     assert _as_sets(back) == _as_sets(res)
 
 

@@ -14,6 +14,7 @@ reference's tie order is nondeterministic (cells with equal size from
 hash-partition order) we pin a deterministic tiebreak and note it.
 """
 
+import math
 import sys
 from collections.abc import Callable
 
@@ -54,3 +55,38 @@ def choice(*allowed: str) -> Callable[[str], str]:
             raise ValueError(f"must be one of {', '.join(allowed)}")
         return value
     return parse
+
+
+def positive(parse: Callable[[str], float]) -> Callable[[str], float]:
+    """``parse``, then require a finite value > 0."""
+    def parse_positive(value: str) -> float:
+        x = parse(value)
+        if not (x > 0 and math.isfinite(x)):
+            raise ValueError("must be a finite number > 0")
+        return x
+    return parse_positive
+
+
+def fraction(value: str) -> float:
+    """A float strictly inside (0, 1)."""
+    x = float(value)
+    if not 0 < x < 1:
+        raise ValueError("must be in (0, 1)")
+    return x
+
+
+def parse_args(argv: list[str],
+               params: list[tuple[str, Callable[[str], object]]]
+               ) -> list | None:
+    """Positional values -> parsed values, one ``(name, parse)`` per
+    value. None on a ``parse`` ``ValueError``, after printing its
+    reason, so the CLI can print its usage line and exit 2 before it
+    builds a session."""
+    out = []
+    for (name, parse), value in zip(params, argv):
+        try:
+            out.append(parse(value))
+        except ValueError as e:
+            print(f"{name} {value!r}: {e}", file=sys.stderr)
+            return None
+    return out

@@ -17,9 +17,7 @@ corpus-preparation flow, parquet in → parquet out:
   2. filter   — keep docs above --min-quality in --langs
   2b. classify — optional hashed-linear quality classifier gate
                 (--classifier-min P): keep docs with model prob ≥ P
-                (the fastText/CCNet filter shape; swap in trained
-                weights via linear_quality_score_weighted). Zero
-                shuffle.
+                (the fastText/CCNet filter shape). Zero shuffle.
   2c. dsir    — optional DSIR importance filter (--dsir-target
                 col=value [--dsir-min W]): keep docs whose
                 hashed-bigram target-vs-raw log-likelihood ratio is

@@ -19,6 +19,8 @@ import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from . import parse_args, positive
+
 
 def _jfloat(v: float) -> str:
     """Java ``Float.toString`` lookalike: shortest float32 round-trip."""
@@ -75,16 +77,23 @@ def run(spark: SparkSession, filename: str, d: float, m: int, k: int,
     return lines
 
 
+USAGE = "Usage: hw1 <file> <D> <M> <K> <L>"
+PARAMS = [("D", positive(float)), ("M", positive(int)),
+          ("K", positive(int)), ("L", positive(int))]
+
+
 def main(argv: list[str]) -> int:
     if len(argv) < 5:
         print("Please provide filename, D, M, K, and L as command-line arguments")
         return 1
+    values = parse_args(argv[1:5], PARAMS)
+    if values is None:
+        print(USAGE)
+        return 2
     from ..session import get_session
 
-    filename, d, m, k, l = (argv[0], float(argv[1]), int(argv[2]),
-                            int(argv[3]), int(argv[4]))
     spark = get_session("G019HW1")
-    for line in run(spark, filename, d, m, k, l):
+    for line in run(spark, argv[0], *values):
         print(line)
     return 0
 

@@ -15,6 +15,8 @@ import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from . import parse_args, positive
+
 
 def run(spark: SparkSession, filename: str, m: int, k: int, l: int
         ) -> list[str]:
@@ -68,15 +70,22 @@ def run(spark: SparkSession, filename: str, m: int, k: int, l: int
     return lines
 
 
+USAGE = "Usage: hw2 <file> <M> <K> <L>"
+PARAMS = [("M", positive(int)), ("K", positive(int)), ("L", positive(int))]
+
+
 def main(argv: list[str]) -> int:
     if len(argv) < 4:
         print("Please provide filename, M, K, and L as command-line arguments")
         return 1
+    values = parse_args(argv[1:4], PARAMS)
+    if values is None:
+        print(USAGE)
+        return 2
     from ..session import get_session
 
-    filename, m, k, l = argv[0], int(argv[1]), int(argv[2]), int(argv[3])
     spark = get_session("G016HW2")
-    for line in run(spark, filename, m, k, l):
+    for line in run(spark, argv[0], *values):
         print(line)
     return 0
 

@@ -13,6 +13,7 @@ import sys
 
 from pyspark.sql import SparkSession
 
+from . import fraction, parse_args, positive
 from ..streaming.frequent_stream import (
     FrequentItemsMonitor,
     run_frequent_items,
@@ -66,15 +67,23 @@ def run(spark: SparkSession, n: int, phi: float, eps: float, delta: float,
     return report_lines(monitor, str(port))
 
 
+USAGE = "Usage: hw3 <n> <phi> <epsilon> <delta> <port> [host]"
+PARAMS = [("n", positive(int)), ("phi", fraction), ("epsilon", fraction),
+          ("delta", fraction), ("port", int)]
+
+
 def main(argv: list[str]) -> int:
     if len(argv) < 5:
         print("Please provide n, phi, epsilon, delta, port "
               "as command-line arguments")
         return 1
+    values = parse_args(argv[:5], PARAMS)
+    if values is None:
+        print(USAGE)
+        return 2
     from ..session import get_session
 
-    n, phi, eps, delta, port = (int(argv[0]), float(argv[1]),
-                                float(argv[2]), float(argv[3]), int(argv[4]))
+    n, phi, eps, delta, port = values
     # optional 6th arg overrides the course stream host
     # (algo.dei.unipd.it, Third Assignment.pdf PORTS section)
     host = argv[5] if len(argv) > 5 else "algo.dei.unipd.it"

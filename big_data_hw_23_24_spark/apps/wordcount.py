@@ -17,6 +17,10 @@ import sys
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from . import parse_args, positive
+
+USAGE = "Usage: wordcount <K> <file>"
+
 
 def run(spark: SparkSession, path: str, num_partitions: int = 4
         ) -> list[str]:
@@ -37,13 +41,16 @@ def run(spark: SparkSession, path: str, num_partitions: int = 4
 
 def main(argv: list[str]) -> int:
     if len(argv) < 2:
-        print("Usage: wordcount <K> <file>")
+        print(USAGE)
         return 1
-    k, path = int(argv[0]), argv[1]
+    values = parse_args(argv[:1], [("K", positive(int))])
+    if values is None:
+        print(USAGE)
+        return 2
     from ..session import get_session
 
     spark = get_session("WordCountExample")
-    for line in run(spark, path, num_partitions=k):
+    for line in run(spark, argv[1], num_partitions=values[0]):
         print(line)
     return 0
 

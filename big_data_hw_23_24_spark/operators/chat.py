@@ -14,8 +14,8 @@ Scale shape: ``posexplode`` of the per-conversation message array
 (fan-out = turns per conversation, single digits), one KEYED window
 per conversation for the running offset (conversations are the
 partition key — a billion-conversation corpus spreads over the
-cluster), and a keyed aggregate to reassemble full texts. All JVM
-string intrinsics; no Python, no global ordering anywhere.
+cluster). All JVM string intrinsics; no Python, no global ordering
+anywhere.
 """
 
 from __future__ import annotations
@@ -59,17 +59,3 @@ def chat_render_spans(convs: DataFrame) -> DataFrame:
         .alias("content_end"),
         rendered.alias("rendered"))
 
-
-def chat_texts(convs: DataFrame) -> DataFrame:
-    """Full rendered conversations → ``(conv_id, text, n_turns,
-    n_chars)``: the spans' companion face, reassembled with a keyed
-    aggregate (sort_array on the turn index, then join — no window)."""
-    spans = chat_render_spans(convs)
-    return (spans.groupBy("conv_id")
-            .agg(F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list(
-                        F.struct("turn", "rendered"))),
-                    lambda s: s.rendered), "").alias("text"),
-                F.count("*").cast("long").alias("n_turns"))
-            .withColumn("n_chars", F.length("text").cast("long")))

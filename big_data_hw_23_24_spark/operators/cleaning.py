@@ -143,10 +143,9 @@ def linear_quality_score(docs: DataFrame) -> DataFrame:
     token by hashing it into a weight table, average, squash. Here the
     weight table is the DETERMINISTIC hash-derived stand-in
     ``w(t) = 2·md5_prefix(q:t)/16^n − 1`` — the same "weights are a
-    lookup keyed by token hash" dataflow as a trained model (swap in
-    :func:`linear_quality_score_weighted` with a real weights table;
-    the plumbing is identical), but reproducible in any engine so the
-    whole scoring path is oracle-checkable end to end.
+    lookup keyed by token hash" dataflow as a trained model, but
+    reproducible in any engine so the whole scoring path is
+    oracle-checkable end to end.
 
     ``logit`` is the mean token weight (0 for empty docs), ``prob``
     the sigmoid, ``keep`` the strict ``logit > 0`` decision (i.e.
@@ -166,40 +165,6 @@ def linear_quality_score(docs: DataFrame) -> DataFrame:
     logit = F.when(n > 0, wsum / n).otherwise(F.lit(0.0))
     return (docs
             .withColumn("_n", n)
-            .withColumn("_logit", F.round(logit, 6))
-            .select(F.col("doc_id"),
-                    F.col("_n").cast("long").alias("n_tokens"),
-                    F.col("_logit").alias("logit"),
-                    F.round(F.lit(1.0)
-                            / (F.lit(1.0) + F.exp(-F.col("_logit"))), 6)
-                    .alias("prob"),
-                    (F.col("_logit") > 0).alias("keep")))
-
-
-def linear_quality_score_weighted(docs: DataFrame,
-                                  weights: DataFrame) -> DataFrame:
-    """The trained-weights face of :func:`linear_quality_score`:
-    ``weights`` is ``(token, weight)`` (a fitted vocabulary — at most
-    a few million rows, broadcastable by construction). Tokens absent
-    from the table contribute 0, mirroring an out-of-vocabulary hash
-    bucket never updated during training.
-
-    Plan: explode tokens → broadcast hash join against the weight
-    table → one doc-keyed aggregate. The ONE corpus shuffle is the
-    per-doc sum; the weight table never shuffles.
-    """
-    from .util import lowered_words
-
-    words = lowered_words("text")
-    toks = docs.select(F.col("doc_id"), F.size(words).alias("_n"),
-                       F.explode_outer(words).alias("token"))
-    scored = (toks.join(F.broadcast(weights), "token", "left")
-              .groupBy("doc_id")
-              .agg(F.first("_n").alias("_n"),
-                   F.sum(F.coalesce("weight", F.lit(0.0))).alias("_wsum")))
-    logit = F.when(F.col("_n") > 0,
-                   F.col("_wsum") / F.col("_n")).otherwise(F.lit(0.0))
-    return (scored
             .withColumn("_logit", F.round(logit, 6))
             .select(F.col("doc_id"),
                     F.col("_n").cast("long").alias("n_tokens"),

@@ -176,9 +176,8 @@ def lloyd_round(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
 def kmeans_fit(df: DataFrame, k: int, iters: int = 10,
                seed: int = 42) -> tuple[np.ndarray, list[float]]:
     """Distributed Lloyd's k-means over a vector column → (centroids
-    (k, dim), per-iteration mean cost). The trainer for IVF centroids
-    when a sample isn't representative enough (``ivf_topk(...,
-    centroids=...)`` accepts the result).
+    (k, dim), per-iteration mean cost): the full-corpus trainer, for
+    when a driver sample isn't representative enough.
 
     Same iteration contract as MRFFT above: per round, ONE distributed
     job whose shuffle is bounded by the model size, never the data —

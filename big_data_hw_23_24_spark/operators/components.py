@@ -25,8 +25,8 @@ convergence is detected with a bounded count action, the same
 driver-side iteration contract as MRFFT (SURVEY §3.2: driver-controlled
 rounds are the accepted shape for iterative algorithms). Near-dup
 components are overwhelmingly tiny (pairs/triples) and converge in 2-3
-rounds; the default ``max_iter=25`` covers diameters ≈ 2²⁵ thanks to
-the jumping step.
+rounds; ``MAX_ITER = 25`` covers diameters ≈ 2²⁵ thanks to the
+jumping step.
 """
 
 from __future__ import annotations
@@ -34,14 +34,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+MAX_ITER = 25  # propagation rounds before connected_components gives up
 
-def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """(id_a, id_b) undirected pairs → (doc_id, component).
 
     ``component`` is the min vertex id of the component. Only vertices
     appearing in ≥1 edge are returned (singletons are trivially their
-    own component). Raises if ``max_iter`` rounds don't converge —
-    by then the graph has diameter > max_iter and needs the
+    own component). Raises if ``MAX_ITER`` rounds don't converge —
+    by then the graph has diameter > 2^MAX_ITER and needs the
     star-contraction variant, not silence.
     """
     sym = (edges.select(F.col("id_a").alias("node"),
@@ -53,7 +55,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
            .localCheckpoint(eager=True))
     labels = (sym.select("node").distinct()
               .withColumn("label", F.col("node")))
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         # (a) min neighbour label per node: one join + one aggregate
         nbr_min = (sym.join(labels.select(F.col("node").alias("nbr"),
                                           F.col("label").alias("nbr_label")),
@@ -83,8 +85,8 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
             return labels.select(F.col("node").alias("doc_id"),
                                  F.col("label").alias("component"))
     raise RuntimeError(
-        f"connected_components: no fixpoint after {max_iter} rounds "
-        "(pathological labelling — raise max_iter)")
+        f"connected_components: no fixpoint after {MAX_ITER} rounds "
+        "(pathological labelling — raise MAX_ITER)")
 
 
 def dedup_survivors(components: DataFrame) -> DataFrame:

@@ -679,8 +679,8 @@ def incremental_dedup(new_docs: DataFrame, corpus: DataFrame) -> DataFrame:
     Scale shape: the corpus side is reduced to DISTINCT fingerprints —
     32-byte rows, no text — before the join, so corpus text is scanned
     once and never shuffled; in steady state that fingerprint set is a
-    bucketed table the join co-locates with (sources/sinks.py
-    write_bucketed_table). The batch side takes one window over its
+    bucketed table the join co-locates with (``bucketBy`` +
+    ``saveAsTable``). The batch side takes one window over its
     own fingerprints (batch ≪ corpus) and one equi-join; AQE
     broadcasts the batch when it is small. Corpus-dup wins over
     batch-dup when both hold, so statuses are join-order independent.
@@ -748,7 +748,7 @@ def incremental_dedup_against_fingerprints(
     """``incremental_dedup`` against an already-materialized corpus
     fingerprint store (a ``fingerprint`` column) — the steady-state
     form: a continuously-ingesting pipeline keeps the store on disk
-    (ideally bucketed on fingerprint, sources/sinks.py) and never
+    (ideally bucketed on fingerprint) and never
     re-reads corpus text at all. Same contract and statuses."""
     from pyspark.sql import Window
 

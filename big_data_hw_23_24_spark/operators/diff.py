@@ -53,14 +53,6 @@ def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
             .select("doc_id", status.alias("status"), "old_fp", "new_fp"))
 
 
-def snapshot_diff_summary(old: DataFrame, new: DataFrame) -> DataFrame:
-    """The one-line promotion gate: status counts of
-    :func:`snapshot_diff` → ``(status, n_docs)``."""
-    return (snapshot_diff(old, new)
-            .groupBy("status")
-            .agg(F.count("*").cast("long").alias("n_docs")))
-
-
 def change_set(old: DataFrame, new: DataFrame) -> DataFrame:
     """Turn a snapshot diff into an applicable change set →
     ``(id, op ∈ upsert | delete, text)``.
@@ -98,9 +90,7 @@ def apply_snapshot(current: DataFrame, changes: DataFrame) -> DataFrame:
 
     At cluster scale the result is written back with an epoch-keyed
     overwrite (``streaming.idempotent``) or dynamic partition
-    overwrite so a retried job replaces its own output — the write
-    face ``write_snapshot`` below; tested for replay-idempotency in
-    tests/test_llm_ops.py.
+    overwrite so a retried job replaces its own output.
     """
     ch = changes.select("doc_id", "op", "text")
     cur = current.select("doc_id", "text")
@@ -113,23 +103,6 @@ def apply_snapshot(current: DataFrame, changes: DataFrame) -> DataFrame:
                     .otherwise(F.col("c.text")).alias("text"),
                     F.when(is_upsert, F.lit("upserted"))
                     .otherwise(F.lit("kept")).alias("action")))
-
-
-def write_snapshot(snapshot: DataFrame, path: str,
-                   n_buckets: int = 64) -> None:
-    """Write a snapshot as a bucket-partitioned corpus table with
-    DYNAMIC partition overwrite: only the hash buckets present in this
-    write are replaced, so a retried (or incremental, churn-localized)
-    merge job replaces exactly its own output — the batch counterpart
-    of the epoch-keyed streaming sink. Bucketing by id hash keeps
-    partition counts bounded and churn spread evenly."""
-    (snapshot
-     .withColumn("bucket", F.pmod(F.xxhash64(F.col("doc_id")),
-                                  F.lit(n_buckets)))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("bucket")
-     .parquet(path))
 
 
 def scd2_history(old: DataFrame, new: DataFrame) -> DataFrame:
@@ -173,9 +146,8 @@ def scd2_history(old: DataFrame, new: DataFrame) -> DataFrame:
                     "_r.is_current"))
 
 
-def incremental_stats(old: DataFrame, new: DataFrame,
-                      group_col: str = "source",
-                      old_stats: DataFrame | None = None) -> DataFrame:
+def incremental_stats(old: DataFrame, new: DataFrame, old_stats: DataFrame,
+                      group_col: str = "source") -> DataFrame:
     """Incremental view maintenance of per-group corpus stats (E154)
     → ``(group, n_docs, n_tokens)`` for the NEW snapshot, computed
     from the OLD stats plus the change set.
@@ -188,15 +160,13 @@ def incremental_stats(old: DataFrame, new: DataFrame,
     snapshots). The delta side tokenizes only changed documents' text;
     the base stats table is #groups rows.
 
-    The maintained-table contract lives in ``old_stats``: pass the
+    The maintained-table contract lives in ``old_stats``: the
     previously-maintained ``(group_col, n_docs, n_tokens)`` table (the
-    output of the prior round) and the old snapshot's TEXT is never
+    output of the prior round). The old snapshot's TEXT is never
     re-tokenized — old rows are read only for the id→(group, text)
-    lookup of the churn-sized changed set. Without ``old_stats`` the
-    base is recomputed from the old snapshot (a full old-side tokenize
-    pass) — the demo/parity mode, since the registry face has no
-    maintained table to hand. ``test_llm_ops.py`` pins that both modes
-    agree. The face's oracle recomputes the stats from the new
+    lookup of the churn-sized changed set. The registry face has no
+    maintained table to hand, so it recomputes ``old_stats`` from the
+    old snapshot; its oracle recomputes the stats from the new
     snapshot directly, so the parity row is the
     incremental-equals-full-recompute proof (the parts_skyline /
     itemset move applied to view maintenance).
@@ -204,15 +174,10 @@ def incremental_stats(old: DataFrame, new: DataFrame,
     toks = F.size(F.filter(
         F.split(F.coalesce(F.col("text"), F.lit("")), " "),
         lambda w: w != ""))
-    if old_stats is not None:
-        base = old_stats.select(
-            F.col(group_col).alias("grp"),
-            F.col("n_docs").cast("long").alias("_n0"),
-            F.col("n_tokens").cast("long").alias("_t0"))
-    else:
-        base = (old.groupBy(F.col(group_col).alias("grp"))
-                .agg(F.count("*").cast("long").alias("_n0"),
-                     F.sum(toks).cast("long").alias("_t0")))
+    base = old_stats.select(
+        F.col(group_col).alias("grp"),
+        F.col("n_docs").cast("long").alias("_n0"),
+        F.col("n_tokens").cast("long").alias("_t0"))
     # change detection must cover the VIEW's inputs, not just text: a
     # doc that moves groups with unchanged text is invisible to the
     # content-only snapshot_diff but changes two groups' stats (caught
@@ -255,7 +220,7 @@ def incremental_stats(old: DataFrame, new: DataFrame,
 def ivm_join_view(old_fact: DataFrame, new_fact: DataFrame,
                   dim: DataFrame, fact_id: str, fk_col: str,
                   dim_key: str, group_col: str, value_col: str,
-                  old_view: DataFrame | None = None) -> DataFrame:
+                  old_view: DataFrame) -> DataFrame:
     """Incremental maintenance of a JOIN view (E209) → the NEW state
     of ``SELECT group, count(*), sum(value) FROM fact JOIN dim`` as
     ``(group, n_rows, total_value)``, computed from the OLD view plus
@@ -272,10 +237,9 @@ def ivm_join_view(old_fact: DataFrame, new_fact: DataFrame,
     test). Groups whose count reaches zero drop out of the view, as a
     full recompute would have them.
 
-    ``old_view`` is the maintained-table contract: pass the prior
-    round's output and the old fact is read only for the id→(fk,
-    value) lookup of the changed set; without it the base view is
-    recomputed from the old fact (the demo/parity mode). ``value_col``
+    ``old_view`` is the maintained-table contract: the prior round's
+    output, so the old fact is read only for the id→(fk, value)
+    lookup of the changed set. ``value_col``
     must be integral (cents) so every delta is exact and the
     maintained totals cannot drift from a recompute through float
     summation — drift-free maintenance is the whole point.
@@ -309,16 +273,9 @@ def ivm_join_view(old_fact: DataFrame, new_fact: DataFrame,
              .agg(F.sum("_s").cast("long").alias("_dn"),
                   F.sum(F.col("_s") * F.col("_v")).cast("long")
                   .alias("_dv")))
-    if old_view is not None:
-        base = old_view.select(F.col(group_col).alias("_g"),
-                               F.col("n_rows").cast("long").alias("_n0"),
-                               F.col("total_value").cast("long")
-                               .alias("_v0"))
-    else:
-        base = (of.join(d, "_fk")
-                .groupBy("_g")
-                .agg(F.count("*").cast("long").alias("_n0"),
-                     F.sum("_v").cast("long").alias("_v0")))
+    base = old_view.select(F.col(group_col).alias("_g"),
+                           F.col("n_rows").cast("long").alias("_n0"),
+                           F.col("total_value").cast("long").alias("_v0"))
     return (base.join(delta, "_g", "full_outer")
             .select(F.col("_g").alias(group_col),
                     (F.coalesce("_n0", F.lit(0))

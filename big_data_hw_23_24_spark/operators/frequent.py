@@ -13,13 +13,12 @@ stream). Three estimators maintained side by side:
   with prob r/n; report keys with count ≥ (phi−ε)·n — an
   ε-approximate frequent-items guarantee with prob ≥ 1−δ.
 
-The batch/relational faces (exact histogram, thresholds, the ±
-annotation join) are DataFrame one-liners — distributed, shuffle-scalable.
 The two samplers are *sequential by definition* (their guarantees are
 stated over arrival order), so — exactly like the reference, which
 updates them in a driver loop per micro-batch — they run driver-side
 over each (n-capped, small) batch; see ``streaming/frequent_stream.py``
-for the Structured Streaming harness.
+for the Structured Streaming harness, which also keeps the exact
+histogram and the ± annotation.
 """
 
 from __future__ import annotations
@@ -31,15 +30,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def exact_frequent(df: DataFrame, item_col: str, phi: float,
-                   n: int | None = None) -> DataFrame:
-    """Items with count ≥ ⌈phi·n⌉ (G016HW3.java:152-158) → (item, cnt)."""
-    if n is None:
-        n = df.count()
-    thr = math.ceil(phi * n)
-    return (df.groupBy(F.col(item_col).alias("item"))
-            .agg(F.count("*").alias("cnt"))
-            .where(F.col("cnt") >= thr))
+# Count-min geometry: depth rows of width buckets.
+CMS_DEPTH = 5
+CMS_WIDTH = 2048
 
 
 def _cms_bucket(row_col, item_col, width: int, hash_family: str):
@@ -68,8 +61,7 @@ def _cms_bucket(row_col, item_col, width: int, hash_family: str):
     return F.pmod(F.xxhash64(row_col, item_col), F.lit(width))
 
 
-def cms_table(items: DataFrame, item_col: str, depth: int = 5,
-              width: int = 2048,
+def cms_table(items: DataFrame, item_col: str,
               hash_family: str = "xxhash64") -> DataFrame:
     """Count-min sketch as a ``(row, bucket, cnt)`` DataFrame.
 
@@ -87,11 +79,12 @@ def cms_table(items: DataFrame, item_col: str, depth: int = 5,
     per-partition / per-day sketches composable at 100 TB.
 
     The sketch carries its own ``depth``/``width`` as constant columns:
-    a probe or merge with mismatched geometry would silently hash into
-    the wrong buckets and can UNDER-count (breaking the one-sided-error
-    guarantee), so ``cms_estimate``/``cms_merge`` read and validate the
-    geometry from the sketch itself instead of trusting call sites.
+    a probe with mismatched geometry would silently hash into the
+    wrong buckets and can UNDER-count (breaking the one-sided-error
+    guarantee), so ``cms_estimate`` reads and validates the geometry
+    from the sketch itself instead of trusting call sites.
     """
+    depth, width = CMS_DEPTH, CMS_WIDTH
     if hash_family == "md5" and depth > 10:
         raise ValueError(
             f"the md5 family's 'row:item' key is ambiguous past row 9 "
@@ -122,25 +115,6 @@ def _cms_geometry(sketch: DataFrame) -> tuple[int, int, str]:
         raise ValueError("empty CMS sketch: geometry unknown")
     return (row["depth"], row["width"],
             row["family"] if has_fam else "xxhash64")
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge CMS sketches of disjoint streams: SUM per (row, bucket).
-
-    Refuses to merge sketches with different (depth, width) — summing
-    across geometries is meaningless.
-    """
-    geoms = {_cms_geometry(s) for s in sketches}
-    if len(geoms) > 1:
-        raise ValueError(f"cannot merge CMS sketches of different "
-                         f"geometries: {sorted(geoms)}")
-    (depth, width, family), = geoms
-    merged = sketches[0].select("row", "bucket", "cnt")
-    for s in sketches[1:]:
-        merged = merged.unionByName(s.select("row", "bucket", "cnt"))
-    return (merged.groupBy("row", "bucket").agg(F.sum("cnt").alias("cnt"))
-            .withColumns({"depth": F.lit(depth), "width": F.lit(width),
-                          "family": F.lit(family)}))
 
 
 def cms_estimate(sketch: DataFrame, candidates: DataFrame,
@@ -250,8 +224,8 @@ def space_saving_summaries(df: DataFrame, item_col: str,
     Runs as one Arrow ``mapInPandas`` pass — each task streams its
     partition through k counters in a dict, emitting k rows. This is
     the map side of the MERGEABLE heavy-hitters summary
-    (Agarwal et al. 2012): union the per-partition summaries with
-    :func:`space_saving_merge` for a global N/k guarantee. The
+    (Agarwal et al. 2012): :func:`space_saving_topk` unions the
+    per-partition summaries for a global N/k guarantee. The
     sequential driver-side samplers (reservoir/sticky) answer the
     arrival-ORDER-dependent faces; SpaceSaving is order-insensitive
     in its guarantee, which is what makes it distributable.
@@ -363,9 +337,9 @@ def kmv_sketch(df: DataFrame, item_col: str, group_col: str,
     ≈ 1/√(k−2).
 
     Mergeable by construction: the k smallest hashes of A ∪ B are a
-    subset of sketch(A) ∪ sketch(B), so :func:`kmv_merge` of partial
-    sketches EQUALS the whole-data sketch exactly (the property that
-    makes any sketch scale; pinned by test).
+    subset of sketch(A) ∪ sketch(B), so the k smallest of the union
+    of partial sketches EQUAL the whole-data sketch exactly (the
+    property that makes any sketch scale).
 
     Scale shape: distinct (grp, h) — one keyed aggregate — then the
     two-stage grouped top-k (per-partition heaps, never a per-group
@@ -374,8 +348,8 @@ def kmv_sketch(df: DataFrame, item_col: str, group_col: str,
     Like the CMS family, the sketch carries its own ``k`` as a constant
     column: a k mismatch between build and estimate would silently take
     the wrong order statistic AND the wrong exact/estimator branch, so
-    :func:`kmv_estimate` / :func:`kmv_merge` read and validate k from
-    the sketch instead of trusting call sites.
+    :func:`kmv_estimate` reads and validates k from the sketch instead
+    of trusting call sites.
     """
     d = (df.select(F.col(group_col).alias("grp"),
                    kmv_hash(F.col(item_col)).alias("h"))
@@ -397,7 +371,7 @@ def _kmv_k_lit(k: int) -> Column:
 
 def _kmv_k(sketch: DataFrame, k: int | None) -> int | None:
     """Resolve the sketch's k: prefer the schema metadata stamped by
-    :func:`kmv_sketch` / :func:`kmv_merge` (plan-side, no driver job),
+    :func:`kmv_sketch` (plan-side, no driver job),
     fall back to reading the carried column (one O(1) driver pull),
     and validate any explicitly-passed value against it.
 
@@ -426,34 +400,6 @@ def _kmv_k(sketch: DataFrame, k: int | None) -> int | None:
                          f"but k={k} was passed — the estimate would use "
                          f"the wrong order statistic")
     return carried
-
-
-def kmv_merge(*sketches: DataFrame, k: int | None = None) -> DataFrame:
-    """Union partial sketches into the sketch of the union: distinct
-    hashes, k smallest per group — exact, not approximate-on-approximate.
-    k is read from the sketches themselves and must agree across them
-    (merging sketches of different k silently truncates the guarantee)."""
-    from functools import reduce
-
-    from .grouped import grouped_topk
-
-    ks = {_kmv_k(s, k) for s in sketches}
-    ks.discard(None)  # empty metadata-stripped sketches fit any k
-    if len(ks) > 1:
-        raise ValueError(f"cannot merge KMV sketches of different k: "
-                         f"{sorted(ks)}")
-    any_k = not ks  # every input empty and un-stamped, no k passed:
-    # the union is empty for ANY k — propagate the "any k" state
-    # (typed-null column, no kmv_k metadata) instead of stamping a
-    # fabricated k that a later merge with a genuine sketch would
-    # reject as a mismatch
-    kk = ks.pop() if ks else 1  # top-k bound is irrelevant on 0 rows
-    u = reduce(lambda a, b: a.unionByName(b),
-               [s.select("grp", "h") for s in sketches]).distinct()
-    merged = grouped_topk(u, ["grp"], [F.col("h")], kk)
-    if any_k:
-        return merged.withColumn("k", F.lit(None).cast("integer"))
-    return merged.withColumn("k", _kmv_k_lit(kk))
 
 
 def kmv_estimate(sketch: DataFrame, k: int | None = None) -> DataFrame:

@@ -31,36 +31,24 @@ from pyspark.sql import functions as F
 __all__ = ["funnel_depths"]
 
 
-def funnel_depths(events: DataFrame, stages: list[str],
-                  within_seconds: int | None = None) -> DataFrame:
+def funnel_depths(events: DataFrame, stages: list[str]) -> DataFrame:
     """Per-user funnel progress → (user_id, depth).
 
     Only users who reached stage 1 appear; ``depth`` ∈ [1, len(stages)]
-    counts the stages reached in strict first-touch order.
-    ``within_seconds`` adds the ClickHouse ``windowFunnel(T)`` bound:
-    every later stage must also fall within T seconds of the user's
-    first stage-1 event (conversion windows — "purchased within 24 h
-    of the first view").
+    counts the stages reached in strict first-touch order, with no
+    time bound between stages.
     """
     if len(stages) < 2:
         raise ValueError(f"a funnel needs at least 2 stages, got {stages}")
     if len(set(stages)) != len(stages):
         raise ValueError(f"duplicate stage types in {stages}")
-    if within_seconds is not None and within_seconds <= 0:
-        raise ValueError(f"within_seconds must be positive, "
-                         f"got {within_seconds}")
 
     reached = (events.where(F.col("event_type") == stages[0])
                .groupBy("user_id").agg(F.min("ts").alias("_t1")))
     for i, st in enumerate(stages[1:], start=2):
-        cond = F.col("ts") > F.col(f"_t{i - 1}")
-        if within_seconds is not None:
-            cond = cond & (F.col("ts") <= F.col("_t1")
-                           + F.expr(f"INTERVAL {within_seconds} SECOND"))
-        anchor_cols = list(dict.fromkeys(["_t1", f"_t{i - 1}"]))
         nxt = (events.where(F.col("event_type") == st)
-               .join(reached.select("user_id", *anchor_cols), "user_id")
-               .where(cond)
+               .join(reached.select("user_id", f"_t{i - 1}"), "user_id")
+               .where(F.col("ts") > F.col(f"_t{i - 1}"))
                .groupBy("user_id").agg(F.min("ts").alias(f"_t{i}")))
         reached = reached.join(nxt.select("user_id", f"_t{i}"),
                                "user_id", "left")

@@ -38,12 +38,12 @@ COOC_CAP = 20  # items kept per user basket
 COOC_MIN_CO = 2  # co-occurrences that make an edge
 PAGERANK_DAMPING = 0.85
 PAGERANK_ITERATIONS = 3
+HIERARCHY_MAX_DEPTH = 7  # digit-decade levels hierarchy_rollup unrolls
+HITS_DOUBLE_ROUNDS = 3  # hub+authority updates of hits_scores
+HITS_K = 20  # authority items hits_scores reports
 
 
-def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
-             weight_col: str | None = None,
-             damping: float = PAGERANK_DAMPING,
-             iterations: int = PAGERANK_ITERATIONS) -> DataFrame:
+def pagerank(edges: DataFrame) -> DataFrame:
     """Weighted PageRank with dangling-mass redistribution.
 
     ``pr'(v) = (1−d)/N + d·(Σ_u pr(u)·p(u→v) + dangling/N)`` where
@@ -52,17 +52,14 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     (uniformly redistributed — without it the rank mass leaks and the
     scores of disconnected sinks are wrong).
 
-    Multi-edges are aggregated first (``count(*)`` or
-    ``sum(weight_col)``). Self-loops are legal and kept. Returns
-    ``(node, pagerank, out_weight)`` with ``pagerank`` rounded to
-    6 dp; ``out_weight`` 0 marks dangling nodes.
+    ``edges`` is ``(src, dst)``; multi-edges are aggregated first, so
+    an edge's weight is its multiplicity. Self-loops are legal and
+    kept. Returns ``(node, pagerank, out_weight)`` with ``pagerank``
+    rounded to 6 dp; ``out_weight`` 0 marks dangling nodes.
     """
-    if iterations <= 0:
-        raise ValueError(f"iterations must be positive, got {iterations}")
-    w_agg = (F.count("*") if weight_col is None
-             else F.sum(weight_col)).cast("double")
-    e = edges.groupBy(F.col(src).alias("_src"), F.col(dst).alias("_dst")) \
-             .agg(w_agg.alias("_w"))
+    damping = PAGERANK_DAMPING
+    e = edges.groupBy(F.col("src").alias("_src"), F.col("dst").alias("_dst")) \
+             .agg(F.count("*").cast("double").alias("_w"))
     nodes = (e.select(F.col("_src").alias("node"))
              .union(e.select(F.col("_dst").alias("node")))
              .distinct().persist())
@@ -89,7 +86,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     # median (interleaved min-of-6) — the three persists above already
     # dedupe the runtime work, so the pin only added a blocking job
     # that serialized the overlapped cache population
-    for _ in range(iterations):
+    for _ in range(PAGERANK_ITERATIONS):
         contrib = (e_norm.join(pr.withColumnRenamed("node", "_src"),
                                "_src")
                    .groupBy(F.col("_dst").alias("node"))
@@ -110,7 +107,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                     "out_weight"))
 
 
-def transition_edges(events: DataFrame, item_col: str = "item") -> DataFrame:
+def transition_edges(events: DataFrame) -> DataFrame:
     """Consecutive-event transition edges: for each user's event
     sequence (ordered by ``ts, event_id``), emit ``(src=item_i,
     dst=item_{i+1})``. One window PARTITIONED BY user (bounded per-user
@@ -121,14 +118,13 @@ def transition_edges(events: DataFrame, item_col: str = "item") -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (events
             .select(F.col("user_id"),
-                    F.col(item_col).alias("src"),
-                    F.lead(item_col).over(w).alias("dst"))
+                    F.col("item").alias("src"),
+                    F.lead("item").over(w).alias("dst"))
             .where(F.col("dst").isNotNull())
             .select("src", "dst"))
 
 
-def item_cooccurrence(events: DataFrame, cap: int = COOC_CAP,
-                      min_co: int = COOC_MIN_CO) -> DataFrame:
+def item_cooccurrence(events: DataFrame) -> DataFrame:
     """Item-item co-occurrence similarity over user baskets →
     ``(item_a, item_b, n_co, jaccard)`` — the classic "users who
     touched A also touched B" signal (collaborative filtering's
@@ -136,13 +132,13 @@ def item_cooccurrence(events: DataFrame, cap: int = COOC_CAP,
 
     The scale hazard is the self-join fan-out: a user with U distinct
     items contributes U² pairs, and activity is power-law, so an
-    uncapped join is quadratic in the heaviest user. The ``cap``
-    bounds it: each user keeps their top-``cap`` items (by engagement
-    count, item id tiebreak — a keyed row_number, deterministic), so
-    fan-out is ≤ cap² per user regardless of skew. Jaccard is
-    computed over the SAME capped baskets (sizes from the capped
-    table), so the reported similarity is internally consistent.
-    Pairs below ``min_co`` users are dropped.
+    uncapped join is quadratic in the heaviest user. ``COOC_CAP``
+    bounds it: each user keeps their top-``COOC_CAP`` items (by
+    engagement count, item id tiebreak — a keyed row_number,
+    deterministic), so fan-out is ≤ COOC_CAP² per user regardless of
+    skew. Jaccard is computed over the SAME capped baskets (sizes from
+    the capped table), so the reported similarity is internally
+    consistent. Pairs below ``COOC_MIN_CO`` users are dropped.
     """
     per = (events.where(F.col("item").isNotNull())
            .groupBy("user_id", "item")
@@ -150,7 +146,7 @@ def item_cooccurrence(events: DataFrame, cap: int = COOC_CAP,
     w = Window.partitionBy("user_id").orderBy(F.col("_n").desc(),
                                              F.col("item"))
     capped = (per.withColumn("_rk", F.row_number().over(w))
-              .where(F.col("_rk") <= cap)
+              .where(F.col("_rk") <= COOC_CAP)
               .select("user_id", "item"))
     sz = capped.groupBy("item").agg(F.count("*").alias("_nu"))
     a, b = capped.alias("a"), capped.alias("b")
@@ -159,7 +155,7 @@ def item_cooccurrence(events: DataFrame, cap: int = COOC_CAP,
           .groupBy(F.col("a.item").alias("item_a"),
                    F.col("b.item").alias("item_b"))
           .agg(F.count("*").cast("long").alias("n_co"))
-          .where(F.col("n_co") >= min_co))
+          .where(F.col("n_co") >= COOC_MIN_CO))
     sa = sz.select(F.col("item").alias("item_a"),
                    F.col("_nu").alias("_na"))
     sb = sz.select(F.col("item").alias("item_b"),
@@ -215,8 +211,7 @@ def market_basket_pairs(baskets: DataFrame, basket_col: str,
                     .alias("lift")))
 
 
-def item_triangles(events: DataFrame, cap: int = COOC_CAP,
-                   min_co: int = COOC_MIN_CO) -> DataFrame:
+def item_triangles(events: DataFrame) -> DataFrame:
     """Triangle participation + local clustering coefficient per item
     over the co-occurrence graph → ``(item, degree, n_triangles,
     clustering)``.
@@ -255,7 +250,7 @@ def item_triangles(events: DataFrame, cap: int = COOC_CAP,
     # the build still computed exactly once at any scale (guide §5;
     # interleaved A/B neutral at sf0.1 — min 1.96 vs 1.95 s — the
     # saving is the driver round-trip, deterministic jobs 19 -> 18)
-    edges = (item_cooccurrence(events, cap=cap, min_co=min_co)
+    edges = (item_cooccurrence(events)
              .select("item_a", "item_b").localCheckpoint(eager=False))
     deg = (edges.select(F.explode(F.array("item_a", "item_b"))
                         .alias("item"))
@@ -394,8 +389,8 @@ def itemset_triples(baskets: DataFrame, basket_col: str, item_col: str,
             .select("item_a", "item_b", "item_c", "support"))
 
 
-def hierarchy_rollup(nodes: DataFrame, key_col: str, value_col: str,
-                     max_depth: int = 7) -> DataFrame:
+def hierarchy_rollup(nodes: DataFrame, key_col: str,
+                     value_col: str) -> DataFrame:
     """Hierarchical (subtree) rollup over an implicit digit-decade tree
     (E155) → ``(node, n_desc, subtree_value)``: for every node, the
     count and value sum over ALL its descendants including itself,
@@ -403,16 +398,16 @@ def hierarchy_rollup(nodes: DataFrame, key_col: str, value_col: str,
 
     The recursive-CTE classic (BOM explosion, org rollups) in the only
     shape Spark supports natively: the ancestor closure is UNROLLED as
-    ``max_depth`` narrow expressions — pair (node, node // 10^j) until
-    the quotient drops below 10 — because the tree's depth is bounded
-    by construction (``log10(max_key)``; depth 7 covers keys <
-    10^8 = 10^(max_depth+1)). The bound is ENFORCED at runtime by a
-    poisoned expression: any key whose quotient at ``max_depth`` is
-    still ≥ 10 would silently lose its deeper ancestors (and surface
-    non-root keys as roots), so such a row raises instead of
-    truncating — TPC-H ``p_partkey`` reaches 2·10^8 at sf1000, past
-    the depth-7 coverage, and callers at that scale must size
-    ``max_depth`` up (cost is one extra narrow arm per level).
+    ``HIERARCHY_MAX_DEPTH`` narrow expressions — pair (node,
+    node // 10^j) until the quotient drops below 10 — because the
+    tree's depth is bounded by construction (``log10(max_key)``; depth
+    7 covers keys < 10^8 = 10^(max_depth+1)). The bound is ENFORCED at
+    runtime by a poisoned expression: any key whose quotient at
+    max_depth is still ≥ 10 would silently lose its deeper ancestors
+    (and surface non-root keys as roots), so such a row raises instead
+    of truncating — TPC-H ``p_partkey`` reaches 2·10^8 at sf1000, past
+    the depth-7 coverage, and that scale needs a larger
+    ``HIERARCHY_MAX_DEPTH`` (cost is one extra narrow arm per level).
     One explode + one hash aggregate; the closure is
     ≤ depth rows per node, never an iterative job per level. The
     oracle face states the same closure as a DuckDB ``WITH RECURSIVE``
@@ -421,6 +416,7 @@ def hierarchy_rollup(nodes: DataFrame, key_col: str, value_col: str,
     is summed in integer cents (floor(value·100)) so subtree totals
     are exact integer sums under any partitioning.
     """
+    max_depth = HIERARCHY_MAX_DEPTH
     node = F.col(key_col)
     arms = []
     for j in range(max_depth + 1):
@@ -439,7 +435,7 @@ def hierarchy_rollup(nodes: DataFrame, key_col: str, value_col: str,
     arms.append(F.when(too_deep, F.raise_error(F.concat(
         F.lit("hierarchy_rollup: key "), node.cast("string"),
         F.lit(f" exceeds max_depth={max_depth} coverage (keys must be "
-              f"< {10 ** (max_depth + 1)}); raise max_depth")))
+              f"< {10 ** (max_depth + 1)}); raise HIERARCHY_MAX_DEPTH")))
         .cast("long")))
     cents = F.floor(F.col(value_col) * 100).cast("long")
     pairs = nodes.select(
@@ -629,18 +625,17 @@ def adamic_adar(events: DataFrame) -> DataFrame:
                     F.round(F.col("_aa") / 1e6, 6).alias("aa_score")))
 
 
-def hits_scores(events: DataFrame, double_rounds: int = 3,
-                k: int = 20) -> DataFrame:
+def hits_scores(events: DataFrame) -> DataFrame:
     """HITS hubs-and-authorities on the user-item incidence (E228) →
-    the top-``k`` authority items: ``(item, rank, authority)``.
+    the top-``HITS_K`` authority items: ``(item, rank, authority)``.
 
     Kleinberg's alternating eigenvector pair on the BIPARTITE graph —
     the ranking the unipartite faces can't give: PageRank (E121)
     ranks items inside the item-item projection, HITS ranks items BY
     the quality of the users touching them (a(i) = Σ h(u), h(u) =
-    Σ a(i)) — the classic curator/content decomposition. Three
-    double-rounds from h₀ = 1 ≈ the leading singular direction of the
-    incidence matrix.
+    Σ a(i)) — the classic curator/content decomposition.
+    ``HITS_DOUBLE_ROUNDS`` (three) double-rounds from h₀ = 1 ≈ the
+    leading singular direction of the incidence matrix.
 
     Determinism — the E224 treatment, distributed: the incidence is
     0/1, so every update is a pure grouped SUM of exact integers (no
@@ -658,6 +653,7 @@ def hits_scores(events: DataFrame, double_rounds: int = 3,
     vector; the incidence is checkpointed once for its 2·rounds + 1
     consumers (root-cause 4).
     """
+    double_rounds, k = HITS_DOUBLE_ROUNDS, HITS_K
     per = (events.where(F.col("item").isNotNull())
            .groupBy("user_id", "item")
            .agg(F.count("*").alias("_n")))

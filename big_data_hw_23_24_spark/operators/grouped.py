@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 
 PERCENTILES = (0.5, 0.9, 0.99)  # probed by percentile_drift
 SKETCH_ACCURACY = 100  # approx_percentile accuracy of the sketch side
+ROBUST_LO_PCT, ROBUST_HI_PCT = 5, 95  # robust_stats' tail fences
+RFM_TILES = 5  # rfm_segments' buckets per axis
 
 
 def grouped_percentile(df: DataFrame, keys: list[str], value_col: str,
@@ -134,8 +136,7 @@ def ks_distance_matrix(df: DataFrame, value_col: str,
                          6).alias("ks")))
 
 
-def robust_stats(df: DataFrame, value_col: str, lo_pct: int = 5,
-                 hi_pct: int = 95) -> DataFrame:
+def robust_stats(df: DataFrame, value_col: str) -> DataFrame:
     """Outlier-robust per-source location stats -> (source, n, p_lo,
     p_hi, trimmed_mean, winsor_mean, plain_mean).
 
@@ -168,8 +169,6 @@ def robust_stats(df: DataFrame, value_col: str, lo_pct: int = 5,
 
     from .ranking import global_rank
 
-    if not (0 <= lo_pct < hi_pct <= 100):
-        raise ValueError(f"need 0 <= lo < hi <= 100, got {lo_pct}/{hi_pct}")
     base = (df.where(F.col(value_col).isNotNull())
             .select(F.coalesce(F.col("source").cast("string"),
                                F.lit("\u0000<null>")).alias("_gkey"),
@@ -182,8 +181,8 @@ def robust_stats(df: DataFrame, value_col: str, lo_pct: int = 5,
              .agg(F.min("_grank").alias("_gmin"),
                   F.count("*").alias("_n")))
     r = F.col("_grank") - F.col("_gmin") + 1
-    lo_r = F.greatest(F.ceil(F.col("_n") * lo_pct / 100), F.lit(1))
-    hi_r = F.greatest(F.ceil(F.col("_n") * hi_pct / 100), F.lit(1))
+    lo_r = F.greatest(F.ceil(F.col("_n") * ROBUST_LO_PCT / 100), F.lit(1))
+    hi_r = F.greatest(F.ceil(F.col("_n") * ROBUST_HI_PCT / 100), F.lit(1))
     marked = (ranked.join(F.broadcast(sizes), "_gkey")
               .withColumn("_r", r)
               .withColumn("_lo_r", lo_r)
@@ -209,10 +208,10 @@ def robust_stats(df: DataFrame, value_col: str, lo_pct: int = 5,
                  F.round(F.avg("v"), 6).alias("plain_mean")))
 
 
-def rfm_segments(events: DataFrame, n_tiles: int = 5) -> DataFrame:
+def rfm_segments(events: DataFrame) -> DataFrame:
     """RFM segmentation → ``(user_id, frequency, monetary_cents,
     r_bucket, f_bucket, m_bucket, segment)``: the classic
-    recency/frequency/monetary quantile grid (bucket ``n_tiles`` =
+    recency/frequency/monetary quantile grid (bucket ``RFM_TILES`` =
     best on every axis; ``segment`` is the concatenated grid cell,
     '555' = champions, '111' = lost).
 
@@ -234,11 +233,11 @@ def rfm_segments(events: DataFrame, n_tiles: int = 5) -> DataFrame:
                 F.count("*").cast("long").alias("frequency"),
                 F.sum(F.floor(F.col("value") * 100)).cast("long")
                 .alias("monetary_cents")))
-    b = global_ntile(per, n_tiles, [F.col("_rts"), F.col("user_id")],
+    b = global_ntile(per, RFM_TILES, [F.col("_rts"), F.col("user_id")],
                      out_col="r_bucket")
-    b = global_ntile(b, n_tiles, [F.col("frequency"), F.col("user_id")],
+    b = global_ntile(b, RFM_TILES, [F.col("frequency"), F.col("user_id")],
                      out_col="f_bucket")
-    b = global_ntile(b, n_tiles,
+    b = global_ntile(b, RFM_TILES,
                      [F.col("monetary_cents"), F.col("user_id")],
                      out_col="m_bucket")
     return b.select(

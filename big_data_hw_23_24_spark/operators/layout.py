@@ -22,12 +22,9 @@ carry tight min/max on BOTH cx and cy per file.
 The reference engine has no layout surface (its inputs are flat CSV);
 declared new surface, SURVEY.md E81.
 
-Division of labor with ``sources/sinks.py::write_zorder_parquet``:
-the sink is the production WRITER (N columns, min/max or
-equal-frequency rank bucketing, range-partitioned file split); this
-module is the 2-D interleave KERNEL in its oracle-checkable form —
-the same spread schedule generates both the Column expression and the
-DuckDB SQL, so the arithmetic itself carries a driver-checked row.
+This module is the 2-D interleave KERNEL in its oracle-checkable form
+— the same spread schedule generates both the Column expression and
+the DuckDB SQL, so the arithmetic itself carries an oracle-checked row.
 """
 
 from __future__ import annotations
@@ -179,8 +176,7 @@ def layout_pruning_audit(df: DataFrame, cx_col: str, cy_col: str,
 
 
 def compaction_plan(files: DataFrame, size_col: str,
-                    order_by: list, target_bytes: int,
-                    num_partitions: int | None = None) -> DataFrame:
+                    order_by: list, target_bytes: int) -> DataFrame:
     """Small-files compaction planner (E177) → one row per planned
     output file: ``(out_file, n_inputs, total_bytes)``.
 
@@ -201,8 +197,7 @@ def compaction_plan(files: DataFrame, size_col: str,
     """
     from .ranking import global_cumsum
 
-    cum = global_cumsum(files, order_by, size_col, out_col="_cum",
-                        num_partitions=num_partitions)
+    cum = global_cumsum(files, order_by, size_col, out_col="_cum")
     grp = F.floor((F.col("_cum") - F.col(size_col))
                   / target_bytes).cast("long")
     return (cum.select(grp.alias("out_file"),

@@ -81,8 +81,7 @@ def blocked_fuzzy_pairs(df: DataFrame, entity_col: str, block: Column,
 
 
 def sorted_neighborhood_pairs(df: DataFrame, entity_col: str, window: int = 3,
-                              max_dist: int = 2,
-                              num_partitions: int | None = None) -> DataFrame:
+                              max_dist: int = 2) -> DataFrame:
     """Sorted-neighborhood linkage → ``(id_a, id_b, rank_gap, dist)``:
     rank all rows by the entity string (id tiebreaker), compare each
     row only to the ``window`` rows following it in rank order, keep
@@ -107,8 +106,7 @@ def sorted_neighborhood_pairs(df: DataFrame, entity_col: str, window: int = 3,
 
     slim = df.select(F.col("doc_id").alias("_id"),
                      F.col(entity_col).alias("_e"))
-    ranked = global_rank(slim, [F.col("_e"), F.col("_id")],
-                         rank_col="_r", num_partitions=num_partitions)
+    ranked = global_rank(slim, [F.col("_e"), F.col("_id")], rank_col="_r")
     bkt = (F.col("_r") / window).cast("long")
     base = ranked.select("_id", "_e", "_r", bkt.alias("_bkt"))
     # left side duplicated into its own and the PREVIOUS bucket so the

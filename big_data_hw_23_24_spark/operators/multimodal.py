@@ -132,42 +132,6 @@ def extract_features(media: DataFrame, dim: int = 4,
     return media.mapInPandas(kernel, schema)
 
 
-def resize_media(media: DataFrame, max_bytes: int = 256,
-                 fake: bool = False) -> DataFrame:
-    """Resize/transcode: binary in → binary OUT through the Arrow path
-    (media_id, media, n_bytes_in, n_bytes_out) — the plumbing a real
-    thumbnailer/resampler needs: unlike ``decode_media`` (metadata
-    out), the payload itself crosses the kernel boundary both ways,
-    which is the expensive shape at 100 TB (size the batches by bytes,
-    not rows). ``fake=True`` truncates the payload deterministically;
-    a real kernel decodes, resamples, re-encodes per batch.
-    """
-
-    schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("media", T.BinaryType(), False),
-        T.StructField("n_bytes_in", T.IntegerType(), False),
-        T.StructField("n_bytes_out", T.IntegerType(), False),
-    ])
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "media codecs unavailable in this environment; "
-                    "pass fake=True for the deterministic stand-in")
-            payloads = batch["media"].map(bytes)
-            resized = payloads.map(lambda b: b[:max_bytes])
-            yield pd.DataFrame({
-                "media_id": batch["media_id"],
-                "media": resized,
-                "n_bytes_in": payloads.map(len).astype("int32"),
-                "n_bytes_out": resized.map(len).astype("int32"),
-            })
-
-    return media.mapInPandas(kernel, schema)
-
-
 def frame_sample_plan(media: DataFrame, every_nth: int = 10) -> DataFrame:
     """Plumbing for frame sampling: one row per sampled frame index.
 
@@ -186,32 +150,38 @@ def frame_sample_plan(media: DataFrame, every_nth: int = 10) -> DataFrame:
     )
 
 
-def block_dedup_pairs(media: DataFrame, block_bytes: int = 64,
-                      min_shared: int = 2, max_df: int = 8) -> DataFrame:
+# block_dedup_pairs: aligned block size, shared blocks a pair needs,
+# and the stop-block document-frequency guard.
+BLOCK_BYTES = 64
+BLOCK_MIN_SHARED = 2
+BLOCK_MAX_DF = 8
+
+
+def block_dedup_pairs(media: DataFrame) -> DataFrame:
     """Block-level payload dedup over a BINARY column (E147) →
     ``(media_a, media_b, n_shared_blocks, n_blocks_a, n_blocks_b,
     full_dup)``.
 
     Storage-style dedup for media corpora: payloads are cut into
-    fixed, ALIGNED ``block_bytes`` blocks (the filesystem/CAS-chunking
+    fixed, ALIGNED ``BLOCK_BYTES`` blocks (the filesystem/CAS-chunking
     semantics — codec-free, so it works on any binary column without
     decode), each block fingerprinted, and two payloads become a
-    candidate pair when they share ≥ ``min_shared`` (offset, hash)
-    blocks. Alignment-sensitivity is the contract, not a bug: this
+    candidate pair when they share ≥ ``BLOCK_MIN_SHARED`` (offset,
+    hash) blocks. Alignment-sensitivity is the contract, not a bug: this
     face answers "same asset re-ingested / truncated / re-encoded
     container" (shared prefixes dominate), while content near-dup of
     TEXT lives in the MinHash/SimHash tier.
 
     Scale shape: the shuffle key is the (offset, hash) block — never a
     pair; hot blocks (shared boilerplate headers) are dropped by the
-    ``max_df`` stop-block guard, bounding Σdf² exactly like the
+    ``BLOCK_MAX_DF`` stop-block guard, bounding Σdf² exactly like the
     containment face; pair verification touches only colliding pairs.
     The block hash is md5 of the lower-hex of the byte slice, which
     any md5-bearing engine reproduces — Spark's side slices the real
     BINARY column (at 100 TB you would md5 the bytes directly; the
     hex hop costs 2x on the hash input and buys the value oracle).
     """
-    B = block_bytes
+    B = BLOCK_BYTES
     m = media.where(F.length("media") > 0)
     nblk = F.ceil(F.length("media") / F.lit(B)).cast("int")
     blocks = (m.select("media_id",
@@ -222,14 +192,14 @@ def block_dedup_pairs(media: DataFrame, block_bytes: int = 64,
                           F.expr(f"substring(media, bi*{B}+1, {B})"))))
                       .alias("h")))
     safe = (blocks.groupBy("bi", "h").agg(F.count("*").alias("_df"))
-            .where(F.col("_df") <= max_df).select("bi", "h"))
+            .where(F.col("_df") <= BLOCK_MAX_DF).select("bi", "h"))
     bl = blocks.join(safe, ["bi", "h"])
     pairs = (bl.alias("a").join(bl.alias("b"), ["bi", "h"])
              .where(F.col("a.media_id") < F.col("b.media_id"))
              .groupBy(F.col("a.media_id").alias("media_a"),
                       F.col("b.media_id").alias("media_b"))
              .agg(F.count("*").cast("long").alias("n_shared_blocks"))
-             .where(F.col("n_shared_blocks") >= min_shared))
+             .where(F.col("n_shared_blocks") >= BLOCK_MIN_SHARED))
     sizes = m.select("media_id",
                      F.ceil(F.length("media") / F.lit(B)).cast("long")
                      .alias("n_blocks"),

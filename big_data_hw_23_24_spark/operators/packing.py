@@ -24,8 +24,7 @@ from pyspark.sql import functions as F
 
 
 def pack_sequences(docs: DataFrame, capacity: int = 256,
-                   shard_col: str = "source",
-                   length_col: str | None = None) -> DataFrame:
+                   shard_col: str = "source") -> DataFrame:
     """→ (shard, bin_id, doc_id, n_tokens_in_bin): which slice of each
     document lands in which fixed-``capacity`` context window.
 
@@ -36,20 +35,12 @@ def pack_sequences(docs: DataFrame, capacity: int = 256,
     is downstream of the data engine). Zero-token documents occupy no
     bin. Every bin except a shard's last holds exactly ``capacity``
     tokens: Σ n_tokens_in_bin over a bin telescopes to
-    min(capacity, shard_total − bin_id·capacity).
-
-    By default a document's length is its whitespace token count; pass
-    ``length_col`` to budget by a precomputed measure instead — e.g.
-    ``bpe_encode``'s ``n_symbols``, so windows are sized in the units
-    the trainer actually consumes.
+    min(capacity, shard_total − bin_id·capacity). A document's length
+    is its whitespace token count.
     """
     if capacity <= 0:
         raise ValueError(f"capacity must be positive, got {capacity}")
-    if length_col is not None:
-        n = F.col(length_col).cast("long")
-    else:
-        n = F.size(F.filter(F.split(F.col("text"), " "),
-                            lambda w: w != ""))
+    n = F.size(F.filter(F.split(F.col("text"), " "), lambda w: w != ""))
     toks = (docs.select(F.col(shard_col).alias("shard"), F.col("doc_id"),
                         n.alias("n_tokens"))
             .where(F.col("n_tokens") > 0))

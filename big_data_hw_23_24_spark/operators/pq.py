@@ -22,22 +22,18 @@ Spark-first shapes, all JVM expressions:
   and the exact-rerank stage (``cosine_topk`` / brute L2) touches only
   the shortlist, mirroring ``quantized_topk``.
 
-Codebook training (``pq_train``) is per-subspace k-means on a bounded
-driver sample (what FAISS does) — iterative and sample-based, so
-rows-only; the deterministic encode/search kernels take FIXED
-codebooks and carry full DuckDB oracles (the
-``embedding_nearest_centroid`` move, applied per subspace).
+The encode/search kernels take codebooks as an input table; the
+registry faces pass FIXED codebooks (``fixed_codebooks``) and carry
+full DuckDB oracles (the ``embedding_nearest_centroid`` move, applied
+per subspace).
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 ROUND_TO = 6  # decimal places of every distance
-SAMPLE_SIZE = 10_000  # driver sample that trains the codebooks
-SAMPLE_SEED = 42  # seed of that sample and of each subspace k-means
 
 
 def _subvector_rows(df: DataFrame, m: int, vec_col: str,
@@ -156,85 +152,3 @@ def pq_rerank_topk(corpus: DataFrame, codes: DataFrame, queries: DataFrame,
                     F.round(dist, ROUND_TO).alias("dist_sq"))
             .withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k_top))
-
-
-def pq_bucket_pairs(df: DataFrame, codebooks: DataFrame, m: int,
-                    threshold: float = 0.95) -> DataFrame:
-    """Embedding duplicate pairs via PQ-code buckets → (id_a, id_b,
-    cosine): vectors whose FULL m-code tuples coincide get an exact
-    cosine verification — SemDeDup's cluster-then-verify shape with PQ
-    cells as the clusters.
-
-    This is the IDENTITY tier of embedding dedup: identical vectors
-    always share a bucket (deterministic quantization), tiny
-    perturbations almost always do, but looser similarity has only
-    single-cell recall — borderline vectors quantize into different
-    cells (measured 14-34% on cosine≥0.4 pairs at coarse configs).
-    Use the banded random-hyperplane LSH
-    (``similarity.embedding_lsh_duplicates``) when recall at loose
-    thresholds matters; use this when the corpus carries re-encoded
-    copies of identical content and the cheap bucket key (m small
-    ints, computable from stored PQ codes with NO vector read) pays
-    for itself.
-
-    Scale shape: candidate generation is a hash equi-join on the
-    bounded bucket key (never all-pairs); exact cosine runs only
-    inside buckets, whose sizes are the PQ cell occupancies. Pairs
-    emitted once with ``id_a < id_b``.
-    """
-    enc = pq_encode(df, codebooks, m)
-    keys = (enc.groupBy("vec_id")
-            .agg(F.concat_ws("-", F.transform(
-                F.sort_array(F.collect_list(F.struct("j", "code"))),
-                lambda s: s.code.cast("string"))).alias("bucket")))
-    vecs = df.select(F.col("vec_id"),
-                     F.col("embedding").cast("array<double>").alias("v"))
-    side = keys.join(vecs, "vec_id")
-    a = side.select(F.col("vec_id").alias("id_a"), "bucket",
-                    F.col("v").alias("va"))
-    b = side.select(F.col("vec_id").alias("id_b"), "bucket",
-                    F.col("v").alias("vb"))
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    norm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.zip_with(c, c, lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x))
-    cos = F.round(dot / (norm("va") * norm("vb")), ROUND_TO)
-    return (a.join(b, "bucket")
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", cos.alias("cosine"))
-            .where(F.col("cosine") >= threshold))
-
-
-def pq_train(df: DataFrame, m: int, k: int) -> DataFrame:
-    """Train per-subspace codebooks on a bounded seeded driver sample
-    (the FAISS recipe; the sample bound is the L·K-coreset driver-state
-    contract) → (j, centroid_id, cv) ready for ``pq_encode``.
-
-    Rows-only by design (k-means init + iteration); quality is pinned
-    by recall/reconstruction property tests against exact search.
-    """
-    from .similarity import _kmeans_lite
-
-    vecs = df.select(
-        F.col("embedding").cast("array<double>").alias("v")) \
-        .where(F.col("v").isNotNull())
-    n = vecs.count()
-    if n == 0:
-        raise ValueError("pq_train: no non-null vectors")
-    frac = min(1.0, (SAMPLE_SIZE * 1.25) / max(n, 1))
-    sample = np.array(
-        [r.v for r in vecs.sample(fraction=frac, seed=SAMPLE_SEED)
-         .limit(SAMPLE_SIZE).collect()], dtype=np.float64)
-    d = sample.shape[1]
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    sub = d // m
-    rows = []
-    for j in range(m):
-        cents = _kmeans_lite(sample[:, j * sub:(j + 1) * sub], k,
-                             seed=SAMPLE_SEED + j)
-        rows += [(j, c, [float(x) for x in cents[c]])
-                 for c in range(len(cents))]
-    return df.sparkSession.createDataFrame(
-        rows, "j int, centroid_id int, cv array<double>")

@@ -7,12 +7,11 @@ table, fatal on a corpus. The classic cure (what ``RDD.zipWithIndex``
 does internally) is implemented here DataFrame-first:
 
 1. ``repartitionByRange`` on the sort keys — one parallel shuffle that
-   makes partition order == global order. When the caller does not
-   pin ``num_partitions``, the expression form (no explicit N) is
-   used so AQE sizes the post-shuffle partition count from the DATA
-   (REPARTITION_BY_COL origin → coalescePartitions applies): the
-   spine is scale-adaptive instead of tuned to one core count, and
-   every result below is partition-count-independent by
+   makes partition order == global order. The expression form (no
+   explicit N) lets AQE size the post-shuffle partition count from
+   the DATA (REPARTITION_BY_COL origin → coalescePartitions applies):
+   the spine is scale-adaptive instead of tuned to one core count,
+   and every result below is partition-count-independent by
    construction;
 2. pin the partitioning (LAZY ``localCheckpoint``) so the counting
    job and the ranking job see byte-identical partitions (range
@@ -41,26 +40,20 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _range_pinned(df: DataFrame, cols: list[Column],
-                  num_partitions: int | None) -> DataFrame:
+def _range_pinned(df: DataFrame, cols: list[Column]) -> DataFrame:
     """Range-partition on ``cols`` and pin the partitioning with a
     LAZY localCheckpoint (materialized by the caller's first full-scan
     action — one job computes AND persists). No explicit partition
-    count unless the caller pins one: the expression form lets AQE
-    coalesce the post-shuffle count from data size (scale-adaptive;
-    every spine result is partition-count-independent)."""
-    if num_partitions is not None:
-        ranged = df.repartitionByRange(num_partitions, *cols)
-    else:
-        ranged = df.repartitionByRange(*cols)
-    return ranged.localCheckpoint(eager=False)
+    count: the expression form lets AQE coalesce the post-shuffle
+    count from data size (scale-adaptive; every spine result is
+    partition-count-independent)."""
+    return df.repartitionByRange(*cols).localCheckpoint(eager=False)
 
 
 def _ranked_with_total(df: DataFrame, order_by: list[Column | str],
-                       rank_col: str,
-                       num_partitions: int | None) -> tuple[DataFrame, int]:
+                       rank_col: str) -> tuple[DataFrame, int]:
     cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    ranged = _range_pinned(df, cols, num_partitions)
+    ranged = _range_pinned(df, cols)
     counts = {r.pid: r.cnt for r in
               (ranged.groupBy(F.spark_partition_id().alias("pid"))
                .agg(F.count("*").alias("cnt")).collect())}
@@ -95,18 +88,16 @@ def _ranked_with_total(df: DataFrame, order_by: list[Column | str],
 
 
 def global_rank(df: DataFrame, order_by: list[Column | str],
-                rank_col: str = "rank",
-                num_partitions: int | None = None) -> DataFrame:
+                rank_col: str = "rank") -> DataFrame:
     """Add a 1-based dense global row number by ``order_by`` (must be
     a total order — include a unique tiebreaker) without ever moving
     the data to a single partition."""
-    ranked, _ = _ranked_with_total(df, order_by, rank_col, num_partitions)
+    ranked, _ = _ranked_with_total(df, order_by, rank_col)
     return ranked
 
 
 def global_cumsum(df: DataFrame, order_by: list[Column | str],
-                  value_col: str, out_col: str = "cumsum",
-                  num_partitions: int | None = None) -> DataFrame:
+                  value_col: str, out_col: str = "cumsum") -> DataFrame:
     """Running total of ``value_col`` in global ``order_by`` order
     (inclusive of the current row) without a single-partition window —
     the same two-pass shape as :func:`global_rank`, with per-partition
@@ -119,7 +110,7 @@ def global_cumsum(df: DataFrame, order_by: list[Column | str],
     """
     spark = df.sparkSession
     cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    ranged = _range_pinned(df, cols, num_partitions)
+    ranged = _range_pinned(df, cols)
     sums = {r.pid: r.s for r in
             (ranged.groupBy(F.spark_partition_id().alias("pid"))
              .agg(F.sum(value_col).alias("s")).collect())}
@@ -146,8 +137,7 @@ def global_cumsum(df: DataFrame, order_by: list[Column | str],
 
 
 def global_ntile(df: DataFrame, n: int, order_by: list[Column | str],
-                 out_col: str = "ntile",
-                 num_partitions: int | None = None) -> DataFrame:
+                 out_col: str = "ntile") -> DataFrame:
     """Equal-frequency bucketing with EXACT ``ntile(n)`` semantics
     (bucket sizes differ by at most one; the first ``N mod n`` buckets
     take the extra row), derived arithmetically from the scalable
@@ -157,8 +147,7 @@ def global_ntile(df: DataFrame, n: int, order_by: list[Column | str],
     collected, so no extra job runs."""
     if n <= 0:
         raise ValueError(f"n must be positive, got {n}")
-    ranked, n_rows = _ranked_with_total(df, order_by, "_rank",
-                                        num_partitions)
+    ranked, n_rows = _ranked_with_total(df, order_by, "_rank")
     base, rem = divmod(n_rows, n)
     cut = rem * (base + 1)
     r = F.col("_rank")
@@ -168,8 +157,8 @@ def global_ntile(df: DataFrame, n: int, order_by: list[Column | str],
             .drop("_rank"))
 
 
-def skyline_2d(df: DataFrame, x_col: str, y_col: str, id_col: str,
-               num_partitions: int | None = None) -> DataFrame:
+def skyline_2d(df: DataFrame, x_col: str, y_col: str,
+               id_col: str) -> DataFrame:
     """2-D skyline / Pareto frontier (E149): the rows not dominated by
     any other — minimize ``x_col``, maximize ``y_col``; among rows with
     identical (x, y) the min ``id_col`` survives (the engine-wide
@@ -189,7 +178,7 @@ def skyline_2d(df: DataFrame, x_col: str, y_col: str, id_col: str,
     """
     spark = df.sparkSession
     cols = [F.col(x_col).asc(), F.col(y_col).desc(), F.col(id_col).asc()]
-    ranged = _range_pinned(df, cols, num_partitions)
+    ranged = _range_pinned(df, cols)
     maxes = {r.pid: r.m for r in
              (ranged.groupBy(F.spark_partition_id().alias("pid"))
               .agg(F.max(y_col).alias("m")).collect())}

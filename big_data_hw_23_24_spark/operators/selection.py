@@ -41,6 +41,9 @@ from pyspark.sql import functions as F
 from .ranking import global_cumsum
 
 PRIORITY_HASH_CHARS = 12  # md5 hex digits behind each priority draw
+PRIORITY_SALT = "ps"  # salt of priority_sample's draws
+DSIR_EPS = 1e-6  # dsir_importance's probability-space smoothing
+SHARD_TARGET_TOKENS = 2000  # tokens per shard_manifest shard
 
 
 def stratified_sample(df: DataFrame, strata_cols: list[str], k: int,
@@ -66,24 +69,18 @@ def stratified_sample(df: DataFrame, strata_cols: list[str], k: int,
 
 def quality_budget(df: DataFrame, order_by: list[Column | str],
                    size_col: str, budget: int,
-                   cum_col: str = "cum_size",
-                   keep_partial: bool = False) -> DataFrame:
+                   cum_col: str = "cum_size") -> DataFrame:
     """Take rows in ``order_by`` order (best first — pass descending
     quality plus a unique tiebreaker) until the running total of
     ``size_col`` reaches ``budget``.
 
-    ``keep_partial=False`` keeps rows whose INCLUSIVE running total
-    fits the budget (never overshoots); ``True`` also admits the first
-    row that crosses it (never undershoots while data remains). The
-    returned frame carries ``cum_col`` so downstream stages can see
-    how full the budget ran.
+    Keeps rows whose INCLUSIVE running total fits the budget (never
+    overshoots). The returned frame carries ``cum_col`` so downstream
+    stages can see how full the budget ran.
     """
     if budget < 0:
         raise ValueError(f"budget must be non-negative, got {budget}")
     cum = global_cumsum(df, order_by, size_col, out_col=cum_col)
-    if keep_partial:
-        # row crosses the line iff everything BEFORE it fit
-        return cum.where(F.col(cum_col) - F.col(size_col) < budget)
     return cum.where(F.col(cum_col) <= budget)
 
 
@@ -98,10 +95,10 @@ def token_shards(df: DataFrame, order_by: list[Column | str], size_col: str,
     exclusive prefix sum of ``size_col`` — each row lands in the shard
     its first token falls in, so shard sizes deviate from ``target``
     by at most one document. The prefix sum is the range-partitioned
-    two-pass :func:`operators.ranking.global_cumsum`; downstream,
-    ``sources.sinks.write_parquet(partition_by=[shard])`` gives one
-    directory per shard. Pass an md5-of-key order for a deterministic
-    pre-shuffled layout (the engine's seed-free convention).
+    two-pass :func:`operators.ranking.global_cumsum`; downstream, a
+    parquet write partitioned by ``shard`` gives one directory per
+    shard. Pass an md5-of-key order for a deterministic pre-shuffled
+    layout (the engine's seed-free convention).
     """
     if target <= 0:
         raise ValueError(f"target must be positive, got {target}")
@@ -112,8 +109,8 @@ def token_shards(df: DataFrame, order_by: list[Column | str], size_col: str,
         .cast("bigint"))
 
 
-def dsir_importance(docs: DataFrame, is_target: Column, bucket_chars: int = 3,
-                    eps: float = 1e-6) -> DataFrame:
+def dsir_importance(docs: DataFrame, is_target: Column,
+                    bucket_chars: int = 3) -> DataFrame:
     """DSIR-style importance weights → ``(doc_id, n_feats, weight)``.
 
     Data Selection via Importance Resampling (Xie et al., NeurIPS
@@ -121,7 +118,7 @@ def dsir_importance(docs: DataFrame, is_target: Column, bucket_chars: int = 3,
     RAW corpus as bag-of-hashed-bigram distributions, then weight
     every document by the average log-likelihood ratio of its
     features — ``weight = Σ c_f·(ln p̂_target(f) − ln p̂_raw(f)) / Σ
-    c_f`` with ``p̂ = c/T + eps``. Documents that look like the target
+    c_f`` with ``p̂ = c/T + DSIR_EPS``. Documents that look like the target
     domain score > 0; selection upsamples by weight (e.g. keep
     ``weight >= 0``, or feed ``-weight`` into :func:`quality_budget`
     as the quality ordering).
@@ -129,7 +126,7 @@ def dsir_importance(docs: DataFrame, is_target: Column, bucket_chars: int = 3,
     Features are word bigrams hashed to ``16^bucket_chars`` buckets by
     md5 prefix (engine-portable, seed-free — the hash IS the
     vocabulary, no fitting pass). Smoothing is in PROBABILITY space
-    (``+eps`` on each normalized frequency, DSIR's own formulation) —
+    (``+DSIR_EPS`` on each normalized frequency, DSIR's own formulation) —
     add-α count smoothing over the full 16^n bucket space would
     swamp the totals of any corpus smaller than α·16^n features and
     flip every in-target sign. Documents with fewer than 2 words
@@ -143,8 +140,6 @@ def dsir_importance(docs: DataFrame, is_target: Column, bucket_chars: int = 3,
     """
     if bucket_chars < 1 or bucket_chars > 8:
         raise ValueError(f"bucket_chars must be in 1..8, got {bucket_chars}")
-    if eps <= 0:
-        raise ValueError(f"eps must be positive, got {eps}")
 
     from .util import lowered_words
 
@@ -187,14 +182,14 @@ def dsir_importance(docs: DataFrame, is_target: Column, bucket_chars: int = 3,
     lr_tbl = (bucket_tbl.crossJoin(F.broadcast(totals))
               .select("_b",
                       # greatest(·,1): an empty target side degrades to
-                      # p̂_target = eps everywhere (strongly negative lr)
+                      # p̂_target = DSIR_EPS everywhere (strongly negative lr)
                       # instead of 0/0 nulls
                       (F.log(F.col("_tgt")
                              / F.greatest(F.col("_ttgt"), F.lit(1))
-                             + F.lit(eps))
+                             + F.lit(DSIR_EPS))
                        - F.log(F.col("_raw")
                                / F.greatest(F.col("_traw"), F.lit(1))
-                               + F.lit(eps)))
+                               + F.lit(DSIR_EPS)))
                       .alias("_lr")))
 
     per_doc = (feats.join(F.broadcast(lr_tbl), "_b")
@@ -312,8 +307,7 @@ def contrastive_negatives(df: DataFrame, k: int = 4) -> DataFrame:
             .select("doc_id", "neg_rank", "neg_id"))
 
 
-def priority_sample(df: DataFrame, weight_col: str, k: int,
-                    salt: str = "ps") -> DataFrame:
+def priority_sample(df: DataFrame, weight_col: str, k: int) -> DataFrame:
     """Deterministic WEIGHTED k-sample per stratum via priority
     sampling (Duffield, Lund & Thorup 2007): each row draws a
     reproducible uniform u ∈ (0, 1] from its md5 and gets priority
@@ -345,7 +339,7 @@ def priority_sample(df: DataFrame, weight_col: str, k: int,
         raise ValueError(f"k must be positive, got {k}")
     denom = float(16 ** PRIORITY_HASH_CHARS) + 1.0
     u = ((F.conv(F.substring(
-            F.md5(F.concat_ws(":", F.lit(salt), F.col("source"),
+            F.md5(F.concat_ws(":", F.lit(PRIORITY_SALT), F.col("source"),
                               F.col("doc_id").cast("string"))),
             1, PRIORITY_HASH_CHARS), 16, 10).cast("double") + 1.0)
          / F.lit(denom))
@@ -472,7 +466,7 @@ def quality_calibration(docs: DataFrame, terms: list[str], n_tiles: int = 10,
             .orderBy("decile"))
 
 
-def shard_manifest(docs: DataFrame, target: int = 2000) -> DataFrame:
+def shard_manifest(docs: DataFrame) -> DataFrame:
     """Shard manifest with content checksums → ``(shard, n_docs,
     n_tokens, checksum)`` — the integrity artifact a trainer checks
     before (and audits after) consuming a sharded corpus export.
@@ -499,7 +493,7 @@ def shard_manifest(docs: DataFrame, target: int = 2000) -> DataFrame:
         F.size(words).cast("bigint").alias("n_tokens"),
         F.md5(F.col("doc_id").cast("string")).alias("_h"),
         fp32.alias("_fp"))
-    sh = token_shards(t, ["_h", "doc_id"], "n_tokens", target)
+    sh = token_shards(t, ["_h", "doc_id"], "n_tokens", SHARD_TARGET_TOKENS)
     return (sh.groupBy("shard")
             .agg(F.count("*").cast("long").alias("n_docs"),
                  F.sum("n_tokens").cast("long").alias("n_tokens"),

@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 IVF_SAMPLE_SIZE = 10_000  # driver sample that trains the IVF centroids
+IVF_N_LISTS = 16  # lists ivf_topk trains
+IVF_NPROBE = 4  # nearest lists each ivf_topk query probes
 LSH_BITS = 256  # random-hyperplane signature bits
 LSH_BANDS = 16  # LSH bands over the signature
 
@@ -127,32 +129,28 @@ def _nearest_lists_udf(centroids: np.ndarray, n: int):
     return nearest
 
 
-def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-             n_lists: int = 16, nprobe: int = 4,
-             centroids: np.ndarray | None = None) -> DataFrame:
+def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """IVF approximate top-k cosine → same schema as ``cosine_topk``.
 
-    Train centroids on a seeded uniform sample (``df.sample`` — not
-    ``limit``, which is partition-order biased), assign each corpus
-    vector to its nearest list (narrow Arrow-batched map), probe the
-    nprobe nearest lists per query (explode + equi-join on list_id),
-    exact-score only the probed lists. Recall < 1 by design; tests
-    measure it against ``cosine_topk``. Pass ``centroids`` (e.g. from
-    ``clustering.kmeans_fit``, the full-corpus distributed trainer) to
-    skip the sample-trained codebook.
+    Train ``IVF_N_LISTS`` centroids on a seeded uniform sample
+    (``df.sample`` — not ``limit``, which is partition-order biased),
+    assign each corpus vector to its nearest list (narrow
+    Arrow-batched map), probe the ``IVF_NPROBE`` nearest lists per
+    query (explode + equi-join on list_id), exact-score only the
+    probed lists. Recall < 1 by design; tests measure it against
+    ``cosine_topk``.
     """
-    if centroids is None:
-        n = corpus.count()
-        frac = min(1.0, (IVF_SAMPLE_SIZE * 1.25) / max(n, 1))
-        sample = np.array(
-            [r[0] for r in
-             corpus.select("embedding").sample(fraction=frac, seed=42)
-             .limit(IVF_SAMPLE_SIZE).collect()],
-            dtype=np.float64)
-        centroids = _kmeans_lite(sample, n_lists)
+    n = corpus.count()
+    frac = min(1.0, (IVF_SAMPLE_SIZE * 1.25) / max(n, 1))
+    sample = np.array(
+        [r[0] for r in
+         corpus.select("embedding").sample(fraction=frac, seed=42)
+         .limit(IVF_SAMPLE_SIZE).collect()],
+        dtype=np.float64)
+    centroids = _kmeans_lite(sample, IVF_N_LISTS)
 
     assign1 = _nearest_lists_udf(centroids, 1)
-    assign_probe = _nearest_lists_udf(centroids, nprobe)
+    assign_probe = _nearest_lists_udf(centroids, IVF_NPROBE)
 
     c = corpus.select(F.col("vec_id").alias("neighbor_id"),
                       F.col("embedding").alias("c_vec"))
@@ -310,8 +308,7 @@ def _lsh_band_verify(s: DataFrame, n_bits: int, bands: int,
     )
 
 
-def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.4,
-                        dim: int | None = None) -> DataFrame:
+def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
     """Random-hyperplane LSH near-dup pairs → (id_a, id_b, cosine ≥ t).
 
     SimHash-for-vectors: sgn(v·h_i) bits from ``LSH_BITS`` seeded
@@ -328,10 +325,9 @@ def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.4,
     time at 10× data) because every bucket crowds; 16-bit bands hold
     to ~100k vectors, 32-bit bands (256 bits in 8 bands) are the
     billion-vector setting. The one driver action is a single-row
-    ``first()`` to infer ``dim`` when not given.
+    ``first()`` to infer the vector dimension.
     """
-    if dim is None:
-        dim = len(emb.select("embedding").dropna().first()[0])
+    dim = len(emb.select("embedding").dropna().first()[0])
     rng = np.random.default_rng(42)
     sig = _hyperplane_sig_udf(rng.standard_normal((dim, LSH_BITS)))
     s = (emb.select(F.col("vec_id").alias("id"),
@@ -387,8 +383,8 @@ def _pinned_sig_udf(mat: np.ndarray):
     return sig
 
 
-def embedding_lsh_pairs_pinned(emb: DataFrame, threshold: float = 0.4,
-                               dim: int | None = None) -> DataFrame:
+def embedding_lsh_pairs_pinned(emb: DataFrame,
+                               threshold: float = 0.4) -> DataFrame:
     """The oracle-checkable face of ``embedding_lsh_pairs``: identical
     band-join-verify dataflow, but the Gaussian hyperplanes are
     replaced by the md5-pinned ±1 sign planes over int8-quantized
@@ -397,8 +393,7 @@ def embedding_lsh_pairs_pinned(emb: DataFrame, threshold: float = 0.4,
     shape and shuffle keys as the production face; only the projection
     matrix differs (sign projections are themselves a standard SimHash
     choice, not a test-only approximation)."""
-    if dim is None:
-        dim = len(emb.select("embedding").dropna().first()[0])
+    dim = len(emb.select("embedding").dropna().first()[0])
     sig = _pinned_sig_udf(_pinned_sign_planes(dim, LSH_BITS))
     s = (emb.select(F.col("vec_id").alias("id"),
                     F.col("embedding").alias("v"))
@@ -536,7 +531,7 @@ def semantic_dedup(emb: DataFrame, centroids: DataFrame,
                     F.coalesce(F.col("_dup"), F.lit(False)).alias("dropped")))
 
 
-def embedding_gram(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def embedding_gram(emb: DataFrame) -> DataFrame:
     """Distributed Gram matrix -> (i, j, value): the upper triangle of
     (1/n) * sum over vectors of v v-transpose, 1-based indices.
 
@@ -561,7 +556,7 @@ def embedding_gram(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
 
     def partials(batches):
         for pdf in batches:
-            vals = [v for v in pdf[vec_col].to_numpy() if v is not None]
+            vals = [v for v in pdf["embedding"].to_numpy() if v is not None]
             if not vals:
                 continue
             m = np.stack(vals).astype(np.float64)
@@ -578,7 +573,7 @@ def embedding_gram(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
 
     # a sub-row-group scan arrives as one split — fan out so the batch
     # matmuls use every core (no-op when the scan has enough splits)
-    parts = ensure_fanout(emb.select(vec_col)).mapInPandas(
+    parts = ensure_fanout(emb.select("embedding")).mapInPandas(
         partials, "i int, j int, psum double, pn long")
     return (parts.groupBy("i", "j")
             .agg(F.sum("psum").alias("_s"), F.sum("pn").alias("_n"))
@@ -849,9 +844,8 @@ def reciprocal_best_match(side_a: DataFrame, side_b: DataFrame) -> DataFrame:
     # that race to materialize a lazy checkpoint concurrently — the
     # cache-population race re-ran the expensive forward scan and
     # measured as a regression; one blocking job is the cheaper form.
-    # r15 A/B (VERDICT r14 task 7): collecting fwd to a driver-local
-    # relation (collect + createDataFrame, broadcast to both
-    # consumers) is ALSO a regression — exact 2.69 -> 2.93 s median,
+    # Collecting fwd to a driver-local relation (collect +
+    # createDataFrame, broadcast to both consumers) is ALSO a regression — exact 2.69 -> 2.93 s median,
     # IVF 3.15 -> 3.81 (interleaved min-of-6) — the Python->JVM
     # literal round-trip costs more than the checkpoint job it
     # replaces. Both alternatives now measured; eager stands.

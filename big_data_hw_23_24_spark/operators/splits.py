@@ -7,7 +7,7 @@ must not depend on row order, partitioning, or a session seed — and
 split. Random sampling (``df.sample``/``sampleBy``) gives none of
 these; hashing the content does.
 
-Design: bucket = the first ``bucket_chars`` hex digits of
+Design: bucket = the first ``BUCKET_CHARS`` hex digits of
 ``md5(key)``, compared lexicographically against cumulative-fraction
 thresholds. Everything stays a narrow JVM-side map — no shuffle, no
 state, no seed — and the identical expression is computable in any
@@ -34,9 +34,7 @@ BUCKET_CHARS = 4  # md5 hex digits behind each split or copy draw
 SPLIT_FRACTIONS = {"train": 0.8, "val": 0.1, "test": 0.1}
 
 
-def split_thresholds(fractions: dict[str, float],
-                     bucket_chars: int = BUCKET_CHARS
-                     ) -> list[tuple[str, str]]:
+def split_thresholds(fractions: dict[str, float]) -> list[tuple[str, str]]:
     """(name, upper-bound hex) per split, cumulative, last bound open.
 
     Bounds are zero-padded lowercase hex of ``floor(cum_frac * 16^n)``
@@ -48,12 +46,12 @@ def split_thresholds(fractions: dict[str, float],
         raise ValueError("at least one split required")
     if any(f < 0 for f in fractions.values()):
         raise ValueError(f"negative fraction in {fractions}")
-    space = 16 ** bucket_chars
+    space = 16 ** BUCKET_CHARS
     out, cum = [], 0.0
     for name, frac in fractions.items():
         cum += frac
         bound = min(int(cum * space), space)
-        out.append((name, format(bound, f"0{bucket_chars}x")))
+        out.append((name, format(bound, f"0{BUCKET_CHARS}x")))
     return out
 
 
@@ -75,8 +73,7 @@ def hash_split(df: DataFrame, key: Column | str) -> DataFrame:
 
 
 def mix_sources(df: DataFrame, rates: dict[str, float],
-                default_rate: float = 0.0,
-                bucket_chars: int = BUCKET_CHARS) -> DataFrame:
+                default_rate: float = 0.0) -> DataFrame:
     """Deterministic per-source downsampling to target mixture rates
     → input rows + (bucket, keep_rate, keep).
 
@@ -94,12 +91,13 @@ def mix_sources(df: DataFrame, rates: dict[str, float],
         raise ValueError(f"rates must be in [0,1]: {rates}")
     if not 0 <= default_rate <= 1:
         raise ValueError(f"default_rate must be in [0,1]: {default_rate}")
+    bucket_chars = BUCKET_CHARS
     space = 16 ** bucket_chars
-    # keep-fractions are floored to 1/space granularity (bucket_chars=4
+    # keep-fractions are floored to 1/space granularity (BUCKET_CHARS=4
     # → 1/65536 ≈ 1.5e-5). A nonzero rate that floors to zero buckets
     # would silently keep NO rows — that's a config error, not a
     # sampling decision, so fail loudly and point at the fix. (Note
-    # boundary rows near a threshold can flip when bucket_chars
+    # boundary rows near a threshold can flip when BUCKET_CHARS
     # changes; pick the width once per corpus.)
     unrepresentable = {s: r for s, r in
                        {**rates, "<default>": default_rate}.items()
@@ -107,7 +105,7 @@ def mix_sources(df: DataFrame, rates: dict[str, float],
     if unrepresentable:
         raise ValueError(
             f"rates {unrepresentable} are below 1/{space} and would keep "
-            f"zero rows at bucket_chars={bucket_chars}; raise bucket_chars "
+            f"zero rows at BUCKET_CHARS={bucket_chars}; raise BUCKET_CHARS "
             f"(8 gives ~2.3e-10 granularity)")
     bucket = F.substring(F.md5(F.col("text")), 1, bucket_chars)
 

@@ -16,6 +16,9 @@ SPAN_K = 20  # chars per gram of char_span_flags
 SPAN_W = 8  # winnowing window of char_span_flags
 DECONTAM_N = 8  # words per decontamination n-gram
 NOVELTY_N = 3  # words per novelty n-gram
+REPEAT_SPAN_N = 8  # words per repeated-span n-gram
+REPEAT_MIN_DOCS = 2  # distinct documents that make a span repeated
+NGRAM_MIN_COUNT = 2  # occurrences ngram_count_table keeps
 
 # Tiny per-language stopword profiles for the heuristic detector.
 # Deliberately small + hard-coded: language ID at scale wants a real
@@ -255,8 +258,7 @@ def content_fingerprints(docs: DataFrame) -> DataFrame:
     )
 
 
-def token_entropy(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+def token_entropy(docs: DataFrame) -> DataFrame:
     """Per-document Shannon entropy of the word distribution →
     (doc_id, n_tokens, token_entropy) in nats.
 
@@ -272,18 +274,18 @@ def token_entropy(docs: DataFrame, text_col: str = "text",
     doc-level fold; the token stream itself is never shuffled. Empty
     documents score 0.
     """
-    base = docs.select(F.col(id_col), F.col(text_col)) \
-        .repartition(F.col(id_col))
-    words = _words(F.lower(F.col(text_col)))
-    ex = base.select(F.col(id_col), F.size(words).alias("n_tokens"),
+    base = docs.select(F.col("doc_id"), F.col("text")) \
+        .repartition(F.col("doc_id"))
+    words = _words(F.lower(F.col("text")))
+    ex = base.select(F.col("doc_id"), F.size(words).alias("n_tokens"),
                      F.explode_outer(words).alias("w"))
-    return (ex.groupBy(id_col, "w")
+    return (ex.groupBy("doc_id", "w")
             .agg(F.count("w").alias("c"),
                  F.first("n_tokens").alias("n_tokens"))
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.sum(F.col("c") * F.log(F.col("c"))).alias("_clc"),
                  F.first("n_tokens").alias("n_tokens"))
-            .select(id_col, "n_tokens",
+            .select("doc_id", "n_tokens",
                     F.round(F.when(F.col("n_tokens") > 0,
                                    F.log("n_tokens")
                                    - F.col("_clc") / F.col("n_tokens"))
@@ -351,8 +353,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 4, w: int = 5,
     return base if keep_selection else base.drop("selected")
 
 
-def winnow_overlap_pairs(docs: DataFrame, k: int = 4, w: int = 5,
-                         max_df: int | None = None) -> DataFrame:
+def winnow_overlap_pairs(docs: DataFrame, k: int = 4, w: int = 5) -> DataFrame:
     """Document-overlap candidates from winnowed fingerprints — the
     MOSS comparison step: explode each document's selected hashes into
     an inverted index, equi-join on the hash, and score each pair by
@@ -361,20 +362,11 @@ def winnow_overlap_pairs(docs: DataFrame, k: int = 4, w: int = 5,
 
     The join is keyed by fingerprint hash, never a document pair —
     cost is Σ df(h)² over the selected hashes, the inverted-index
-    shape that survives corpus scale. ``max_df`` drops fingerprints
-    selected by more than that many documents before pairing (the
-    stop-fingerprint guard: a boilerplate hash shared by a million
-    docs would otherwise create a quadratic bucket — same cure as
-    boilerplate n-gram pruning).
+    shape that survives corpus scale.
     """
     s = winnow_fingerprints(docs, k, w, keep_selection=True)
     ex = s.select(F.col("doc_id"), F.col("n_selected"),
                   F.explode("selected").alias("_h"))
-    if max_df is not None:
-        freq = (ex.groupBy("_h")
-                .agg(F.count("*").alias("_df"))
-                .where(F.col("_df") <= max_df).select("_h"))
-        ex = ex.join(freq, "_h", "left_semi")
     a = ex.select(F.col("doc_id").alias("id_a"),
                   F.col("n_selected").alias("_na"), "_h")
     b = ex.select(F.col("doc_id").alias("id_b"),
@@ -661,11 +653,11 @@ def redact_pii(docs: DataFrame) -> DataFrame:
     return docs.select(F.col("doc_id"), redacted.alias("text"))
 
 
-def remove_repeated_spans(docs: DataFrame, n: int = 8,
-                          min_docs: int = 2) -> DataFrame:
+def remove_repeated_spans(docs: DataFrame,
+                          n: int = REPEAT_SPAN_N) -> DataFrame:
     """Exact repeated-span REMOVAL → (doc_id, n_tokens, n_removed,
     clean_text): strip every token covered by a word n-gram that
-    appears in ≥ ``min_docs`` distinct documents.
+    appears in ≥ ``REPEAT_MIN_DOCS`` distinct documents.
 
     The acting sibling of ``boilerplate_ngrams`` — the
     exact-substring-deduplication step of corpus cleaning (Lee et al.
@@ -680,7 +672,7 @@ def remove_repeated_spans(docs: DataFrame, n: int = 8,
 
     Plan shape: the positioned (doc, start, gram) explode is
     materialized ONCE (fanout-guarded, the E52 localCheckpoint move)
-    and feeds both consumers — the mined ≥ min_docs gram set (grouped
+    and feeds both consumers — the mined ≥ REPEAT_MIN_DOCS gram set (grouped
     on the gram, threshold-pruned, broadcast back) and the per-doc
     flagged-start list. Reconstruction is a narrow nested-HOF filter:
     keep word i unless some flagged start s has s ≤ i ≤ s+n-1; the
@@ -688,15 +680,15 @@ def remove_repeated_spans(docs: DataFrame, n: int = 8,
     never a corpus term. Short docs (< n words) pass through intact
     via the left join.
     """
-    return _repeated_span_removal(docs, n, min_docs, "text", "doc_id",
-                                  keep_first_owner=False)
+    return _repeated_span_removal(docs, n, REPEAT_MIN_DOCS, "text",
+                                  "doc_id", keep_first_owner=False)
 
 
-def remove_repeated_spans_keepone(docs: DataFrame, n: int = 8,
-                                  min_docs: int = 2) -> DataFrame:
+def remove_repeated_spans_keepone(docs: DataFrame) -> DataFrame:
     """Exact repeated-span dedup, KEEP-ONE variant → (doc_id,
-    n_tokens, n_removed, clean_text): for every word n-gram shared by
-    ≥ ``min_docs`` distinct documents, the FIRST OWNER (minimum doc
+    n_tokens, n_removed, clean_text): for every word
+    ``REPEAT_SPAN_N``-gram shared by ≥ ``REPEAT_MIN_DOCS`` distinct
+    documents, the FIRST OWNER (minimum doc
     id — the same deterministic engine-wide election every survivor
     rule here uses) keeps its occurrences; every later document loses
     the covered tokens.
@@ -707,7 +699,7 @@ def remove_repeated_spans_keepone(docs: DataFrame, n: int = 8,
     licensed text still appears exactly once in training data —
     whereas :func:`remove_repeated_spans` strips ALL occurrences (the
     boilerplate-chrome default). Two stated edges: (a) occurrences
-    repeated WITHIN the owner document are all kept (``min_docs``
+    repeated WITHIN the owner document are all kept (REPEAT_MIN_DOCS
     counts distinct documents — single-doc internal repetition is
     ``doc_repetition_scores``' business, not dedup's); (b) a token in
     a non-owner doc survives only if NO foreign-owned flagged gram
@@ -720,8 +712,8 @@ def remove_repeated_spans_keepone(docs: DataFrame, n: int = 8,
     ``min(doc_id)`` as the owner and the flag join drops the owner's
     own rows before collecting starts — zero extra shuffles.
     """
-    return _repeated_span_removal(docs, n, min_docs, "text", "doc_id",
-                                  keep_first_owner=True)
+    return _repeated_span_removal(docs, REPEAT_SPAN_N, REPEAT_MIN_DOCS,
+                                  "text", "doc_id", keep_first_owner=True)
 
 
 def _repeated_span_removal(docs: DataFrame, n: int, min_docs: int,
@@ -1213,9 +1205,9 @@ def gram_novelty(docs: DataFrame) -> DataFrame:
                  .alias("novelty")))
 
 
-def ngram_count_table(docs: DataFrame, min_count: int = 2) -> DataFrame:
+def ngram_count_table(docs: DataFrame) -> DataFrame:
     """Pruned n-gram count table → ``(n, gram, cnt)`` for every word
-    n-gram of order 1..3 occurring at least ``min_count``
+    n-gram of order 1..3 occurring at least ``NGRAM_MIN_COUNT``
     times corpus-wide — the table a count-based LM (KenLM-style)
     or collocation miner trains from.
 
@@ -1224,7 +1216,7 @@ def ngram_count_table(docs: DataFrame, min_count: int = 2) -> DataFrame:
     per row, the order-k gram arrays are built as struct arrays and
     concatenated, so the corpus explodes once into (n, gram) and one
     hash aggregate (map-side combinable) produces the counts; the
-    ``min_count`` prune is what keeps the long tail (mostly
+    ``NGRAM_MIN_COUNT`` prune is what keeps the long tail (mostly
     hapax legomena, ~half the mass under Zipf) out of the output.
     """
     words = F.filter(F.split(F.col("text"), " "),
@@ -1259,7 +1251,7 @@ def ngram_count_table(docs: DataFrame, min_count: int = 2) -> DataFrame:
                     F.col("g.gram").alias("gram"))
             .groupBy("n", "gram")
             .agg(F.count("*").cast("long").alias("cnt"))
-            .where(F.col("cnt") >= min_count))
+            .where(F.col("cnt") >= NGRAM_MIN_COUNT))
 
 
 def rake_keyphrases(docs: DataFrame, stopwords: list[str],

@@ -28,6 +28,9 @@ from pyspark.sql import functions as F
 
 MIN_BASELINE = 3  # trailing days an anomaly baseline needs
 MAX_DECAY_DAYS = 19  # age past which an event no longer trends
+SESSION_GAP_MINUTES = 30  # inter-event gap that ends a session
+SESSION_PATH_DEPTH = 3  # event types in a session's opening path
+MAX_SPAN_BUCKETS = 4096  # buckets one interval may explode to
 
 
 def daily_anomaly_scores(events: DataFrame) -> DataFrame:
@@ -137,13 +140,12 @@ def user_activity_profile(events: DataFrame) -> DataFrame:
         .alias("burst_flag")))
 
 
-def session_paths(events: DataFrame, gap_minutes: int = 30,
-                  depth: int = 3) -> DataFrame:
+def session_paths(events: DataFrame) -> DataFrame:
     """Top-of-session path mining → ``(path, n_sessions)``: sessions
-    are maximal runs with inter-event gaps ≤ ``gap_minutes``; a
-    session's path is its first ``depth`` event types joined with
-    '>' — the "how do visits start" report behind navigation and
-    onboarding analysis (the funnel tests ONE path; this reports the
+    are maximal runs with inter-event gaps ≤ ``SESSION_GAP_MINUTES``;
+    a session's path is its first ``SESSION_PATH_DEPTH`` event types
+    joined with '>' — the "how do visits start" report behind
+    navigation and onboarding analysis (the funnel tests ONE path; this reports the
     empirical distribution of observed openings).
 
     Sessionization is the gaps-and-islands form of the stateful
@@ -156,7 +158,7 @@ def session_paths(events: DataFrame, gap_minutes: int = 30,
     """
     tick = ticks_us(events)
     w = Window.partitionBy("user_id").orderBy(tick, F.col("event_id"))
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = SESSION_GAP_MINUTES * 60 * 1_000_000
     gap = tick - F.lag(tick).over(w)
     new_sess = (gap.isNull() | (gap > gap_us)).cast("int")
     run = (Window.partitionBy("user_id").orderBy(tick, F.col("event_id"))
@@ -170,7 +172,8 @@ def session_paths(events: DataFrame, gap_minutes: int = 30,
                F.slice(F.transform(
                    F.sort_array(F.collect_list(
                        F.struct("_tk", "event_id", "event_type"))),
-                   lambda r: r["event_type"]), 1, depth), ">")
+                   lambda r: r["event_type"]), 1, SESSION_PATH_DEPTH),
+               ">")
                .alias("path")))
     return (per.groupBy("path")
             .agg(F.count("*").cast("long").alias("n_sessions")))
@@ -324,8 +327,7 @@ def calendar_gaps(df: DataFrame, date_col: str,
 def interval_overlap_join(points: DataFrame, intervals: DataFrame,
                           point_col: str, start_col: str, end_col: str,
                           bucket_width: int,
-                          extra_keys: list[str] | None = None,
-                          max_span_buckets: int = 4096) -> DataFrame:
+                          extra_keys: list[str] | None = None) -> DataFrame:
     """Generic interval-overlap join (E173): every (point, interval)
     pair with ``start <= point <= end`` (closed; all three LONG
     columns in the caller's tick unit), optionally also equi-matched
@@ -345,15 +347,16 @@ def interval_overlap_join(points: DataFrame, intervals: DataFrame,
 
     Size ``bucket_width`` near the typical interval span: explode
     factor is span/width (+1), probe fan-in is intervals-per-bucket.
-    ``max_span_buckets`` bounds the explode — a degenerate interval
+    ``MAX_SPAN_BUCKETS`` bounds the explode — a degenerate interval
     spanning the whole timeline would fan out corpus-wide, so a span
-    covering MORE than ``max_span_buckets`` buckets RAISES
+    covering MORE than ``MAX_SPAN_BUCKETS`` buckets RAISES
     (poisoned-expression arm, the hierarchy-rollup convention)
-    instead of silently exploding; exactly ``max_span_buckets`` is
+    instead of silently exploding; exactly ``MAX_SPAN_BUCKETS`` is
     allowed.
     Output: all ``points`` columns + all ``intervals`` columns.
     """
     w = int(bucket_width)
+    max_span_buckets = MAX_SPAN_BUCKETS
     keys = list(extra_keys or [])
     b0 = F.floor(F.col(start_col) / w).cast("long")
     b1 = F.floor(F.col(end_col) / w).cast("long")
@@ -388,22 +391,21 @@ EWMA_MICRO = tuple(round(1_000_000 * EWMA_ALPHA * (1 - EWMA_ALPHA) ** (k - 1))
 
 
 def ewma_forecast(daily: DataFrame, key_cols: list[str], day_col: str,
-                  value_col: str,
-                  weights: tuple = EWMA_MICRO) -> DataFrame:
+                  value_col: str) -> DataFrame:
     """Grouped one-step-ahead EWMA forecast + accuracy readout (E188)
     → one row per key: ``(key…, n_days, n_forecast_days, mape,
     next_forecast)``.
 
     The capacity-planning primitive next to the anomaly screen (E's
     trailing-baseline face): exponentially weighted moving average
-    over the last ``len(weights)`` observed periods, evaluated two
+    over the last ``len(EWMA_MICRO)`` observed periods, evaluated two
     ways — BACKTEST (each day forecast from its own trailing window;
     ``mape`` = mean absolute percentage error over the full-window
     days whose ACTUAL value is nonzero — a zero actual has no defined
     percentage error, so such days count in ``n_forecast_days`` but
     not in the MAPE average) and the actual ``next_forecast`` for the
     period after the last observed one (null until a full window of
-    history exists, i.e. ``n_days ≥ len(weights)``).
+    history exists, i.e. ``n_days ≥ len(EWMA_MICRO)``).
 
     Scale shape: ``daily`` is already the per-period aggregate, so the
     corpus-scale work happened upstream; everything here runs on the
@@ -415,6 +417,7 @@ def ewma_forecast(daily: DataFrame, key_cols: list[str], day_col: str,
     ``value_col`` integral); only the final normalizations divide,
     rounded 6 in both engines.
     """
+    weights = EWMA_MICRO
     L = len(weights)
     W = sum(weights)
     ks = list(key_cols)

@@ -1,8 +1,8 @@
 """Plan-inspection helpers: assert physical properties in tests.
 
 The engine's scale contract is checked, not hoped for: tests use these
-to assert that filters reach the parquet scan, small dims broadcast,
-and hot paths stay inside whole-stage codegen.
+to assert that filters reach the parquet scan and hot paths stay
+inside whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -28,7 +28,3 @@ def wholestage_codegen_spans(df: DataFrame) -> int:
     text = explain_str(df, "simple")
     return len(set(re.findall(r"\*\((\d+)\)", text)))
 
-
-def uses_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in explain_str(df, "simple") or \
-        "BroadcastNestedLoopJoin" in explain_str(df, "simple")

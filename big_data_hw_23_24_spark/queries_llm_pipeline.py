@@ -2286,7 +2286,13 @@ def corpus_incremental_stats(spark, sf_dir):
                    F.when(F.col("doc_id") % 31 == 2,
                           F.concat(F.col("text"), F.lit(" rewritten")))
                    .otherwise(F.col("text")).alias("text")))
-    return incremental_stats(old, new, "source")
+    toks = F.size(F.filter(
+        F.split(F.coalesce(F.col("text"), F.lit("")), " "),
+        lambda w: w != ""))
+    old_stats = (old.groupBy("source")
+                 .agg(F.count("*").cast("long").alias("n_docs"),
+                      F.sum(toks).cast("long").alias("n_tokens")))
+    return incremental_stats(old, new, old_stats, "source")
 
 
 # --- data-skipping (file pruning) audit (E156, r10) -----------------------------

@@ -386,9 +386,8 @@ def embedding_lloyd_round(spark, sf_dir):
 
 
 # --- product quantization (PQ) faces -----------------------------------------
-# pq_train is rows-only (per-subspace k-means on a driver sample); the
-# deterministic kernels — encode against FIXED codebooks and the ADC
-# lookup-table search — carry full oracles, the nearest-centroid move
+# The deterministic kernels — encode against FIXED codebooks and the
+# ADC lookup-table search — carry full oracles, the nearest-centroid move
 # applied per subspace. Codebooks fix centroid c of subspace j to
 # subvector j of corpus vector c (m=8 subspaces × 8 dims, k=16).
 _PQ_SQL_BASE = """

@@ -877,9 +877,7 @@ def doc_dsir_weights(spark, sf_dir):
     """,
     doc="fastText-style hashed linear quality classifier: "
         "deterministic md5-derived token weights folded JVM-side "
-        "(F.aggregate, zero shuffle, no explode); the trained-weights "
-        "face (linear_quality_score_weighted) is the same dataflow "
-        "with a broadcast weight table",
+        "(F.aggregate, zero shuffle, no explode)",
 )
 def doc_quality_classifier(spark, sf_dir):
     from .operators.cleaning import linear_quality_score
@@ -2011,8 +2009,7 @@ def doc_pretoken_stats(spark, sf_dir):
         "query; fusion joins only bounded shortlists",
 )
 def doc_hybrid_rrf(spark, sf_dir):
-    # r15 fusion experiment (VERDICT r14 task 5), NEGATIVE — kept as
-    # the two-retriever composition: computing both scores in ONE
+    # Kept as the two-retriever composition: computing both scores in ONE
     # (qid, doc) aggregate requires pinning the scored frame (Catalyst
     # otherwise re-splits the aggregate per top-k consumer and prunes
     # each copy back to the un-fused plan — and the pruned copies are

@@ -3636,9 +3636,15 @@ def orders_ivm_join_view(spark, sf_dir):
     new = (base.where(F.col("o_orderkey") % 47 != 0)
            .select("o_orderkey", F.col("cust_new").alias("o_custkey"),
                    F.col("cents_new").alias("cents")))
-    return ivm_join_view(old, new, _t(spark, sf_dir, "customer"),
-                         "o_orderkey", "o_custkey", "c_custkey",
-                         "c_nationkey", "cents")
+    customer = _t(spark, sf_dir, "customer")
+    old_view = (old.join(customer.select(F.col("c_custkey")
+                                         .alias("o_custkey"),
+                                         "c_nationkey"), "o_custkey")
+                .groupBy("c_nationkey")
+                .agg(F.count("*").cast("long").alias("n_rows"),
+                     F.sum("cents").cast("long").alias("total_value")))
+    return ivm_join_view(old, new, customer, "o_orderkey", "o_custkey",
+                         "c_custkey", "c_nationkey", "cents", old_view)
 
 
 # --- E212: chi-square independence (event mix x weekday) ----------------------

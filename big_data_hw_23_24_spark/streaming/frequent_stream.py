@@ -19,11 +19,6 @@ reference's ``reduceByKey().collectAsMap()``); reservoir and sticky
 samplers consume the batch sequentially driver-side, which is the
 *definitionally correct* place for them (their guarantees quantify
 over arrival order) and what the reference does too.
-
-At scale the exact histogram should graduate to the stateful
-aggregation in ``streaming_histogram`` below (update-mode
-``groupBy().count()`` with watermarking) — included as the idiomatic
-Spark face of K3.
 """
 
 from __future__ import annotations
@@ -82,8 +77,7 @@ class FrequentItemsMonitor:
         # exact histogram merged driver-side from the trimmed item list
         # (the reference's reduceByKey+collectAsMap merge,
         # G016HW3.java:91-101; batches are micro-batch-sized and the
-        # stream is n-capped, so the driver dict is bounded — for
-        # unbounded streams use streaming_histogram below instead)
+        # stream is n-capped, so the driver dict is bounded)
         for it in items:
             self.histogram[it] = self.histogram.get(it, 0) + 1
 
@@ -123,7 +117,7 @@ def run_frequent_items(spark: SparkSession, stream: DataFrame,
     """Run the monitor over a streaming DataFrame until n items seen.
 
     ``stream`` is any streaming DF with an item column (socket parse,
-    rate synthesis, file source...). Clean-stop protocol as in the
+    file source...). Clean-stop protocol as in the
     reference's template: foreachBatch sets an Event at the cutoff,
     the main thread stops the query.
     """
@@ -147,29 +141,3 @@ def socket_item_stream(spark: SparkSession, host: str, port: int) -> DataFrame:
             .option("host", host).option("port", port).load()
             .select(F.col("value").cast("bigint").alias("item")))
 
-
-def rate_item_stream(spark: SparkSession, rows_per_second: int = 10_000,
-                     n_heavy: int = 10, heavy_share: int = 100) -> DataFrame:
-    """Deterministic test stand-in for ports 8886/8888: the rate source
-    with an arithmetic item map — ``heavy_share``% of positions cycle
-    through ``n_heavy`` planted items, the rest are unique tail items.
-    """
-    v = F.col("value")
-    item = F.when(v % 100 < heavy_share,
-                  (v % F.lit(n_heavy)).cast("bigint")) \
-        .otherwise((v + 1_000_000).cast("bigint"))
-    return (spark.readStream.format("rate")
-            .option("rowsPerSecond", rows_per_second).load()
-            .select(F.col("value").alias("seq"), item.alias("item")))
-
-
-def streaming_histogram(spark: SparkSession, stream: DataFrame) -> DataFrame:
-    """The idiomatic-Spark face of K3: stateful streaming count per item.
-
-    Update-mode ``groupBy().count()`` — state lives in the state store
-    (RocksDB/HDFS-backed on a cluster), scales past driver memory, and
-    is the right building block when the stream is unbounded rather
-    than n-capped. Returned as a streaming DF for the caller to sink.
-    """
-    return stream.groupBy("item") \
-        .agg(F.count("*").alias("cnt"))

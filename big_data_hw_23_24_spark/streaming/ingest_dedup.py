@@ -11,9 +11,9 @@ replays are safe — a re-run of epoch N reads only epochs < N as
 "corpus", recomputes the identical statuses, and overwrites its own
 previous attempt.
 
-At 100 TB the store becomes a fingerprint-bucketed table
-(``sources/sinks.py::write_bucketed_table``) so the per-batch join is
-co-located and shuffle-free on the store side; the epoch-directory
+At 100 TB the store becomes a fingerprint-bucketed table (``bucketBy``
++ ``saveAsTable``) so the per-batch join is co-located and
+shuffle-free on the store side; the epoch-directory
 parquet used here keeps the same dataflow with the sandbox's plain
 parquet reader.
 """

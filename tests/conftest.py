@@ -28,3 +28,22 @@ def testn15(spark):
 
     df = read_points_csv(spark, os.path.join(FIXTURES, "testn15.csv"))
     return df.withColumn("pid", F.monotonically_increasing_id()).cache()
+
+
+@pytest.fixture
+def shuffle_partitions(spark):
+    """Set ``spark.sql.shuffle.partitions`` for one test, with AQE
+    partition coalescing off, so a range repartition with no explicit
+    count (the ``operators.ranking`` spine) makes that many
+    partitions — the way a session reaches a multi-partition spine."""
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+
+    def set_partitions(n: int) -> None:
+        spark.conf.set(keys[0], str(n))
+        spark.conf.set(keys[1], "false")
+
+    yield set_partitions
+    for k, v in saved.items():
+        spark.conf.set(k, v)

@@ -595,11 +595,13 @@ def test_corpus_pipeline_rejects_bad_contamination_mode(spark, tmp_path):
 
 def test_cli_mains_reject_bad_flags_before_building_a_session(
         tmp_path, monkeypatch, capsys):
-    """A mistyped flag, a value flag with no value or a value that does
-    not parse is a usage error (exit 2), never a silent default, a bare
-    StopIteration or a ValueError after the session is up."""
+    """A mistyped flag, a value flag with no value, a value that does
+    not parse or one out of range is a usage error (exit 2), never a
+    silent default, a bare StopIteration or a ValueError after the
+    session is up. The paper's apps print the reason too."""
     from big_data_hw_23_24_spark import session
-    from big_data_hw_23_24_spark.apps import corpus_pipeline, dedup_report
+    from big_data_hw_23_24_spark.apps import (
+        corpus_pipeline, dedup_report, hw1, hw2, hw3, wordcount)
 
     def no_session(*args, **kwargs):
         raise AssertionError("session built before the flags were checked")
@@ -620,3 +622,27 @@ def test_cli_mains_reject_bad_flags_before_building_a_session(
     out = capsys.readouterr().out.splitlines()
     assert out == ([corpus_pipeline.USAGE] * len(bad_pipeline)
                    + [dedup_report.USAGE] * len(bad_report))
+
+    pts = TESTN15
+    bad_apps = [
+        (hw1, [pts, "x", "3", "9", "2"]), (hw1, [pts, "0", "3", "9", "2"]),
+        (hw1, [pts, "nan", "3", "9", "2"]), (hw1, [pts, "1", "-3", "9", "2"]),
+        (hw1, [pts, "1", "3", "0", "2"]), (hw1, [pts, "1", "3", "9", "0"]),
+        (hw1, [pts, "1", "3", "9.5", "2"]),
+        (hw2, [pts, "0", "3", "2"]), (hw2, [pts, "3", "-1", "2"]),
+        (hw2, [pts, "3", "3", "x"]),
+        (hw3, ["0", "0.1", "0.05", "0.1", "8888"]),
+        (hw3, ["100", "1.5", "0.05", "0.1", "8888"]),
+        (hw3, ["100", "0.1", "0", "0.1", "8888"]),
+        (hw3, ["100", "0.1", "0.05", "1", "8888"]),
+        (hw3, ["100", "0.1", "0.05", "0.1", "port"]),
+        (wordcount, ["0", pts]), (wordcount, ["four", pts]),
+    ]
+    for app, args in bad_apps:
+        assert app.main(args) == 2, (app.__name__, args)
+    out = capsys.readouterr()
+    assert out.out.splitlines() == [app.USAGE for app, _ in bad_apps]
+    assert len(out.err.splitlines()) == len(bad_apps)  # one reason each
+    # too few arguments keep the reference's message and exit 1
+    assert hw1.main([pts, "1"]) == 1
+    assert capsys.readouterr().out.startswith("Please provide filename")

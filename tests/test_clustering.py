@@ -145,7 +145,8 @@ def test_kmeans_cost_monotone_nonincreasing(spark):
         assert b <= a + 1e-9  # Lloyd guarantee
 
 
-def test_kmeans_centroids_feed_ivf(spark):
+def test_kmeans_centroids_feed_ivf(spark, monkeypatch):
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.clustering import kmeans_fit
     from big_data_hw_23_24_spark.operators.similarity import (
         cosine_topk,
@@ -158,8 +159,11 @@ def test_kmeans_centroids_feed_ivf(spark):
     cent, _ = kmeans_fit(emb, k=16, iters=4, seed=5)
     exact = {(r.query_id, r.neighbor_id)
              for r in cosine_topk(emb, q, k=5).collect()}
+    # the sample trainer is stubbed: the kernel gets kmeans_fit's lists
+    monkeypatch.setattr(similarity, "_kmeans_lite",
+                        lambda sample, n_lists: cent)
+    monkeypatch.setattr(similarity, "IVF_NPROBE", 8)
     approx = {(r.query_id, r.neighbor_id)
-              for r in ivf_topk(emb, q, k=5, n_lists=16, nprobe=8,
-                                centroids=cent).collect()}
+              for r in ivf_topk(emb, q, k=5).collect()}
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.5  # nprobe=8 of 16 lists on near-random vectors

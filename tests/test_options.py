@@ -6,8 +6,10 @@ helpers of the ``queries_*`` modules. It audits the module-level
 functions and class methods that carry no decorator, whose name is
 defined once in the package and that are never used as a value (a
 callback, a patched attribute). Such a function is reached only by
-calls by name, so its calls in the package, ``perfbench/``, ``tests/``
-and ``__spark_entry__.py`` are all of its callers.
+calls by name, so its calls in the package, ``perfbench/`` and
+``__spark_entry__.py`` are all of its callers. Tests are not callers:
+a value only a test needs is a module constant the test monkeypatches,
+and a function only tests call is dead code.
 
 A defaulted parameter counts as set when some call passes it by
 keyword, or passes a positional argument at or past its index (a
@@ -33,7 +35,6 @@ AUDITED_DIRS = ("operators", "functions", "sources", "streaming", "plans")
 def _caller_files() -> list[Path]:
     files = sorted(PKG.rglob("*.py"))
     files += sorted((ROOT / "perfbench").glob("*.py"))
-    files += sorted((ROOT / "tests").glob("*.py"))
     files.append(ROOT / "__spark_entry__.py")
     return files
 

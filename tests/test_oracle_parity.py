@@ -3,15 +3,14 @@ on Spark AND its DuckDB oracle, compared order-insensitively on sorted
 column names and exact values. Queries without an oracle get a
 rows-runnable check (deterministic schema, ≥0 rows).
 
-Default budget (r15, VERDICT r14 task 1 — the driver's serial pytest
-outgrew its verify budget and was cut at ~86% in r14): each query runs
-at ONE scale factor per suite run — sf0.01 for the names declared
-partition-boundary-sensitive (``_SF01_SCALE_SENSITIVE``, whose
-machinery only stretches across partitions past the smallest SF),
-sf0.001 for the rest. Every query keeps its full-value oracle
+Default budget (the serial tier-1 run must fit its timeout): each
+query runs at ONE scale factor per suite run — sf0.01 for the names
+declared partition-boundary-sensitive (``_SF01_SCALE_SENSITIVE``,
+whose machinery only stretches across partitions past the smallest
+SF), sf0.001 for the rest. Every query keeps its full-value oracle
 comparison every run; only the redundant second SF moves behind
-``SPARK_GRAFT_FULL_PARITY=1`` (the builder-side sweep, run before
-every round close along with the sf0.1 opt-in).
+``SPARK_GRAFT_FULL_PARITY=1`` (a slower sweep, run together with the
+sf0.1 opt-in).
 """
 
 from __future__ import annotations

@@ -9,39 +9,48 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def test_hierarchy_rollup_rejects_keys_past_depth(spark):
+def test_hierarchy_rollup_rejects_keys_past_depth(spark, monkeypatch):
     """A key ≥ 10^(max_depth+1) has ancestors the unrolled closure
     cannot reach; the poisoned-expression guard must raise instead of
     silently dropping them (pre-fix: 10^5 at depth 3 lost its root and
     reported 10^5 div 10^3 as a root)."""
+    from big_data_hw_23_24_spark.operators import graph
     from big_data_hw_23_24_spark.operators.graph import hierarchy_rollup
 
+    monkeypatch.setattr(graph, "HIERARCHY_MAX_DEPTH", 3)
     bad = spark.createDataFrame([(10 ** 5, 1.0)], "k long, v double")
     with pytest.raises(Exception, match="exceeds max_depth"):
-        hierarchy_rollup(bad, "k", "v", max_depth=3).collect()
+        hierarchy_rollup(bad, "k", "v").collect()
     # boundary: the deepest representable key still passes
     edge = spark.createDataFrame([(10 ** 4 - 1, 1.0)], "k long, v double")
     got = {r.node for r in
-           hierarchy_rollup(edge, "k", "v", max_depth=3).collect()}
+           hierarchy_rollup(edge, "k", "v").collect()}
     assert got == {9999, 999, 99, 9}
 
 
-def test_skyline_fallback_keeps_native_y_type(spark):
+def test_skyline_fallback_keeps_native_y_type(spark, shuffle_partitions):
     """The >256-partition offset path must carry y's NATIVE int64: a
     double offset rounds 2^53+1 to 2^53+2, flipping the strict
-    dominance comparison (the two paths would disagree)."""
+    dominance comparison (the two paths would disagree). ~4,000
+    dominated filler rows fill 300 range partitions and keep the four
+    planted points in different ones, so each compares against the
+    prefix max carried in from earlier partitions."""
     from big_data_hw_23_24_spark.operators.ranking import skyline_2d
+    from big_data_hw_23_24_spark.plans.inspect import explain_str
 
     big = 2 ** 53
-    df = spark.createDataFrame(
-        [(1, big + 2, 1), (2, big + 1, 2), (3, big + 3, 3), (0, big, 4)],
-        "x long, y long, id long")
-    got = sorted((r.x, r.id) for r in
-                 skyline_2d(df, "x", "y", "id",
-                            num_partitions=300).collect())
-    # (2, big+1) is dominated by (1, big+2); under float64 offsets both
-    # render as the same double and the strict > comparison flips
-    assert got == [(0, 4), (1, 1), (3, 3)]
+    planted = [(1000, big + 2, 1), (2000, big + 1, 2), (3000, big + 3, 3),
+               (0, big, 4)]
+    fillers = [(x, 0, 10_000 + x) for x in range(1, 4000) if x % 1000]
+    df = spark.createDataFrame(planted + fillers, "x long, y long, id long")
+    shuffle_partitions(300)
+    sky = skyline_2d(df, "x", "y", "id")
+    assert "BroadcastHashJoin" in explain_str(sky, "simple")
+    got = sorted((r.x, r.id) for r in sky.collect())
+    # (2000, big+1) is dominated by (1000, big+2); under float64
+    # offsets both render as the same double and the strict >
+    # comparison flips
+    assert got == [(0, 4), (1000, 1), (3000, 3)]
 
 
 def test_build_query_index_stats_is_literal(spark):
@@ -65,9 +74,9 @@ def test_build_query_index_stats_is_literal(spark):
 
 
 def test_incremental_stats_accepts_maintained_base(spark):
-    """The IVM contract: passing the previously-maintained stats table
-    as the base must give the same result as the demo-mode old-snapshot
-    recompute (and is the path where old text is never re-tokenized)."""
+    """The IVM contract: the previously-maintained stats table is the
+    base, and old text is never re-tokenized; a doc moving groups and a
+    new doc land in the new snapshot's stats."""
     from big_data_hw_23_24_spark.operators.diff import incremental_stats
 
     old = spark.createDataFrame(
@@ -79,21 +88,18 @@ def test_incremental_stats_accepts_maintained_base(spark):
     maintained = old.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.size(F.split("text", " "))).alias("n_tokens"))
-    demo = {(r.source, r.n_docs, r.n_tokens)
-            for r in incremental_stats(old, new).collect()}
     ivm = {(r.source, r.n_docs, r.n_tokens)
-           for r in incremental_stats(old, new,
-                                      old_stats=maintained).collect()}
-    assert demo == ivm == {("a", 1, 2), ("b", 2, 2)}
+           for r in incremental_stats(old, new, maintained).collect()}
+    assert ivm == {("a", 1, 2), ("b", 2, 2)}
 
 
 def test_kmv_empty_sketch_is_a_noop(spark):
-    """A legitimately empty sketch must estimate to zero rows and merge
-    as the identity — not raise (pre-fix: first() returning no row lost
+    """A legitimately empty sketch must estimate to zero rows — not
+    raise (pre-fix: first() returning no row lost
     k and raised even though the k column exists). k rides the schema
     METADATA so resolution costs no driver job and survives emptiness."""
     from big_data_hw_23_24_spark.operators.frequent import (
-        kmv_estimate, kmv_merge, kmv_sketch)
+        kmv_estimate, kmv_sketch)
 
     ev = spark.createDataFrame([("g", i) for i in range(100)],
                                "grp string, item long")
@@ -101,11 +107,3 @@ def test_kmv_empty_sketch_is_a_noop(spark):
     assert sk.schema["k"].metadata == {"kmv_k": 16}
     empty = sk.where(F.lit(False))
     assert kmv_estimate(empty).count() == 0
-    merged = kmv_merge(sk, empty)
-    assert sorted(r.h for r in merged.collect()) == \
-        sorted(r.h for r in sk.collect())
-    assert merged.schema["k"].metadata == {"kmv_k": 16}
-    # mismatched k still refuses loudly
-    sk8 = kmv_sketch(ev, "item", "grp", k=8)
-    with pytest.raises(ValueError, match="different k"):
-        kmv_merge(sk, sk8)

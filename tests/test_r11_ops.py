@@ -5,7 +5,7 @@ parse, B-cubed evaluation."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -36,8 +36,10 @@ def test_blocked_fuzzy_drops_oversized_blocks(spark):
 
 @given(ents=st.lists(st.text(alphabet="abc", min_size=0, max_size=4),
                      min_size=1, max_size=25))
-@settings(**_SETTINGS)
-def test_snm_matches_rank_window_definition(spark, ents):
+# the conf-setting fixture holds one value for every example
+@settings(**_SETTINGS,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_snm_matches_rank_window_definition(spark, shuffle_partitions, ents):
     """On random short strings (heavy ties), the bucket-adjacency SNM
     equals the definitional rank-window self-join — across forced
     partition boundaries."""
@@ -47,10 +49,10 @@ def test_snm_matches_rank_window_definition(spark, ents):
     w, md = 3, 1
     rows = [(i, e) for i, e in enumerate(ents)]
     df = spark.createDataFrame(rows, "doc_id long, e string")
+    shuffle_partitions(4)
     got = {(r.id_a, r.id_b, r.rank_gap, r.dist)
            for r in sorted_neighborhood_pairs(
-               df, "e", window=w, max_dist=md,
-               num_partitions=4).collect()}
+               df, "e", window=w, max_dist=md).collect()}
     # brute force: rank by (e, id), all pairs within w ranks
     ranked = sorted(rows, key=lambda r: (r[1], r[0]))
     want = set()

@@ -1,35 +1,11 @@
 """Regression pins for the round-12 advice findings: each test fails on
-the pre-fix behavior (fabricated k on an all-empty KMV merge, NULL
-verdict on an empty contract table, Benford digit-0 leak for sub-cent
+the pre-fix behavior (NULL verdict on an empty contract table, Benford digit-0 leak for sub-cent
 values, nondeterministic/first-dim centroid counts, silent same-id
 exclusion in reciprocal best match)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-
-def test_kmv_merge_of_empty_unstamped_sketches_stays_any_k(spark):
-    """Merging only empty metadata-stripped sketches with no k must
-    NOT stamp a fabricated k: the result is empty for any k, and a
-    later merge with a genuine k=64 sketch must succeed (pre-fix: the
-    invented k=2 read as carried and raised 'different k')."""
-    from big_data_hw_23_24_spark.operators.frequent import (
-        kmv_merge, kmv_sketch)
-
-    empty = (spark.createDataFrame([], "grp string, h long")
-             .withColumn("k", F.lit(None).cast("integer")))
-    merged = kmv_merge(empty, empty)
-    assert merged.count() == 0
-    meta = merged.schema["k"].metadata or {}
-    assert "kmv_k" not in meta  # no fabricated carried k
-    items = spark.createDataFrame(
-        [("a", i) for i in range(100)], "grp string, item long")
-    real = kmv_sketch(items, "item", "grp", k=64)
-    # the any-k empty sketch fits a genuine k=64 sketch
-    out = kmv_merge(merged, real)
-    assert out.count() == 64
-    assert (out.schema["k"].metadata or {}).get("kmv_k") == 64
 
 
 def test_validate_contracts_empty_table_passes(spark):

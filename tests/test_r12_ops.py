@@ -93,19 +93,21 @@ def test_interval_overlap_join_is_an_equi_join(spark):
     assert "NestedLoop" not in plan and "Cartesian" not in plan, plan
 
 
-def test_interval_overlap_join_raises_on_degenerate_span(spark):
-    """An interval spanning >= max_span_buckets must RAISE (poisoned
+def test_interval_overlap_join_raises_on_degenerate_span(spark, monkeypatch):
+    """An interval spanning >= MAX_SPAN_BUCKETS must RAISE (poisoned
     expression), never silently fan out corpus-wide."""
     import pytest
+    from big_data_hw_23_24_spark.operators import timeseries
     from big_data_hw_23_24_spark.operators.timeseries import (
         interval_overlap_join)
 
+    monkeypatch.setattr(timeseries, "MAX_SPAN_BUCKETS", 100)
     pts = spark.createDataFrame([(1, 5)], "pid long, p long")
     ivs = spark.createDataFrame([(2, 0, 10_000_000)],
                                 "iid long, s long, e long")
     with pytest.raises(Exception, match="buckets"):
-        interval_overlap_join(pts, ivs, "p", "s", "e", bucket_width=10,
-                              max_span_buckets=100).collect()
+        interval_overlap_join(pts, ivs, "p", "s", "e",
+                              bucket_width=10).collect()
 
 
 def test_readability_hand_case(spark):
@@ -167,7 +169,7 @@ def test_cohens_kappa_hand_case(spark):
     assert cohens_kappa(const, "a", "b", "n").collect()[0].kappa is None
 
 
-def test_compaction_plan_greedy_guarantee(spark):
+def test_compaction_plan_greedy_guarantee(spark, shuffle_partitions):
     """Every planned output (except possibly the last) lands within
     one max-input-size of the target, inputs stay contiguous, and
     totals are conserved — across forced partitions so the cumsum
@@ -178,8 +180,10 @@ def test_compaction_plan_greedy_guarantee(spark):
     files = spark.createDataFrame(rows, "file_id long, n_bytes long") \
         .repartition(8)
     target = 500
+    shuffle_partitions(4)
+    assert files.repartitionByRange("file_id").rdd.getNumPartitions() == 4
     plan = compaction_plan(files, "n_bytes", [F.col("file_id")],
-                           target_bytes=target, num_partitions=4)
+                           target_bytes=target)
     got = {r.out_file: (r.n_inputs, r.total_bytes)
            for r in plan.collect()}
     assert sum(n for n, _ in got.values()) == 200
@@ -376,23 +380,24 @@ def test_domain_cap_strips_port_and_handles_dotless(spark):
                    ("intranethost", 5), ("localhost", 4)]
 
 
-def test_interval_join_allows_exact_max_span(spark):
-    """A span of exactly max_span_buckets buckets is allowed; one
+def test_interval_join_allows_exact_max_span(spark, monkeypatch):
+    """A span of exactly MAX_SPAN_BUCKETS buckets is allowed; one
     more raises (the documented boundary)."""
     import pytest
+    from big_data_hw_23_24_spark.operators import timeseries
     from big_data_hw_23_24_spark.operators.timeseries import (
         interval_overlap_join)
 
+    monkeypatch.setattr(timeseries, "MAX_SPAN_BUCKETS", 4)
     pts = spark.createDataFrame([(1, 5)], "pid long, p long")
     ok = spark.createDataFrame([(2, 0, 39)], "iid long, s long, e long")
     assert interval_overlap_join(pts, ok, "p", "s", "e",
-                                 bucket_width=10,
-                                 max_span_buckets=4).count() == 1
+                                 bucket_width=10).count() == 1
     over = spark.createDataFrame([(2, 0, 40)],
                                  "iid long, s long, e long")
     with pytest.raises(Exception, match="more than 4 buckets"):
-        interval_overlap_join(pts, over, "p", "s", "e", bucket_width=10,
-                              max_span_buckets=4).collect()
+        interval_overlap_join(pts, over, "p", "s", "e",
+                              bucket_width=10).collect()
 
 
 def test_bootstrap_ci_matches_python_recompute(spark):
@@ -566,18 +571,19 @@ def test_edit1_neighborhood_equals_bruteforce(spark):
     assert got == want and want  # non-vacuous
 
 
-def test_ewma_forecast_hand_case(spark):
+def test_ewma_forecast_hand_case(spark, monkeypatch):
     """Two-lag weights (0.6, 0.4 in micros) make every number
     hand-checkable: backtest forecasts, MAPE, the next-day forecast,
     and the partial-history branches (exactly-L days forecasts; fewer
     than L days reports null)."""
+    from big_data_hw_23_24_spark.operators import timeseries
     from big_data_hw_23_24_spark.operators.timeseries import ewma_forecast
 
+    monkeypatch.setattr(timeseries, "EWMA_MICRO", (600000, 400000))
     rows = ([("a", d, n) for d, n in [(1, 10), (2, 20), (3, 30), (4, 40)]]
             + [("b", 1, 5), ("b", 2, 7)] + [("c", 9, 3)])
     daily = spark.createDataFrame(rows, "k string, d long, n long")
-    got = {r.k: r for r in ewma_forecast(
-        daily, ["k"], "d", "n", weights=(600000, 400000)).collect()}
+    got = {r.k: r for r in ewma_forecast(daily, ["k"], "d", "n").collect()}
     a = got["a"]
     # fc(d3)=0.6*20+0.4*10=16, fc(d4)=0.6*30+0.4*20=26
     assert (a.n_days, a.n_forecast_days) == (4, 2)

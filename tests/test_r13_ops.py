@@ -664,6 +664,13 @@ def test_quantile_normalize_single_row_group(spark):
 
 # ---------------------------------------------------------------- IVM join ----
 
+def _join_view(fact, dim):
+    """The view ``ivm_join_view`` maintains, recomputed directly."""
+    return (fact.join(dim, fact["fk"] == dim["k"]).groupBy("g")
+            .agg(F.count("*").cast("long").alias("n_rows"),
+                 F.sum("v").cast("long").alias("total_value")))
+
+
 def test_ivm_join_view_fk_move_hits_two_groups(spark):
     """A fact row whose FK moves between snapshots decrements the old
     group and increments the new one."""
@@ -675,8 +682,8 @@ def test_ivm_join_view_fk_move_hits_two_groups(spark):
     new = spark.createDataFrame([(100, 2, 50), (101, 2, 30)],
                                 "id long, fk long, v long")
     got = {r.g: (r.n_rows, r.total_value) for r in
-           ivm_join_view(old, new, dim, "id", "fk", "k", "g", "v")
-           .collect()}
+           ivm_join_view(old, new, dim, "id", "fk", "k", "g", "v",
+                         _join_view(old, dim)).collect()}
     assert "g1" not in got  # count reached zero -> row drops
     assert got["g2"] == (2, 80)
 
@@ -702,19 +709,15 @@ def test_ivm_join_view_matches_full_recompute(spark):
     new = spark.createDataFrame(new_rows, "id long, fk long, v long")
     got = sorted(map(tuple,
                      ivm_join_view(old, new, dim, "id", "fk", "k",
-                                   "g", "v").collect()))
-    want = sorted(map(tuple,
-                      new.join(dim, new["fk"] == dim["k"])
-                      .groupBy("g")
-                      .agg(F.count("*").cast("long").alias("n_rows"),
-                           F.sum("v").cast("long").alias("total_value"))
-                      .collect()))
+                                   "g", "v", _join_view(old, dim))
+                     .collect()))
+    want = sorted(map(tuple, _join_view(new, dim).collect()))
     assert got == want
 
 
 def test_ivm_join_view_maintained_table_mode(spark):
-    """Passing old_view (the production contract) gives the same
-    answer as the recompute mode."""
+    """The maintained old view plus a modify, a removal and an
+    addition gives the new snapshot's view."""
     from big_data_hw_23_24_spark.operators.diff import ivm_join_view
 
     dim = spark.createDataFrame([(1, "a"), (2, "b")], "k long, g string")
@@ -722,14 +725,10 @@ def test_ivm_join_view_maintained_table_mode(spark):
                                 "id long, fk long, v long")
     new = spark.createDataFrame([(1, 1, 15), (3, 2, 5)],
                                 "id long, fk long, v long")
-    demo = ivm_join_view(old, new, dim, "id", "fk", "k", "g", "v")
-    ov = (old.join(dim, old["fk"] == dim["k"]).groupBy("g")
-          .agg(F.count("*").cast("long").alias("n_rows"),
-               F.sum("v").cast("long").alias("total_value")))
     prod = ivm_join_view(old, new, dim, "id", "fk", "k", "g", "v",
-                         old_view=ov)
-    assert sorted(map(tuple, demo.collect())) == \
-        sorted(map(tuple, prod.collect()))
+                         _join_view(old, dim))
+    assert sorted(map(tuple, prod.collect())) == [("a", 1, 15),
+                                                  ("b", 1, 5)]
 
 
 # ----------------------------------------------------------------- Hilbert ----

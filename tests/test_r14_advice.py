@@ -174,17 +174,20 @@ def test_spearman_property_matches_python_reference(spark):
     assert got == want
 
 
-def test_hits_loop_stops_at_last_authority_update(spark):
+def test_hits_loop_stops_at_last_authority_update(spark, monkeypatch):
     """Values pin the alternating iteration (h0=1, a1, h1, a2 for
     double_rounds=2) — the loop must end on the authority update the
     report consumes, with no dead hub frame built after it."""
+    from big_data_hw_23_24_spark.operators import graph
     from big_data_hw_23_24_spark.operators.graph import hits_scores
 
+    monkeypatch.setattr(graph, "HITS_DOUBLE_ROUNDS", 2)
+    monkeypatch.setattr(graph, "HITS_K", 3)
     ev = spark.createDataFrame(
         [("u1", "i1"), ("u1", "i2"), ("u2", "i1"),
          ("u3", "i1"), ("u3", "i3")],
         "user_id string, item string")
-    rows = hits_scores(ev, double_rounds=2, k=3).collect()
+    rows = hits_scores(ev).collect()
     # a1 = (3,1,1); h1 = (u1:4, u2:3, u3:4); a2 = (i1:11, i2:4, i3:4)
     got = {(r.item, r.rank): r.authority for r in rows}
     assert got == {("i1", 1): 1.0,

@@ -54,31 +54,6 @@ def test_trending_matches_python_reference(spark, rows):
     assert got == want
 
 
-# --- E135: KMV sketch mergeability -------------------------------------------
-
-@given(items=st.lists(st.integers(0, 500), min_size=1, max_size=120),
-       cut=st.integers(0, 120))
-@settings(**_SETTINGS)
-def test_kmv_merge_equals_whole_on_random_splits(spark, items, cut):
-    from big_data_hw_23_24_spark.operators.frequent import (
-        kmv_merge, kmv_sketch)
-
-    # a sentinel row in BOTH slices (and the whole) keeps every input
-    # non-empty for any random cut without changing set semantics
-    def frame(xs):
-        return spark.createDataFrame(
-            [("g", str(x)) for x in xs] + [("g", "-sentinel-")],
-            "grp string, item string")
-
-    merged = sorted(r.h for r in kmv_merge(
-        kmv_sketch(frame(items[:cut]), "item", "grp", k=16),
-        kmv_sketch(frame(items[cut:]), "item", "grp", k=16),
-        k=16).collect())
-    whole = sorted(r.h for r in
-                   kmv_sketch(frame(items), "item", "grp", k=16).collect())
-    assert merged == whole
-
-
 # --- E131: keep-one is a per-doc subset of strip-all ---------------------------
 
 _texts = st.lists(
@@ -93,12 +68,16 @@ def test_keepone_removes_subset_of_stripall(spark, texts):
     from big_data_hw_23_24_spark.operators.textstats import (
         remove_repeated_spans, remove_repeated_spans_keepone)
 
+    from big_data_hw_23_24_spark.operators import textstats
+
     docs = spark.createDataFrame(list(enumerate(texts)),
                                  "doc_id long, text string")
     strip = {r.doc_id: r.n_removed for r in
-             remove_repeated_spans(docs, n=3, min_docs=2).collect()}
-    keep = {r.doc_id: r.n_removed for r in
-            remove_repeated_spans_keepone(docs, n=3, min_docs=2).collect()}
+             remove_repeated_spans(docs, n=3).collect()}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(textstats, "REPEAT_SPAN_N", 3)
+        keepone = remove_repeated_spans_keepone(docs)
+    keep = {r.doc_id: r.n_removed for r in keepone.collect()}
     for d in strip:
         assert keep[d] <= strip[d]
         if strip[d] == 0:
@@ -138,7 +117,7 @@ def test_triangles_match_bruteforce(spark, baskets):
     rows = [(u, it) for u, b in enumerate(baskets) for it in b]
     ev = spark.createDataFrame(rows, "user_id long, item long")
     got = {r.item: (r.degree, r.n_triangles)
-           for r in item_triangles(ev, cap=20, min_co=2).collect()}
+           for r in item_triangles(ev).collect()}
     # brute force: edge iff >= 2 users share the pair (cap never binds
     # at basket size <= 4)
     from collections import Counter
@@ -233,7 +212,7 @@ def test_scd2_invariants_on_random_snapshots(spark, old_ids, new_ids,
               st.integers(0, 6)),                 # y (maximize)
     min_size=1, max_size=40))
 @settings(**_SETTINGS)
-def test_skyline_matches_dominance_definition(spark, pts):
+def test_skyline_matches_dominance_definition(spark, shuffle_partitions, pts):
     """On random (small-domain, so ties and exact duplicates are
     frequent) point sets, the range-partitioned prefix-max skyline
     equals the brute-force dominance definition with min-id election —
@@ -242,9 +221,9 @@ def test_skyline_matches_dominance_definition(spark, pts):
 
     rows = [(i, float(x), y) for i, (x, y) in enumerate(pts)]
     df = spark.createDataFrame(rows, "id long, x double, y int")
+    shuffle_partitions(4)
     got = sorted((r.id, r.x, r.y)
-                 for r in skyline_2d(df, "x", "y", "id",
-                                     num_partitions=4).collect())
+                 for r in skyline_2d(df, "x", "y", "id").collect())
     kept = []
     for i, x, y in rows:
         dominated = any(
@@ -347,16 +326,20 @@ def test_attribution_conserves_credit(spark, rows):
     min_size=2, max_size=6))
 @settings(**_SETTINGS)
 def test_block_dedup_matches_python_reference(spark, texts):
+    from big_data_hw_23_24_spark.operators import multimodal
     from big_data_hw_23_24_spark.operators.multimodal import (
         block_dedup_pairs, media_from_documents)
 
     B, MIN_SHARED, MAX_DF = 4, 2, 3
     docs = spark.createDataFrame(list(enumerate(texts)),
                                  "doc_id long, text string")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(multimodal, "BLOCK_BYTES", B)
+        mp.setattr(multimodal, "BLOCK_MIN_SHARED", MIN_SHARED)
+        mp.setattr(multimodal, "BLOCK_MAX_DF", MAX_DF)
+        pairs = block_dedup_pairs(media_from_documents(docs))
     got = {(r.media_a, r.media_b): (r.n_shared_blocks, r.full_dup)
-           for r in block_dedup_pairs(media_from_documents(docs),
-                                      block_bytes=B, min_shared=MIN_SHARED,
-                                      max_df=MAX_DF).collect()}
+           for r in pairs.collect()}
     # reference: aligned blocks, df-guard, pair counting
     blocks: dict[int, list] = {}
     for i, t in enumerate(texts):
@@ -448,14 +431,23 @@ def test_incremental_stats_equal_full_recompute(spark, old_rows, new_rows):
             "doc_id long, source string, text string"
         ).where(F.col("doc_id").isNotNull())
 
+    def stats(rows):
+        out: dict[str, list] = {}
+        for i, g, n in rows:
+            w = out.setdefault(g, [0, 0])
+            w[0] += 1
+            w[1] += n
+        return out
+
     old, new = frame(old_rows), frame(new_rows)
+    old_stats = spark.createDataFrame(
+        [(g, *v) for g, v in stats(old_rows).items()] or [(None, 0, 0)],
+        "source string, n_docs long, n_tokens long"
+    ).where(F.col("source").isNotNull())
     got = {r.source: (r.n_docs, r.n_tokens)
-           for r in incremental_stats(old, new, "source").collect()}
-    want: dict[str, list] = {}
-    for i, g, n in new_rows:
-        w = want.setdefault(g, [0, 0])
-        w[0] += 1
-        w[1] += n
+           for r in incremental_stats(old, new, old_stats,
+                                      "source").collect()}
+    want = stats(new_rows)
     assert got == {g: tuple(v) for g, v in want.items() if v[0] > 0}
 
 

@@ -3,6 +3,8 @@ EXACTLY with the single-reducer window functions it replaces."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -16,12 +18,19 @@ from big_data_hw_23_24_spark.sources.tables import load_table
 SF = "/root/testdata/sf0.001"
 
 
-def test_global_rank_matches_window_row_number(spark):
+def _range_parts(df, cols):
+    """Partitions a range repartition of ``df`` on ``cols`` gets under
+    the session's current confs."""
+    return df.repartitionByRange(*cols).rdd.getNumPartitions()
+
+
+def test_global_rank_matches_window_row_number(spark, shuffle_partitions):
     c = load_table(spark, SF, "customer").select(
         "c_custkey", F.col("c_acctbal").alias("bal"))
+    shuffle_partitions(7)
+    assert _range_parts(c, ["bal", "c_custkey"]) == 7
     got = {r.c_custkey: r.rank for r in
-           global_rank(c, ["bal", "c_custkey"],
-                       num_partitions=7).collect()}
+           global_rank(c, ["bal", "c_custkey"]).collect()}
     w = Window.orderBy("bal", "c_custkey")
     want = {r.c_custkey: r.rank for r in
             c.select("c_custkey",
@@ -30,26 +39,35 @@ def test_global_rank_matches_window_row_number(spark):
 
 
 @pytest.mark.parametrize("n,parts", [(10, 7), (3, 2), (4, 32)])
-def test_global_ntile_matches_window_ntile(spark, n, parts):
+def test_global_ntile_matches_window_ntile(spark, shuffle_partitions, n,
+                                           parts):
     c = load_table(spark, SF, "customer").select(
         "c_custkey", F.col("c_acctbal").alias("bal"))
+    shuffle_partitions(parts)
+    assert _range_parts(c, ["bal", "c_custkey"]) == parts
     got = {r.c_custkey: r.t for r in
-           global_ntile(c, n, ["bal", "c_custkey"], out_col="t",
-                        num_partitions=parts).collect()}
+           global_ntile(c, n, ["bal", "c_custkey"], out_col="t").collect()}
     w = Window.orderBy("bal", "c_custkey")
     want = {r.c_custkey: r.t for r in
             c.select("c_custkey", F.ntile(n).over(w).alias("t")).collect()}
     assert got == want
 
 
-def test_global_rank_broadcast_offset_path_many_partitions(spark):
+def test_global_rank_broadcast_offset_path_many_partitions(
+        spark, shuffle_partitions):
     """Above 256 range partitions the offsets ship as a broadcast
-    table, not a literal map — same ranks either way."""
-    c = load_table(spark, SF, "customer").select(
+    table, not a literal map — same ranks either way. The 1,500
+    sf0.01 customers fill all 300 partitions (sf0.001's 150 rows could
+    never make more than 150)."""
+    from big_data_hw_23_24_spark.plans.inspect import explain_str
+
+    sf01 = os.path.join(os.path.dirname(SF), "sf0.01")
+    c = load_table(spark, sf01, "customer").select(
         "c_custkey", F.col("c_acctbal").alias("bal"))
-    got = {r.c_custkey: r.rank for r in
-           global_rank(c, ["bal", "c_custkey"],
-                       num_partitions=300).collect()}
+    shuffle_partitions(300)
+    ranked = global_rank(c, ["bal", "c_custkey"])
+    assert "BroadcastHashJoin" in explain_str(ranked, "simple")
+    got = {r.c_custkey: r.rank for r in ranked.collect()}
     w = Window.orderBy("bal", "c_custkey")
     want = {r.c_custkey: r.rank for r in
             c.select("c_custkey",
@@ -94,7 +112,7 @@ def test_rfm_segments_buckets_and_cents(spark):
             rows.append((u * 100 + i, u * 1000 + i, u, 1.005))
     ev = spark.createDataFrame(
         rows, "event_id long, ts long, user_id long, value double")
-    out = {r.user_id: r for r in rfm_segments(ev, n_tiles=5).collect()}
+    out = {r.user_id: r for r in rfm_segments(ev).collect()}
     assert len(out) == 10
     # frequency of user u is u+1; cents: floor(1.005*100)=100 per event
     for u in range(10):

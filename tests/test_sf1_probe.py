@@ -11,8 +11,8 @@ not scale, reasons; embeddings get a per-replica cyclic dimension
 shift for the same decorrelation), time each probe at both scales, and
 assert ≤ linear-ish growth. A hidden superlinear term (band-bucket
 blowup, pool fan-out, Σdf² past its cap) shows up as a ratio near
-10²; genuine linear scaling lands near 10¹. Results are recorded
-under ``sf1_probe`` in BENCH_DETAIL.json.
+10²; genuine linear scaling lands near 10¹. Results are written under
+``sf1_probe`` to BENCH_DETAIL.json in the test's temporary directory.
 
 Not part of the default suite: synthesizing + timing ~50k docs three
 times per query is minutes of wall-clock, and the number it produces
@@ -106,9 +106,9 @@ PROBES = [
                                  #   corpus stitch-back equi-joins
     "users_bh_fdr",              # rank spine over the hypothesis table
     "embedding_top_eigen",       # one Gram pass; iteration dim-bounded
-    # r14 admissions with no probe rows yet (VERDICT r13 task 4): the
-    # Hilbert chunk-join fan-in and the two iterative-join graph faces
-    # at 10x edges
+    # chained and iterative joins that could hide a superlinear term:
+    # the Hilbert chunk-join fan-in and the two iterative-join graph
+    # faces at 10x edges
     "events_hilbert_pruning",    # automaton-as-broadcast-join chain
     "events_label_propagation",  # 3 rounds of edge-vs-label joins
     "events_hits_authority",     # 2*rounds keyed join + agg pairs
@@ -226,7 +226,7 @@ def _time_min(fn, spark, sf_dir: str, reps: int = 2) -> float:
 _OUTPUT_BOUND_PROBES = {"customers_typo_pairs"}
 
 
-def test_sf1_growth_is_linearish(spark):
+def test_sf1_growth_is_linearish(spark, tmp_path):
     _ensure_loaded()
     dst = tempfile.mkdtemp(prefix="sf1_probe_")
     try:
@@ -250,18 +250,10 @@ def test_sf1_growth_is_linearish(spark):
                 gate = max(MAX_GROWTH, out_growth * 1.2)
             if ratio > gate:
                 failures.append((name, round(ratio, 2)))
-        detail_path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "BENCH_DETAIL.json")
-        try:
-            with open(detail_path) as f:
-                detail = json.load(f)
-        except (OSError, ValueError):
-            detail = {}
-        detail["sf1_probe"] = {"replicas": REPLICAS,
-                               "max_growth_allowed": MAX_GROWTH,
-                               "queries": results}
-        with open(detail_path, "w") as f:
+        detail = {"sf1_probe": {"replicas": REPLICAS,
+                                "max_growth_allowed": MAX_GROWTH,
+                                "queries": results}}
+        with open(tmp_path / "BENCH_DETAIL.json", "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)
         assert not failures, (failures, results)
     finally:

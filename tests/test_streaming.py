@@ -1,5 +1,5 @@
 """Structured Streaming harness tests: deterministic file-source batches
-replaying the events item sequence, plus rate-source smoke."""
+replaying the events item sequence and a planted-heavy item map."""
 
 from __future__ import annotations
 
@@ -15,9 +15,7 @@ from pyspark.sql import types as T
 from big_data_hw_23_24_spark.operators.frequent import ReservoirSampler, StickySampler
 from big_data_hw_23_24_spark.streaming.frequent_stream import (
     FrequentItemsMonitor,
-    rate_item_stream,
     run_frequent_items,
-    streaming_histogram,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -90,18 +88,6 @@ def test_foreachbatch_harness_matches_sequential_replay(spark, stream_dir):
         assert (r.sign == "+") == (r.item in true_items)
 
 
-def test_stateful_streaming_histogram(spark, stream_dir):
-    d, items = stream_dir
-    agg = streaming_histogram(spark, _file_stream(spark, d))
-    q = (agg.writeStream.outputMode("complete")
-         .format("memory").queryName("hist_out").start())
-    q.processAllAvailable()
-    q.stop()
-    got = {r.item: r.cnt
-           for r in spark.sql("SELECT * FROM hist_out").collect()}
-    assert got == dict(Counter(items))
-
-
 def test_distinct_items_harness_matches_replay(spark, stream_dir):
     """DistinctItemsExample parity: the foreachBatch distinct monitor
     equals a direct distinct over the first n items."""
@@ -122,7 +108,7 @@ def test_distinct_items_harness_matches_replay(spark, stream_dir):
 
 def test_spark_side_microbatch_writer_roundtrip(spark, stream_dir):
     """write_microbatches (no driver collect) replays the identical
-    sequence: streaming histogram over its output == exact Counter."""
+    sequence: the monitor's histogram over its output == exact Counter."""
     from big_data_hw_23_24_spark.streaming.replay import write_microbatches
     from big_data_hw_23_24_spark.sources.tables import load_table
     from pyspark.sql import Window as W
@@ -183,7 +169,8 @@ def test_windowed_counts_watermark_closes_and_bounds_state(spark, tmp_path):
             os.utime(os.path.join(p, f), (t0 + i * 10, t0 + i * 10))
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(os.path.join(d, "b*")))
-    agg = windowed_event_counts(stream, "1 hour", watermark_delay="1 hour")
+    agg = windowed_event_counts(stream.withWatermark("ts", "1 hour"),
+                                "1 hour")
     q = (agg.writeStream.outputMode("append")
          .format("memory").queryName("wm_out").start())
     q.processAllAvailable()
@@ -227,50 +214,43 @@ def test_windowed_counts_streaming_matches_batch_face(spark, tmp_path):
     assert got == want
 
 
-def test_rate_stream_planted_heavy_items(spark):
-    n = 20_000
-    monitor = FrequentItemsMonitor(n=n, phi=0.05, eps=0.02, delta=0.1)
-    stream = rate_item_stream(spark, rows_per_second=50_000, n_heavy=10)
-    run_frequent_items(spark, stream, monitor, timeout_sec=90)
-    assert monitor.stream_length == n
-    rep = monitor.report(spark)
-    true_items = sorted(r.item for r in rep["true_frequent"].collect())
-    # heavy_share=100 → every position is a planted item 0..9, each 10%
-    assert true_items == list(range(10))
-    sticky_items = sorted(r.item for r in rep["sticky"].collect())
-    assert set(true_items) <= set(sticky_items)
-
-
-def test_rate_source_end_to_end_sticky_recovers_planted_heavies(spark):
-    """Full pipeline over the live rate source (the sandbox stand-in
-    for the reference's socket ports): n-item cutoff honored, exact
-    histogram equals the arithmetic item map over seq 0..n-1, and the
-    sticky sampler recovers every planted heavy item."""
+def test_planted_heavy_stream_sticky_recovers_every_heavy(spark, tmp_path):
+    """HW3's sticky guarantee end to end over a deterministic file
+    stream of an arithmetic item map: position v carries heavy item
+    v % n_heavy when v % 100 < heavy_share, else the unique tail item
+    v + 1_000_000. The exact histogram equals the map, every planted
+    heavy is truly frequent, and sticky reports each one with '+'."""
     n, phi, eps, delta = 20_000, 0.02, 0.01, 0.1
-    n_heavy, heavy_share = 10, 50
+    n_heavy, heavy_share, chunk = 10, 50, 2_000
+    pos = F.col("id")
+    item = F.when(pos % 100 < heavy_share, pos % n_heavy) \
+        .otherwise(pos + 1_000_000)
+    d = str(tmp_path / "heavy")
+    t0 = 1_700_000_000
+    for i in range(0, n, chunk):
+        path = os.path.join(d, f"batch_{i // chunk:03d}")
+        (spark.range(i, i + chunk, numPartitions=1)
+         .select(pos.alias("seq"), item.alias("item"))
+         .write.mode("overwrite").parquet(path))
+        for f in os.listdir(path):
+            os.utime(os.path.join(path, f), (t0 + i, t0 + i))
     monitor = FrequentItemsMonitor(n=n, phi=phi, eps=eps, delta=delta)
-    stream = rate_item_stream(spark, rows_per_second=20_000,
-                              n_heavy=n_heavy, heavy_share=heavy_share)
-    run_frequent_items(spark, stream, monitor, timeout_sec=120)
+    run_frequent_items(spark, _file_stream(spark, d), monitor,
+                       timeout_sec=120)
 
     assert monitor.stream_length == n
-    # seq is dense 0-based, so the first n items are a pure function of
-    # the arithmetic map — batch boundaries can't change the answer
     expected = Counter(
         v % n_heavy if v % 100 < heavy_share else v + 1_000_000
         for v in range(n))
     assert monitor.histogram == dict(expected)
 
-    # every heavy is truly frequent (1000 = n·heavy_share%/n_heavy
-    # occurrences ≥ phi·n = 400) and sticky recovers all of them
+    # each heavy occurs n·heavy_share%/n_heavy = 1000 ≥ phi·n = 400
+    # times; every tail item once
     rep = monitor.report(spark)
     true_items = {r.item for r in rep["true_frequent"].collect()}
-    assert set(range(n_heavy)) <= true_items
-    sticky_items = {r.item for r in rep["sticky"].collect()}
-    assert set(range(n_heavy)) <= sticky_items
-    # ± annotation: heavies are all annotated "+"
+    assert true_items == set(range(n_heavy))
     signs = {r.item: r.sign for r in rep["sticky"].collect()}
-    assert all(signs[i] == "+" for i in range(n_heavy))
+    assert all(signs.get(i) == "+" for i in range(n_heavy)), signs
 
 
 def test_sessionize_stream_carries_state_across_batches(spark, tmp_path):
@@ -308,73 +288,6 @@ def test_sessionize_stream_carries_state_across_batches(spark, tmp_path):
         (2, mins(180), mins(180), 1),
     }
     assert got == want
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """Duplicate event ids re-sent in a later micro-batch (within the
-    watermark) must be emitted exactly once; distinct ids all survive."""
-    import pandas as pd
-
-    from big_data_hw_23_24_spark.streaming.replay import write_microbatches
-    from big_data_hw_23_24_spark.streaming.windows import deduped_stream
-
-    t0 = pd.Timestamp("2024-01-01 00:00:00")
-    mk = lambda m: (t0 + pd.Timedelta(minutes=m)).to_pydatetime()
-    rows = [  # (seq, event_id, ts): ids 10,11 duplicated across batches
-        (0, 10, mk(0)), (1, 11, mk(1)),
-        (2, 10, mk(2)), (3, 12, mk(3)),
-        (4, 11, mk(4)), (5, 13, mk(5)),
-    ]
-    df = spark.createDataFrame(rows, "seq long, event_id long, ts timestamp")
-    glob = write_microbatches(df, str(tmp_path / "dd"), n_buckets=3)
-    stream = (spark.readStream.schema("seq long, event_id long, ts timestamp")
-              .option("maxFilesPerTrigger", 1).parquet(glob))
-    name = "dedup_out"
-    q = (deduped_stream(stream, ("event_id",))
-         .writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.table(name).groupBy("event_id").count().collect()
-    assert {r.event_id: r["count"] for r in got} == {10: 1, 11: 1, 12: 1, 13: 1}
-
-
-def test_streaming_dedup_state_evicts_after_watermark(spark, tmp_path):
-    """The bounded-state half of the contract: a key re-arriving AFTER
-    the watermark has passed its state is emitted AGAIN (state was
-    evicted — that eviction is exactly why this dedup runs with finite
-    memory on an unbounded stream), while a duplicate within the delay
-    stays dropped. Batches replay in order, so the watermark advances
-    deterministically between triggers."""
-    import pandas as pd
-
-    from big_data_hw_23_24_spark.streaming.replay import write_microbatches
-    from big_data_hw_23_24_spark.streaming.windows import deduped_stream
-
-    t0 = pd.Timestamp("2024-01-01 00:00:00")
-    mk = lambda m: (t0 + pd.Timedelta(minutes=m)).to_pydatetime()
-    rows = [  # delay = 10 min
-        (0, 10, mk(0)), (1, 11, mk(1)),      # batch 0
-        (2, 10, mk(5)), (3, 12, mk(6)),      # batch 1: 10 dup (within)
-        (4, 99, mk(120)), (5, 13, mk(121)),  # batch 2: watermark jumps
-        (6, 98, mk(122)), (7, 97, mk(123)),  # batch 3: state cleanup
-                                             #   runs AFTER a batch's
-                                             #   dedup, so eviction
-                                             #   needs its own trigger
-        (8, 10, mk(125)), (9, 11, mk(126)),  # batch 4: 10,11 re-arrive
-    ]                                        # after eviction
-    df = spark.createDataFrame(rows, "seq long, event_id long, ts timestamp")
-    glob = write_microbatches(df, str(tmp_path / "ev"), n_buckets=5)
-    stream = (spark.readStream.schema("seq long, event_id long, ts timestamp")
-              .option("maxFilesPerTrigger", 1).parquet(glob))
-    name = "dedup_evict_out"
-    q = (deduped_stream(stream, ("event_id",), watermark_delay="10 minutes")
-         .writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r.event_id: r["count"] for r in
-           spark.table(name).groupBy("event_id").count().collect()}
-    # 10 and 11: once before + once after eviction; the rest once
-    assert got == {10: 2, 11: 2, 12: 1, 13: 1, 97: 1, 98: 1, 99: 1}
 
 
 def test_socket_stream_live_loopback_end_to_end(spark):
@@ -450,14 +363,14 @@ def test_cms_overestimates_only_and_covers_exact_frequent(spark):
     import math
 
     from big_data_hw_23_24_spark.operators.frequent import (
-        cms_estimate, cms_table, exact_frequent)
+        cms_estimate, cms_table)
     from big_data_hw_23_24_spark.sources.tables import load_table
 
     e = load_table(spark, "/root/testdata/sf0.01", "events")
     n = e.count()
     true = {r.user_id: r.cnt for r in
             e.groupBy("user_id").agg(F.count("*").alias("cnt")).collect()}
-    sketch = cms_table(e, "user_id", depth=5, width=2048)
+    sketch = cms_table(e, "user_id")
     est = {r.item: r.est for r in
            cms_estimate(sketch, e.select("user_id"), "user_id").collect()}
     assert set(est) == set(true)
@@ -469,42 +382,23 @@ def test_cms_overestimates_only_and_covers_exact_frequent(spark):
     assert over[int(0.99 * len(over))] <= bound, (max(over), bound)
 
     thr = math.ceil(0.007 * n)
-    exact = {r.item for r in exact_frequent(e, "user_id", 0.007, n).collect()}
+    exact = {u for u, c in true.items() if c >= thr}
     cms_freq = {u for u, c in est.items() if c >= thr}
     assert exact <= cms_freq
 
 
-def test_cms_merge_of_disjoint_slices_equals_whole(spark):
-    """Sketching two disjoint halves and merging must equal sketching
-    the union — the composability that makes per-day sketches work."""
-    from big_data_hw_23_24_spark.operators.frequent import cms_merge, cms_table
-    from big_data_hw_23_24_spark.sources.tables import load_table
-
-    e = load_table(spark, "/root/testdata/sf0.001", "events") \
-        .select("user_id")
-    a, b = e.where(F.col("user_id") % 2 == 0), e.where(F.col("user_id") % 2 == 1)
-    whole = {(r.row, r.bucket): r.cnt
-             for r in cms_table(e, "user_id", 4, 512).collect()}
-    merged = {(r.row, r.bucket): r.cnt
-              for r in cms_merge(cms_table(a, "user_id", 4, 512),
-                                 cms_table(b, "user_id", 4, 512)).collect()}
-    assert merged == whole
-
-
 def test_cms_geometry_carried_and_mismatch_rejected(spark):
-    """The sketch carries its (depth, width); probing reads them from
-    the sketch, and merging sketches of different geometries raises
-    instead of silently under-counting."""
+    """The sketch carries its (depth, width) and probing reads them
+    from the sketch; an input without them is rejected."""
     import pytest as _pytest
 
     from big_data_hw_23_24_spark.operators.frequent import (
-        cms_estimate, cms_merge, cms_table)
+        CMS_DEPTH, CMS_WIDTH, cms_estimate, cms_table)
 
     e = spark.range(100).select((F.col("id") % 7).alias("user_id"))
-    a = cms_table(e, "user_id", depth=4, width=512)
-    b = cms_table(e, "user_id", depth=5, width=512)
-    with _pytest.raises(ValueError, match="geometries"):
-        cms_merge(a, b).collect()
+    a = cms_table(e, "user_id")
+    assert {(r.depth, r.width) for r in a.collect()} == \
+        {(CMS_DEPTH, CMS_WIDTH)}
     # probe uses the carried geometry: exact counts for a tiny domain
     est = {r.item: r.est for r in
            cms_estimate(a, e.select("user_id"), "user_id").collect()}
@@ -549,38 +443,6 @@ def test_stream_stream_interval_join_matches_across_batches(spark, tmp_path):
                               "o_orderdate", "ts", 3 * 86400)
     got = {(r.o_orderkey, r.event_id) for r in pairs.collect()}
     assert got == {(100, 1000), (101, 1000), (100, 1001), (101, 1001)}
-
-
-def test_cms_accumulated_over_microbatches_equals_whole(spark, tmp_path):
-    """Maintaining a CMS over a stream = merging per-batch sketches in
-    foreachBatch; the accumulated sketch must equal the batch sketch of
-    the whole stream (the mergeability contract, live)."""
-    from big_data_hw_23_24_spark.operators.frequent import cms_merge, cms_table
-    from big_data_hw_23_24_spark.sources.tables import load_table
-    from big_data_hw_23_24_spark.streaming.replay import write_microbatches
-
-    e = (load_table(spark, "/root/testdata/sf0.001", "events")
-         .select("event_id", "user_id"))
-    seq = e.withColumnRenamed("event_id", "seq")
-    glob = write_microbatches(seq, str(tmp_path / "cms"), n_buckets=5)
-    stream = (spark.readStream.schema("seq long, user_id long")
-              .option("maxFilesPerTrigger", 1).parquet(glob))
-
-    acc = []  # accumulated sketch rows across batches
-
-    def on_batch(batch, epoch_id):
-        sk = cms_table(batch, "user_id", depth=4, width=512)
-        acc.append(sk.localCheckpoint(eager=True))
-
-    q = (stream.writeStream.foreachBatch(on_batch)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    assert len(acc) >= 2  # really exercised multiple micro-batches
-
-    merged = {(r.row, r.bucket): r.cnt for r in cms_merge(*acc).collect()}
-    whole = {(r.row, r.bucket): r.cnt
-             for r in cms_table(e, "user_id", depth=4, width=512).collect()}
-    assert merged == whole
 
 
 def test_stratified_sample_fractions_and_subset(spark):

@@ -214,18 +214,15 @@ def test_windowed_counts_streaming_matches_batch_face(spark, tmp_path):
     assert got == want
 
 
-def test_planted_heavy_stream_sticky_recovers_every_heavy(spark, tmp_path):
-    """HW3's sticky guarantee end to end over a deterministic file
-    stream of an arithmetic item map: position v carries heavy item
-    v % n_heavy when v % 100 < heavy_share, else the unique tail item
-    v + 1_000_000. The exact histogram equals the map, every planted
-    heavy is truly frequent, and sticky reports each one with '+'."""
-    n, phi, eps, delta = 20_000, 0.02, 0.01, 0.1
-    n_heavy, heavy_share, chunk = 10, 50, 2_000
+def _planted_heavy_stream(spark, d, n, n_heavy, heavy_share, chunk=2_000):
+    """A deterministic file stream of an arithmetic item map: position v
+    carries heavy item v % n_heavy when v % 100 < heavy_share, else the
+    unique tail item v + 1_000_000. Batches of `chunk` rows get rising
+    mtimes, like the stream_dir fixture. Returns the stream and the
+    exact histogram of its n items."""
     pos = F.col("id")
     item = F.when(pos % 100 < heavy_share, pos % n_heavy) \
         .otherwise(pos + 1_000_000)
-    d = str(tmp_path / "heavy")
     t0 = 1_700_000_000
     for i in range(0, n, chunk):
         path = os.path.join(d, f"batch_{i // chunk:03d}")
@@ -234,15 +231,44 @@ def test_planted_heavy_stream_sticky_recovers_every_heavy(spark, tmp_path):
          .write.mode("overwrite").parquet(path))
         for f in os.listdir(path):
             os.utime(os.path.join(path, f), (t0 + i, t0 + i))
-    monitor = FrequentItemsMonitor(n=n, phi=phi, eps=eps, delta=delta)
-    run_frequent_items(spark, _file_stream(spark, d), monitor,
-                       timeout_sec=120)
-
-    assert monitor.stream_length == n
     expected = Counter(
         v % n_heavy if v % 100 < heavy_share else v + 1_000_000
         for v in range(n))
-    assert monitor.histogram == dict(expected)
+    return _file_stream(spark, d), dict(expected)
+
+
+def test_rate_stream_planted_heavy_items(spark, tmp_path):
+    """An all-heavy stream (heavy_share=100): every position is one of
+    the planted items 0..9, each 10% of the n items, so exactly those
+    are truly frequent and sticky keeps all of them."""
+    n = 20_000
+    monitor = FrequentItemsMonitor(n=n, phi=0.05, eps=0.02, delta=0.1)
+    stream, _ = _planted_heavy_stream(spark, str(tmp_path / "heavy"), n,
+                                      n_heavy=10, heavy_share=100)
+    run_frequent_items(spark, stream, monitor, timeout_sec=120)
+    assert monitor.stream_length == n
+    rep = monitor.report(spark)
+    true_items = sorted(r.item for r in rep["true_frequent"].collect())
+    assert true_items == list(range(10))
+    sticky_items = sorted(r.item for r in rep["sticky"].collect())
+    assert set(true_items) <= set(sticky_items)
+
+
+def test_rate_source_end_to_end_sticky_recovers_planted_heavies(
+        spark, tmp_path):
+    """HW3's sticky guarantee end to end over a half-heavy stream: the
+    n-item cutoff holds, the exact histogram equals the item map, every
+    planted heavy is truly frequent, and sticky reports each one with
+    '+'."""
+    n, phi, eps, delta = 20_000, 0.02, 0.01, 0.1
+    n_heavy, heavy_share = 10, 50
+    monitor = FrequentItemsMonitor(n=n, phi=phi, eps=eps, delta=delta)
+    stream, expected = _planted_heavy_stream(
+        spark, str(tmp_path / "heavy"), n, n_heavy, heavy_share)
+    run_frequent_items(spark, stream, monitor, timeout_sec=120)
+
+    assert monitor.stream_length == n
+    assert monitor.histogram == expected
 
     # each heavy occurs n·heavy_share%/n_heavy = 1000 ≥ phi·n = 400
     # times; every tail item once

@@ -155,7 +155,7 @@ def run(spark: SparkSession, in_path: str, out_dir: str,
             from ..operators.cleaning import linear_quality_prob
 
             kept = kept.where(
-                linear_quality_prob("text") >= classifier_min).cache()
+                linear_quality_prob() >= classifier_min).cache()
             cached.append(kept)
             n_clf_dropped = n_kept - kept.count()
 

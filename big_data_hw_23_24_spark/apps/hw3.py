@@ -62,8 +62,8 @@ def run(spark: SparkSession, n: int, phi: float, eps: float, delta: float,
         timeout_sec: float = 300.0) -> list[str]:
     monitor = FrequentItemsMonitor(n=n, phi=phi, eps=eps, delta=delta)
     stream = socket_item_stream(spark, host, port)
-    run_frequent_items(spark, stream, monitor, item_col="item",
-                       order_col=None, timeout_sec=timeout_sec)
+    run_frequent_items(spark, stream, monitor, order_col=None,
+                       timeout_sec=timeout_sec)
     return report_lines(monitor, str(port))
 
 

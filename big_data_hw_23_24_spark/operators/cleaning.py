@@ -33,6 +33,9 @@ from pyspark.sql import functions as F
 
 QUALITY_SALT = "q"  # salt of the hashed token weights
 QUALITY_HASH_CHARS = 8  # md5 hex digits per token weight
+C4_MIN_WORDS = 4  # words a kept line needs
+C4_MIN_LINES = 2  # kept lines a kept document needs
+DOMAIN_CAP_K = 5  # documents kept per registrable domain
 
 #: a line "ends in terminal punctuation" if, after trimming trailing
 #: whitespace, the last character is . ! ? or a closing double quote —
@@ -46,17 +49,16 @@ def _word_count(line: Column) -> Column:
     return F.size(F.filter(F.split(line, " "), lambda w: w != F.lit("")))
 
 
-def c4_line_filter(docs: DataFrame, text_col: str = "text", min_words: int = 4,
-                   min_lines: int = 2) -> DataFrame:
+def c4_line_filter(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """C4 line filter: keep lines ending in terminal punctuation with
-    ≥ ``min_words`` words; flag documents that survive.
+    ≥ ``C4_MIN_WORDS`` words; flag documents that survive.
 
     Adds:
       * ``n_lines`` / ``n_kept`` — before/after line counts;
       * ``clean_text`` — the kept lines re-joined with newlines;
       * ``has_lorem`` / ``has_brace`` — C4 junk flags (page-level
         "lorem ipsum" placeholder text, curly braces ⇒ leaked code);
-      * ``keep`` — ``n_kept ≥ min_lines`` and neither junk flag.
+      * ``keep`` — ``n_kept ≥ C4_MIN_LINES`` and neither junk flag.
 
     One narrow projection; the plan is a scan → project with no
     exchange (plan-asserted in tests/test_plans.py).
@@ -65,7 +67,7 @@ def c4_line_filter(docs: DataFrame, text_col: str = "text", min_words: int = 4,
     kept = F.filter(
         lines,
         lambda l: F.trim(l).rlike(_TERMINAL_RE)
-        & (_word_count(F.trim(l)) >= min_words))
+        & (_word_count(F.trim(l)) >= C4_MIN_WORDS))
     lowered = F.lower(F.col(text_col))
     return (docs
             .withColumn("n_lines", F.size(lines))
@@ -75,7 +77,7 @@ def c4_line_filter(docs: DataFrame, text_col: str = "text", min_words: int = 4,
             .withColumn("has_brace", F.col(text_col).contains("{"))
             .withColumn(
                 "keep",
-                (F.col("n_kept") >= min_lines)
+                (F.col("n_kept") >= C4_MIN_LINES)
                 & ~F.col("has_lorem") & ~F.col("has_brace")))
 
 
@@ -114,7 +116,7 @@ def _hashed_weight(token: Column, salt: str, hash_chars: int) -> Column:
             / F.lit(float(16 ** hash_chars))) * 2.0 - 1.0
 
 
-def linear_quality_prob(text_col: Column | str = "text") -> Column:
+def linear_quality_prob() -> Column:
     """The classifier's probability as a bare COLUMN (rounded to 6 dp):
     sigmoid of the mean hashed token weight. For gating a frame
     in-place with zero shuffle (``docs.where(linear_quality_prob() >
@@ -123,7 +125,7 @@ def linear_quality_prob(text_col: Column | str = "text") -> Column:
     predicate."""
     from .util import lowered_words
 
-    words = lowered_words(text_col)
+    words = lowered_words("text")
     wsum = F.aggregate(
         words, F.lit(0.0),
         lambda acc, w: acc + _hashed_weight(w, QUALITY_SALT,
@@ -471,10 +473,9 @@ def homoglyph_scan(docs: DataFrame) -> DataFrame:
                     "skeleton_owner"))
 
 
-def domain_cap(docs: DataFrame, k: int = 5,
-               order_by: list | None = None) -> DataFrame:
+def domain_cap(docs: DataFrame, order_by: list | None = None) -> DataFrame:
     """Per-domain diversity cap (E175) → the kept rows as
-    ``(domain, doc_id, rank)``: at most ``k`` documents per
+    ``(domain, doc_id, rank)``: at most ``DOMAIN_CAP_K`` documents per
     registrable domain, best-first.
 
     The crawl-diversity step every web corpus runs (C4 / RefinedWeb
@@ -500,7 +501,8 @@ def domain_cap(docs: DataFrame, k: int = 5,
     base = docs.withColumn(
         "domain", F.when(dom != "", dom).otherwise(host))
     order = list(order_by) if order_by else []
-    top = grouped_topk(base, ["domain"], order + [F.col("doc_id")], k)
+    top = grouped_topk(base, ["domain"], order + [F.col("doc_id")],
+                       DOMAIN_CAP_K)
     return top.select("domain", F.col("doc_id"),
                       F.col("rank").cast("int").alias("rank"))
 

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 ROUND_TO = 6  # decimal places of the Lloyd statistics
 SAMPLE_SIZE = 10_000  # driver sample that seeds the centroids
+KMEANS_SEED = 42  # seed of that sample and of its k-means
 
 
 def sequential_fft(points: np.ndarray, k: int) -> np.ndarray:
@@ -173,8 +174,8 @@ def lloyd_round(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
                  F.count("*").alias("cnt")))
 
 
-def kmeans_fit(df: DataFrame, k: int, iters: int = 10,
-               seed: int = 42) -> tuple[np.ndarray, list[float]]:
+def kmeans_fit(df: DataFrame, k: int,
+               iters: int = 10) -> tuple[np.ndarray, list[float]]:
     """Distributed Lloyd's k-means over a vector column → (centroids
     (k, dim), per-iteration mean cost): the full-corpus trainer, for
     when a driver sample isn't representative enough.
@@ -205,9 +206,9 @@ def kmeans_fit(df: DataFrame, k: int, iters: int = 10,
         raise ValueError("kmeans_fit: no non-null vectors")
     frac = min(1.0, (SAMPLE_SIZE * 1.25) / n)
     sample = np.array(
-        [r[0] for r in vecs.sample(fraction=frac, seed=seed)
+        [r[0] for r in vecs.sample(fraction=frac, seed=KMEANS_SEED)
          .limit(SAMPLE_SIZE).collect()], dtype=np.float64)
-    centroids = _kmeans_lite(sample, k, seed=seed)
+    centroids = _kmeans_lite(sample, k, seed=KMEANS_SEED)
     k, dim = centroids.shape
 
     costs: list[float] = []

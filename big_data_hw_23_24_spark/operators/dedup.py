@@ -26,6 +26,7 @@ NUM_HASHES = 32  # MinHash signature length
 BANDS = 8  # LSH bands over the signature
 SHINGLE_N = 3  # words per shingle
 BLOOM_M_BITS = 1 << 17  # bloom filter of the incremental dedup
+SETSIM_THRESHOLD = 0.7  # Jaccard bound of the exact prefix-filtered join
 
 
 def normalized_text(col: Column) -> Column:
@@ -872,8 +873,9 @@ def bcubed_report(assignments: DataFrame) -> DataFrame:
                       F.round(f1, 6).alias("b3_f1"))
 
 
-def setsim_join_prefix(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
-    """EXACT all-pairs Jaccard ≥ t via prefix filtering (E182) →
+def setsim_join_prefix(docs: DataFrame) -> DataFrame:
+    """EXACT all-pairs Jaccard ≥ t (``SETSIM_THRESHOLD``) via prefix
+    filtering (E182) →
     ``(id_a, id_b, jaccard)`` — the AllPairs/PPJoin family (Bayardo et
     al. 2007), the exact-at-scale complement of MinHash-LSH (whose
     recall is probabilistic) and of ``exact_jaccard_pairs`` (whose
@@ -913,11 +915,9 @@ def setsim_join_prefix(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
     checkpointed — prefix explode plus two verify joins consume it
     (root-cause 4).
     """
-    if not 0 < threshold <= 1:
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     from .util import ensure_fanout
 
-    tm = int(round(threshold * 1_000_000))
+    tm = int(round(SETSIM_THRESHOLD * 1_000_000))
     words = F.filter(F.split(F.col("_t"), " "), lambda w: w != "")
     hashes = F.array_distinct(F.transform(
         _shifted_gram_zip(words, SHINGLE_N),
@@ -934,7 +934,7 @@ def setsim_join_prefix(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
             .where(F.col("_sz") >= 1)
             .localCheckpoint(eager=True))
     pref_len = (F.col("_sz")
-                - F.floor(F.lit(threshold) * F.col("_sz")).cast("int")
+                - F.floor(F.lit(SETSIM_THRESHOLD) * F.col("_sz")).cast("int")
                 + 1)
     prefix = slim.select(
         "_id", F.col("_sz").cast("long").alias("_sz"),
@@ -977,6 +977,6 @@ def setsim_join_prefix(docs: DataFrame, threshold: float = 0.7) -> DataFrame:
     # compare would admit boundary pairs the filters already pruned
     return (cand.select("id_a", "id_b")
             .join(va, "id_a").join(vb, "id_b")
-            .where(jraw >= threshold)
+            .where(jraw >= SETSIM_THRESHOLD)
             .select("id_a", "id_b",
                     F.round(jraw, 6).alias("jaccard")))

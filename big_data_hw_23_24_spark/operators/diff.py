@@ -146,8 +146,8 @@ def scd2_history(old: DataFrame, new: DataFrame) -> DataFrame:
                     "_r.is_current"))
 
 
-def incremental_stats(old: DataFrame, new: DataFrame, old_stats: DataFrame,
-                      group_col: str = "source") -> DataFrame:
+def incremental_stats(old: DataFrame, new: DataFrame,
+                      old_stats: DataFrame) -> DataFrame:
     """Incremental view maintenance of per-group corpus stats (E154)
     → ``(group, n_docs, n_tokens)`` for the NEW snapshot, computed
     from the OLD stats plus the change set.
@@ -161,7 +161,7 @@ def incremental_stats(old: DataFrame, new: DataFrame, old_stats: DataFrame,
     the base stats table is #groups rows.
 
     The maintained-table contract lives in ``old_stats``: the
-    previously-maintained ``(group_col, n_docs, n_tokens)`` table (the
+    previously-maintained ``(source, n_docs, n_tokens)`` table (the
     output of the prior round). The old snapshot's TEXT is never
     re-tokenized — old rows are read only for the id→(group, text)
     lookup of the churn-sized changed set. The registry face has no
@@ -175,7 +175,7 @@ def incremental_stats(old: DataFrame, new: DataFrame, old_stats: DataFrame,
         F.split(F.coalesce(F.col("text"), F.lit("")), " "),
         lambda w: w != ""))
     base = old_stats.select(
-        F.col(group_col).alias("grp"),
+        F.col("source").alias("grp"),
         F.col("n_docs").cast("long").alias("_n0"),
         F.col("n_tokens").cast("long").alias("_t0"))
     # change detection must cover the VIEW's inputs, not just text: a
@@ -185,7 +185,7 @@ def incremental_stats(old: DataFrame, new: DataFrame, old_stats: DataFrame,
     # text) — normalization is token-count-invariant (case + space
     # collapsing never change the split-and-filter count).
     fp = F.md5(F.concat_ws(
-        "\x01", F.coalesce(F.col(group_col).cast("string"), F.lit("")),
+        "\x01", F.coalesce(F.col("source").cast("string"), F.lit("")),
         F.coalesce(normalized_text(F.col("text")), F.lit(""))))
     o = old.select(F.col("doc_id"), fp.alias("_ofp"))
     n = new.select(F.col("doc_id"), fp.alias("_nfp"))
@@ -197,17 +197,17 @@ def incremental_stats(old: DataFrame, new: DataFrame, old_stats: DataFrame,
                .select("doc_id", status.alias("status"))
                .where(F.col("status") != "unchanged"))
     dec = (changed.where(F.col("status").isin("removed", "modified"))
-           .join(old.select("doc_id", group_col, "text"), "doc_id")
-           .select(F.col(group_col).alias("grp"),
+           .join(old.select("doc_id", "source", "text"), "doc_id")
+           .select(F.col("source").alias("grp"),
                    F.lit(-1).alias("_dd"), (-toks).alias("_dt")))
     inc = (changed.where(F.col("status").isin("added", "modified"))
-           .join(new.select("doc_id", group_col, "text"), "doc_id")
-           .select(F.col(group_col).alias("grp"),
+           .join(new.select("doc_id", "source", "text"), "doc_id")
+           .select(F.col("source").alias("grp"),
                    F.lit(1).alias("_dd"), toks.alias("_dt")))
     delta = (dec.unionByName(inc).groupBy("grp")
              .agg(F.sum("_dd").alias("_dd"), F.sum("_dt").alias("_dt")))
     return (base.join(delta, "grp", "full_outer")
-            .select(F.col("grp").alias(group_col),
+            .select(F.col("grp").alias("source"),
                     (F.coalesce("_n0", F.lit(0))
                      + F.coalesce("_dd", F.lit(0))).cast("long")
                     .alias("n_docs"),

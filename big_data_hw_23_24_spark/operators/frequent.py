@@ -33,6 +33,9 @@ from pyspark.sql import functions as F
 # Count-min geometry: depth rows of width buckets.
 CMS_DEPTH = 5
 CMS_WIDTH = 2048
+ROLLING_WINDOW_DAYS = 7  # trailing days of a rolling distinct count
+ROLLING_KMV_K = 128  # KMV sketch size of a rolling distinct count
+HLL_PS = (6, 12)  # log2 register counts the HLL report compares
 
 
 def _cms_bucket(row_col, item_col, width: int, hash_family: str):
@@ -481,8 +484,8 @@ def kmv_set_ops(sketch: DataFrame) -> DataFrame:
                  F.round(n_common / n_s, 6).alias("est_jaccard")))
 
 
-def rolling_distinct_kmv(df: DataFrame, item_col: str, day_col: str,
-                         window_days: int = 7, k: int = 128) -> DataFrame:
+def rolling_distinct_kmv(df: DataFrame, item_col: str,
+                         day_col: str) -> DataFrame:
     """Trailing-window distinct counts from per-day KMV sketches
     (E180) → ``(day_num, n_days, n_sketch, est_distinct,
     exact_distinct)`` for every observed day.
@@ -490,12 +493,12 @@ def rolling_distinct_kmv(df: DataFrame, item_col: str, day_col: str,
     The streaming-analytics classic ("7-day active users"), done the
     way it scales: an exact rolling countDistinct re-touches every
     raw row ``window`` times, while the sketch path aggregates each
-    day ONCE into ≤ k hash rows and the window merge works on
-    day-grid-sized data — mergeability (the k smallest of a union of
-    per-day sketches IS the window's sketch, exactly) is the whole
-    point of carrying a sketch per partition of time. Windows are
-    keyed by the trailing ``window_days`` ending at each observed
-    day; partial windows at the corpus start report their smaller
+    day ONCE into ≤ k (``ROLLING_KMV_K``) hash rows and the window
+    merge works on day-grid-sized data — mergeability (the k smallest
+    of a union of per-day sketches IS the window's sketch, exactly) is
+    the whole point of carrying a sketch per partition of time.
+    Windows are keyed by the trailing ``ROLLING_WINDOW_DAYS`` ending at
+    each observed day; partial windows at the corpus start report their smaller
     ``n_days``. The EXACT rolling distinct rides along (the gate
     convention), so the estimator's error is reported, never assumed.
     """
@@ -506,8 +509,8 @@ def rolling_distinct_kmv(df: DataFrame, item_col: str, day_col: str,
          .distinct().localCheckpoint(eager=True))  # sketch + exact read it
     days = (e.select(F.col("_d").alias("wd")).distinct()
             .localCheckpoint(eager=True))          # three consumers
-    span = F.sequence(F.col("_d"), F.col("_d") + (window_days - 1))
-    sk = (kmv_sketch(e, "_i", "_d", k=k)
+    span = F.sequence(F.col("_d"), F.col("_d") + (ROLLING_WINDOW_DAYS - 1))
+    sk = (kmv_sketch(e, "_i", "_d", k=ROLLING_KMV_K)
           .select(F.col("grp").alias("_d"), "h"))
     merged = (sk.withColumn("wd", F.explode(span))
               .join(days, "wd", "left_semi")
@@ -515,9 +518,9 @@ def rolling_distinct_kmv(df: DataFrame, item_col: str, day_col: str,
     # the merged window sketch IS a KMV sketch of the window — rank
     # it, stamp k, and let kmv_estimate do the estimating (one
     # estimator implementation, not a third inline copy)
-    wsk = (grouped_topk(merged, ["grp"], [F.col("h")], k)
-           .withColumn("k", _kmv_k_lit(k)))
-    est = (kmv_estimate(wsk, k=k)
+    wsk = (grouped_topk(merged, ["grp"], [F.col("h")], ROLLING_KMV_K)
+           .withColumn("k", _kmv_k_lit(ROLLING_KMV_K)))
+    est = (kmv_estimate(wsk, k=ROLLING_KMV_K)
            .select(F.col("grp").alias("wd"), "n_sketch",
                    "est_distinct"))
     exact = (e.withColumn("wd", F.explode(span))
@@ -526,8 +529,8 @@ def rolling_distinct_kmv(df: DataFrame, item_col: str, day_col: str,
              .agg(F.countDistinct("_i").cast("long")
                   .alias("exact_distinct")))
     nd = (days.select(F.col("wd").alias("_md"))
-          .withColumn("wd", F.explode(
-              F.sequence(F.col("_md"), F.col("_md") + (window_days - 1))))
+          .withColumn("wd", F.explode(F.sequence(
+              F.col("_md"), F.col("_md") + (ROLLING_WINDOW_DAYS - 1))))
           .join(days, "wd", "left_semi")
           .groupBy("wd").agg(F.count("*").cast("long").alias("n_days")))
     return (nd.join(est, "wd").join(exact, "wd")
@@ -617,13 +620,12 @@ def hll_estimate(regs: DataFrame, p: int) -> DataFrame:
                       est.alias("est"))
 
 
-def hll_report(df: DataFrame, item_col: str, group_col: str,
-               ps: tuple = (6, 12)) -> DataFrame:
+def hll_report(df: DataFrame, item_col: str, group_col: str) -> DataFrame:
     """Pinned-HLL rollout gate → one row per (group, m): ``(grp, m,
     n_exact, est, rel_err)``.
 
-    Runs the estimator at several register counts against the exact
-    distinct count, so BOTH estimator branches stay value-checked on
+    Runs the estimator at several register counts (``HLL_PS``) against
+    the exact distinct count, so BOTH estimator branches stay value-checked on
     natural data: small m → raw harmonic estimate, large m (n ≪ m)
     → linear counting. rel_err = (est − n)/n, the number that decides
     whether a given m is deployable for this key's cardinality.
@@ -631,7 +633,7 @@ def hll_report(df: DataFrame, item_col: str, group_col: str,
     exact = df.groupBy(F.col(group_col).alias("grp")).agg(
         F.countDistinct(item_col).cast("long").alias("n_exact"))
     outs = []
-    for p in ps:
+    for p in HLL_PS:
         e = hll_estimate(hll_registers(df, item_col, group_col, p), p)
         outs.append(e)
     ests = outs[0]

@@ -41,6 +41,9 @@ PAGERANK_ITERATIONS = 3
 HIERARCHY_MAX_DEPTH = 7  # digit-decade levels hierarchy_rollup unrolls
 HITS_DOUBLE_ROUNDS = 3  # hub+authority updates of hits_scores
 HITS_K = 20  # authority items hits_scores reports
+ITEMSET_MINSUP = 2  # baskets a frequent itemset appears in
+REC_HITRATE_K = 3  # similar items recommended per training item
+LPA_ROUNDS = 3  # synchronous vote rounds of label propagation
 
 
 def pagerank(edges: DataFrame) -> DataFrame:
@@ -168,7 +171,7 @@ def item_cooccurrence(events: DataFrame) -> DataFrame:
 
 
 def market_basket_pairs(baskets: DataFrame, basket_col: str,
-                        item_col: str, min_co: int = 2) -> DataFrame:
+                        item_col: str) -> DataFrame:
     """Market-basket pair mining → ``(item_a, item_b, n_co, n_a, n_b,
     support_ppm, lift)``: co-purchase counts with the association
     strength (lift = P(a,b)/(P(a)·P(b)); > 1 = bought together more
@@ -197,7 +200,7 @@ def market_basket_pairs(baskets: DataFrame, basket_col: str,
           .groupBy(F.col("x._it").alias("item_a"),
                    F.col("y._it").alias("item_b"))
           .agg(F.count("*").cast("long").alias("n_co"))
-          .where(F.col("n_co") >= min_co))
+          .where(F.col("n_co") >= COOC_MIN_CO))
     sa = sz.select(F.col("_it").alias("item_a"), F.col("_n").alias("n_a"))
     sb = sz.select(F.col("_it").alias("item_b"), F.col("_n").alias("n_b"))
     return (co.join(sa, "item_a").join(sb, "item_b")
@@ -299,7 +302,6 @@ def item_triangles(events: DataFrame) -> DataFrame:
 
 
 def itemset_triples(baskets: DataFrame, basket_col: str, item_col: str,
-                    minsup: int = 2,
                     min_frac: float | None = None) -> DataFrame:
     """A-priori frequent 3-itemsets (E148) → ``(item_a, item_b,
     item_c, support)`` with ``item_a < item_b < item_c``.
@@ -309,8 +311,9 @@ def itemset_triples(baskets: DataFrame, basket_col: str, item_col: str,
     frequent) implemented as joins, which is what makes level 3
     tractable at scale:
 
-    1. level 1: items with support ≥ minsup; baskets are FILTERED to
-       frequent items before any pair work (the big fan-out cut);
+    1. level 1: items with support ≥ ``ITEMSET_MINSUP``; baskets are
+       FILTERED to frequent items before any pair work (the big
+       fan-out cut);
     2. level 2: frequent pairs from the within-basket pair join;
     3. level 3: candidate (a, b) pairs are SEMI-JOINED against the
        frequent-pair table BEFORE extending by c, and both (a, c) and
@@ -345,13 +348,13 @@ def itemset_triples(baskets: DataFrame, basket_col: str, item_col: str,
                         F.col(item_col).alias("_it")).distinct()
          .localCheckpoint(eager=True))
     if min_frac is None:
-        thr = F.lit(minsup).cast("long")
+        thr = F.lit(ITEMSET_MINSUP).cast("long")
 
         def with_thr(df: DataFrame) -> DataFrame:
             return df
     else:
         nb = b.agg(F.countDistinct("_bk").alias("_nb"))
-        thr = F.greatest(F.lit(minsup),
+        thr = F.greatest(F.lit(ITEMSET_MINSUP),
                          F.ceil(F.col("_nb") * min_frac)).cast("long")
 
         def with_thr(df: DataFrame) -> DataFrame:
@@ -496,7 +499,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
                     .alias("assortativity")))
 
 
-def rec_hitrate(events: DataFrame, split_day: int, k: int = 3) -> DataFrame:
+def rec_hitrate(events: DataFrame, split_day: int) -> DataFrame:
     """Temporal holdout evaluation of the co-occurrence recommender
     (E206) → ONE row ``(k, n_test_pairs, n_hits, hitrate)``.
 
@@ -504,9 +507,10 @@ def rec_hitrate(events: DataFrame, split_day: int, k: int = 3) -> DataFrame:
     co-occurrence faces BUILD an item-item similarity graph, but
     nothing says whether "users who touched A also touched B" actually
     predicts future behavior. Protocol: train on days < ``split_day``,
-    build each user's candidate set as the union of the top-``k``
-    most-similar items (Jaccard desc, item-id tiebreak — on the
-    6-dp-ROUNDED jaccard the operator already emits, so the k
+    build each user's candidate set as the union of the top-k
+    (``REC_HITRATE_K``) most-similar items (Jaccard desc, item-id
+    tiebreak — on the 6-dp-ROUNDED jaccard the operator already
+    emits, so the k
     boundary cannot ulp-flip) of their train items, then score
     against the NEW (user, item) pairs in the test window (items the
     user already touched in train are anti-joined out — recommending
@@ -537,7 +541,8 @@ def rec_hitrate(events: DataFrame, split_day: int, k: int = 3) -> DataFrame:
     from .grouped import grouped_topk
 
     recs = grouped_topk(edges, ["_src"],
-                        [F.col("jaccard").desc(), F.col("_dst")], k) \
+                        [F.col("jaccard").desc(), F.col("_dst")],
+                        REC_HITRATE_K) \
         .select("_src", "_dst")
     ut = (train.where(F.col("item").isNotNull())
           .select(F.col("user_id").alias("_u"),
@@ -554,7 +559,7 @@ def rec_hitrate(events: DataFrame, split_day: int, k: int = 3) -> DataFrame:
     # no test pairs -> null hitrate by contract (there is nothing to
     # evaluate), never an ANSI divide-by-zero
     return (n_test.crossJoin(F.broadcast(n_hit))
-            .select(F.lit(k).cast("long").alias("k"),
+            .select(F.lit(REC_HITRATE_K).cast("long").alias("k"),
                     "n_test_pairs", "n_hits",
                     F.when(F.col("n_test_pairs") > 0,
                            F.round(F.col("n_hits")
@@ -701,7 +706,7 @@ def hits_scores(events: DataFrame) -> DataFrame:
                     .alias("authority")))
 
 
-def label_propagation(events: DataFrame, rounds: int = 3) -> DataFrame:
+def label_propagation(events: DataFrame) -> DataFrame:
     """Semi-supervised label propagation over the co-occurrence graph
     (E230) → one row per node: ``(item, label, is_seed)``.
 
@@ -750,7 +755,7 @@ def label_propagation(events: DataFrame, rounds: int = 3) -> DataFrame:
     labels = nodes.select(
         "_i", seed_label.cast("long").alias("_l"),
         (F.col("_i") % 7 == 0).alias("is_seed")).localCheckpoint(False)
-    for _ in range(rounds):
+    for _ in range(LPA_ROUNDS):
         votes = (sym.join(labels.where(F.col("_l").isNotNull())
                           .select(F.col("_i").alias("item_b"),
                                   F.col("_l").alias("_nl")),

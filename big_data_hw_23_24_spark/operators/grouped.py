@@ -24,11 +24,17 @@ PERCENTILES = (0.5, 0.9, 0.99)  # probed by percentile_drift
 SKETCH_ACCURACY = 100  # approx_percentile accuracy of the sketch side
 ROBUST_LO_PCT, ROBUST_HI_PCT = 5, 95  # robust_stats' tail fences
 RFM_TILES = 5  # rfm_segments' buckets per axis
+GROUPED_PERCENTILE = 0.5  # the percentile grouped_percentile computes
+PSI_BINS = 10  # baseline quantile bins of psi_report
+BOOTSTRAP_REPLICATES = 41  # Poisson replicates of bootstrap_ci
+BOOTSTRAP_ALPHA = 0.05  # bootstrap_ci reports the 1 - alpha interval
+FDR_ALPHA = 0.05  # false discovery rate bh_fdr controls
 
 
 def grouped_percentile(df: DataFrame, keys: list[str], value_col: str,
-                       p: float = 0.5, out_col: str = "pctl") -> DataFrame:
-    """Exact interpolated percentile of ``value_col`` per group.
+                       out_col: str = "pctl") -> DataFrame:
+    """Exact interpolated percentile ``GROUPED_PERCENTILE`` of
+    ``value_col`` per group.
 
     Semantics match ``percentile_cont(p) WITHIN GROUP (ORDER BY v)``:
     linear interpolation between the two adjacent order statistics
@@ -42,7 +48,8 @@ def grouped_percentile(df: DataFrame, keys: list[str], value_col: str,
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         vals = pdf[value_col].dropna()
         row = {k: [pdf[k].iloc[0]] for k in keys}
-        row[out_col] = [float(vals.quantile(p, interpolation="linear"))
+        row[out_col] = [float(vals.quantile(GROUPED_PERCENTILE,
+                                            interpolation="linear"))
                         if len(vals) else None]
         row["n"] = [len(vals)]
         return pd.DataFrame(row)
@@ -325,12 +332,12 @@ def percentile_drift(df: DataFrame, group_col: str,
 
 
 def psi_report(base: DataFrame, cur: DataFrame, value_col: str,
-               id_col: str, bins: int = 10) -> DataFrame:
+               id_col: str) -> DataFrame:
     """Population Stability Index drift report (E151) → one row per
     bin: ``(bin, n_base, n_cur, psi_contrib)``.
 
     The production drift metric beside the KS faces: bin edges are the
-    BASELINE's exact ``bins``-tiles (the standard convention — the
+    BASELINE's exact ``PSI_BINS``-tiles (the standard convention — the
     reference period defines the grid, the current period is scored
     against it), both datasets are then assigned by the SAME edges
     (ties at an edge go to the lower bin: bin = 1 + #edges strictly
@@ -348,9 +355,9 @@ def psi_report(base: DataFrame, cur: DataFrame, value_col: str,
     from .ranking import global_ntile
 
     nt = global_ntile(base.select(F.col(id_col), F.col(value_col)),
-                      bins, [F.col(value_col), F.col(id_col)],
+                      PSI_BINS, [F.col(value_col), F.col(id_col)],
                       out_col="_nt")
-    edges = (nt.where(F.col("_nt") <= bins - 1)
+    edges = (nt.where(F.col("_nt") <= PSI_BINS - 1)
              .groupBy("_nt").agg(F.max(value_col).alias("_e"))
              .groupBy()
              .agg(F.sort_array(F.collect_list("_e")).alias("_es")))
@@ -365,7 +372,7 @@ def psi_report(base: DataFrame, cur: DataFrame, value_col: str,
 
     nb = binned(base, "n_base")
     nc = binned(cur, "n_cur")
-    grid = base.sparkSession.range(1, bins + 1).select(
+    grid = base.sparkSession.range(1, PSI_BINS + 1).select(
         F.col("id").cast("int").alias("bin"))
     j = (grid.join(nb, "bin", "left").join(nc, "bin", "left")
          .select("bin",
@@ -373,8 +380,8 @@ def psi_report(base: DataFrame, cur: DataFrame, value_col: str,
                  F.coalesce("n_cur", F.lit(0)).alias("n_cur")))
     tb = j.groupBy().agg(F.sum("n_base").alias("_tb"),
                          F.sum("n_cur").alias("_tc"))
-    p = (F.col("n_base") + 0.5) / (F.col("_tb") + 0.5 * bins)
-    q = (F.col("n_cur") + 0.5) / (F.col("_tc") + 0.5 * bins)
+    p = (F.col("n_base") + 0.5) / (F.col("_tb") + 0.5 * PSI_BINS)
+    q = (F.col("n_cur") + 0.5) / (F.col("_tc") + 0.5 * PSI_BINS)
     return (j.crossJoin(F.broadcast(tb))
             .select("bin", "n_base", "n_cur",
                     F.round((p - q) * F.log(p / q), 6)
@@ -621,9 +628,7 @@ U32_DIVISOR = 4294967296.0
 
 
 def bootstrap_ci(units: DataFrame, group_cols: list[str],
-                 unit_col: str, value_col: str,
-                 n_replicates: int = 41,
-                 alpha: float = 0.05) -> DataFrame:
+                 unit_col: str, value_col: str) -> DataFrame:
     """Poisson-bootstrap grouped confidence interval (E183) → one row
     per group: ``(group…, n_units, mean_val, ci_lo, ci_hi)``.
 
@@ -647,8 +652,9 @@ def bootstrap_ci(units: DataFrame, group_cols: list[str],
     INDEPENDENT multiplicities per group — each group's CI is an
     independent bootstrap readout (drop the group from the seed only
     if you want paired replicates for cross-slice ratio consistency,
-    the streaming-Poisson-bootstrap convention). The default ``n_replicates=41``
-    is chosen so the CI ranks land ON order statistics
+    the streaming-Poisson-bootstrap convention).
+    ``BOOTSTRAP_REPLICATES`` = 41 is chosen so the CI ranks land ON
+    order statistics
     (0.025·(41−1) = 1 exactly): the percentile returns an element,
     not interpolation arithmetic that could differ in the last ulp
     between engines.
@@ -688,7 +694,8 @@ def bootstrap_ci(units: DataFrame, group_cols: list[str],
         F.count("*").cast("long").alias("n_units"),
         F.round(F.sum(x) * 1.0 / F.count("*"), 6).alias("mean_val"))
     rep = units.withColumn(
-        "_r", F.explode(F.sequence(F.lit(0), F.lit(n_replicates - 1))))
+        "_r", F.explode(F.sequence(F.lit(0),
+                                   F.lit(BOOTSTRAP_REPLICATES - 1))))
     # NULL handling must be explicit: concat_ws silently SKIPS nulls
     # while the oracle's '||' propagates them — a null group value
     # would make the engines draw different weights. Each component is
@@ -714,8 +721,9 @@ def bootstrap_ci(units: DataFrame, group_cols: list[str],
                          F.round(F.col("_swx") * 1.0 / F.col("_sw"), 6))
                   .alias("_mr")))
     ci = rm.groupBy(*gs).agg(
-        F.round(F.percentile("_mr", F.lit(alpha / 2)), 6).alias("ci_lo"),
-        F.round(F.percentile("_mr", F.lit(1 - alpha / 2)), 6)
+        F.round(F.percentile("_mr", F.lit(BOOTSTRAP_ALPHA / 2)), 6)
+        .alias("ci_lo"),
+        F.round(F.percentile("_mr", F.lit(1 - BOOTSTRAP_ALPHA / 2)), 6)
         .alias("ci_hi"))
     return point.join(ci, gs).select(
         *gs, "n_units", "mean_val", "ci_lo", "ci_hi")
@@ -966,8 +974,7 @@ def spearman_corr(df: DataFrame, group_col: str, x_col: str,
                        / F.sqrt(varx * vary), 6)).alias("rho"))
 
 
-def bh_fdr(df: DataFrame, id_col: str, p_col: str,
-           alpha: float = 0.05) -> DataFrame:
+def bh_fdr(df: DataFrame, id_col: str, p_col: str) -> DataFrame:
     """Benjamini-Hochberg step-up FDR control (E220) → one row per
     test: ``(id, p, rank, rejected)``.
 
@@ -1003,7 +1010,8 @@ def bh_fdr(df: DataFrame, id_col: str, p_col: str,
     m = ranked.agg(F.count("*").cast("long").alias("_m"))
     flagged = ranked.crossJoin(F.broadcast(m))
     kstar = (flagged
-             .where(F.col("_p") * F.col("_m") <= F.col("_i") * F.lit(alpha))
+             .where(F.col("_p") * F.col("_m")
+                    <= F.col("_i") * F.lit(FDR_ALPHA))
              .agg(F.coalesce(F.max("_i"), F.lit(0)).alias("_k")))
     return (flagged.crossJoin(F.broadcast(kstar))
             .select(F.col("_id").alias(id_col),

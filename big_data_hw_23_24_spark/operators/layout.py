@@ -331,23 +331,20 @@ def with_hilbert(df: DataFrame, x_col: str, y_col: str, bits: int = 12,
     return cur.drop("_hst")
 
 
-def hilbert_sql_parts(x_expr: str, y_expr: str, bits: int = 12
-                      ) -> tuple[str, str, str]:
+def hilbert_sql_parts(x_expr: str, y_expr: str) -> tuple[str, str, str]:
     """The identical computation as portable SQL: returns
     ``(values_cte, join_chain, hv_expr)`` — a ``ht(k, digit, nxt)``
-    VALUES list, the left-deep ``bits``-join chain, and the digit
+    VALUES list, the left-deep ``AUDIT_BITS``-join chain, and the digit
     recombination expression, all generated from HILBERT_TABLE so the
     oracle can never drift from the Column form."""
-    if not 1 <= bits <= 31:
-        raise ValueError(f"bits must be in 1..31, got {bits}")
     vals = ", ".join(f"({k}, {d}, {n})" for k, d, n in HILBERT_TABLE)
     cte = f"ht(k, digit, nxt) AS (VALUES {vals})"
-    lim = (1 << bits) - 1
+    lim = (1 << AUDIT_BITS) - 1
     xm = f"(CAST({x_expr} AS BIGINT) & {lim})"
     ym = f"(CAST({y_expr} AS BIGINT) & {lim})"
     joins, terms = [], []
     prev = "0"
-    for i in range(bits - 1, -1, -1):
+    for i in range(AUDIT_BITS - 1, -1, -1):
         a = f"h{i}"
         joins.append(
             f"JOIN ht {a} ON {a}.k = ({prev}) * 4"

@@ -11,7 +11,7 @@ a 3-word name are all-or-nothing). Both classic candidate-generation
 strategies are here, each with the guard that keeps it sublinear:
 
 * :func:`blocked_fuzzy_pairs` — equi-join on a cheap BLOCK key
-  (Fellegi-Sunter blocking), cost Σ block², bounded by ``max_block``
+  (Fellegi-Sunter blocking), cost Σ block², bounded by ``MAX_BLOCK``
   (the containment face's ``max_df`` cure: one mega-block would be
   quadratic, so oversized blocks are dropped and REPORTED rather than
   silently exploded).
@@ -33,19 +33,22 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+MAX_EDIT_DIST = 2  # levenshtein distance of a linked pair
+MAX_BLOCK = 1000  # rows of the largest block that is compared
+
 __all__ = ["blocked_fuzzy_pairs", "edit1_neighborhood_pairs",
            "sorted_neighborhood_pairs"]
 
 
-def blocked_fuzzy_pairs(df: DataFrame, entity_col: str, block: Column,
-                        max_dist: int = 2, max_block: int = 1000) -> DataFrame:
+def blocked_fuzzy_pairs(df: DataFrame, entity_col: str,
+                        block: Column) -> DataFrame:
     """Blocked fuzzy linkage → ``(id_a, id_b, dist)`` for pairs in the
-    same block with ``levenshtein(entity_a, entity_b) <= max_dist``.
+    same block with ``levenshtein(entity_a, entity_b) <= MAX_EDIT_DIST``.
 
     ``block`` is the blocking expression (first token, phonetic key,
     zip code, ...); a pair in different blocks is NEVER compared — the
     standard recall trade every production linkage makes. Blocks larger
-    than ``max_block`` are dropped entirely (one grouped count + a
+    than ``MAX_BLOCK`` are dropped entirely (one grouped count + a
     semi-join): at 100 TB a degenerate block ("smith", an empty key)
     is a quadratic bucket, and the operator's contract is to bound
     cost and let the caller refine the blocking key, not to explode.
@@ -54,11 +57,11 @@ def blocked_fuzzy_pairs(df: DataFrame, entity_col: str, block: Column,
 
     Verify cost per candidate pair is bounded two ways, both
     result-identical: a LENGTH-BAND filter ahead of the edit distance
-    (``|len_a − len_b| > max_dist`` already implies
-    ``dist > max_dist`` — each edit changes length by ≤ 1 — so those
+    (``|len_a − len_b| > MAX_EDIT_DIST`` already implies
+    ``dist > MAX_EDIT_DIST`` — each edit changes length by ≤ 1 — so those
     pairs never reach the dynamic program), and the THRESHOLDED
-    ``levenshtein(a, b, max_dist)``, which abandons the O(len²) DP as
-    soon as the banded diagonal exceeds the budget (O(len·max_dist))
+    ``levenshtein(a, b, MAX_EDIT_DIST)``, which abandons the O(len²) DP as
+    soon as the banded diagonal exceeds the budget (O(len·MAX_EDIT_DIST))
     and returns −1 — filtered with the over-budget pairs. Together
     they make Σ block² a count of CHEAP comparisons.
     """
@@ -66,26 +69,26 @@ def blocked_fuzzy_pairs(df: DataFrame, entity_col: str, block: Column,
                      F.col(entity_col).alias("_e"),
                      block.alias("_blk")).where(F.col("_blk").isNotNull())
     keep = (slim.groupBy("_blk").agg(F.count("*").alias("_n"))
-            .where(F.col("_n") <= max_block).select("_blk"))
+            .where(F.col("_n") <= MAX_BLOCK).select("_blk"))
     slim = slim.join(F.broadcast(keep), "_blk", "left_semi")
     a, b = slim.alias("a"), slim.alias("b")
     return (a.join(b, (F.col("a._blk") == F.col("b._blk"))
                    & (F.col("a._id") < F.col("b._id")))
             .where(F.abs(F.length(F.col("a._e"))
-                         - F.length(F.col("b._e"))) <= max_dist)
+                         - F.length(F.col("b._e"))) <= MAX_EDIT_DIST)
             .select(F.col("a._id").alias("id_a"),
                     F.col("b._id").alias("id_b"),
                     F.levenshtein(F.col("a._e"), F.col("b._e"),
-                                  max_dist).cast("int").alias("dist"))
-            .where((F.col("dist") >= 0) & (F.col("dist") <= max_dist)))
+                                  MAX_EDIT_DIST).cast("int").alias("dist"))
+            .where((F.col("dist") >= 0) & (F.col("dist") <= MAX_EDIT_DIST)))
 
 
-def sorted_neighborhood_pairs(df: DataFrame, entity_col: str, window: int = 3,
-                              max_dist: int = 2) -> DataFrame:
+def sorted_neighborhood_pairs(df: DataFrame, entity_col: str,
+                              window: int = 3) -> DataFrame:
     """Sorted-neighborhood linkage → ``(id_a, id_b, rank_gap, dist)``:
     rank all rows by the entity string (id tiebreaker), compare each
     row only to the ``window`` rows following it in rank order, keep
-    pairs with ``levenshtein <= max_dist``.
+    pairs with ``levenshtein <= MAX_EDIT_DIST``.
 
     Candidate generation is O(n·w) regardless of value skew — a
     million identical keys cost a million·w candidates, never
@@ -117,22 +120,22 @@ def sorted_neighborhood_pairs(df: DataFrame, entity_col: str, window: int = 3,
     pairs = (lhs.alias("a").join(base.alias("b"), "_bkt")
              .where((F.col("b._r") > F.col("a._r"))
                     & (F.col("b._r") - F.col("a._r") <= window)
-                    # length band: |len diff| > max_dist ⟹ dist >
-                    # max_dist (each edit moves length ≤ 1) — skip
+                    # length band: |len diff| > MAX_EDIT_DIST ⟹ dist >
+                    # MAX_EDIT_DIST (each edit moves length ≤ 1) — skip
                     # the DP for pairs that cannot qualify
                     & (F.abs(F.length(F.col("a._e"))
-                             - F.length(F.col("b._e"))) <= max_dist))
+                             - F.length(F.col("b._e"))) <= MAX_EDIT_DIST))
              .select(F.col("a._id").alias("id_a"),
                      F.col("b._id").alias("id_b"),
                      (F.col("b._r") - F.col("a._r"))
                      .cast("int").alias("rank_gap"),
-                     # thresholded: banded O(len·max_dist) DP, −1
+                     # thresholded: banded O(len·MAX_EDIT_DIST) DP, −1
                      # past the budget (filtered below)
                      F.levenshtein(F.col("a._e"), F.col("b._e"),
-                                   max_dist).cast("int").alias("dist")))
+                                   MAX_EDIT_DIST).cast("int").alias("dist")))
     # each (a, b) matches exactly once: a rides buckets {k, k+1} but b
     # holds a single bucket value — no distinct needed
-    return pairs.where((F.col("dist") >= 0) & (F.col("dist") <= max_dist))
+    return pairs.where((F.col("dist") >= 0) & (F.col("dist") <= MAX_EDIT_DIST))
 
 
 def edit1_neighborhood_pairs(rows: DataFrame, id_col: str,

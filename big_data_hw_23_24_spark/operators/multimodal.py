@@ -88,8 +88,7 @@ def decode_media(media: DataFrame, fake: bool = False) -> DataFrame:
     return media.mapInPandas(kernel, MEDIA_META_SCHEMA)
 
 
-def extract_features(media: DataFrame, dim: int = 4,
-                     fake: bool = False) -> DataFrame:
+def extract_features(media: DataFrame, fake: bool = False) -> DataFrame:
     """Feature extraction: binary payload → embedding components, long
     form (media_id, i, feat) — the step that feeds the similarity /
     dedup stack (``operators/similarity.py``, ``operators/pq.py``)
@@ -120,7 +119,7 @@ def extract_features(media: DataFrame, dim: int = 4,
             out = {"media_id": [], "i": [], "feat": []}
             for mid, payload in zip(batch["media_id"], batch["media"]):
                 h = hashlib.md5(bytes(payload)).hexdigest()
-                for i in range(dim):
+                for i in range(FEATURE_DIM):
                     out["media_id"].append(mid)
                     out["i"].append(i)
                     out["feat"].append(
@@ -132,7 +131,7 @@ def extract_features(media: DataFrame, dim: int = 4,
     return media.mapInPandas(kernel, schema)
 
 
-def frame_sample_plan(media: DataFrame, every_nth: int = 10) -> DataFrame:
+def frame_sample_plan(media: DataFrame) -> DataFrame:
     """Plumbing for frame sampling: one row per sampled frame index.
 
     For video payloads the real kernel would emit decoded frames; the
@@ -146,12 +145,14 @@ def frame_sample_plan(media: DataFrame, every_nth: int = 10) -> DataFrame:
         F.posexplode(F.sequence(
             F.lit(0),
             F.greatest(n_frames - 1, F.lit(0)),
-            F.lit(every_nth))).alias("frame_pos", "frame_idx"),
+            F.lit(FRAME_EVERY_NTH))).alias("frame_pos", "frame_idx"),
     )
 
 
 # block_dedup_pairs: aligned block size, shared blocks a pair needs,
 # and the stop-block document-frequency guard.
+FEATURE_DIM = 4  # components of an extracted feature vector
+FRAME_EVERY_NTH = 10  # frame stride of the sampling plan
 BLOCK_BYTES = 64
 BLOCK_MIN_SHARED = 2
 BLOCK_MAX_DF = 8

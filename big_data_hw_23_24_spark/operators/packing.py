@@ -22,6 +22,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+BATCH_SIZE = 32  # rows of a length-bucketed batch
+TRUNC_HEAD = 48  # head tokens a truncated document keeps
+TRUNC_TAIL = 15  # tail tokens a truncated document keeps
+
 
 def pack_sequences(docs: DataFrame, capacity: int = 256,
                    shard_col: str = "source") -> DataFrame:
@@ -61,7 +65,7 @@ def pack_sequences(docs: DataFrame, capacity: int = 256,
                         (hi - lo).cast("long").alias("n_tokens_in_bin"))
 
 
-def length_batches(docs: DataFrame, batch_size: int = 32) -> DataFrame:
+def length_batches(docs: DataFrame) -> DataFrame:
     """Length-bucketed micro-batch assignment → (doc_id, n_tokens,
     batch_id, batch_max, pad_waste).
 
@@ -79,7 +83,7 @@ def length_batches(docs: DataFrame, batch_size: int = 32) -> DataFrame:
     (n_tokens, id) — never a single-reducer window over the corpus
     (``operators.ranking.global_rank``, the E79 spine) — then batch_id
     is pure arithmetic on the rank, and ``batch_max`` is a keyed
-    window over ``batch_size``-row groups. Deterministic: ties break
+    window over ``BATCH_SIZE``-row groups. Deterministic: ties break
     by id.
     """
     from .ranking import global_rank
@@ -91,7 +95,7 @@ def length_batches(docs: DataFrame, batch_size: int = 32) -> DataFrame:
     ranked = global_rank(t, [F.col("n_tokens"), F.col("doc_id")],
                          rank_col="_rn")
     b = ranked.withColumn(
-        "batch_id", F.expr(f"(_rn - 1) div {int(batch_size)}"))
+        "batch_id", F.expr(f"(_rn - 1) div {BATCH_SIZE}"))
     w = Window.partitionBy("batch_id")
     return (b.select(
         "doc_id", "n_tokens", "batch_id",
@@ -100,8 +104,7 @@ def length_batches(docs: DataFrame, batch_size: int = 32) -> DataFrame:
                     (F.col("batch_max") - F.col("n_tokens")).cast("long")))
 
 
-def head_tail_truncate(docs: DataFrame, budget: int = 64, head: int = 48,
-                       tail: int = 15) -> DataFrame:
+def head_tail_truncate(docs: DataFrame) -> DataFrame:
     """Head+tail context-window truncation (E181) → ``(doc_id,
     n_tokens, n_kept, truncated, fitted_text)``.
 
@@ -110,7 +113,7 @@ def head_tail_truncate(docs: DataFrame, budget: int = 64, head: int = 48,
     ledes) and the tail (conclusions, signatures) — the two spans with
     the highest information density in web/document text — joined by
     an explicit elision marker so the seam is visible to the model and
-    to audits. ``head + 1 + tail`` must equal ``budget`` (validated);
+    to audits. The budget is ``TRUNC_HEAD + 1 + TRUNC_TAIL`` tokens;
     docs at or under budget pass through BYTE-IDENTICAL
     (``truncated`` = false; ``fitted_text`` IS the input column, not
     a re-join of the split, which would collapse repeated
@@ -119,16 +122,15 @@ def head_tail_truncate(docs: DataFrame, budget: int = 64, head: int = 48,
     tail = budget). Pure array slicing over the split — one narrow
     map, zero shuffles, a free rider on any corpus scan.
     """
-    if head + 1 + tail != budget:
-        raise ValueError(f"head ({head}) + marker (1) + tail ({tail}) "
-                         f"must equal budget ({budget})")
+    budget = TRUNC_HEAD + 1 + TRUNC_TAIL
     words = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
     n = F.size(words)
     fitted = F.when(
         n > budget,
-        F.array_join(F.concat(F.slice(words, 1, head),
+        F.array_join(F.concat(F.slice(words, 1, TRUNC_HEAD),
                               F.array(F.lit("...")),
-                              F.slice(words, -tail, tail)), " ")) \
+                              F.slice(words, -TRUNC_TAIL, TRUNC_TAIL)),
+                     " ")) \
         .otherwise(F.col("text"))
     return docs.select(
         F.col("doc_id"),

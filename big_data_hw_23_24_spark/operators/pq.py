@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 ROUND_TO = 6  # decimal places of every distance
+PQ_K_TOP = 10  # neighbors the reranked PQ search returns
+PQ_FETCH = 40  # ADC shortlist depth the rerank reads
 
 
 def _subvector_rows(df: DataFrame, m: int, vec_col: str,
@@ -123,12 +125,12 @@ def pq_adc_topk(codes: DataFrame, queries: DataFrame, codebooks: DataFrame,
 
 
 def pq_rerank_topk(corpus: DataFrame, codes: DataFrame, queries: DataFrame,
-                   codebooks: DataFrame, m: int, k_top: int = 10,
-                   fetch: int = 40) -> DataFrame:
+                   codebooks: DataFrame, m: int) -> DataFrame:
     """The full production PQ search path → (query_id, neighbor_id,
-    dist_sq, rank): ADC over the code table produces a ``fetch``-deep
-    shortlist (code-bytes scan only), then EXACT squared-L2 reranks
-    just those |queries|·fetch pairs against the raw vectors — the
+    dist_sq, rank): ADC over the code table produces a
+    ``PQ_FETCH``-deep shortlist (code-bytes scan only), then EXACT
+    squared-L2 reranks just those |queries|·fetch pairs against the
+    raw vectors, keeping the ``PQ_K_TOP`` nearest — the
     ``quantized_topk`` two-stage shape with PQ as the cheap stage.
 
     The rerank join touches the raw-vector table once, filtered to the
@@ -136,7 +138,7 @@ def pq_rerank_topk(corpus: DataFrame, codes: DataFrame, queries: DataFrame,
     shortlist side); exact distances are rounded before ranking, ties
     broken by neighbor id, so results are engine-stable end to end.
     """
-    short = pq_adc_topk(codes, queries, codebooks, m, k_top=fetch,
+    short = pq_adc_topk(codes, queries, codebooks, m, k_top=PQ_FETCH,
                         exclude_self=True) \
         .select("query_id", "neighbor_id")
     q = queries.select(F.col("vec_id").alias("query_id"),
@@ -151,4 +153,4 @@ def pq_rerank_topk(corpus: DataFrame, codes: DataFrame, queries: DataFrame,
             .select("query_id", "neighbor_id",
                     F.round(dist, ROUND_TO).alias("dist_sq"))
             .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k_top))
+            .where(F.col("rank") <= PQ_K_TOP))

@@ -41,6 +41,10 @@ BM25_B = 0.75  # BM25 length normalization
 QL_MU = 300.0  # Dirichlet prior of the query likelihood
 SPAN_START = 6  # first word of each origin-eval query span
 SPAN_LEN = 8  # words per origin-eval query span
+ORIGIN_K = 10  # top-k depth of the origin-retrieval eval
+ORIGIN_EVERY = 17  # the origin eval queries every ORIGIN_EVERY-th doc id
+ORIGIN_OFFSET = 3  # ... those with doc_id % ORIGIN_EVERY == ORIGIN_OFFSET
+RRF_K = 10  # fused documents kept per query
 
 __all__ = ["bm25_topk", "bm25_oracle_sql", "bm25_search_many",
            "rerank_features", "build_query_index", "ql_search_many",
@@ -410,7 +414,7 @@ def ql_search_many(docs: DataFrame, queries: DataFrame, k: int = 20,
                         [F.col("score").desc(), F.col("doc_id")], k)
 
 
-def rrf_fuse(*ranked: DataFrame, k: int = 10) -> DataFrame:
+def rrf_fuse(*ranked: DataFrame) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009) of per-query ranked
     lists → ``(qid, doc_id, rrf, rank)`` plus one ``rank_i`` column per
     input list (−1 where the doc missed that list).
@@ -441,7 +445,7 @@ def rrf_fuse(*ranked: DataFrame, k: int = 10) -> DataFrame:
         *[F.coalesce(F.col(f"_r{i}"), F.lit(-1)).cast("int")
           .alias(f"rank_{i}") for i in range(len(slim))])
     return grouped_topk(out, ["qid"],
-                        [F.col("rrf").desc(), F.col("doc_id")], k)
+                        [F.col("rrf").desc(), F.col("doc_id")], RRF_K)
 
 
 def phrase_search(docs: DataFrame, phrases: list[str]) -> DataFrame:
@@ -491,8 +495,7 @@ def phrase_search(docs: DataFrame, phrases: list[str]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), outs)
 
 
-def origin_retrieval_eval(docs: DataFrame, k: int = 10, every: int = 17,
-                          offset: int = 3) -> DataFrame:
+def origin_retrieval_eval(docs: DataFrame) -> DataFrame:
     """Passage-origin retrieval eval (E207) → ONE row ``(n_queries,
     n_found, recall_at_k, mrr_ppm)``.
 
@@ -500,7 +503,7 @@ def origin_retrieval_eval(docs: DataFrame, k: int = 10, every: int = 17,
     sample a word span from a document, use it as the query, and the
     document it came from IS the relevant answer — if BM25 cannot
     retrieve a passage's own source, it will not retrieve anything
-    harder. Queries are deterministic (every ``every``-th doc by id,
+    harder. Queries are deterministic (every ``ORIGIN_EVERY``-th doc by id,
     words ``SPAN_START..SPAN_START+SPAN_LEN-1`` of its token stream,
     de-duplicated — repeated terms would double-count in the OR-
     semantics scorer), so the eval is reproducible and the oracle can
@@ -515,20 +518,20 @@ def origin_retrieval_eval(docs: DataFrame, k: int = 10, every: int = 17,
 
     Scale: rides :func:`bm25_search_many` — corpus-side cost is ONE
     (doc, term) postings aggregate regardless of query count; the
-    query table here is a 1/``every`` sample of doc ids, generated
+    query table here is a 1/``ORIGIN_EVERY`` sample of doc ids, generated
     in-plan (no driver materialization).
     """
     words = F.filter(F.split(F.lower(F.col("text")), " "),
                      lambda w: w != "")
     base = docs.select(F.col("doc_id"), words.alias("_w"))
     queries = (base
-               .where((F.col("doc_id") % every == offset)
+               .where((F.col("doc_id") % ORIGIN_EVERY == ORIGIN_OFFSET)
                       & (F.size("_w") >= SPAN_START + SPAN_LEN - 1))
                .select(F.col("doc_id").alias("qid"),
                        F.array_distinct(
                            F.slice("_w", SPAN_START, SPAN_LEN))
                        .alias("terms")))
-    hits = bm25_search_many(docs, queries, k=k)
+    hits = bm25_search_many(docs, queries, k=ORIGIN_K)
     origin = (hits.where(F.col("qid") == F.col("doc_id"))
               .select("qid", "rank"))
     per_q = (queries.select("qid")

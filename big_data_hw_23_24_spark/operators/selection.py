@@ -44,6 +44,11 @@ PRIORITY_HASH_CHARS = 12  # md5 hex digits behind each priority draw
 PRIORITY_SALT = "ps"  # salt of priority_sample's draws
 DSIR_EPS = 1e-6  # dsir_importance's probability-space smoothing
 SHARD_TARGET_TOKENS = 2000  # tokens per shard_manifest shard
+DSIR_BUCKET_CHARS = 3  # md5 hex digits behind each DSIR bigram bucket
+NEGATIVES_K = 4  # negatives contrastive_negatives draws per anchor
+MAX_EPOCHS = 2.0  # epoch_schedule's cap on repeating a source
+CALIBRATION_TILES = 10  # score deciles of quality_calibration
+CALIBRATION_MAX_HITS = 1  # term hits a document keeps under calibration
 
 
 def stratified_sample(df: DataFrame, strata_cols: list[str], k: int,
@@ -109,8 +114,7 @@ def token_shards(df: DataFrame, order_by: list[Column | str], size_col: str,
         .cast("bigint"))
 
 
-def dsir_importance(docs: DataFrame, is_target: Column,
-                    bucket_chars: int = 3) -> DataFrame:
+def dsir_importance(docs: DataFrame, is_target: Column) -> DataFrame:
     """DSIR-style importance weights → ``(doc_id, n_feats, weight)``.
 
     Data Selection via Importance Resampling (Xie et al., NeurIPS
@@ -123,7 +127,7 @@ def dsir_importance(docs: DataFrame, is_target: Column,
     ``weight >= 0``, or feed ``-weight`` into :func:`quality_budget`
     as the quality ordering).
 
-    Features are word bigrams hashed to ``16^bucket_chars`` buckets by
+    Features are word bigrams hashed to ``16^DSIR_BUCKET_CHARS`` buckets by
     md5 prefix (engine-portable, seed-free — the hash IS the
     vocabulary, no fitting pass). Smoothing is in PROBABILITY space
     (``+DSIR_EPS`` on each normalized frequency, DSIR's own formulation) —
@@ -133,14 +137,11 @@ def dsir_importance(docs: DataFrame, is_target: Column,
     carry no features and weight 0.
 
     Scale shape: three keyed aggregates — (doc, bucket) counts, the
-    ≤ ``16^bucket_chars``-row bucket table (broadcast back), per-doc
+    ≤ ``16^DSIR_BUCKET_CHARS``-row bucket table (broadcast back), per-doc
     weight — plus one 1-row totals broadcast. The corpus shuffles
     only its (doc, bucket) counts; nothing all-pairs, nothing
     single-reducer.
     """
-    if bucket_chars < 1 or bucket_chars > 8:
-        raise ValueError(f"bucket_chars must be in 1..8, got {bucket_chars}")
-
     from .util import lowered_words
 
     # lowered word bigrams (the lowercase sibling of
@@ -167,7 +168,7 @@ def dsir_importance(docs: DataFrame, is_target: Column,
              .select(F.col("doc_id"), is_target.alias("_t"),
                      F.explode(grams).alias("_g"))
              .select("doc_id", "_t",
-                     F.substring(F.md5(F.col("_g")), 1, bucket_chars)
+                     F.substring(F.md5(F.col("_g")), 1, DSIR_BUCKET_CHARS)
                      .alias("_b"))
              .groupBy("doc_id", "_t", "_b")
              .agg(F.count("*").alias("_c"))
@@ -266,9 +267,9 @@ def lm_quality_buckets(docs: DataFrame) -> DataFrame:
                  .otherwise("tail").alias("bucket")))
 
 
-def contrastive_negatives(df: DataFrame, k: int = 4) -> DataFrame:
+def contrastive_negatives(df: DataFrame) -> DataFrame:
     """Deterministic random negatives -> (id, neg_rank, neg_id): for
-    every anchor row, ``k`` pseudo-random other rows — the negative
+    every anchor row, ``NEGATIVES_K`` pseudo-random other rows — the negative
     sampling step of contrastive / DPR-style training-pair
     construction, seed-free and engine-portable (the md5 convention),
     so a re-run, a different partitioning, or a different engine draws
@@ -282,8 +283,6 @@ def contrastive_negatives(df: DataFrame, k: int = 4) -> DataFrame:
     standard in-batch-negatives regime); the join back is one shuffle
     on the index, never an all-pairs product. Requires n >= 2.
     """
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
     from .ranking import global_rank
 
     ranked = global_rank(df.select("doc_id"), [F.col("doc_id")],
@@ -298,7 +297,7 @@ def contrastive_negatives(df: DataFrame, k: int = 4) -> DataFrame:
                     ((h + 1) % F.col("_n")) + 1).otherwise(h + 1)
     exploded = (ranked.crossJoin(F.broadcast(n))
                 .select(F.col("doc_id"), F.col("_idx"), F.col("_n"),
-                        F.explode(F.sequence(F.lit(1), F.lit(k)))
+                        F.explode(F.sequence(F.lit(1), F.lit(NEGATIVES_K)))
                         .alias("neg_rank"))
                 .withColumn("_tidx", target))
     lookup = ranked.select(F.col("doc_id").alias("neg_id"),
@@ -364,8 +363,8 @@ def priority_sample(df: DataFrame, weight_col: str, k: int) -> DataFrame:
                     .alias("est_weight")))
 
 
-def epoch_schedule(docs: DataFrame, weights: DataFrame, budget_tokens: int,
-                   max_epochs: float = 2.0) -> DataFrame:
+def epoch_schedule(docs: DataFrame, weights: DataFrame,
+                   budget_tokens: int) -> DataFrame:
     """Data-constrained mixing schedule: how many EPOCHS of each source
     to run to hit a token budget under a target mix → ``(source,
     n_tokens_avail, weight_norm, target_tokens, epochs, capped,
@@ -374,7 +373,7 @@ def epoch_schedule(docs: DataFrame, weights: DataFrame, budget_tokens: int,
     The temperature-mix family (E66) decides the target SHARE; this
     operator turns shares into repeat factors when the corpus is
     data-constrained: ``target = weight · budget``; ``epochs =
-    target / available``, capped at ``max_epochs`` (repeating a source
+    target / available``, capped at ``MAX_EPOCHS`` (repeating a source
     beyond a few epochs has sharply diminishing returns — the
     data-constrained-scaling result), with the shortfall reported as
     ``deficit_tokens`` per source instead of silently redistributed —
@@ -402,18 +401,17 @@ def epoch_schedule(docs: DataFrame, weights: DataFrame, budget_tokens: int,
         "target_tokens",
         F.floor(F.col("weight_norm") * budget_tokens).cast("long"))
     er = F.col("target_tokens") / F.col("n_tokens_avail")
-    epochs = F.round(F.least(F.lit(float(max_epochs)), er), 6)
+    epochs = F.round(F.least(F.lit(float(MAX_EPOCHS)), er), 6)
     realized = F.floor(epochs * F.col("n_tokens_avail")).cast("long")
     return calc.select(
         "source", "n_tokens_avail", "weight_norm", "target_tokens",
         epochs.alias("epochs"),
-        (er > max_epochs).alias("capped"),
+        (er > MAX_EPOCHS).alias("capped"),
         realized.alias("realized_tokens"),
         (F.col("target_tokens") - realized).alias("deficit_tokens"))
 
 
-def quality_calibration(docs: DataFrame, terms: list[str], n_tiles: int = 10,
-                        max_hits: int = 1) -> DataFrame:
+def quality_calibration(docs: DataFrame, terms: list[str]) -> DataFrame:
     """Cross-signal calibration audit → ``(decile, n_docs, n_flagged,
     flag_rate)``: bucket the corpus into quality-score deciles (the
     hashed linear classifier) and report, per decile, how often an
@@ -444,7 +442,7 @@ def quality_calibration(docs: DataFrame, terms: list[str], n_tiles: int = 10,
     from .util import ensure_fanout
 
     # the blocklist predicate exactly as textstats.blocklist_gate
-    # states it (token match over the lowered split, count <= max_hits)
+    # states it (token match over the lowered split, count <= max hits)
     lowered = [t.lower() for t in terms]
     arr = F.array(*[F.lit(t) for t in lowered])
     words = F.filter(F.split(F.lower(F.col("text")), " "),
@@ -454,8 +452,9 @@ def quality_calibration(docs: DataFrame, terms: list[str], n_tiles: int = 10,
     j = ensure_fanout(docs.select(F.col("doc_id"), F.col("text"))) \
         .select(F.col("doc_id"),
                 linear_quality_prob().alias("prob"),
-                (n_hits <= max_hits).alias("kept"))
-    d = global_ntile(j, n_tiles, [F.col("prob"), F.col("doc_id")],
+                (n_hits <= CALIBRATION_MAX_HITS).alias("kept"))
+    d = global_ntile(j, CALIBRATION_TILES,
+                     [F.col("prob"), F.col("doc_id")],
                      out_col="decile")
     flagged = (~F.col("kept")).cast("int")
     return (d.groupBy("decile")

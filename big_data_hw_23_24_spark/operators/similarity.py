@@ -31,6 +31,16 @@ from pyspark.sql import Window as W
 IVF_SAMPLE_SIZE = 10_000  # driver sample that trains the IVF centroids
 IVF_N_LISTS = 16  # lists ivf_topk trains
 IVF_NPROBE = 4  # nearest lists each ivf_topk query probes
+KNN_K = 10  # neighbours per query of the top-k searches and gates
+RERANK_FACTOR = 4  # quantized_topk reranks RERANK_FACTOR * KNN_K candidates
+COSINE_THRESHOLD = 0.4  # cosine of a near-duplicate embedding pair
+PCA_COMPONENTS = 8  # basis vectors pca_components returns
+RECALL_PREFIX_DIM = 32  # leading coordinates prefix_dim_recall keeps
+RECALL_QUERIES = 20  # prefix_dim_recall queries the ids below this
+TRIPLET_ANCHORS_BELOW = 30  # triplet_mining anchors the ids below this
+RP_TARGET_DIM = 16  # dimension of rp_distortion's random projection
+RP_OFFSETS = (1, 7, 49)  # id offsets of rp_distortion's probe pairs
+EIGEN_ROUNDS = 5  # power-iteration rounds of top_eigenvector
 LSH_BITS = 256  # random-hyperplane signature bits
 LSH_BANDS = 16  # LSH bands over the signature
 
@@ -129,7 +139,7 @@ def _nearest_lists_udf(centroids: np.ndarray, n: int):
     return nearest
 
 
-def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
+def ivf_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF approximate top-k cosine → same schema as ``cosine_topk``.
 
     Train ``IVF_N_LISTS`` centroids on a seeded uniform sample
@@ -168,7 +178,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
                 (_dot(F.col("q_vec"), F.col("c_vec"))
                  / (F.col("q_norm") * F.col("c_norm"))).alias("cosine_raw"))
     )
-    return _rank_topk(scored, k)
+    return _rank_topk(scored, KNN_K)
 
 
 # --- embedding-cosine near-duplicate detection -------------------------------
@@ -178,7 +188,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
 # small-scale oracle) and a random-hyperplane LSH form whose shuffle
 # key is a signature band — never a vector pair — for the 100 TB path.
 
-def cosine_pairs(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
+def cosine_pairs(emb: DataFrame) -> DataFrame:
     """Exact all-pairs cosine near-dup → (id_a, id_b, cosine ≥ t).
 
     A theta self-join (id_a < id_b) scored with JVM array intrinsics:
@@ -197,7 +207,7 @@ def cosine_pairs(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
         .select("id_a", "id_b",
                 F.round(_dot(F.col("va"), F.col("vb"))
                         / (F.col("na") * F.col("nb")), 6).alias("cosine"))
-        .where(F.col("cosine") >= threshold)
+        .where(F.col("cosine") >= COSINE_THRESHOLD)
     )
 
 
@@ -308,7 +318,7 @@ def _lsh_band_verify(s: DataFrame, n_bits: int, bands: int,
     )
 
 
-def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
+def embedding_lsh_pairs(emb: DataFrame) -> DataFrame:
     """Random-hyperplane LSH near-dup pairs → (id_a, id_b, cosine ≥ t).
 
     SimHash-for-vectors: sgn(v·h_i) bits from ``LSH_BITS`` seeded
@@ -334,7 +344,7 @@ def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
                     F.col("embedding").alias("v"))
          .where(F.col("v").isNotNull())
          .withColumn("sig", sig("v")))
-    return _lsh_band_verify(s, LSH_BITS, LSH_BANDS, threshold)
+    return _lsh_band_verify(s, LSH_BITS, LSH_BANDS, COSINE_THRESHOLD)
 
 
 def _pinned_sign_planes(dim: int, n_bits: int) -> np.ndarray:
@@ -383,8 +393,7 @@ def _pinned_sig_udf(mat: np.ndarray):
     return sig
 
 
-def embedding_lsh_pairs_pinned(emb: DataFrame,
-                               threshold: float = 0.4) -> DataFrame:
+def embedding_lsh_pairs_pinned(emb: DataFrame) -> DataFrame:
     """The oracle-checkable face of ``embedding_lsh_pairs``: identical
     band-join-verify dataflow, but the Gaussian hyperplanes are
     replaced by the md5-pinned ±1 sign planes over int8-quantized
@@ -399,7 +408,7 @@ def embedding_lsh_pairs_pinned(emb: DataFrame,
                     F.col("embedding").alias("v"))
          .where(F.col("v").isNotNull())
          .withColumn("sig", sig("v")))
-    return _lsh_band_verify(s, LSH_BITS, LSH_BANDS, threshold)
+    return _lsh_band_verify(s, LSH_BITS, LSH_BANDS, COSINE_THRESHOLD)
 
 
 def quantize_embeddings(emb: DataFrame, round_scale: bool = True) -> DataFrame:
@@ -434,26 +443,25 @@ def quantize_embeddings(emb: DataFrame, round_scale: bool = True) -> DataFrame:
     )
 
 
-def quantized_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-                   rerank_factor: int = 4) -> DataFrame:
+def quantized_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Top-k cosine search over the int8-QUANTIZED corpus with exact
     rerank → (query_id, neighbor_id, cosine, rank).
 
     Two stages: (1) score dequantized codes against the broadcast
-    queries and keep ``rerank_factor·k`` candidates per query — at
+    queries and keep ``RERANK_FACTOR·KNN_K`` candidates per query — at
     scale this stage scans the codes table, 4× smaller than the float
     corpus, which is the point of quantizing; (2) join the short
-    candidate list (bounded: rerank_factor·k rows per query) back to
+    candidate list (bounded: RERANK_FACTOR·KNN_K rows per query) back to
     the float vectors and rerank by exact cosine. Reported cosines are
     therefore exact; only RECALL is approximate, bounded by how often
     a true top-k neighbor falls outside the quantized top
-    ``rerank_factor·k`` (property-tested ≥ 0.9 at the defaults).
+    ``RERANK_FACTOR·KNN_K`` (property-tested ≥ 0.9 at the defaults).
     """
     deq = quantize_embeddings(corpus, round_scale=False).select(
         "vec_id",
         F.transform("codes",
                     lambda c: c * F.col("scale") / 127.0).alias("embedding"))
-    cand = cosine_topk(deq, queries, k=rerank_factor * k) \
+    cand = cosine_topk(deq, queries, k=RERANK_FACTOR * KNN_K) \
         .select("query_id", "neighbor_id")
     c = with_l2_norm(corpus.select(F.col("vec_id").alias("neighbor_id"),
                                    F.col("embedding").alias("c_vec")),
@@ -466,7 +474,7 @@ def quantized_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                       (_dot(F.col("q_vec"), F.col("c_vec"))
                        / (F.col("q_norm") * F.col("c_norm")))
                       .alias("cosine_raw")))
-    return _rank_topk(scored, k)
+    return _rank_topk(scored, KNN_K)
 
 
 def semantic_dedup(emb: DataFrame, centroids: DataFrame,
@@ -581,8 +589,8 @@ def embedding_gram(emb: DataFrame) -> DataFrame:
                     F.round(F.col("_s") / F.col("_n"), 6).alias("value")))
 
 
-def pca_components(emb: DataFrame, n_components: int = 8) -> "np.ndarray":
-    """Exact corpus PCA basis -> (n_components, d) ndarray: top
+def pca_components(emb: DataFrame) -> "np.ndarray":
+    """Exact corpus PCA basis -> (PCA_COMPONENTS, d) ndarray: top
     eigenvectors of the covariance, computed from ONE distributed pass.
 
     Composition of :func:`embedding_gram`: cov = E[v v^T] - mean
@@ -598,16 +606,13 @@ def pca_components(emb: DataFrame, n_components: int = 8) -> "np.ndarray":
     """
     import numpy as np
 
-    if n_components <= 0:
-        raise ValueError(
-            f"n_components must be positive, got {n_components}")
     first = (emb.select("embedding").where(F.col("embedding").isNotNull())
              .first())
     if first is None:
         raise ValueError("no non-null vectors to fit PCA on")
     d = len(first[0])
-    if n_components > d:
-        raise ValueError(f"n_components {n_components} > dim {d}")
+    if PCA_COMPONENTS > d:
+        raise ValueError(f"n_components {PCA_COMPONENTS} > dim {d}")
     gram = {(r.i, r.j): r.value
             for r in embedding_gram(emb).collect()}
     nn = emb.where(F.col("embedding").isNotNull())
@@ -623,7 +628,7 @@ def pca_components(emb: DataFrame, n_components: int = 8) -> "np.ndarray":
         g[j - 1, i - 1] = v
     cov = g - np.outer(mean, mean)
     vals, vecs = np.linalg.eigh(cov)          # ascending
-    comps = vecs[:, ::-1][:, :n_components].T  # (k, d), top-down
+    comps = vecs[:, ::-1][:, :PCA_COMPONENTS].T  # (k, d), top-down
     for r in range(comps.shape[0]):
         if comps[r, np.argmax(np.abs(comps[r]))] < 0:
             comps[r] = -comps[r]
@@ -745,37 +750,36 @@ def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 5,
 
 
 def ivf_topk_pinned(corpus: DataFrame, queries: DataFrame, k: int = 10,
-                    n_lists: int = 16, nprobe: int = 4,
                     cent_below: int | None = None) -> DataFrame:
     """IVF approximate top-k cosine with FIXED centroids — the oracle
     face of :func:`ivf_topk`, same schema as ``cosine_topk``.
 
     The Lloyd/PQ fixed-centroid move applied to IVF: centroids are the
-    first ``n_lists`` corpus vectors, so list assignment, probing and
+    first ``IVF_N_LISTS`` corpus vectors, so list assignment, probing and
     scoring are ALL relational JVM expressions (no sampled k-means, no
     Arrow kernel) and a DuckDB oracle reproduces the entire dataflow —
     assignment argmin (squared L2, list-id tiebreak, the
-    ``embedding_lloyd_round`` convention), per-query ``nprobe``
+    ``embedding_lloyd_round`` convention), per-query ``IVF_NPROBE``
     nearest lists, exact cosine over only the probed lists. Recall vs
     the exact scan is a property of the geometry, identical in both
     engines, so the face value-checks the IVF DATAFLOW exactly while
     ``ivf_topk`` keeps the production trained-codebook path.
 
-    Scale shape identical to the production face: the n_lists-row
+    Scale shape identical to the production face: the IVF_N_LISTS-row
     centroid table broadcasts into one argmin per corpus vector, the
     probe join is an equi-join on list_id, and only probed lists are
     scored — never an all-pairs scan.
 
     ``cent_below`` widens the pinned-centroid rule for corpora whose
     id space doesn't start at 0 (the mutual-NN sides): centroids are
-    the corpus rows with ``id < cent_below`` (default ``n_lists``) —
+    the corpus rows with ``id < cent_below`` (default ``IVF_N_LISTS``) —
     still a pure predicate both engines state identically, and the
     list count is however many corpus rows match (sparse id spaces
     yield fewer, denser never more than the cap by construction of
     the caller's choice).
     """
     cents = (corpus.where(F.col("vec_id") < (cent_below if cent_below
-                                           is not None else n_lists))
+                                           is not None else IVF_N_LISTS))
              .select(F.col("vec_id").cast("int").alias("list_id"),
                      F.col("embedding").cast("array<double>").alias("cv")))
 
@@ -796,14 +800,15 @@ def ivf_topk_pinned(corpus: DataFrame, queries: DataFrame, k: int = 10,
                         "v"))
     q = queries.select(F.col("vec_id").alias("query_id"),
                        F.col("embedding").cast("array<double>").alias("qv"))
-    # nprobe nearest lists per query: bounded n_lists rows per query,
+    # IVF_NPROBE nearest lists per query: bounded IVF_N_LISTS rows per
+    # query,
     # query-keyed window — no global funnel
     wp = W.partitionBy("query_id").orderBy(F.col("_d"), F.col("list_id"))
     probes = (q.crossJoin(F.broadcast(cents))
               .select("query_id", "qv", F.col("list_id"),
                       sq_l2(F.col("qv")).alias("_d"))
               .withColumn("_pr", F.row_number().over(wp))
-              .where(F.col("_pr") <= nprobe)
+              .where(F.col("_pr") <= IVF_NPROBE)
               .select("query_id", "qv", "list_id"))
     scored = (probes.join(assigned, "list_id")
               .where(F.col("query_id") != F.col("neighbor_id"))
@@ -864,7 +869,6 @@ def reciprocal_best_match(side_a: DataFrame, side_b: DataFrame) -> DataFrame:
 
 
 def reciprocal_best_match_ivf(side_a: DataFrame, side_b: DataFrame,
-                              nprobe: int = 4, cent_below_b: int = 16,
                               cent_below_a: int = 16) -> DataFrame:
     """Mutual nearest neighbors with BOTH directions routed through
     the pinned-IVF index (E172) → ``(id_a, id_b, cosine)``.
@@ -872,19 +876,18 @@ def reciprocal_best_match_ivf(side_a: DataFrame, side_b: DataFrame,
     The 100 TB path for pipeline-embedded mutual-NN:
     :func:`reciprocal_best_match` scans the big side exactly (the
     honest run-once audit), while this variant scores each direction
-    against only the ``nprobe`` probed lists — per-query work is
-    ``nprobe / n_lists`` of the corpus, the IVF contract. The recall
-    cost of probing is MEASURED, not assumed: the ``knn_eval_reciprocal``
-    gate scores these pairs against the exact mutual set. Same
-    disjoint-id contract as the exact form.
+    against only the ``IVF_NPROBE`` probed lists — per-query work is
+    ``IVF_NPROBE / IVF_N_LISTS`` of the corpus, the IVF contract. The
+    recall cost of probing is MEASURED, not assumed: the
+    ``knn_eval_reciprocal`` gate scores these pairs against the exact
+    mutual set. Same disjoint-id contract as the exact form.
 
-    ``cent_below_a`` / ``cent_below_b`` pin each side's centroid set
-    (rows with id below the bound — the sides' id spaces differ, so
-    one ``n_lists`` rule can't serve both); list assignment, probing
-    and scoring stay fully relational, hence oracle-checkable.
+    ``cent_below_a`` pins A's centroid set (rows with id below the
+    bound; B's are its rows with id below ``IVF_N_LISTS`` — the sides'
+    id spaces differ, so one rule can't serve both); list assignment,
+    probing and scoring stay fully relational, hence oracle-checkable.
     """
-    fwd = (ivf_topk_pinned(side_b, side_a, k=1, nprobe=nprobe,
-                           cent_below=cent_below_b)
+    fwd = (ivf_topk_pinned(side_b, side_a, k=1)
            .select(F.col("query_id").alias("id_a"),
                    F.col("neighbor_id").alias("id_b"),
                    F.col("cosine").alias("cosine"))
@@ -893,8 +896,7 @@ def reciprocal_best_match_ivf(side_a: DataFrame, side_b: DataFrame,
     # reciprocal_best_match)
     cand = (side_b.join(
         fwd.select(F.col("id_b").alias("vec_id")).distinct(), "vec_id"))
-    back = (ivf_topk_pinned(side_a, cand, k=1, nprobe=nprobe,
-                            cent_below=cent_below_a)
+    back = (ivf_topk_pinned(side_a, cand, k=1, cent_below=cent_below_a)
             .select(F.col("query_id").alias("id_b"),
                     F.col("neighbor_id").alias("id_a")))
     return fwd.join(back, ["id_a", "id_b"]).select("id_a", "id_b",
@@ -950,7 +952,7 @@ def centroid_drift(base: DataFrame, cur: DataFrame) -> DataFrame:
                     F.round(-F.col("_t.s"), 6).alias("top_dim_shift")))
 
 
-def hubness_report(emb: DataFrame, k: int = 10) -> DataFrame:
+def hubness_report(emb: DataFrame) -> DataFrame:
     """Hubness diagnostic of the exact k-NN graph (E197) → ONE row
     ``(n_vectors, k, max_in_degree, n_antihubs, skewness)``.
 
@@ -973,7 +975,7 @@ def hubness_report(emb: DataFrame, k: int = 10) -> DataFrame:
     paths route through the IVF faces, and hubness on a larger corpus
     is measured on a deterministic id-ordered sample.
     """
-    nn = cosine_topk(emb, emb, k=k)
+    nn = cosine_topk(emb, emb, k=KNN_K)
     indeg = nn.groupBy(F.col("neighbor_id").alias("_id")).agg(
         F.count("*").cast("long").alias("_d"))
     full = (emb.select(F.col("vec_id").alias("_id"))
@@ -995,21 +997,20 @@ def hubness_report(emb: DataFrame, k: int = 10) -> DataFrame:
     # engines' pow() libraries may differ in the last ulp, plain * and
     # sqrt are IEEE-pinned
     return m.select(
-        "n_vectors", F.lit(k).cast("long").alias("k"),
+        "n_vectors", F.lit(KNN_K).cast("long").alias("k"),
         "max_in_degree", "n_antihubs",
         F.when(var > 0, F.round(m3 / (var * F.sqrt(var)), 6))
         .alias("skewness"))
 
 
-def prefix_dim_recall(emb: DataFrame, k: int = 10, prefix: int = 32,
-                      n_queries: int = 20) -> DataFrame:
+def prefix_dim_recall(emb: DataFrame) -> DataFrame:
     """Matryoshka prefix-dimension retrieval gate (E198) → ONE row
     ``(n_queries, k, prefix_dim, recall)``.
 
     The rollout question for truncatable (MRL-style) embeddings: "if
-    we keep only the first ``prefix`` of ``dim`` coordinates — half
-    the storage, half the FLOPs — what fraction of the full-dimension
-    top-k do we still retrieve?" recall = |top_k(prefix) ∩
+    we keep only the first ``RECALL_PREFIX_DIM`` of ``dim``
+    coordinates — half the storage, half the FLOPs — what fraction of
+    the full-dimension top-k do we still retrieve?" recall = |top_k(prefix) ∩
     top_k(full)| / k averaged over the pinned query set, the same
     pair-set metric as the IVF gate so the two readouts compare.
 
@@ -1019,12 +1020,13 @@ def prefix_dim_recall(emb: DataFrame, k: int = 10, prefix: int = 32,
     prefix side SLICES the stored vector in-plan; no second embedding
     table is materialized.
     """
-    queries = emb.where(F.col("vec_id") < n_queries)
-    full = cosine_topk(emb, queries, k=k)
+    queries = emb.where(F.col("vec_id") < RECALL_QUERIES)
+    full = cosine_topk(emb, queries, k=KNN_K)
     pemb = emb.select("vec_id",
-                      F.slice("embedding", 1, prefix).alias("embedding"))
-    pq = pemb.where(F.col("vec_id") < n_queries)
-    pref = cosine_topk(pemb, pq, k=k)
+                      F.slice("embedding", 1, RECALL_PREFIX_DIM)
+                      .alias("embedding"))
+    pq = pemb.where(F.col("vec_id") < RECALL_QUERIES)
+    pref = cosine_topk(pemb, pq, k=KNN_K)
     hits = (full.select("query_id", "neighbor_id")
             .join(pref.select("query_id", "neighbor_id"),
                   ["query_id", "neighbor_id"])
@@ -1034,11 +1036,12 @@ def prefix_dim_recall(emb: DataFrame, k: int = 10, prefix: int = 32,
              .select(F.coalesce(F.col("_h"), F.lit(0)).alias("_h")))
     return per_q.agg(
         F.count("*").cast("long").alias("n_queries"),
-        F.lit(k).alias("k"), F.lit(prefix).alias("prefix_dim"),
-        F.round(F.sum("_h") / (F.count("*") * k), 6).alias("recall"))
+        F.lit(KNN_K).alias("k"),
+        F.lit(RECALL_PREFIX_DIM).alias("prefix_dim"),
+        F.round(F.sum("_h") / (F.count("*") * KNN_K), 6).alias("recall"))
 
 
-def triplet_mining(emb: DataFrame, anchors_below: int = 30) -> DataFrame:
+def triplet_mining(emb: DataFrame) -> DataFrame:
     """Hardest-positive / semi-hard-negative triplet mining (E199) →
     one row per anchor: ``(anchor_id, pos_id, pos_cos, neg_id,
     neg_cos, margin)``.
@@ -1065,7 +1068,8 @@ def triplet_mining(emb: DataFrame, anchors_below: int = 30) -> DataFrame:
     anchors = emb.select(F.col("vec_id").alias("_aid"),
                          F.col("label").alias("_alab"),
                          F.col("embedding").alias("_avec"))
-    anchors = with_l2_norm(anchors.where(F.col("_aid") < anchors_below),
+    anchors = with_l2_norm(anchors.where(F.col("_aid")
+                                         < TRIPLET_ANCHORS_BELOW),
                            "_avec", "_anorm")
     cand = with_l2_norm(
         emb.select(F.col("vec_id").alias("_cid"),
@@ -1099,8 +1103,7 @@ def triplet_mining(emb: DataFrame, anchors_below: int = 30) -> DataFrame:
                     .alias("margin")))
 
 
-def rp_distortion(emb: DataFrame, target_dim: int = 16,
-                  offsets: tuple = (1, 7, 49)) -> DataFrame:
+def rp_distortion(emb: DataFrame) -> DataFrame:
     """Johnson-Lindenstrauss random-projection distortion audit
     (E200) → ONE row ``(n_pairs, target_dim, mean_ratio, min_ratio,
     max_ratio)``.
@@ -1124,9 +1127,9 @@ def rp_distortion(emb: DataFrame, target_dim: int = 16,
     """
     spark = emb.sparkSession
     dim = len(emb.select("embedding").first()[0])
-    proj = (spark.range(dim * target_dim)
-            .select((F.col("id") / target_dim).cast("long").alias("_i"),
-                    (F.col("id") % target_dim).alias("_j")))
+    proj = (spark.range(dim * RP_TARGET_DIM)
+            .select((F.col("id") / RP_TARGET_DIM).cast("long").alias("_i"),
+                    (F.col("id") % RP_TARGET_DIM).alias("_j")))
     u = F.conv(F.substring(
         F.md5(F.concat_ws(":", F.lit("rp"),
                           F.col("_i").cast("string"),
@@ -1143,7 +1146,7 @@ def rp_distortion(emb: DataFrame, target_dim: int = 16,
               .alias("_y")))
     ids = emb.select(F.col("vec_id").alias("_a"))
     pairs = None
-    for off in offsets:
+    for off in RP_OFFSETS:
         p = ids.join(emb.select((F.col("vec_id") - off).alias("_a"),
                                 F.col("vec_id").alias("_b")), "_a")
         pairs = p if pairs is None else pairs.unionByName(p)
@@ -1169,19 +1172,17 @@ def rp_distortion(emb: DataFrame, target_dim: int = 16,
                         * (F.col("_ya") - F.col("_yb"))).alias("_p2")))
     ratios = (dorig.join(dproj, ["_a", "_b"])
               .where(F.col("_d2") > 0)
-              .select((F.col("_p2") / (F.lit(float(target_dim))
+              .select((F.col("_p2") / (F.lit(float(RP_TARGET_DIM))
                                        * F.col("_d2"))).alias("_r")))
     return ratios.agg(
         F.count("*").cast("long").alias("n_pairs"),
-        F.lit(target_dim).alias("target_dim"),
+        F.lit(RP_TARGET_DIM).alias("target_dim"),
         F.round(F.avg("_r"), 6).alias("mean_ratio"),
         F.round(F.min("_r"), 6).alias("min_ratio"),
         F.round(F.max("_r"), 6).alias("max_ratio"))
 
 
-def label_silhouette(df: DataFrame, label_col: str = "label",
-                     vec_col: str = "embedding",
-                     id_col: str = "vec_id") -> DataFrame:
+def label_silhouette(df: DataFrame) -> DataFrame:
     """Representative-based silhouette per label (E222) → one row per
     label: ``(label, n, mean_a, mean_b, mean_s)``.
 
@@ -1214,9 +1215,9 @@ def label_silhouette(df: DataFrame, label_col: str = "label",
     is the final per-label mean. Labels must be non-null and the
     label alphabet driver-bounded (it is k, not corpus size).
     """
-    base = df.select(F.col(label_col).alias("_l"),
-                     F.col(vec_col).alias("_v"),
-                     F.col(id_col).alias("_id"))
+    base = df.select(F.col("label").alias("_l"),
+                     F.col("embedding").alias("_v"),
+                     F.col("vec_id").alias("_id"))
     reps = sorted(
         base.groupBy("_l").agg(F.min_by("_v", "_id").alias("_rep"))
         .collect(), key=lambda r: str(r._l))
@@ -1257,10 +1258,10 @@ def label_silhouette(df: DataFrame, label_col: str = "label",
         F.when(F.count("_sm") > 0,
                F.round(F.sum("_sm") / 1e6 / F.count("_sm"), 6))
         .alias("mean_s"))
-        .withColumnRenamed("_l", label_col))
+        .withColumnRenamed("_l", "label"))
 
 
-def top_eigenvector(emb: DataFrame, rounds: int = 5) -> DataFrame:
+def top_eigenvector(emb: DataFrame) -> DataFrame:
     """Top principal direction of the embedding Gram matrix via power
     iteration (E224) → one row per dimension: ``(dim, component,
     rayleigh)`` with the Rayleigh quotient repeated per row.
@@ -1305,13 +1306,13 @@ def top_eigenvector(emb: DataFrame, rounds: int = 5) -> DataFrame:
     # tops out at 1.7e38 — guard with margin
     rowsum = max(sum(abs(G[i][j]) for j in range(1, dim + 1))
                  for i in range(1, dim + 1))
-    if rowsum and rowsum ** rounds >= 10 ** 38:
+    if rowsum and rowsum ** EIGEN_ROUNDS >= 10 ** 38:
         raise ValueError(
             f"power iteration would overflow the oracle's HUGEINT: "
-            f"(max row L1 of G_micro)^rounds = {rowsum}^{rounds}; "
-            f"reduce rounds or rescale the vectors")
+            f"(max row L1 of G_micro)^rounds = {rowsum}^{EIGEN_ROUNDS}; "
+            f"reduce EIGEN_ROUNDS or rescale the vectors")
     v_int = [1] * (dim + 1)
-    for _ in range(rounds):
+    for _ in range(EIGEN_ROUNDS):
         v_int = [0] + [
             sum(G[i][j] * v_int[j] for j in range(1, dim + 1))
             for i in range(1, dim + 1)]

@@ -9,17 +9,17 @@ need user-side salting at extreme skew, and both are provided here:
 
 * ``salted_join``: a hot fact key overwhelms one reducer in a
   shuffle-hash/sort-merge join and the dim side is too big to
-  broadcast. Replicate each dim row across ``n_salts`` synthetic keys
+  broadcast. Replicate each dim row across ``N_SALTS`` synthetic keys
   and scatter fact rows uniformly over them: the hot key's rows now
-  land on ``n_salts`` reducers. Dim-side cost is a bounded ×n_salts
+  land on ``N_SALTS`` reducers. Dim-side cost is a bounded ×N_SALTS
   blowup (explode — no driver work); result is exactly the plain
   inner join.
 * ``salted_count_distinct``: COUNT(DISTINCT x) GROUP BY k cannot
   map-side-combine, so a hot k funnels every distinct x through one
-  reducer. Salting by ``hash(x) % n_salts`` partitions the *distinct
+  reducer. Salting by ``hash(x) % N_SALTS`` partitions the *distinct
   value space* disjointly, so per-(k, salt) exact distinct counts SUM
   to the exact per-k answer — two cheap hash aggregates, no
-  approximation, hot key spread over n_salts reducers.
+  approximation, hot key spread over N_SALTS reducers.
 """
 
 from __future__ import annotations
@@ -27,8 +27,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+N_SALTS = 8  # salts that spread a hot key over reducers
+SKEW_TOP_N = 10  # hottest keys skew_report lists per column
 
-def salted_join(fact: DataFrame, dim: DataFrame, key: str, n_salts: int = 8,
+
+def salted_join(fact: DataFrame, dim: DataFrame, key: str,
                 salt_col: Column | None = None) -> DataFrame:
     """Inner equi-join on ``key`` with the fact side salted.
 
@@ -39,33 +42,32 @@ def salted_join(fact: DataFrame, dim: DataFrame, key: str, n_salts: int = 8,
     ``dim`` must be disjoint apart from ``key``.
     """
     if salt_col is None:
-        salt_col = (F.rand(42) * n_salts).cast("int")
+        salt_col = (F.rand(42) * N_SALTS).cast("int")
     f = fact.withColumn("_salt", salt_col)
     d = dim.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)])))
+        "_salt", F.explode(F.array(*[F.lit(i) for i in range(N_SALTS)])))
     out = f.join(d, [key, "_salt"]).drop("_salt")
     return out
 
 
-def salted_count_distinct(df: DataFrame, group_col: str, distinct_col: str,
-                          n_salts: int = 8) -> DataFrame:
+def salted_count_distinct(df: DataFrame, group_col: str,
+                          distinct_col: str) -> DataFrame:
     """Exact COUNT(DISTINCT distinct_col) GROUP BY group_col, salted.
 
-    Stage 1 groups by ``(group_col, hash(distinct_col) % n_salts)`` —
+    Stage 1 groups by ``(group_col, hash(distinct_col) % N_SALTS)`` —
     disjoint value partitions, so stage 2's SUM of the per-salt
     distinct counts is exact, not an estimate.
     """
     partial = (df.select(group_col, F.col(distinct_col).alias("_v"))
                .withColumn("_salt", F.pmod(F.xxhash64(F.col("_v")),
-                                           F.lit(n_salts)))
+                                           F.lit(N_SALTS)))
                .groupBy(group_col, "_salt")
                .agg(F.count_distinct("_v").alias("_pc")))
     return (partial.groupBy(group_col)
             .agg(F.sum("_pc").alias("n_distinct")))
 
 
-def skew_report(df: DataFrame, key_cols: list[str],
-                top_n: int = 10) -> DataFrame:
+def skew_report(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """Key-skew diagnosis -> (key_col, key_value, cnt, rank,
     n_distinct, skew_factor): per candidate shuffle key, the top-N
     heaviest values plus how far the heaviest exceeds a uniform
@@ -81,8 +83,6 @@ def skew_report(df: DataFrame, key_cols: list[str],
     no single-reducer stage anywhere; key values are stringified so
     heterogeneous columns union into one tidy report.
     """
-    if top_n <= 0:
-        raise ValueError(f"top_n must be positive, got {top_n}")
     if not key_cols:
         raise ValueError("key_cols must not be empty")
     out = None
@@ -94,7 +94,7 @@ def skew_report(df: DataFrame, key_cols: list[str],
             F.sum("cnt").alias("_total"),
             F.max("cnt").alias("_mx"))
         top = (counts.orderBy(F.col("cnt").desc(), F.col("key_value"))
-               .limit(top_n)
+               .limit(SKEW_TOP_N)
                .withColumn("rank", F.row_number().over(
                    Window.orderBy(F.col("cnt").desc(),
                                   F.col("key_value")))))

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 BUCKET_CHARS = 4  # md5 hex digits behind each split or copy draw
 SPLIT_FRACTIONS = {"train": 0.8, "val": 0.1, "test": 0.1}
+TEMPERATURE_ALPHA = 0.5  # source sizes are resampled to n_s^alpha
 
 
 def split_thresholds(fractions: dict[str, float]) -> list[tuple[str, str]]:
@@ -127,12 +128,13 @@ def mix_sources(df: DataFrame, rates: dict[str, float],
             .withColumn("keep", bucket < thresh))
 
 
-def temperature_resample(df: DataFrame, alpha: float = 0.5) -> DataFrame:
+def temperature_resample(df: DataFrame) -> DataFrame:
     """Deterministic temperature-based source UP-sampling → one output
     row per copy, with ``(multiplicity, n_copies, copy)`` attached.
 
     The multilingual/low-resource mixing rule (XLM-R, mT5, Gopher data
-    recipes): sample source s proportionally to ``n_s^alpha``, i.e.
+    recipes): sample source s proportionally to ``n_s^alpha``
+    (``TEMPERATURE_ALPHA``), i.e.
     give each of its documents multiplicity ``m_s = (n_max/n_s)^(1-α)``
     — the largest source stays at 1 copy, smaller sources are
     upsampled toward balance as α → 0 (α = 1 is the natural mix,
@@ -153,8 +155,6 @@ def temperature_resample(df: DataFrame, alpha: float = 0.5) -> DataFrame:
     broadcast back; replication is a narrow ``explode(sequence)`` —
     the corpus itself never shuffles.
     """
-    if not 0 < alpha <= 1:
-        raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     space = 16 ** BUCKET_CHARS
 
     # NULL sources form their own group under groupBy, but an inner
@@ -167,7 +167,8 @@ def temperature_resample(df: DataFrame, alpha: float = 0.5) -> DataFrame:
     counts = df.groupBy("_srckey").agg(F.count("*").alias("_ns"))
     nmax = counts.agg(F.max("_ns").alias("_nmax"))
     ratio = F.col("_nmax") / F.col("_ns")
-    m = F.sqrt(ratio) if alpha == 0.5 else F.pow(ratio, F.lit(1.0 - alpha))
+    m = (F.sqrt(ratio) if TEMPERATURE_ALPHA == 0.5
+         else F.pow(ratio, F.lit(1.0 - TEMPERATURE_ALPHA)))
     stats = (counts.crossJoin(F.broadcast(nmax))
              .select("_srckey",
                      F.round(m, 6).alias("multiplicity"),

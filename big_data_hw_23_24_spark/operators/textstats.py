@@ -19,6 +19,17 @@ NOVELTY_N = 3  # words per novelty n-gram
 REPEAT_SPAN_N = 8  # words per repeated-span n-gram
 REPEAT_MIN_DOCS = 2  # distinct documents that make a span repeated
 NGRAM_MIN_COUNT = 2  # occurrences ngram_count_table keeps
+BOILERPLATE_MIN_DOCS = 3  # distinct documents that make an n-gram boilerplate
+WINNOW_K = 4  # chars per gram of winnow_overlap_pairs
+WINNOW_W = 5  # winnowing window of winnow_overlap_pairs
+TFIDF_K = 3  # terms tfidf_top_terms keeps per document
+PMI_MIN_COUNT = 5  # support floor of a PMI collocation
+PMI_K = 20  # collocations pmi_collocations returns
+RAKE_K = 3  # keyphrases rake_keyphrases keeps per document
+K_ANONYMITY = 5  # smallest equivalence class that is not at risk
+COMPLETION_WORDS = 2  # words per prefix_completions completion
+COMPLETION_PREFIX_LEN = 3  # chars per prefix_completions prefix
+COMPLETION_K = 3  # completions kept per prefix
 
 # Tiny per-language stopword profiles for the heuristic detector.
 # Deliberately small + hard-coded: language ID at scale wants a real
@@ -114,7 +125,7 @@ def detect_language(docs: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
     """Top-k TF-IDF terms per document → (doc_id, term, tf, df, tfidf, rank).
 
     Classic corpus weighting a training-data pipeline uses for keyword
@@ -149,7 +160,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(score.desc(), F.col("term"))
     return (tf.join(df, "term")
             .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
+            .where(F.col("rank") <= TFIDF_K)
             .select("doc_id", "term", "tf", "df",
                     F.round(score, 6).alias("tfidf"), "rank"))
 
@@ -353,7 +364,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 4, w: int = 5,
     return base if keep_selection else base.drop("selected")
 
 
-def winnow_overlap_pairs(docs: DataFrame, k: int = 4, w: int = 5) -> DataFrame:
+def winnow_overlap_pairs(docs: DataFrame) -> DataFrame:
     """Document-overlap candidates from winnowed fingerprints — the
     MOSS comparison step: explode each document's selected hashes into
     an inverted index, equi-join on the hash, and score each pair by
@@ -364,7 +375,7 @@ def winnow_overlap_pairs(docs: DataFrame, k: int = 4, w: int = 5) -> DataFrame:
     cost is Σ df(h)² over the selected hashes, the inverted-index
     shape that survives corpus scale.
     """
-    s = winnow_fingerprints(docs, k, w, keep_selection=True)
+    s = winnow_fingerprints(docs, WINNOW_K, WINNOW_W, keep_selection=True)
     ex = s.select(F.col("doc_id"), F.col("n_selected"),
                   F.explode("selected").alias("_h"))
     a = ex.select(F.col("doc_id").alias("id_a"),
@@ -528,14 +539,13 @@ def pii_scan(docs: DataFrame) -> DataFrame:
     )
 
 
-def contamination_scan(docs: DataFrame, benchmark: DataFrame,
-                       n: int = 8) -> DataFrame:
+def contamination_scan(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination: per-document count of word n-grams
     shared with ANY benchmark document → (doc_id, n_shared, contaminated).
 
     The eval-set contamination check a training pipeline runs before
     training: documents overlapping the benchmark in ≥1 long n-gram
-    (8 by default, the common convention) are flagged for exclusion.
+    (``DECONTAM_N`` = 8, the common convention) are flagged for exclusion.
 
     Scale shape: the benchmark side reduces to its DISTINCT shingle set
     — eval suites are tiny next to a corpus — and is broadcast, so the
@@ -545,9 +555,9 @@ def contamination_scan(docs: DataFrame, benchmark: DataFrame,
     """
     from .dedup import word_shingles
 
-    doc_sh = (word_shingles(docs.select("doc_id", "text"), n=n)
+    doc_sh = (word_shingles(docs.select("doc_id", "text"), n=DECONTAM_N)
               .select("doc_id", F.explode("shingles").alias("shingle")))
-    bench_sh = (word_shingles(benchmark.select("text"), n=n)
+    bench_sh = (word_shingles(benchmark.select("text"), n=DECONTAM_N)
                 .select(F.explode("shingles").alias("shingle"))
                 .distinct())
     hits = (doc_sh.join(F.broadcast(bench_sh), "shingle", "left_semi")
@@ -583,10 +593,10 @@ def _ngram_pairs(docs: DataFrame, n: int, text_col: str,
             .groupBy(id_col, "ngram").agg(F.count("*").alias("c")))
 
 
-def boilerplate_ngrams(docs: DataFrame, n: int = 8,
-                       min_docs: int = 3) -> DataFrame:
+def boilerplate_ngrams(docs: DataFrame) -> DataFrame:
     """Corpus-wide repeated-n-gram mining → (ngram, n_docs, n_occ):
-    every word n-gram appearing in at least ``min_docs`` distinct
+    every word ``REPEAT_SPAN_N``-gram appearing in at least
+    ``BOILERPLATE_MIN_DOCS`` distinct
     documents — headers, footers, license blocks, navigation chrome —
     the map stage of repeated-paragraph removal (CCNet/RefinedWeb-style
     boilerplate cleaning; the cross-document sibling of the in-document
@@ -594,14 +604,14 @@ def boilerplate_ngrams(docs: DataFrame, n: int = 8,
 
     Scale shape: the (doc, ngram) aggregate bounds the second shuffle
     to one row per distinct pair, and the output is threshold-pruned;
-    raise ``min_docs`` with corpus size so the mined set stays
+    raise ``BOILERPLATE_MIN_DOCS`` with corpus size so the mined set stays
     broadcastable for ``doc_boilerplate_share``.
     """
-    return (_ngram_pairs(docs, n, "text", "doc_id")
+    return (_ngram_pairs(docs, REPEAT_SPAN_N, "text", "doc_id")
             .groupBy("ngram")
             .agg(F.count("*").alias("n_docs"),
                  F.sum("c").cast("long").alias("n_occ"))
-            .where(F.col("n_docs") >= min_docs))
+            .where(F.col("n_docs") >= BOILERPLATE_MIN_DOCS))
 
 
 def doc_boilerplate_share(docs: DataFrame, n: int = 8, min_docs: int = 3,
@@ -956,11 +966,10 @@ def sentence_pack_chunks(docs: DataFrame, max_tokens: int = 64) -> DataFrame:
                     "n_sentences", "n_chunk_tokens", "chunk_text"))
 
 
-def pmi_collocations(docs: DataFrame, min_count: int = 5,
-                     k: int = 20) -> DataFrame:
+def pmi_collocations(docs: DataFrame) -> DataFrame:
     """Top-k PMI collocations -> (w1, w2, pair_count, pmi, rank): the
     adjacent-bigram pairs whose pointwise mutual information
-    ``ln(p(x,y) / (p(x)·p(y)))`` is highest, with a ``min_count``
+    ``ln(p(x,y) / (p(x)·p(y)))`` is highest, with a ``PMI_MIN_COUNT``
     support floor — the collocation-mining step behind multi-word
     vocabulary entries ("new york"-style merges), tokenizer merge
     candidates beyond character BPE, and phrase-aware indexing.
@@ -977,10 +986,6 @@ def pmi_collocations(docs: DataFrame, min_count: int = 5,
     last-ulp ln() difference can never flip the k boundary; top-k is
     a LIMIT (TakeOrderedAndProject), never a single-reducer window.
     """
-    if min_count < 1:
-        raise ValueError(f"min_count must be >= 1, got {min_count}")
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
     from .util import ensure_fanout, lowered_words
 
     from .dedup import _shifted_gram_zip
@@ -994,7 +999,7 @@ def pmi_collocations(docs: DataFrame, min_count: int = 5,
     base = ensure_fanout(docs)
     pairs = (base.select(F.explode(grams).alias("pair"))
              .groupBy("pair").agg(F.count("*").alias("pair_count"))
-             .where(F.col("pair_count") >= min_count))
+             .where(F.col("pair_count") >= PMI_MIN_COUNT))
     uni = (base.select(F.explode(words).alias("w"))
            .groupBy("w").agg(F.count("*").alias("c")))
     tot = uni.agg(F.sum("c").alias("_t"))
@@ -1019,7 +1024,7 @@ def pmi_collocations(docs: DataFrame, min_count: int = 5,
                                 / ((F.col("_c1") / F.col("_t"))
                                    * (F.col("_c2") / F.col("_t")))), 6)))
     return (scored.orderBy(F.col("pmi").desc(), "w1", "w2")
-            .limit(k)
+            .limit(PMI_K)
             .select("w1", "w2",
                     F.col("pair_count").cast("long").alias("pair_count"),
                     "pmi")
@@ -1254,9 +1259,8 @@ def ngram_count_table(docs: DataFrame) -> DataFrame:
             .where(F.col("cnt") >= NGRAM_MIN_COUNT))
 
 
-def rake_keyphrases(docs: DataFrame, stopwords: list[str],
-                    k: int = 3) -> DataFrame:
-    """RAKE keyphrase extraction (Rose et al. 2010) → top-``k``
+def rake_keyphrases(docs: DataFrame, stopwords: list[str]) -> DataFrame:
+    """RAKE keyphrase extraction (Rose et al. 2010) → top-``RAKE_K``
     ``(doc_id, phrase, n_words, score_milli, rank)`` per document.
 
     Candidate phrases are maximal runs of non-stopwords (the classic
@@ -1328,17 +1332,17 @@ def rake_keyphrases(docs: DataFrame, stopwords: list[str],
                .distinct())
     return grouped_topk(phrases, ["doc_id"],
                         [F.col("score_milli").desc(), F.col("phrase")],
-                        k, rank_col="rank")
+                        RAKE_K, rank_col="rank")
 
 
-def k_anonymity_report(df: DataFrame, quasi_cols: list,
-                       k: int = 5) -> DataFrame:
+def k_anonymity_report(df: DataFrame, quasi_cols: list) -> DataFrame:
     """k-anonymity audit over quasi-identifier columns → one row per
     equivalence class: ``(*quasi_cols, class_size, at_risk)``.
 
     The re-identification audit a dataset release (or a training
     corpus with user-derived metadata) runs BEFORE publication: rows
-    whose quasi-identifier combination is shared by fewer than ``k``
+    whose quasi-identifier combination is shared by fewer than
+    ``K_ANONYMITY``
     records are linkable — their class is flagged ``at_risk``. This is
     the structural complement of the PII regex scans (E26/E86): those
     find direct identifiers IN text, this finds combinations of
@@ -1349,12 +1353,10 @@ def k_anonymity_report(df: DataFrame, quasi_cols: list,
     values group as their own class (standard k-anonymity treatment —
     a null pattern is itself identifying).
     """
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
     cols = [F.col(c) if isinstance(c, str) else c for c in quasi_cols]
     return (df.groupBy(*cols)
             .agg(F.count("*").cast("long").alias("class_size"))
-            .withColumn("at_risk", F.col("class_size") < k))
+            .withColumn("at_risk", F.col("class_size") < K_ANONYMITY))
 
 
 def blocklist_gate(docs: DataFrame, terms: list[str],
@@ -1416,11 +1418,11 @@ def language_confusion(docs: DataFrame) -> DataFrame:
                     .alias("recall")))
 
 
-def prefix_completions(docs: DataFrame, n_words: int = 2, prefix_len: int = 3,
-                       k: int = 3) -> DataFrame:
+def prefix_completions(docs: DataFrame) -> DataFrame:
     """Autocomplete / prefix index (E170) → ``(prefix, rank,
-    completion, n)``: the ``k`` most frequent ``n_words``-word
-    completions per ``prefix_len``-char prefix, ranked by (count desc,
+    completion, n)``: the ``COMPLETION_K`` most frequent
+    ``COMPLETION_WORDS``-word completions per
+    ``COMPLETION_PREFIX_LEN``-char prefix, ranked by (count desc,
     completion asc).
 
     The search-suggestion index build: one narrow map to (prefix,
@@ -1433,17 +1435,17 @@ def prefix_completions(docs: DataFrame, n_words: int = 2, prefix_len: int = 3,
     from .util import lowered_words
 
     words = lowered_words("text")
-    comp = F.array_join(F.slice(words, 1, n_words), " ")
+    comp = F.array_join(F.slice(words, 1, COMPLETION_WORDS), " ")
     base = (docs.select(comp.alias("completion"))
-            .where(F.length("completion") >= prefix_len)
-            .select(F.substring("completion", 1, prefix_len)
+            .where(F.length("completion") >= COMPLETION_PREFIX_LEN)
+            .select(F.substring("completion", 1, COMPLETION_PREFIX_LEN)
                     .alias("prefix"), "completion")
             .groupBy("prefix", "completion")
             .agg(F.count("*").cast("long").alias("n")))
     from .grouped import grouped_topk
 
     top = grouped_topk(base, ["prefix"],
-                       [F.col("n").desc(), F.col("completion")], k)
+                       [F.col("n").desc(), F.col("completion")], COMPLETION_K)
     return top.select("prefix",
                       F.col("rank").cast("int").alias("rank"),
                       "completion", "n")

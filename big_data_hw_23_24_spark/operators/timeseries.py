@@ -31,6 +31,8 @@ MAX_DECAY_DAYS = 19  # age past which an event no longer trends
 SESSION_GAP_MINUTES = 30  # inter-event gap that ends a session
 SESSION_PATH_DEPTH = 3  # event types in a session's opening path
 MAX_SPAN_BUCKETS = 4096  # buckets one interval may explode to
+TRENDING_K = 20  # items trending_items returns
+ATTRIBUTION_LOOKBACK_HOURS = 24  # touches a conversion credits
 
 
 def daily_anomaly_scores(events: DataFrame) -> DataFrame:
@@ -179,9 +181,9 @@ def session_paths(events: DataFrame) -> DataFrame:
             .agg(F.count("*").cast("long").alias("n_sessions")))
 
 
-def trending_items(events: DataFrame, k: int = 20) -> DataFrame:
-    """Time-decayed trending items → top-``k`` ``(item, n_events,
-    decayed_micros)`` by exponentially decayed event counts
+def trending_items(events: DataFrame) -> DataFrame:
+    """Time-decayed trending items → top-``TRENDING_K`` ``(item,
+    n_events, decayed_micros)`` by exponentially decayed event counts
     (half-life = one day).
 
     The freshness-weighted complement of the plain frequent-items
@@ -219,18 +221,17 @@ def trending_items(events: DataFrame, k: int = 20) -> DataFrame:
             .agg(F.count("*").cast("long").alias("n_events"),
                  F.sum("_w").cast("long").alias("decayed_micros"))
             .orderBy(F.col("decayed_micros").desc(), "item")
-            .limit(k))
+            .limit(TRENDING_K))
 
 
 def attribution_report(events: DataFrame, conversion_type: str,
-                       touch_types: list[str],
-                       lookback_hours: int = 24) -> DataFrame:
+                       touch_types: list[str]) -> DataFrame:
     """U-shaped (position-based) multi-touch attribution (E152) →
     ``(channel, n_touches, credit_ppm)``.
 
     The marketing-analytics classic: each conversion distributes one
     unit of credit over the touch events of the same user in the
-    preceding ``lookback_hours`` window — 40% to the first touch, 40%
+    preceding ``ATTRIBUTION_LOOKBACK_HOURS`` — 40% to the first touch, 40%
     to the last, the middle 20% split evenly (1 touch → 100%, 2 →
     50/50). Credit is INTEGER PARTS-PER-MILLION (middle shares floor-
     divided), so the per-channel totals are exact integer sums — no
@@ -249,7 +250,7 @@ def attribution_report(events: DataFrame, conversion_type: str,
     # ticks only ever feed differences and ordering here, so the
     # constant session-tz offset ticks_us may apply cancels out
     us = ticks_us(events)
-    look = lookback_hours * 3_600_000_000
+    look = ATTRIBUTION_LOOKBACK_HOURS * 3_600_000_000
     conv = (events.where(F.col("event_type") == conversion_type)
             .select(F.col("user_id").alias("_u"),
                     F.col("event_id").alias("_cid"), us.alias("_cts")))
@@ -287,8 +288,7 @@ def attribution_report(events: DataFrame, conversion_type: str,
     return att.unionByName(unatt)
 
 
-def calendar_gaps(df: DataFrame, date_col: str,
-                  group_col: str = "event_type") -> DataFrame:
+def calendar_gaps(df: DataFrame, date_col: str) -> DataFrame:
     """Missing-day report per group (E159) → ``(group, gap_start,
     gap_end, n_days)``: runs of consecutive calendar days between each
     group's first and last observed day on which the group produced NO
@@ -306,7 +306,7 @@ def calendar_gaps(df: DataFrame, date_col: str,
     date column round-trips engines with dtype hazards; a string
     doesn't).
     """
-    obs = (df.select(F.col(group_col).alias("grp"),
+    obs = (df.select(F.col("event_type").alias("grp"),
                      F.col(date_col).cast("date").alias("d"))
            .where(F.col("d").isNotNull()).distinct())
     rng = obs.groupBy("grp").agg(F.min("d").alias("_d0"),
@@ -320,7 +320,7 @@ def calendar_gaps(df: DataFrame, date_col: str,
             .agg(F.min("d").cast("string").alias("gap_start"),
                  F.max("d").cast("string").alias("gap_end"),
                  F.count("*").cast("long").alias("n_days"))
-            .select(F.col("grp").alias(group_col),
+            .select(F.col("grp").alias("event_type"),
                     "gap_start", "gap_end", "n_days"))
 
 
@@ -623,7 +623,7 @@ def theilsen_trend(daily: DataFrame, key_cols: list[str], x_col: str,
                     F.round("_icept", 6).alias("intercept")))
 
 
-def peak_concurrency(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def peak_concurrency(events: DataFrame) -> DataFrame:
     """Sweep-line peak session concurrency per day (E203) → one row
     per day: ``(day, peak, peak_minute)``.
 
@@ -631,7 +631,7 @@ def peak_concurrency(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     sessions were OPEN at once, at worst, each day" — the number that
     sizes connection pools and streaming-state stores. Sessions are
     the engine's standard gaps-and-islands sessionization (keyed lag,
-    ``gap_minutes`` rule, event-id tiebreak); each session emits a +1
+    ``SESSION_GAP_MINUTES`` rule, event-id tiebreak); each session emits a +1
     boundary at its first event and a −1 at its last, END-EXCLUSIVE
     (at an equal tick the −1 sorts first, so a session ending exactly
     when another starts never double-counts — within a run of equal
@@ -649,7 +649,7 @@ def peak_concurrency(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
 
     tick = ticks_us(events)
     w = Window.partitionBy("user_id").orderBy(tick, F.col("event_id"))
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = SESSION_GAP_MINUTES * 60 * 1_000_000
     gap = tick - F.lag(tick).over(w)
     new_sess = (gap.isNull() | (gap > gap_us)).cast("int")
     run = w.rowsBetween(Window.unboundedPreceding, 0)

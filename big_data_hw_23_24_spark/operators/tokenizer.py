@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 
 from .textstats import _words
 
+BPE_MERGES = 8  # merges bpe_train learns
+
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, n_occ) over lower-cased space-split tokens — the
@@ -166,9 +168,8 @@ def _merge_pair(symbols, left: str, right: str):
     return F.aggregate(symbols, init, step, finish)
 
 
-def bpe_train(docs: DataFrame,
-              n_merges: int = 8) -> list[tuple[str, str, int]]:
-    """Byte-pair-encoding training: learn ``n_merges`` merges over the
+def bpe_train(docs: DataFrame) -> list[tuple[str, str, int]]:
+    """Byte-pair-encoding training: learn ``BPE_MERGES`` merges over the
     corpus → [(left, right, pair_count), ...] in merge order.
 
     The full iterative BPE loop, Spark-first end to end. The working
@@ -182,12 +183,11 @@ def bpe_train(docs: DataFrame,
     Lineage is truncated every round (localCheckpoint) so the plan
     stays flat across iterations, the connected-components contract.
 
-    No SQL oracle by design (iterative argmax, SURVEY §5's MRFFT
-    category): tests pin the merge sequence to an independent pure-
-    Python BPE reference on planted corpora instead.
+    The registry face ``bpe_learned_merges`` is value-checked against
+    an oracle that unrolls the ``BPE_MERGES`` rounds as CTEs; tests
+    also pin the merge sequence to an independent pure-Python BPE
+    reference on planted corpora.
     """
-    if n_merges < 0:
-        raise ValueError(f"n_merges must be >= 0, got {n_merges}")
     # LAZY checkpoints (1 job/round instead of 2): each round's take(1)
     # is a global sort-limit — a full-scan action that materializes the
     # current vocab as a side effect. The PREVIOUS round's blocks can
@@ -199,7 +199,7 @@ def bpe_train(docs: DataFrame,
     prev: DataFrame | None = None
     merges: list[tuple[str, str, int]] = []
     try:
-        for _ in range(n_merges):
+        for _ in range(BPE_MERGES):
             pairs = (vocab.where(F.size("syms") >= 2)
                      .select("n_occ", F.explode(F.sequence(
                          F.lit(1), F.size("syms") - 1)).alias("i"),

@@ -21,7 +21,6 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .sources.tables import POINTS_FROM_EVENTS_SQL, load_table, points_from_events
 

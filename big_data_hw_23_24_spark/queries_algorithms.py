@@ -463,7 +463,7 @@ def streaming_sessions(spark, sf_dir):
                   .schema("seq long, user_id long, ts timestamp")
                   .option("maxFilesPerTrigger", 1).parquet(glob))
         with replay_shuffle_cap(spark):
-            out = run_sessionize(spark, stream, gap_sec=3600)
+            out = run_sessionize(spark, stream)
             # localCheckpoint: the memory-sink table is session-scoped;
             # pin the rows so the returned DF survives stream cleanup
             return out.localCheckpoint(eager=True)
@@ -531,7 +531,7 @@ def streaming_order_events_3d(spark, sf_dir):
         with replay_shuffle_cap(spark):
             pairs = run_interval_join(
                 spark, os_, es, "o_custkey", "user_id", "o_orderdate",
-                "ts", 3 * 86400, watermark_delay="1 hour")
+                "ts", 3 * 86400)
         counts = pairs.groupBy("o_orderkey") \
             .agg(F.count("event_id").alias("n_events_3d"))
         out = (od.select("o_orderkey")

@@ -24,7 +24,6 @@ from .operators.textstats import (  # noqa: F401
     token_stats,
 )
 from .queries import _REGISTRY, register
-from .queries import _REGISTRY as _R  # post-registration oracle patches
 from .queries_llm_shared import (  # noqa: F401  (used inside f-string oracles)
     _BAND_COLLIDE,
     _BOILER_SQL_BASE,
@@ -224,7 +223,7 @@ def dedup_survivor_groups(spark, sf_dir):
 def dedup_embedding_cosine(spark, sf_dir):
     from .operators.similarity import cosine_pairs
 
-    return cosine_pairs(load_table(spark, sf_dir, "embeddings"), 0.4)
+    return cosine_pairs(load_table(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -238,7 +237,7 @@ def dedup_embedding_cosine(spark, sf_dir):
 def dedup_embedding_lsh(spark, sf_dir):
     from .operators.similarity import embedding_lsh_pairs
 
-    return embedding_lsh_pairs(load_table(spark, sf_dir, "embeddings"), 0.4)
+    return embedding_lsh_pairs(load_table(spark, sf_dir, "embeddings"))
 
 
 # The oracle-checkable face of the LSH path (r8, the E76 md5-MinHash
@@ -309,8 +308,7 @@ def dedup_embedding_lsh(spark, sf_dir):
 def dedup_embedding_lsh_pinned(spark, sf_dir):
     from .operators.similarity import embedding_lsh_pairs_pinned
 
-    return embedding_lsh_pairs_pinned(
-        load_table(spark, sf_dir, "embeddings"), 0.4)
+    return embedding_lsh_pairs_pinned(load_table(spark, sf_dir, "embeddings"))
 
 
 # --- incremental batch-vs-corpus dedup ---------------------------------------
@@ -1391,7 +1389,7 @@ def _linkage_entities(spark, sf_dir):
     """,
     doc="blocked fuzzy record linkage (Fellegi-Sunter blocking) over "
         "4-word document titles: equi-join on the two-word block "
-        "(max_block=1000 guard), exact levenshtein <= 2 verify; every "
+        "(MAX_BLOCK=1000 guard), exact levenshtein <= 2 verify; every "
         "9th doc gets a last-char-deletion variant (distance 1, block "
         "intact) as planted ground truth; dist-0 rows are exact-title "
         "duplicates",
@@ -1407,8 +1405,7 @@ def doc_linkage_blocked(spark, sf_dir):
     blk = F.concat(F.split_part(F.col("e"), F.lit(" "), F.lit(1)),
                    F.lit(" "),
                    F.split_part(F.col("e"), F.lit(" "), F.lit(2)))
-    return blocked_fuzzy_pairs(ents, "e", blk, max_dist=2,
-                               max_block=1000)
+    return blocked_fuzzy_pairs(ents, "e", blk)
 
 
 @register(
@@ -1438,7 +1435,7 @@ def doc_linkage_snm(spark, sf_dir):
     from .operators.linkage import sorted_neighborhood_pairs
 
     ents = _linkage_entities(spark, sf_dir)
-    return sorted_neighborhood_pairs(ents, "e", window=4, max_dist=2)
+    return sorted_neighborhood_pairs(ents, "e", window=4)
 
 
 # --- E162: B-cubed cluster-quality gate ---------------------------------------
@@ -1611,7 +1608,7 @@ def dedup_setsim_prefix(spark, sf_dir):
     salt = (docs.where(F.col("doc_id") % 11 == 0)
             .select((F.col("doc_id") + 8000000).alias("doc_id"),
                     dropped.alias("text")))
-    return setsim_join_prefix(docs.unionByName(salt), threshold=0.7)
+    return setsim_join_prefix(docs.unionByName(salt))
 
 
 # --- E223: LSH candidate recall vs the exact join ------------------------------
@@ -1731,7 +1728,7 @@ def dedup_eval_lsh_recall(spark, sf_dir):
     # fan out once, checkpoint once (root-cause 4)
     corpus = (ensure_fanout(docs.unionByName(salt_a).unionByName(salt_b))
               .localCheckpoint(eager=True))
-    truth = (setsim_join_prefix(corpus, threshold=0.7)
+    truth = (setsim_join_prefix(corpus)
              .select("id_a", "id_b").localCheckpoint(eager=True))
     signed = (minhash_signature(word_shingles(corpus), hash_family="md5")
               .select("doc_id", F.size("shingles").alias("_n_sh"),

@@ -22,7 +22,8 @@ from .operators.textstats import (  # noqa: F401
     quality_scores,
     token_stats,
 )
-from .queries import _REGISTRY, register
+from .operators.tokenizer import BPE_MERGES
+from .queries import register
 from .queries import _REGISTRY as _R  # post-registration oracle patches
 from .queries_llm_shared import (  # noqa: F401  (used inside f-string oracles)
     _BAND_COLLIDE,
@@ -150,8 +151,7 @@ def corpus_source_mix(spark, sf_dir):
 def corpus_boilerplate_ngrams(spark, sf_dir):
     from .operators.textstats import boilerplate_ngrams
 
-    return boilerplate_ngrams(load_table(spark, sf_dir, "documents"),
-                              n=8, min_docs=3)
+    return boilerplate_ngrams(load_table(spark, sf_dir, "documents"))
 
 
 # --- full BPE training loop --------------------------------------------------
@@ -166,13 +166,13 @@ def corpus_boilerplate_ngrams(spark, sf_dir):
 # non-overlapping exactly like tokenizer._merge_pair's JVM fold).
 # tests/test_llm_ops.py additionally pins the merge sequence to an
 # independent pure-Python BPE reference.
-def _bpe_train_oracle_sql(n_merges: int = 8) -> str:
+def _bpe_train_oracle_sql() -> str:
     parts = ["""WITH w AS (
   SELECT unnest(string_split(lower(text), ' ')) AS word FROM documents),
 wc AS (SELECT word, count(*) AS n_occ FROM w WHERE word <> '' GROUP BY word),
 v0 AS (SELECT array_to_string(list_transform(string_split(word, ''),
          c -> chr(2) || c || chr(3)), '') AS fs, n_occ FROM wc)"""]
-    for k in range(n_merges):
+    for k in range(BPE_MERGES):
         parts.append(f"""p{k} AS (
   SELECT s.syms[t.i - 1] AS a, s.syms[t.i] AS b, sum(s.n_occ)::BIGINT AS cnt
   FROM (SELECT string_split(substr(fs, 2, length(fs) - 2),
@@ -184,13 +184,13 @@ v{k + 1} AS (SELECT replace(fs, chr(2) || a || chr(3) || chr(2) || b || chr(3),
                 chr(2) || a || b || chr(3)) AS fs, n_occ FROM v{k}, b{k})""")
     sel = "\nUNION ALL ".join(
         f'SELECT {k} AS step, a AS "left", b AS "right", cnt AS pair_count '
-        f"FROM b{k}" for k in range(n_merges))
+        f"FROM b{k}" for k in range(BPE_MERGES))
     return ",\n".join(parts) + "\n" + sel + "\nORDER BY step"
 
 
 @register(
     "bpe_learned_merges",
-    _bpe_train_oracle_sql(8),
+    _bpe_train_oracle_sql(),
     doc="distributed BPE training: 8 learned merges over the corpus "
         "(vocab-scale pair aggregate + bounded argmax + JVM merge fold "
         "per round); oracle unrolls the rounds as framed-symbol CTEs",
@@ -198,7 +198,7 @@ v{k + 1} AS (SELECT replace(fs, chr(2) || a || chr(3) || chr(2) || b || chr(3),
 def bpe_learned_merges(spark, sf_dir):
     from .operators.tokenizer import bpe_train
 
-    merges = bpe_train(load_table(spark, sf_dir, "documents"), n_merges=8)
+    merges = bpe_train(load_table(spark, sf_dir, "documents"))
     rows = [(i, a, b, c) for i, (a, b, c) in enumerate(merges)]
     return spark.createDataFrame(
         rows, "step int, left string, right string, pair_count long")
@@ -408,7 +408,7 @@ def corpus_temperature_mix(spark, sf_dir):
     from .operators.splits import temperature_resample
 
     docs = load_table(spark, sf_dir, "documents")
-    out = temperature_resample(docs, alpha=0.5)
+    out = temperature_resample(docs)
     return out.select("doc_id", "source", "multiplicity",
                       F.col("n_copies").cast("long").alias("n_copies"),
                       F.col("copy").cast("long").alias("copy"))
@@ -623,7 +623,7 @@ def corpus_quality_calibration(spark, sf_dir):
     from .operators.selection import quality_calibration
 
     return quality_calibration(load_table(spark, sf_dir, "documents"),
-                               ["slow", "dup"], n_tiles=10, max_hits=1)
+                               ["slow", "dup"])
 
 
 # --- k-anonymity audit (r8) --------------------------------------------------
@@ -653,7 +653,7 @@ def customers_k_anonymity(spark, sf_dir):
     return k_anonymity_report(
         c, ["c_nationkey", "c_mktsegment",
             F.floor(F.col("c_acctbal") / 1000).cast("long")
-            .alias("bal_band")], k=5)
+            .alias("bal_band")])
 
 
 # --- pruned n-gram count table (r8) ------------------------------------------
@@ -868,7 +868,7 @@ def corpus_split_drift(spark, sf_dir):
     FROM e
     """,
     doc="data-constrained epoch schedule: target shares -> per-source "
-        "repeat factors capped at max_epochs, with the shortfall "
+        "repeat factors capped at MAX_EPOCHS, with the shortfall "
         "reported as deficit instead of silently redistributed; the "
         "corpus reduces to |sources| rows before any join",
 )
@@ -883,8 +883,7 @@ def corpus_epoch_schedule(spark, sf_dir):
                .select("source",
                        ((F.substring("source", 4, 10).cast("int") % 4 + 1)
                         .cast("double")).alias("weight")))
-    return epoch_schedule(docs, weights, int(total * 1.5 // 1),
-                          max_epochs=2.0)
+    return epoch_schedule(docs, weights, int(total * 1.5 // 1))
 
 
 # --- length-bucketed padded batching (r8) ------------------------------------
@@ -922,8 +921,7 @@ def corpus_epoch_schedule(spark, sf_dir):
 def corpus_length_batches(spark, sf_dir):
     from .operators.packing import length_batches
 
-    return length_batches(load_table(spark, sf_dir, "documents"),
-                          batch_size=32)
+    return length_batches(load_table(spark, sf_dir, "documents"))
 
 
 # --- streaming ingest health (r8) --------------------------------------------
@@ -1330,7 +1328,7 @@ def events_skew_report(spark, sf_dir):
     from .operators.skew import skew_report
 
     ev = load_table(spark, sf_dir, "events")
-    return skew_report(ev, ["user_id", "event_type"], top_n=10)
+    return skew_report(ev, ["user_id", "event_type"])
 
 
 # --- PMI collocations (E89) --------------------------------------------------
@@ -1377,8 +1375,7 @@ def events_skew_report(spark, sf_dir):
 def corpus_pmi_collocations(spark, sf_dir):
     from .operators.textstats import pmi_collocations
 
-    return pmi_collocations(load_table(spark, sf_dir, "documents"),
-                            min_count=5, k=20)
+    return pmi_collocations(load_table(spark, sf_dir, "documents"))
 
 
 # --- deterministic weighted sampling (E93) -----------------------------------
@@ -2041,7 +2038,7 @@ def events_trending_items(spark, sf_dir):
     ev = (load_table(spark, sf_dir, "events")
           .select(F.get_json_object("props", "$.k").try_cast("long")
                   .alias("item"), "ts"))
-    return trending_items(ev, k=20)
+    return trending_items(ev)
 
 
 # --- population-stability drift report (E151, r10) ------------------------------
@@ -2120,7 +2117,7 @@ def corpus_drift_psi(spark, sf_dir):
                    F.when(F.col("doc_id") % 3 == 0,
                           (F.col("n_chars") / 2).cast("long"))
                    .otherwise(F.col("n_chars")).alias("n_chars")))
-    return psi_report(base, cur, "n_chars", "doc_id", bins=10)
+    return psi_report(base, cur, "n_chars", "doc_id")
 
 
 # --- KMV set-operation estimates + exactness gate (E153, r10) ------------------
@@ -2292,7 +2289,7 @@ def corpus_incremental_stats(spark, sf_dir):
     old_stats = (old.groupBy("source")
                  .agg(F.count("*").cast("long").alias("n_docs"),
                       F.sum(toks).cast("long").alias("n_tokens")))
-    return incremental_stats(old, new, old_stats, "source")
+    return incremental_stats(old, new, old_stats)
 
 
 # --- data-skipping (file pruning) audit (E156, r10) -----------------------------
@@ -2650,7 +2647,7 @@ def events_rolling_distinct_kmv(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     d = F.floor(ticks_us(ev) / F.lit(86_400_000_000)).cast("long")
     return rolling_distinct_kmv(ev.select(d.alias("d"), "user_id"),
-                                "user_id", "d", window_days=7, k=128)
+                                "user_id", "d")
 
 
 # --- E186: preference-pair mining (RLHF/DPO data prep, r12) ---------------------
@@ -2818,7 +2815,7 @@ def _hilbert_pruning_oracle() -> str:
     from .operators.layout import hilbert_sql_parts, z_value_sql
 
     z = z_value_sql("cx0", "cy0", bits=12)
-    cte, joins, hv = hilbert_sql_parts("b.cx", "b.cy", bits=12)
+    cte, joins, hv = hilbert_sql_parts("b.cx", "b.cy")
     return f"""
     WITH {cte},
     raw AS (

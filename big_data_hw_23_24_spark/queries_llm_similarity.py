@@ -15,6 +15,7 @@ from .operators.dedup import (  # noqa: F401  (used at query call time)
     simhash_near_duplicates,
 )
 from .operators.multimodal import decode_media, media_from_documents  # noqa: F401
+from .operators.similarity import EIGEN_ROUNDS
 from .operators.similarity import cosine_topk, ivf_topk  # noqa: F401
 from .operators.textstats import (  # noqa: F401
     content_fingerprints,
@@ -22,7 +23,7 @@ from .operators.textstats import (  # noqa: F401
     quality_scores,
     token_stats,
 )
-from .queries import _REGISTRY, register
+from .queries import register
 from .queries import _REGISTRY as _R  # post-registration oracle patches
 from .queries_llm_shared import (  # noqa: F401  (used inside f-string oracles)
     _BAND_COLLIDE,
@@ -115,8 +116,7 @@ def knn_cosine_quantized(spark, sf_dir):
     from .operators.similarity import quantized_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return quantized_topk(emb, emb.where(F.col("vec_id") < 5),
-                          k=10, rerank_factor=4)
+    return quantized_topk(emb, emb.where(F.col("vec_id") < 5))
 
 
 @register(
@@ -126,7 +126,7 @@ def knn_cosine_quantized(spark, sf_dir):
 )
 def knn_cosine_ivf(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk(emb, emb.where(F.col("vec_id") < 5), k=10)
+    return ivf_topk(emb, emb.where(F.col("vec_id") < 5))
 
 
 # --- multimodal plumbing -----------------------------------------------------
@@ -176,7 +176,7 @@ def media_feature_vectors(spark, sf_dir):
     from .operators.multimodal import extract_features
 
     media = media_from_documents(load_table(spark, sf_dir, "documents"))
-    return extract_features(media, dim=4, fake=True)
+    return extract_features(media, fake=True)
 
 
 # --- embedding quantization --------------------------------------------------
@@ -229,8 +229,6 @@ def embedding_quantize_int8(spark, sf_dir):
         "IVF codebook at full-corpus scale)",
 )
 def embedding_kmeans_sizes(spark, sf_dir):
-    import numpy as np
-
     from .operators.clustering import kmeans_fit
     from .operators.similarity import _nearest_lists_udf
 
@@ -238,7 +236,7 @@ def embedding_kmeans_sizes(spark, sf_dir):
     # re-reads parquet once rather than leaking the cache past the call
     emb = load_table(spark, sf_dir, "embeddings").cache()
     try:
-        cent, _ = kmeans_fit(emb, k=8, iters=4, seed=42)
+        cent, _ = kmeans_fit(emb, k=8, iters=4)
     finally:
         emb.unpersist()
     assign = _nearest_lists_udf(cent, 1)
@@ -519,7 +517,7 @@ def knn_pq_rerank(spark, sf_dir):
     cb = fixed_codebooks(emb, m=8, k=16)
     codes = pq_encode(emb, cb, m=8).select("vec_id", "j", "code")
     return pq_rerank_topk(emb, codes, emb.where(F.col("vec_id") < 5),
-                          cb, m=8, k_top=10, fetch=40)
+                          cb, m=8)
 
 
 # --- video frame-sampling plan (r8) ------------------------------------------
@@ -552,7 +550,7 @@ def media_frame_plan(spark, sf_dir):
     from .operators.multimodal import frame_sample_plan, media_from_documents
 
     media = media_from_documents(load_table(spark, sf_dir, "documents"))
-    return frame_sample_plan(media, every_nth=10)
+    return frame_sample_plan(media)
 
 
 # --- distributed Gram matrix (E82) -------------------------------------------
@@ -596,7 +594,7 @@ def embedding_pca_projected(spark, sf_dir):
     from .operators.similarity import pca_components, pca_project
 
     emb = load_table(spark, sf_dir, "embeddings")
-    comps = pca_components(emb, n_components=8)
+    comps = pca_components(emb)
     out = pca_project(emb, comps)
     return out.select(
         "vec_id",
@@ -748,8 +746,7 @@ def knn_ivf_pinned(spark, sf_dir):
     from .operators.similarity import ivf_topk_pinned
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk_pinned(emb, emb.where(F.col("vec_id") < 5),
-                           k=10, n_lists=16, nprobe=4)
+    return ivf_topk_pinned(emb, emb.where(F.col("vec_id") < 5), k=10)
 
 
 # --- ANN rollout-gate evaluation (E146, r10) ---------------------------------------
@@ -803,7 +800,7 @@ def knn_eval_ivf(spark, sf_dir):
     qs = emb.where(F.col("vec_id") < 5)
     exact = cosine_topk(emb, qs, k=10).select(
         "query_id", "neighbor_id", F.col("rank").alias("r_exact"))
-    pred = ivf_topk_pinned(emb, qs, k=10, n_lists=16, nprobe=4).select(
+    pred = ivf_topk_pinned(emb, qs, k=10).select(
         "query_id", "neighbor_id", F.col("rank").alias("r_pred"))
     hit = F.col("r_exact").isNotNull() & F.col("r_pred").isNotNull()
     return (exact.join(pred, ["query_id", "neighbor_id"], "full_outer")
@@ -1205,8 +1202,7 @@ def knn_reciprocal_ivf(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     is_a = (F.col("vec_id") % 10 == 0) & (F.col("vec_id") < 1000)
     return reciprocal_best_match_ivf(
-        emb.where(is_a), emb.where(~is_a), nprobe=4,
-        cent_below_b=16, cent_below_a=160)
+        emb.where(is_a), emb.where(~is_a), cent_below_a=160)
 
 
 # The gate: IVF-mutual pairs scored against the exact mutual set — one
@@ -1256,8 +1252,7 @@ def knn_eval_reciprocal(spark, sf_dir):
     a, b = emb.where(is_a), emb.where(~is_a)
     exact = (reciprocal_best_match(a, b)
              .select("id_a", "id_b", F.lit(True).alias("in_exact")))
-    pred = (reciprocal_best_match_ivf(a, b, nprobe=4, cent_below_b=16,
-                                      cent_below_a=160)
+    pred = (reciprocal_best_match_ivf(a, b, cent_below_a=160)
             .select("id_a", "id_b", F.lit(True).alias("in_pred")))
     j = exact.join(pred, ["id_a", "id_b"], "full_outer")
     ex = F.sum(F.when(F.col("in_exact"), 1).otherwise(0))
@@ -1330,7 +1325,7 @@ def knn_eval_reciprocal(spark, sf_dir):
 def knn_hubness(spark, sf_dir):
     from .operators.similarity import hubness_report
 
-    return hubness_report(load_table(spark, sf_dir, "embeddings"), k=10)
+    return hubness_report(load_table(spark, sf_dir, "embeddings"))
 
 
 # --- E198: Matryoshka prefix-dimension retrieval gate ------------------------
@@ -1380,8 +1375,7 @@ def knn_hubness(spark, sf_dir):
 def knn_prefix_dim_eval(spark, sf_dir):
     from .operators.similarity import prefix_dim_recall
 
-    return prefix_dim_recall(load_table(spark, sf_dir, "embeddings"),
-                             k=10, prefix=32, n_queries=20)
+    return prefix_dim_recall(load_table(spark, sf_dir, "embeddings"))
 
 
 # --- E199: hardest-positive / semi-hard-negative triplet mining --------------
@@ -1431,8 +1425,7 @@ def knn_prefix_dim_eval(spark, sf_dir):
 def embedding_triplet_mining(spark, sf_dir):
     from .operators.similarity import triplet_mining
 
-    return triplet_mining(load_table(spark, sf_dir, "embeddings"),
-                          anchors_below=30)
+    return triplet_mining(load_table(spark, sf_dir, "embeddings"))
 
 
 # --- E200: Johnson-Lindenstrauss projection distortion audit -----------------
@@ -1503,8 +1496,7 @@ def embedding_triplet_mining(spark, sf_dir):
 def embedding_rp_distortion(spark, sf_dir):
     from .operators.similarity import rp_distortion
 
-    return rp_distortion(load_table(spark, sf_dir, "embeddings"),
-                         target_dim=16, offsets=(1, 7, 49))
+    return rp_distortion(load_table(spark, sf_dir, "embeddings"))
 
 
 # --- E222: representative-based silhouette per label --------------------------
@@ -1560,18 +1552,17 @@ def embedding_rp_distortion(spark, sf_dir):
 def embedding_silhouette(spark, sf_dir):
     from .operators.similarity import label_silhouette
 
-    return label_silhouette(load_table(spark, sf_dir, "embeddings"),
-                            "label", "embedding", "vec_id")
+    return label_silhouette(load_table(spark, sf_dir, "embeddings"))
 
 
 # --- E224: top eigenvector via integer-exact power iteration -------------------
-def _eigen_oracle_sql(rounds: int = 5) -> str:
+def _eigen_oracle_sql() -> str:
     """Unrolled power-iteration oracle (the BPE-oracle treatment):
     integer-micro Gram, HUGEINT matvecs, floats only at the final
     normalize + Rayleigh step — the same literals the operator uses."""
     ctes = []
     prev = "v0"
-    for r in range(1, rounds + 1):
+    for r in range(1, EIGEN_ROUNDS + 1):
         ctes.append(
             f"v{r} AS (SELECT gs.i AS i, sum(gs.g * {prev}.c) AS c\n"
             f"          FROM gs JOIN {prev} ON {prev}.i = gs.j"
@@ -1609,7 +1600,7 @@ def _eigen_oracle_sql(rounds: int = 5) -> str:
 
 @register(
     "embedding_top_eigen",
-    _eigen_oracle_sql(rounds=5),
+    _eigen_oracle_sql(),
     doc="top principal direction of the embedding Gram via 5 rounds "
         "of power iteration in EXACT INTEGER arithmetic (6-dp gram -> "
         "integer micros, HUGEINT matvecs, PSD so no per-round "
@@ -1622,5 +1613,4 @@ def _eigen_oracle_sql(rounds: int = 5) -> str:
 def embedding_top_eigen(spark, sf_dir):
     from .operators.similarity import top_eigenvector
 
-    return top_eigenvector(load_table(spark, sf_dir, "embeddings"),
-                           rounds=5)
+    return top_eigenvector(load_table(spark, sf_dir, "embeddings"))

@@ -22,7 +22,7 @@ from .operators.textstats import (  # noqa: F401
     quality_scores,
     token_stats,
 )
-from .queries import _REGISTRY, register
+from .queries import register
 from .queries import _REGISTRY as _R  # post-registration oracle patches
 from .queries_llm_shared import (  # noqa: F401  (used inside f-string oracles)
     _BAND_COLLIDE,
@@ -159,7 +159,7 @@ def doc_fingerprints(spark, sf_dir):
 def doc_tfidf_top_terms(spark, sf_dir):
     from .operators.textstats import tfidf_top_terms
 
-    return tfidf_top_terms(load_table(spark, sf_dir, "documents"), k=3)
+    return tfidf_top_terms(load_table(spark, sf_dir, "documents"))
 
 
 # --- document chunking (context windows with overlap) ------------------------
@@ -343,7 +343,7 @@ def doc_contamination_scan(spark, sf_dir):
     from .operators.textstats import contamination_scan
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return contamination_scan(docs, docs.where(F.col("doc_id") < 5), n=8)
+    return contamination_scan(docs, docs.where(F.col("doc_id") < 5))
 
 
 # --- deterministic content-hash train/val/test split -------------------------
@@ -627,7 +627,7 @@ def doc_c4_line_filter(spark, sf_dir):
     docs = s.select(
         "doc_id",
         F.concat_ws("\n", "la", "lb", "lc", "ld", "le").alias("text"))
-    out = c4_line_filter(docs, min_words=4, min_lines=2)
+    out = c4_line_filter(docs)
     return out.select(
         "doc_id", F.col("n_lines").cast("int").alias("n_lines"),
         F.col("n_kept").cast("int").alias("n_kept"),
@@ -733,8 +733,7 @@ s AS (
 def doc_overlap_pairs(spark, sf_dir):
     from .operators.textstats import winnow_overlap_pairs
 
-    return winnow_overlap_pairs(load_table(spark, sf_dir, "documents"),
-                                k=4, w=5)
+    return winnow_overlap_pairs(load_table(spark, sf_dir, "documents"))
 
 
 # --- token entropy (diversity signal) ----------------------------------------
@@ -848,7 +847,7 @@ def doc_dsir_weights(spark, sf_dir):
     from .operators.selection import dsir_importance
 
     docs = load_table(spark, sf_dir, "documents")
-    return dsir_importance(docs, F.col("lang") == "en", bucket_chars=3)
+    return dsir_importance(docs, F.col("lang") == "en")
 
 
 # --- hashed linear quality classifier (E66) ----------------------------------
@@ -1051,7 +1050,7 @@ def doc_rake_keyphrases(spark, sf_dir):
     from .operators.textstats import rake_keyphrases
 
     return rake_keyphrases(load_table(spark, sf_dir, "documents"),
-                           ["join", "scan", "row", "batch", "hash"], k=3)
+                           ["join", "scan", "row", "batch", "hash"])
 
 
 # --- SFT chat-template rendering (r8) ----------------------------------------
@@ -1489,7 +1488,7 @@ def doc_contrastive_negatives(spark, sf_dir):
     from .operators.selection import contrastive_negatives
 
     docs = load_table(spark, sf_dir, "documents")
-    return contrastive_negatives(docs, k=4)
+    return contrastive_negatives(docs)
 
 
 # --- payment-card PII scan with Luhn validation (E86) ------------------------
@@ -2032,7 +2031,7 @@ def doc_hybrid_rrf(spark, sf_dir):
     idx = build_query_index(docs, qs)
     bm = bm25_search_many(docs, qs, k=10, index=idx)
     ql = ql_search_many(docs, qs, k=10, index=idx)
-    out = rrf_fuse(bm, ql, k=10)
+    out = rrf_fuse(bm, ql)
     return out.select(F.col("qid").cast("int").alias("qid"), "doc_id",
                       "rrf", "rank_0", "rank_1",
                       F.col("rank").cast("int").alias("rank"))
@@ -2117,7 +2116,7 @@ def doc_prefix_completions(spark, sf_dir):
     from .operators.textstats import prefix_completions
 
     docs = load_table(spark, sf_dir, "documents").select("text")
-    return prefix_completions(docs, n_words=2, prefix_len=3, k=3)
+    return prefix_completions(docs)
 
 
 # --- E174: Flesch readability scores (r12) ------------------------------------
@@ -2219,7 +2218,7 @@ def doc_domain_cap(spark, sf_dir):
     docs = (load_table(spark, sf_dir, "documents")
             .select("doc_id", "n_chars",
                     F.expr(_DOMAIN_URL_SPARK).alias("url")))
-    return domain_cap(docs, k=5, order_by=[F.col("n_chars").desc()])
+    return domain_cap(docs, order_by=[F.col("n_chars").desc()])
 
 
 # --- E178: positional-index phrase search (r12) ---------------------------------
@@ -2310,8 +2309,7 @@ def doc_phrase_search(spark, sf_dir):
 def doc_context_fit(spark, sf_dir):
     from .operators.packing import head_tail_truncate
 
-    return head_tail_truncate(load_table(spark, sf_dir, "documents"),
-                              budget=64, head=48, tail=15)
+    return head_tail_truncate(load_table(spark, sf_dir, "documents"))
 
 
 # --- E184: mojibake (encoding-corruption) scan (r12) ----------------------------
@@ -2442,5 +2440,4 @@ def doc_mojibake_scan(spark, sf_dir):
 def doc_retrieval_mrr(spark, sf_dir):
     from .operators.retrieval import origin_retrieval_eval
 
-    return origin_retrieval_eval(load_table(spark, sf_dir, "documents"),
-                                 k=10, every=17, offset=3)
+    return origin_retrieval_eval(load_table(spark, sf_dir, "documents"))

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from .operators.graph import LPA_ROUNDS
 from .queries import register
 from .sources.tables import load_table
 
@@ -566,7 +567,7 @@ def events_by_window(spark, sf_dir):
     from .streaming.windows import windowed_event_counts
 
     ev = _t(spark, sf_dir, "events")
-    return windowed_event_counts(ev, "1 hour", keys=("event_type",))
+    return windowed_event_counts(ev, keys=("event_type",))
 
 
 # --- A8: conditional aggregation --------------------------------------------
@@ -646,7 +647,7 @@ def top_brands_by_revenue(spark, sf_dir):
         "deterministic hash salt) — result equals the plain join",
 )
 def events_customer_salted_join(spark, sf_dir):
-    from .operators.skew import salted_join
+    from .operators.skew import N_SALTS, salted_join
 
     e = _t(spark, sf_dir, "events").select(
         F.when(F.col("user_id") % 4 != 0, F.lit(1))
@@ -654,9 +655,9 @@ def events_customer_salted_join(spark, sf_dir):
         "event_id", "value")
     c = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("skew_key"), "c_nationkey")
-    joined = salted_join(e, c, "skew_key", n_salts=8,
+    joined = salted_join(e, c, "skew_key",
                          salt_col=F.pmod(F.xxhash64("event_id"),
-                                         F.lit(8)).cast("int"))
+                                         F.lit(N_SALTS)).cast("int"))
     return (joined.groupBy(F.col("c_nationkey").alias("nation"))
             .agg(F.count("*").alias("n_events"),
                  F.round(F.sum("value"), 2).alias("sum_value")))
@@ -996,8 +997,7 @@ def acctbal_median_by_nation(spark, sf_dir):
 
     c = _t(spark, sf_dir, "customer")
     out = grouped_percentile(c.select("c_nationkey", "c_acctbal"),
-                             ["c_nationkey"], "c_acctbal", 0.5,
-                             "median_acctbal")
+                             ["c_nationkey"], "c_acctbal", "median_acctbal")
     return out.select("c_nationkey",
                       F.round("median_acctbal", 4).alias("median_acctbal"),
                       "n")
@@ -1089,7 +1089,7 @@ def distinct_users_salted(spark, sf_dir):
     from .operators.skew import salted_count_distinct
 
     e = _t(spark, sf_dir, "events")
-    return salted_count_distinct(e, "event_type", "user_id", n_salts=8)
+    return salted_count_distinct(e, "event_type", "user_id")
 
 
 # --- sketch aggregates (idiomatic alternates to K2/A6; SURVEY §2.4) ----------
@@ -1295,7 +1295,7 @@ def events_by_hopping_window(spark, sf_dir):
     from .streaming.windows import windowed_event_counts
 
     ev = _t(spark, sf_dir, "events")
-    return windowed_event_counts(ev, "1 hour", keys=("event_type",),
+    return windowed_event_counts(ev, keys=("event_type",),
                                  slide_duration="30 minutes")
 
 
@@ -1481,7 +1481,7 @@ def orders_market_basket(spark, sf_dir):
     from .operators.graph import market_basket_pairs
 
     return market_basket_pairs(_t(spark, sf_dir, "lineitem"),
-                               "l_orderkey", "l_partkey", min_co=2)
+                               "l_orderkey", "l_partkey")
 
 
 # --- inter-arrival burstiness / bot screen (r8) -------------------------------
@@ -1992,7 +1992,7 @@ def orders_itemset_triples(spark, sf_dir):
                    .select("o", F.explode(F.array(
                        F.lit(502), F.lit(503), F.lit(504))).alias("i"))))
     baskets = li.unionByName(planted.select("o", F.col("i").cast("long")))
-    return itemset_triples(baskets, "o", "i", minsup=2, min_frac=0.01)
+    return itemset_triples(baskets, "o", "i", min_frac=0.01)
 
 
 # --- U-shaped multi-touch attribution (E152, r10) -------------------------------
@@ -2064,8 +2064,7 @@ def events_attribution(spark, sf_dir):
     from .operators.timeseries import attribution_report
 
     return attribution_report(_t(spark, sf_dir, "events"), "purchase",
-                              ["click", "view", "signup"],
-                              lookback_hours=24)
+                              ["click", "view", "signup"])
 
 
 # --- hierarchical subtree rollup (E155, r10) ------------------------------------
@@ -2162,7 +2161,7 @@ def events_calendar_gaps(spark, sf_dir):
     kept = ev.where(
         ~((F.col("event_type") == "error") & dom.isin(5, 6, 7, 19))
         & ~((F.col("event_type") == "signup") & (dom % 11 == 3)))
-    return calendar_gaps(kept, "ts", "event_type")
+    return calendar_gaps(kept, "ts")
 
 
 # --- E160: Benford first-digit audit -----------------------------------------
@@ -2580,8 +2579,7 @@ def events_bootstrap_ci(spark, sf_dir):
     units = ev.groupBy("event_type", "user_id").agg(
         F.sum(F.floor(F.col("value") * 100).cast("long"))
         .cast("long").alias("cents"))
-    return bootstrap_ci(units, ["event_type"], "user_id", "cents",
-                        n_replicates=41, alpha=0.05)
+    return bootstrap_ci(units, ["event_type"], "user_id", "cents")
 
 
 # --- E185: sole-late-supplier attribution (TPC-H Q21 shape, r12) ----------------
@@ -3324,7 +3322,7 @@ def events_peak_concurrency(spark, sf_dir):
     from .operators.timeseries import peak_concurrency
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return peak_concurrency(_t(spark, sf_dir, "events"), gap_minutes=30)
+    return peak_concurrency(_t(spark, sf_dir, "events"))
 
 
 # --- E204: star-schema FK orphan audit ----------------------------------------
@@ -3481,8 +3479,7 @@ def _hll_cte(p: int) -> str:
 def events_hll_pinned(spark, sf_dir):
     from .operators.frequent import hll_report
 
-    return hll_report(_t(spark, sf_dir, "events"), "user_id",
-                      "event_type", ps=(6, 12))
+    return hll_report(_t(spark, sf_dir, "events"), "user_id", "event_type")
 
 
 # --- E206: co-occurrence recommender temporal-holdout eval --------------------
@@ -3581,7 +3578,7 @@ def events_rec_hitrate(spark, sf_dir):
           .select("user_id", "ts",
                   F.get_json_object("props", "$.k").try_cast("long")
                   .alias("item")))
-    return rec_hitrate(ev, split_day=25, k=3)
+    return rec_hitrate(ev, split_day=25)
 
 
 # --- E209: incremental maintenance of a JOIN view ----------------------------
@@ -4182,7 +4179,7 @@ def users_bh_fdr(spark, sf_dir):
         "user_id",
         F.when(F.col("user_id") % 13 == 0, u / 1024).otherwise(u)
         .alias("p"))
-    out = bh_fdr(pv, "user_id", "p", alpha=0.05)
+    out = bh_fdr(pv, "user_id", "p")
     return out.select("user_id", F.round("p", 6).alias("p"),
                       "rank", "rejected")
 
@@ -4546,13 +4543,13 @@ def events_isotonic_purchase(spark, sf_dir):
 
 
 # --- E230: semi-supervised label propagation -------------------------------------
-def _lpa_oracle_sql(rounds: int = 3) -> str:
+def _lpa_oracle_sql() -> str:
     """Unrolled clamped-seed label-propagation oracle: per round, one
     vote join + explicit (max count, min label) winner election —
     never an engine's unspecified arg_max tie behavior."""
     ctes = []
     prev = "l0"
-    for r in range(1, rounds + 1):
+    for r in range(1, LPA_ROUNDS + 1):
         ctes.append(f"""v{r} AS (
       SELECT s.item_a AS i, l.l AS nl, count(*) AS c
       FROM sym s JOIN {prev} l
@@ -4617,7 +4614,7 @@ def _lpa_oracle_sql(rounds: int = 3) -> str:
 
 @register(
     "events_label_propagation",
-    _lpa_oracle_sql(rounds=3),
+    _lpa_oracle_sql(),
     doc="clamped-seed label propagation on the capped co-occurrence "
         "graph: items %7 seed label item%5, three synchronous rounds "
         "of integer majority votes with (max count, min label) "
@@ -4632,7 +4629,7 @@ def events_label_propagation(spark, sf_dir):
           .select("user_id",
                   F.get_json_object("props", "$.k").try_cast("long")
                   .alias("item")))
-    return label_propagation(ev, rounds=3)
+    return label_propagation(ev)
 
 
 # --- E231: one-way ANOVA (value by event type) ------------------------------------

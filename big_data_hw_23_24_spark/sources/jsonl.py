@@ -13,7 +13,7 @@ declared new source surface, SURVEY.md E91.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

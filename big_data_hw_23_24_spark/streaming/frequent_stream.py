@@ -111,7 +111,6 @@ class FrequentItemsMonitor:
 
 def run_frequent_items(spark: SparkSession, stream: DataFrame,
                        monitor: FrequentItemsMonitor,
-                       item_col: str = "item",
                        order_col: str | None = "seq",
                        timeout_sec: float = 60.0) -> FrequentItemsMonitor:
     """Run the monitor over a streaming DataFrame until n items seen.
@@ -123,7 +122,7 @@ def run_frequent_items(spark: SparkSession, stream: DataFrame,
     """
     query = (stream.writeStream
              .foreachBatch(lambda df, eid: monitor.process_batch(
-                 df, eid, item_col=item_col, order_col=order_col))
+                 df, eid, order_col=order_col))
              .outputMode("update")
              .trigger(processingTime="50 milliseconds")
              .start())

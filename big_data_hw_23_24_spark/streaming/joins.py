@@ -16,7 +16,7 @@ the combined watermark proves no future match can exist. State is
 O(rows within the window + watermark delay), not O(stream), which is
 what makes the join runnable forever at 100 TB/day.
 
-Correctness contract: rows later than ``watermark_delay`` may be
+Correctness contract: rows later than ``WATERMARK_DELAY`` may be
 dropped (standard watermark semantics); on an in-order replay the
 result equals the batch inequality join exactly — that equivalence is
 the registered query's oracle.
@@ -28,18 +28,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 TIMEOUT_SEC = 180.0  # seconds the replayed join may run
+WATERMARK_DELAY = "1 hour"  # lateness either side of the join tolerates
 
 
 def interval_join_streams(left: DataFrame, right: DataFrame,
                           left_key: str, right_key: str,
                           left_ts: str, right_ts: str,
-                          window_sec: int,
-                          watermark_delay: str = "1 hour") -> DataFrame:
+                          window_sec: int) -> DataFrame:
     """Inner-join two streaming DFs: key equality + right timestamp in
     ``[left_ts, left_ts + window_sec)``. Both sides watermarked so the
     state store self-cleans. Column names must be disjoint."""
-    l = left.withWatermark(left_ts, watermark_delay)
-    r = right.withWatermark(right_ts, watermark_delay)
+    l = left.withWatermark(left_ts, WATERMARK_DELAY)
+    r = right.withWatermark(right_ts, WATERMARK_DELAY)
     cond = (
         (F.col(left_key) == F.col(right_key))
         & (F.col(right_ts) >= F.col(left_ts))
@@ -51,16 +51,14 @@ def interval_join_streams(left: DataFrame, right: DataFrame,
 
 def run_interval_join(spark, left: DataFrame, right: DataFrame, left_key: str,
                       right_key: str, left_ts: str, right_ts: str,
-                      window_sec: int,
-                      watermark_delay: str = "1 hour") -> DataFrame:
+                      window_sec: int) -> DataFrame:
     """Drive the join over bounded (replayed) streams to completion and
     return the matched pairs as a batch DataFrame."""
     import uuid
 
     name = f"ssjoin_{uuid.uuid4().hex[:12]}"
     joined = interval_join_streams(left, right, left_key, right_key,
-                                   left_ts, right_ts, window_sec,
-                                   watermark_delay)
+                                   left_ts, right_ts, window_sec)
     query = (joined.writeStream.format("memory").queryName(name)
              .outputMode("append")
              .trigger(availableNow=True)

@@ -40,7 +40,6 @@ bounded by the time span / window size, never by row count).
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -70,8 +69,7 @@ def run_late_data_audit(spark: SparkSession, events: DataFrame) -> DataFrame:
         ["_h", "_id"], rank_col="_r").select(
         "_id", "_ts", (F.col("_r") - 1).alias("seq"))
     out_dir = tempfile.mkdtemp(prefix="late_audit_")
-    glob = write_microbatches(seq, out_dir, n_buckets=N_BUCKETS,
-                              order_col="seq")
+    glob = write_microbatches(seq, out_dir, n_buckets=N_BUCKETS)
     src = (spark.readStream
            .schema("_id long, _ts timestamp, seq long")
            .option("maxFilesPerTrigger", 1).parquet(glob))

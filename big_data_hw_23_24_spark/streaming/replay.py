@@ -19,19 +19,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_microbatches(df: DataFrame, out_dir: str, n_buckets: int = 10,
-                       order_col: str = "seq") -> str:
+def write_microbatches(df: DataFrame, out_dir: str,
+                       n_buckets: int = 10) -> str:
     """Write ``df`` as ``n_buckets`` ordered parquet micro-batches.
 
-    ``df`` must carry a dense 0-based ``order_col``; rows land in
-    bucket ``order_col div ceil(total/n_buckets)``. One shuffle on the
+    ``df`` must carry a dense 0-based ``seq``; rows land in
+    bucket ``seq div ceil(total/n_buckets)``. One shuffle on the
     bucket id (``repartition(bucket)`` → exactly one file per bucket),
     no driver-side row materialization. Returns the glob to feed
     ``spark.readStream``.
     """
     total = df.count()
     chunk = max(1, -(-total // n_buckets))  # ceil
-    (df.withColumn("bucket", F.expr(f"{order_col} div {chunk}"))
+    (df.withColumn("bucket", F.expr(f"seq div {chunk}"))
        .repartition(F.col("bucket"))
        .write.mode("overwrite").partitionBy("bucket").parquet(out_dir))
     t0 = 1_700_000_000

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 TIMEOUT_SEC = 120.0  # seconds the replayed sessionizer may run
+SESSION_GAP_SEC = 3600  # inactivity that closes a session
 
 SESSION_SCHEMA = ("user_id bigint, session_start timestamp, "
                   "session_end timestamp, n_events bigint")
@@ -90,24 +91,24 @@ def make_sessionizer(gap: pd.Timedelta):
     return sessionize
 
 
-def sessionize_stream(events: DataFrame, gap_sec: int = 3600) -> DataFrame:
+def sessionize_stream(events: DataFrame) -> DataFrame:
     """Streaming DF of (user_id, ts, ...) → append-mode DF of closed
     sessions. State lives in the executor-side state store — one open
     session per user, O(#users) state total, no driver involvement."""
     src = events.select("user_id", "ts")
     return src.groupBy("user_id").applyInPandasWithState(
-        make_sessionizer(pd.Timedelta(seconds=gap_sec)),
+        make_sessionizer(pd.Timedelta(seconds=SESSION_GAP_SEC)),
         SESSION_SCHEMA, STATE_SCHEMA,
         "append", GroupStateTimeout.NoTimeout)
 
 
-def run_sessionize(spark, stream: DataFrame, gap_sec: int = 3600) -> DataFrame:
+def run_sessionize(spark, stream: DataFrame) -> DataFrame:
     """Drive ``sessionize_stream`` over a bounded (replayed) stream to
     completion and return the closed sessions as a batch DataFrame."""
     import uuid
 
     name = f"sessions_{uuid.uuid4().hex[:12]}"
-    query = (sessionize_stream(stream, gap_sec)
+    query = (sessionize_stream(stream)
              .writeStream.format("memory").queryName(name)
              .outputMode("append")
              .trigger(availableNow=True)

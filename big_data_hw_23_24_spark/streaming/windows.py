@@ -20,8 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+WINDOW_DURATION = "1 hour"  # width of an event-time window
 
-def windowed_event_counts(events: DataFrame, window_duration: str = "1 hour",
+
+def windowed_event_counts(events: DataFrame,
                           keys: tuple[str, ...] = (),
                           slide_duration: str | None = None) -> DataFrame:
     """Tumbling — or, with ``slide_duration``, hopping — event-time
@@ -30,8 +32,8 @@ def windowed_event_counts(events: DataFrame, window_duration: str = "1 hour",
     engine's Expand, no self-join).
     """
     return (
-        events.groupBy(F.window("ts", window_duration,
-                             slide_duration or window_duration).alias("w"),
+        events.groupBy(F.window("ts", WINDOW_DURATION,
+                             slide_duration or WINDOW_DURATION).alias("w"),
                     *[F.col(k) for k in keys])
         .agg(F.count("*").alias("n_events"),
              F.round(F.sum("value"), 2).alias("sum_value"))

@@ -48,7 +48,7 @@ def test_c4_filter_line_rules(spark):
     out = c4_line_filter(_docs(spark, [
         (1, 'one two three four.\nno punct at all\nOk.\n'
             'is this kept too?\nhe said "stop right there."'),
-    ]), min_words=4, min_lines=2).collect()[0]
+    ])).collect()[0]
     assert out.clean_text.split("\n") == [
         "one two three four.", "is this kept too?",
         'he said "stop right there."']
@@ -320,7 +320,7 @@ def test_winnow_overlap_pairs_max_df_guard_and_planted_pair(spark):
              (101, f"epsilon zeta {span} eta theta")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    free = winnow_overlap_pairs(docs, k=4, w=5)
+    free = winnow_overlap_pairs(docs)
     got = {(r.id_a, r.id_b) for r in free.collect()}
     assert (100, 101) in got
     assert any(a < 10 and b < 10 for a, b in got)  # boiler pairs exist
@@ -427,9 +427,13 @@ def test_c4_filter_matches_python_reference(spark, texts):
     original line order."""
     import re
 
+    from big_data_hw_23_24_spark.operators import cleaning
+
     docs = _docs(spark, list(enumerate(texts)))
-    got = {r.doc_id: r for r in
-           c4_line_filter(docs, min_words=2, min_lines=1).collect()}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cleaning, "C4_MIN_WORDS", 2)
+        mp.setattr(cleaning, "C4_MIN_LINES", 1)
+        got = {r.doc_id: r for r in c4_line_filter(docs).collect()}
     for i, t in enumerate(texts):
         lines = t.split("\n")
         want = [ln for ln in lines
@@ -440,16 +444,18 @@ def test_c4_filter_matches_python_reference(spark, texts):
         assert got[i].n_lines == len(lines)
 
 
-def test_semantic_dedup_single_cluster_equals_exact_greedy(spark):
+def test_semantic_dedup_single_cluster_equals_exact_greedy(spark, monkeypatch):
     """With ONE centroid every vector co-clusters, so SemDeDup must
     reduce exactly to greedy smallest-id dedup over the EXACT cosine
     pair set — the k=1 bridge that pins the clustered path to the
     exact operator (cosine_pairs, itself oracle-checked)."""
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import (
         cosine_pairs,
         semantic_dedup,
     )
 
+    monkeypatch.setattr(similarity, "COSINE_THRESHOLD", 0.35)
     emb = load_table(spark, SF, "embeddings")
     one = (emb.where(F.col("vec_id") == 0)
            .select(F.lit(0).alias("centroid_id"),
@@ -457,7 +463,7 @@ def test_semantic_dedup_single_cluster_equals_exact_greedy(spark):
     got = {r.vec_id: r.dropped for r in
            semantic_dedup(emb, one, threshold=0.35).collect()}
     want_dropped = {r.id_b for r in
-                    cosine_pairs(emb, threshold=0.35).collect()}
+                    cosine_pairs(emb).collect()}
     assert set(got) == {r.vec_id for r in emb.select("vec_id").collect()}
     assert {v for v, d in got.items() if d} == want_dropped
 
@@ -597,13 +603,15 @@ def test_leakage_safe_split_keeps_components_together(spark):
 
 # --- contrastive negatives (E85) ----------------------------------------------
 
-def test_contrastive_negatives_shape_and_determinism(spark):
+def test_contrastive_negatives_shape_and_determinism(spark, monkeypatch):
+    from big_data_hw_23_24_spark.operators import selection
     from big_data_hw_23_24_spark.operators.selection import (
         contrastive_negatives)
 
+    monkeypatch.setattr(selection, "NEGATIVES_K", 3)
     df = spark.createDataFrame([(i * 10,) for i in range(20)],
                                "doc_id long")
-    out = contrastive_negatives(df, k=3).collect()
+    out = contrastive_negatives(df).collect()
     assert len(out) == 60                       # exactly k per anchor
     ids = {r[0] for r in df.collect()}
     for r in out:
@@ -611,19 +619,11 @@ def test_contrastive_negatives_shape_and_determinism(spark):
         assert r.neg_id != r.doc_id             # never self
         assert 1 <= r.neg_rank <= 3
     # deterministic across runs and partitionings
-    again = contrastive_negatives(df.repartition(7), k=3).collect()
+    again = contrastive_negatives(df.repartition(7)).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
     # negatives are spread, not collapsed onto one doc
     assert len({r.neg_id for r in out}) > 5
 
-
-def test_contrastive_negatives_validates_k(spark):
-    from big_data_hw_23_24_spark.operators.selection import (
-        contrastive_negatives)
-
-    df = spark.createDataFrame([(1,), (2,)], "doc_id long")
-    with pytest.raises(ValueError, match="k must be"):
-        contrastive_negatives(df, k=0)
 
 
 # --- Gopher rules (E92) ------------------------------------------------------
@@ -819,7 +819,7 @@ def test_epoch_schedule_cap_and_deficit_arithmetic(spark):
     # budget 120: srcA target = 0.75*120 = 90 -> 9 epochs, capped at 2
     #             srcB target = 0.25*120 = 30 -> 0.3 epochs, uncapped
     out = {r.source: r for r in
-           epoch_schedule(docs, weights, 120, max_epochs=2.0).collect()}
+           epoch_schedule(docs, weights, 120).collect()}
     a, b = out["srcA"], out["srcB"]
     assert (a.n_tokens_avail, a.weight_norm, a.target_tokens) == (10, 0.75, 90)
     assert (a.epochs, a.capped, a.realized_tokens, a.deficit_tokens) \
@@ -832,19 +832,20 @@ def test_epoch_schedule_cap_and_deficit_arithmetic(spark):
 
 # --- quality calibration audit (r8) --------------------------------------------
 
-def test_quality_calibration_deciles_partition_and_rates(spark):
+def test_quality_calibration_deciles_partition_and_rates(spark, monkeypatch):
     """Deciles partition the corpus with exact-ntile sizes; per-decile
     flag counts and rates are exact integer arithmetic; flagged docs
     land in the deciles their prob puts them in."""
+    from big_data_hw_23_24_spark.operators import selection
     from big_data_hw_23_24_spark.operators.selection import (
         quality_calibration)
 
+    monkeypatch.setattr(selection, "CALIBRATION_TILES", 4)
     docs = spark.createDataFrame(
         [(i, ("bad bad words here" if i % 4 == 0
               else f"clean text number {i}")) for i in range(40)],
         "doc_id long, text string")
-    out = quality_calibration(docs, ["bad"], n_tiles=4,
-                              max_hits=1).collect()
+    out = quality_calibration(docs, ["bad"]).collect()
     assert [r.decile for r in out] == [1, 2, 3, 4]
     assert all(r.n_docs == 10 for r in out)  # 40/4 exact ntile
     assert sum(r.n_flagged for r in out) == 10  # i%4==0 docs (2 hits)

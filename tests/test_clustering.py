@@ -9,8 +9,6 @@ determinism under a pinned layout.
 from __future__ import annotations
 
 import numpy as np
-import pytest
-from pyspark.sql import functions as F
 
 from big_data_hw_23_24_spark.operators.clustering import mrfft, sequential_fft
 
@@ -116,14 +114,16 @@ def _blob_df(spark, centers, per=60, jitter=0.05, dim=8, seed=7):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def test_kmeans_recovers_separated_blobs(spark):
+def test_kmeans_recovers_separated_blobs(spark, monkeypatch):
     import numpy as np
 
+    from big_data_hw_23_24_spark.operators import clustering
     from big_data_hw_23_24_spark.operators.clustering import kmeans_fit
 
     true = np.eye(3, 8) * 10.0  # 3 well-separated blob centers in 8-dim
     df = _blob_df(spark, true).cache()
-    cent, costs = kmeans_fit(df, k=3, iters=10, seed=1)
+    monkeypatch.setattr(clustering, "KMEANS_SEED", 1)
+    cent, costs = kmeans_fit(df, k=3, iters=10)
     # each true center has a recovered centroid within the jitter scale
     d = np.sqrt(((true[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2))
     assert d.min(axis=1).max() < 0.5
@@ -131,22 +131,24 @@ def test_kmeans_recovers_separated_blobs(spark):
     assert len(set(d.argmin(axis=1))) == 3
 
 
-def test_kmeans_cost_monotone_nonincreasing(spark):
+def test_kmeans_cost_monotone_nonincreasing(spark, monkeypatch):
     import numpy as np
 
+    from big_data_hw_23_24_spark.operators import clustering
     from big_data_hw_23_24_spark.operators.clustering import kmeans_fit
 
     rng = np.random.default_rng(3)
     rows = [(i, [float(v) for v in rng.normal(0, 1, 6)]) for i in range(400)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    _, costs = kmeans_fit(df.cache(), k=8, iters=6, seed=2)
+    monkeypatch.setattr(clustering, "KMEANS_SEED", 2)
+    _, costs = kmeans_fit(df.cache(), k=8, iters=6)
     assert len(costs) >= 2
     for a, b in zip(costs, costs[1:]):
         assert b <= a + 1e-9  # Lloyd guarantee
 
 
 def test_kmeans_centroids_feed_ivf(spark, monkeypatch):
-    from big_data_hw_23_24_spark.operators import similarity
+    from big_data_hw_23_24_spark.operators import clustering, similarity
     from big_data_hw_23_24_spark.operators.clustering import kmeans_fit
     from big_data_hw_23_24_spark.operators.similarity import (
         cosine_topk,
@@ -156,14 +158,16 @@ def test_kmeans_centroids_feed_ivf(spark, monkeypatch):
 
     emb = load_table(spark, "/root/testdata/sf0.01", "embeddings").cache()
     q = emb.limit(8).cache()
-    cent, _ = kmeans_fit(emb, k=16, iters=4, seed=5)
+    monkeypatch.setattr(clustering, "KMEANS_SEED", 5)
+    cent, _ = kmeans_fit(emb, k=16, iters=4)
     exact = {(r.query_id, r.neighbor_id)
              for r in cosine_topk(emb, q, k=5).collect()}
     # the sample trainer is stubbed: the kernel gets kmeans_fit's lists
     monkeypatch.setattr(similarity, "_kmeans_lite",
                         lambda sample, n_lists: cent)
     monkeypatch.setattr(similarity, "IVF_NPROBE", 8)
+    monkeypatch.setattr(similarity, "KNN_K", 5)
     approx = {(r.query_id, r.neighbor_id)
-              for r in ivf_topk(emb, q, k=5).collect()}
+              for r in ivf_topk(emb, q).collect()}
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.5  # nprobe=8 of 16 lists on near-random vectors

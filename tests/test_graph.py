@@ -3,8 +3,6 @@ weight sensitivity and the transition-edge builder."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from big_data_hw_23_24_spark.operators.graph import (
     pagerank,
     transition_edges,
@@ -184,8 +182,7 @@ def test_market_basket_lift_arithmetic(spark):
     ]
     li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
     out = {(r.item_a, r.item_b): r for r in
-           market_basket_pairs(li, "l_orderkey", "l_partkey",
-                               min_co=2).collect()}
+           market_basket_pairs(li, "l_orderkey", "l_partkey").collect()}
     assert set(out) == {(10, 11)}  # (10,12) has n_co=1, pruned
     r = out[(10, 11)]
     assert (r.n_co, r.n_a, r.n_b) == (2, 3, 2)

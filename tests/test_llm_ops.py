@@ -121,7 +121,7 @@ def test_ivf_recall_vs_bruteforce(spark, emb, monkeypatch):
     monkeypatch.setattr(similarity, "IVF_NPROBE", 12)
     queries = emb.where(F.col("vec_id") < 20)
     brute = cosine_topk(emb, queries, k=10).collect()
-    ivf = ivf_topk(emb, queries, k=10).collect()
+    ivf = ivf_topk(emb, queries).collect()
     b = {(r.query_id, r.neighbor_id) for r in brute}
     v = {(r.query_id, r.neighbor_id) for r in ivf}
     recall = len(b & v) / len(b)
@@ -173,7 +173,7 @@ def test_multimodal_feature_extract_fake_matches_reference(spark, docs):
 
     media = media_from_documents(docs.limit(20))
     got = {(r.media_id, r.i): r.feat
-           for r in extract_features(media, dim=4, fake=True).collect()}
+           for r in extract_features(media, fake=True).collect()}
     for r in docs.limit(20).collect():
         h = hashlib.md5(r.text.encode()).hexdigest()
         for i in range(4):
@@ -314,12 +314,14 @@ def test_wav_decode_quarantines_foreign_bytes_only_on_wave_error(spark):
     assert got[7].n_bytes == 0
 
 
-def test_frame_sample_plan(spark, docs):
+def test_frame_sample_plan(spark, docs, monkeypatch):
+    from big_data_hw_23_24_spark.operators import multimodal
     from big_data_hw_23_24_spark.operators.multimodal import (
         frame_sample_plan, media_from_documents)
 
+    monkeypatch.setattr(multimodal, "FRAME_EVERY_NTH", 2)
     media = media_from_documents(docs.limit(10))
-    frames = frame_sample_plan(media, every_nth=2).collect()
+    frames = frame_sample_plan(media).collect()
     assert len(frames) > 10  # at least one frame per doc, most have more
     assert all(r.frame_idx % 2 == 0 for r in frames)
 
@@ -374,7 +376,7 @@ def test_ivf_plan_constant_in_n_lists_and_probe_all_exact(spark, emb,
     def ivf(n_lists, nprobe):
         monkeypatch.setattr(similarity, "IVF_N_LISTS", n_lists)
         monkeypatch.setattr(similarity, "IVF_NPROBE", nprobe)
-        return ivf_topk(emb, queries, k=10)
+        return ivf_topk(emb, queries)
 
     queries = emb.where(F.col("vec_id") < 20)
     plan16 = ivf(16, 4)._jdf.queryExecution().simpleString()
@@ -423,7 +425,7 @@ def test_ivf_recall_curve_at_256_lists_on_clustered_corpus(spark,
     for nprobe in (8, 32):
         monkeypatch.setattr(similarity, "IVF_NPROBE", nprobe)
         got = {(r.query_id, r.neighbor_id)
-               for r in ivf_topk(emb_big, queries, k=10).collect()}
+               for r in ivf_topk(emb_big, queries).collect()}
         recalls[nprobe] = len(brute & got) / len(brute)
     emb_big.unpersist()
     assert recalls[32] >= 0.8, recalls
@@ -431,7 +433,8 @@ def test_ivf_recall_curve_at_256_lists_on_clustered_corpus(spark,
     assert recalls[8] >= 0.4, recalls  # 8/256 lists on clustered data
 
 
-def test_embedding_lsh_recall_and_precision_on_planted_dups(spark):
+def test_embedding_lsh_recall_and_precision_on_planted_dups(spark,
+                                                            monkeypatch):
     """Plant true near-duplicate vectors (copy + small noise, cosine
     ≥ ~0.95) among random ones; the hyperplane-LSH pairs must (a) be a
     subset of the exact pairs with identical verified cosines —
@@ -439,6 +442,7 @@ def test_embedding_lsh_recall_and_precision_on_planted_dups(spark):
     high-cosine pairs (8 bands × 8 bits → ≈0.99 expected at cos 0.95)."""
     import numpy as np
 
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import (
         cosine_pairs, embedding_lsh_pairs)
 
@@ -449,10 +453,11 @@ def test_embedding_lsh_recall_and_precision_on_planted_dups(spark):
     rows = [(i, v.tolist()) for i, v in enumerate(vecs)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
+    monkeypatch.setattr(similarity, "COSINE_THRESHOLD", 0.9)
     exact = {(r.id_a, r.id_b): r.cosine
-             for r in cosine_pairs(emb, 0.9).collect()}
+             for r in cosine_pairs(emb).collect()}
     lsh = {(r.id_a, r.id_b): r.cosine
-           for r in embedding_lsh_pairs(emb, 0.9).collect()}
+           for r in embedding_lsh_pairs(emb).collect()}
     planted = {(i, 60 + i) for i in range(20)} & set(exact)
     assert len(planted) >= 15  # the noise level really does plant dups
     assert set(lsh) <= set(exact)
@@ -462,7 +467,8 @@ def test_embedding_lsh_recall_and_precision_on_planted_dups(spark):
         (len(set(lsh) & planted), len(planted))
 
 
-def test_embedding_lsh_pinned_matches_exact_and_recovers_planted(spark):
+def test_embedding_lsh_pinned_matches_exact_and_recovers_planted(
+        spark, monkeypatch):
     """The md5-pinned sign-plane face keeps the production guarantees:
     verified subset of exact pairs with identical cosines (precision 1)
     and high recall on planted near-dups — pinning changes only WHICH
@@ -470,6 +476,7 @@ def test_embedding_lsh_pinned_matches_exact_and_recovers_planted(spark):
     reproducible from hashlib alone (no RNG state anywhere)."""
     import numpy as np
 
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import (
         _pinned_sign_planes, cosine_pairs, embedding_lsh_pairs_pinned)
 
@@ -481,10 +488,11 @@ def test_embedding_lsh_pinned_matches_exact_and_recovers_planted(spark):
         [(i, v.tolist()) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<float>")
 
+    monkeypatch.setattr(similarity, "COSINE_THRESHOLD", 0.9)
     exact = {(r.id_a, r.id_b): r.cosine
-             for r in cosine_pairs(emb, 0.9).collect()}
+             for r in cosine_pairs(emb).collect()}
     lsh = {(r.id_a, r.id_b): r.cosine
-           for r in embedding_lsh_pairs_pinned(emb, 0.9).collect()}
+           for r in embedding_lsh_pairs_pinned(emb).collect()}
     planted = {(i, 60 + i) for i in range(20)} & set(exact)
     assert len(planted) >= 15
     assert set(lsh) <= set(exact)
@@ -531,37 +539,42 @@ def test_token_chunks_cover_every_token_with_overlap(spark):
     assert ch1[0].chunk_text.split()[-16:] == ch1[1].chunk_text.split()[:16]
 
 
-def test_tfidf_prefers_rare_terms(spark):
+def test_tfidf_prefers_rare_terms(spark, monkeypatch):
     """A term unique to one doc must outrank corpus-wide stopwords at
     equal tf; df in the output is the true document frequency."""
+    from big_data_hw_23_24_spark.operators import textstats
     from big_data_hw_23_24_spark.operators.textstats import tfidf_top_terms
 
     rows = [(i, f"common filler words everywhere special{i} "
                 "common filler words everywhere") for i in range(10)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = tfidf_top_terms(docs, k=1).collect()
+    monkeypatch.setattr(textstats, "TFIDF_K", 1)
+    got = tfidf_top_terms(docs).collect()
     assert len(got) == 10
     for r in got:
         assert r.term == f"special{r.doc_id}"  # rare term wins rank 1
         assert r.df == 1 and r.tf == 1 and r.rank == 1
     # stopwords appear in all 10 docs → df = 10
-    all3 = tfidf_top_terms(docs, k=5).collect()
+    monkeypatch.setattr(textstats, "TFIDF_K", 5)
+    all3 = tfidf_top_terms(docs).collect()
     dfs = {r.term: r.df for r in all3}
     assert dfs.get("common") == 10 and dfs.get("filler") == 10
 
 
-def test_embedding_lsh_null_embeddings_excluded(spark):
+def test_embedding_lsh_null_embeddings_excluded(spark, monkeypatch):
     """A null embedding row must neither crash the signature UDF nor
     appear in any pair."""
     import numpy as np
 
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import embedding_lsh_pairs
 
+    monkeypatch.setattr(similarity, "COSINE_THRESHOLD", 0.9)
     rng = np.random.default_rng(3)
     v = rng.standard_normal(16).astype(np.float32).tolist()
     rows = [(0, v), (1, v), (2, None)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = embedding_lsh_pairs(emb, 0.9).collect()
+    got = embedding_lsh_pairs(emb).collect()
     assert {(r.id_a, r.id_b) for r in got} == {(0, 1)}
     assert got[0].cosine == 1.0
 
@@ -663,7 +676,7 @@ def test_contamination_scan_flags_overlap_only(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r.doc_id: (r.n_shared, r.contaminated)
            for r in contamination_scan(
-               docs, docs.where("doc_id = 1"), n=8).collect()}
+               docs, docs.where("doc_id = 1")).collect()}
     assert got[1] == (3, True)     # 10 words → 3 distinct 8-grams, all shared
     assert got[2] == (1, True)     # "one..eight" survives the shift
     assert got[3] == (0, False)
@@ -707,7 +720,7 @@ def test_quantized_topk_recall_and_exact_scores(spark, emb):
 
     queries = emb.where(F.col("vec_id") < 20)
     brute = cosine_topk(emb, queries, k=10).collect()
-    quant = quantized_topk(emb, queries, k=10, rerank_factor=4).collect()
+    quant = quantized_topk(emb, queries).collect()
     b = {(r.query_id, r.neighbor_id) for r in brute}
     v = {(r.query_id, r.neighbor_id) for r in quant}
     recall = len(b & v) / len(b)
@@ -1016,7 +1029,7 @@ def test_boilerplate_ngrams_planted_template(spark):
         (7, "short"),
     ], ["doc_id", "text"])
     mined = {r.ngram: (r.n_docs, r.n_occ)
-             for r in boilerplate_ngrams(docs, n=8, min_docs=3).collect()}
+             for r in boilerplate_ngrams(docs).collect()}
     # the 9-word footer yields 2 overlapping 8-grams, each in 3 docs
     assert len(mined) == 2
     assert all(v == (3, 3) for v in mined.values())
@@ -1074,8 +1087,7 @@ def test_pq_rerank_returns_exact_best_of_shortlist(spark, emb):
                          exclude_self=True).collect():
         short.setdefault(r.query_id, set()).add(r.neighbor_id)
     rerank = {}
-    for r in pq_rerank_topk(emb, codes, queries, cb, m=m, k_top=10,
-                            fetch=40).collect():
+    for r in pq_rerank_topk(emb, codes, queries, cb, m=m).collect():
         rerank.setdefault(r.query_id, []).append(
             (r.rank, r.neighbor_id, r.dist_sq))
     vecs = {r.vec_id: np.array(r.embedding, dtype=np.float64)
@@ -1125,15 +1137,17 @@ def _ref_bpe(word_counts, n):
     return merges
 
 
-def test_bpe_train_matches_pure_python_reference(spark):
+def test_bpe_train_matches_pure_python_reference(spark, monkeypatch):
     from collections import Counter
 
+    from big_data_hw_23_24_spark.operators import tokenizer
     from big_data_hw_23_24_spark.operators.tokenizer import bpe_train
 
+    monkeypatch.setattr(tokenizer, "BPE_MERGES", 6)
     corpus = ("hug " * 10 + "pug " * 5 + "pun " * 12 + "bun " * 4
               + "hugs " * 5 + "aaa " * 3).strip()
     docs = spark.createDataFrame([(1, corpus)], ["doc_id", "text"])
-    got = bpe_train(docs, n_merges=6)
+    got = bpe_train(docs)
     want = _ref_bpe(Counter(corpus.split(" ")), 6)
     assert got == want
     # the overlapping-pair + chained-merge word: "aaa" must merge
@@ -1142,27 +1156,30 @@ def test_bpe_train_matches_pure_python_reference(spark):
     assert not aa or aa[0][2] == 6
 
 
-def test_bpe_train_merge_fold_edge_cases(spark):
+def test_bpe_train_merge_fold_edge_cases(spark, monkeypatch):
+    from big_data_hw_23_24_spark.operators import tokenizer
     from big_data_hw_23_24_spark.operators.tokenizer import bpe_train
 
     # single-char words produce no pairs; empty corpus stops early
     docs = spark.createDataFrame([(1, "a b c a b a")], ["doc_id", "text"])
-    got = bpe_train(docs, n_merges=3)
+    monkeypatch.setattr(tokenizer, "BPE_MERGES", 3)
+    got = bpe_train(docs)
     assert got == []
-    assert bpe_train(docs, n_merges=0) == []
+    monkeypatch.setattr(tokenizer, "BPE_MERGES", 0)
+    assert bpe_train(docs) == []
 
 
-def test_bpe_encode_round_trip_and_agrees_with_reference(spark):
-    from collections import Counter
-
+def test_bpe_encode_round_trip_and_agrees_with_reference(spark, monkeypatch):
+    from big_data_hw_23_24_spark.operators import tokenizer
     from big_data_hw_23_24_spark.operators.tokenizer import (
         bpe_encode, bpe_train)
 
+    monkeypatch.setattr(tokenizer, "BPE_MERGES", 6)
     corpus = ("hug " * 10 + "pug " * 5 + "pun " * 12 + "bun " * 4
               + "hugs " * 5 + "aaa " * 3).strip()
     docs = spark.createDataFrame(
         [(1, corpus), (2, "hug pun zzz"), (3, "")], ["doc_id", "text"])
-    merges = [(a, b) for a, b, _ in bpe_train(docs.where("doc_id = 1"), 6)]
+    merges = [(a, b) for a, b, _ in bpe_train(docs.where("doc_id = 1"))]
     enc = {r.doc_id: r for r in bpe_encode(docs, merges).collect()}
     # lossless: concatenated symbols restore the exact token stream
     for d, text in [(1, corpus), (2, "hug pun zzz"), (3, "")]:
@@ -1358,9 +1375,12 @@ def test_sentence_chunks_oversized_sentence_keeps_own_chunk(spark):
 
 # --- PMI collocations (E89) --------------------------------------------------
 
-def test_pmi_collocations_rank_phrases_above_chance_pairs(spark):
+def test_pmi_collocations_rank_phrases_above_chance_pairs(spark,
+                                                          monkeypatch):
+    from big_data_hw_23_24_spark.operators import textstats
     from big_data_hw_23_24_spark.operators.textstats import pmi_collocations
 
+    monkeypatch.setattr(textstats, "PMI_K", 10)
     # "new york" always co-occurs (PMI high); "the", "cat" appear often
     # but independently (PMI ~ 0); hapax pair filtered by min_count
     rows = []
@@ -1369,7 +1389,7 @@ def test_pmi_collocations_rank_phrases_above_chance_pairs(spark):
         rows.append((100 + i, "the dog ran and the cat slept"))
     rows.append((999, "hapax pairing"))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = pmi_collocations(docs, min_count=5, k=10).collect()
+    out = pmi_collocations(docs).collect()
     by_pair = {(r.w1, r.w2): r for r in out}
     assert ("new", "york") in by_pair
     top = out[0]
@@ -1382,33 +1402,25 @@ def test_pmi_collocations_rank_phrases_above_chance_pairs(spark):
         assert by_pair[("new", "york")].pmi > by_pair[("the", "cat")].pmi
 
 
-def test_pmi_collocations_validation(spark):
-    import pytest as _pytest
-
-    from big_data_hw_23_24_spark.operators.textstats import pmi_collocations
-
-    d = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-    with _pytest.raises(ValueError, match="min_count"):
-        pmi_collocations(d, min_count=0)
-    with _pytest.raises(ValueError, match="k must be"):
-        pmi_collocations(d, k=0)
-
 
 # --- PCA (E90) ---------------------------------------------------------------
 
-def test_pca_recovers_planted_anisotropy_and_is_orthonormal(spark):
+def test_pca_recovers_planted_anisotropy_and_is_orthonormal(spark,
+                                                            monkeypatch):
     import numpy as np
 
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import (
         pca_components, pca_project)
 
+    monkeypatch.setattr(similarity, "PCA_COMPONENTS", 3)
     rng = np.random.default_rng(11)
     base = rng.normal(size=(300, 6))
     base[:, 2] *= 10.0                       # dominant variance on dim 2
     base[:, 5] *= 4.0                        # second on dim 5
     rows = [(i, v.tolist()) for i, v in enumerate(base.astype(np.float32))]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    comps = pca_components(df, n_components=3)
+    comps = pca_components(df)
     assert comps.shape == (3, 6)
     # orthonormal basis
     assert np.allclose(comps @ comps.T, np.eye(3), atol=1e-8)
@@ -1421,25 +1433,25 @@ def test_pca_recovers_planted_anisotropy_and_is_orthonormal(spark):
     var = proj.var(axis=0)
     assert var[0] > var[1] > var[2]
     # partitioning invariance: identical basis from a reshuffled input
-    comps2 = pca_components(df.repartition(13), n_components=3)
+    comps2 = pca_components(df.repartition(13))
     assert np.allclose(comps, comps2, atol=1e-9)
 
 
-def test_pca_validation_and_null_vectors(spark):
-    import numpy as np
+def test_pca_validation_and_null_vectors(spark, monkeypatch):
     import pytest as _pytest
 
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import (
         pca_components, pca_project)
 
     df = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, [2.0, 1.0]), (3, None)],
         "vec_id long, embedding array<float>")
+    monkeypatch.setattr(similarity, "PCA_COMPONENTS", 3)
     with _pytest.raises(ValueError, match="n_components"):
-        pca_components(df, n_components=0)
-    with _pytest.raises(ValueError, match="n_components"):
-        pca_components(df, n_components=3)
-    comps = pca_components(df, n_components=1)
+        pca_components(df)
+    monkeypatch.setattr(similarity, "PCA_COMPONENTS", 1)
+    comps = pca_components(df)
     out = {r.vec_id: r.projected for r in pca_project(df, comps).collect()}
     assert out[3] is None                    # null propagates
     assert len(out[1]) == 1
@@ -1843,16 +1855,18 @@ def test_incremental_dedup_bloom_matches_exact_and_routes(spark):
 
 # --- length-bucketed padded batching (r8) --------------------------------------
 
-def test_length_batches_structure_and_waste_dominance(spark):
+def test_length_batches_structure_and_waste_dominance(spark, monkeypatch):
     """Full batches of exactly B, batch_max non-decreasing in batch_id
     (batches are contiguous length ranges), pad_waste arithmetic, and
     the point of the operator: length-sorted batching never wastes
     more padding than arrival-order batching on the same corpus."""
+    from big_data_hw_23_24_spark.operators import packing
     from big_data_hw_23_24_spark.operators.packing import length_batches
 
+    monkeypatch.setattr(packing, "BATCH_SIZE", 8)
     rows = [(i, " ".join(["w"] * ((i * 37) % 100 + 1))) for i in range(100)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = length_batches(docs, batch_size=8).collect()
+    out = length_batches(docs).collect()
     assert len(out) == 100
     from collections import Counter
     sizes = Counter(r.batch_id for r in out)
@@ -2030,7 +2044,7 @@ def test_rake_keyphrases_hand_computed(spark):
     docs = spark.createDataFrame(
         [(1, "deep learning _ deep model _ fast")],
         "doc_id long, text string")
-    out = rake_keyphrases(docs, ["_"], k=3).collect()
+    out = rake_keyphrases(docs, ["_"]).collect()
     # word stats over candidates: deep freq=2 deg=2+2=4 -> 2000
     #   learning freq=1 deg=2 -> 2000; model freq=1 deg=2 -> 2000
     #   fast freq=1 deg=1 -> 1000
@@ -2044,38 +2058,39 @@ def test_rake_keyphrases_hand_computed(spark):
         "deep learning", "deep model", "fast"]
 
 
-def test_rake_keyphrases_word_order_and_repeats(spark):
+def test_rake_keyphrases_word_order_and_repeats(spark, monkeypatch):
     """Phrases preserve word order; a phrase occurring twice in a doc
     collapses to one ranked row."""
+    from big_data_hw_23_24_spark.operators import textstats
     from big_data_hw_23_24_spark.operators.textstats import rake_keyphrases
 
+    monkeypatch.setattr(textstats, "RAKE_K", 5)
     docs = spark.createDataFrame(
         [(1, "b a _ b a _ c")], "doc_id long, text string")
     out = {r.phrase: r for r in
-           rake_keyphrases(docs, ["_"], k=5).collect()}
+           rake_keyphrases(docs, ["_"]).collect()}
     assert set(out) == {"b a", "c"}  # order kept, duplicate collapsed
     assert out["b a"].rank == 1 and out["c"].rank == 2
 
 
 # --- privacy + safety gates (r8) -------------------------------------------------
 
-def test_k_anonymity_classes_and_null_grouping(spark):
+def test_k_anonymity_classes_and_null_grouping(spark, monkeypatch):
+    from big_data_hw_23_24_spark.operators import textstats
     from big_data_hw_23_24_spark.operators.textstats import (
         k_anonymity_report)
-    import pytest as _pytest
 
+    monkeypatch.setattr(textstats, "K_ANONYMITY", 3)
     df = spark.createDataFrame(
         [(1, "a", 30), (2, "a", 30), (3, "a", 30),
          (4, "b", 30), (5, None, 40), (6, None, 40)],
         "id long, region string, age long")
     out = {(r.region, r.age): r for r in
-           k_anonymity_report(df, ["region", "age"], k=3).collect()}
+           k_anonymity_report(df, ["region", "age"]).collect()}
     assert out[("a", 30)].class_size == 3 and not out[("a", 30)].at_risk
     assert out[("b", 30)].class_size == 1 and out[("b", 30)].at_risk
     # nulls form their own class (an identifying pattern themselves)
     assert out[(None, 40)].class_size == 2 and out[(None, 40)].at_risk
-    with _pytest.raises(ValueError):
-        k_anonymity_report(df, ["region"], k=0)
 
 
 def test_blocklist_gate_token_match_not_substring(spark):
@@ -2340,23 +2355,24 @@ def test_ivf_pinned_bridges_to_production_kernel(spark, emb, monkeypatch):
         dtype=np.float64)
     qs = emb.where(F.col("vec_id") < 5)
     pinned = {(r.query_id, r.neighbor_id): (r.cosine, r.rank)
-              for r in ivf_topk_pinned(emb, qs, k=10, n_lists=16,
-                                       nprobe=4).collect()}
+              for r in ivf_topk_pinned(emb, qs, k=10).collect()}
     monkeypatch.setattr(similarity, "_kmeans_lite",
                         lambda sample, n_lists: cents)
     kernel = {(r.query_id, r.neighbor_id): (r.cosine, r.rank)
-              for r in ivf_topk(emb, qs, k=10).collect()}
+              for r in ivf_topk(emb, qs).collect()}
     assert pinned == kernel
 
 
-def test_ivf_pinned_scores_only_probed_lists(spark, emb):
+def test_ivf_pinned_scores_only_probed_lists(spark, emb, monkeypatch):
     """Approximation contract: every reported neighbor sits in one of
     the query's nprobe nearest lists (candidates are probe-pruned,
     never an all-pairs scan)."""
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import ivf_topk_pinned
 
+    monkeypatch.setattr(similarity, "IVF_NPROBE", 2)
     qs = emb.where(F.col("vec_id") < 5)
-    out = ivf_topk_pinned(emb, qs, k=10, n_lists=16, nprobe=2)
+    out = ivf_topk_pinned(emb, qs, k=10)
     # recompute assignment + probes relationally and anti-join
     from pyspark.sql import Window as W
     cents = (emb.where(F.col("vec_id") < 16)
@@ -2407,19 +2423,22 @@ def test_dedup_eval_confusion_identities_and_planted_pair(spark):
 
 # --- time-decayed trending items (E141) ------------------------------------------------
 
-def test_trending_items_decay_arithmetic_and_freshness_order(spark):
+def test_trending_items_decay_arithmetic_and_freshness_order(spark,
+                                                             monkeypatch):
     """Hand-computed decayed scores: an item with 3 events today beats
     one with 20 events a week ago; weights are exact integer micros
     (1e6 >> days); items past the decay horizon contribute zero."""
+    from big_data_hw_23_24_spark.operators import timeseries
     from big_data_hw_23_24_spark.operators.timeseries import trending_items
 
+    monkeypatch.setattr(timeseries, "TRENDING_K", 10)
     D = 86_400_000_000  # one day of microseconds
     now = 1_700_000_000_000_000
     rows = ([("fresh", now), ("fresh", now - 1), ("fresh", now - 2)]
             + [("stale", now - 7 * D + i) for i in range(20)]
             + [("ancient", now - 30 * D)])
     df = spark.createDataFrame(rows, "item string, ts long")
-    out = {r.item: r for r in trending_items(df, k=10).collect()}
+    out = {r.item: r for r in trending_items(df).collect()}
     assert out["fresh"].decayed_micros == 3_000_000       # 3 x 1e6
     assert out["stale"].decayed_micros == 20 * 7812       # floor(1e6/128)
     assert out["ancient"].decayed_micros == 0             # past horizon

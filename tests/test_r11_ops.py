@@ -12,9 +12,10 @@ from pyspark.sql import functions as F
 _SETTINGS = dict(max_examples=12, deadline=None)
 
 
-def test_blocked_fuzzy_drops_oversized_blocks(spark):
+def test_blocked_fuzzy_drops_oversized_blocks(spark, monkeypatch):
     """A degenerate block (empty key, 'smith') is a quadratic bucket;
-    the max_block guard must drop it entirely, not explode."""
+    the MAX_BLOCK guard must drop it entirely, not explode."""
+    from big_data_hw_23_24_spark.operators import linkage
     from big_data_hw_23_24_spark.operators.linkage import (
         blocked_fuzzy_pairs)
 
@@ -22,15 +23,14 @@ def test_blocked_fuzzy_drops_oversized_blocks(spark):
     rows += [(100, "small alpha", "ok"), (101, "small alphb", "ok"),
              (102, "other words", "ok2")]
     df = spark.createDataFrame(rows, "doc_id long, e string, blk string")
+    monkeypatch.setattr(linkage, "MAX_BLOCK", 10)
     got = {(r.id_a, r.id_b, r.dist)
-           for r in blocked_fuzzy_pairs(df, "e", F.col("blk"),
-                                        max_dist=2, max_block=10)
-           .collect()}
+           for r in blocked_fuzzy_pairs(df, "e", F.col("blk")).collect()}
     # the 50-row mega block contributes nothing; the small block pairs
     assert got == {(100, 101, 1)}
     # raising the cap readmits the mega block
-    n = blocked_fuzzy_pairs(df, "e", F.col("blk"), max_dist=2,
-                            max_block=100).count()
+    monkeypatch.setattr(linkage, "MAX_BLOCK", 100)
+    n = blocked_fuzzy_pairs(df, "e", F.col("blk")).count()
     assert n > 100  # 50 rows over 2 near-identical entities
 
 
@@ -43,6 +43,7 @@ def test_snm_matches_rank_window_definition(spark, shuffle_partitions, ents):
     """On random short strings (heavy ties), the bucket-adjacency SNM
     equals the definitional rank-window self-join — across forced
     partition boundaries."""
+    from big_data_hw_23_24_spark.operators import linkage
     from big_data_hw_23_24_spark.operators.linkage import (
         sorted_neighborhood_pairs)
 
@@ -50,9 +51,11 @@ def test_snm_matches_rank_window_definition(spark, shuffle_partitions, ents):
     rows = [(i, e) for i, e in enumerate(ents)]
     df = spark.createDataFrame(rows, "doc_id long, e string")
     shuffle_partitions(4)
-    got = {(r.id_a, r.id_b, r.rank_gap, r.dist)
-           for r in sorted_neighborhood_pairs(
-               df, "e", window=w, max_dist=md).collect()}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(linkage, "MAX_EDIT_DIST", md)
+        got = {(r.id_a, r.id_b, r.rank_gap, r.dist)
+               for r in sorted_neighborhood_pairs(
+                   df, "e", window=w).collect()}
     # brute force: rank by (e, id), all pairs within w ranks
     ranked = sorted(rows, key=lambda r: (r[1], r[0]))
     want = set()
@@ -84,10 +87,10 @@ def test_calendar_gaps_recovers_planted_runs(spark):
     days = [f"2024-02-{d:02d}" for d in range(1, 21)]
     rows = [("a", d) for d in days if d[-2:] not in ("05", "06", "11")]
     rows += [("b", d) for d in days]
-    df = spark.createDataFrame(rows, "grp string, day string") \
-        .select("grp", F.col("day").cast("date").alias("day"))
-    got = {(r.grp, r.gap_start, r.gap_end, r.n_days)
-           for r in calendar_gaps(df, "day", "grp").collect()}
+    df = spark.createDataFrame(rows, "event_type string, day string") \
+        .select("event_type", F.col("day").cast("date").alias("day"))
+    got = {(r.event_type, r.gap_start, r.gap_end, r.n_days)
+           for r in calendar_gaps(df, "day").collect()}
     assert got == {("a", "2024-02-05", "2024-02-06", 2),
                    ("a", "2024-02-11", "2024-02-11", 1)}
 
@@ -293,7 +296,7 @@ def test_prefix_completions_ranking(spark):
            [("key arg mid",)] * 2 + [("key ape x",)] + [("zz",)]
     df = spark.createDataFrame(rows, "text string")
     got = [(r.prefix, r.rank, r.completion, r.n) for r in
-           prefix_completions(df, n_words=2, prefix_len=3, k=3)
+           prefix_completions(df)
            .orderBy("prefix", "rank").collect()]
     # ties on n=3 break by completion asc; k=3 drops 'key ape'
     assert got == [("key", 1, "key agg", 3), ("key", 2, "key all", 3),

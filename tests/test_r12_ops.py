@@ -10,14 +10,17 @@ def _emb(spark, rows):
                                  "vec_id long, embedding array<double>")
 
 
-def test_reciprocal_ivf_recovers_planted_partners(spark):
+def test_reciprocal_ivf_recovers_planted_partners(spark, monkeypatch):
     """One-hot A vectors and their scaled copies in B, every vector
     its own pinned list, nprobe=1: each direction's nearest list IS
     the planted partner's, so all pairs come back mutual with
     cosine 1."""
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import (
         reciprocal_best_match_ivf)
 
+    monkeypatch.setattr(similarity, "IVF_NPROBE", 1)
+    monkeypatch.setattr(similarity, "IVF_N_LISTS", 200)
     dim = 8
     a = _emb(spark, [(i, [1.0 if d == i else 0.0 for d in range(dim)])
                      for i in range(dim)])
@@ -25,15 +28,14 @@ def test_reciprocal_ivf_recovers_planted_partners(spark):
                       [0.9 if d == i else 0.0 for d in range(dim)])
                      for i in range(dim)])
     got = sorted((r.id_a, r.id_b, r.cosine) for r in
-                 reciprocal_best_match_ivf(
-                     a, b, nprobe=1, cent_below_b=200,
-                     cent_below_a=dim).collect())
+                 reciprocal_best_match_ivf(a, b, cent_below_a=dim).collect())
     assert got == [(i, 100 + i, 1.0) for i in range(dim)]
 
 
-def test_reciprocal_ivf_subset_of_exact_candidates(spark):
+def test_reciprocal_ivf_subset_of_exact_candidates(spark, monkeypatch):
     """With nprobe covering every list, IVF-mutual equals the exact
     mutual set (the gate's recall-1 configuration)."""
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import (
         reciprocal_best_match, reciprocal_best_match_ivf)
 
@@ -47,10 +49,10 @@ def test_reciprocal_ivf_subset_of_exact_candidates(spark):
              reciprocal_best_match(a, b).collect()}
     # cent_below covers all ids on both sides -> every vector is a
     # list; nprobe >= list count -> every list probed -> exact scan
+    monkeypatch.setattr(similarity, "IVF_NPROBE", 200)
+    monkeypatch.setattr(similarity, "IVF_N_LISTS", 200)
     pred = {(r.id_a, r.id_b) for r in
-            reciprocal_best_match_ivf(a, b, nprobe=200,
-                                      cent_below_b=200,
-                                      cent_below_a=100).collect()}
+            reciprocal_best_match_ivf(a, b, cent_below_a=100).collect()}
     assert pred == exact
 
 
@@ -132,11 +134,13 @@ def test_readability_hand_case(spark):
     assert (r2.n_words, r2.n_sentences, r2.n_syllables) == (2, 1, 2)
 
 
-def test_domain_cap_extracts_registrable_and_caps(spark):
+def test_domain_cap_extracts_registrable_and_caps(spark, monkeypatch):
     """Registrable-domain heuristic (scheme/path/port stripped, last
     two labels) + the cap keeps exactly k best per domain."""
+    from big_data_hw_23_24_spark.operators import cleaning
     from big_data_hw_23_24_spark.operators.cleaning import domain_cap
 
+    monkeypatch.setattr(cleaning, "DOMAIN_CAP_K", 2)
     docs = spark.createDataFrame(
         [(1, 100, "https://a.b.example.com/x?q=1"),
          (2, 300, "http://example.com/y"),
@@ -145,7 +149,7 @@ def test_domain_cap_extracts_registrable_and_caps(spark):
          (5, 10, "sub.other.org/w")],
         "doc_id long, n_chars long, url string")
     got = sorted((r.domain, r.doc_id, r.rank) for r in domain_cap(
-        docs, k=2, order_by=[F.col("n_chars").desc()]).collect())
+        docs, order_by=[F.col("n_chars").desc()]).collect())
     assert got == [("example.com", 2, 1), ("example.com", 3, 2),
                    ("other.org", 4, 1), ("other.org", 5, 2)]
 
@@ -236,18 +240,20 @@ def test_ab_uplift_matches_hand_welch(spark):
         .z_score is None
 
 
-def test_rolling_distinct_kmv_merge_equals_window_sketch(spark):
+def test_rolling_distinct_kmv_merge_equals_window_sketch(spark, monkeypatch):
     """Mergeability: the merged per-day sketches must equal the sketch
     built directly on each window's distinct items — and below k the
     estimate IS the exact count (partial windows included)."""
+    from big_data_hw_23_24_spark.operators import frequent
     from big_data_hw_23_24_spark.operators.frequent import (
         rolling_distinct_kmv)
 
+    monkeypatch.setattr(frequent, "ROLLING_WINDOW_DAYS", 3)
+    monkeypatch.setattr(frequent, "ROLLING_KMV_K", 64)
     rows = [(d, u) for d in range(10, 20) for u in range(d * 3 % 7 + 3)]
     df = spark.createDataFrame(rows, "d long, user long")
     got = {r.day_num: r for r in
-           rolling_distinct_kmv(df, "user", "d", window_days=3,
-                                k=64).collect()}
+           rolling_distinct_kmv(df, "user", "d").collect()}
     assert set(got) == set(range(10, 20))
     for wd, r in got.items():
         members = {u for d, u in rows if wd - 2 <= d <= wd}
@@ -259,26 +265,25 @@ def test_rolling_distinct_kmv_merge_equals_window_sketch(spark):
         assert r.est_distinct == float(len(members))
 
 
-def test_head_tail_truncate_boundaries(spark):
+def test_head_tail_truncate_boundaries(spark, monkeypatch):
     """At-budget passes through byte-identical; over-budget keeps
-    exactly head + marker + tail; geometry mismatch raises."""
-    import pytest
+    exactly head + marker + tail."""
+    from big_data_hw_23_24_spark.operators import packing
     from big_data_hw_23_24_spark.operators.packing import (
         head_tail_truncate)
 
+    monkeypatch.setattr(packing, "TRUNC_HEAD", 5)
+    monkeypatch.setattr(packing, "TRUNC_TAIL", 2)
     at = " ".join(str(i) for i in range(8))
     over = " ".join(str(i) for i in range(20))
     docs = spark.createDataFrame([(1, at), (2, over)],
                                  "doc_id long, text string")
-    got = {r.doc_id: r for r in head_tail_truncate(
-        docs, budget=8, head=5, tail=2).collect()}
+    got = {r.doc_id: r for r in head_tail_truncate(docs).collect()}
     assert not got[1].truncated and got[1].fitted_text == at
     assert got[1].n_kept == 8
     r2 = got[2]
     assert r2.truncated and r2.n_tokens == 20 and r2.n_kept == 8
     assert r2.fitted_text == "0 1 2 3 4 ... 18 19"
-    with pytest.raises(ValueError, match="budget"):
-        head_tail_truncate(docs, budget=8, head=5, tail=3)
 
 
 def test_setsim_prefix_equals_bruteforce(spark):
@@ -305,7 +310,7 @@ def test_setsim_prefix_equals_bruteforce(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string") \
         .repartition(7)
     got = {(r.id_a, r.id_b): r.jaccard for r in
-           setsim_join_prefix(docs, threshold=0.7).collect()}
+           setsim_join_prefix(docs).collect()}
     # brute force over string shingle sets (hash sets are 1:1 barring
     # 64-bit collisions)
     sh = {r.doc_id: set(r.shingles) for r in
@@ -335,7 +340,7 @@ def test_setsim_prefix_survives_long_documents(spark):
     docs = spark.createDataFrame(
         [(1, long_text), (2, long_text)],  # exact dup pair
         "doc_id long, text string")
-    got = setsim_join_prefix(docs, threshold=0.7).collect()
+    got = setsim_join_prefix(docs).collect()
     assert [(r.id_a, r.id_b, r.jaccard) for r in got] == [(1, 2, 1.0)]
 
 
@@ -351,22 +356,28 @@ def test_ab_uplift_empty_arm_reports_null_means(spark):
     assert r.mean_b is None and r.uplift is None and r.z_score is None
 
 
-def test_head_tail_passthrough_is_byte_identical(spark):
+def test_head_tail_passthrough_is_byte_identical(spark, monkeypatch):
     """Repeated whitespace must survive the under-budget branch."""
+    from big_data_hw_23_24_spark.operators import packing
     from big_data_hw_23_24_spark.operators.packing import (
         head_tail_truncate)
 
+    monkeypatch.setattr(packing, "TRUNC_HEAD", 5)
+    monkeypatch.setattr(packing, "TRUNC_TAIL", 2)
+
     docs = spark.createDataFrame([(1, "hello  world ")],
                                  "doc_id long, text string")
-    r = head_tail_truncate(docs, budget=8, head=5, tail=2).collect()[0]
+    r = head_tail_truncate(docs).collect()[0]
     assert not r.truncated and r.fitted_text == "hello  world "
 
 
-def test_domain_cap_strips_port_and_handles_dotless(spark):
+def test_domain_cap_strips_port_and_handles_dotless(spark, monkeypatch):
     """A port-varied URL must not mint a fresh k-budget; dotless
     hosts keep their own identity instead of pooling into ''."""
+    from big_data_hw_23_24_spark.operators import cleaning
     from big_data_hw_23_24_spark.operators.cleaning import domain_cap
 
+    monkeypatch.setattr(cleaning, "DOMAIN_CAP_K", 2)
     docs = spark.createDataFrame(
         [(1, 30, "https://example.com/x"),
          (2, 20, "https://example.com:8080/y"),
@@ -375,7 +386,7 @@ def test_domain_cap_strips_port_and_handles_dotless(spark):
          (5, 4, "intranethost/b")],
         "doc_id long, n_chars long, url string")
     got = sorted((r.domain, r.doc_id) for r in domain_cap(
-        docs, k=2, order_by=[F.col("n_chars").desc()]).collect())
+        docs, order_by=[F.col("n_chars").desc()]).collect())
     assert got == [("example.com", 1), ("example.com", 2),
                    ("intranethost", 5), ("localhost", 4)]
 
@@ -415,8 +426,7 @@ def test_bootstrap_ci_matches_python_recompute(spark):
             for gi, g in enumerate(["x", "y"]) for i in range(10)]
     units = spark.createDataFrame(rows, "grp string, unit string, cents long")
     got = {r.grp: r for r in
-           bootstrap_ci(units, ["grp"], "unit", "cents",
-                        n_replicates=41, alpha=0.05).collect()}
+           bootstrap_ci(units, ["grp"], "unit", "cents").collect()}
 
     def r6(v):  # Spark round = HALF_UP; python round is banker's
         return math.floor(v * 1e6 + 0.5) / 1e6

@@ -10,7 +10,6 @@ from __future__ import annotations
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def _poisson_weight(seed: str) -> int:
@@ -23,18 +22,19 @@ def _poisson_weight(seed: str) -> int:
     return sum(1 for c in POISSON1_CDF if u >= c)
 
 
-def test_bootstrap_ci_null_unit_draws_sentinel_seed(spark):
+def test_bootstrap_ci_null_unit_draws_sentinel_seed(spark, monkeypatch):
     """A NULL unit id must seed as the '\\N' sentinel — the same
     portable string an oracle's coalesce states — not vanish from
     concat_ws (pre-fix: Spark skipped the component, so Spark drew
     weights for a seed string the oracle never forms)."""
+    from big_data_hw_23_24_spark.operators import grouped
     from big_data_hw_23_24_spark.operators.grouped import bootstrap_ci
 
+    monkeypatch.setattr(grouped, "BOOTSTRAP_REPLICATES", 5)
     units = spark.createDataFrame(
         [("g", None, 100)] + [("g", str(i), 100 + i) for i in range(9)],
         "grp string, uid string, cents int")
-    out = bootstrap_ci(units, ["grp"], "uid", "cents",
-                       n_replicates=5).collect()
+    out = bootstrap_ci(units, ["grp"], "uid", "cents").collect()
     assert len(out) == 1 and out[0].n_units == 10
     # recompute the replicate means in Python with the sentinel seed;
     # the operator's CI order statistics must match exactly

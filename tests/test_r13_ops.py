@@ -226,18 +226,20 @@ def _labeled(spark, rows):
         rows, "vec_id long, embedding array<double>, label int")
 
 
-def test_hubness_planted_hub_dominates(spark):
+def test_hubness_planted_hub_dominates(spark, monkeypatch):
     """Standard-basis satellites are mutually orthogonal (cos 0) but
     all at cos 1/sqrt(d) to the all-ones hub: with k=1 every
     satellite's nearest neighbor IS the hub, so in-degree piles up on
     one vector and the distribution is right-skewed."""
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import hubness_report
 
+    monkeypatch.setattr(similarity, "KNN_K", 1)
     d = 8
     rows = [(0, [1.0] * d, 0)]  # the hub
     rows += [(i, [1.0 if j == i - 1 else 0.0 for j in range(d)], 0)
              for i in range(1, d + 1)]
-    r = hubness_report(_labeled(spark, rows), k=1).collect()[0]
+    r = hubness_report(_labeled(spark, rows)).collect()[0]
     assert r.n_vectors == d + 1
     assert r.max_in_degree == d  # every satellite points at the hub
     # the hub's own pick (satellite 1, the id tiebreak) gets 1; every
@@ -246,28 +248,34 @@ def test_hubness_planted_hub_dominates(spark):
     assert r.skewness is not None and r.skewness > 0
 
 
-def test_prefix_dim_recall_perfect_when_suffix_is_noise_free(spark):
+def test_prefix_dim_recall_perfect_when_suffix_is_noise_free(spark,
+                                                            monkeypatch):
     """Vectors whose last half is all zeros: prefix cosine == full
     cosine, so recall must be exactly 1."""
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import (
         prefix_dim_recall)
 
+    monkeypatch.setattr(similarity, "KNN_K", 5)
+    monkeypatch.setattr(similarity, "RECALL_PREFIX_DIM", 4)
+    monkeypatch.setattr(similarity, "RECALL_QUERIES", 6)
     import random
     rng = random.Random(3)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(4)] + [0.0] * 4, 0)
             for i in range(25)]
-    r = prefix_dim_recall(_labeled(spark, rows), k=5, prefix=4,
-                          n_queries=6).collect()[0]
+    r = prefix_dim_recall(_labeled(spark, rows)).collect()[0]
     assert r.recall == 1.0
     assert r.n_queries == 6 and r.k == 5 and r.prefix_dim == 4
 
 
-def test_triplet_mining_picks_planted_structure(spark):
+def test_triplet_mining_picks_planted_structure(spark, monkeypatch):
     """Label 0: anchor + a near copy + a far same-label vector; the
     hardest positive is the FAR one. Negatives: one inside the
     semi-hard band, one closer than the positive (excluded)."""
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import triplet_mining
 
+    monkeypatch.setattr(similarity, "TRIPLET_ANCHORS_BELOW", 1)
     rows = [
         (0, [1.0, 0.0], 0),          # anchor
         (1, [0.99, 0.1], 0),         # easy positive (high cos)
@@ -276,52 +284,57 @@ def test_triplet_mining_picks_planted_structure(spark):
         (4, [-1.0, 0.2], 1),         # semi-hard negative (cos < 0)
     ]
     got = {r.anchor_id: r for r in
-           triplet_mining(_labeled(spark, rows),
-                          anchors_below=1).collect()}
+           triplet_mining(_labeled(spark, rows)).collect()}
     t = got[0]
     assert t.pos_id == 2 and t.pos_cos == 0.0
     assert t.neg_id == 4  # id 3 has cos > pos_cos, not semi-hard
     assert t.neg_cos < 0 and t.margin == t.pos_cos - t.neg_cos
 
 
-def test_triplet_mining_no_semihard_keeps_anchor_with_nulls(spark):
+def test_triplet_mining_no_semihard_keeps_anchor_with_nulls(spark,
+                                                           monkeypatch):
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import triplet_mining
 
+    monkeypatch.setattr(similarity, "TRIPLET_ANCHORS_BELOW", 1)
     rows = [
         (0, [1.0, 0.0], 0),
         (1, [0.0, 1.0], 0),       # positive at cos 0
         (2, [1.0, 0.01], 1),      # every negative closer than the positive
     ]
-    t = triplet_mining(_labeled(spark, rows), anchors_below=1).collect()[0]
+    t = triplet_mining(_labeled(spark, rows)).collect()[0]
     assert t.pos_id == 1 and t.neg_id is None and t.margin is None
 
 
-def test_rp_distortion_ratios_bracket_one(spark):
+def test_rp_distortion_ratios_bracket_one(spark, monkeypatch):
     """JL with +-1 signs: ratios concentrate around 1; the mean over
     pairs must land inside [min, max] and near 1."""
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import rp_distortion
 
+    monkeypatch.setattr(similarity, "RP_TARGET_DIM", 8)
+    monkeypatch.setattr(similarity, "RP_OFFSETS", (1, 5))
     import random
     rng = random.Random(11)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(32)], 0)
             for i in range(60)]
-    r = rp_distortion(_labeled(spark, rows), target_dim=8,
-                      offsets=(1, 5)).collect()[0]
+    r = rp_distortion(_labeled(spark, rows)).collect()[0]
     assert r.n_pairs == 59 + 55
     assert r.min_ratio <= r.mean_ratio <= r.max_ratio
     assert 0.5 < r.mean_ratio < 1.5
     assert r.min_ratio > 0
 
 
-def test_rp_distortion_deterministic_across_runs(spark):
+def test_rp_distortion_deterministic_across_runs(spark, monkeypatch):
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import rp_distortion
 
+    monkeypatch.setattr(similarity, "RP_TARGET_DIM", 4)
+    monkeypatch.setattr(similarity, "RP_OFFSETS", (1,))
     rows = [(i, [float((i * 7 + j * 3) % 5 - 2) for j in range(16)], 0)
             for i in range(20)]
-    a = rp_distortion(_labeled(spark, rows), target_dim=4,
-                      offsets=(1,)).collect()[0]
-    b = rp_distortion(_labeled(spark, rows), target_dim=4,
-                      offsets=(1,)).collect()[0]
+    a = rp_distortion(_labeled(spark, rows)).collect()[0]
+    b = rp_distortion(_labeled(spark, rows)).collect()[0]
     assert a == b
 
 
@@ -418,7 +431,7 @@ def test_peak_concurrency_hand_layout(spark):
     df = spark.createDataFrame(rows, "user_id long, event_id long, s string") \
         .select("user_id", "event_id",
                 F.col("s").cast("timestamp").alias("ts"))
-    r = peak_concurrency(df, gap_minutes=30).collect()
+    r = peak_concurrency(df).collect()
     assert len(r) == 1
     assert r[0].day == "2024-03-01"
     assert r[0].peak == 2
@@ -439,7 +452,7 @@ def test_peak_concurrency_end_exclusive_touching_sessions(spark):
     df = spark.createDataFrame(rows, "user_id long, event_id long, s string") \
         .select("user_id", "event_id",
                 F.col("s").cast("timestamp").alias("ts"))
-    r = peak_concurrency(df, gap_minutes=30).collect()
+    r = peak_concurrency(df).collect()
     assert r[0].peak == 1
 
 
@@ -490,40 +503,46 @@ def test_hll_registers_merge_equals_whole(spark):
     assert got == want
 
 
-def test_hll_estimate_within_stderr(spark):
+def test_hll_estimate_within_stderr(spark, monkeypatch):
     """n=2000 distinct at m=256: the estimate must land within ~5
     standard errors (1.04/sqrt(m) ~ 6.5%) of the truth."""
+    from big_data_hw_23_24_spark.operators import frequent
     from big_data_hw_23_24_spark.operators.frequent import hll_report
 
+    monkeypatch.setattr(frequent, "HLL_PS", (8,))
     df = spark.createDataFrame([("g", i) for i in range(2000)],
                                "grp string, item long")
     r = {row.m: row for row in
-         hll_report(df, "item", "grp", ps=(8,)).collect()}
+         hll_report(df, "item", "grp").collect()}
     row = r[256]
     assert row.n_exact == 2000
     assert abs(row.rel_err) < 5 * 1.04 / (256 ** 0.5)
 
 
-def test_hll_linear_counting_small_n(spark):
+def test_hll_linear_counting_small_n(spark, monkeypatch):
     """n=30 at m=4096: the small-range branch (linear counting) is
     near-exact — most registers empty, est ~ m ln(m/V)."""
+    from big_data_hw_23_24_spark.operators import frequent
     from big_data_hw_23_24_spark.operators.frequent import hll_report
 
+    monkeypatch.setattr(frequent, "HLL_PS", (12,))
     df = spark.createDataFrame([("g", i) for i in range(30)],
                                "grp string, item long")
-    row = hll_report(df, "item", "grp", ps=(12,)).collect()[0]
+    row = hll_report(df, "item", "grp").collect()[0]
     assert row.n_exact == 30
     assert abs(row.rel_err) < 0.1  # LC is tight when n << m
 
 
-def test_hll_duplicates_dont_move_registers(spark):
+def test_hll_duplicates_dont_move_registers(spark, monkeypatch):
+    from big_data_hw_23_24_spark.operators import frequent
     from big_data_hw_23_24_spark.operators.frequent import hll_report
 
+    monkeypatch.setattr(frequent, "HLL_PS", (8,))
     once = spark.createDataFrame([("g", i) for i in range(500)],
                                  "grp string, item long")
     thrice = once.unionByName(once).unionByName(once)
-    a = hll_report(once, "item", "grp", ps=(8,)).collect()[0]
-    b = hll_report(thrice, "item", "grp", ps=(8,)).collect()[0]
+    a = hll_report(once, "item", "grp").collect()[0]
+    b = hll_report(thrice, "item", "grp").collect()[0]
     assert a.est == b.est and a.n_exact == b.n_exact
 
 
@@ -549,7 +568,7 @@ def test_rec_hitrate_planted_pattern(spark):
         rows, "user_id long, event_id long, s string, item long") \
         .select("user_id", "event_id",
                 F.col("s").cast("timestamp").alias("ts"), "item")
-    r = rec_hitrate(df, split_day=25, k=3).collect()[0]
+    r = rec_hitrate(df, split_day=25).collect()[0]
     assert r.n_test_pairs == 1
     assert r.n_hits == 1
     assert r.hitrate == 1.0
@@ -572,40 +591,45 @@ def test_rec_hitrate_train_items_not_counted(spark):
         rows, "user_id long, event_id long, s string, item long") \
         .select("user_id", "event_id",
                 F.col("s").cast("timestamp").alias("ts"), "item")
-    r = rec_hitrate(df, split_day=25, k=3).collect()[0]
+    r = rec_hitrate(df, split_day=25).collect()[0]
     assert r.n_test_pairs == 0 and r.n_hits == 0
     assert r.hitrate is None  # 0/0 -> null by ANSI division contract
 
 
 # ------------------------------------------------------- retrieval MRR ----
 
-def test_origin_eval_perfect_on_unique_vocab(spark):
+def test_origin_eval_perfect_on_unique_vocab(spark, monkeypatch):
     """Docs with disjoint vocabularies: each query's terms occur only
     in its source doc, so recall = 1 and MRR = 1e6 (rank 1 always)."""
+    from big_data_hw_23_24_spark.operators import retrieval
     from big_data_hw_23_24_spark.operators.retrieval import (
         origin_retrieval_eval)
 
+    monkeypatch.setattr(retrieval, "ORIGIN_EVERY", 10)
     rows = [(i, " ".join(f"w{i}_{j}" for j in range(20)))
             for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    r = origin_retrieval_eval(df, k=10, every=10, offset=3).collect()[0]
+    r = origin_retrieval_eval(df).collect()[0]
     assert r.n_queries == 4  # doc_ids 3, 13, 23, 33
     assert r.n_found == 4
     assert r.recall_at_k == 1.0
     assert r.mrr_ppm == 1_000_000
 
 
-def test_origin_eval_misses_count_zero(spark):
+def test_origin_eval_misses_count_zero(spark, monkeypatch):
     """A query doc whose span words are SHARED boilerplate occurring
     in every doc can rank below k; the miss contributes 0, not a
     dropped row."""
+    from big_data_hw_23_24_spark.operators import retrieval
     from big_data_hw_23_24_spark.operators.retrieval import (
         origin_retrieval_eval)
 
+    monkeypatch.setattr(retrieval, "ORIGIN_K", 3)
+    monkeypatch.setattr(retrieval, "ORIGIN_EVERY", 10)
     common = " ".join(f"tok{j % 16}" for j in range(20))  # >= 13 words
     rows = [(i, common) for i in range(30)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    r = origin_retrieval_eval(df, k=3, every=10, offset=3).collect()[0]
+    r = origin_retrieval_eval(df).collect()[0]
     assert r.n_queries == 3
     # identical docs -> scores all tie -> the doc_id-asc top-3 is
     # {0, 1, 2} for EVERY query; sources 3/13/23 all miss, yet the
@@ -1181,7 +1205,7 @@ def test_bh_stepup_rejects_through_kstar(spark):
         [(1, 0.02), (2, 0.03), (3, 0.035), (4, 0.04)],
         "id int, p double")
     got = {r.id: r.rejected for r in
-           bh_fdr(df, "id", "p", alpha=0.05).collect()}
+           bh_fdr(df, "id", "p").collect()}
     assert got == {1: True, 2: True, 3: True, 4: True}
 
 
@@ -1190,7 +1214,7 @@ def test_bh_nothing_passes_rejects_nothing(spark):
 
     df = spark.createDataFrame([(i, 0.9) for i in range(5)],
                                "id int, p double")
-    rows = bh_fdr(df, "id", "p", alpha=0.05).collect()
+    rows = bh_fdr(df, "id", "p").collect()
     assert all(not r.rejected for r in rows)
     assert sorted(r.rank for r in rows) == [1, 2, 3, 4, 5]
 
@@ -1206,7 +1230,7 @@ def test_bh_partial_rejection_boundary(spark):
         [(1, 0.001), (2, 0.008), (3, 0.039), (4, 0.041), (5, 0.9)],
         "id int, p double")
     got = {r.id: r.rejected for r in
-           bh_fdr(df, "id", "p", alpha=0.05).collect()}
+           bh_fdr(df, "id", "p").collect()}
     assert got == {1: True, 2: True, 3: False, 4: False, 5: False}
 
 
@@ -1265,8 +1289,8 @@ def test_did_z_hand_computed(spark):
 # ------------------------------------------------------------- Silhouette ----
 
 def _emb(spark, rows):
-    return spark.createDataFrame(rows,
-                                 "label string, vec_id long, v array<float>")
+    return spark.createDataFrame(
+        rows, "label string, vec_id long, embedding array<float>")
 
 
 def test_silhouette_separated_clusters_near_one(spark):
@@ -1278,8 +1302,7 @@ def test_silhouette_separated_clusters_near_one(spark):
     rows = [("a", i, [0.0 + i * 0.01, 0.0]) for i in range(4)] + \
            [("b", 10 + i, [100.0 + i * 0.01, 0.0]) for i in range(4)]
     got = {r.label: r for r in
-           label_silhouette(_emb(spark, rows), "label", "v",
-                            "vec_id").collect()}
+           label_silhouette(_emb(spark, rows)).collect()}
     assert got["a"].mean_s > 0.99 and got["b"].mean_s > 0.99
     assert got["a"].n == 4
 
@@ -1294,8 +1317,7 @@ def test_silhouette_mislabeled_point_negative(spark):
             ("a", 2, [50.0, 0.0]),  # sits on b's representative
             ("b", 10, [50.0, 0.0]), ("b", 11, [51.0, 0.0])]
     got = {r.label: r for r in
-           label_silhouette(_emb(spark, rows), "label", "v",
-                            "vec_id").collect()}
+           label_silhouette(_emb(spark, rows)).collect()}
     # point 2: a = 50 (to rep a at origin), b = 0 -> s = (0-50)/50 = -1
     # points 0,1: s near 1 -> mean ~ (1 + 0.98 - 1)/3
     assert got["a"].mean_s < 0.5
@@ -1307,8 +1329,7 @@ def test_silhouette_single_label_nulls(spark):
         label_silhouette)
 
     rows = [("only", i, [float(i), 1.0]) for i in range(3)]
-    r = label_silhouette(_emb(spark, rows), "label", "v",
-                         "vec_id").collect()[0]
+    r = label_silhouette(_emb(spark, rows)).collect()[0]
     assert r.mean_b is None and r.mean_s is None
     assert r.n == 3 and r.mean_a is not None
 
@@ -1342,7 +1363,7 @@ def test_top_eigen_recovers_planted_direction(spark):
     rows = [(i, [4.0 if i % 2 == 0 else -4.0, 0.01 * (i % 3)])
             for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {r.dim: r for r in top_eigenvector(df, rounds=5).collect()}
+    got = {r.dim: r for r in top_eigenvector(df).collect()}
     assert abs(got[1].component) > 0.999
     assert abs(got[2].component) < 0.05
     # E[x1^2] = 16; rayleigh of the top direction ~ 16
@@ -1361,7 +1382,7 @@ def test_top_eigen_hand_diagonal_case(spark):
     rows = [(1, [1.0, 0.0]), (2, [1.0, 0.0]),
             (3, [0.0, 1.0]), (4, [0.0, 0.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {r.dim: r for r in top_eigenvector(df, rounds=5).collect()}
+    got = {r.dim: r for r in top_eigenvector(df).collect()}
     # gram = diag(2/4, 1/4) (n = 4 includes the zero vector) →
     # micros diag(500000, 250000); v5 = (5e5^5, 2.5e5^5)
     a, b = 500000 ** 5, 250000 ** 5
@@ -1373,13 +1394,15 @@ def test_top_eigen_hand_diagonal_case(spark):
     assert abs(got[1].rayleigh - (0.5 * v1 * v1 + 0.25 * v2 * v2)) < 1e-6
 
 
-def test_top_eigen_zero_gram_nulls(spark):
+def test_top_eigen_zero_gram_nulls(spark, monkeypatch):
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import (
         top_eigenvector)
 
+    monkeypatch.setattr(similarity, "EIGEN_ROUNDS", 3)
     df = spark.createDataFrame([(1, [0.0, 0.0]), (2, [0.0, 0.0])],
                                "vec_id long, embedding array<float>")
-    rows = top_eigenvector(df, rounds=3).collect()
+    rows = top_eigenvector(df).collect()
     assert all(r.component is None and r.rayleigh is None for r in rows)
 
 
@@ -1486,7 +1509,6 @@ def test_orc_roundtrip_prunes_partitions(spark):
     read-back side must prune to partition directories (the scan shows
     a PartitionFilters entry), and row counts must survive the round
     trip exactly."""
-    import os
     from pyspark.sql import functions as F
     from big_data_hw_23_24_spark.queries import _ensure_loaded, _REGISTRY
     from big_data_hw_23_24_spark.sources.tables import load_table
@@ -1605,17 +1627,20 @@ def test_lpa_spreads_to_distance_rounds(spark):
             uid += 1
     df = spark.createDataFrame(rows, "user_id long, item long")
     got = {r.item: (r.label, r.is_seed) for r in
-           label_propagation(df, rounds=3).collect()}
+           label_propagation(df).collect()}
     assert got[7] == (2, True)
     assert got[1] == (2, False)
     assert got[2] == (2, False)
     assert got[3] == (2, False)  # distance 3: reached on round 3
 
 
-def test_lpa_majority_and_min_label_tiebreak(spark):
+def test_lpa_majority_and_min_label_tiebreak(spark, monkeypatch):
     """A node between two seeds of different labels with equal votes
     must take the SMALLER label (the pinned tie rule)."""
+    from big_data_hw_23_24_spark.operators import graph
     from big_data_hw_23_24_spark.operators.graph import label_propagation
+
+    monkeypatch.setattr(graph, "LPA_ROUNDS", 2)
 
     rows = []
     uid = 0
@@ -1625,7 +1650,7 @@ def test_lpa_majority_and_min_label_tiebreak(spark):
             uid += 1
     df = spark.createDataFrame(rows, "user_id long, item long")
     got = {r.item: r.label for r in
-           label_propagation(df, rounds=2).collect()}
+           label_propagation(df).collect()}
     assert got[7] == 2 and got[14] == 4  # seeds clamped
     assert got[1] == 2                   # tie -> min(2, 4)
 
@@ -1640,7 +1665,7 @@ def test_lpa_isolated_from_seeds_stays_null(spark):
             rows += [(uid, a), (uid, b)]
             uid += 1
     df = spark.createDataFrame(rows, "user_id long, item long")
-    rows_out = label_propagation(df, rounds=3).collect()
+    rows_out = label_propagation(df).collect()
     assert all(r.label is None for r in rows_out)
 
 

@@ -17,8 +17,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 
 def test_twap_exact_beyond_bigint_product(spark):
     """dt ~ 2.6e12 us times v = 1e7 cents = 2.6e19 > 2^63: the term

@@ -34,14 +34,17 @@ _SETTINGS = dict(max_examples=8, deadline=None,
     min_size=1, max_size=30))
 @settings(**_SETTINGS)
 def test_trending_matches_python_reference(spark, rows):
+    from big_data_hw_23_24_spark.operators import timeseries
     from big_data_hw_23_24_spark.operators.timeseries import trending_items
 
     D = 86_400_000_000
     now = 1_700_000_000_000_000
     df = spark.createDataFrame([(it, now - d * D) for it, d in rows],
                                "item string, ts long")
-    got = {r.item: (r.n_events, r.decayed_micros)
-           for r in trending_items(df, k=10).collect()}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(timeseries, "TRENDING_K", 10)
+        got = {r.item: (r.n_events, r.decayed_micros)
+               for r in trending_items(df).collect()}
     # the operator's "now" is the corpus max day = the event with the
     # SMALLEST days-before offset
     dmin = min(d for _, d in rows)
@@ -255,11 +258,14 @@ def test_itemset_triples_match_unpruned_definition(spark, rows, minsup):
     optimization, never a semantics change."""
     from itertools import combinations as comb
 
+    from big_data_hw_23_24_spark.operators import graph
     from big_data_hw_23_24_spark.operators.graph import itemset_triples
 
     df = spark.createDataFrame(rows, "o long, i long")
-    got = {(r.item_a, r.item_b, r.item_c): r.support
-           for r in itemset_triples(df, "o", "i", minsup=minsup).collect()}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(graph, "ITEMSET_MINSUP", minsup)
+        got = {(r.item_a, r.item_b, r.item_c): r.support
+               for r in itemset_triples(df, "o", "i").collect()}
     baskets: dict[int, set[int]] = {}
     for o, i in rows:
         baskets.setdefault(o, set()).add(i)
@@ -293,8 +299,7 @@ def test_attribution_conserves_credit(spark, rows):
         data, "event_id long, user_id long, event_type string, ts long")
     got = {r.channel: (r.n_touches, r.credit_ppm)
            for r in attribution_report(
-               df, "purchase", ["click", "view"],
-               lookback_hours=24).collect()}
+               df, "purchase", ["click", "view"]).collect()}
     # pure-Python reference
     want: dict[str, list] = {}
     unatt = 0
@@ -445,8 +450,7 @@ def test_incremental_stats_equal_full_recompute(spark, old_rows, new_rows):
         "source string, n_docs long, n_tokens long"
     ).where(F.col("source").isNotNull())
     got = {r.source: (r.n_docs, r.n_tokens)
-           for r in incremental_stats(old, new, old_stats,
-                                      "source").collect()}
+           for r in incremental_stats(old, new, old_stats).collect()}
     want = stats(new_rows)
     assert got == {g: tuple(v) for g, v in want.items() if v[0] > 0}
 

@@ -12,7 +12,10 @@ from pyspark.sql import functions as F
 
 from big_data_hw_23_24_spark.operators.cleaning import linear_quality_score
 from big_data_hw_23_24_spark.operators.retrieval import bm25_topk
-from big_data_hw_23_24_spark.operators.selection import dsir_importance
+from big_data_hw_23_24_spark.operators.selection import (
+    DSIR_BUCKET_CHARS,
+    dsir_importance,
+)
 
 
 def _docs(spark, rows):
@@ -103,7 +106,7 @@ def test_dsir_target_lookalike_positive_offtarget_negative(spark):
             + [(200, "good stuff good stuff", False),   # looks like target
                (201, "bad junk bad junk", False)])
     out = {r.doc_id: r for r in dsir_importance(
-        _dsir_docs(spark, rows), F.col("t"), bucket_chars=3).collect()}
+        _dsir_docs(spark, rows), F.col("t")).collect()}
     assert out[200].weight > 0 > out[201].weight
     # the lookalike scores exactly like the in-target docs (same feats)
     assert out[200].weight == out[0].weight
@@ -126,7 +129,7 @@ def test_dsir_matches_pure_python(spark):
 
     rows = [(1, "a b c a b", True), (2, "b c d", False),
             (3, "a b x y", False), (4, "q r s t q r", True)]
-    eps, chars = 1e-6, 3
+    eps, chars = 1e-6, DSIR_BUCKET_CHARS
 
     def bigrams(text):
         w = [x for x in text.lower().split(" ") if x]
@@ -153,7 +156,7 @@ def test_dsir_matches_pure_python(spark):
         want[doc_id] = round(sum(lr(b) for b in bs) / len(bs), 6)
 
     got = {r.doc_id: r.weight for r in dsir_importance(
-        _dsir_docs(spark, rows), F.col("t"), bucket_chars=chars).collect()}
+        _dsir_docs(spark, rows), F.col("t")).collect()}
     for doc_id in want:
         assert got[doc_id] == pytest.approx(want[doc_id], abs=2e-6), doc_id
 
@@ -170,11 +173,6 @@ def test_dsir_bucket_join_is_broadcast(spark):
     smj = [ln for ln in plan.splitlines() if "SortMergeJoin" in ln]
     assert all("doc_id" in ln for ln in smj), smj
 
-
-def test_dsir_validation(spark):
-    d = _dsir_docs(spark, [(1, "a b", True)])
-    with pytest.raises(ValueError, match="bucket_chars"):
-        dsir_importance(d, F.col("t"), bucket_chars=0)
 
 
 # --- hashed linear quality classifier ----------------------------------------
@@ -209,11 +207,14 @@ def _src_docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string, source string")
 
 
-def test_temperature_alpha_one_is_identity(spark):
+def test_temperature_alpha_one_is_identity(spark, monkeypatch):
+    from big_data_hw_23_24_spark.operators import splits
     from big_data_hw_23_24_spark.operators.splits import temperature_resample
 
+    monkeypatch.setattr(splits, "TEMPERATURE_ALPHA", 1.0)
+
     rows = [(i, f"t{i}", "a" if i < 6 else "b") for i in range(9)]
-    out = temperature_resample(_src_docs(spark, rows), alpha=1.0).collect()
+    out = temperature_resample(_src_docs(spark, rows)).collect()
     assert len(out) == 9
     assert all(r.n_copies == 1 and r.copy == 1 and r.multiplicity == 1.0
                for r in out)
@@ -225,7 +226,7 @@ def test_temperature_sqrt_multiplicity_and_copy_counts(spark):
     # 16 'big' docs, 4 'small' docs → m_small = sqrt(16/4) = 2 exactly
     rows = ([(i, f"b{i}", "big") for i in range(16)]
             + [(100 + i, f"s{i}", "small") for i in range(4)])
-    out = temperature_resample(_src_docs(spark, rows), alpha=0.5).collect()
+    out = temperature_resample(_src_docs(spark, rows)).collect()
     by_src = {}
     for r in out:
         by_src.setdefault(r.source, []).append(r)
@@ -245,9 +246,9 @@ def test_temperature_fractional_copies_bounded_and_deterministic(spark):
             + [(100 + i, f"s{i}", "small") for i in range(4)])
     docs = _src_docs(spark, rows)
     a = sorted((r.doc_id, r.copy) for r in
-               temperature_resample(docs, alpha=0.5).collect())
+               temperature_resample(docs).collect())
     b = sorted((r.doc_id, r.copy) for r in
-               temperature_resample(docs, alpha=0.5).collect())
+               temperature_resample(docs).collect())
     assert a == b
     small = [x for x in a if x[0] >= 100]
     assert 4 <= len(small) <= 8
@@ -285,15 +286,6 @@ def test_temperature_mix_oracle_parity_with_null_sources(spark, tmp_path):
     assert len(null_rows) == 8
     assert all(t[3] == 2 for t in null_rows)
 
-
-def test_temperature_validation(spark):
-    from big_data_hw_23_24_spark.operators.splits import temperature_resample
-
-    d = _src_docs(spark, [(1, "x", "a")])
-    with pytest.raises(ValueError, match="alpha"):
-        temperature_resample(d, alpha=0.0)
-    with pytest.raises(ValueError, match="alpha"):
-        temperature_resample(d, alpha=1.5)
 
 
 # --- batch BM25 --------------------------------------------------------------
@@ -726,7 +718,7 @@ def test_temperature_null_source_rows_survive(spark):
 
     rows = ([(i, f"b{i}", "big") for i in range(4)]
             + [(100, "orphan one", None), (101, "orphan two", None)])
-    out = temperature_resample(_src_docs(spark, rows), alpha=0.5).collect()
+    out = temperature_resample(_src_docs(spark, rows)).collect()
     # NULL sources form their own cohort (upsampled as a small source),
     # never silently dropped by the stats join
     null_rows = [r for r in out if r.source is None]
@@ -790,7 +782,7 @@ def test_temperature_copy_totals_match_expectation(spark, counts):
         for _ in range(n):
             rows.append((did, f"t{did}", f"s{s_i}"))
             did += 1
-    out = temperature_resample(_src_docs(spark, rows), alpha=0.5).collect()
+    out = temperature_resample(_src_docs(spark, rows)).collect()
     nmax = max(counts)
     by_src: dict = {}
     for r in out:
@@ -1019,7 +1011,7 @@ def test_rrf_fuse_combines_and_flags_singles(spark):
                               "qid int, doc_id long, rank int")
     b = spark.createDataFrame([(1, 20, 1), (1, 10, 2), (1, 99, 3)],
                               "qid int, doc_id long, rank int")
-    out = {r.doc_id: r for r in rrf_fuse(a, b, k=10).collect()}
+    out = {r.doc_id: r for r in rrf_fuse(a, b).collect()}
     assert round(out[10].rrf, 6) == round(1 / 61 + 1 / 62, 6)
     assert round(out[20].rrf, 6) == round(1 / 61 + 1 / 62, 6)
     assert out[10].rank == 1 and out[20].rank == 2   # tie -> doc_id

@@ -24,7 +24,7 @@ def test_salted_join_equals_plain_join_on_skew(spark):
     dim = spark.range(10).select(F.col("id").alias("k"),
                                  (F.col("id") * 100).alias("w"))
     plain = fact.join(dim, "k").select("k", "v", "w")
-    salted = salted_join(fact, dim, "k", n_salts=8).select("k", "v", "w")
+    salted = salted_join(fact, dim, "k").select("k", "v", "w")
     assert salted.count() == plain.count()
     assert salted.exceptAll(plain).count() == 0
     assert plain.exceptAll(salted).count() == 0
@@ -121,23 +121,23 @@ def test_bloom_prune_no_false_negatives_and_prunes_most(spark):
     assert empty.count() == 0
 
 
-def test_skew_report_ranks_hot_keys_and_scores_uniformity(spark):
+def test_skew_report_ranks_hot_keys_and_scores_uniformity(spark, monkeypatch):
+    from big_data_hw_23_24_spark.operators import skew
     from big_data_hw_23_24_spark.operators.skew import skew_report
 
+    monkeypatch.setattr(skew, "SKEW_TOP_N", 3)
     hot = [(1, "a") for _ in range(90)]
     cold = [(i, "b") for i in range(2, 12)]
     df = spark.createDataFrame(hot + cold, "k long, t string")
-    out = [r for r in skew_report(df, ["k"], top_n=3).collect()]
+    out = [r for r in skew_report(df, ["k"]).collect()]
     assert len(out) == 3
     assert (out[0].key_value, out[0].cnt, out[0].rank) == ("1", 90, 1)
     assert out[0].n_distinct == 11
     # skew factor = 90 * 11 / 100 = 9.9 (vs 1.0 for uniform)
     assert out[0].skew_factor == 9.9
     # uniform column scores ~1
-    u = skew_report(df.where("k != 1"), ["k"], top_n=3).collect()
+    u = skew_report(df.where("k != 1"), ["k"]).collect()
     assert all(r.skew_factor == 1.0 for r in u)
     import pytest as _pytest
-    with _pytest.raises(ValueError, match="top_n"):
-        skew_report(df, ["k"], top_n=0)
     with _pytest.raises(ValueError, match="key_cols"):
-        skew_report(df, [], top_n=3)
+        skew_report(df, [])

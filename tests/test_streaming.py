@@ -169,8 +169,7 @@ def test_windowed_counts_watermark_closes_and_bounds_state(spark, tmp_path):
             os.utime(os.path.join(p, f), (t0 + i * 10, t0 + i * 10))
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(os.path.join(d, "b*")))
-    agg = windowed_event_counts(stream.withWatermark("ts", "1 hour"),
-                                "1 hour")
+    agg = windowed_event_counts(stream.withWatermark("ts", "1 hour"))
     q = (agg.writeStream.outputMode("append")
          .format("memory").queryName("wm_out").start())
     q.processAllAvailable()
@@ -191,18 +190,21 @@ def test_windowed_counts_watermark_closes_and_bounds_state(spark, tmp_path):
     assert last_state["stateOperators"][0]["numRowsTotal"] <= 2
 
 
-def test_windowed_counts_streaming_matches_batch_face(spark, tmp_path):
+def test_windowed_counts_streaming_matches_batch_face(spark, tmp_path,
+                                                      monkeypatch):
     """Complete-mode streaming windows == the batch face (the green
     events_by_window oracle) over the same bounded input."""
     from big_data_hw_23_24_spark.sources.tables import load_table
+    from big_data_hw_23_24_spark.streaming import windows
     from big_data_hw_23_24_spark.streaming.windows import windowed_event_counts
 
+    monkeypatch.setattr(windows, "WINDOW_DURATION", "1 day")
     ev = load_table(spark, SF, "events").select("ts", "value")
     d = str(tmp_path / "evstream")
     ev.coalesce(1).write.mode("overwrite").parquet(d)
     stream = (spark.readStream.schema("ts timestamp, value double")
               .parquet(d))
-    agg = windowed_event_counts(stream, "1 day")
+    agg = windowed_event_counts(stream)
     q = (agg.writeStream.outputMode("complete")
          .format("memory").queryName("win_out").start())
     q.processAllAvailable()
@@ -210,7 +212,7 @@ def test_windowed_counts_streaming_matches_batch_face(spark, tmp_path):
     got = {(r.win_start, r.n_events, r.sum_value)
            for r in spark.sql("SELECT * FROM win_out").collect()}
     want = {(r.win_start, r.n_events, r.sum_value)
-            for r in windowed_event_counts(ev, "1 day").collect()}
+            for r in windowed_event_counts(ev).collect()}
     assert got == want
 
 
@@ -307,7 +309,7 @@ def test_sessionize_stream_carries_state_across_batches(spark, tmp_path):
     stream = (spark.readStream.schema("seq long, user_id long, ts timestamp")
               .option("maxFilesPerTrigger", 1).parquet(glob))
     got = {(r.user_id, r.session_start, r.session_end, r.n_events)
-           for r in run_sessionize(spark, stream, gap_sec=3600).collect()}
+           for r in run_sessionize(spark, stream).collect()}
     want = {
         (1, mins(0), mins(20), 3),
         (2, mins(0), mins(0), 1),

@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 
 ROUND_TO = 6  # decimal places of the Lloyd statistics
 SAMPLE_SIZE = 10_000  # driver sample that seeds the centroids
-KMEANS_SEED = 42  # seed of that sample and of its k-means
 
 
 def sequential_fft(points: np.ndarray, k: int) -> np.ndarray:
@@ -197,7 +196,7 @@ def kmeans_fit(df: DataFrame, k: int,
     previous centroid. Stops early when no centroid moves more than
     1e-6 (L∞ on the shift).
     """
-    from .similarity import _kmeans_lite, _nearest_lists_udf
+    from .similarity import KMEANS_SEED, _kmeans_lite, _nearest_lists_udf
 
     vecs = (df.select(F.col("embedding").alias("v"))
             .where(F.col("v").isNotNull()))
@@ -208,7 +207,7 @@ def kmeans_fit(df: DataFrame, k: int,
     sample = np.array(
         [r[0] for r in vecs.sample(fraction=frac, seed=KMEANS_SEED)
          .limit(SAMPLE_SIZE).collect()], dtype=np.float64)
-    centroids = _kmeans_lite(sample, k, seed=KMEANS_SEED)
+    centroids = _kmeans_lite(sample, k)
     k, dim = centroids.shape
 
     costs: list[float] = []

@@ -168,15 +168,16 @@ def minhash_signature(shingled: DataFrame, num_hashes: int = NUM_HASHES,
     )
 
 
-def lsh_candidate_pairs(signed: DataFrame, bands: int = BANDS) -> DataFrame:
-    """Banded LSH: docs agreeing on all rows of ≥1 band → (id_a, id_b).
+def lsh_candidate_pairs(signed: DataFrame) -> DataFrame:
+    """Banded LSH: docs agreeing on all rows of ≥1 of the ``BANDS``
+    bands → (id_a, id_b).
 
     Explode to one row per band, hash the band slice, self-join on
     (band, band_hash): the shuffle key is the band hash, so work is
     proportional to bucket sizes, never to n². Pairs are deduped
     (a < b) across bands.
     """
-    banded = _banded(signed, bands, "doc_id")
+    banded = _banded(signed, BANDS, "doc_id")
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(b, (F.col("a.band") == F.col("b.band"))

@@ -132,7 +132,7 @@ def layout_pruning_audit(df: DataFrame, cx_col: str, cy_col: str,
         # checkpoint). Lazy: the first ntile spine's per-partition
         # collect is a sequential full scan that materializes base —
         # eager would prepend one more full base pass
-        base = with_hilbert(base, "cx", "cy", bits=AUDIT_BITS,
+        base = with_hilbert(base, "cx", "cy",
                             out_col="_h").localCheckpoint(eager=False)
         layouts = [
             ("zorder", [F.col("_z"), F.col("_o")]),
@@ -271,9 +271,10 @@ def _hilbert_chunk_table_df(spark, c: int) -> DataFrame:
     return spark.createDataFrame(pdf)
 
 
-def with_hilbert(df: DataFrame, x_col: str, y_col: str, bits: int = 12,
+def with_hilbert(df: DataFrame, x_col: str, y_col: str,
                  out_col: str = "hilbert") -> DataFrame:
-    """Append the Hilbert index of two NON-NEGATIVE ints (E210).
+    """Append the ``AUDIT_BITS``-bit Hilbert index of two NON-NEGATIVE
+    ints (E210).
 
     Unlike the Morton key (pure bit-shuffling, one expression), the
     Hilbert walk carries ROTATION STATE from high bits to low bits —
@@ -282,7 +283,7 @@ def with_hilbert(df: DataFrame, x_col: str, y_col: str, bits: int = 12,
     grows 16^bits. The scale-safe relational form is the automaton
     itself as BROADCAST joins; to keep the join count (and its
     per-row probe cost) down, levels are processed SIX AT A TIME
-    against the composed 16384-row chunk table (bits=12 → two joins;
+    against the composed 16384-row chunk table (12 bits → two joins;
     measured 4.4 s → well under the bench budget vs the 12-join
     per-level chain). The chunk table is derived at call time from
     the 16-row HILBERT_TABLE spec, and the ORACLE runs the per-level
@@ -295,8 +296,7 @@ def with_hilbert(df: DataFrame, x_col: str, y_col: str, bits: int = 12,
     events_hilbert_pruning face MEASURES that claim beside zorder
     and linear on identical probes rather than assuming it.
     """
-    if not 1 <= bits <= 31:
-        raise ValueError(f"bits must be in 1..31, got {bits}")
+    bits = AUDIT_BITS
     spark = df.sparkSession
     lim = F.lit((1 << bits) - 1)
     x = F.col(x_col).cast("long").bitwiseAND(lim)

@@ -25,6 +25,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+FEATURE_DIM = 4  # components of an extracted feature vector
+FRAME_EVERY_NTH = 10  # frame stride of the sampling plan
+
 MEDIA_META_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("n_bytes", T.IntegerType(), False),
@@ -151,8 +154,6 @@ def frame_sample_plan(media: DataFrame) -> DataFrame:
 
 # block_dedup_pairs: aligned block size, shared blocks a pair needs,
 # and the stop-block document-frequency guard.
-FEATURE_DIM = 4  # components of an extracted feature vector
-FRAME_EVERY_NTH = 10  # frame stride of the sampling plan
 BLOCK_BYTES = 64
 BLOCK_MIN_SHARED = 2
 BLOCK_MAX_DF = 8

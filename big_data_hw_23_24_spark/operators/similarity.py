@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 IVF_SAMPLE_SIZE = 10_000  # driver sample that trains the IVF centroids
+KMEANS_SEED = 42  # seed of the driver samples and their k-means
 IVF_N_LISTS = 16  # lists ivf_topk trains
 IVF_NPROBE = 4  # nearest lists each ivf_topk query probes
 KNN_K = 10  # neighbours per query of the top-k searches and gates
@@ -43,6 +44,9 @@ RP_OFFSETS = (1, 7, 49)  # id offsets of rp_distortion's probe pairs
 EIGEN_ROUNDS = 5  # power-iteration rounds of top_eigenvector
 LSH_BITS = 256  # random-hyperplane signature bits
 LSH_BANDS = 16  # LSH bands over the signature
+MMR_K = 5  # results mmr_rerank picks per query
+MMR_POOL = 20  # cosine top-k pool mmr_rerank picks from
+MMR_LAM = 0.7  # relevance weight of the MMR score
 
 
 def _dot(a, b):
@@ -90,10 +94,10 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame,
     return _rank_topk(scored, k)
 
 
-def _kmeans_lite(sample: np.ndarray, n_lists: int,
-                 seed: int = 42) -> np.ndarray:
-    """Tiny k-means on a driver-side sample (bounded like MRFFT R2)."""
-    rng = np.random.default_rng(seed)
+def _kmeans_lite(sample: np.ndarray, n_lists: int) -> np.ndarray:
+    """Tiny k-means on a driver-side sample (bounded like MRFFT R2),
+    initialised from ``KMEANS_SEED``."""
+    rng = np.random.default_rng(KMEANS_SEED)
     idx = rng.choice(len(sample), size=min(n_lists, len(sample)),
                      replace=False)
     centroids = sample[idx].copy()
@@ -154,7 +158,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     frac = min(1.0, (IVF_SAMPLE_SIZE * 1.25) / max(n, 1))
     sample = np.array(
         [r[0] for r in
-         corpus.select("embedding").sample(fraction=frac, seed=42)
+         corpus.select("embedding").sample(fraction=frac, seed=KMEANS_SEED)
          .limit(IVF_SAMPLE_SIZE).collect()],
         dtype=np.float64)
     centroids = _kmeans_lite(sample, IVF_N_LISTS)
@@ -663,24 +667,25 @@ def pca_project(emb: DataFrame, components: "np.ndarray") -> DataFrame:
                       project(F.col("embedding")).alias("projected"))
 
 
-def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 5,
-               pool_size: int = 20, lam: float = 0.7) -> DataFrame:
+def mmr_rerank(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Maximal-marginal-relevance re-ranking (Carbonell & Goldstein
-    1998): greedily pick ``k`` results that balance query relevance
+    1998): greedily pick ``MMR_K`` results that balance query relevance
     against redundancy with what is already picked —
-    ``score(d) = λ·cos(q, d) − (1−λ)·max_{s∈selected} cos(d, s)``.
+    ``score(d) = λ·cos(q, d) − (1−λ)·max_{s∈selected} cos(d, s)``
+    with λ = ``MMR_LAM``.
 
     The diversity step a retrieval-augmented or dedup-aware selection
     pipeline runs AFTER top-k: plain cosine top-k returns near-copies
     of one passage; MMR k=5 over a pool of 20 returns five *distinct*
     relevant passages.
 
-    Shape: stage 1 is the distributed exact ``cosine_topk`` pool
-    (broadcast queries, corpus never shuffled); the greedy stage is
-    ``k`` UNROLLED relational steps over the persisted pool — each an
-    anti-join (drop picked), a query-keyed join to the ≤ i picked
-    rows for the pairwise max, and a per-query argmax — every join
-    keyed on query_id, every frame bounded by queries × pool. Greedy
+    Shape: stage 1 is the distributed exact ``cosine_topk`` pool of
+    ``MMR_POOL`` (broadcast queries, corpus never shuffled); the greedy
+    stage is ``MMR_K`` UNROLLED relational steps over the persisted
+    pool — each an anti-join (drop picked), a query-keyed join to the
+    ≤ i picked rows for the pairwise max, and a per-query argmax —
+    every join keyed on query_id, every frame bounded by queries ×
+    pool. Greedy
     selection is inherently sequential in k (each pick conditions the
     next), so fixed-k unrolling is the honest dataflow — and keeps
     the whole thing deterministic relational algebra with a DuckDB
@@ -688,8 +693,7 @@ def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 5,
     Ranks on RAW doubles (ties by cand id), rounds only reported
     values — the ``_rank_topk`` convention.
     """
-    if k <= 0 or pool_size < k:
-        raise ValueError(f"need 0 < k <= pool_size, got {k}/{pool_size}")
+    k, pool_size, lam = MMR_K, MMR_POOL, MMR_LAM
     lam1 = 1.0 - lam
     q = with_l2_norm(queries.select(F.col("vec_id").alias("query_id"),
                                     F.col("embedding").alias("qv")),

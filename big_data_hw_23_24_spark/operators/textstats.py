@@ -20,8 +20,8 @@ REPEAT_SPAN_N = 8  # words per repeated-span n-gram
 REPEAT_MIN_DOCS = 2  # distinct documents that make a span repeated
 NGRAM_MIN_COUNT = 2  # occurrences ngram_count_table keeps
 BOILERPLATE_MIN_DOCS = 3  # distinct documents that make an n-gram boilerplate
-WINNOW_K = 4  # chars per gram of winnow_overlap_pairs
-WINNOW_W = 5  # winnowing window of winnow_overlap_pairs
+WINNOW_K = 4  # words per gram of winnow_fingerprints
+WINNOW_W = 5  # winnowing window of winnow_fingerprints
 TFIDF_K = 3  # terms tfidf_top_terms keeps per document
 PMI_MIN_COUNT = 5  # support floor of a PMI collocation
 PMI_K = 20  # collocations pmi_collocations returns
@@ -303,14 +303,15 @@ def token_entropy(docs: DataFrame) -> DataFrame:
                             .otherwise(0.0), 6).alias("token_entropy")))
 
 
-def winnow_fingerprints(docs: DataFrame, k: int = 4, w: int = 5,
+def winnow_fingerprints(docs: DataFrame,
                         keep_selection: bool = False) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken
-    2003, SIGMOD — the MOSS algorithm): hash every word k-gram, slide
-    a window of ``w`` consecutive hashes, keep each window's MINIMUM —
-    the selected set is a position-independent fingerprint with the
-    guarantee that any shared run of ≥ w+k-1 words between two
-    documents shares at least one selected hash.
+    2003, SIGMOD — the MOSS algorithm): hash every word
+    ``WINNOW_K``-gram, slide a window of ``WINNOW_W`` consecutive
+    hashes, keep each window's MINIMUM — the selected set is a
+    position-independent fingerprint with the guarantee that any shared
+    run of ≥ WINNOW_W+WINNOW_K-1 words between two documents shares at
+    least one selected hash.
 
     Output: (doc_id, n_grams, n_selected, fp_set_md5) where
     ``fp_set_md5`` hashes the sorted distinct selected-hash set —
@@ -326,6 +327,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 4, w: int = 5,
     hashes, window minima and the distinct set all stay inside ONE
     projection on the line array; no explode, no shuffle, no Python.
     """
+    k, w = WINNOW_K, WINNOW_W
     empty = F.array().cast("array<string>")
     words = F.filter(F.split(F.col("text"), " "),
                      lambda x: x != F.lit(""))
@@ -375,7 +377,7 @@ def winnow_overlap_pairs(docs: DataFrame) -> DataFrame:
     cost is Σ df(h)² over the selected hashes, the inverted-index
     shape that survives corpus scale.
     """
-    s = winnow_fingerprints(docs, WINNOW_K, WINNOW_W, keep_selection=True)
+    s = winnow_fingerprints(docs, keep_selection=True)
     ex = s.select(F.col("doc_id"), F.col("n_selected"),
                   F.explode("selected").alias("_h"))
     a = ex.select(F.col("doc_id").alias("id_a"),
@@ -614,14 +616,14 @@ def boilerplate_ngrams(docs: DataFrame) -> DataFrame:
             .where(F.col("n_docs") >= BOILERPLATE_MIN_DOCS))
 
 
-def doc_boilerplate_share(docs: DataFrame, n: int = 8, min_docs: int = 3,
-                          text_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
+def doc_boilerplate_share(docs: DataFrame) -> DataFrame:
     """Per-document boilerplate exposure → (doc_id, n_ngrams,
-    n_boiler, boiler_share): how much of a document's n-gram stream is
-    corpus-level boilerplate (``boilerplate_ngrams`` with the same
-    parameters). The filter signal for dropping template-heavy pages
-    before training; documents shorter than ``n`` words report 0/0/0.
+    n_boiler, boiler_share): how much of a document's
+    ``REPEAT_SPAN_N``-gram stream is corpus-level boilerplate (the
+    ``boilerplate_ngrams`` set: n-grams in at least
+    ``BOILERPLATE_MIN_DOCS`` distinct documents). The filter signal for
+    dropping template-heavy pages before training; documents shorter
+    than ``REPEAT_SPAN_N`` words report 0/0/0.
 
     Both consumers of the (doc, ngram) table — the mined boilerplate
     set and the per-doc exposure — read ONE materialization of it
@@ -631,18 +633,18 @@ def doc_boilerplate_share(docs: DataFrame, n: int = 8, min_docs: int = 3,
     (AQE-broadcast, threshold-pruned) and one flagged aggregate
     produces totals and hits together.
     """
-    pairs = _ngram_pairs(docs, n, text_col, id_col) \
+    pairs = _ngram_pairs(docs, REPEAT_SPAN_N, "text", "doc_id") \
         .localCheckpoint(eager=True)
     boiler = (pairs.groupBy("ngram").agg(F.count("*").alias("n_docs"))
-              .where(F.col("n_docs") >= min_docs)
+              .where(F.col("n_docs") >= BOILERPLATE_MIN_DOCS)
               .select("ngram", F.lit(True).alias("_boiler")))
     per_doc = (pairs.join(boiler, "ngram", "left")
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.sum("c").alias("n_ngrams"),
                     F.sum(F.when(F.col("_boiler"), F.col("c"))
                           .otherwise(F.lit(0))).alias("n_boiler")))
-    return (docs.select(id_col).join(per_doc, id_col, "left")
-            .select(F.col(id_col),
+    return (docs.select("doc_id").join(per_doc, "doc_id", "left")
+            .select(F.col("doc_id"),
                     F.coalesce("n_ngrams", F.lit(0)).cast("long")
                     .alias("n_ngrams"),
                     F.coalesce("n_boiler", F.lit(0)).cast("long")

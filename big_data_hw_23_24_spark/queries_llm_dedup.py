@@ -939,7 +939,7 @@ def dedup_minhash_banded(spark, sf_dir):
               .localCheckpoint(eager=True)
               .where(F.col("_n_sh") > 0)
               .select("doc_id", "signature"))
-    pairs = lsh_candidate_pairs(signed, bands=8)
+    pairs = lsh_candidate_pairs(signed)
     sa = signed.select(F.col("doc_id").alias("id_a"),
                        F.col("signature").alias("_sig_a"))
     sb = signed.select(F.col("doc_id").alias("id_b"),
@@ -1305,7 +1305,7 @@ def dedup_eval_minhash(spark, sf_dir):
               .localCheckpoint(eager=True)
               .where(F.col("_n_sh") > 0)
               .select("doc_id", "signature"))
-    pairs = lsh_candidate_pairs(signed, bands=8)
+    pairs = lsh_candidate_pairs(signed)
     sa = signed.select(F.col("doc_id").alias("id_a"),
                        F.col("signature").alias("_sig_a"))
     sb = signed.select(F.col("doc_id").alias("id_b"),
@@ -1736,7 +1736,7 @@ def dedup_eval_lsh_recall(spark, sf_dir):
               .localCheckpoint(eager=True)
               .where(F.col("_n_sh") > 0)
               .select("doc_id", "signature"))
-    cand = (lsh_candidate_pairs(signed, bands=8)
+    cand = (lsh_candidate_pairs(signed)
             .localCheckpoint(eager=True))
     tc = truth.agg(F.count("*").cast("long").alias("n_truth"))
     cc = cand.agg(F.count("*").cast("long").alias("n_candidates"))

@@ -15,7 +15,7 @@ from .operators.dedup import (  # noqa: F401  (used at query call time)
     simhash_near_duplicates,
 )
 from .operators.multimodal import decode_media, media_from_documents  # noqa: F401
-from .operators.similarity import EIGEN_ROUNDS
+from .operators.similarity import EIGEN_ROUNDS, MMR_K, MMR_LAM, MMR_POOL
 from .operators.similarity import cosine_topk, ivf_topk  # noqa: F401
 from .operators.textstats import (  # noqa: F401
     content_fingerprints,
@@ -602,9 +602,6 @@ def embedding_pca_projected(spark, sf_dir):
         .alias("projected"))
 
 
-MMR_K, MMR_POOL, MMR_LAM = 5, 20, 0.7
-
-
 # --- MMR diversified re-ranking (E98) ----------------------------------------
 # Greedy selection is sequential in k, so the oracle unrolls the same
 # five argmax steps as CTEs (the PageRank pattern); scores are ranked
@@ -681,8 +678,7 @@ def knn_mmr_rerank(spark, sf_dir):
     from .operators.similarity import mmr_rerank
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return mmr_rerank(emb, emb.where(F.col("vec_id") < 5),
-                      k=MMR_K, pool_size=MMR_POOL, lam=MMR_LAM)
+    return mmr_rerank(emb, emb.where(F.col("vec_id") < 5))
 
 
 # --- pinned-centroid IVF face (E139, r9) -----------------------------------------

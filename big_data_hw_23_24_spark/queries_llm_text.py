@@ -525,7 +525,7 @@ def doc_unigram_logprob(spark, sf_dir):
 def doc_boilerplate_share(spark, sf_dir):
     from .operators.textstats import doc_boilerplate_share as share
 
-    return share(load_table(spark, sf_dir, "documents"), n=8, min_docs=3)
+    return share(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -676,8 +676,7 @@ def doc_c4_line_filter(spark, sf_dir):
 def doc_winnow_fingerprints(spark, sf_dir):
     from .operators.textstats import winnow_fingerprints
 
-    out = winnow_fingerprints(load_table(spark, sf_dir, "documents"),
-                              k=4, w=5)
+    out = winnow_fingerprints(load_table(spark, sf_dir, "documents"))
     return out.select("doc_id",
                       F.col("n_grams").cast("int").alias("n_grams"),
                       F.col("n_selected").cast("int").alias("n_selected"),

@@ -231,8 +231,8 @@ def test_semantic_dedup_survivors_independent_dropped_exact(spark):
 def test_winnow_guarantee_shared_run_coselects(spark):
     """The winnowing guarantee (Schleimer et al. 2003 §3): any run of
     ≥ w+k-1 shared words forces at least one COMMON selected hash —
-    here a 9-word plagiarized span (k=4, w=5) across otherwise
-    different documents."""
+    here a 9-word plagiarized span (WINNOW_K=4, WINNOW_W=5) across
+    otherwise different documents."""
     from big_data_hw_23_24_spark.operators.textstats import (
         winnow_fingerprints)
 
@@ -248,7 +248,7 @@ def test_winnow_guarantee_shared_run_coselects(spark):
     # operator's own exploded variant: rerun on the span alone; its
     # selected hashes must intersect both carriers' sets
     out = {r.doc_id: r for r in
-           winnow_fingerprints(docs, k=4, w=5).collect()}
+           winnow_fingerprints(docs).collect()}
     assert all(out[i].n_selected > 0 for i in (1, 2, 3))
     # doc1 and doc2 share the span; doc3 shares nothing — use digest
     # inequality for 3 and a direct set check for the guarantee
@@ -284,7 +284,7 @@ def test_winnow_edge_cases_and_position_independence(spark):
          (6, "a b c d e f g h i")],     # 5 shifted: selection overlaps
         "doc_id long, text string")
     out = {r.doc_id: r for r in
-           winnow_fingerprints(docs, k=4, w=5).collect()}
+           winnow_fingerprints(docs).collect()}
     assert out[1].n_grams == 0 and out[1].n_selected == 0
     assert out[2].n_grams == 0 and out[2].n_selected == 0
     assert out[3].n_grams == 1 and out[3].n_selected == 1

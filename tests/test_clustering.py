@@ -117,12 +117,12 @@ def _blob_df(spark, centers, per=60, jitter=0.05, dim=8, seed=7):
 def test_kmeans_recovers_separated_blobs(spark, monkeypatch):
     import numpy as np
 
-    from big_data_hw_23_24_spark.operators import clustering
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.clustering import kmeans_fit
 
     true = np.eye(3, 8) * 10.0  # 3 well-separated blob centers in 8-dim
     df = _blob_df(spark, true).cache()
-    monkeypatch.setattr(clustering, "KMEANS_SEED", 1)
+    monkeypatch.setattr(similarity, "KMEANS_SEED", 1)
     cent, costs = kmeans_fit(df, k=3, iters=10)
     # each true center has a recovered centroid within the jitter scale
     d = np.sqrt(((true[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2))
@@ -134,13 +134,13 @@ def test_kmeans_recovers_separated_blobs(spark, monkeypatch):
 def test_kmeans_cost_monotone_nonincreasing(spark, monkeypatch):
     import numpy as np
 
-    from big_data_hw_23_24_spark.operators import clustering
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.clustering import kmeans_fit
 
     rng = np.random.default_rng(3)
     rows = [(i, [float(v) for v in rng.normal(0, 1, 6)]) for i in range(400)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    monkeypatch.setattr(clustering, "KMEANS_SEED", 2)
+    monkeypatch.setattr(similarity, "KMEANS_SEED", 2)
     _, costs = kmeans_fit(df.cache(), k=8, iters=6)
     assert len(costs) >= 2
     for a, b in zip(costs, costs[1:]):
@@ -148,7 +148,7 @@ def test_kmeans_cost_monotone_nonincreasing(spark, monkeypatch):
 
 
 def test_kmeans_centroids_feed_ivf(spark, monkeypatch):
-    from big_data_hw_23_24_spark.operators import clustering, similarity
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.clustering import kmeans_fit
     from big_data_hw_23_24_spark.operators.similarity import (
         cosine_topk,
@@ -158,7 +158,7 @@ def test_kmeans_centroids_feed_ivf(spark, monkeypatch):
 
     emb = load_table(spark, "/root/testdata/sf0.01", "embeddings").cache()
     q = emb.limit(8).cache()
-    monkeypatch.setattr(clustering, "KMEANS_SEED", 5)
+    monkeypatch.setattr(similarity, "KMEANS_SEED", 5)
     cent, _ = kmeans_fit(emb, k=16, iters=4)
     exact = {(r.query_id, r.neighbor_id)
              for r in cosine_topk(emb, q, k=5).collect()}

@@ -1034,7 +1034,7 @@ def test_boilerplate_ngrams_planted_template(spark):
     assert len(mined) == 2
     assert all(v == (3, 3) for v in mined.values())
     share = {r.doc_id: r for r in
-             doc_boilerplate_share(docs, n=8, min_docs=3).collect()}
+             doc_boilerplate_share(docs).collect()}
     assert len(share) == 7  # every doc kept, even the short one
     assert share[7].n_ngrams == 0 and share[7].boiler_share == 0.0
     assert share[4].n_boiler == 0  # 2-doc overlap is below min_docs
@@ -1511,7 +1511,8 @@ def test_source_overlap_matrix_directed_containment(spark):
 
 # --- MMR re-ranking (E98) ----------------------------------------------------
 
-def test_mmr_rerank_prefers_diverse_over_redundant(spark):
+def test_mmr_rerank_prefers_diverse_over_redundant(spark, monkeypatch):
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import mmr_rerank
 
     # q = [1,0]; a and a' are near-duplicates very close to q; b is
@@ -1526,17 +1527,18 @@ def test_mmr_rerank_prefers_diverse_over_redundant(spark):
         (3, [0.60, -0.80]),       # b   (diverse)
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = mmr_rerank(emb, emb.where("vec_id = 0"), k=2, pool_size=3,
-                     lam=0.5)
+    monkeypatch.setattr(similarity, "MMR_K", 2)
+    monkeypatch.setattr(similarity, "MMR_POOL", 3)
+    monkeypatch.setattr(similarity, "MMR_LAM", 0.5)
+    out = mmr_rerank(emb, emb.where("vec_id = 0"))
     got = sorted(((r.mmr_rank, r.neighbor_id) for r in out.collect()))
     # rank 1 is pure relevance (a); rank 2 must skip the near-copy a'
     # and take the diverse b
     assert got == [(1, 1), (2, 3)]
 
 
-def test_mmr_rank1_equals_cosine_top1_and_k_bounds(spark):
-    import pytest as _pytest
-
+def test_mmr_rank1_equals_cosine_top1_and_k_bounds(spark, monkeypatch):
+    from big_data_hw_23_24_spark.operators import similarity
     from big_data_hw_23_24_spark.operators.similarity import (
         cosine_topk,
         mmr_rerank,
@@ -1547,7 +1549,10 @@ def test_mmr_rank1_equals_cosine_top1_and_k_bounds(spark):
     queries = emb.where("vec_id < 3")
     top1 = {r.query_id: r.neighbor_id
             for r in cosine_topk(emb, queries, k=1).collect()}
-    mmr = mmr_rerank(emb, queries, k=3, pool_size=10, lam=0.5)
+    monkeypatch.setattr(similarity, "MMR_K", 3)
+    monkeypatch.setattr(similarity, "MMR_POOL", 10)
+    monkeypatch.setattr(similarity, "MMR_LAM", 0.5)
+    mmr = mmr_rerank(emb, queries)
     first = {r.query_id: r.neighbor_id
              for r in mmr.collect() if r.mmr_rank == 1}
     assert first == top1
@@ -1557,8 +1562,6 @@ def test_mmr_rank1_equals_cosine_top1_and_k_bounds(spark):
     for r in rows:
         per_q.setdefault(r.query_id, set()).add(r.neighbor_id)
     assert all(len(v) == 3 for v in per_q.values())
-    with _pytest.raises(ValueError):
-        mmr_rerank(emb, queries, k=5, pool_size=3)
 
 
 # --- daily anomaly scores (E99) ----------------------------------------------

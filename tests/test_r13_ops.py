@@ -773,31 +773,35 @@ def _xy2d_ref(order, x, y):
     return d
 
 
-def test_hilbert_matches_reference_exhaustively(spark):
+def test_hilbert_matches_reference_exhaustively(spark, monkeypatch):
     """The automaton join chain reproduces the textbook rotate-and-
-    flip xy2d on the full 32x32 grid (bits=5)."""
+    flip xy2d on the full 32x32 grid (5 bits)."""
+    from big_data_hw_23_24_spark.operators import layout
     from big_data_hw_23_24_spark.operators.layout import with_hilbert
 
     n = 32
+    monkeypatch.setattr(layout, "AUDIT_BITS", 5)
     df = spark.createDataFrame([(x, y) for x in range(n)
                                 for y in range(n)], "x long, y long")
     got = {(r.x, r.y): r.h for r in
-           with_hilbert(df, "x", "y", bits=5, out_col="h").collect()}
+           with_hilbert(df, "x", "y", out_col="h").collect()}
     assert all(got[(x, y)] == _xy2d_ref(n, x, y)
                for x in range(n) for y in range(n))
 
 
-def test_hilbert_locality_no_seams(spark):
+def test_hilbert_locality_no_seams(spark, monkeypatch):
     """Consecutive Hilbert indexes are ALWAYS grid neighbors (step
     distance 1) — the locality property Z-order lacks (Morton seams
     jump across the space)."""
+    from big_data_hw_23_24_spark.operators import layout
     from big_data_hw_23_24_spark.operators.layout import with_hilbert
 
     n = 16
+    monkeypatch.setattr(layout, "AUDIT_BITS", 4)
     df = spark.createDataFrame([(x, y) for x in range(n)
                                 for y in range(n)], "x long, y long")
     pts = sorted((r.h, r.x, r.y) for r in
-                 with_hilbert(df, "x", "y", bits=4, out_col="h")
+                 with_hilbert(df, "x", "y", out_col="h")
                  .collect())
     assert [h for h, _, _ in pts] == list(range(n * n))  # a bijection
     steps = [abs(pts[i + 1][1] - pts[i][1])
